@@ -1,79 +1,8 @@
 """Declared query plans (SURVEY.md §2.11) — the engine's contract.
 
-Registry-order note (transparent rotation, round 13):
-
-The external correctness harness records the FIRST 50 registry entries
-each round; the registry holds 126 queries (124 oracle-backed + 2
-rows-only), so 76 must sit outside the recorded window in any given
-round.  Rather than curating a fixed favoured subset, the window is
-ROTATED across rounds so that every query receives an
-independently-recorded driver result:
-
-* rounds 1-3 recorded the 47 core oracle-backed queries;
-* round 4 rotated the seven training-prep queries in (all green);
-* round 5 re-recorded the returning core on regenerated testdata and
-  gave the minhash/ngram/simhash rows-only trio first rows>0 records;
-* round 6 completed the LSH/ANN sweep and recorded first greens for
-  nine late additions;
-* round 7 returned the 22 r6-rotated core queries and recorded first
-  greens for q_funnel/q_retention;
-* round 8 recorded first greens for the 11 round-7 additions — the
-  first zero-failure window (42 oracle green + 8 rows>0);
-* round 9 led with the 19 never-recorded queries and returned 28
-  r7-stale queries — the second consecutive zero-failure window;
-* round 10 led with the four r9 post-window additions, returned the
-  nine r7-stale queries and the oldest 30 r8 greens, and recorded the
-  seven rows-only pipelines — the third consecutive zero-failure
-  window (43 oracle green + 7 rows>0);
-* round 11 led with the four queries the r10 rotation promised the
-  first slots, then the eight rows-only→oracle upgrades of that
-  round (q_ann_lsh and the whole near-dup/curate/recall family via
-  engine-neutral md5_60 / integer-grid hashing), then the 13
-  r8-stale queries; the one rows-only slot took q_ann_recall — the
-  fourth consecutive zero-failure window (49 oracle green +
-  1 rows>0);
-* round 12 rotated in q_stream_neardup (the r11 _ROTATION_NEW
-  promise), the 21 r9-stale queries, and the oldest 27 r10 greens,
-  with q_ann_ivf in the rows-only slot — the fifth consecutive
-  zero-failure window (49 oracle green + 1 rows>0);
-* round 13 led with the three queries added after the r12 window
-  froze — q_embed_quantize, q_knn_classify, q_unicode_normalize (the
-  r12 _ROTATION_NEW promise) — then the 16 r10-stale queries, with
-  q_ann_recall in the rows-only slot and the oldest 30 r11 greens
-  returning — the sixth consecutive zero-failure window;
-* round 14 led with the two r13 _ROTATION_NEW queries
-  (q_unigram_entropy, q_dup_matrix), the two new r14 queries
-  q_semdedup and q_dup_spans, and the 19 r11-stale queries, with
-  q_ann_ivf in the rows-only slot (its first record on the on-disk
-  index read path) — the seventh consecutive zero-failure window
-  (49 oracle green + 1 rows>0);
-* round 15 (this rotation) leads with the three r14 _ROTATION_NEW
-  queries — q_embed_stats, q_zipf_census, q_eval_ndcg (oracle-backed
-  from birth, zero records anywhere) — then q_semdedup and
-  q_dup_spans returning (the r14 verdict's task 9: the r15 window
-  should lead with all five r14-born queries), then the 23 queries
-  whose newest green is r12 (the return the r14 rotation promised).
-  The one rows-only slot takes q_ann_ivf again (task 9: a repeat
-  record on the new index read path; q_ann_recall, newest record
-  r13, leads the r16 slot).  The remaining 21 oracle slots return
-  the first 21 of the 49 r13 greens in registration order (the
-  other 28 MUST lead the r16 returns).  Paying for those 50
-  in-slots: the 75 oracle-backed queries in _ROTATION_OUT (those 28
-  r13 greens plus the 47 r14 greens not re-recorded this round).
-
-Staleness invariant (tests/test_doc_consistency.py): every registry
-query's newest driver record is at most TWO rounds old at the round
-being recorded, and any never-recorded query sits INSIDE the current
-window (or in _ROTATION_NEW, which must lead the NEXT window).  124
-oracle queries across 49 oracle slots/round (and 2 rows-only across
-1) satisfy the bound: each needs a record only once per three windows
-(124 <= 3*49, 2 <= 3*1).
-
-Every oracle-backed query — inside or outside the current window — is
-additionally parity-checked against DuckDB on every test run by
-tests/test_oracle_parity.py (parametrized over the full registry), so
-rotation never removes verification, only varies which subset the
-external record samples this round.
+``REGISTRY`` holds every query in registration order. The driver
+window order is derived from the committed correctness records in
+``__spark_entry__.order``.
 """
 
 from prueba_tecnica_analista_etl_spark.plans.queries import (
@@ -89,196 +18,5 @@ from prueba_tecnica_analista_etl_spark.plans import extensions_text  # noqa: E40
 from prueba_tecnica_analista_etl_spark.plans import extensions_pipeline  # noqa: E402,F401
 from prueba_tecnica_analista_etl_spark.plans import extensions_scale  # noqa: E402,F401
 from prueba_tecnica_analista_etl_spark.plans import extensions_distributed  # noqa: E402,F401
-
-# The harness records the first WINDOW registry entries per round.
-WINDOW = 50
-
-# LEAD the window (round 15): the three r14 _ROTATION_NEW queries,
-# then the two r14-born queries returning on the r14 verdict's task 9
-# ask, then the 23 queries whose newest green is r12 (the return the
-# r14 rotation promised).
-_ROTATION_FIRST = [
-    # the r14 _ROTATION_NEW promise -- no driver record anywhere yet;
-    # FIRST so a partial driver run still certifies them:
-    "q_embed_stats",
-    "q_zipf_census",
-    "q_eval_ndcg",
-    # r14-born, recorded green in r14; returned here because the r14
-    # verdict asked the r15 window to lead with all five r14-born
-    # queries:
-    "q_semdedup",
-    "q_dup_spans",
-    # newest green r12 -- the promise in the r14 rotation comment:
-    "q_sliding_window",
-    "q_pii_scrub",
-    "q_doc_chunk",
-    "q_pack_sequences",
-    "q_contamination",
-    "q_repetition",
-    "q_embed_centroids",
-    "q_zscore_outliers",
-    "q_source_overlap",
-    "q_zscore_moments",
-    "q_pack_summary",
-    "q_dup_clusters",
-    "q_mixture_sample",
-    "q_group_sample",
-    "q_dup_exposure",
-    "q_stream_neardup",
-    "q_rolling_distinct",
-    "q_eval_auc",
-    "q_ks_distance",
-    "q_calibration_bins",
-    "q_eval_auc_daily",
-    "q_eval_topk_precision",
-    "q_heavy_hitters",
-]
-
-# Rows-only query recorded this round: q_ann_ivf again (r14 verdict
-# task 9: its r14 record was the first on the on-disk-index read
-# path; the verdict asked for a repeat record on that path).
-# q_ann_recall's newest record is r13 — it must lead the r16 slot.
-_ROWS_ONLY_IN = [
-    "q_ann_ivf",
-]
-
-# OUT this round -- 75 oracle-backed queries: the 28 r13 greens the
-# 21-slot return could not fit (two rounds old at r15; they MUST lead
-# the r16 returns) plus the 47 queries recorded green in
-# CORRECTNESS_r14.json that are not re-recorded this round.
-_ROTATION_OUT = [
-    # newest green r13 -- first in line for r16:
-    "q_winnow_fingerprint",
-    "q_ann_batch",
-    "q_unicode_normalize",
-    "q_knn_classify",
-    "q_token_histogram",
-    "q_bm25",
-    "q_unigram_logprob",
-    "q_perplexity_buckets",
-    "q_tfidf",
-    "q_source_priority_dedup",
-    "q_train_val_split",
-    "q_length_histogram",
-    "q_decontaminate",
-    "q_group_safe_split",
-    "q_minhash_dedup",
-    "q_ngram_jaccard",
-    "q_simhash_dedup",
-    "q_ann_lsh",
-    "q_embed_quantize",
-    "q_embed_neardup",
-    "q_multimodal_meta",
-    "q_stream_dedupe",
-    "q_stream_sessionize",
-    "q_corpus_curate",
-    "q_multimodal_pipeline",
-    "q_stream_cdc_apply",
-    "q_lsh_recall",
-    "q_stream_heavy_hitters",
-    # newest green r14 (the r14 oracle window minus the two r14-born
-    # queries re-recorded in _ROTATION_FIRST):
-    "q_scan_project",
-    "q_filter_predicate",
-    "q_union_all",
-    "q_count_distinct",
-    "q_groupby_count_sum",
-    "q_groupby_rollup",
-    "q_top_duplicates",
-    "q_having_dups",
-    "q_sort_limit",
-    "q_case_when_check",
-    "q_pivot_wide",
-    "q_dedup_keep_first",
-    "q_inner_join",
-    "q_local_supplier_revenue",
-    "q_upsert_merge",
-    "q_window_rownum",
-    "q_string_clean",
-    "q_regex_validate",
-    "q_try_cast_json",
-    "q_split_part",
-    "q_profile_stats",
-    "q_volume_by_day",
-    "q_tumbling_window",
-    "q_sessionize_batch",
-    "q_scd2",
-    "q_snapshot_diff",
-    "q_trailing_window",
-    "q_funnel",
-    "q_retention",
-    "q_lang_stats",
-    "q_text_tokens",
-    "q_cube",
-    "q_intersect_except",
-    "q_bpe_pairs",
-    "q_source_divergence",
-    "q_split_leakage",
-    "q_neardup_scores",
-    "q_unigram_entropy",
-    "q_dup_matrix",
-    "q_global_rank",
-    "q_train_order",
-    "q_incremental_agg_merge",
-    "q_bloom_semi_join",
-    "q_winsorize",
-    "q_inverted_index",
-    "q_filter_funnel",
-    "q_unpivot_long",
-]
-
-# Oracle-backed queries added AFTER the r15 window was fixed — zero
-# records anywhere yet, so they cannot displace a window slot promised
-# above.  Placed directly after the rotated-out queries; they MUST
-# lead the r16 window (tests/test_doc_consistency.py exempts exactly
-# this list from the never-recorded-inside-window rule on that
-# promise).  Append here when adding a query mid-round.
-_ROTATION_NEW: list[str] = []
-
-
-def _apply_rotation() -> None:
-    """Order the registry per the documented round-11 rotation.
-
-    Window (first WINDOW=50) = _ROTATION_FIRST, then the rows-only
-    audits in _ROWS_ONLY_IN, then the returning oracle queries
-    (registration order minus _ROTATION_OUT and _ROTATION_NEW).
-    Beyond the window: the rotated-out oracle queries, the post-window
-    new queries, then the remaining rows-only.  Adding a query without
-    listing it in _ROTATION_NEW (or resizing _ROTATION_OUT) fails the
-    arithmetic assert below — update the rotation lists AND this
-    module's docstring counts together (tests/test_doc_consistency.py
-    cross-checks both).
-    """
-    first = [n for n in _ROTATION_FIRST if n in REGISTRY]
-    returning = [
-        n
-        for n, s in REGISTRY.items()
-        if s.oracle is not None
-        and n not in _ROTATION_OUT
-        and n not in _ROTATION_NEW
-        and n not in _ROTATION_FIRST
-    ]
-    rows_only = [n for n, s in REGISTRY.items() if s.oracle is None]
-    rows_in = [n for n in _ROWS_ONLY_IN if n in rows_only]
-    rotated_out = [n for n in _ROTATION_OUT if n in REGISTRY]
-    new = [n for n in _ROTATION_NEW if n in REGISTRY]
-    rest = [n for n in rows_only if n not in rows_in]
-    ordered = {
-        n: REGISTRY[n]
-        for n in first + rows_in + returning + rotated_out + new + rest
-    }
-    assert len(ordered) == len(REGISTRY), "rotation dropped a registry entry"
-    assert len(first) + len(returning) + len(rows_in) == WINDOW, (
-        f"window arithmetic drifted: {len(first)} first + "
-        f"{len(returning)} returning oracle + {len(rows_in)} rows-only "
-        f"!= {WINDOW}; resize _ROTATION_OUT"
-    )
-    window = list(ordered)[:WINDOW]
-    assert all(n in window for n in _ROWS_ONLY_IN)
-    REGISTRY.clear()
-    REGISTRY.update(ordered)
-
-
-_apply_rotation()
 
 __all__ = ["REGISTRY", "QuerySpec", "queries", "oracle_sql"]

@@ -1,19 +1,27 @@
-"""Count-drift guard: the registry size is documented in three places
-(the rotation module docstring, README.md, SURVEY.md §2.11) and has
-drifted twice when a new q_* landed (r4: 63→65 noted late; r5: the
-rotation comment shipped saying 65/56 while the registry held 66/57 —
-an ADVICE finding both rounds). This test derives the true counts from
-the imported registry and greps each document for the exact literal
-phrase, so adding a query without updating all three docs fails HERE
-by file name. No Spark session needed — pure import + file reads.
+"""Doc and driver-record consistency guards.
+
+The registry size is quoted in README.md, SURVEY.md §2.11 and the
+BASELINE.md banner; these tests derive the true counts from the
+imported registry and grep each document for the exact literal
+phrase, so adding a query without updating the docs fails HERE by
+file name. The driver-window tests check ``__spark_entry__.order``
+on synthetic records and the staleness bound on the committed
+CORRECTNESS records. No Spark session needed — pure import + file
+reads.
 """
 
 from __future__ import annotations
 
 import os
 
-import prueba_tecnica_analista_etl_spark.plans as plans
-from prueba_tecnica_analista_etl_spark.plans import REGISTRY
+import __spark_entry__
+from __spark_entry__ import (
+    WINDOW,
+    _correctness_records,
+    _newest_good_round,
+    order,
+)
+from prueba_tecnica_analista_etl_spark.plans import REGISTRY, QuerySpec
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -22,21 +30,6 @@ def _counts() -> tuple[int, int, int]:
     total = len(REGISTRY)
     n_oracle = sum(1 for s in REGISTRY.values() if s.oracle is not None)
     return total, n_oracle, total - n_oracle
-
-
-def test_rotation_module_docstring_counts():
-    total, n_oracle, n_rows = _counts()
-    doc = plans.__doc__ or ""
-    assert (
-        f"{total} queries ({n_oracle} oracle-backed + {n_rows}\nrows-only)"
-        in doc
-        or f"{total} queries ({n_oracle} oracle-backed + {n_rows} rows-only)"
-        in doc.replace("\n", " ")
-    ), f"rotation docstring counts != computed {total}/{n_oracle}/{n_rows}"
-    outside = total - plans.WINDOW
-    assert f"{outside} must sit outside" in doc.replace("\n", " "), (
-        f"rotation docstring outside-window count != computed {outside}"
-    )
 
 
 def test_readme_counts():
@@ -64,106 +57,30 @@ def test_survey_counts():
     assert f"**{total} queries ({n_oracle} oracle-backed)**" in text
 
 
-def test_window_arithmetic():
-    """The recorded window is exactly WINDOW entries, every rows-only
-    query promised a record this round is inside it, and the
-    never-recorded lead set occupies the FIRST slots (so a partial
-    driver run still certifies them)."""
-    names = list(REGISTRY)
-    window = set(names[: plans.WINDOW])
-    for n in plans._ROWS_ONLY_IN:
-        assert n in window, n
-    assert names[: len(plans._ROTATION_FIRST)] == plans._ROTATION_FIRST
-    assert len(names) >= plans.WINDOW
-
-
-def test_rotation_out_list_arithmetic():
-    """The out-list size is DERIVED, not hand-counted: it must equal
-    n_oracle - (oracle slots in the window), so resizing the registry
-    without resizing _ROTATION_OUT fails here by name (the r6 verdict
-    flagged the r5 rotation paragraph going stale — this pins the
-    arithmetic to the code instead of the prose)."""
-    _, n_oracle, _ = _counts()
-    expected_out = (
-        n_oracle
-        - len(plans._ROTATION_NEW)
-        - (plans.WINDOW - len(plans._ROWS_ONLY_IN))
-    )
-    assert len(plans._ROTATION_OUT) == expected_out
-    doc = open(plans.__file__).read()
-    assert f"{len(plans._ROTATION_OUT)} oracle-backed queries" in doc, (
-        "rotation comment out-count drifted from _ROTATION_OUT"
-    )
-
-
-def _correctness_records() -> "dict[int, dict]":
-    """All committed CORRECTNESS_r*.json artifacts, keyed by round."""
-    import json
-    import re
-
-    out = {}
-    for f in os.listdir(ROOT):
-        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", f)
-        if m:
-            out[int(m.group(1))] = json.load(open(os.path.join(ROOT, f)))
-    return out
-
-
-def _record_is_good(spec, rec: dict | None) -> bool:
-    """A driver record counts for a query if it proves what the query
-    claims: value-exact hash match for oracle-backed, rows>0 for
-    rows-only (whose records carry err='no_oracle' by design)."""
-    if not rec:
-        return False
-    if spec.oracle is not None:
-        return rec.get("hash_match") is True
-    return (rec.get("spark_rows") or 0) > 0 and rec.get("err") in (
-        None,
-        "no_oracle",
-    )
-
-
 def test_registry_staleness_bound():
-    """Rotation hygiene (r8 verdict task 6): NO registry query's
-    newest good driver record may be more than TWO rounds behind the
-    newest committed CORRECTNESS artifact, and any never-recorded
-    query must sit INSIDE the current window (due for its first
-    record this round).  This replaces the r8 one-round out-list form,
-    which became unsatisfiable once the registry outgrew 2x the
-    window.  The two-round bound is sustainable whenever each cohort
-    fits in a third of its slots (asserted below from live counts, so
-    the justification cannot drift — an r9 ADVICE item) and still
-    catches the real r8 hazard class: a query shipped round after
-    round with only builder-side certification."""
-    _, n_oracle, n_rows = _counts()
-    oracle_slots = plans.WINDOW - len(plans._ROWS_ONLY_IN)
-    assert n_oracle <= 3 * oracle_slots, (
-        f"two-round staleness bound unsatisfiable: {n_oracle} oracle "
-        f"queries > 3x{oracle_slots} oracle slots/round"
-    )
-    assert n_rows <= 3 * len(plans._ROWS_ONLY_IN), (
-        f"two-round staleness bound unsatisfiable: {n_rows} rows-only "
-        f"queries > 3x{len(plans._ROWS_ONLY_IN)} rows-only slots/round"
+    """NO registry query's newest good driver record may be more than
+    TWO rounds behind the newest committed CORRECTNESS record, and any
+    never-recorded query must sit INSIDE the current window (due for
+    its first record this round). Recording the derived window each
+    round sustains the bound while the registry fits in three windows
+    (asserted from live counts) and still catches the real hazard: a
+    query shipped round after round with only builder-side
+    certification."""
+    assert len(REGISTRY) <= 3 * WINDOW, (
+        f"two-round staleness bound unsatisfiable: {len(REGISTRY)} "
+        f"queries > 3x{WINDOW} window slots/round"
     )
     records = _correctness_records()
     newest_round = max(records)
-    window = set(list(REGISTRY)[: plans.WINDOW])
+    window = set(list(__spark_entry__.queries())[:WINDOW])
     stale, unscheduled = [], []
     for n, spec in REGISTRY.items():
-        holding = [
-            r for r, rec in records.items() if _record_is_good(spec, rec.get(n))
-        ]
-        if not holding:
-            # _ROTATION_NEW = queries added AFTER this round's window
-            # was fixed; they cannot be inside it by construction, and
-            # the rotation module promises them the FIRST r10 slots —
-            # the next round's run of this test enforces that promise
-            # (they will still be never-recorded then, so they must be
-            # inside the r10 window or this assert fires).
-            if n not in window and n not in plans._ROTATION_NEW:
+        newest = _newest_good_round(n, spec, records)
+        if newest == 0:
+            if n not in window:
                 unscheduled.append(n)
-        elif max(holding) < newest_round - 2:
-            stale.append((n, max(holding)))
+        elif newest < newest_round - 2:
+            stale.append((n, newest))
     assert not unscheduled, (
         f"never-driver-recorded queries outside the current window: "
         f"{unscheduled}"
@@ -172,6 +89,82 @@ def test_registry_staleness_bound():
         f"queries whose newest good driver record trails "
         f"r{newest_round} by more than two rounds: {stale}"
     )
+
+
+def _spec(oracle: bool) -> QuerySpec:
+    return QuerySpec(fn=None, oracle="SELECT 1" if oracle else None, doc="")
+
+
+_GREEN = {"hash_match": True, "spark_rows": 3, "err": None}
+_ROWS = {"spark_rows": 3, "err": "no_oracle"}
+
+
+def test_order_without_records_is_registration_order():
+    registry = {n: _spec(True) for n in ("q_c", "q_a", "q_b")}
+    assert order(registry, {}) == ["q_c", "q_a", "q_b"]
+
+
+def test_order_never_recorded_leads_and_ties_keep_registration():
+    registry = {
+        "q_old": _spec(True),
+        "q_newer": _spec(True),
+        "q_also_old": _spec(False),
+        "q_fresh": _spec(True),
+    }
+    records = {
+        1: {"q_old": _GREEN, "q_also_old": _ROWS},
+        2: {"q_newer": _GREEN},
+    }
+    assert order(registry, records) == [
+        "q_fresh", "q_old", "q_also_old", "q_newer",
+    ]
+
+
+def test_order_failed_records_do_not_count():
+    registry = {
+        "q_hash": _spec(True),
+        "q_rows": _spec(False),
+        "q_ok": _spec(True),
+    }
+    records = {
+        1: {"q_hash": _GREEN, "q_rows": _ROWS, "q_ok": _GREEN},
+        2: {
+            "q_hash": dict(_GREEN, hash_match=False),
+            "q_rows": dict(_ROWS, spark_rows=0),
+            "q_ok": _GREEN,
+        },
+    }
+    assert order(registry, records) == ["q_hash", "q_rows", "q_ok"]
+
+
+def test_new_query_leads_the_window_without_edits():
+    """Adding a query needs no ordering edit: a never-recorded name
+    lands inside the derived window on the committed records."""
+    registry = dict(REGISTRY, q_brand_new=_spec(True))
+    derived = order(registry, _correctness_records())
+    assert derived.index("q_brand_new") < WINDOW
+
+
+# The 28 oracle queries whose newest green was r13 when r15 closed.
+_R13_GREENS = {
+    "q_winnow_fingerprint", "q_ann_batch", "q_unicode_normalize",
+    "q_knn_classify", "q_token_histogram", "q_bm25", "q_unigram_logprob",
+    "q_perplexity_buckets", "q_tfidf", "q_source_priority_dedup",
+    "q_train_val_split", "q_length_histogram", "q_decontaminate",
+    "q_group_safe_split", "q_minhash_dedup", "q_ngram_jaccard",
+    "q_simhash_dedup", "q_ann_lsh", "q_embed_quantize", "q_embed_neardup",
+    "q_multimodal_meta", "q_stream_dedupe", "q_stream_sessionize",
+    "q_corpus_curate", "q_multimodal_pipeline", "q_stream_cdc_apply",
+    "q_lsh_recall", "q_stream_heavy_hitters",
+}
+
+
+def test_r16_window_leads_with_the_r13_cohort():
+    """On the r01-r15 records the derived window leads with the 28 r13
+    greens plus q_ann_recall (rows-only, newest record r13)."""
+    records = {r: rec for r, rec in _correctness_records().items() if r <= 15}
+    head = order(REGISTRY, records)[:29]
+    assert set(head) == _R13_GREENS | {"q_ann_recall"}
 
 
 def test_survey_table_mirrors_registry():

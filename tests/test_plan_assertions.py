@@ -477,17 +477,13 @@ def test_recorded_window_emits_only_driver_proven_dtypes(
     spark, sf_dir
 ):
     """Every ORACLE-BACKED query inside the recorded window (the
-    first WINDOW registry entries — the rows the external harness
+    first WINDOW entries of queries() — the rows the external harness
     value-hashes) must emit only column dtypes some driver record has
     already proven green. Rows-only entries are exempt (the driver
-    never hashes their values). _ROTATION_NEW queries are included too:
-    they lead the NEXT window, so an unproven dtype there would be
-    next round's q_inverted_index-class surprise."""
-    from prueba_tecnica_analista_etl_spark import plans
+    never hashes their values)."""
+    import __spark_entry__
 
-    names = list(REGISTRY)[: plans.WINDOW] + [
-        n for n in plans._ROTATION_NEW if n in REGISTRY
-    ]
+    names = list(__spark_entry__.queries())[: __spark_entry__.WINDOW]
     offenders = {}
     for n in names:
         spec = REGISTRY[n]

@@ -1,12 +1,12 @@
 #!/usr/bin/env python
-"""Isolated-warm A/B timing for registry queries (r15 opt round).
+"""Isolated-warm A/B timing for registry queries.
 
 Runs the named queries in one session: one warm-up execution each,
 then N alternating timed executions via the noop sink, reporting
 per-query min/median. Same-session alternation is the only defensible
 comparison on this VM class (verify skill: degraded-VM weather).
 
-Usage: python tools_r15_ab.py q_a q_b ... [--trials=5] [--sf=/root/testdata/sf0.1]
+Usage: python tools/ab.py q_a q_b ... [--trials=5] [--sf=/root/testdata/sf0.1]
 """
 from __future__ import annotations
 
@@ -15,7 +15,7 @@ import statistics
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 os.environ.setdefault("SPARK_GRAFT_LSH_TRUTH_FRACTION", "0.5")
 
 args = [a for a in sys.argv[1:] if not a.startswith("--")]
@@ -30,7 +30,7 @@ sf_dir = next(
 from prueba_tecnica_analista_etl_spark.plans import REGISTRY
 from prueba_tecnica_analista_etl_spark.session import get_spark
 
-spark = get_spark(app_name="ab-r15")
+spark = get_spark(app_name="ab")
 spark.sparkContext.setLogLevel("ERROR")
 
 names = args or sorted(REGISTRY)

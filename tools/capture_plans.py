@@ -1,11 +1,11 @@
 #!/usr/bin/env python
-"""Capture .explain('formatted') for every registry query (r14 opt round).
+"""Capture .explain('formatted') for every registry query.
 
-Writes plans/r14/<query>_<tag>.txt and a JSON summary of plan-shape
+Writes <out_dir>/<query>_<tag>.txt and a JSON summary of plan-shape
 stats (Exchange count, join strategies, Python eval nodes, scans,
-pushed filters) to plans/r14/_summary_<tag>.json.
+pushed filters) to <out_dir>/_summary_<tag>.json.
 
-Usage: python tools_r14_capture_plans.py <tag> [sf_dir]
+Usage: python tools/capture_plans.py <out_dir> [tag] [sf_dir]
 """
 from __future__ import annotations
 
@@ -16,11 +16,13 @@ import re
 import sys
 import contextlib
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TAG = sys.argv[1] if len(sys.argv) > 1 else "before"
-SF_DIR = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
-OUT_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "plans", "r14")
+if len(sys.argv) < 2:
+    raise SystemExit(__doc__)
+OUT_DIR = sys.argv[1]
+TAG = sys.argv[2] if len(sys.argv) > 2 else "before"
+SF_DIR = sys.argv[3] if len(sys.argv) > 3 else "/root/testdata/sf0.1"
 os.makedirs(OUT_DIR, exist_ok=True)
 
 os.environ.setdefault("SPARK_GRAFT_LSH_TRUTH_FRACTION", "0.5")

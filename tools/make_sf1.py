@@ -1,11 +1,11 @@
 #!/usr/bin/env python
-"""Synthesize an sf1-scale corpus for the r15 core-count scaling
-spot-check (VERDICT r14 task 5).
+"""Synthesize an sf1-scale corpus for the core-count scaling
+spot-check (tools/sf1_scaling.py).
 
 The driver's testdata is read-only and tops out at sf0.1 — too small
-for core-count scaling to show (fixed costs dominate; the r14 PERF
-block measured ~1.0 ratios everywhere). This tool replicates sf0.1
-10x with remapped keys into $OUT (default /root/testdata_synth/sf1):
+for core-count scaling to show (fixed costs dominate; 8c/32c ratios
+measure ~1.0 everywhere). This tool replicates sf0.1 10x with
+remapped keys into OUT (default /root/testdata_synth/sf1):
 
 * events: event_id remapped to a fresh range per replica; ts shifted
   by <replica> seconds; value perturbed by replica*1e-6 so the
@@ -21,6 +21,8 @@ block measured ~1.0 ratios everywhere). This tool replicates sf0.1
 Deterministic (pure arithmetic on the source rows, no RNG). This is
 MEASUREMENT tooling only: nothing in the engine reads this corpus
 unless pointed at it explicitly.
+
+Usage: python tools/make_sf1.py [src_dir] [out_dir]   (SF1_REPLICAS=10)
 """
 from __future__ import annotations
 

@@ -1,13 +1,13 @@
 #!/usr/bin/env python
-"""Core-count scaling spot-check at sf1 (r14 verdict task 5).
+"""Core-count scaling spot-check at sf1.
 
 At sf0.1 every 8c/32c ratio is ~1.0 because scheduler + plan
 construction dominate; this runs a subset of compute/shuffle-bound
-queries against the 10x synthetic corpus (tools_r15_make_sf1.py) at
+queries against the 10x synthetic corpus (tools/make_sf1.py) at
 the CURRENT $SPARK_GRAFT_CPUS and prints per-query medians, so two
 invocations (SPARK_GRAFT_CPUS=32 / =8) give the scaling table.
 
-Usage: SPARK_GRAFT_CPUS=32 python tools_r15_sf1_scaling.py [sf_dir]
+Usage: SPARK_GRAFT_CPUS=32 python tools/sf1_scaling.py [sf_dir]
 """
 from __future__ import annotations
 
@@ -16,7 +16,7 @@ import statistics
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 os.environ.setdefault("SPARK_GRAFT_LSH_TRUTH_FRACTION", "0.5")
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata_synth/sf1"
