@@ -74,10 +74,8 @@ def single() -> None:
         artifact_root,
     )
 
-    _root = artifact_root()
-    store_warm = bool(
-        _root
-        and os.path.isdir(os.path.join(_root, _corpus_tag(sf_dir)))
+    store_warm = os.path.isdir(
+        os.path.join(artifact_root(), _corpus_tag(sf_dir))
     )
     _corpus_fingerprint(sf_dir)  # prime the TTL memo before the pass
     spark = get_spark(app_name="bench")

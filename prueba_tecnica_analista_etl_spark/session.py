@@ -15,41 +15,15 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Shuffle-partition sizing is SCALE-ADAPTIVE (r14, guide §2.2/§9):
-# derived from the core count the harness actually grants instead of a
-# constant tuned for one machine shape. Priority: explicit
-# $SPARK_GRAFT_SHUFFLE_PARTITIONS override > $SPARK_GRAFT_CPUS (the
-# driver's own core knob — it benches at SEVERAL core counts, and a
-# fixed 32 over-fragments the low-core runs) > os.cpu_count(). On a
-# real cluster the production value is executor-cores × 2-3 with AQE
-# coalescing sizing the actual post-shuffle partitions from bytes
-# (adaptive.coalescePartitions is on in get_spark AND pinned at
-# runtime by ensure_runtime_conf), so this local default never leaks
-# into a cluster profile. On the 32-vCPU harness with
-# SPARK_GRAFT_CPUS=32 this evaluates to 32 — bit-identical to the
-# pre-r14 constant, keeping the driver's bench comparable.
-DEFAULT_SHUFFLE_PARTITIONS = 32  # last-resort floor/fallback
+# Shuffle partitions follow the granted core count ($SPARK_GRAFT_CPUS,
+# else os.cpu_count()) rather than a constant tuned for one machine
+# shape: a fixed 32 over-fragments low-core runs. On a cluster, AQE
+# coalescing sizes the real post-shuffle partitions from bytes, so this
+# local default does not leak there.
+DEFAULT_SHUFFLE_PARTITIONS = 32  # fallback when the core count is unknown
 
 
 def _default_shuffle_partitions() -> int:
-    env = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
-    if env is not None:
-        # Tolerate whitespace; WARN on anything non-numeric rather
-        # than silently falling through to the CPU-derived value
-        # (ADVICE r14: ' 64' / '64\n' used to be ignored without a
-        # trace).
-        env = env.strip()
-        if env.isdigit():
-            return max(int(env), 1)
-        import warnings
-
-        warnings.warn(
-            "SPARK_GRAFT_SHUFFLE_PARTITIONS="
-            f"{os.environ['SPARK_GRAFT_SHUFFLE_PARTITIONS']!r} is not "
-            "a positive integer; falling back to the core-derived "
-            "default",
-            stacklevel=2,
-        )
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "").strip()
     if cpus.isdigit():
         return max(int(cpus), 1)
@@ -58,24 +32,22 @@ def _default_shuffle_partitions() -> int:
 
 def get_spark(
     app_name: str = "prueba-tecnica-etl-spark",
-    master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default
-    ``*``). All settings are also applied at runtime by
+    The master is ``local[$SPARK_GRAFT_CPUS]`` (env, default ``*``).
+    All settings are also applied at runtime by
     :func:`ensure_runtime_conf` so engine queries behave identically on
     an externally-created session (the driver owns its own session).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = (
-        SparkSession.builder.master(master or f"local[{cpus}]")
+        SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config(
             "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or _default_shuffle_partitions()),
+            str(_default_shuffle_partitions()),
         )
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

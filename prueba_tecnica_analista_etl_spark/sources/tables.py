@@ -157,26 +157,16 @@ def footer_stats_session(spark: SparkSession) -> SparkSession:
     tiny queries, and un-cached clones would accumulate on the shared
     SparkContext for the process lifetime.
     """
-    key = id(spark)
-    hit = _FOOTER_SESSIONS.get(key)
-    if hit is not None and hit[0]() is spark:
-        return hit[1]
-    # evict entries whose parent died (id() values can be reused
-    # after GC, so a dead entry is not just waste — it is a hazard)
-    for k in [k for k, (ref, _) in _FOOTER_SESSIONS.items() if ref() is None]:
-        _FOOTER_SESSIONS.pop(k, None)
-    s = spark.newSession()
-    s.conf.set("spark.sql.parquet.aggregatePushdown", "true")
-    s.conf.set("spark.sql.sources.useV1SourceList", "")
-    _FOOTER_SESSIONS[key] = (weakref.ref(spark), s)
+    s = _FOOTER_SESSIONS.get(spark)
+    if s is None:
+        s = spark.newSession()
+        s.conf.set("spark.sql.parquet.aggregatePushdown", "true")
+        s.conf.set("spark.sql.sources.useV1SourceList", "")
+        _FOOTER_SESSIONS[spark] = s
     return s
 
 
-# parent-session id -> (weakref(parent), configured clone).  The
-# parent rides a WEAK reference so memoization never pins a stopped
-# session (ADVICE r7: strong refs grew unboundedly in long-lived
-# multi-session processes); the ref() identity check keeps id()-reuse
-# sound, and dead entries are evicted on the next miss.
-_FOOTER_SESSIONS: dict[
-    int, "tuple[weakref.ref[SparkSession], SparkSession]"
-] = {}
+# parent session -> configured clone. The parent is a weak key, so the
+# memo never pins a stopped session; the clone does not refer back to
+# its parent, so the entry dies with it.
+_FOOTER_SESSIONS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()

@@ -23,24 +23,19 @@ from prueba_tecnica_analista_etl_spark.sources.tables import (
 )
 
 
-# Landing dirs are pure functions of (sf_dir, table, n_files, time_col)
-# over read-only testdata — staged through artifacts.artifact_directory
-# (r11), so repeated streaming queries rewrite nothing WITHIN a process
-# and a fresh process reuses the persisted dir instead of re-writing it
-# (rename preserves the stamped arrival-order mtimes). This dict is
-# only the in-process fast path over the disk check + schema read.
-_REPLAY_CACHE: dict[tuple, tuple[str, T.StructType]] = {}
-
-
 def _staged_landing_dir(
     sf_dir: str,
     name: str,
     write: Callable[[str], T.StructType],
 ) -> tuple[str, T.StructType]:
-    """Build-or-reuse a landing dir artifact. ``write(tmp)`` populates
-    ``tmp/data`` and returns the frame schema, which is persisted as a
-    JSON sidecar so a reusing process can plan the file stream without
-    re-deriving it."""
+    """Build-or-reuse a landing dir artifact. Landing dirs are pure
+    functions of the corpus and the replay options, so they are staged
+    through :func:`artifact_directory`: written once per corpus
+    generation, reused by later queries and processes (rename keeps the
+    stamped arrival-order mtimes). ``write(tmp)`` populates ``tmp/data``
+    and returns the frame schema, which is persisted as a JSON sidecar
+    so a reusing process can plan the file stream without re-deriving
+    it."""
     from prueba_tecnica_analista_etl_spark.artifacts import (
         artifact_directory,
     )
@@ -83,27 +78,8 @@ def write_replay_files(
       data — correct semantics, and exactly what the late-data DLQ
       tests (streaming/late_dlq.py) must observe.
     """
-    from prueba_tecnica_analista_etl_spark.artifacts import (
-        _corpus_fingerprint,
-    )
-
     if arrival_order not in ("range", "shuffled"):
         raise ValueError(f"unknown arrival_order {arrival_order!r}")
-
-    # Corpus fingerprint in the key (artifacts.py discipline): a
-    # regenerated source table misses and rewrites the landing dir
-    # instead of replaying stale data.
-    key = (
-        sf_dir,
-        table,
-        n_files,
-        time_col,
-        where,
-        arrival_order,
-        _corpus_fingerprint(sf_dir),
-    )
-    if base_dir is None and key in _REPLAY_CACHE:
-        return _REPLAY_CACHE[key]
 
     def _write(out: str) -> T.StructType:
         # Must run before the read: an externally-built session (the
@@ -156,11 +132,7 @@ def write_replay_files(
     digest = sha1(
         repr((table, n_files, time_col, where, arrival_order)).encode()
     ).hexdigest()[:10]
-    data_dir, schema = _staged_landing_dir(
-        sf_dir, f"replay:{table}:{digest}", _write
-    )
-    _REPLAY_CACHE[key] = (data_dir, schema)
-    return data_dir, schema
+    return _staged_landing_dir(sf_dir, f"replay:{table}:{digest}", _write)
 
 
 def write_overlapping_replay(
@@ -174,14 +146,6 @@ def write_overlapping_replay(
     delivered twice), mtime-ordered so they arrive as separate
     micro-batches. The union covers every row, so an exactly-once
     consumer must emit each id exactly once while seeing ~1.2× rows."""
-    from prueba_tecnica_analista_etl_spark.artifacts import (
-        _corpus_fingerprint,
-    )
-
-    key = ("overlap", sf_dir, table, id_col, _corpus_fingerprint(sf_dir))
-    if key in _REPLAY_CACHE:
-        return _REPLAY_CACHE[key]
-
     def _write(out: str) -> T.StructType:
         ensure_runtime_conf(spark)
         df = load_table(spark, sf_dir, table)
@@ -213,11 +177,9 @@ def write_overlapping_replay(
             os.utime(dst, (base_ts + i, base_ts + i))
         return df.schema
 
-    data_dir, schema = _staged_landing_dir(
+    return _staged_landing_dir(
         sf_dir, f"replay_overlap:{table}:{id_col}", _write
     )
-    _REPLAY_CACHE[key] = (data_dir, schema)
-    return data_dir, schema
 
 
 def replay_as_stream(

@@ -16,12 +16,11 @@ SF_ORACLE = os.environ.get("TEST_ORACLE_SF_DIR", "/root/testdata/sf0.001")
 
 
 def pytest_configure(config):
-    """Point the disk-backed artifact store at a per-run scratch root:
-    the suite must never read artifacts persisted by an EARLIER code
-    revision (a changed builder with an unchanged corpus fingerprint
-    would be served stale), and must not pollute the user cache with
-    tmp-corpus artifacts. The store's own logic (fingerprint keying,
-    tmp-then-rename, generation eviction) still runs for real."""
+    """Point the disk-backed artifact store at a per-run scratch root,
+    so the suite starts from an empty store and does not pollute the
+    user cache with tmp-corpus artifacts. The store's own logic
+    (generation keying, tmp-then-rename, generation eviction) still
+    runs for real."""
     if "PTAE_ARTIFACT_DIR" not in os.environ:
         import atexit
         import shutil

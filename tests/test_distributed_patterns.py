@@ -7,6 +7,7 @@ merge == recompute under arbitrary splits, funnel monotonicity).
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from prueba_tecnica_analista_etl_spark.plans.extensions_distributed import (
@@ -607,8 +608,7 @@ def test_artifact_store_survives_process_boundary(
     assert builds == ["f", "c"]
 
     # simulate a fresh process: memory memos gone, disk intact
-    artifacts._CACHE.clear()
-    artifacts._VALUE_CACHE.clear()
+    artifacts._MEMO.clear()
     df2 = artifacts.corpus_artifact(spark, corpus, "pb_frame", build_frame)
     v2 = artifacts.census_artifact(spark, corpus, "pb_val", build_census)
     assert builds == ["f", "c"], "fresh process must be served from disk"
@@ -630,7 +630,7 @@ def test_artifact_store_survives_process_boundary(
         return spark.createDataFrame([], "k int, t timestamp")
 
     e1 = artifacts.corpus_artifact(spark, corpus, "pb_empty", build_empty)
-    artifacts._CACHE.clear()
+    artifacts._MEMO.clear()
     e2 = artifacts.corpus_artifact(spark, corpus, "pb_empty", build_empty)
     assert builds[-1] == "e" and builds.count("e") == 1
     assert e2.count() == 0 and e2.schema == e1.schema
@@ -813,31 +813,230 @@ def test_misra_gries_all_distinct_and_empty(spark):
     assert frequent_items(empty, "k", capacity).count() == 0
 
 
-def test_gc_stale_versions_prunes_only_strictly_older(tmp_path):
-    """The version GC must remove ONLY strictly-older artifacts-v<N>
-    siblings, compared numerically: a NEWER revision's store (another
-    checkout sharing this $HOME) and unparseable siblings must
-    survive, or two alternating revisions would wipe each other's
-    stores on every run (r11 review finding)."""
+def _store_corpus(tmp_path, monkeypatch):
+    """A one-file corpus and an empty store root, both private to the
+    test, so store faults cannot leak into other tests' artifacts."""
     import os
 
-    from prueba_tecnica_analista_etl_spark.artifacts import (
-        _STORE_VERSION,
-        _gc_stale_versions,
-    )
+    monkeypatch.setenv("PTAE_ARTIFACT_DIR", str(tmp_path / "store"))
+    corpus = str(tmp_path / "corpus")
+    os.makedirs(corpus)
+    with open(os.path.join(corpus, "t.parquet"), "w") as fh:
+        fh.write("generation-one")
+    return corpus
 
-    mine = int(_STORE_VERSION[1:])
-    base = tmp_path / f"artifacts-{_STORE_VERSION}"
-    older = tmp_path / f"artifacts-v{mine - 1}"
-    newer = tmp_path / f"artifacts-v{mine + 7}"
-    # numeric compare matters: lexicographically "v10" < "v9"
-    much_newer = tmp_path / f"artifacts-v{mine * 10}"
-    weird = tmp_path / "artifacts-custom"
-    for d in (base, older, newer, much_newer, weird):
-        os.makedirs(d)
-    _gc_stale_versions(str(base))
-    assert not older.exists(), "strictly older version must be pruned"
-    assert newer.exists(), "newer version must survive"
-    assert much_newer.exists(), "numerically newer must survive"
-    assert weird.exists(), "unparseable sibling must survive"
-    assert base.exists()
+
+def _generation_dirs(corpus, stem):
+    import glob
+    import os
+
+    from prueba_tecnica_analista_etl_spark import artifacts
+
+    tag_dir = os.path.join(
+        artifacts.artifact_root(), artifacts._corpus_tag(corpus)
+    )
+    return sorted(glob.glob(os.path.join(tag_dir, f"{stem}-*")))
+
+
+@pytest.mark.parametrize("shape", ["frame", "census", "dir"])
+def test_store_builds_once_under_thread_race(
+    spark, tmp_path, monkeypatch, shape
+):
+    """Eight threads racing one missing key: exactly one runs build(),
+    and every thread is served the same artifact."""
+    import os
+    import sys
+    import threading
+    import time
+
+    from prueba_tecnica_analista_etl_spark import artifacts
+
+    corpus = _store_corpus(tmp_path, monkeypatch)
+    builds = []
+
+    def build(*args):
+        builds.append(1)
+        time.sleep(0.3)  # widen the window in which the others arrive
+        if shape == "frame":
+            return spark.range(3)
+        if shape == "census":
+            return {"bits": [1, 2, 3]}
+        with open(os.path.join(args[0], "payload"), "w") as fh:
+            fh.write("x")
+
+    def lookup():
+        if shape == "frame":
+            df = artifacts.corpus_artifact(spark, corpus, "race", build)
+            return df.count()
+        if shape == "census":
+            return artifacts.census_artifact(spark, corpus, "race", build)
+        return artifacts.artifact_directory(corpus, "race", build)
+
+    gate = threading.Barrier(8)
+    results = [None] * 8
+
+    def client(i):
+        gate.wait()
+        results[i] = lookup()
+
+    threads = [threading.Thread(target=client, args=(i,)) for i in range(8)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-4)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert len(builds) == 1
+    assert all(r == results[0] for r in results) and results[0] is not None
+
+
+def test_store_rebuilds_truncated_parquet_and_garbage_pickle(
+    spark, tmp_path, monkeypatch
+):
+    """A persisted generation that no longer reads back (a truncated
+    parquet part, a garbage value.pkl) must end in a rebuild serving the
+    right value, not an error and not a stale value."""
+    import glob
+    import os
+
+    from prueba_tecnica_analista_etl_spark import artifacts
+
+    corpus = _store_corpus(tmp_path, monkeypatch)
+    builds = []
+
+    def build_frame():
+        builds.append("f")
+        return spark.createDataFrame(
+            [(i, "v") for i in range(50)], "id long, s string"
+        )
+
+    def build_census():
+        builds.append("c")
+        return {"words": [3, 5, 7]}
+
+    artifacts.corpus_artifact(spark, corpus, "bad_frame", build_frame)
+    artifacts.census_artifact(spark, corpus, "bad_val", build_census)
+    (frame_dir,) = _generation_dirs(corpus, "bad_frame")
+    (value_dir,) = _generation_dirs(corpus, "census_bad_val")
+    parts = glob.glob(os.path.join(frame_dir, "data", "part-*.parquet"))
+    assert parts
+    for p in parts:
+        size = os.path.getsize(p)
+        with open(p, "r+b") as fh:
+            fh.truncate(size // 2)
+    with open(os.path.join(value_dir, "value.pkl"), "wb") as fh:
+        fh.write(b"not a pickle")
+
+    artifacts._MEMO.clear()
+    df = artifacts.corpus_artifact(spark, corpus, "bad_frame", build_frame)
+    value = artifacts.census_artifact(spark, corpus, "bad_val", build_census)
+    assert builds == ["f", "c", "f", "c"]
+    assert sorted(r.id for r in df.collect()) == list(range(50))
+    assert value == {"words": [3, 5, 7]}
+
+    # the rebuilt generations are whole again: a fresh memo reads them
+    artifacts._MEMO.clear()
+    df = artifacts.corpus_artifact(spark, corpus, "bad_frame", build_frame)
+    assert df.count() == 50
+    assert (
+        artifacts.census_artifact(spark, corpus, "bad_val", build_census)
+        == value
+    )
+    assert builds == ["f", "c", "f", "c"]
+
+
+def test_store_removes_orphaned_tmp_when_generation_lands(
+    tmp_path, monkeypatch
+):
+    """A writer that crashed mid-build leaves ``<name>-<gen>.tmp-*``
+    behind; it is removed when that generation lands."""
+    import os
+    import shutil
+
+    from prueba_tecnica_analista_etl_spark import artifacts
+
+    corpus = _store_corpus(tmp_path, monkeypatch)
+
+    def build(d):
+        with open(os.path.join(d, "payload"), "w") as fh:
+            fh.write("x")
+
+    final = artifacts.artifact_directory(corpus, "orphan", build)
+    shutil.rmtree(final)
+    orphan = f"{final}.tmp-crashed"
+    os.makedirs(orphan)
+    assert artifacts.artifact_directory(corpus, "orphan", build) == final
+    assert os.path.isfile(os.path.join(final, "payload"))
+    assert not os.path.exists(orphan)
+
+
+def test_engine_source_change_rebuilds_and_evicts(
+    spark, tmp_path, monkeypatch
+):
+    """Artifacts built by other engine code are never served: a changed
+    source digest misses every shape, and the old generations are
+    removed when their successors land."""
+    import os
+
+    from prueba_tecnica_analista_etl_spark import artifacts
+
+    corpus = _store_corpus(tmp_path, monkeypatch)
+    builds = []
+
+    def build_census():
+        builds.append("c")
+        return len(builds)
+
+    def build_dir(d):
+        builds.append("d")
+
+    assert artifacts.census_artifact(spark, corpus, "code", build_census) == 1
+    old_dir = artifacts.artifact_directory(corpus, "code", build_dir)
+    (old_census,) = _generation_dirs(corpus, "census_code")
+    assert artifacts.census_artifact(spark, corpus, "code", build_census) == 1
+    assert builds == ["c", "d"]
+
+    monkeypatch.setattr(artifacts, "_SOURCE_DIGEST", "0" * 40)
+    assert artifacts.census_artifact(spark, corpus, "code", build_census) == 3
+    new_dir = artifacts.artifact_directory(corpus, "code", build_dir)
+    assert builds == ["c", "d", "c", "d"]
+    assert new_dir != old_dir and os.path.isdir(new_dir)
+    assert not os.path.exists(old_dir)
+    (new_census,) = _generation_dirs(corpus, "census_code")
+    assert new_census != old_census and not os.path.exists(old_census)
+
+
+def test_source_digest_tracks_py_content_only(tmp_path):
+    """The engine digest changes with one byte of any ``*.py`` file and
+    ignores everything else in the package tree."""
+    import os
+    import shutil
+
+    from prueba_tecnica_analista_etl_spark import artifacts
+
+    pkg = str(tmp_path / "pkg")
+    shutil.copytree(
+        os.path.dirname(artifacts.__file__),
+        pkg,
+        ignore=shutil.ignore_patterns("__pycache__"),
+    )
+    base = artifacts._source_digest(pkg)
+    assert base == artifacts._SOURCE_DIGEST
+
+    with open(os.path.join(pkg, "notes.txt"), "w") as fh:
+        fh.write("not code")
+    os.makedirs(os.path.join(pkg, "__pycache__"))
+    with open(os.path.join(pkg, "__pycache__", "x.pyc"), "wb") as fh:
+        fh.write(b"bytecode")
+    assert artifacts._source_digest(pkg) == base
+
+    target = os.path.join(pkg, "session.py")
+    data = bytearray(open(target, "rb").read())
+    data[0] ^= 1
+    with open(target, "wb") as fh:
+        fh.write(data)
+    assert artifacts._source_digest(pkg) != base

@@ -1777,3 +1777,29 @@ def test_mg_stream_ledger_survives_kill_restart(spark, sf_dir, tmp_path):
         }
 
     assert recount(acc2.candidates()) == recount(acc_ctl.candidates())
+
+
+def test_replay_dir_survives_bare_clear_artifacts(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A bare clear_artifacts() wipes the disk store, landing dirs
+    included; the next write_replay_files must rebuild the landing dir
+    rather than return the deleted path, and the stream over it must
+    replay the whole table."""
+    import shutil
+
+    from prueba_tecnica_analista_etl_spark.artifacts import clear_artifacts
+
+    monkeypatch.setenv("PTAE_ARTIFACT_DIR", str(tmp_path / "store"))
+    corpus = tmp_path / "corpus"
+    corpus.mkdir()
+    shutil.copy(os.path.join(sf_dir, "events.parquet"), corpus)
+    sf = str(corpus)
+
+    first, _ = write_replay_files(spark, sf, "events", 2)
+    assert os.path.isdir(first)
+    clear_artifacts()
+    data_dir, schema = write_replay_files(spark, sf, "events", 2)
+    assert os.path.isdir(data_dir)
+    out = run_available_now(replay_as_stream(spark, data_dir, schema), spark)
+    assert out.count() == load_table(spark, sf, "events").count() > 0
