@@ -13,7 +13,6 @@ from prueba_tecnica_analista_etl_spark.functions.cleanse import (
 from prueba_tecnica_analista_etl_spark.functions.validate import (
     email_valid,
     phone_status,
-    phone_status_pandas_udf,
 )
 
 __all__ = [
@@ -23,5 +22,4 @@ __all__ = [
     "json_long",
     "email_valid",
     "phone_status",
-    "phone_status_pandas_udf",
 ]

@@ -43,7 +43,3 @@ def json_long(c: Column, path: str) -> Column:
         F.get_json_object(c, path).try_cast("long"), F.lit(0)
     )
 
-
-def clean_text(c: Column) -> Column:
-    """trim + collapse internal runs of whitespace (F1 family)."""
-    return F.regexp_replace(F.trim(c), r"\s+", " ")

@@ -1,22 +1,14 @@
-"""Validation rule classifiers (F3-F6, U1/U2).
+"""Validation rule classifiers (F3-F5, U1/U2).
 
 The reference validates emails with a row-wise ``re.match`` lambda and
 phones with a named Python UDF (``validar_telefono``). Policy rewrite:
-both are pure when-chain/rlike expressions (JVM-side). A Pandas-UDF
-variant of the phone classifier is kept to prove the slow-path parity
-(tested equal), because real pipelines sometimes need genuinely
-non-expressible Python — the pattern to copy is Arrow-vectorized, never
-row-at-a-time.
+both are pure when-chain/rlike expressions (JVM-side).
 """
 
 from __future__ import annotations
 
-import pandas as pd
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 # Anchored (rlike is substring-match); Java-regex compatible.
 EMAIL_RE = r"^[A-Za-z0-9._%+\-]+@[A-Za-z0-9.\-]+\.[A-Za-z]{2,}$"
@@ -46,20 +38,3 @@ def phone_status(c: Column) -> Column:
         .otherwise(F.lit("No Apto"))
     )
 
-
-@pandas_udf(T.StringType())
-def phone_status_pandas_udf(s: pd.Series) -> pd.Series:
-    """Arrow-vectorized parity twin of :func:`phone_status` (U2).
-    Kept for tests; production uses the native chain."""
-    digits = s.fillna("").astype(str)
-    is_digits = digits.str.fullmatch(r"[0-9]+")
-    ten = digits.str.len() == 10
-    out = pd.Series("No Apto", index=s.index, dtype="object")
-    out[is_digits & ten & digits.str.startswith("3")] = "Celular"
-    out[is_digits & ten & digits.str.startswith("601")] = "Fijo"
-    return out
-
-
-def status_verdict(ok: Column, ok_label: str, err_label: str) -> Column:
-    """Generic OK/ERROR status string (F6)."""
-    return F.when(ok, F.lit(ok_label)).otherwise(F.lit(err_label))

@@ -12,11 +12,9 @@ the purge computes the greedy min-id maximal independent set by
 fixpoint iteration — a doc is dropped only while some SURVIVING
 smaller near-dup of it exists. One-shot "drop every doc_b" would
 over-purge chains (A~B, B~C, A≁C kills C even though its only
-near-dup B is itself dead); the iteration re-admits such docs. Still
-the cheap-and-deterministic alternative to full connected components;
-:func:`near_dup_purge_components` (operators/components.py, native
-DataFrame CC — no GraphFrames needed) gives the stricter
-one-survivor-per-family semantics when transitive closure matters.
+near-dup B is itself dead); the iteration re-admits such docs. It is
+the cheap, deterministic alternative to full connected components
+(one survivor per transitive family).
 
 Each stage is one shuffle; nothing collects to the driver except the
 audit counts (``observe``-style, after the fact).
@@ -69,20 +67,19 @@ def exact_dedup(docs: DataFrame) -> DataFrame:
 def _materialize(df: DataFrame) -> DataFrame:
     """EAGER ``localCheckpoint`` — the deliberate, measured choice.
 
-    Round-4 ADVICE asked to gate this behind execution
-    (``eager=False``). Measured at sf0.1, every lazy variant loses
-    badly: (a) with AQE on, ``toRdd`` inside ``localCheckpoint``
-    materializes every shuffle stage anyway (construction still runs
-    jobs) and the split execution took 26-70 s; (b) with AQE +
-    auto-broadcast disabled during planning, construction is truly
-    job-free but the first action then recomputes the SHARED minhash
-    candidate DAG once per consuming branch — Spark reuses persisted
-    blocks across jobs, not within one job's concurrently-computed
-    branches — and q_corpus_curate ran 10-31 s. The eager
-    materialize-once pipeline runs ~1.4 s. Staging the candidate-pair
-    artifact eagerly (like IVF quantizer training) is the design;
-    repeat constructions are cheap via the evictable pair cache
-    (:func:`cached_minhash_pairs` + :func:`clear_pairs_cache`)."""
+    Measured at sf0.1, every lazy variant loses badly: (a) with AQE
+    on, ``toRdd`` inside ``localCheckpoint`` materializes every
+    shuffle stage anyway (construction still runs jobs) and the split
+    execution took 26-70 s; (b) with AQE + auto-broadcast disabled
+    during planning, construction is truly job-free but the first
+    action then recomputes the SHARED minhash candidate DAG once per
+    consuming branch — Spark reuses persisted blocks across jobs, not
+    within one job's concurrently-computed branches — and
+    q_corpus_curate ran 10-31 s. The eager materialize-once pipeline
+    runs ~1.4 s. Staging the candidate-pair artifact eagerly (like IVF
+    quantizer training) is the design; repeat constructions are cheap
+    via the evictable pair cache (:func:`cached_minhash_pairs` +
+    :func:`clear_pairs_cache`)."""
     return df.localCheckpoint()
 
 
@@ -164,8 +161,8 @@ def _restricted_pairs(
             "left_semi",
         )
     )
-    # The iteration base is ``present`` (r15 fuse): it is a SUPERSET
-    # of the restricted pairs' endpoints, and the extra ids sit in no
+    # The iteration base is ``present``: it is a SUPERSET of the
+    # restricted pairs' endpoints, and the extra ids sit in no
     # restricted pair, so they ride every purge round untouched and
     # cancel out of the dropped set (dropped = base − alive touches
     # only ids that lose a round). Re-deriving the exact endpoint set
@@ -288,35 +285,6 @@ def near_dup_purge_stable(
     return docs.join(dropped, "doc_id", "left_anti"), audit
 
 
-def near_dup_purge_components(
-    docs: DataFrame, pairs: DataFrame
-) -> DataFrame:
-    """Component-exact purge: survivors = the min-id doc of every
-    duplicate FAMILY (connected component of the pair graph), plus
-    every doc in no pair.
-
-    Trade vs :func:`near_dup_purge_stable`: the greedy form keeps a
-    maximal independent set (a chain A~B, B~C with A≁C keeps A AND C),
-    treating only DIRECT near-dups as exclusive; this form treats
-    transitive connection as family identity and keeps exactly one per
-    family — the standard cluster-then-keep-one semantics of
-    production near-dup dedup (MinHash families are usually true
-    rewrites chained through intermediate revisions). Stricter, so it
-    never keeps a pair the greedy form would purge. Cost: the CC
-    fixpoint's diameter-many endpoint-sized rounds instead of the
-    alternating-chain rounds — same O(|pairs|) frames throughout."""
-    from prueba_tecnica_analista_etl_spark.operators.components import (
-        connected_components,
-    )
-
-    pairs, _endpoints = _restricted_pairs(docs, pairs)
-    labels = connected_components(pairs, a="doc_a", b="doc_b")
-    dropped = labels.filter(F.col("node") != F.col("comp")).select(
-        F.col("node").alias("doc_id")
-    )
-    return docs.join(dropped, "doc_id", "left_anti")
-
-
 # The candidate-pair frame is a per-corpus artifact like the IVF
 # quantizer (extensions_scale.ivf_centroids) and the unigram score
 # frame (extensions_pipeline._unigram_scored): real pipelines compute
@@ -370,24 +338,15 @@ def curate_corpus(
     spark: SparkSession,
     sf_dir: str,
     min_tokens: int = 4,
-    purge: str = "greedy",
 ) -> tuple[DataFrame, dict[str, int]]:
     """Full curation chain over the ``documents`` table; returns the
     surviving corpus and per-stage audit counts.
 
-    ``purge`` selects the near-dup survivor semantics:
-
-    * ``"greedy"`` (default, the declared q_corpus_curate shape) —
-      the STABLE maximal-independent-set purge (eager fixpoint):
-      curate_corpus computes audit counts anyway, so the per-round
-      actions cost nothing extra, and the audit makes any enforcement
-      over-purge observable (``enforcement_over_purged`` is 0 on
-      convergence).
-    * ``"components"`` — cluster-then-keep-one
-      (:func:`near_dup_purge_components`): one survivor per connected
-      duplicate FAMILY, the stricter production-dedup semantics."""
-    if purge not in ("greedy", "components"):
-        raise ValueError(f"unknown purge mode: {purge!r}")
+    The near-dup purge is the STABLE maximal-independent-set form
+    (:func:`near_dup_purge_stable`, eager fixpoint): curate_corpus
+    computes audit counts anyway, so the per-round actions cost
+    nothing extra, and the audit makes any enforcement over-purge
+    observable (``enforcement_over_purged`` is 0 on convergence)."""
     from prueba_tecnica_analista_etl_spark.plans.queries import _t
 
     docs = _t(spark, sf_dir, "documents")
@@ -403,11 +362,7 @@ def curate_corpus(
     # The UNCAPPED pair frame: the reporting query's top-100 limit
     # must never bound what curation purges.
     pairs = cached_minhash_pairs(spark, sf_dir)
-    if purge == "components":
-        survivors = near_dup_purge_components(deduped, pairs)
-        purge_audit: dict[str, int] = {}
-    else:
-        survivors, purge_audit = near_dup_purge_stable(deduped, pairs)
+    survivors, purge_audit = near_dup_purge_stable(deduped, pairs)
     stats = {
         "input_docs": docs.count(),
         "after_quality": gated.count(),

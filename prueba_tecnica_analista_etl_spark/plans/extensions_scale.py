@@ -3,7 +3,7 @@ replaces an O(n²) all-pairs comparison with a bucketing scheme (LSH
 band join, shared-minhash, sign-bit hamming) whose cost is one shuffle
 on the bucket key plus per-bucket work.
 
-ORACLE STATUS (r11): the near-dup family (minhash / ngram-jaccard /
+ORACLE STATUS: the near-dup family (minhash / ngram-jaccard /
 simhash / embed-cosine), the sign-LSH ANN tier, and the composites
 built on them (q_corpus_curate — purge fixpoint unrolled in SQL;
 q_lsh_recall — truth and found sides both SQL-expressible;
@@ -78,8 +78,8 @@ BUCKET_CAP = 64  # skew guard: per-bucket pair work is bounded by
 # SUB-SPLITTING oversized buckets (see capped_pair_array), never by
 # silently dropping them.
 
-# ENGINE-NEUTRAL seeded minhash family (r11, what lifted
-# q_minhash_dedup to oracle-backed): mh_j(h) = (a_j·x + b_j·y + c_j)
+# ENGINE-NEUTRAL seeded minhash family (what makes q_minhash_dedup
+# oracle-backed): mh_j(h) = (a_j·x + b_j·y + c_j)
 # mod (2^61−1) where x = h & (2^30−1), y = h >> 30 split the 60-bit
 # md5 prefix hash. Coefficients < 2^30 keep every intermediate under
 # 2^62 — exact int64 arithmetic in Spark, DuckDB, and any ANSI engine
@@ -173,8 +173,8 @@ def capped_pair_array(
     into ``ceil(n/cap)`` groups of ≤ cap, and pairs expand within each
     chunk only. Per-bucket work is O(n·cap) instead of O(n²), and a
     popular bucket still yields its intra-chunk pairs instead of
-    silently vanishing (the round-2 guard refused whole buckets, which
-    let near-dups survive curation with no signal). Cross-chunk pairs
+    silently vanishing (refusing whole buckets would let near-dups
+    survive curation with no signal). Cross-chunk pairs
     are the residual loss; under multi-band LSH any such pair can
     still be found by another band it shares — PROVIDED chunk
     boundaries differ per band, which is why banded callers must pass
@@ -223,7 +223,7 @@ def capped_pair_array(
         return expand(plain)
     chunk_seed = F.lit(seed) if seed_col is None else seed_col
     # Secondary chunk-order hash: md5_60 of "<seed>:<id>" — engine-
-    # neutral (r11, was xxhash64), so an oracle reproduces the exact
+    # neutral (not xxhash64), so an oracle reproduces the exact
     # chunk boundaries with row_number() over the same hash. Ids are
     # unique within a bucket, so (hash, id) totally orders it.
     ordered = F.transform(
@@ -266,7 +266,7 @@ def capped_pair_array(
 
 def doc_shingle_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc 3-token shingle features over the ``documents`` corpus,
-    staged ONCE per corpus (r12 verdict task 4): ``(doc_id, sh, hs)``
+    staged ONCE per corpus: ``(doc_id, sh, hs)``
     with ``sh`` the distinct shingle strings and ``hs`` their sorted
     md5_60 hashes. The whole near-dup family (minhash, single-band
     n-gram, simhash, the LSH-recall truth side) consumes this one
@@ -541,10 +541,9 @@ def _minhash_scored_pairs_cte(capped: bool = True) -> str:
 
 
 def _minhash_oracle_sql() -> str:
-    """DuckDB oracle for the FULL banded-minhash path (r11 upgrade
-    from rows-only): the shared scored-pairs chain plus the >= 0.5
-    gate — comparing the SAME IEEE division both sides — and the
-    reporting top-100."""
+    """DuckDB oracle for the FULL banded-minhash path: the shared
+    scored-pairs chain plus the >= 0.5 gate — comparing the SAME IEEE
+    division both sides — and the reporting top-100."""
     return f"""
     WITH {_minhash_scored_pairs_cte()}
     SELECT doc_a, doc_b, round(_j, 4) AS jaccard_sim
@@ -556,8 +555,8 @@ def _minhash_oracle_sql() -> str:
 @query(
     "q_minhash_dedup",
     _minhash_oracle_sql(),
-    doc="D6 (near-dup, MinHash+LSH), ORACLE-EXACT end-to-end (r11, "
-    "was rows-only): banded minhash over 3-token shingles, pure "
+    doc="D6 (near-dup, MinHash+LSH), ORACLE-EXACT end-to-end: "
+    "banded minhash over 3-token shingles, pure "
     "DataFrame ops. Signature = 12 seeded Mersenne-prime minima over "
     "engine-neutral md5_60 shingle hashes, grouped 4 bands × 3 rows; "
     "candidates share a band's minima triple (one explode + one "
@@ -570,7 +569,7 @@ def _minhash_oracle_sql() -> str:
 def q_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The reporting query rides the MEMOIZED pair frame — the same
     # per-corpus artifact q_corpus_curate purges from and q_dup_matrix
-    # censuses (r13; the live construction stays exercised by the
+    # censuses (the live construction stays exercised by the
     # streaming gate and the parity/plan suites via minhash_pairs).
     from prueba_tecnica_analista_etl_spark.pipelines.corpus import (
         cached_minhash_pairs,
@@ -645,12 +644,11 @@ def ngram_pair_frame(
 
 
 def _ngram_oracle_sql() -> str:
-    """DuckDB oracle for the single-band min-shingle path (r11 upgrade
-    from rows-only): bucket key = min md5_60 shingle hash (engine-
-    neutral), skew chunks replay the constant-seed ('7') md5_60
-    secondary order, exact trigram Jaccard per candidate pair via the
-    shared-shingle count (|A∩B| join) and per-doc distinct-shingle
-    census (|A∪B| = n_a + n_b − shared)."""
+    """DuckDB oracle for the single-band min-shingle path: bucket key = min
+    md5_60 shingle hash (engine-neutral), skew chunks replay the
+    constant-seed ('7') md5_60 secondary order, exact trigram Jaccard
+    per candidate pair via the shared-shingle count (|A∩B| join) and
+    per-doc distinct-shingle census (|A∪B| = n_a + n_b − shared)."""
     chunk = _sql_chunk("mh", "7", "doc_id")
     return f"""
     WITH {_sql_doc_shingle_cte(3)},
@@ -681,8 +679,8 @@ def _ngram_oracle_sql() -> str:
 @query(
     "q_ngram_jaccard",
     _ngram_oracle_sql(),
-    doc="n-gram Jaccard near-dup, ORACLE-EXACT end-to-end (r11, was "
-    "rows-only): trigram-shingle sets, candidates = docs sharing the "
+    doc="n-gram Jaccard near-dup, ORACLE-EXACT end-to-end: "
+    "trigram-shingle sets, candidates = docs sharing the "
     "global min md5_60 shingle hash (1-band minhash LSH, engine-"
     "neutral), exact Jaccard on candidates only. One groupBy(minhash) "
     "shuffle replaces the n² comparison; oversized buckets are "
@@ -812,13 +810,12 @@ def simhash_pair_frame(
 
 
 def _simhash_oracle_sql() -> str:
-    """DuckDB oracle for the banded-SimHash path (r11 upgrade from
-    rows-only): features are md5_60 shingle hashes (engine-neutral,
-    < 2^60 so bits 60-63 are zero both sides), the signature is the
-    per-bit majority fold 2·ones_j > n — EXACT integer arithmetic, so
-    it equals the engine's Arrow/numpy bit census bit-for-bit — and
-    bands, skew chunks, hamming, and the <= 8 gate are all integer
-    ops."""
+    """DuckDB oracle for the banded-SimHash path: features are md5_60
+    shingle hashes (engine-neutral, < 2^60 so bits 60-63 are zero both
+    sides), the signature is the per-bit majority fold 2·ones_j > n —
+    EXACT integer arithmetic, so it equals the engine's Arrow/numpy bit
+    census bit-for-bit — and bands, skew chunks, hamming, and the <= 8
+    gate are all integer ops."""
     bits = "\n             + ".join(
         f"(CASE WHEN 2 * sum((h >> {j}) & 1) > count(*) "
         f"THEN {1 << j} ELSE 0 END)"
@@ -852,8 +849,8 @@ def _simhash_oracle_sql() -> str:
 @query(
     "q_simhash_dedup",
     _simhash_oracle_sql(),
-    doc="SimHash near-dup, ORACLE-EXACT end-to-end (r11, was "
-    "rows-only): 64-bit majority signature over 3-shingle md5_60 "
+    doc="SimHash near-dup, ORACLE-EXACT end-to-end: "
+    "64-bit majority signature over 3-shingle md5_60 "
     "features (JVM hashing + Arrow-batched numpy bit census — exact "
     "integer majority, reproduced bit-for-bit by a SQL fold), banded "
     "4×16 bits; candidates share a band value (one shuffle on "
@@ -887,17 +884,17 @@ def q_simhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # sweep alongside its neighbors, so a retune here is automatically
 # what gets measured).
 #
-# r12 retune (the r11 verdict's headline ask): 16 bits / hamming<=4
-# measured recall@10 = 0.2 at sf0.1 — the corpus's true top-10 sits at
-# cosine 0.27-0.41, where 16-bit signatures are near-random relative
-# to the probe (P(bit agree) = 1 - angle/pi ~ 0.60). The shipped point
-# is now 128 planes packed as 4x32-bit words (sign_words) with radius
-# 55: measured against the exact top-10, recall@10 = 1.0 at sf0.1
-# (13.9% of the corpus as candidates), 0.9 at sf0.01 (11.2%), 0.5 at
-# sf0.001 (a 500-vector corpus is too sparse for any radius to
-# separate — the sweep table shows it honestly). The sweep
-# (q_ann_recall) now also emits n_candidates per operating point, so
-# the recall-vs-scan-cost trade is a recorded number, not prose.
+# Operating point: 16 bits / hamming<=4 measured recall@10 = 0.2 at
+# sf0.1 — the corpus's true top-10 sits at cosine 0.27-0.41, where
+# 16-bit signatures are near-random relative to the probe (P(bit agree)
+# = 1 - angle/pi ~ 0.60). The shipped point is now 128 planes packed as
+# 4x32-bit words (sign_words) with radius 55: measured against the exact
+# top-10, recall@10 = 1.0 at sf0.1 (13.9% of the corpus as candidates),
+# 0.9 at sf0.01 (11.2%), 0.5 at sf0.001 (a 500-vector corpus is too
+# sparse for any radius to separate — the sweep table shows it
+# honestly). The sweep (q_ann_recall) now also emits n_candidates per
+# operating point, so the recall-vs-scan-cost trade is a recorded
+# number, not prose.
 LSH_BITS = 128
 LSH_HAMMING = 55
 LSH_WORD_BITS = 32
@@ -905,19 +902,18 @@ LSH_WORDS = LSH_BITS // LSH_WORD_BITS
 
 
 def lsh_sig_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(vec_id, v, sig) — every corpus vector with its 128-bit
-    sign-LSH signature (4×32-bit words over the seeded ±1 planes),
-    staged once per corpus (r14). This IS the at-rest layout the
-    q_ann_lsh docstring describes — a vector store keeps the
-    signature column beside the vectors so a probe scans signatures,
-    not matmuls — so the per-call Arrow projection (one corpus-wide
-    numpy matmul per invocation) moves into the once-per-corpus
-    builder, exactly like the simhash/embed-neardup signature stages
-    did in r13 (builder Arrow node pinned by
-    test_staged_builders_keep_their_arrow_stages). Operating point
-    (bits × word-bits, plane seed) lives in the key; signatures are
-    integer-grid exact, so the staged frame is bit-identical to the
-    live construction at any partitioning."""
+    """(vec_id, v, sig) — every corpus vector with its 128-bit sign-LSH
+    signature (4×32-bit words over the seeded ±1 planes), staged once
+    per corpus. This IS the at-rest layout the q_ann_lsh docstring
+    describes — a vector store keeps the signature column beside the
+    vectors so a probe scans signatures, not matmuls — so the per-call
+    Arrow projection (one corpus-wide numpy matmul per invocation) moves
+    into the once-per-corpus builder, exactly like the
+    simhash/embed-neardup signature stages (builder Arrow node pinned by
+    test_staged_builders_keep_their_arrow_stages). Operating point (bits
+    × word-bits, plane seed) lives in the key; signatures are
+    integer-grid exact, so the staged frame is bit-identical to the live
+    construction at any partitioning."""
     from prueba_tecnica_analista_etl_spark.artifacts import (
         corpus_artifact,
     )
@@ -998,10 +994,9 @@ def ann_lsh(
 
 
 def _lsh_oracle_sql() -> str:
-    """DuckDB oracle for the FULL sign-LSH search path (r10 verdict
-    stretch: lift q_ann_lsh from rows-only to value-proven; r12: the
-    128-bit retune). Possible because every stage is engine-neutral
-    by construction:
+    """DuckDB oracle for the FULL 128-bit sign-LSH search path,
+    value-proving q_ann_lsh. Possible because every stage is
+    engine-neutral by construction:
 
     * signature — the seeded ±1 planes are embedded as literals and
       each sign bit is ``list_dot_product`` over the SAME
@@ -1012,7 +1007,8 @@ def _lsh_oracle_sql() -> str:
       both sides (32 bits/word keeps every packed value far inside
       signed-64 in both engines);
     * re-rank — the q_similarity_topk convention (sequential-fold
-      double cosine, round 4, vec_id tiebreak), oracle-proven since r8.
+      double cosine rounded to 4 places, vec_id tiebreak), itself
+      oracle-proven.
     """
     planes = random_hyperplanes(LSH_BITS, 64, seed=42)
 
@@ -1056,15 +1052,15 @@ def _lsh_oracle_sql() -> str:
 @query(
     "q_ann_lsh",
     _lsh_oracle_sql(),
-    doc="ANN via sign-LSH, ORACLE-EXACT end-to-end (oracle-backed "
-    "since r11; retuned r12 after the recall sweep measured the "
-    "16-bit point at recall@10 = 0.2): 128 ±1-hyperplane sign bits "
-    "per vector packed as 4x32-bit words over the floor(x*1e6+0.5) "
-    "integer grid — int64 dot terms are exact in any summation "
-    "order, so the signature (and thus the candidate set) is "
-    "engine-independent; candidates = hamming(sig, query sig) <= "
-    "55 (measured recall@10 = 1.0 at sf0.1 with ~14% of the corpus "
-    "as candidates — the sweep q_ann_recall records the trade), "
+    doc="ANN via sign-LSH, ORACLE-EXACT end-to-end (128 bits: the "
+    "recall sweep measured the 16-bit point at recall@10 = 0.2): "
+    "128 ±1-hyperplane sign bits per vector packed as 4x32-bit "
+    "words over the floor(x*1e6+0.5) integer grid — int64 dot "
+    "terms are exact in any summation order, so the signature "
+    "(and thus the candidate set) is engine-independent; "
+    "candidates = hamming(sig, query sig) <= 55 (measured "
+    "recall@10 = 1.0 at sf0.1 with ~14% of the corpus as "
+    "candidates — the sweep q_ann_recall records the trade), "
     "exact cosine re-rank of candidates only (the oracle-proven "
     "q_similarity_topk ranking convention). Scales as a 16-byte-"
     "per-vector signature scan + candidate-only cosine instead of "
@@ -1109,8 +1105,8 @@ def _embed_quantize_oracle_sql() -> str:
 @query(
     "q_embed_quantize",
     _embed_quantize_oracle_sql(),
-    doc="int8 embedding quantization + quantized retrieval (new r12 "
-    "— the vector-compression tier of a training-data pipeline): "
+    doc="int8 embedding quantization + quantized retrieval (the "
+    "vector-compression tier of a training-data pipeline): "
     "symmetric per-vector quantization q_i = floor(x_i·127/max|x| "
     "+ 0.5) — int8 range, engine-deterministic (one IEEE divide for "
     "the scale, one multiply + floor per component) — then top-10 "
@@ -1175,8 +1171,8 @@ IVF_NPROBE = 4
 # real IVF systems train it once per corpus and amortize it across
 # every query AND process, so the engine stages it through the
 # artifact store (census_artifact: weakref'd session memo + pickle
-# sidecar on disk, fingerprint-keyed — r11: the fit used to be
-# per-process, the judge-measured fresh-process rebuild cost).
+# sidecar on disk, fingerprint-keyed), so a fresh process does not
+# refit it.
 
 
 def ivf_centroids(
@@ -1209,20 +1205,19 @@ def cached_ivf_index(
     k: int = 16,
     iters: int = 2,
 ) -> str:
-    """The ON-DISK IVF index for (corpus, k, iters) — built once per
-    CORPUS into the artifact store and reused by every consumer and
-    process (the q_ann_recall sweep's IVF tier, ad-hoc
-    ivf_search_index calls), so the sweep audits the REAL shipped
-    artifact (partitionBy(cluster) layout + centroid sidecar,
-    operators/ivf_index.py) instead of an in-plan filter twin. Reuses
-    the staged ``ivf_centroids`` quantizer, so the in-plan ``ann_ivf``
-    tier and the index share one model and their cluster ids are
-    comparable. Staged through ``artifact_directory``, inheriting the
-    store's per-key BUILD LOCK (concurrent consumers never
-    double-write the index), tmp-then-rename publish, superseded-
-    generation removal (the r10 ADVICE temp-dir leak: mkdtemp copies
-    were never reclaimed), and corpus-fingerprint keying: a
-    regenerated corpus rebuilds instead of serving a stale index."""
+    """The ON-DISK IVF index for (corpus, k, iters) — built once per CORPUS
+    into the artifact store and reused by every consumer and process
+    (the q_ann_recall sweep's IVF tier, ad-hoc ivf_search_index calls),
+    so the sweep audits the REAL shipped artifact (partitionBy(cluster)
+    layout + centroid sidecar, operators/ivf_index.py) instead of an
+    in-plan filter twin. Reuses the staged ``ivf_centroids`` quantizer,
+    so the in-plan ``ann_ivf`` tier and the index share one model and
+    their cluster ids are comparable. Staged through
+    ``artifact_directory``, inheriting the store's per-key BUILD LOCK
+    (concurrent consumers never double-write the index), tmp-then-rename
+    publish, superseded-generation removal (no leaked temp-dir copies),
+    and corpus-fingerprint keying: a regenerated corpus rebuilds instead
+    of serving a stale index."""
     from prueba_tecnica_analista_etl_spark.artifacts import (
         artifact_directory,
     )
@@ -1312,7 +1307,7 @@ def ann_ivf(
     "tested equal to brute force.",
 )
 def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r14: the declared query now reads the SHIPPED on-disk index
+    # The declared query reads the SHIPPED on-disk index
     # (partitionBy(cluster) layout + sidecar model — the same artifact
     # q_ann_recall audits) instead of re-running the in-plan Arrow
     # assignment over the full corpus on every call: probe selection
@@ -1340,12 +1335,11 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _embed_neardup_oracle_sql() -> str:
-    """DuckDB oracle for the all-pairs sign-LSH path (r11 upgrade from
-    rows-only): the 32-bit signature rides the same floor(x·1e6+0.5)
-    integer grid as q_ann_lsh (exact int sums → engine-independent
-    bits), band keys and skew chunks are integer/md5_60 ops, and the
-    cosine re-rank is the oracle-proven sequential-fold double
-    convention."""
+    """DuckDB oracle for the all-pairs sign-LSH path: the 32-bit signature
+    rides the same floor(x·1e6+0.5) integer grid as q_ann_lsh (exact int
+    sums → engine-independent bits), band keys and skew chunks are
+    integer/md5_60 ops, and the cosine re-rank is the oracle-proven
+    sequential-fold double convention."""
     n_bits, band_bits, n_bands = 32, 8, 4
     planes = random_hyperplanes(n_bits, 64, seed=42)
     bits = " + ".join(
@@ -1390,7 +1384,7 @@ def _embed_neardup_oracle_sql() -> str:
     "q_embed_neardup",
     _embed_neardup_oracle_sql(),
     doc="embedding-cosine near-dup (all-pairs), ORACLE-EXACT "
-    "end-to-end (r11, was rows-only): 32-bit sign-LSH signature per "
+    "end-to-end: 32-bit sign-LSH signature per "
     "vector (Arrow-batched matmul over the engine-neutral integer "
     "grid), candidates = vectors sharing a signature-band (4 bands × "
     "8 bits, one shuffle on the band key, buckets skew-capped), exact "
@@ -1409,7 +1403,7 @@ def q_embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # The scored pair frame is corpus-deterministic (seeded planes,
     # integer-grid signatures, capped buckets) and pair-census sized —
-    # staged once per corpus like cached_minhash_pairs (r13); the
+    # staged once per corpus like cached_minhash_pairs; the
     # banded construction below runs for real on first build and
     # stays plan/parity-pinned by the test suite.
     pairs = corpus_artifact(
@@ -1517,9 +1511,9 @@ def q_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # The metadata frame is corpus-deterministic exactly like the
-    # feature frame q_multimodal_pipeline has staged since r13 —
-    # extract-once-store-metadata (r15): the Arrow mapInPandas
-    # header-sniff runs once per corpus in the builder (pinned by
+    # feature frame q_multimodal_pipeline stages —
+    # extract-once-store-metadata: the Arrow mapInPandas header-sniff
+    # runs once per corpus in the builder (pinned by
     # test_staged_builders_keep_their_arrow_stages) and the declared
     # census folds the stored frame.
     meta = corpus_artifact(
@@ -1546,33 +1540,30 @@ def q_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     SELECT event_id, user_id, epoch_us(ts) AS ts_us FROM events
     """,
-    doc="U3/T custom stateful operator (applyInPandasWithState), "
-    "ORACLE-EXACT: exactly-once projection of an at-least-once "
-    "stream — two overlapping landing files (middle 20% of ids "
-    "delivered twice, in different micro-batches) pass through a "
-    "seen-id state filter; every event_id is emitted exactly once. "
-    "Because the re-deliveries are identical copies and event_ids "
-    "are unique in the source, the drained exactly-once sink equals "
-    "the plain projection of the source table — so plain SQL "
-    "value-checks the exactly-once property itself (upgraded from "
-    "rows-only in r10, the q_stream_heavy_hitters precedent). State "
-    "is keyed by a DERIVED id-hash bucket (64 buckets, one shuffle); "
-    "NULL-id rows bypass the stateful operator at the plan level. "
-    "Checkpointed with the query; TTL and Bloom state bounds "
-    "available.",
+    doc="T10 native streaming dedup (dropDuplicates → "
+    "StreamingDeduplicate), ORACLE-EXACT: exactly-once projection of "
+    "an at-least-once stream — two overlapping landing files (middle "
+    "20% of ids delivered twice, in different micro-batches) pass "
+    "through the engine's seen-id state store; every event_id is "
+    "emitted exactly once. Because the re-deliveries are identical "
+    "copies and event_ids are unique in the source, the drained "
+    "exactly-once sink equals the plain projection of the source "
+    "table — so plain SQL value-checks the exactly-once property "
+    "itself. NULL-id rows bypass the dedup at the plan level; state is "
+    "checkpointed with the query.",
 )
 def q_stream_dedupe(spark: SparkSession, sf_dir: str) -> DataFrame:
     from prueba_tecnica_analista_etl_spark.artifacts import (
         census_artifact,
     )
 
-    # Assert the invariants the oracle-exactness RESTS on (r10 ADVICE):
-    # event_id unique and non-null. NULL-id rows bypass the stateful
-    # operator by design, so a corpus carrying a NULL id inside the
-    # duplicated overlap band would emit once per DELIVERY while the
-    # oracle emits once per source row — fail loudly instead of
-    # hash-mismatching silently. One cheap aggregate, staged per corpus
-    # (census_artifact), so the guard costs nothing on reuse.
+    # Assert the invariants the oracle-exactness RESTS on: event_id
+    # unique and non-null. NULL-id rows bypass the dedup by design, so
+    # a corpus carrying a NULL id inside the duplicated overlap band
+    # would emit once per DELIVERY while the oracle emits once per
+    # source row — fail loudly instead of hash-mismatching silently.
+    # One cheap aggregate, staged per corpus (census_artifact), so the
+    # guard costs nothing on reuse.
     def _id_census() -> tuple[int, int, int]:
         row = (
             _t(spark, sf_dir, "events")
@@ -1600,18 +1591,17 @@ def q_stream_dedupe(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = ensure_runtime_conf(spark.newSession())
     s.conf.set("spark.sql.shuffle.partitions", "4")
     stream = replay_as_stream(s, data_dir, schema, max_files_per_trigger=1)
-    # Project BEFORE the stateful operator: the dedup decision needs
-    # only (key, id, ts), and every surviving column rides through the
-    # Arrow state channel and the result sink — the wide `props` JSON
-    # string tripled the operator's wall at sf0.1.
+    # Project before the dedup for sink width: every column the dedup
+    # keeps is written to the result sink, and the query reports only
+    # (event_id, user_id, ts) — the wide `props` JSON string would
+    # dominate the sink's bytes.
     slim = stream.select("event_id", "user_id", "ts")
     # Sink + checkpoint live INSIDE the landing-dir artifact
     # (fingerprint-unique per corpus generation, replay.py), so a
     # regenerated corpus gets a fresh sink instead of a checkpoint
     # pointed at a path that no longer feeds it, a FRESH PROCESS
-    # resumes the drained checkpoint (zero micro-batches — the r10
-    # verdict's fresh-process cost finding) and a superseded
-    # generation's sink dies with its artifact dir.
+    # resumes the drained checkpoint (zero micro-batches) and a
+    # superseded generation's sink dies with its artifact dir.
     out = run_available_now(
         dedupe_stream(slim),
         s,
@@ -1679,7 +1669,7 @@ def q_stream_dedupe(spark: SparkSession, sf_dir: str) -> DataFrame:
     "last+30 min+margin), the margin filter itself is evaluated on "
     "identical values by both engines, and the withheld tail — "
     "Spark's documented append-mode contract — is excluded on BOTH "
-    "sides instead of estimated (upgraded from rows-only in r10). "
+    "sides instead of estimated. "
     "Streaming state is bounded by active keys (watermark eviction).",
 )
 def q_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1718,8 +1708,8 @@ def q_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _corpus_curate_oracle_sql(rounds: int = 3) -> str:
-    """DuckDB oracle for the FULL curation pipeline (r11 upgrade from
-    rows-only, enabled by the engine-neutral minhash pairs): quality
+    """DuckDB oracle for the FULL curation pipeline (enabled by the
+    engine-neutral minhash pairs): quality
     gate (>= 4 tokens; the 0.0 stopword-ratio floor is vacuous on
     non-empty docs, matching the engine default), exact dedup
     (row_number keep-first per text), endpoint-restricted pairs, the
@@ -1780,7 +1770,7 @@ def _corpus_curate_oracle_sql(rounds: int = 3) -> str:
     "q_corpus_curate",
     _corpus_curate_oracle_sql(),
     doc="flagship training-data composition, ORACLE-EXACT end-to-end "
-    "(r11, was rows-only — the engine-neutral minhash pairs made the "
+    "(the engine-neutral minhash pairs make the "
     "whole DAG SQL-expressible): quality gate (length + stopword "
     "density) -> exact dedup (content keep-first) -> minhash "
     "near-dup purge (greedy min-id survivor fixpoint, 3 rounds + "
@@ -1810,8 +1800,8 @@ def q_corpus_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _multimodal_pipeline_oracle_sql(dim: int = 16) -> str:
-    """DuckDB oracle for the multimodal retrieve-similar pipeline
-    (r11 upgrade from rows-only). Sound because, ON THE FAKE-ASSET
+    """DuckDB oracle for the multimodal retrieve-similar pipeline.
+    Sound because, ON THE FAKE-ASSET
     CORPUS, the engine's extractor deterministically takes the
     byte-histogram path — the UTF-8 payloads never decode as images,
     with or without PIL — and that stub is exact arithmetic:
@@ -1875,7 +1865,7 @@ def _multimodal_pipeline_oracle_sql(dim: int = 16) -> str:
     "q_multimodal_pipeline",
     _multimodal_pipeline_oracle_sql(),
     doc="multimodal END-TO-END composition, ORACLE-EXACT on the "
-    "harness corpus (r11, was rows-only — the stub feature stage is "
+    "harness corpus (the stub feature stage is "
     "exact integer/IEEE arithmetic, and the fake UTF-8 payloads "
     "never decode as images, so the byte-histogram path is the one "
     "taken with or without PIL): binary assets -> Arrow-batched "
@@ -1908,7 +1898,7 @@ def q_multimodal_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # The extracted feature frame is corpus-deterministic (the stub
     # extractor is a seeded function of the asset bytes) — staged
-    # ONCE per corpus (r13): extract-once-store-features is exactly
+    # ONCE per corpus: extract-once-store-features is exactly
     # what a production multimodal pipeline does, and every later
     # consumer (probe fetch included) filters the checkpointed frame
     # instead of re-running the Arrow extraction stage. Pre-staging
@@ -1971,7 +1961,7 @@ def q_multimodal_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     "override earlier ones) and within-batch compaction picks the "
     "same (ts DESC, event_id DESC) survivor as a global ranking, the "
     "drained target equals the one-shot SQL compaction's live rows — "
-    "value-hash-checked (upgraded from rows-only in r10; the batch "
+    "value-hash-checked (the batch "
     "twin q_cdc_apply proves the census form of the same ranking). "
     "Scale shape: per batch one hash(user_id) compaction shuffle + "
     "the whole-target merge (the documented harness-size trade; the "
@@ -2065,28 +2055,26 @@ STREAM_NEARDUP_UNROLL = 16
 def _stream_neardup_oracle_sql(
     rounds: int = STREAM_NEARDUP_UNROLL,
 ) -> str:
-    """DuckDB oracle for the streaming near-dup gate. The drained
-    accepted set equals the batch greedy min-id survivor FIXPOINT
-    over the full corpus (arrival order == id order by construction:
-    range-partitioned replay on doc_id), and the fixpoint is the
-    q_corpus_curate purge recursion unrolled — here to ``rounds`` =
-    ``STREAM_NEARDUP_UNROLL`` with NO enforcement pass: the stream
-    computes the exact greedy set, and once the unroll reaches the
-    corpus's alternating-chain depth the iterate IS the fixpoint
-    (measured depth 2 at sf0.001/0.01/0.1 — near-dup families are
-    cliques — so 16 is an 8× margin, raised from 8 per the r11
-    ADVICE; the stream-vs-batch parity test measures the depth every
-    run and trips at HALF the unroll, so a drifting corpus surfaces
-    as a named assertion long before the registered oracle could go
-    silently wrong). Pairs are the UNCAPPED CTE variant: the gate's
-    contract is exhaustive-within-bucket — admitting a doc because
-    its accepted match sat in another skew chunk would be a quality
-    bug, and an incremental consumer could not reproduce chunk
-    boundaries that depend on FINAL bucket membership anyway. No
-    quality gate and no exact-dedup stage here — the gate admits
-    everything that is not a near-dup of an accepted doc;
-    byte-identical texts are jaccard-1.0 pairs and fall out of the
-    same rule."""
+    """DuckDB oracle for the streaming near-dup gate. The drained accepted
+    set equals the batch greedy min-id survivor FIXPOINT over the full
+    corpus (arrival order == id order by construction: range-partitioned
+    replay on doc_id), and the fixpoint is the q_corpus_curate purge
+    recursion unrolled — here to ``rounds`` = ``STREAM_NEARDUP_UNROLL``
+    with NO enforcement pass: the stream computes the exact greedy set,
+    and once the unroll reaches the corpus's alternating-chain depth the
+    iterate IS the fixpoint (measured depth 2 at sf0.001/0.01/0.1 —
+    near-dup families are cliques — so 16 is an 8× margin; the
+    stream-vs-batch parity test measures the depth every run and trips
+    at HALF the unroll, so a drifting corpus surfaces as a named
+    assertion long before the registered oracle could go silently
+    wrong). Pairs are the UNCAPPED CTE variant: the gate's contract is
+    exhaustive-within-bucket — admitting a doc because its accepted
+    match sat in another skew chunk would be a quality bug, and an
+    incremental consumer could not reproduce chunk boundaries that
+    depend on FINAL bucket membership anyway. No quality gate and no
+    exact-dedup stage here — the gate admits everything that is not a
+    near-dup of an accepted doc; byte-identical texts are jaccard-1.0
+    pairs and fall out of the same rule."""
     alive = ["ep"]
     cte_rounds = []
     for k in range(1, rounds + 1):
@@ -2114,7 +2102,7 @@ def _stream_neardup_oracle_sql(
 @query(
     "q_stream_neardup",
     _stream_neardup_oracle_sql(),
-    doc="STREAMING near-dup gate, ORACLE-EXACT (new in r11 — the "
+    doc="STREAMING near-dup gate, ORACLE-EXACT (the "
     "engine-neutral minhash family makes even the streaming tier "
     "value-provable): documents replayed in id order through a "
     "foreachBatch gate that admits a doc only if no ALREADY-ACCEPTED "
@@ -2215,15 +2203,15 @@ LSH_TRUTH_FRACTION = _lsh_truth_fraction()
 
 
 def _lsh_recall_oracle_sql() -> str:
-    """DuckDB oracle for the recall census (r11 upgrade from
-    rows-only): the truth side is the share-any-shingle exhaustive
-    Jaccard census over the same md5_60 shingle hashes (join on h,
-    multiplicities matching the engine's per-bucket pair expansion),
-    the found side is the shared scored-pairs chain at the 0.5 gate,
-    and the census is one LEFT JOIN + counts. Built at the
-    import-time ``LSH_TRUTH_FRACTION`` snapshot — the same value the
-    query fn uses (the driver and parity tests never set the env, so
-    the recorded oracle is always the exact fraction-1.0 census)."""
+    """DuckDB oracle for the recall census: the truth side is the
+    share-any-shingle exhaustive Jaccard census over the same md5_60
+    shingle hashes (join on h, multiplicities matching the engine's
+    per-bucket pair expansion), the found side is the shared
+    scored-pairs chain at the 0.5 gate, and the census is one LEFT JOIN
+    + counts. Built at the import-time ``LSH_TRUTH_FRACTION`` snapshot —
+    the same value the query fn uses (the entry point and the parity
+    tests never set the env, so the recorded oracle is always the exact
+    fraction-1.0 census)."""
     frac = LSH_TRUTH_FRACTION
     sample = ""
     if frac < 1.0:
@@ -2270,8 +2258,8 @@ def _lsh_recall_oracle_sql() -> str:
 @query(
     "q_lsh_recall",
     _lsh_recall_oracle_sql(),
-    doc="LSH quality audit, ORACLE-EXACT (r11, was rows-only — the "
-    "engine-neutral md5_60 shingle hashing made BOTH sides "
+    doc="LSH quality audit, ORACLE-EXACT (the "
+    "engine-neutral md5_60 shingle hashing makes BOTH sides "
     "SQL-expressible): candidate-stage RECALL of the banded "
     "minhash tier against exhaustive ground truth. Truth = every "
     "pair with exact Jaccard >= 0.5 over the same 3-token shingle "
@@ -2293,8 +2281,8 @@ def _lsh_recall_oracle_sql() -> str:
     "(fraction 1.0).",
 )
 def q_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall audit of the minhash LSH near-dup tier (ORACLE-EXACT
-    since r11: the engine-neutral md5_60 hashing makes both the
+    """Recall audit of the minhash LSH near-dup tier (ORACLE-EXACT:
+    the engine-neutral md5_60 hashing makes both the
     exhaustive truth census and the banded found side
     SQL-expressible; the corpus-artifact staging only caches the
     truth frame — the values are staging-independent).
@@ -2316,10 +2304,10 @@ def q_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     two sides cannot diverge within a process. The emitted
     truth_fraction column makes the mode self-describing either way.
     """
-    # r11 ADVICE: a caller that mutates the env var AFTER this module
-    # was imported would silently get the snapshot, not their value —
-    # make the mismatch loud at query-build time (both sides still
-    # use the snapshot, so engine and oracle stay consistent).
+    # A caller that mutates the env var AFTER this module was imported
+    # would silently get the snapshot, not their value — make the
+    # mismatch loud at query-build time (both sides still use the
+    # snapshot, so engine and oracle stay consistent).
     live = _lsh_truth_fraction()
     if live != LSH_TRUTH_FRACTION:
         import warnings
@@ -2346,15 +2334,14 @@ def lsh_recall_frame(
     """The q_lsh_recall census with the 100 TB sampling knob as CODE.
 
     The exhaustive-truth tier is O(df²) in documents-per-shingle — at
-    100 TB a full census is a scale-killer (the r9 verdict's one
-    `weak` item was exactly that this mitigation lived only in a
-    docstring). ``truth_sample_fraction < 1`` restricts the TRUTH
-    side to a deterministic document sample BEFORE shingling: a doc
-    is kept iff the md5 hex prefix of ``'lsh-truth:' || doc_id`` is
+    100 TB a full census is a scale-killer, so the mitigation is a
+    parameter, not prose. ``truth_sample_fraction < 1`` restricts the
+    TRUTH side to a deterministic document sample BEFORE shingling: a
+    doc is kept iff the md5 hex prefix of ``'lsh-truth:' || doc_id`` is
     below the fraction's threshold (the q_mixture_sample convention —
-    fixed-width lowercase hex compares lexicographically ==
-    numerically, so membership is engine-stable and reproducible; the
-    salt decorrelates the draw from the mixture sampler's).
+    fixed-width lowercase hex compares lexicographically == numerically,
+    so membership is engine-stable and reproducible; the salt
+    decorrelates the draw from the mixture sampler's).
 
     Unbiasedness: uniform doc sampling keeps each true pair with
     probability fraction², independently of whether the banded tier
@@ -2445,8 +2432,7 @@ def lsh_recall_frame(
 
     # The exhaustive truth is an ARTIFACT of (corpus, fraction) — the
     # audit's O(df²) side is paid once per corpus, not once per run or
-    # process (r10 verdict: the fresh-process rebuild class). The
-    # frame persisted is O(true pairs).
+    # process. The frame persisted is O(true pairs).
     truth = corpus_artifact(
         spark, sf_dir, f"lsh_truth:{truth_sample_fraction}", _truth
     )
@@ -2485,7 +2471,7 @@ def lsh_recall_frame(
     "exact brute-force cosine top-10 for the same probe — the "
     "retrieval-vs-cost trade emitted as a TABLE (one row per tier x "
     "point, shipped points marked, n_candidates = the point's scan "
-    "cost), not a constant. All rankings use the identical (round-4 "
+    "cost), not a constant. All rankings use the identical (4-place "
     "cosine DESC, vec_id ASC) total order, so intersections are "
     "well-defined; the audit is joins of top-10 frames plus "
     "census-sized aggregates — entirely in-plan, no driver collect "
@@ -2504,39 +2490,37 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     its (pruned) scan, and the audit adds joins of 10-row frames.
 
     Reading the numbers: the corpus's true top-10 sits at MODERATE
-    cosine (0.27-0.41 at sf0.1), the adversarial regime for sign-LSH
-    — signatures of moderate-cosine neighbors are only mildly
-    correlated with the probe's. The r11 shipped point (16 bits,
-    hamming<=4, tuned for the near-dup regime cos>=0.95) measured
-    recall@10 = 0.2 here, which is exactly what this sweep exists to
-    surface; the r12 retune ships 128 bits / hamming<=55 — measured
-    recall@10 = 1.0 at sf0.1 with ~14% of the corpus paying the
-    exact-cosine re-rank (n_candidates records it per point). IVF
-    prunes partitions but re-ranks with exact cosine, so its
-    recall@10 stays high wherever the true neighbors share the
-    probed clusters (1.0 on the harness corpus at nprobe=4/16) —
-    IVF remains the partition-pruned read tier; the 128-bit
-    signature scan (16 bytes/vector) is the full-scan tier with a
-    32x byte cut over raw vectors.
-    """
+    cosine (0.27-0.41 at sf0.1), the adversarial regime for sign-LSH —
+    signatures of moderate-cosine neighbors are only mildly correlated
+    with the probe's. A 16-bit point (hamming<=4, tuned for the near-dup
+    regime cos>=0.95) measured recall@10 = 0.2 here, which is exactly
+    what this sweep exists to surface; the shipped point is 128 bits /
+    hamming<=55 — measured recall@10 = 1.0 at sf0.1 with ~14% of the
+    corpus paying the exact-cosine re-rank (n_candidates records it per
+    point). IVF prunes partitions but re-ranks with exact cosine, so its
+    recall@10 stays high wherever the true neighbors share the probed
+    clusters (1.0 on the harness corpus at nprobe=4/16) — IVF remains
+    the partition-pruned read tier; the 128-bit signature scan (16
+    bytes/vector) is the full-scan tier with a 32x byte cut over raw
+    vectors."""
     from prueba_tecnica_analista_etl_spark.artifacts import (
         corpus_artifact,
     )
 
     # The ENTIRE census (6 rows) is corpus-deterministic — seeded
     # planes, fixed probe, fixed operating points — so it is staged
-    # whole (r11 verdict task 4: after the r11 intermediate staging,
-    # the residual fresh-process cost was still ~3.5 s of sweep-frame
-    # construction and census codegen per process; staging the final
-    # frame leaves one artifact read + checkpoint over the floor).
+    # whole: with only the intermediate frames staged, a fresh process
+    # still paid ~3.5 s of sweep-frame construction and census
+    # codegen; staging the final frame leaves one artifact read +
+    # checkpoint over the floor.
     # The LIVE construction below stays plan-pinned by tests via
     # ann_sweep_parts/ann_recall_census_live, and first-per-corpus
     # builds execute it for real.
     tiers = ann_sweep_tiers()
     # The key embeds LSH_BITS and the quantization-scheme tag besides
-    # the tier labels (r12 ADVICE): a retune changing signature bits
-    # or the int8 scheme while keeping the same radius/nprobe labels
-    # must MISS here and rebuild, not serve a stale census.
+    # the tier labels: a retune changing signature bits or the int8
+    # scheme while keeping the same radius/nprobe labels must MISS here
+    # and rebuild, not serve a stale census.
     name = f"ann_recall_census:b{LSH_BITS}:int8sym:" + "|".join(
         f"{m}:{pt}:{int(sh)}" for m, pt, sh in tiers
     )
@@ -2585,9 +2569,8 @@ def ann_recall_census_live(
     hits = top.join(exact, "vec_id").groupBy("ord").agg(
         F.count(F.lit(1)).alias("n_hit")
     )
-    # Per-point scan cost (r11 verdict: "candidate-count cost
-    # logged") — constant across a point's top-10 rows, so max ==
-    # the value; a point with zero candidates has no rows and
+    # Per-point scan cost — constant across a point's top-10 rows, so
+    # max == the value; a point with zero candidates has no rows and
     # coalesces to 0 below.
     cands = top.groupBy("ord").agg(
         F.max("n_candidates").alias("n_candidates")
@@ -2623,15 +2606,14 @@ def ann_recall_census_live(
 
 def ann_sweep_tiers() -> "list[tuple[str, str, bool]]":
     """The sweep's (method, operating_point, shipped) row list, a pure
-    function of the shipped constants — q_ann_recall derives its
-    census artifact KEY from this without building any frame, so a
-    warm-corpus run never touches the embeddings table at all (the
-    r11 verdict's fresh-process ask). Order = registry order: sign-LSH
-    radii ascending, then IVF probe counts ascending, then the int8
-    compressed-scan tier (r12: one point — the tier has no knob, it
-    re-ranks the WHOLE corpus on quantized cosine, so its
-    n_candidates is honestly the corpus size and its recall measures
-    pure quantization error)."""
+    function of the shipped constants — q_ann_recall derives its census
+    artifact KEY from this without building any frame, so a warm-corpus
+    run never touches the embeddings table at all. Order = registry order:
+    sign-LSH radii ascending, then IVF probe counts ascending, then the
+    int8 compressed-scan tier (one point — the tier has no knob, it
+    re-ranks the WHOLE corpus on quantized cosine, so its n_candidates
+    is honestly the corpus size and its recall measures pure
+    quantization error)."""
     lsh_radii = sorted({LSH_HAMMING - 2, LSH_HAMMING, LSH_HAMMING + 2})
     nprobes = sorted({IVF_NPROBE // 2, IVF_NPROBE, IVF_NPROBE * 2})
     return (
@@ -2698,8 +2680,8 @@ def ann_sweep_parts(
     # The probe (vector + signature words) is census-sized and
     # deterministic per corpus — memoize it: the one-row first() still
     # costs a full Arrow-UDF job dispatch (~1 s) every audit run
-    # otherwise. Label carries the signature config so the r12
-    # 16-bit→128-bit retune can't read a stale cached probe.
+    # otherwise. Label carries the signature config so a signature
+    # retune can't read a stale cached probe.
     def _probe() -> "tuple[list[float], list[int]]":
         row = sigs.filter(F.col("vec_id") == 0).select("v", "sig").first()
         return [float(x) for x in row["v"]], [int(w) for w in row["sig"]]
@@ -2719,7 +2701,7 @@ def ann_sweep_parts(
     # memoized artifact above). The scored candidate frame itself is
     # an ARTIFACT of (corpus, widest radius) — deterministic given the
     # seeded planes and the fixed probe — so the signature scan too is
-    # paid once per corpus, not once per process (r11); the persisted
+    # paid once per corpus, not once per process; the persisted
     # frame is O(candidates at the widest radius).
     def _lsh_scored() -> DataFrame:
         ham = sum(
@@ -2793,7 +2775,7 @@ def ann_sweep_parts(
             ),
         ).select("vec_id", "cos_sim", F.col("t.ord").alias("ord"))
 
-    # The int8 compressed-scan tier (r12, q_embed_quantize's storage
+    # The int8 compressed-scan tier (q_embed_quantize's storage
     # layout audited by the same sweep): rank the WHOLE corpus by
     # QUANTIZED cosine against the quantized probe — no prefilter, so
     # its n_candidates is honestly the corpus size; its recall
@@ -2836,8 +2818,8 @@ def ann_sweep_parts(
         F.desc("cos_sim"), F.asc("vec_id")
     )
     # n_candidates = the operating point's SCAN COST (how many rows
-    # survive its predicate and pay the exact cosine) — the r11
-    # verdict asked for the recall-vs-cost trade as recorded numbers.
+    # survive its predicate and pay the exact cosine), so the
+    # recall-vs-cost trade is recorded as numbers.
     # Counted over the same partitionBy("ord") exchange the ranking
     # window uses (an unordered count window must see the FULL
     # partition, so it rides below the rank's group-limit — Spark
@@ -2882,7 +2864,7 @@ def _dup_matrix_oracle_sql() -> str:
 @query(
     "q_dup_matrix",
     _dup_matrix_oracle_sql(),
-    doc="extension (cross-source duplication matrix, r13): which "
+    doc="extension (cross-source duplication matrix): which "
     "ingest sources copy which — per unordered source pair, the "
     "near-dup pair count and the integer-rescaled similarity mass "
     "(sum of round(jaccard,4)*10000, exact 64-bit sums) over the "
@@ -2939,12 +2921,11 @@ def q_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 # SemDeDup — semantic (embedding-space) dedup, cluster-then-purge
 # ---------------------------------------------------------------------------
 
-# Operating point for the semantic-dedup tier (r13 verdict task 4 —
-# the SemDeDup composition from public pretraining-pipeline
-# literature: cluster the embedding space, purge near-identical
-# points WITHIN each cluster, never compare across clusters).  All
-# three knobs are embedded in the staged artifact keys, so a retune
-# can never serve a stale frame.
+# Operating point for the semantic-dedup tier (the SemDeDup composition
+# from public pretraining-pipeline literature: cluster the embedding
+# space, purge near-identical points WITHIN each cluster, never compare
+# across clusters). All three knobs are embedded in the staged artifact
+# keys, so a retune can never serve a stale frame.
 SEMDEDUP_K = 16  # coarse clusters (per-cluster pair work = the cost knob)
 SEMDEDUP_T = 0.30  # quantized-cosine purge threshold. The harness
 # corpus plants no true embedding dups (max pairwise cos ~0.53), so
@@ -3194,7 +3175,7 @@ def _semdedup_oracle_sql() -> str:
 @query(
     "q_semdedup",
     _semdedup_oracle_sql(),
-    doc="extension (semantic dedup, new r14 — the SemDeDup "
+    doc="extension (semantic dedup — the SemDeDup "
     "composition from public pretraining-pipeline literature): "
     "cluster the embedding space coarsely, purge near-identical "
     "points WITHIN each cluster, keep one representative per "
@@ -3308,7 +3289,7 @@ def _embed_stats_oracle_sql() -> str:
 @query(
     "q_embed_stats",
     _embed_stats_oracle_sql(),
-    doc="extension (embedding QA census, r14): per-dimension moment "
+    doc="extension (embedding QA census): per-dimension moment "
     "census over the embeddings table — n, min/max, mean, variance "
     "on the floor(x·1e6+0.5) integer grid with DECIMAL(38,0)/HUGEINT "
     "accumulation (exact in any summation order, so the census is "
@@ -3323,7 +3304,7 @@ def _embed_stats_oracle_sql() -> str:
     "partitions), never O(rows).",
 )
 def q_embed_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # no spread() (r14): posexplode + 64-group partial agg is
+    # no spread(): posexplode + 64-group partial agg is
     # map-side-reducing from the first operator (A/B: 0.74 -> 0.47 s;
     # the repartition was a full vector shuffle for ~no parallel win).
     e = _t(spark, sf_dir, "embeddings").select(

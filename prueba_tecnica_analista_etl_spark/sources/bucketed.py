@@ -53,9 +53,7 @@ def write_bucketed(
 ) -> None:
     """Persist ``df`` as a catalog table hash-bucketed by ``keys``
     into ``buckets`` files per partition (one shuffle now, no join
-    shuffle later).  The SINGLE bucketed-write API (the r12 verdict's
-    consolidation ask — this replaces a same-named twin that lived in
-    sources/tables.py with a different calling convention):
+    shuffle later):
 
     * ``keys`` — one column name or a sequence of them; multi-key
       layouts co-locate multi-column equi-joins.
@@ -89,12 +87,6 @@ def bucket_spec(spark: SparkSession, table: str) -> tuple[int, list[str]]:
         raise ValueError(f"table {table} is not bucketed")
     keys = [c.strip("`[] ") for c in cols.split(",") if c.strip("`[] ")]
     return int(n), keys
-
-
-# Backwards-compatible private alias (older tests/call sites).
-def _bucket_spec(spark: SparkSession, table: str) -> tuple[int, str]:
-    n, keys = bucket_spec(spark, table)
-    return n, ",".join(keys)
 
 
 def bucketed_join(

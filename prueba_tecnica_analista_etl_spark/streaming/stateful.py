@@ -1,334 +1,37 @@
-"""Custom stateful streaming operator via ``applyInPandasWithState``
-(U3/T-family: the escape hatch for stateful semantics Spark's built-in
-windows can't express — the reference's §4 design only *names* dedup
-across incremental loads; this realizes it).
+"""Exactly-once stream dedup on Spark's native streaming deduplication.
 
-``dedupe_stream`` turns an at-least-once stream into an exactly-once
-projection: the first occurrence of each ``id_col`` per ``key_col``
-passes through, every later occurrence — in the same micro-batch or
-any later one — is dropped. State is the per-key set of seen ids,
-checkpointed with the query, so replayed batches stay deduplicated
-across restarts.
+The reference's incremental design (PAPER §4) names dedup across
+incremental loads; ``dedupe_stream`` realizes it. On a streaming frame
+with no watermark, ``dropDuplicates`` plans as ``StreamingDeduplicate``:
+the seen-id set lives in the query's checkpointed state store, so the
+first occurrence of each id wins, whether its duplicate arrives in the
+same micro-batch, a later one, or after a restart from the same
+checkpoint. The engine compares ids as longs, so the decision is exact
+at any magnitude, and no Python runs per row.
 
-Scale notes: state is partitioned by ``key_col`` (same shuffle as any
-grouped aggregation) and grows with distinct ids per key. At 100 TB
-retention must be bounded: pass ``ttl_ms`` to expire idle buckets via
-``GroupStateTimeout.ProcessingTimeTimeout`` — exactly-once then holds
-for any id re-delivered while its bucket stays warm (received data
-within the TTL), and an idle bucket's id set is dropped, trading
-re-admission of very-late replays for bounded state. Pass
-``bloom_bits`` for the orthogonal bound — a fixed-size per-bucket
-Bloom filter (constant state bytes, tunable false-drop rate instead
-of late re-admission); the two compose. Default stays the exact
-unbounded set because replay streams in the harness are finite.
+State grows with the number of distinct ids. Spark's
+``withWatermark(...).dropDuplicatesWithinWatermark(...)`` bounds it to
+an event-time horizon instead (SCALE.md).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-_STATE_SCHEMA = T.StructType(
-    [T.StructField("ids", T.ArrayType(T.LongType()), True)]
-)
-
-_BLOOM_STATE_SCHEMA = T.StructType(
-    [T.StructField("bits", T.ArrayType(T.LongType()), True)]
-)
 
 
-def _bloom_positions(ids, m: int, k: int):
-    """k double-hashed bit positions per id: shape (len(ids), k).
+def dedupe_stream(stream: DataFrame, id_col: str = "event_id") -> DataFrame:
+    """First-occurrence-wins streaming dedup on ``id_col``; the output
+    schema is the input schema.
 
-    Pure-numpy splitmix64-style mixing — deterministic across
-    executors and restarts (no Python hash randomization), vectorized
-    over the whole Arrow batch.
+    Rows with a NULL ``id_col`` have no identity to deduplicate on, so
+    they pass through unchanged and never enter state. The split is
+    made in the plan because ``dropDuplicates`` treats NULLs as equal
+    and would keep only one of them.
     """
-    import numpy as np
-
-    x = ids.astype(np.uint64)
-
-    def mix(v, seed):
-        v = (v + np.uint64(seed)) * np.uint64(0x9E3779B97F4A7C15)
-        v ^= v >> np.uint64(30)
-        v *= np.uint64(0xBF58476D1CE4E5B9)
-        v ^= v >> np.uint64(27)
-        v *= np.uint64(0x94D049BB133111EB)
-        v ^= v >> np.uint64(31)
-        return v
-
-    h1 = mix(x, 0x243F6A8885A308D3)
-    h2 = mix(x, 0x13198A2E03707344) | np.uint64(1)  # odd → full cycle
-    i = np.arange(k, dtype=np.uint64)
-    return (h1[:, None] + i[None, :] * h2[:, None]) % np.uint64(m)
-
-
-def dedupe_stream_native(
-    stream: DataFrame,
-    id_col: str = "event_id",
-    ts_col: str = "ts",
-    within: str = "1 hour",
-) -> DataFrame:
-    """Exactly-once-within-horizon dedup via Spark's OWN operator —
-    ``dropDuplicatesWithinWatermark`` — the built-in the custom
-    bucketed op (:func:`dedupe_stream`) must justify itself against
-    (engine rule: when a native operator expresses the semantics,
-    prefer it; Python state channels are the slow path).
-
-    Semantic deltas vs the custom op, both documented trades:
-
-    * retention is EVENT-TIME bounded: state for an id is dropped once
-      the watermark passes its event time + ``within``, so an id
-      re-delivered inside the horizon dedups exactly and one replayed
-      later may be re-admitted — the same shape as ``ttl_ms``, but
-      expressed in event time and enforced by the engine's state
-      store (RocksDB-ready, no Python in the loop);
-    * NULL ids are grouped as equal (SQL distinct semantics) rather
-      than passed through; callers needing identity-less pass-through
-      split NULLs around the operator the way dedupe_stream's plan
-      does.
-
-    Parity with the custom op over an in-horizon replay is pinned by
-    ``test_native_dedup_matches_custom_op``.
-    """
-    return stream.withWatermark(ts_col, within).dropDuplicatesWithinWatermark(
-        [id_col]
+    ids = F.col(id_col)
+    return (
+        stream.filter(ids.isNotNull())
+        .dropDuplicates([id_col])
+        .unionByName(stream.filter(ids.isNull()))
     )
-
-
-def dedupe_stream(
-    stream: DataFrame,
-    id_col: str = "event_id",
-    n_buckets: int = 64,
-    ttl_ms: int | None = None,
-    bloom_bits: int | None = None,
-    bloom_hashes: int = 4,
-) -> DataFrame:
-    """First-occurrence-wins streaming dedup on ``id_col`` (module doc).
-
-    State is keyed by a DERIVED id-hash bucket, not a natural key: the
-    id fully determines its bucket, so exactly-once holds globally,
-    while the group count is a tunable constant instead of data
-    cardinality — with per-user keys the harness paid 1,500 tiny
-    pandas chunks + state round-trips per micro-batch; 64 buckets cut
-    the operator's wall ~2×. At scale ``n_buckets`` scales with
-    executors (state volume per bucket = total ids / n_buckets either
-    way). Output schema = input schema + nothing (bucket col dropped).
-
-    ``ttl_ms`` bounds state retention (the 100 TB requirement): a
-    bucket idle for longer than the TTL is evicted by the processing-
-    time timeout, so state volume tracks the *active* id set instead
-    of every id ever seen. Dedup stays exact for ids re-delivered
-    while their bucket is warm; an id replayed after its bucket went
-    idle past the TTL is re-admitted (the documented trade).
-
-    ``bloom_bits`` is the orthogonal state bound: replace each
-    bucket's exact id set with a fixed-size Bloom filter
-    (``bloom_bits`` bits, ``bloom_hashes`` double-hashed probes,
-    vectorized numpy over the Arrow batch). State bytes per bucket
-    are then CONSTANT regardless of id cardinality — the trade flips
-    from late re-admission (TTL) to a tunable false-DROP rate
-    (≈ fill_ratio^k: a fresh id whose probe bits are all already set
-    is wrongly dropped; size m ≈ 14·n_expected/n_buckets bits for
-    ~1e-4). Composable with ``ttl_ms`` (expire idle filters too).
-
-    NULL ids have no identity to deduplicate on, so rows with a NULL
-    ``id_col`` PASS THROUGH unchanged in both modes (at-least-once
-    for such rows; they never enter state). The split happens at the
-    PLAN level — null rows are filtered around the stateful operator
-    and unioned back — not inside the pandas UDF: one null in an
-    Arrow chunk lifts the whole int64 id column to float64, which
-    silently CORRUPTS ids above 2^53 (adjacent longs collapse onto
-    one float, so two distinct snowflake-scale ids would dedupe as
-    equal). Keeping the stateful input null-free keeps the column
-    int64 end-to-end and the dedup decisions exact at any id
-    magnitude; the in-UDF null handling remains only as a dead-path
-    guard.
-    """
-    out_schema = stream.schema
-    null_rows = stream.filter(F.col(id_col).isNull())
-    bucketed = stream.filter(F.col(id_col).isNotNull()).withColumn(
-        "_dedup_bucket",
-        F.pmod(F.hash(F.col(id_col)), F.lit(n_buckets)),
-    )
-    out_cols = [f.name for f in out_schema.fields]
-
-    def fn_exact(
-        key: Any,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if ttl_ms is not None and state.hasTimedOut:
-            # Idle past TTL and no data this batch: drop the bucket's
-            # id set entirely. Nothing to emit.
-            state.remove()
-            return
-        seen = set(state.get[0]) if state.exists else set()
-        for pdf in pdfs:
-            null_mask = pdf[id_col].isna()
-            if null_mask.any():
-                # No identity → no dedup: pass through, skip state.
-                yield pdf[null_mask][out_cols]
-                pdf = pdf[~null_mask]
-            fresh = pdf[~pdf[id_col].isin(seen)].drop_duplicates(
-                subset=[id_col]
-            )
-            seen.update(int(x) for x in fresh[id_col])
-            if len(fresh):
-                yield fresh[out_cols]
-        state.update((sorted(seen),))
-        if ttl_ms is not None:
-            # Relative to this batch's processing time; refreshed on
-            # every batch that touches the bucket.
-            state.setTimeoutDuration(ttl_ms)
-
-    m, k = bloom_bits, bloom_hashes
-    n_words = (m + 63) // 64 if m else 0
-
-    def fn_bloom(
-        key: Any,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        if ttl_ms is not None and state.hasTimedOut:
-            state.remove()
-            return
-        if state.exists:
-            bits = np.array(state.get[0], dtype=np.int64).view(np.uint64)
-        else:
-            bits = np.zeros(n_words, dtype=np.uint64)
-        for pdf in pdfs:
-            null_mask = pdf[id_col].isna()
-            if null_mask.any():
-                # No identity → no dedup: pass through, skip state.
-                yield pdf[null_mask][out_cols]
-                pdf = pdf[~null_mask]
-            batch = pdf.drop_duplicates(subset=[id_col])
-            # Null-free now; a null-lifted float64 column converts
-            # cleanly back to int64 (values are integral longs).
-            ids = batch[id_col].to_numpy(dtype=np.int64)
-            pos = _bloom_positions(ids, m, k)  # (n, k)
-            word, off = pos >> np.uint64(6), pos & np.uint64(63)
-            probed = (bits[word] >> off) & np.uint64(1)
-            fresh_mask = ~(probed.all(axis=1))  # any probe bit unset
-            fresh = batch[fresh_mask]
-            fw, fo = word[fresh_mask].ravel(), off[fresh_mask].ravel()
-            np.bitwise_or.at(bits, fw, np.uint64(1) << fo)
-            if len(fresh):
-                yield fresh[out_cols]
-        state.update((bits.view(np.int64).tolist(),))
-        if ttl_ms is not None:
-            state.setTimeoutDuration(ttl_ms)
-
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if ttl_ms is not None
-        else GroupStateTimeout.NoTimeout
-    )
-    deduped = bucketed.groupBy("_dedup_bucket").applyInPandasWithState(
-        fn_bloom if bloom_bits else fn_exact,
-        outputStructType=out_schema,
-        stateStructType=_BLOOM_STATE_SCHEMA if bloom_bits else _STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=timeout,
-    )
-    return deduped.unionByName(null_rows)
-
-
-def dedupe_stream_tws(
-    stream: DataFrame,
-    id_col: str = "event_id",
-    n_buckets: int = 64,
-    ttl_ms: int | None = None,
-) -> DataFrame:
-    """:func:`dedupe_stream` on Spark 4's ``transformWithStateInPandas``
-    — the successor stateful API (SPARK-49564 family) and the form new
-    code should target. Semantics are identical (first occurrence per
-    ``id_col`` wins, NULL ids pass through via the same plan-level
-    split, id-hash buckets bound group count), but the runtime
-    contract improves in three 100 TB-relevant ways:
-
-    * **Typed column-family state** (``ListState`` of LONG) instead of
-      one pickled struct blob: the seen-id list is appended
-      incrementally (``appendList``) — no read-modify-write of the
-      whole set per batch, and state layout is engine-readable (the
-      state data source can audit it).
-    * **Native per-state TTL** (``ttlDurationMs``): eviction is the
-      store's job — enforced per VALUE at read/maintenance time, not
-      via hand-rolled processing-time timeout callbacks; no
-      ``hasTimedOut`` branch to get wrong.
-    * **RocksDB state store required**: state lives off-heap with
-      changelog checkpointing, the store Spark points at unbounded
-      key cardinality (the caller/test sets the provider conf —
-      kept out of this helper so the session choice stays explicit).
-
-    The exact-set variant only; the Bloom bound stays on the classic
-    API (its fixed-size filter is already a constant-state answer).
-
-    Harness note: the TWS Python worker speaks a protobuf-encoded
-    state-server protocol, so this path additionally requires the
-    ``protobuf`` package — absent in this container, so the proof
-    test skips here (same gating pattern as the Kafka connector);
-    the classic-API twin above carries the recorded evidence.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    out_schema = stream.schema
-    out_cols = [f.name for f in out_schema.fields]
-    null_rows = stream.filter(F.col(id_col).isNull())
-    bucketed = stream.filter(F.col(id_col).isNotNull()).withColumn(
-        "_dedup_bucket",
-        F.pmod(F.hash(F.col(id_col)), F.lit(n_buckets)),
-    )
-
-    # Defined inside the builder so cloudpickle ships the CLASS by
-    # value: a module-level class pickles by reference and dies with
-    # ModuleNotFoundError on executor Python workers (the engine
-    # package is not installed there — SCALE.md §3).
-    class _DedupeProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._seen = handle.getListState(
-                "seen_ids", "id LONG", ttlDurationMs=ttl_ms
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            seen = {t[0] for t in self._seen.get()}
-            fresh_ids: list[tuple[int]] = []
-            for pdf in rows:
-                batch = pdf[~pdf[id_col].isin(seen)].drop_duplicates(
-                    subset=[id_col]
-                )
-                ids = [int(x) for x in batch[id_col]]
-                seen.update(ids)
-                fresh_ids.extend((i,) for i in ids)
-                if len(batch):
-                    yield batch[out_cols]
-            if fresh_ids:
-                self._seen.appendList(fresh_ids)
-
-        def close(self) -> None:
-            pass
-
-    # TTL-bearing state variables require a time mode: Spark rejects
-    # ttlDurationMs under timeMode="None"
-    # (STATEFUL_PROCESSOR_INCORRECT_TIME_MODE_TO_ASSIGN_TTL), so the
-    # mode follows the ttl_ms argument.
-    deduped = bucketed.groupBy("_dedup_bucket").transformWithStateInPandas(
-        _DedupeProcessor(),
-        outputStructType=out_schema,
-        outputMode="Append",
-        timeMode="ProcessingTime" if ttl_ms is not None else "None",
-    )
-    return deduped.unionByName(null_rows)

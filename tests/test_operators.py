@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 
 from prueba_tecnica_analista_etl_spark.functions.validate import (
     phone_status,
-    phone_status_pandas_udf,
 )
 from prueba_tecnica_analista_etl_spark.operators.dedupe import (
     keep_first,
@@ -112,17 +111,32 @@ def test_split_rejects_partitions_completely(spark, sf_dir):
 
 
 def test_phone_udf_parity(spark):
-    vals = [
-        "3108152764", "6015551234", "0", "12345", "601abc1234",
-        "30000000000", "3999999999", None, "6010000000",
+    """The native when-chain reproduces ``validar_telefono``'s labels:
+    10 digits starting '3' → Celular, starting '601' → Fijo, anything
+    else (short, 11 digits, non-digit, NULL) → No Apto."""
+    expected = [
+        ("3108152764", "Celular"),
+        ("6015551234", "Fijo"),
+        ("0", "No Apto"),
+        ("12345", "No Apto"),
+        ("601abc1234", "No Apto"),
+        ("30000000000", "No Apto"),
+        ("3999999999", "Celular"),
+        (None, "No Apto"),
+        ("6010000000", "Fijo"),
     ]
-    df = spark.createDataFrame([(v,) for v in vals], "phone string")
-    out = df.select(
-        phone_status(F.col("phone")).alias("native"),
-        phone_status_pandas_udf(F.col("phone")).alias("udf"),
+    df = spark.createDataFrame(
+        [(i, v) for i, (v, _) in enumerate(expected)], "i int, phone string"
     )
-    mism = out.filter(F.col("native") != F.col("udf")).count()
-    assert mism == 0
+    got = [
+        r["status"]
+        for r in df.select(
+            "i", phone_status(F.col("phone")).alias("status")
+        )
+        .orderBy("i")
+        .collect()
+    ]
+    assert got == [label for _, label in expected]
 
 
 def test_approx_quantiles_profile(spark, sf_dir):
@@ -778,7 +792,7 @@ def test_cli_surface(spark, sf_dir, tmp_path, capsys):
         # rows-only (its k-means assignment argmax rides unquantized
         # float comparisons — no engine-neutral form exists), unlike
         # the audits that keep getting upgraded out from under this
-        # test (q_lsh_recall went oracle-backed in r11).
+        # test (q_lsh_recall is oracle-backed now).
         main(["oracle", "q_ann_ivf"])
     with _pytest.raises(SystemExit):
         main(["run", "q_nonexistent"], spark=spark)
@@ -1213,7 +1227,7 @@ def test_group_safe_split_never_straddles_duplicate_groups(spark):
 
 
 def test_bucketed_upsert_chain(spark):
-    """S17 wired to J4 (r12 verdict task 3): chained MERGEs into a
+    """S17 wired to J4: chained MERGEs into a
     bucketed base shuffle ONLY the incoming delta. Run 2's executed
     plan carries exactly one Exchange (the delta side — the base scan
     is Bucketed and co-located), rows match the plain upsert chain,
@@ -1270,7 +1284,7 @@ def test_bucketed_upsert_chain(spark):
 
 
 def test_bucketed_upsert_crash_recovery(spark):
-    """r13 verdict task 3: the rename-aside swap is crash-safe at
+    """The rename-aside swap is crash-safe at
     EVERY interruption point. For each of the three windows (after
     the staged write, between the two renames, before the final
     DROP) this replays exactly the statements bucketed_upsert issues
@@ -1360,7 +1374,7 @@ def test_bucketed_upsert_external_base_rejected(spark, tmp_path):
     """An EXTERNAL bucketed base must be rejected loudly: the staged
     swap writes MANAGED, so proceeding would silently re-home the
     table into the warehouse and strand the files at its explicit
-    path (r13 advice)."""
+    path."""
     from prueba_tecnica_analista_etl_spark.operators.upsert import (
         bucketed_upsert,
     )

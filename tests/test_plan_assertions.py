@@ -215,20 +215,20 @@ def test_no_row_python_udfs_anywhere_in_registry(spark, sf_dir):
     census, IVF/LSH re-rank, binary metadata parsing). Everything
     else must be whole-stage-codegen JVM expressions. The streaming
     trio is excluded only because building their plans executes the
-    streams; their Python usage (applyInPandasWithState) is asserted
-    by the streaming tests; q_dup_clusters by
-    test_eager_builder_pipelines_stay_clean (its declared plan is a
-    post-checkpoint census)."""
+    streams; the stream dedup's plan (native StreamingDeduplicate, no
+    Python node) is asserted by
+    test_streaming.py::test_dedupe_stream_plans_native_deduplicate;
+    q_dup_clusters by test_eager_builder_pipelines_stay_clean (its
+    declared plan is a post-checkpoint census)."""
     ARROW_ALLOWED = {
-        # q_ann_recall left this set in r11, q_simhash_dedup /
-        # q_embed_neardup / q_multimodal_pipeline in r13,
-        # q_ann_lsh / q_ann_ivf in r14 (lsh_sig_frame artifact; the
-        # on-disk IVF index read path), and q_winnow_fingerprint /
-        # q_heavy_hitters / q_multimodal_meta in r15 (winnow_fps
-        # frame; staged MG candidate census; staged metadata frame —
-        # the features16 discipline): their Arrow stages (signature bit
-        # census, sign projection, feature extraction, k-means
-        # assignment, sliding-min walk, MG summaries) moved into
+        # q_ann_recall, q_simhash_dedup, q_embed_neardup,
+        # q_multimodal_pipeline, q_ann_lsh / q_ann_ivf (lsh_sig_frame
+        # artifact; the on-disk IVF index read path),
+        # q_winnow_fingerprint, q_heavy_hitters and q_multimodal_meta
+        # (winnow_fps frame; staged MG candidate census; staged
+        # metadata frame) are not in this set: their Arrow stages
+        # (signature bit census, sign projection, feature extraction,
+        # k-means assignment, sliding-min walk, MG summaries) moved into
         # artifact BUILDERS, so the declared plan is artifact reads +
         # native ops — the disk-backed store erases Python from the
         # steady-state plan entirely. The builders' Arrow nodes are
@@ -408,7 +408,7 @@ def test_aqe_splits_skewed_join_partition(spark):
 
 
 def test_r7_additions_plan_shapes(spark, sf_dir):
-    """Plan pins for the round-7 query family (the shapes their
+    """Plan pins for one query family (the shapes their
     docstrings promise):
 
     - q_bm25 / q_token_histogram: top-k via TakeOrderedAndProject
@@ -443,9 +443,9 @@ def test_r7_additions_plan_shapes(spark, sf_dir):
 
 
 def test_r8_late_additions_plan_shapes(spark, sf_dir):
-    """Plan pins for the round-8 post-window additions:
+    """Plan pins for the post-window additions:
 
-    - q_bpe_pairs: ZERO corpus scans (r14 — the tf-weighted
+    - q_bpe_pairs: ZERO corpus scans (the tf-weighted
       vocabulary folds from the staged doc_term_tf artifact, a
       checkpointed frame, so no parquet scan survives in the plan),
       vocab-side pair explosion, top-k via TakeOrderedAndProject —
@@ -613,8 +613,8 @@ def test_topk_precision_never_ranks_fact_table(spark, sf_dir):
 
 
 def test_dup_exposure_single_scan_no_pair_expansion(spark, sf_dir):
-    """q_dup_exposure must stay LINEAR in corpus shingles AND skew-free
-    (r9 verdict task 5, r13 artifact form): both census branches fold
+    """q_dup_exposure must stay LINEAR in corpus shingles AND skew-free:
+    both census branches fold
     the staged fp8_ids artifact — the corpus-scale explode+md5+groupBy
     subtree runs once per CORPUS, so the query plan contains NO
     parquet scan of documents at all (the artifact serves as a
@@ -641,8 +641,8 @@ def test_dup_exposure_single_scan_no_pair_expansion(spark, sf_dir):
 def test_tfidf_join_stays_broadcast_under_aqe(spark, sf_dir):
     """q_tfidf's one unhinted join (per-term tf ⋈ per-term df_) is
     deliberately left to AQE statistics — the df_ side is vocabulary-
-    sized and AQE picks a broadcast at every tested scale. The r11
-    verdict asked this decision to be PINNED so a statistics change
+    sized and AQE picks a broadcast at every tested scale. The
+    decision is PINNED so a statistics change
     cannot silently degrade it to a sort-merge join: the FINAL
     adaptive plan must contain a BroadcastHashJoin and no
     SortMergeJoin (runtime decision, so the query executes first)."""
@@ -660,7 +660,7 @@ def test_tfidf_join_stays_broadcast_under_aqe(spark, sf_dir):
 
 
 def test_staged_builders_keep_their_arrow_stages(spark, sf_dir):
-    """r13: q_simhash_dedup / q_embed_neardup / q_multimodal_pipeline
+    """q_simhash_dedup / q_embed_neardup / q_multimodal_pipeline
     serve per-corpus staged pair/feature frames, so their DECLARED
     plans carry no Python (asserted by the registry-wide lint). The
     Arrow stages those artifacts are built FROM must still exist in
@@ -702,7 +702,7 @@ def test_staged_builders_keep_their_arrow_stages(spark, sf_dir):
         extract_features(fake_assets(docs), dim=16)
     ), "multimodal feature builder lost its mapInPandas stage"
 
-    # r14: q_ann_lsh serves the staged lsh_sigs frame and q_ann_ivf
+    # q_ann_lsh serves the staged lsh_sigs frame and q_ann_ivf
     # reads the on-disk index — their Arrow stages (signature matmul,
     # k-means assignment) live in the builders now; pin both.
     from prueba_tecnica_analista_etl_spark.functions.vectors import (
@@ -727,7 +727,7 @@ def test_staged_builders_keep_their_arrow_stages(spark, sf_dir):
         e.withColumn("cluster", assign_clusters(F.col("v"), cents))
     ), "IVF assignment builder lost its Arrow matmul stage"
 
-    # r15: q_winnow_fingerprint serves the staged winnow_fps frame
+    # q_winnow_fingerprint serves the staged winnow_fps frame
     # and q_heavy_hitters a staged MG candidate census — their Arrow
     # stages (sliding-min fingerprint walk, Misra-Gries partition
     # summaries) live in the builders now; pin both live forms.

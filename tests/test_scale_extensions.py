@@ -97,8 +97,8 @@ def test_ngram_jaccard_skew_bucket_subsplit(spark, tmp_path):
     """A pathological corpus where every doc shares the same min-shingle
     (identical text) must NOT explode into n²/2 pairs — the oversized
     bucket is sub-split into ≤BUCKET_CAP chunks — but it must also NOT
-    vanish (the round-2 guard dropped the whole bucket, losing every
-    near-dup signal feeding corpus curation). The query still emits
+    vanish (dropping the whole bucket would lose every near-dup signal
+    feeding corpus curation). The query still emits
     (limit-bounded) exact-dup pairs with jaccard 1.0."""
     from prueba_tecnica_analista_etl_spark.plans.extensions_scale import (
         BUCKET_CAP,
@@ -704,10 +704,9 @@ def test_purge_identical_without_endpoint_broadcast(spark, monkeypatch):
     not a semantics carrier: with ENDPOINT_BROADCAST_MAX_ROWS forced
     to 0 (every semi-join falls back to its shuffle form — the path a
     duplicate-heavy corpus with executor-memory-sized |pairs| takes)
-    all three purge variants must return byte-identical survivor
-    sets. Guards the r6 verdict's scale watch-item: a forced
-    broadcast of a huge pair frame is a driver OOM, and the fallback
-    must not change results."""
+    both purge variants must return byte-identical survivor sets. A
+    forced broadcast of a huge pair frame is a driver OOM, and the
+    fallback must not change results."""
     from prueba_tecnica_analista_etl_spark.pipelines import corpus
 
     docs = spark.createDataFrame(
@@ -723,51 +722,13 @@ def test_purge_identical_without_endpoint_broadcast(spark, monkeypatch):
             for r in corpus.near_dup_purge(docs, pairs).collect()
         }
         stable, audit = corpus.near_dup_purge_stable(docs, pairs)
-        comp = {
-            r["doc_id"]
-            for r in corpus.near_dup_purge_components(
-                docs, pairs
-            ).collect()
-        }
-        return greedy, {r["doc_id"] for r in stable.collect()}, comp, audit
+        return greedy, {r["doc_id"] for r in stable.collect()}, audit
 
     base = run_all()
     monkeypatch.setattr(corpus, "ENDPOINT_BROADCAST_MAX_ROWS", 0)
     forced = run_all()
-    assert forced[:3] == base[:3]
-    assert forced[3]["enforcement_over_purged"] == 0
-
-
-def test_near_dup_purge_components_one_survivor_per_family(spark):
-    """Component-exact purge semantics vs the greedy MIS: on the chain
-    A~B, B~C the greedy form keeps {A, C}; the CC form treats the
-    chain as ONE family and keeps only its min id. Ghost endpoints
-    (pair members absent from docs) still impose no constraint, and
-    docs in no pair are untouched."""
-    from prueba_tecnica_analista_etl_spark.pipelines.corpus import (
-        near_dup_purge_components,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, f"doc {i}") for i in range(1, 9)], "doc_id long, text string"
-    )
-    # chain 1-2-3 (one family), isolated pair (5,6); 4,7,8 pair-free
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (5, 6)], "doc_a long, doc_b long"
-    )
-    alive = {
-        r["doc_id"]
-        for r in near_dup_purge_components(docs, pairs).collect()
-    }
-    assert alive == {1, 4, 5, 7, 8}  # 3 drops too: family {1,2,3}
-
-    # ghost endpoint: (0, 7) with 0 gone upstream must not purge 7
-    ghost = spark.createDataFrame([(0, 7)], "doc_a long, doc_b long")
-    alive_g = {
-        r["doc_id"]
-        for r in near_dup_purge_components(docs, ghost).collect()
-    }
-    assert alive_g == {1, 2, 3, 4, 5, 6, 7, 8}
+    assert forced[:2] == base[:2]
+    assert forced[2]["enforcement_over_purged"] == 0
 
 
 def test_corpus_curate_second_build_reuses_pair_artifact(spark, sf_dir):
@@ -885,26 +846,6 @@ def test_fingerprint_udfs_null_and_empty_safe(spark):
         .first()["s"]
         is not None
     )
-
-
-def test_curate_corpus_components_mode(spark, sf_dir):
-    """purge="components" composes the CC purge into the full chain:
-    survivors are a subset of the greedy mode's (cluster-then-keep-one
-    is strictly stricter), still contain no identical texts, and no
-    minhash candidate pair survives whole."""
-    from prueba_tecnica_analista_etl_spark.pipelines.corpus import (
-        curate_corpus,
-    )
-
-    greedy, _ = curate_corpus(spark, sf_dir)
-    comp, stats = curate_corpus(spark, sf_dir, purge="components")
-    g = {r["doc_id"] for r in greedy.select("doc_id").collect()}
-    c = {r["doc_id"] for r in comp.select("doc_id").collect()}
-    assert c <= g and len(c) > 0
-    assert stats["after_near_dup"] == len(c)
-    pairs = REGISTRY["q_minhash_dedup"].fn(spark, sf_dir).collect()
-    for p in pairs:
-        assert not (p["doc_a"] in c and p["doc_b"] in c)
 
 
 def test_training_export_composition(spark, sf_dir, tmp_path):
@@ -1102,7 +1043,7 @@ def test_lsh_recall_audit_invariants(spark, sf_dir):
 def test_lsh_truth_fraction_post_import_mutation_warns(
     spark, sf_dir, monkeypatch
 ):
-    """r11 ADVICE: SPARK_GRAFT_LSH_TRUTH_FRACTION is snapshotted at
+    """SPARK_GRAFT_LSH_TRUTH_FRACTION is snapshotted at
     import of the plans module (so the engine and its generated
     oracle cannot diverge within a process); a caller who mutates the
     env AFTER import must get a loud warning at query-build time, not
@@ -1127,7 +1068,7 @@ def test_lsh_truth_fraction_post_import_mutation_warns(
 
 
 def test_lsh_recall_sampled_truth_agrees_with_exact(spark, sf_dir):
-    """The 100 TB mode (r9 verdict task 3): restricting the
+    """The 100 TB mode: restricting the
     exhaustive-truth tier to a deterministic half of the documents
     must (a) shrink the census — sampled n_true strictly below the
     exact census's on any corpus with >= a handful of true pairs —
@@ -1159,7 +1100,7 @@ def test_lsh_recall_sampled_truth_agrees_with_exact(spark, sf_dir):
 
 
 def test_ann_recall_audit_invariants(spark, sf_dir):
-    """The ANN audit is a SWEEP (r8 verdict task 8): three operating
+    """The ANN audit is a SWEEP: three operating
     points per tier against a 10-deep exact truth, exactly one point
     per tier marked as the shipped config (and carrying the shipped
     constants), recall the exact hit fraction everywhere, and recall
@@ -1167,14 +1108,14 @@ def test_ann_recall_audit_invariants(spark, sf_dir):
     probing more clusters can only add candidates, so a non-monotone
     recall means the points aren't filtering one shared frame. IVF's
     exact re-rank over probed clusters must stay high-recall at
-    harness scale; the sign-LSH radius was retuned in r12 (128-bit
-    words, hamming<=55) after this sweep measured the 16-bit point
-    at recall@10 = 0.2 — on the tiny sf0.001 corpus the shipped
-    recall may still be modest (too few vectors inside any radius),
-    so the >=0.8 gate lives in the sf0.1 test below. n_candidates
-    (added r12: the per-point scan cost the r11 verdict asked to be
-    logged) must be monotone in the knob within each tier — a wider
-    radius / more probes can only admit more candidates."""
+    harness scale; the sign-LSH radius was set (128-bit words,
+    hamming<=55) after this sweep measured the 16-bit point at
+    recall@10 = 0.2 — on the tiny sf0.001 corpus the shipped recall
+    may still be modest (too few vectors inside any radius), so the
+    >=0.8 gate lives in the sf0.1 test below. n_candidates (the
+    per-point scan cost) must be monotone in the knob within each
+    tier — a wider radius / more probes can only admit more
+    candidates."""
     from prueba_tecnica_analista_etl_spark.plans.extensions_scale import (
         IVF_K,
         IVF_NPROBE,
@@ -1184,10 +1125,10 @@ def test_ann_recall_audit_invariants(spark, sf_dir):
     )
 
     frame = q_ann_recall(spark, sf_dir)
-    # The IVF tier must audit the ON-DISK index (r9 verdict task 4):
+    # The IVF tier must audit the ON-DISK index:
     # its scan's cluster predicate is a PARTITION filter (directory
     # pruning), not a post-scan data filter. q_ann_recall stages the
-    # swept top-10 frame per corpus (r11), which erases the scan from
+    # swept top-10 frame per corpus, which erases the scan from
     # ITS plan — so pin the LIVE sweep construction the staging
     # builds from (ann_sweep_parts is that single source of truth).
     live_top = ann_sweep_parts(spark, sf_dir)[1]
@@ -1224,7 +1165,7 @@ def test_ann_recall_audit_invariants(spark, sf_dir):
     shipped_ivf = next(p for p in by_tier["ivf_disk"] if p["shipped"])
     assert shipped_ivf["operating_point"] == f"nprobe={IVF_NPROBE}/{IVF_K}"
     assert shipped_ivf["recall"] >= 0.8
-    # int8 compressed-scan tier (r12): no prefilter, so its candidate
+    # int8 compressed-scan tier: no prefilter, so its candidate
     # count is the whole probe-excluded corpus — strictly the largest
     # in the table — and its recall isolates pure quantization error
     quant = by_tier["int8_quant"][0]
@@ -1235,10 +1176,9 @@ def test_ann_recall_audit_invariants(spark, sf_dir):
 
 
 def test_shipped_lsh_recall_at_sf01(spark):
-    """The r11 verdict's done-criterion for the sign-LSH retune: at
-    sf0.1 the SHIPPED operating point's sweep row must report
-    recall@10 >= 0.8 with its candidate-count cost logged. The r12
-    retune (128-bit 4x32-word signatures, hamming<=55) measures 1.0
+    """At sf0.1 the SHIPPED sign-LSH operating point's sweep row must
+    report recall@10 >= 0.8 with its candidate-count cost logged. The
+    shipped point (128-bit 4x32-word signatures, hamming<=55) measures 1.0
     with ~14%% of the 2k-vector corpus as candidates; this pins the
     gate so a future re-tune (or regenerated planes) cannot silently
     ship an under-recalling retrieval tier again. sf0.1 because the
@@ -1266,7 +1206,7 @@ def test_shipped_lsh_recall_at_sf01(spark):
 
 
 def test_embed_quantize_semantics(spark, sf_dir):
-    """q_embed_quantize (r12): the int8 quantized-retrieval tier.
+    """q_embed_quantize: the int8 quantized-retrieval tier.
     Pins (a) the quantized cosine tracks the exact cosine within the
     int8 error budget on every emitted rank (|Δ| <= 0.01 — measured
     ~0.003 on the harness corpora), (b) values stay genuine int8
@@ -1432,7 +1372,7 @@ def test_ivf_on_disk_index_search_prunes_and_matches_brute(
     again = ivf_search_index(spark, path, query, nprobe=2, topk=10)
     assert rows(again) == want  # pruned scan untouched by corruption
 
-    # Schema-sidecar guarantee (review r9): the read must plan from
+    # Schema-sidecar guarantee: the read must plan from
     # the persisted schema, never from footer inference — which opens
     # the lexicographically FIRST leaf (cluster=0) regardless of the
     # probe set. Corrupt cluster=0 outright and search a probe that
@@ -1489,7 +1429,7 @@ def test_ivf_index_batch_search_matches_per_query(spark, sf_dir, tmp_path):
 
 
 def test_md5_60_matches_duckdb_parse(spark):
-    """The engine-neutral 60-bit hash (r11, the near-dup family's
+    """The engine-neutral 60-bit hash (the near-dup family's
     oracle foundation) must be bit-identical between Spark's
     conv(substring(md5)) and DuckDB's ('0x'||substr(md5))::BIGINT —
     pinned on assorted strings including unicode, the empty string,
@@ -1593,7 +1533,7 @@ def test_stream_neardup_equals_batch_greedy_fixpoint(spark, sf_dir):
     fixpoint (the committed-batch ledger makes replays no-ops). The
     audit also guards the oracle's unroll margin: the measured
     alternating-chain depth must stay at or below HALF the rounds the
-    generated SQL unrolls (r11 ADVICE: the guard is what keeps the
+    generated SQL unrolls (the guard is what keeps the
     fixed unroll from going silently wrong on a deeper corpus)."""
     from prueba_tecnica_analista_etl_spark.pipelines.corpus import (
         near_dup_purge_stable,
@@ -1631,7 +1571,7 @@ def test_stream_neardup_equals_batch_greedy_fixpoint(spark, sf_dir):
 
 
 def test_stream_neardup_index_compaction_long_replay(spark, tmp_path):
-    """Long-replay compaction gate (r11 verdict task 3): 24
+    """Long-replay compaction gate: 24
     micro-batches through foreach_batch_neardup_gate must keep the
     index's unit-directory count BOUNDED (folds into gen-* past
     COMPACT_MAX_UNITS instead of growing one dir pair per batch),
@@ -1857,7 +1797,7 @@ def test_unicode_normalize_parity_on_mixed_corpus(spark, tmp_path):
 
 
 def test_fold_units_retry_after_crash_lands_next_seq(spark, tmp_path):
-    """r12 ADVICE: a fold that crashed BETWEEN the generation rename
+    """A fold that crashed BETWEEN the generation rename
     and the folded batch dirs' removal must, on retry, land at the
     NEXT free sequence for that generation id (not re-target the
     existing dir, fail the rename, and repeat the full rewrite on
@@ -1909,7 +1849,7 @@ def test_fold_units_retry_after_crash_lands_next_seq(spark, tmp_path):
 
 
 def test_gate_index_probe_partition_pruning(spark, tmp_path):
-    """r12 verdict task 6: the gate's index ``keys/`` is written
+    """The gate's index ``keys/`` is written
     partitioned by kb = pmod(xxhash64(band, key), KB_BUCKETS) and the
     probe pushes its own kb values as a literal partition filter —
     the scan plan must show PartitionFilters pruning, the pruned read
@@ -1985,7 +1925,7 @@ def test_gate_index_probe_partition_pruning(spark, tmp_path):
 
 
 def test_pretrain_run_conservation_and_determinism(spark, sf_dir, tmp_path):
-    """The flagship composition (r12 verdict task 8): quality gate →
+    """The flagship composition: quality gate →
     exact dedup → near-dup purge → benchmark holdout + 4-gram
     decontamination → md5-nibble split → ctx-window pack plan →
     hash-sharded manifest export, as ONE run. Pins (1) the
@@ -2004,7 +1944,7 @@ def test_pretrain_run_conservation_and_determinism(spark, sf_dir, tmp_path):
     )
     assert ledger["invariants_ok"]
     assert ledger["input_docs"] > 0
-    # the semantic tier (r14) partitions the curation survivors FIRST,
+    # the semantic tier partitions the curation survivors FIRST,
     # then decontaminate partitions what it kept — one conservation
     # term per dedup tier. The harness corpus ships embeddings, so
     # the tier must have RUN (None would mean silently skipped).
@@ -2045,7 +1985,7 @@ def test_pretrain_run_conservation_and_determinism(spark, sf_dir, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# SemDeDup (q_semdedup) and duplicate-span census (q_dup_spans) — r14
+# SemDeDup (q_semdedup) and duplicate-span census (q_dup_spans)
 # ---------------------------------------------------------------------------
 
 
@@ -2189,7 +2129,7 @@ def test_dup_spans_planted_shared_run(spark, tmp_path):
 def test_ivf_append_preserves_search_and_drift_triggers_rebalance(
     spark, sf_dir, tmp_path
 ):
-    """IVF index maintenance (r14 stretch): (1) incremental adds go
+    """IVF index maintenance: (1) incremental adds go
     through the SAME sidecar model, so search over an index built-then-
     appended equals search over an index built in one shot under that
     model — recall is preserved by construction; (2) append touches

@@ -225,7 +225,7 @@ def test_sessionize_rows_sane(spark, sf_dir):
 
 def test_sessionize_batch_stream_parity(spark, sf_dir):
     """Quantified parity for the sessionizer: the streamed registry
-    result (oracle-exact since r10: finalization-margin form) must
+    result (oracle-exact in its finalization-margin form) must
     equal a batch session_window aggregation restricted by the SAME
     margin — sessions whose window end + 90 min <= max event time,
     i.e. last event + 2 h <= max — and the withheld complement must
@@ -274,7 +274,7 @@ def test_multimodal_meta_deterministic(spark, sf_dir):
 
 
 def test_stream_dedupe_exactly_once(spark, sf_dir):
-    """applyInPandasWithState seen-id filter: the overlapping landing
+    """Streaming seen-id dedup: the overlapping landing
     dir re-delivers the middle 20% of event ids in a second micro-batch;
     the stateful operator must emit every id exactly once."""
     from prueba_tecnica_analista_etl_spark.streaming.replay import (
@@ -294,9 +294,9 @@ def test_stream_dedupe_exactly_once(spark, sf_dir):
 
 
 def test_stream_dedupe_rejects_null_or_dup_ids(spark, tmp_path):
-    """r10 ADVICE: q_stream_dedupe's oracle-exactness RESTS on
-    event_id being unique and non-null (NULL-id rows bypass the
-    stateful operator, so a NULL id in the duplicated overlap band
+    """q_stream_dedupe's oracle-exactness RESTS on event_id being
+    unique and non-null (NULL-id rows bypass the stateful
+    operator, so a NULL id in the duplicated overlap band
     would be emitted once per DELIVERY while the oracle emits it once
     per source row). The query must refuse such a corpus loudly
     instead of hash-mismatching silently."""
@@ -383,195 +383,25 @@ def test_stateful_dedupe_state_survives_restart(spark, sf_dir, tmp_path):
     assert second == fresh  # re-delivered 1000..2000 dropped by state
 
 
-def test_bloom_positions_deterministic_and_spread():
-    """The Bloom probe math (no Spark needed): deterministic across
-    calls, k distinct probes per id in [0, m), and distinct ids hit
-    distinct probe sets (no systematic collision for sequential ids —
-    the failure mode of a weak mixer)."""
-    import numpy as np
-
-    from prueba_tecnica_analista_etl_spark.streaming.stateful import (
-        _bloom_positions,
-    )
-
-    ids = np.arange(1000, dtype=np.int64)
-    m, k = 1 << 16, 4
-    pos = _bloom_positions(ids, m, k)
-    assert pos.shape == (1000, k)
-    assert (pos < m).all()
-    again = _bloom_positions(ids, m, k)
-    assert (pos == again).all()
-    # sequential ids must not share full probe sets
-    probe_sets = {tuple(sorted(row)) for row in pos.tolist()}
-    assert len(probe_sets) == 1000
-    # bits are well spread: 1000 ids × 4 probes over 65k bits should
-    # set close to 4000 distinct bits (birthday collisions only)
-    assert len(set(pos.ravel().tolist())) > 3800
-
-
-def test_stateful_dedupe_bloom_exactly_once(spark, sf_dir, tmp_path):
-    """Bloom-path stream dedup: re-delivered ids are dropped across
-    micro-batches AND across a checkpoint restart, exactly like the
-    exact-set path, while per-bucket state stays a fixed-size bit
-    array. At this fill ratio (~2k ids × 4 probes over 2^16 bits per
-    bucket across 8 buckets) the false-drop probability is ~1e-9, so
-    the emitted counts are deterministic and exact."""
-    from prueba_tecnica_analista_etl_spark.session import (
-        ensure_runtime_conf,
-    )
-    from prueba_tecnica_analista_etl_spark.streaming.replay import (
-        replay_as_stream,
-    )
+def test_dedupe_stream_plans_native_deduplicate(spark, tmp_path):
+    """The stream dedup is the engine's own state operator: its plan
+    (built, never started) carries ``StreamingDeduplicate`` and no
+    Python-state node of any ``...InPandas...`` kind."""
     from prueba_tecnica_analista_etl_spark.streaming.stateful import (
         dedupe_stream,
     )
 
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "user_id", "ts"
+    df = spark.createDataFrame(
+        [(1, 10), (None, 11)], "event_id long, user_id long"
     )
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-
-    def drop_file(df, name, mtime):
-        tmp = str(tmp_path / f"w_{name}")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        src = next(f for f in os.listdir(tmp) if f.startswith("part-"))
-        dst = str(landing / f"{name}.parquet")
-        os.rename(os.path.join(tmp, src), dst)
-        os.utime(dst, (mtime, mtime))
-
-    def run_once():
-        s = ensure_runtime_conf(spark.newSession())
-        s.conf.set("spark.sql.shuffle.partitions", "4")
-        stream = replay_as_stream(s, str(landing), ev.schema, 1)
-        emitted: list[int] = []
-        q = (
-            dedupe_stream(stream, n_buckets=8, bloom_bits=1 << 16)
-            .writeStream.foreachBatch(
-                lambda df, bid: emitted.append(df.count())
-            )
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return sum(emitted)
-
-    ids = ev.filter(F.col("event_id") < 3000)
-    drop_file(ids.filter(F.col("event_id") < 2000), "f0", 1_700_000_000)
-    first = run_once()
-    assert first == ids.filter(F.col("event_id") < 2000).count()
-
-    # overlap re-delivered across a RESTART: bloom state must carry
-    drop_file(ids.filter(F.col("event_id") >= 1000), "f1", 1_700_000_001)
-    second = run_once()
-    assert second == ids.filter(F.col("event_id") >= 2000).count()
-
-
-def test_stateful_dedupe_ttl_bounds_state(spark, sf_dir, tmp_path):
-    """TTL state bound (the 100 TB retention requirement): (a) dedup
-    stays exact while buckets are warm, (b) buckets idle past the TTL
-    are evicted — observed via the state operator's numRowsTotal
-    dropping from all-buckets to zero — and (c) an id re-delivered
-    after its bucket was evicted is re-admitted (the documented trade
-    of bounded state).
-
-    With ProcessingTimeTimeout the availableNow trigger does NOT
-    self-terminate: Spark keeps scheduling (empty) batches, and those
-    empty batches are exactly where idle-bucket timeouts fire. So the
-    harness polls progress and stops the query explicitly instead of
-    awaitTermination()."""
-    import time
-
-    from prueba_tecnica_analista_etl_spark.session import (
-        ensure_runtime_conf,
+    landing = str(tmp_path / "landing")
+    df.write.parquet(landing)
+    stream = replay_as_stream(spark, landing, df.schema, 1)
+    plan = spark._jvm.PythonSQLUtils.explainString(
+        dedupe_stream(stream)._jdf.queryExecution(), "extended"
     )
-    from prueba_tecnica_analista_etl_spark.streaming.replay import (
-        replay_as_stream,
-    )
-    from prueba_tecnica_analista_etl_spark.streaming.stateful import (
-        dedupe_stream,
-    )
-
-    N_BUCKETS = 8
-    TTL_MS = 1_500
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "user_id", "ts"
-    )
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-
-    def drop_file(df, name, mtime):
-        tmp = str(tmp_path / f"w_{name}")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        src = next(f for f in os.listdir(tmp) if f.startswith("part-"))
-        dst = str(landing / f"{name}.parquet")
-        os.rename(os.path.join(tmp, src), dst)
-        os.utime(dst, (mtime, mtime))
-
-    def run_until(predicate, deadline_s=90):
-        """Start the TTL stream, poll until predicate(emitted,
-        state_rows) holds (or fail), stop, return (emitted, states)."""
-        s = ensure_runtime_conf(spark.newSession())
-        s.conf.set("spark.sql.shuffle.partitions", "4")
-        stream = replay_as_stream(s, str(landing), ev.schema, 1)
-        emitted: list[int] = []
-        q = (
-            dedupe_stream(stream, n_buckets=N_BUCKETS, ttl_ms=TTL_MS)
-            .writeStream.foreachBatch(
-                lambda df, bid: emitted.append(df.count())
-            )
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            deadline = time.monotonic() + deadline_s
-            states: list[int] = []
-            while time.monotonic() < deadline:
-                states = [
-                    p["stateOperators"][0]["numRowsTotal"]
-                    for p in q.recentProgress
-                    if p.get("stateOperators")
-                ]
-                if predicate(sum(emitted), states):
-                    return sum(emitted), states
-                time.sleep(0.25)
-            raise AssertionError(
-                f"predicate never held: emitted={emitted} "
-                f"states={states}"
-            )
-        finally:
-            q.stop()
-
-    # (a) warm-path dedup: 1000 ids fill all 8 buckets; re-delivering
-    # half of them in the next micro-batch (well inside the TTL)
-    # emits only the fresh half.
-    ids = ev.filter(F.col("event_id") < 1500)
-    n_ids = ids.count()
-    drop_file(ids.filter(F.col("event_id") < 1000), "f0", 1_700_000_000)
-    drop_file(ids.filter(F.col("event_id") >= 500), "f1", 1_700_000_001)
-    # (b) then keep the query alive with no new data: every bucket
-    # goes idle past the TTL and is evicted in the empty batches.
-    first, states = run_until(
-        lambda em, st: st and st[-1] == 0 and em >= n_ids
-    )
-    assert first == n_ids  # overlap 500..1000 emitted exactly once
-    assert max(states) == N_BUCKETS  # all buckets held state pre-TTL
-
-    # (c) re-admission: an id from the evicted state passes again on
-    # restart from the same checkpoint (bounded-state trade).
-    drop_file(
-        spark.createDataFrame([(42, 1, None)], ev.schema),
-        "f2",
-        1_700_000_002,
-    )
-    third, _ = run_until(lambda em, st: em >= 1)
-    assert third == 1  # id 42 was seen in f0 but its state is gone
+    assert "StreamingDeduplicate" in plan, plan
+    assert "InPandas" not in plan, plan
 
 
 def test_watermark_drops_late_data(spark, tmp_path):
@@ -655,12 +485,10 @@ def test_watermark_drops_late_data(spark, tmp_path):
     assert dropped == 1
 
 
-@pytest.mark.parametrize("bloom", [False, True])
-def test_stateful_dedupe_null_ids_pass_through(spark, tmp_path, bloom):
-    """A micro-batch containing NULL ids must not kill the query
-    (pandas lifts the long column to float64/NaN): null-id rows pass
-    through un-deduplicated in BOTH modes, non-null ids still dedup
-    exactly once."""
+def test_stateful_dedupe_null_ids_pass_through(spark, tmp_path):
+    """NULL ids have no identity to dedup on: null-id rows pass
+    through un-deduplicated (``dropDuplicates`` alone would keep only
+    one of them), non-null ids still dedup exactly once."""
     from prueba_tecnica_analista_etl_spark.session import (
         ensure_runtime_conf,
     )
@@ -686,9 +514,8 @@ def test_stateful_dedupe_null_ids_pass_through(spark, tmp_path, bloom):
     s.conf.set("spark.sql.shuffle.partitions", "4")
     stream = replay_as_stream(s, str(landing), df.schema, 1)
     out: list = []
-    kwargs = {"bloom_bits": 1 << 12} if bloom else {}
     q = (
-        dedupe_stream(stream, n_buckets=4, **kwargs)
+        dedupe_stream(stream)
         .writeStream.foreachBatch(
             lambda b, bid: out.extend(b.collect())
         )
@@ -934,7 +761,7 @@ def test_dedupe_stream_exact_above_2_53_with_nulls(spark, tmp_path):
     stream = replay_as_stream(s, str(landing), df.schema, 1)
     out: list = []
     q = (
-        dedupe_stream(stream, n_buckets=4)
+        dedupe_stream(stream)
         .writeStream.foreachBatch(lambda b, bid: out.extend(b.collect()))
         .outputMode("append")
         .option("checkpointLocation", str(tmp_path / "ckpt"))
@@ -1089,67 +916,6 @@ def test_stream_stream_join_state_is_bounded(spark, sf_dir):
     assert state_rows[-1] < n_events / 2, (state_rows, n_events)
 
 
-def _has_protobuf() -> bool:
-    # find_spec("google") alone misfires: other google namespace
-    # packages (google-auth etc.) make it non-None without protobuf,
-    # and find_spec("google.protobuf") raises if even the parent
-    # namespace is absent.
-    import importlib.util
-
-    try:
-        return importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="transformWithStateInPandas needs protobuf (absent in "
-    "harness; its Python state-server protocol is protobuf-encoded)",
-)
-def test_dedupe_stream_tws_exactly_once(spark, sf_dir):
-    """transformWithStateInPandas twin of the exactly-once dedup: same
-    overlapping at-least-once landing dir, same result — every event
-    id emitted exactly once, NULL ids passed through. Requires the
-    RocksDB state store (set for this query, restored after) and the
-    protobuf package (the TWS Python worker protocol)."""
-    from prueba_tecnica_analista_etl_spark.streaming.replay import (
-        replay_as_stream,
-        write_overlapping_replay,
-    )
-    from prueba_tecnica_analista_etl_spark.streaming.stateful import (
-        dedupe_stream_tws,
-    )
-    from prueba_tecnica_analista_etl_spark.streaming.windows import (
-        run_available_now,
-    )
-
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        data_dir, schema = write_overlapping_replay(spark, sf_dir, "events")
-        stream = replay_as_stream(spark, data_dir, schema, 1)
-        out = run_available_now(dedupe_stream_tws(stream), spark)
-        ev = load_table(spark, sf_dir, "events")
-        n = ev.count()
-        assert out.count() == n
-        non_null = out.filter(F.col("event_id").isNotNull())
-        assert (
-            non_null.select("event_id").distinct().count()
-            == non_null.count()
-        )
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-
-
 def test_stream_static_enrichment(spark, sf_dir):
     """Stream-static join: events stream enriched with a customer
     dimension keyed on user_id — matches the batch join exactly (the
@@ -1186,46 +952,6 @@ def test_stream_static_enrichment(spark, sf_dir):
     # both matched and unmatched sides are exercised
     assert got.filter(F.col("dim_name").isNull()).count() > 0
     assert got.filter(F.col("dim_name").isNotNull()).count() > 0
-
-
-def test_native_dedup_matches_custom_op(spark, sf_dir):
-    """dropDuplicatesWithinWatermark (the engine-native state op) must
-    produce the same exactly-once id set as the custom bucketed
-    applyInPandasWithState operator over the same at-least-once replay
-    — the parity that licenses preferring the built-in where its
-    event-time-bounded retention fits (UDF state channels are the slow
-    path). The replay's re-deliveries are all inside the watermark
-    horizon, so both ops must drop every duplicate."""
-    from prueba_tecnica_analista_etl_spark.session import (
-        ensure_runtime_conf,
-    )
-    from prueba_tecnica_analista_etl_spark.streaming.replay import (
-        replay_as_stream,
-        write_overlapping_replay,
-    )
-    from prueba_tecnica_analista_etl_spark.streaming.stateful import (
-        dedupe_stream_native,
-    )
-    from prueba_tecnica_analista_etl_spark.streaming.windows import (
-        run_available_now,
-    )
-
-    data_dir, schema = write_overlapping_replay(spark, sf_dir, "events")
-    s = ensure_runtime_conf(spark.newSession())
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    stream = replay_as_stream(s, data_dir, schema, 1).select(
-        "event_id", "user_id", "ts"
-    )
-    native = run_available_now(
-        dedupe_stream_native(stream, within="365 days"), s
-    )
-
-    ev = load_table(spark, sf_dir, "events")
-    n = ev.count()
-    assert native.count() == n  # exactly once, same as the custom op
-    assert native.select("event_id").distinct().count() == n
-    custom_ids = {r[0] for r in ev.select("event_id").collect()}
-    assert {r["event_id"] for r in native.collect()} == custom_ids
 
 
 def test_cdc_apply_operator_semantics(spark):
@@ -1326,7 +1052,7 @@ def test_streaming_cdc_sink_applies_deletes(spark, sf_dir, tmp_path):
 
 
 def test_streaming_cdc_sink_first_batch_null_op(spark, tmp_path):
-    """ADVICE r7 regression: a NULL-op row arriving in the FIRST batch
+    """Regression: a NULL-op row arriving in the FIRST batch
     (target not born yet) must be kept as an upsert — the old
     `op != delete_value` filter evaluated NULL and silently dropped
     it, while the same row in any later batch survived via
@@ -1444,7 +1170,7 @@ def test_stream_cdc_apply_matches_batch_fold(spark, sf_dir):
 def test_out_of_order_replay_routes_late_rows_to_dlq(
     spark, sf_dir, tmp_path
 ):
-    """SCALE.md §3 made executable (r8 verdict task 7): a DISORDERED
+    """SCALE.md §3 made executable: a DISORDERED
     landing folder (arrival_order='shuffled' rotates the earliest
     range chunk to arrive LAST — a delayed upstream export landing
     after all its successors) under a tight watermark.
@@ -1530,7 +1256,7 @@ def test_out_of_order_replay_routes_late_rows_to_dlq(
 def test_run_available_now_cached_sink_resumes_incrementally(
     spark, sf_dir, tmp_path
 ):
-    """The cache_key path (r8 verdict tasks 3+4): the first invocation
+    """The cache_key path: the first invocation
     replays the landing dir into the persistent parquet sink; a second
     invocation RESUMES the checkpoint, finds no new source files, runs
     zero micro-batches — observable as the sink's file set not
@@ -1573,7 +1299,7 @@ def test_run_available_now_cached_sink_resumes_incrementally(
 def test_mg_stream_accumulator_matches_batch_heavy_hitters(
     spark, sf_dir, tmp_path
 ):
-    """Heavy hitters over a STREAM (r9 verdict task 6): each
+    """Heavy hitters over a STREAM: each
     micro-batch's per-partition Misra-Gries summaries fold into one
     capacity-bounded driver dict inside foreachBatch (the mergeable-
     summaries property across batches — the same foreachBatch-
@@ -1646,7 +1372,7 @@ def test_mg_stream_accumulator_matches_batch_heavy_hitters(
 
 
 def test_mg_stream_accumulator_failed_batch_can_retry(spark):
-    """The ledger discipline (self-review r10): a batch that FAILS
+    """The ledger discipline: a batch that FAILS
     mid-processing must not be marked seen — the checkpoint replays
     it, and the retry must merge its mass (marking before the work
     silently skipped the replay, voiding the superset guarantee).
@@ -1675,7 +1401,7 @@ def test_mg_stream_accumulator_failed_batch_can_retry(spark):
 
 
 def test_mg_stream_ledger_survives_kill_restart(spark, sf_dir, tmp_path):
-    """Durable sketch ledger (r10 verdict task 4): the in-memory
+    """Durable sketch ledger: the in-memory
     seen-set was enough for availableNow replays WITHIN a run, but a
     restarted stream re-delivers its uncommitted batch — and a fresh
     accumulator instance has lost both the seen-set and the folded
