@@ -17,7 +17,7 @@ the cheap, deterministic alternative to full connected components
 (one survivor per transitive family).
 
 Each stage is one shuffle; nothing collects to the driver except the
-audit counts (``observe``-style, after the fact).
+audit counts, which are plain ``count()`` actions on the stage frames.
 """
 
 from __future__ import annotations

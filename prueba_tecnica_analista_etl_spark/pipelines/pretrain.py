@@ -1,14 +1,14 @@
-"""End-to-end pretraining-data run — the flagship COMPOSITION
-(r12 verdict task 8): every stage a serious LLM-pretraining data
-pipeline runs, chained over the ``documents`` corpus as one auditable
-unit with conservation invariants enforced at the seams.
+"""End-to-end pretraining-data run — the flagship COMPOSITION: every
+stage a serious LLM-pretraining data pipeline runs, chained over the
+``documents`` corpus as one auditable unit with conservation
+invariants enforced at the seams.
 
     quality gate → exact dedup → near-dup purge      (pipelines.corpus)
     → semantic (SemDeDup) purge                      (q_semdedup's
                                                       cluster-then-purge
-                                                      labels; r14 tier —
-                                                      skipped when the
-                                                      corpus ships no
+                                                      labels; skipped
+                                                      when the corpus
+                                                      ships no
                                                       embeddings table)
     → benchmark holdout + 4-gram decontamination     (q_decontaminate's
                                                       broadcast semi-join)
@@ -26,8 +26,7 @@ invariants:
   exact-dedup + dropped-by-near-dup + dropped-by-semdedup +
   benchmark-held + contamination-flagged + kept, and kept = train +
   val + test. A stage that loses or duplicates rows cannot pass
-  silently; each dedup tier is one more conservation term (r13
-  verdict task 6).
+  silently; each dedup tier is one more conservation term.
 * **token conservation** — train tokens as counted going INTO the
   export equal the shard manifest's token total coming OUT (and the
   pack plan's bin totals equal the same number), so the artifact a
@@ -42,6 +41,15 @@ one broadcast semi-join for decontamination (the benchmark gram set
 is census-sized), a map-only split assignment, one window for the
 pack plan, one hash-partition write for the shards. Counts are
 census-sized aggregates. Nothing collects row data to the driver.
+Until the corpus is large, the run's cost is the fixed cost of many
+small jobs paid one after another, with most cores idle. So the two
+stages that read only the raw corpus — the SemDeDup labels (off
+``embeddings``) and the span census (off ``documents``) — build on
+two worker threads while curation runs, their jobs under the caller's
+job group. Neither changes what the run computes: ``semantic_purge``
+waits on the artifact store's per-key build lock for the labels and
+then reads them from the session memo, so each artifact is still
+built once.
 
 Reference lineage: the reference's notebook pipeline (read → clean →
 dedup → classify → export, ``ETL_Prueba_Tecnica.ipynb:44-116``) is
@@ -52,7 +60,9 @@ are its 100 TB-shaped descendant.
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -133,6 +143,12 @@ def decontaminate(
     return kept, bench_held, flagged
 
 
+def _has_embeddings(sf_dir: str) -> bool:
+    """Whether the corpus ships the ``embeddings`` table the SemDeDup
+    tier reads."""
+    return os.path.exists(os.path.join(sf_dir, "embeddings.parquet"))
+
+
 def semantic_purge(
     spark: SparkSession, sf_dir: str, survivors: DataFrame
 ) -> tuple[DataFrame, int | None]:
@@ -143,12 +159,14 @@ def semantic_purge(
     The harness corpus's ``embeddings`` table indexes a doc subset by
     id (vec_id == doc_id), so the purge is one anti-join of the
     survivor set against the O(purged) label frame — the labels are a
-    staged per-corpus artifact (semdedup_labels), already built once
-    for q_semdedup.  A corpus that ships no embeddings table skips the
-    tier (returns ``n_purged=None``) rather than failing the whole
-    run — substring/semantic tiers are additive, not preconditions."""
-    emb = os.path.join(sf_dir, "embeddings.parquet")
-    if not os.path.exists(emb):
+    staged per-corpus artifact (semdedup_labels), shared with
+    q_semdedup. ``pretrain_run`` prefetches them while curation runs,
+    so here the call waits for that build, if still in flight, and
+    then hits the session memo. A corpus that ships no embeddings
+    table skips the tier (returns ``n_purged=None``) rather than
+    failing the whole run — substring/semantic tiers are additive,
+    not preconditions."""
+    if not _has_embeddings(sf_dir):
         return survivors, None
     from prueba_tecnica_analista_etl_spark.plans.extensions_scale import (
         semdedup_labels,
@@ -167,7 +185,9 @@ def semantic_purge(
 def _span_signal(spark: SparkSession, sf_dir: str) -> dict:
     """Corpus-wide totals of q_dup_spans' per-source census — the
     memorized-span advisory the run report carries alongside the
-    conservation ledger."""
+    conservation ledger. It reads only ``documents``, so
+    ``pretrain_run`` prefetches it on a worker thread while curation
+    runs."""
     from prueba_tecnica_analista_etl_spark.plans.extensions_pipeline import (
         q_dup_spans,
     )
@@ -224,89 +244,112 @@ def pretrain_run(
     Raises ``ValueError`` naming the broken invariant if any stage
     loses/duplicates docs or the exported manifest's totals do not
     reconcile with the curation ledger."""
+    from prueba_tecnica_analista_etl_spark.plans import extensions_scale
     from prueba_tecnica_analista_etl_spark.plans.queries import _t
 
-    docs = _t(spark, sf_dir, "documents")
-    survivors, curate_stats = curate_corpus(
-        spark, sf_dir, min_tokens=min_tokens
-    )
-    # One checkpoint at the curation frontier: every downstream stage
-    # (decontaminate, split, pack, export) re-consumes the survivor
-    # set several times; without truncation each count would re-run
-    # the gate window and the pair purge.
-    survivors = survivors.localCheckpoint()
+    # The SemDeDup labels and the span census read only the raw
+    # corpus, so they build while curation runs. Each task is wrapped
+    # here, on the caller's thread, so its jobs carry the caller's job
+    # group, description and tags; one wrap per task gives each worker
+    # its own copy of the local properties, which Spark mutates per
+    # query. Leaving the block waits for both tasks, so no worker
+    # outlives the call.
+    with ThreadPoolExecutor(max_workers=2) as pool:
 
-    # Semantic tier (r14): one more conservation term. The purge set
-    # is O(semantic dups) rows off the staged semdedup_labels
-    # artifact; the anti-join below is re-derived by downstream
-    # consumers from the checkpointed survivors, so no extra
-    # checkpoint is needed.
-    survivors, semdedup_purged = semantic_purge(spark, sf_dir, survivors)
+        def prefetch(fn):
+            task = inheritable_thread_target(spark)(fn)
+            return pool.submit(task, spark, sf_dir)
 
-    kept, bench_held, flagged = decontaminate(
-        docs, survivors, min_hits=contam_min_hits
-    )
-    kept = kept.select(
-        "doc_id", "source", "text", _tok_count().alias("n_tok")
-    ).withColumn("split", _split_col())
-    kept = kept.localCheckpoint()
-
-    split_census = {
-        r["split"]: (r["docs"], r["tokens"])
-        for r in kept.groupBy("split")
-        .agg(
-            F.count(F.lit(1)).alias("docs"),
-            F.sum("n_tok").alias("tokens"),
+        labels = (
+            prefetch(extensions_scale.semdedup_labels)
+            if _has_embeddings(sf_dir)
+            else None
         )
-        .collect()
-    }
-    train = kept.filter(F.col("split") == "train")
-    plan = pack_plan(train, ctx_tokens=ctx_tokens)
-    pack_census = plan.agg(
-        F.count(F.lit(1)).alias("bins"),
-        F.sum("docs").alias("docs"),
-        F.sum("tokens").alias("tokens"),
-    ).collect()[0]
+        span_signal = prefetch(_span_signal)
 
-    shard_dir = os.path.join(out_dir, "train_shards")
-    manifest = export_training_shards(
-        train.select("doc_id", "source", "text", "n_tok"),
-        shard_dir,
-        key_col="doc_id",
-        n_shards=n_shards,
-        token_col="n_tok",
-    )
-    verify_training_shards(spark, shard_dir)
+        docs = _t(spark, sf_dir, "documents")
+        survivors, curate_stats = curate_corpus(
+            spark, sf_dir, min_tokens=min_tokens
+        )
+        # One checkpoint at the curation frontier: every downstream stage
+        # (decontaminate, split, pack, export) re-consumes the survivor
+        # set several times; without truncation each count would re-run
+        # the gate window and the pair purge.
+        survivors = survivors.localCheckpoint()
 
-    ledger = {
-        **curate_stats,
-        "semdedup_purged": semdedup_purged,
-        "bench_held": bench_held.count(),
-        "contam_flagged": flagged.count(),
-        "kept": kept.count(),
-        "splits": {
-            s: {"docs": d, "tokens": t}
-            for s, (d, t) in sorted(split_census.items())
-        },
-        "pack": {
-            "bins": int(pack_census["bins"]),
-            "docs": int(pack_census["docs"]),
-            "tokens": int(pack_census["tokens"]),
-            "ctx_tokens": ctx_tokens,
-        },
-        "export": {
-            "shards": len(manifest),
-            "rows": sum(m["rows"] for m in manifest.values()),
-            "tokens": sum(m["tokens"] for m in manifest.values()),
-            "path": shard_dir,
-        },
-        # Substring-level signal (r14): the duplicate-span census
-        # joins the ledger as an ADVISORY metric — a span census
-        # flags memorized runs for review; it does not own a purge
-        # decision, so it is NOT a conservation term. All-integer,
-        # deterministic, off the staged doc_spans artifact.
-        "dup_span_signal": _span_signal(spark, sf_dir),
-    }
+        # Semantic tier: one more conservation term. The purge set is
+        # O(semantic dups) rows off the staged semdedup_labels
+        # artifact; the anti-join below is re-derived by downstream
+        # consumers from the checkpointed survivors, so no extra
+        # checkpoint is needed.
+        survivors, semdedup_purged = semantic_purge(spark, sf_dir, survivors)
+        if labels is not None:
+            labels.result()  # a failed prefetch fails the run, as inline
+
+        kept, bench_held, flagged = decontaminate(
+            docs, survivors, min_hits=contam_min_hits
+        )
+        kept = kept.select(
+            "doc_id", "source", "text", _tok_count().alias("n_tok")
+        ).withColumn("split", _split_col())
+        kept = kept.localCheckpoint()
+
+        split_census = {
+            r["split"]: (r["docs"], r["tokens"])
+            for r in kept.groupBy("split")
+            .agg(
+                F.count(F.lit(1)).alias("docs"),
+                F.sum("n_tok").alias("tokens"),
+            )
+            .collect()
+        }
+        train = kept.filter(F.col("split") == "train")
+        plan = pack_plan(train, ctx_tokens=ctx_tokens)
+        pack_census = plan.agg(
+            F.count(F.lit(1)).alias("bins"),
+            F.sum("docs").alias("docs"),
+            F.sum("tokens").alias("tokens"),
+        ).collect()[0]
+
+        shard_dir = os.path.join(out_dir, "train_shards")
+        manifest = export_training_shards(
+            train.select("doc_id", "source", "text", "n_tok"),
+            shard_dir,
+            key_col="doc_id",
+            n_shards=n_shards,
+            token_col="n_tok",
+        )
+        verify_training_shards(spark, shard_dir)
+
+        ledger = {
+            **curate_stats,
+            "semdedup_purged": semdedup_purged,
+            "bench_held": bench_held.count(),
+            "contam_flagged": flagged.count(),
+            "kept": kept.count(),
+            "splits": {
+                s: {"docs": d, "tokens": t}
+                for s, (d, t) in sorted(split_census.items())
+            },
+            "pack": {
+                "bins": int(pack_census["bins"]),
+                "docs": int(pack_census["docs"]),
+                "tokens": int(pack_census["tokens"]),
+                "ctx_tokens": ctx_tokens,
+            },
+            "export": {
+                "shards": len(manifest),
+                "rows": sum(m["rows"] for m in manifest.values()),
+                "tokens": sum(m["tokens"] for m in manifest.values()),
+                "path": shard_dir,
+            },
+            # Substring-level signal: the duplicate-span census joins
+            # the ledger as an ADVISORY metric — a span census flags
+            # memorized runs for inspection; it does not own a purge
+            # decision, so it is NOT a conservation term. All-integer,
+            # deterministic, off the staged doc_spans artifact.
+            "dup_span_signal": span_signal.result(),
+        }
 
     errors = []
     if ledger["after_near_dup"] != (

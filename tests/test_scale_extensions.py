@@ -1984,6 +1984,96 @@ def test_pretrain_run_conservation_and_determinism(spark, sf_dir, tmp_path):
     assert a == b
 
 
+def test_pretrain_run_prefetch_overlaps_curation_in_callers_group(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The SemDeDup labels build on a worker thread that starts before
+    curation returns, and every job the run launches, the worker's
+    included, carries the caller's job group."""
+    import threading
+    import time
+
+    from prueba_tecnica_analista_etl_spark.pipelines import pretrain
+    from prueba_tecnica_analista_etl_spark.plans import extensions_scale
+
+    caller = threading.get_ident()
+    labels_calls, curate_returns = [], []
+    labels_fn = extensions_scale.semdedup_labels
+    curate_fn = pretrain.curate_corpus
+
+    def labels(*args, **kwargs):
+        labels_calls.append((threading.get_ident(), time.perf_counter()))
+        return labels_fn(*args, **kwargs)
+
+    def curate(*args, **kwargs):
+        out = curate_fn(*args, **kwargs)
+        curate_returns.append(time.perf_counter())
+        return out
+
+    monkeypatch.setattr(extensions_scale, "semdedup_labels", labels)
+    monkeypatch.setattr(pretrain, "curate_corpus", curate)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("pretrain-test", "pretrain_run prefetch test")
+    try:
+        ledger = pretrain.pretrain_run(
+            spark, sf_dir, str(tmp_path / "run"), n_shards=4
+        )
+    finally:
+        for key in ("jobGroup.id", "job.description", "job.interruptOnCancel"):
+            sc.setLocalProperty(f"spark.{key}", None)
+    assert ledger["invariants_ok"]
+    assert len(curate_returns) == 1
+    early = [
+        t0
+        for ident, t0 in labels_calls
+        if ident != caller and t0 < curate_returns[0]
+    ]
+    assert len(early) == 1, labels_calls
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
+    assert tracker.getJobIdsForGroup("pretrain-test")
+
+
+def test_pretrain_run_prefetch_failure_propagates(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A failing prefetch task fails the run with its own error, rather
+    than hanging or returning a ledger, and leaves no worker behind."""
+    import threading
+
+    from prueba_tecnica_analista_etl_spark.pipelines import pretrain
+
+    def broken(spark, sf_dir):
+        raise RuntimeError("span census failed")
+
+    monkeypatch.setattr(pretrain, "_span_signal", broken)
+    before = set(threading.enumerate())
+    outcome = {}
+
+    def run():
+        try:
+            outcome["ledger"] = pretrain.pretrain_run(
+                spark, sf_dir, str(tmp_path / "run"), n_shards=4
+            )
+        except Exception as exc:
+            outcome["error"] = exc
+
+    runner = threading.Thread(target=run, daemon=True)
+    runner.start()
+    runner.join(timeout=600)
+    assert not runner.is_alive(), "pretrain_run hung"
+    assert "ledger" not in outcome
+    assert isinstance(outcome.get("error"), RuntimeError)
+    assert "span census failed" in str(outcome["error"])
+    workers = [
+        t
+        for t in threading.enumerate()
+        if t not in before and t.name.startswith("ThreadPoolExecutor")
+    ]
+    assert workers == []
+
+
 # ---------------------------------------------------------------------------
 # SemDeDup (q_semdedup) and duplicate-span census (q_dup_spans)
 # ---------------------------------------------------------------------------
