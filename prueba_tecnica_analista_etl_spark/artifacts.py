@@ -1,11 +1,37 @@
-"""Per-corpus staged artifacts: built once per corpus, reused by every
-query, run and process until the corpus or the engine changes.
+"""How directories change on disk, and the per-corpus artifact store
+built on it.
 
-Curation pipelines share intermediates (the candidate-pair frame, the
-trained IVF quantizer, per-doc score frames, census values) that are
-pure functions of a corpus. Rebuilding them per consumer or per process
-would dominate the small queries that read them, so this module is the
-one store for them, in three shapes:
+Every directory the engine rewrites goes through three functions here,
+so "a rewrite leaves the old copy or the new copy, never neither" is
+implemented once:
+
+* :func:`publish` ``(final, fill)`` creates a new immutable directory:
+  ``fill`` populates a private staging dir, which is renamed to
+  ``final``. A writer that loses the rename race discards its copy and
+  keeps the winner's.
+* :func:`replace` ``(live, staged)`` swaps a fully written staging dir
+  (from :func:`staging`) in for ``live``: the live dir is renamed
+  aside, the staged one renamed in, then the aside copy is deleted. A
+  file (a pointer) is renamed over its live copy in one step.
+* :func:`recover` ``(path)`` runs before a rewrite: it restores a live
+  dir stranded aside by a crash and deletes stale staging and aside
+  entries, for ``path`` and for the entries directly inside it.
+
+Staging and aside entries are named ``.<name>.staging-<id>`` and
+``.<name>.aside-<id>`` beside ``<name>``. The dot prefix makes Spark's
+path filter skip them, so a swap inside a partitioned table root is
+never discovered as a bogus partition.
+
+The same three functions keep the corpus fingerprint memo honest:
+each one drops the memo for any corpus containing what it changed, so
+no engine write can hide inside the memo's TTL. Invalidation is part
+of the write, not a step callers must remember.
+
+The store. Curation pipelines share intermediates (the candidate-pair
+frame, the trained IVF quantizer, per-doc score frames, census values)
+that are pure functions of a corpus. Rebuilding them per consumer or
+per process would dominate the small queries that read them, so this
+module is the one store for them, in three shapes:
 
 * :func:`corpus_artifact` — DataFrames, persisted as parquet plus a
   schema sidecar (so empty frames and exact types round-trip);
@@ -18,9 +44,7 @@ All three go through one path, :func:`_build_once`: the session memo,
 then disk, then ``build()`` — run at most once per key across threads,
 because a per-key lock makes concurrent consumers wait for the first
 builder instead of paying the build twice. Across processes only the
-publish is atomic: each generation is written into a private tmp dir
-and renamed into place, so a reader never sees a half-written artifact
-and a writer that loses the rename race discards its copy.
+publish is atomic, so a reader never sees a half-written artifact.
 
 Keying is what makes silent staleness impossible. A generation lives
 at ``<root>/<corpus-tag>/<name>-<gen>/``, where ``gen`` folds together
@@ -31,8 +55,8 @@ at ``<root>/<corpus-tag>/<name>-<gen>/``, where ``gen`` folds together
   different engine code misses — no hand-kept version to forget.
 
 When a generation lands, its superseded siblings (older fingerprints,
-older engine code, orphaned tmp dirs) are removed; tags whose corpus
-directory vanished are swept once per process. Two checkouts of
+older engine code, orphaned staging dirs) are removed; tags whose
+corpus directory vanished are swept once per process. Two checkouts of
 different code sharing one root therefore rebuild after each other
 rather than serve each other's artifacts.
 
@@ -106,8 +130,8 @@ BUILD_SECONDS: dict[str, float] = {}
 
 # The walk+stat is O(files) per lookup, and one bench pass issues
 # hundreds of lookups against an unchanging corpus, so the fingerprint
-# is memoized briefly. Corpus-writing helpers call invalidate_corpus
-# after each write, so the window never spans the engine's own writes.
+# is memoized briefly. publish/replace/recover drop it as part of every
+# write, so the window never spans the engine's own writes.
 _FP_TTL_S = 2.0
 _FP_MEMO: dict[str, tuple[float, int]] = {}
 
@@ -138,10 +162,9 @@ def _corpus_fingerprint(sf_dir: str) -> int:
     return crc
 
 
-def invalidate_corpus(path: str) -> None:
+def _invalidate_corpus(path: str) -> None:
     """Drop the fingerprint memo for any corpus containing, equal to or
-    contained in ``path``. Every helper that writes into a directory
-    tree calls this, so the next lookup re-walks and misses."""
+    contained in ``path``, so the next lookup re-walks and misses."""
     ap = os.path.abspath(path)
     with _LOCK:
         for k in [
@@ -229,26 +252,40 @@ def _mark_corpus(tag_dir: str, sf_dir: str) -> None:
 def _evict_superseded_disk(final: str) -> None:
     """Remove older generations of the same artifact: siblings sharing
     the name prefix but a different generation suffix, plus any
-    orphaned ``.tmp-*`` from a crashed writer."""
+    orphaned staging dir of one from a crashed writer."""
     parent, base = os.path.split(final)
-    prefix = base.rsplit("-", 1)[0] + "-"
+    gen = re.escape(base.rsplit("-", 1)[0]) + "-[0-9a-f]{8}"
     try:
         names = os.listdir(parent)
     except OSError:
         return
     for n in names:
-        if n == base or not n.startswith(prefix):
-            continue
-        if re.fullmatch(re.escape(prefix) + r"[0-9a-f]{8}(\.tmp-.*)?", n):
+        if n != base and re.fullmatch(rf"{gen}|\.{gen}\.staging-\w+", n):
             shutil.rmtree(os.path.join(parent, n), ignore_errors=True)
 
 
-def _publish(final: str, fill: Callable[[str], None]) -> bool:
-    """Populate a private tmp dir with ``fill(tmp)``, rename it to
-    ``final`` and evict superseded generations. A lost rename race
-    discards the tmp and keeps the winner's copy. Returns True iff
-    ``final`` exists afterwards; errors from ``fill`` propagate."""
-    tmp = f"{final}.tmp-{uuid.uuid4().hex[:8]}"
+# ------------------------------------------------------ directory swaps
+
+_SIDE = re.compile(r"\.(.+)\.(staging|aside)-\w+")
+
+
+def _beside(path: str, kind: str) -> str:
+    parent, name = os.path.split(os.path.normpath(path))
+    return os.path.join(parent, f".{name}.{kind}-{uuid.uuid4().hex[:8]}")
+
+
+def staging(path: str) -> str:
+    """A fresh staging path beside ``path`` for :func:`replace`: hidden
+    from Spark's path filter and swept by :func:`recover`."""
+    return _beside(path, "staging")
+
+
+def publish(final: str, fill: Callable[[str], None]) -> bool:
+    """Populate a fresh staging dir with ``fill(tmp)`` and rename it to
+    ``final``. A lost rename race discards the staging dir and keeps
+    the winner's copy. Returns True iff ``final`` exists afterwards;
+    errors from ``fill`` propagate."""
+    tmp = staging(final)
     os.makedirs(tmp)
     try:
         fill(tmp)
@@ -259,10 +296,56 @@ def _publish(final: str, fill: Callable[[str], None]) -> bool:
         os.rename(tmp, final)
     except OSError:
         shutil.rmtree(tmp, ignore_errors=True)
-    if not os.path.isdir(final):
-        return False
-    _evict_superseded_disk(final)
-    return True
+    _invalidate_corpus(final)
+    return os.path.isdir(final)
+
+
+def replace(live: str, staged: str) -> None:
+    """Swap ``staged`` in for ``live`` (which may not exist yet). A
+    directory cannot be renamed over a non-empty one, so the live dir
+    is renamed aside first and deleted only after the staged one is in:
+    a crash at any point leaves the live or the aside copy, which
+    :func:`recover` restores. A file is renamed over ``live`` in one
+    atomic step."""
+    try:
+        if os.path.isdir(staged) and os.path.exists(live):
+            aside = _beside(live, "aside")
+            os.rename(live, aside)
+            os.rename(staged, live)
+            shutil.rmtree(aside)
+        else:
+            os.replace(staged, live)
+    finally:
+        _invalidate_corpus(live)
+
+
+def recover(path: str) -> None:
+    """Undo what a crashed :func:`publish` or :func:`replace` left at
+    ``path`` or directly inside it: restore a live entry that is missing
+    but has an aside copy, and delete every other staging and aside
+    entry. Call before rewriting ``path``, under the same single-writer
+    discipline as the rewrite itself. Also drops the fingerprint memo
+    for ``path``, so deletes made under it just before are seen."""
+    path = os.path.normpath(path)
+    parent, name = os.path.split(path)
+    # path's own entries first: a restored path is then listed below
+    for d, own in ((parent or ".", name), (path, None)):
+        try:
+            names = sorted(os.listdir(d))
+        except OSError:
+            continue
+        for n in names:
+            m = _SIDE.fullmatch(n)
+            if m is None or own not in (None, m.group(1)):
+                continue
+            side, live = os.path.join(d, n), os.path.join(d, m.group(1))
+            if m.group(2) == "aside" and not os.path.exists(live):
+                os.rename(side, live)
+            elif os.path.isdir(side):
+                shutil.rmtree(side, ignore_errors=True)
+            else:
+                os.unlink(side)
+    _invalidate_corpus(path)
 
 
 # ---------------------------------------------------------- build once
@@ -302,6 +385,8 @@ def _build_once(
                 t0 = time.perf_counter()
                 value = make(path)
                 dt = time.perf_counter() - t0
+                if os.path.isdir(path):
+                    _evict_superseded_disk(path)
                 with _LOCK:
                     BUILD_SECONDS[stem] = BUILD_SECONDS.get(stem, 0.0) + dt
             memo[slot] = (path, value)
@@ -346,7 +431,7 @@ def corpus_artifact(
                 fh.write(built.schema.json())
 
         try:
-            served = read(path) if _publish(path, fill) else _MISS
+            served = read(path) if publish(path, fill) else _MISS
         except Exception:  # the frame cannot round-trip parquet
             served = _MISS
         return built.localCheckpoint() if served is _MISS else served
@@ -383,7 +468,7 @@ def census_artifact(
                 pickle.dump(value, fh)
 
         try:
-            _publish(path, fill)
+            publish(path, fill)
         except Exception:  # unpicklable: served from the memo only
             pass
         return value
@@ -406,7 +491,7 @@ def artifact_directory(
         return path if os.path.isdir(path) else _MISS
 
     def make(path: str) -> str:
-        if not _publish(path, build):
+        if not publish(path, build):
             raise OSError(f"artifact publish failed: {path}")
         return path
 

@@ -227,7 +227,7 @@ def ivf_search_index(
         F.col("cluster").isin(probes)
     )
     if exclude_id is not None:
-        # Null-safe (ADVICE r14): `!=` drops NULL-id index rows only
+        # Null-safe: `!=` drops NULL-id index rows only
         # when exclude_id is set — inconsistent behavior keyed on an
         # unrelated parameter; eqNullSafe keeps them either way.
         idx = idx.filter(~F.col(id_col).eqNullSafe(F.lit(exclude_id)))
@@ -243,7 +243,7 @@ def ivf_search_index(
 
 
 # ---------------------------------------------------------------------------
-# Index maintenance (r14): incremental adds, drift detection, rebalance
+# Index maintenance: incremental adds, drift detection, rebalance
 # ---------------------------------------------------------------------------
 
 STATS = "stats"
@@ -395,33 +395,31 @@ def ivf_rebalance(
     """Re-fit the quantizer on the CURRENT index contents and rewrite
     the layout — the action ``ivf_drift_census``'s trigger recommends.
 
-    Crash-safe by the rename-aside protocol (the bucketed_upsert
-    ordering applied to directories): the new index is built whole at
-    ``{path}__rebuild``, the live index is moved aside, the rebuild is
-    promoted, and only then is the old index deleted — at every
-    interruption point a complete index exists on disk (recover by
-    renaming whichever of ``{path}``/``{path}__rebuild``/
-    ``{path}__old`` survives; the sidecar schema + model make any of
-    them self-contained). Returns the new centroid model."""
-    import shutil
+    Crash-safe: the new index is built whole in a staging dir and
+    swapped in with ``artifacts.replace``, so at every interruption
+    point a complete index (old or new) exists on disk;
+    ``artifacts.recover`` restores it on the next rebalance. The
+    sidecar schema + model make either one self-contained. Returns the
+    new centroid model."""
+    from prueba_tecnica_analista_etl_spark.artifacts import (
+        recover,
+        replace,
+        staging,
+    )
 
-    rebuild = f"{path}__rebuild"
-    old = f"{path}__old"
+    recover(path)
     live = _read_data(spark, path).select(
         F.col(id_col), F.col("vector").alias("embedding")
     )
     # localCheckpoint: the rebuild's fit + assignment must read the
     # CURRENT files, not re-list the directory mid-swap.
     live = live.localCheckpoint()
-    shutil.rmtree(rebuild, ignore_errors=True)
+    staged = staging(path)
     # ivf_write_index snapshots the drift baseline itself — no second
     # stats pass here.
     C = ivf_write_index(
-        live, rebuild, k=k, iters=iters, id_col=id_col,
+        live, staged, k=k, iters=iters, id_col=id_col,
         vec_col="embedding",
     )
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(path, old)
-    os.rename(rebuild, path)
-    shutil.rmtree(old)
+    replace(path, staged)
     return C

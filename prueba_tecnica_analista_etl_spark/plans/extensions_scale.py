@@ -22,7 +22,6 @@ from __future__ import annotations
 
 import os
 import random
-import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -58,6 +57,7 @@ from prueba_tecnica_analista_etl_spark.streaming.stateful import (
     dedupe_stream,
 )
 from prueba_tecnica_analista_etl_spark.streaming.windows import (
+    drain_available_now,
     run_available_now,
     sessionize,
 )
@@ -143,16 +143,6 @@ def _sql_chunk(part: str, seed: str, id_col: str, cap: int = BUCKET_CAP) -> str:
         f"(row_number() OVER (PARTITION BY {part} "
         f"ORDER BY {h}, {id_col}) - 1) // {cap}"
     )
-
-# CDC streaming sink: one persistent (target, checkpoint) pair per
-# corpus GENERATION, rooted inside the landing-dir artifact — the
-# run_available_now state_dir discipline (streaming/windows.py)
-# applied to the foreachBatch upsert sink. The in-process run lock
-# serializes same-process re-runs; the on-disk flock serializes
-# cross-process resumes of the shared checkpoint.
-_CDC_LOCK = threading.Lock()
-_CDC_RUN_LOCKS: dict[str, threading.Lock] = {}
-
 
 def capped_pair_array(
     docs_col,
@@ -1214,7 +1204,7 @@ def cached_ivf_index(
     so the in-plan ``ann_ivf`` tier and the index share one model and
     their cluster ids are comparable. Staged through
     ``artifact_directory``, inheriting the store's per-key BUILD LOCK
-    (concurrent consumers never double-write the index), tmp-then-rename
+    (concurrent consumers never double-write the index), its atomic
     publish, superseded-generation removal (no leaked temp-dir copies),
     and corpus-fingerprint keying: a regenerated corpus rebuilds instead
     of serving a stale index."""
@@ -1976,6 +1966,7 @@ def q_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_replay_files,
     )
     from prueba_tecnica_analista_etl_spark.streaming.upsert_sink import (
+        DATA,
         foreach_batch_upsert,
     )
 
@@ -1997,12 +1988,8 @@ def q_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             "value",
         )
     )
-    from prueba_tecnica_analista_etl_spark.streaming.upsert_sink import (
-        DATA,
-    )
-
     # Persistent target + checkpoint per (query, corpus-generation),
-    # the run_available_now state_dir discipline (windows.py): rooted
+    # drained by windows.drain_available_now: rooted
     # INSIDE the landing-dir artifact, so the first invocation EVER
     # (per corpus) replays the change log; every later one — including
     # a fresh process — RESUMES the checkpoint, finds no new files,
@@ -2012,35 +1999,22 @@ def q_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     # its artifact dir. The result is the LAZY batch read of the
     # materialized target, never a driver collect: at 100 TB consumers
     # scan the upsert target exactly like this.
-    from prueba_tecnica_analista_etl_spark.streaming.windows import (
-        _cross_process_lock,
-    )
-
     state_root = os.path.join(
         os.path.dirname(data_dir), "_sinks", "q_stream_cdc_apply"
     )
-    os.makedirs(state_root, exist_ok=True)
     target = os.path.join(state_root, "target")
-    ckpt = os.path.join(state_root, "ckpt")
-    with _CDC_LOCK:
-        run_lock = _CDC_RUN_LOCKS.setdefault(state_root, threading.Lock())
-    with run_lock, _cross_process_lock(os.path.join(state_root, ".lock")):
-        q = (
-            stream.writeStream.foreachBatch(
-                foreach_batch_upsert(
-                    s,
-                    target,
-                    ["user_id"],
-                    op_col="op",
-                    cdc_order=[F.desc("ts"), F.desc("event_id")],
-                )
+    drain_available_now(
+        stream.writeStream.foreachBatch(
+            foreach_batch_upsert(
+                s,
+                target,
+                ["user_id"],
+                op_col="op",
+                cdc_order=[F.desc("ts"), F.desc("event_id")],
             )
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        ).outputMode("update"),
+        state_root,
+    )
     return spark.read.parquet(os.path.join(target, DATA)).select(
         "user_id", "event_id", "value"
     )
@@ -2111,7 +2085,7 @@ def _stream_neardup_oracle_sql(
     "applies the greedy min-id survivor rule within each batch — "
     "the feed-curation twin of the at-rest q_corpus_curate purge. "
     "Accepted index = append-only parquet, one dir per committed "
-    "batch (tmp-then-rename = idempotency ledger; replays are "
+    "batch (published once = idempotency ledger; replays are "
     "no-ops), split into keys (doc_id, band, key) and docs (doc_id, "
     "hs) frames so the shingle-hash array is stored once per doc, "
     "not once per band. Candidates are UNCAPPED within a bucket — a "
@@ -2131,10 +2105,6 @@ def q_stream_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from prueba_tecnica_analista_etl_spark.streaming.neardup import (
         accepted_ids,
         foreach_batch_neardup_gate,
-        sweep_orphan_tmps,
-    )
-    from prueba_tecnica_analista_etl_spark.streaming.windows import (
-        _cross_process_lock,
     )
 
     data_dir, schema = write_replay_files(
@@ -2145,37 +2115,25 @@ def q_stream_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     state_root = os.path.join(
         os.path.dirname(data_dir), "_sinks", "q_stream_neardup"
     )
-    os.makedirs(state_root, exist_ok=True)
     index_dir = os.path.join(state_root, "index")
-    ckpt = os.path.join(state_root, "ckpt")
-    with _CDC_LOCK:
-        run_lock = _CDC_RUN_LOCKS.setdefault(state_root, threading.Lock())
-    with run_lock, _cross_process_lock(os.path.join(state_root, ".lock")):
-        sweep_orphan_tmps(index_dir)
-        stream = replay_as_stream(
-            s, data_dir, schema, max_files_per_trigger=2
-        ).select("doc_id", "text")
-        q = (
-            stream.writeStream.foreachBatch(
-                foreach_batch_neardup_gate(
-                    index_dir,
-                    band_frame=minhash_band_frame,
-                    # cap=None: the gate is exhaustive within a
-                    # bucket (see the module/oracle notes); one
-                    # threshold governs probe AND intra-batch purge
-                    pairs_from_bands=lambda banded, thr: (
-                        pairs_from_band_frame(
-                            banded, threshold=thr, cap=None
-                        )
-                    ),
-                )
+    stream = replay_as_stream(
+        s, data_dir, schema, max_files_per_trigger=2
+    ).select("doc_id", "text")
+    drain_available_now(
+        stream.writeStream.foreachBatch(
+            foreach_batch_neardup_gate(
+                index_dir,
+                band_frame=minhash_band_frame,
+                # cap=None: the gate is exhaustive within a bucket (see
+                # the module/oracle notes); one threshold governs probe
+                # AND intra-batch purge
+                pairs_from_bands=lambda banded, thr: (
+                    pairs_from_band_frame(banded, threshold=thr, cap=None)
+                ),
             )
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        ).outputMode("update"),
+        state_root,
+    )
     return _t(spark, sf_dir, "documents").join(
         accepted_ids(spark, index_dir), "doc_id", "left_semi"
     ).select("doc_id", "lang")

@@ -24,9 +24,10 @@ Design for 100 TB:
   (:func:`verify_training_shards`).
 * **One job writes everything**: ``partitionBy(shard_id)`` emits every
   shard in a single pass; the manifest is a second, O(shards)
-  aggregate over the same frame. ``tmp-then-rename`` makes the export
-  atomic-enough: a crashed export leaves a ``._tmp`` dir, never a
-  half-valid manifest next to live data.
+  aggregate over the same frame. The export is staged and swapped in
+  with ``artifacts.replace``: a crash leaves the previous export or
+  the new one (``artifacts.recover`` restores it on the next export),
+  never a half-valid manifest next to live data.
 """
 
 from __future__ import annotations
@@ -38,6 +39,12 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from prueba_tecnica_analista_etl_spark.artifacts import (
+    recover,
+    replace,
+    staging,
+)
 
 MANIFEST = "_manifest"
 DATA = "data"
@@ -146,21 +153,19 @@ def export_training_shards(
             n_shards, F.col(SHARD_COL)
         ).sortWithinPartitions(SHARD_COL, order_col)
 
-    tmp = path + "._tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    sharded.write.partitionBy(SHARD_COL).mode("overwrite").parquet(
-        os.path.join(tmp, DATA)
-    )
-    # Empty-input guard (ADVICE r7): a zero-row frame writes no
-    # shard_id=* dirs, and reading the empty data dir back fails
-    # schema inference mid-export. Detect it from the WRITTEN FILES
-    # (free — one listdir, no extra lineage run), clean up the tmp
-    # dir, and fail with intent.
+    recover(path)
+    staged = staging(path)
+    sharded.write.partitionBy(SHARD_COL).parquet(os.path.join(staged, DATA))
+    # Empty-input guard: a zero-row frame writes no shard_id=* dirs,
+    # and reading the empty data dir back fails schema inference
+    # mid-export. Detect it from the WRITTEN FILES (free — one
+    # listdir, no extra lineage run), clean up the staging dir, and
+    # fail with intent.
     if not any(
         e.startswith(f"{SHARD_COL}=")
-        for e in os.listdir(os.path.join(tmp, DATA))
+        for e in os.listdir(os.path.join(staged, DATA))
     ):
-        shutil.rmtree(tmp, ignore_errors=True)
+        shutil.rmtree(staged, ignore_errors=True)
         raise ValueError(
             "refusing to export an empty frame: zero-row input "
             "writes no part files and cannot produce a valid "
@@ -176,7 +181,7 @@ def export_training_shards(
     # freshly-written compact parquet is one cheap scan and runs the
     # SAME _shard_stats verify_training_shards will later recompute.
     spark = df.sparkSession
-    written = spark.read.parquet(os.path.join(tmp, DATA))
+    written = spark.read.parquet(os.path.join(staged, DATA))
     stats = _shard_stats(written, token_col)
     cols = ["shard_id", "rows"] + (
         ["tokens"] if token_col is not None else []
@@ -202,17 +207,9 @@ def export_training_shards(
         F.lit(CHECKSUM_ALGO),
     ).write.mode(
         "overwrite"
-    ).parquet(os.path.join(tmp, MANIFEST))
+    ).parquet(os.path.join(staged, MANIFEST))
 
-    # atomic-enough swap: the live dir appears only fully written
-    shutil.rmtree(path, ignore_errors=True)
-    os.rename(tmp, path)
-    from prueba_tecnica_analista_etl_spark.artifacts import (
-        invalidate_corpus,
-    )
-
-    invalidate_corpus(path)  # rewrite must not hide inside the TTL memo
-
+    replace(path, staged)
     return stats
 
 
@@ -251,9 +248,8 @@ def verify_training_shards(
         # real tampering. algo=None is NOT a mismatch: manifests
         # written before the algo marker existed used the identical
         # sum-xxhash64-mod-p63 fold, so their checksums verify
-        # bit-for-bit (ADVICE r8: refusing them would force a
-        # re-export of every pre-marker shard set for no content
-        # reason).
+        # bit-for-bit (refusing them would force a re-export of every
+        # pre-marker shard set for no content reason).
         return {
             -1: (
                 f"manifest checksum algo {algo!r} is not the supported "

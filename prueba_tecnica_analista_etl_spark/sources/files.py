@@ -82,18 +82,12 @@ def compact_parquet(
     input files are wildly skewed and a straggler output file would
     recreate the problem.
 
-    The rewrite is crash-safe via the upsert sink's swap discipline:
-    write to ``<path>._tmp_compact``, rename the live dir aside,
-    rename the tmp in, delete the old — every crash point leaves
-    either the old or the new dir recoverable by ``_recover`` (shared
-    with the streaming sink, which uses the same suffix convention).
-    The swap dirs are SIBLINGS of ``path`` — safe for a standalone
-    table dir, but NEVER call this directly on a leaf inside a
-    partitioned table root (``.../data/day=X``): the siblings would
-    land inside the table root, contain ``=``, and be discovered as
-    bogus partitions by concurrent readers. Use
-    :func:`compact_partitioned` there — it swaps through dot-prefixed
-    dirs Spark's path filter ignores.
+    The rewrite is staged beside ``path`` and swapped in with
+    ``artifacts.replace``; ``artifacts.recover`` runs first, so a
+    crashed earlier compaction is restored or swept. The staging and
+    aside dirs are dot-prefixed, so this is also safe on a leaf inside
+    a partitioned table root: Spark's path filter never discovers them
+    as partitions.
 
     SINGLE-WRITER DISCIPLINE: never run while a writer (streaming sink,
     merge job) is active on ``path``. The compactor snapshots the file
@@ -107,12 +101,13 @@ def compact_parquet(
     import math
     import os
 
-    from prueba_tecnica_analista_etl_spark.streaming.upsert_sink import (
-        _recover,
-        _swap_in,
+    from prueba_tecnica_analista_etl_spark.artifacts import (
+        recover,
+        replace,
+        staging,
     )
 
-    _recover(path)
+    recover(path)
     part_dirs = [
         e.name
         for e in os.scandir(path)
@@ -135,43 +130,14 @@ def compact_parquet(
     n_files = max(1, math.ceil(total / target_bytes))
     df = spark.read.parquet(path)
     df = df.repartition(n_files) if balance else df.coalesce(n_files)
-    tmp = path + "._tmp_compact"
-    df.write.mode("overwrite").parquet(tmp)
-    _swap_in(path, tmp, "compact")
-    from prueba_tecnica_analista_etl_spark.artifacts import (
-        invalidate_corpus,
-    )
-
-    invalidate_corpus(path)  # rewrite must not hide inside the TTL memo
+    staged = staging(path)
+    df.write.parquet(staged)
+    replace(path, staged)
     return sum(
         1
         for e in os.scandir(path)
         if e.is_file() and e.name.endswith(".parquet")
     )
-
-
-_CMP_TMP = ".cmp_tmp_"
-_CMP_OLD = ".cmp_old_"
-
-
-def _recover_compaction(data_path: str) -> None:
-    """Sweep a partitioned table root for leftovers of a crashed
-    leaf-compaction pass. A ``.cmp_old_<leaf>`` whose live leaf is
-    missing (crash between rename-aside and rename-in) IS the data —
-    restore it; one whose leaf exists is a stale copy of a completed
-    swap — remove it. ``.cmp_tmp_*`` write dirs are always stale."""
-    import os
-    import shutil
-
-    for e in sorted(os.scandir(data_path), key=lambda x: x.name):
-        if e.name.startswith(_CMP_OLD):
-            live = os.path.join(data_path, e.name[len(_CMP_OLD):])
-            if os.path.exists(live):
-                shutil.rmtree(e.path, ignore_errors=True)
-            else:
-                os.rename(e.path, live)
-        elif e.name.startswith(_CMP_TMP):
-            shutil.rmtree(e.path, ignore_errors=True)
 
 
 def compact_partitioned(
@@ -194,58 +160,35 @@ def compact_partitioned(
     never merged across, and each leaf swaps independently, so a crash
     mid-pass leaves every partition either old or new, never mixed.
 
-    Swap hygiene, distinct from :func:`compact_parquet`: the tmp and
-    rename-aside dirs live INSIDE the table root, so they use
-    dot-prefixed names (``.cmp_tmp_day=X`` / ``.cmp_old_day=X``) that
-    Spark's path filter ignores — a concurrent reader of the table
-    never discovers them as bogus partitions, and the entry sweep
-    (:func:`_recover_compaction`) restores a leaf stranded mid-swap
-    before the dir scan can misread it as data.
+    Each leaf is rewritten by :func:`compact_parquet`. The entry
+    ``artifacts.recover`` restores a leaf stranded mid-swap by a crash
+    before the leaf scan can miss it.
 
     SINGLE-WRITER DISCIPLINE: same as :func:`compact_parquet` — never
     run concurrently with an active writer on the same leaves; a merge
     committing between the leaf snapshot and its swap would be lost.
     Run in the sink's idle window.
     """
-    import math
     import os
-    import shutil
+
+    from prueba_tecnica_analista_etl_spark.artifacts import recover
 
     done: dict[str, int] = {}
+    recover(data_path)
     if not os.path.isdir(data_path):
         return done
-    _recover_compaction(data_path)
     for e in sorted(os.scandir(data_path), key=lambda x: x.name):
         if not e.is_dir() or "=" not in e.name or e.name.startswith("."):
             continue
-        files = [
-            f
-            for f in os.scandir(e.path)
-            if f.is_file() and f.name.endswith(".parquet")
-        ]
-        if len(files) < min_files:
-            continue
-        total = sum(f.stat().st_size for f in files)
-        n_files = max(1, math.ceil(total / target_bytes))
-        df = spark.read.parquet(e.path)
-        df = df.repartition(n_files) if balance else df.coalesce(n_files)
-        tmp = os.path.join(data_path, _CMP_TMP + e.name)
-        df.write.mode("overwrite").parquet(tmp)
-        old = os.path.join(data_path, _CMP_OLD + e.name)
-        os.rename(e.path, old)
-        os.rename(tmp, e.path)
-        shutil.rmtree(old, ignore_errors=True)
-        done[e.name] = sum(
+        n_parts = sum(
             1
             for f in os.scandir(e.path)
             if f.is_file() and f.name.endswith(".parquet")
         )
-    if done:
-        from prueba_tecnica_analista_etl_spark.artifacts import (
-            invalidate_corpus,
-        )
-
-        invalidate_corpus(data_path)
+        if n_parts >= min_files:
+            done[e.name] = compact_parquet(
+                spark, e.path, target_bytes, balance
+            )
     return done
 
 
@@ -295,6 +238,8 @@ def zorder_write(
     parquet writer. The min/max scaling scan collects 2 scalars per
     column to the driver — O(|cols|), data never moves. NULLs in a
     z-column sort to z-position 0 (coalesced to the column minimum).
+    The layout is staged and swapped in with ``artifacts.replace``, so
+    an existing ``path`` stays whole until the new one lands.
     """
     from pyspark.sql import functions as F
 
@@ -334,15 +279,18 @@ def zorder_write(
     while zcol in df.columns:
         zcol += "_"
     zed = df.withColumn(zcol, zvalue(scaled, bits_per_col))
+    from prueba_tecnica_analista_etl_spark.artifacts import (
+        recover,
+        replace,
+        staging,
+    )
+
+    recover(path)
+    staged = staging(path)
     (
         zed.repartitionByRange(n_files, zcol)
         .sortWithinPartitions(zcol)
         .drop(zcol)
-        .write.mode("overwrite")
-        .parquet(path)
+        .write.parquet(staged)
     )
-    from prueba_tecnica_analista_etl_spark.artifacts import (
-        invalidate_corpus,
-    )
-
-    invalidate_corpus(path)  # rewrite must not hide inside the TTL memo
+    replace(path, staged)

@@ -1,11 +1,11 @@
 """Versioned snapshot table — a minimal, metastore-free slice of the
-lakehouse contract (Delta/Iceberg's time-travel surface) built on the
-same atomic-swap discipline the streaming sink proved:
+lakehouse contract (Delta/Iceberg's time-travel surface) built on
+``artifacts.publish``/``replace``, the engine's one swap protocol:
 
-* every commit writes a NEW immutable snapshot directory
-  (``v{n:08d}/``) and then publishes it by atomically renaming a
-  one-line pointer file into ``_latest`` — readers never see a
-  half-written snapshot, writers never mutate a published one;
+* every commit publishes a NEW immutable snapshot directory
+  (``v{n:08d}/``) and then swaps a one-line pointer file in as
+  ``_latest`` — readers never see a half-written snapshot or a torn
+  pointer, writers never mutate a published one;
 * reads resolve ``_latest`` (or an explicit ``version=``) to a
   snapshot dir — time travel is just reading an older pointer target,
   and the data files themselves are plain parquet any engine can scan;
@@ -36,9 +36,15 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
+
+from prueba_tecnica_analista_etl_spark.artifacts import (
+    publish,
+    recover,
+    replace,
+    staging,
+)
 
 LATEST = "_latest"
 
@@ -56,33 +62,19 @@ def _read_pointer(table: str) -> int | None:
 
 
 def _publish_pointer(table: str, version: int) -> None:
-    """Atomically repoint ``_latest``: write a temp file in the same
-    directory, then ``os.rename`` over the pointer — POSIX renames
-    within a filesystem are atomic, so a concurrent reader sees the
-    old version or the new one, never a torn pointer."""
-    fd, tmp = tempfile.mkstemp(dir=table, prefix="._latest_")
-    try:
-        with os.fdopen(fd, "w") as fh:
-            fh.write(str(version))
-            # fsync before rename: on delayed-allocation filesystems
-            # the rename metadata can reach disk before the data
-            # blocks, and a crash then publishes a ZERO-LENGTH
-            # pointer — the torn state this module promises away.
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.rename(tmp, os.path.join(table, LATEST))
-    finally:
-        if os.path.exists(tmp):
-            os.unlink(tmp)
-    # Every publish mutates the table tree: drop the fingerprint TTL
-    # memo for any corpus containing it, so a memoized artifact can
-    # never be served across this write (r10 ADVICE — the TTL window
-    # must not span a rewrite).
-    from prueba_tecnica_analista_etl_spark.artifacts import (
-        invalidate_corpus,
-    )
-
-    invalidate_corpus(table)
+    """Repoint ``_latest``: a staged pointer file is renamed over it, so
+    a concurrent reader sees the old version or the new one, never a
+    torn pointer."""
+    pointer = os.path.join(table, LATEST)
+    staged = staging(pointer)
+    with open(staged, "w") as fh:
+        fh.write(str(version))
+        # fsync before rename: on delayed-allocation filesystems the
+        # rename metadata can reach disk before the data blocks, and a
+        # crash then publishes a ZERO-LENGTH pointer.
+        fh.flush()
+        os.fsync(fh.fileno())
+    replace(pointer, staged)
 
 
 def list_versions(table: str) -> list[int]:
@@ -107,23 +99,22 @@ def commit_snapshot(df: DataFrame, table: str) -> int:
     """Write ``df`` as the next snapshot version and publish it.
     Returns the committed version number.
 
-    Crash safety: the snapshot writes under a ``._tmp`` name and
-    renames into its ``v{n}`` slot before the pointer moves, so every
-    failure mode leaves either the old published version (pointer
-    untouched) or a stray unpublished dir (cleaned by the next commit
-    attempt) — never a published half-snapshot.
+    Crash safety: the snapshot is published into its ``v{n}`` slot
+    before the pointer moves, so every failure mode leaves the old
+    published version (pointer untouched), plus at most a stray
+    staging dir that the next commit's ``artifacts.recover`` sweeps —
+    never a published half-snapshot.
     """
     os.makedirs(table, exist_ok=True)
+    recover(table)
     cur = _read_pointer(table)
     version = (
         max([cur if cur is not None else -1] + list_versions(table)) + 1
     )
-    final = _version_dir(table, version)
-    tmp = final + "._tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    shutil.rmtree(final, ignore_errors=True)  # stray unpublished dir
-    df.write.parquet(tmp)
-    os.rename(tmp, final)
+    publish(
+        _version_dir(table, version),
+        lambda tmp: df.write.mode("overwrite").parquet(tmp),
+    )
     _publish_pointer(table, version)
     return version
 
@@ -154,12 +145,12 @@ def rollback(table: str, version: int) -> int:
     src = _version_dir(table, version)
     if not os.path.isdir(src):
         raise FileNotFoundError(f"{table}: version {version} not on disk")
+    recover(table)
     new_version = max(list_versions(table)) + 1
-    final = _version_dir(table, new_version)
-    tmp = final + "._tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    shutil.copytree(src, tmp)
-    os.rename(tmp, final)
+    publish(
+        _version_dir(table, new_version),
+        lambda tmp: shutil.copytree(src, tmp, dirs_exist_ok=True),
+    )
     _publish_pointer(table, new_version)
     return new_version
 
@@ -184,10 +175,6 @@ def vacuum(table: str, keep: int = 2) -> list[int]:
         # silently-readable snapshot survives on disk.
         if not os.path.isdir(d):
             removed.append(v)
-    if removed:
-        from prueba_tecnica_analista_etl_spark.artifacts import (
-            invalidate_corpus,
-        )
-
-        invalidate_corpus(table)
+    # also sweeps stale staging dirs, and drops the fingerprint memo
+    recover(table)
     return removed

@@ -25,8 +25,8 @@ false-positive rate, not dup-family mass.
 State design (the 100 TB shape):
 
 * The accepted index is a parquet directory with one subdirectory
-  per committed micro-batch, published tmp-then-rename, so the batch
-  id doubles as the idempotency ledger: a replayed batch finds its
+  per committed micro-batch, created with ``artifacts.publish``, so
+  the batch id doubles as the idempotency ledger: a replayed batch finds its
   directory — or a generation covering its id — and is a no-op (the
   ``_etl_control`` discipline without a side table). Each unit holds
   TWO frames — ``keys/`` = (doc_id, band, key) and ``docs/`` =
@@ -34,10 +34,10 @@ State design (the 100 TB shape):
   not once per band, and the (band, key) probe shuffles only ids and
   band keys. Once the unit count exceeds ``COMPACT_MAX_UNITS`` the
   gate FOLDS them into one ``gen-{newest batch id}`` directory
-  (``compact_index``, r12): probe cost and file listing stay bounded
+  (``compact_index``): probe cost and file listing stay bounded
   over a long-running stream instead of growing one dir pair per
   batch. Each unit's ``keys/`` is PARTITIONED by ``kb =
-  pmod(xxhash64(band, key), KB_BUCKETS)`` (r13): the probe pushes its
+  pmod(xxhash64(band, key), KB_BUCKETS)``: the probe pushes its
   own kb values as a literal partition filter, so probing a huge
   at-rest index reads only the buckets the micro-batch can match.
 * Per-batch work: ONE banded-signature pass over the batch (the
@@ -64,26 +64,24 @@ from __future__ import annotations
 
 import os
 import shutil
-import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from prueba_tecnica_analista_etl_spark.artifacts import publish, recover
 from prueba_tecnica_analista_etl_spark.functions.text import jaccard
 
 # Fold loose batch-* dirs into a consolidated gen-* directory once the
-# live unit count exceeds this (r11 verdict: the append-only index
-# grew one directory pair per committed batch, so per-batch probe cost
-# and file listing grew O(batches) — the small-files class
+# live unit count exceeds this: an append-only index grows one
+# directory pair per committed batch, so per-batch probe cost and file
+# listing would grow O(batches) — the small-files class
 # sources/files.py solves for tables at rest, applied to the gate's
-# index). 16 units ≈ the probe reads at most 15 batch dirs + the
+# index. 16 units ≈ the probe reads at most 15 batch dirs + the
 # newest generation between folds.
 COMPACT_MAX_UNITS = 16
 
-# Probe-side index layout (r12 verdict task 6 — the docstring's "at
-# scale keys/ would additionally be bucketed by the band key",
-# promoted to code): every unit's ``keys/`` frame is written
+# Probe-side index layout: every unit's ``keys/`` frame is written
 # partitioned by ``kb = pmod(xxhash64(band, key), KB_BUCKETS)``, and
 # the probe pushes the micro-batch's OWN kb values as a literal
 # partition filter — so a probe over a huge at-rest index reads only
@@ -155,8 +153,7 @@ def _committed(index_dir: str) -> list[str]:
     return sorted(
         os.path.join(index_dir, n)
         for n in os.listdir(index_dir)
-        if (n.startswith("batch-") or n.startswith("gen-"))
-        and ".tmp-" not in n
+        if n.startswith(("batch-", "gen-"))
     )
 
 
@@ -168,7 +165,7 @@ def _max_gen_id(index_dir: str) -> int:
     best = -1
     if os.path.isdir(index_dir):
         for n in os.listdir(index_dir):
-            if n.startswith("gen-") and ".tmp-" not in n:
+            if n.startswith("gen-"):
                 best = max(best, int(n.split("-")[1]))
     return best
 
@@ -184,7 +181,7 @@ def _is_committed(index_dir: str, batch_id: int) -> bool:
 
 def _fold_units(spark, index_dir: str, units: "list[str]") -> bool:
     """Consolidate ``units`` (batch and/or gen dirs) into ONE new
-    generation under the tmp-then-rename discipline. The target name
+    generation with ``artifacts.publish``. The target name
     is ``gen-{max covered batch id:09d}-{seq}`` with ``seq`` one past
     any existing generation's sequence for that id, so the new dir
     NEVER collides with a unit being folded — the rename lands FIRST
@@ -199,7 +196,7 @@ def _fold_units(spark, index_dir: str, units: "list[str]") -> bool:
     gen_id = max(ids)
     # seq is one past ANY existing generation's sequence for the
     # target id — across the whole index dir, not just the folded
-    # units (r12 ADVICE): after a crash between the gen rename and
+    # units: after a crash between the gen rename and
     # the folded dirs' removal, a retried fold of the same batches
     # would otherwise re-target the already-existing gen-{id}-{seq},
     # pay the full rewrite, fail the rename, and repeat that waste on
@@ -209,12 +206,7 @@ def _fold_units(spark, index_dir: str, units: "list[str]") -> bool:
     max_seq = 0
     for n in os.listdir(index_dir):
         parts = n.split("-")
-        if (
-            parts[0] == "gen"
-            and ".tmp-" not in n
-            and len(parts) > 2
-            and int(parts[1]) == gen_id
-        ):
+        if parts[0] == "gen" and len(parts) > 2 and int(parts[1]) == gen_id:
             max_seq = max(max_seq, int(parts[2]))
     target = os.path.join(index_dir, f"gen-{gen_id:09d}-{max_seq + 1}")
     keys = read_index_keys(spark, units)
@@ -223,21 +215,20 @@ def _fold_units(spark, index_dir: str, units: "list[str]") -> bool:
     docs = spark.read.parquet(
         *[os.path.join(u, "docs") for u in units]
     ).dropDuplicates(["doc_id"])
-    tmp = f"{target}.tmp-{uuid.uuid4().hex[:8]}"
-    if keys is None:
-        # every folded unit was keys-empty: keep the invariant that a
-        # unit HAS a keys dir (layout 'empty' — readers skip it)
-        os.makedirs(os.path.join(tmp, "keys"), exist_ok=True)
-    else:
-        # folds heal pre-kb plain units into the partitioned layout
-        keys.withColumn("kb", _kb_col()).write.mode(
-            "overwrite"
-        ).partitionBy("kb").parquet(os.path.join(tmp, "keys"))
-    docs.write.mode("overwrite").parquet(os.path.join(tmp, "docs"))
-    try:
-        os.rename(tmp, target)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
+
+    def fill(tmp: str) -> None:
+        if keys is None:
+            # every folded unit was keys-empty: keep the invariant that
+            # a unit HAS a keys dir (layout 'empty' — readers skip it)
+            os.makedirs(os.path.join(tmp, "keys"))
+        else:
+            # folds heal pre-kb plain units into the partitioned layout
+            keys.withColumn("kb", _kb_col()).write.partitionBy(
+                "kb"
+            ).parquet(os.path.join(tmp, "keys"))
+        docs.write.parquet(os.path.join(tmp, "docs"))
+
+    if not publish(target, fill):
         return False
     for u in units:
         shutil.rmtree(u, ignore_errors=True)
@@ -260,9 +251,8 @@ def compact_index(
     max_units: int = COMPACT_MAX_UNITS,
     max_gens: int = COMPACT_MAX_GENS,
 ) -> bool:
-    """TIERED index compaction — same tmp-then-rename recovery
-    discipline as the per-batch commits and
-    ``sources.files.compact_parquet``.
+    """TIERED index compaction: each fold is one ``artifacts.publish``,
+    like the per-batch commits.
 
     Tier 1: once the live unit count exceeds ``max_units``, fold the
     LOOSE batch dirs into one new generation (rewrites only those
@@ -305,21 +295,6 @@ def compact_index(
     return did
 
 
-def sweep_orphan_tmps(index_dir: str) -> None:
-    """Remove ``batch-*.tmp-*`` leftovers from a writer that crashed
-    between the parquet write and the rename — they are never read
-    (listings exclude them) but would otherwise accumulate dead data
-    inside the long-lived per-corpus index. Call under the same lock
-    that serializes drains (a live writer's tmp must not be swept)."""
-    if not os.path.isdir(index_dir):
-        return
-    for n in os.listdir(index_dir):
-        if (
-            n.startswith("batch-") or n.startswith("gen-")
-        ) and ".tmp-" in n:
-            shutil.rmtree(os.path.join(index_dir, n), ignore_errors=True)
-
-
 def foreach_batch_neardup_gate(
     index_dir: str,
     band_frame: Callable[[DataFrame], DataFrame],
@@ -343,6 +318,9 @@ def foreach_batch_neardup_gate(
         accept_dir = os.path.join(index_dir, f"batch-{batch_id:09d}")
         if _is_committed(index_dir, batch_id):
             return  # replayed batch: already committed — fixpoint
+        # staging dirs of a writer that crashed mid-commit are never
+        # read, but would accumulate dead data in the long-lived index
+        recover(index_dir)
         s = batch.sparkSession
         # ONE signature pass per batch: the checkpointed banded frame
         # feeds the probe join, the intra-batch pair derivation, and
@@ -350,7 +328,7 @@ def foreach_batch_neardup_gate(
         # subtree would re-run per consumer). Unpersisted in the
         # finally below — a long-running stream would otherwise
         # accumulate one checkpointed RDD's executor storage per
-        # micro-batch until driver GC got around to it (r11 ADVICE).
+        # micro-batch until driver GC got around to it.
         banded = band_frame(batch).localCheckpoint()
         try:
             _gate_one_batch(s, banded, accept_dir)
@@ -436,21 +414,18 @@ def foreach_batch_neardup_gate(
         accepted = banded.join(
             survivors.select("doc_id"), "doc_id", "left_semi"
         )
-        tmp = f"{accept_dir}.tmp-{uuid.uuid4().hex[:8]}"
-        accepted.select("doc_id", "band", "key").withColumn(
-            "kb", _kb_col()
-        ).write.mode("overwrite").partitionBy("kb").parquet(
-            os.path.join(tmp, "keys")
-        )
-        accepted.select("doc_id", "hs").dropDuplicates(
-            ["doc_id"]
-        ).write.mode("overwrite").parquet(os.path.join(tmp, "docs"))
-        try:
-            os.rename(tmp, accept_dir)
-        except OSError:
-            # lost a publish race (another resume of the same
-            # checkpoint): the winner's commit stands
-            shutil.rmtree(tmp, ignore_errors=True)
+
+        def fill(tmp: str) -> None:
+            accepted.select("doc_id", "band", "key").withColumn(
+                "kb", _kb_col()
+            ).write.partitionBy("kb").parquet(os.path.join(tmp, "keys"))
+            accepted.select("doc_id", "hs").dropDuplicates(
+                ["doc_id"]
+            ).write.parquet(os.path.join(tmp, "docs"))
+
+        # a lost publish race (another resume of the same checkpoint)
+        # keeps the winner's commit
+        publish(accept_dir, fill)
 
     return apply
 
@@ -464,9 +439,9 @@ def accepted_ids(
     ``snapshot=True`` (default) ``localCheckpoint``s the frame before
     returning, so it stays valid even if a LATER drain's tiered
     compaction folds and removes the unit directories the scan
-    referenced (r12 ADVICE: the lazy form handed callers a
-    use-after-free-style contract — a held frame turned into
-    FileNotFound at action time once a fold ran). The accepted set is
+    referenced (the lazy form would hand callers a use-after-free
+    contract: a held frame turns into FileNotFound at action time once
+    a fold runs). The accepted set is
     one id column, so the eager materialization is cheap at any
     corpus size the driver sees; pass ``snapshot=False`` to get the
     raw lazy union scan ONLY when consuming it before the next drain

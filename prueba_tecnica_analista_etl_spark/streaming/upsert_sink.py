@@ -2,9 +2,11 @@
 staging→UPSERT procedure per micro-batch, via ``foreachBatch``.
 
 Each micro-batch is merged into a parquet target with the J4
-join-rewrite, written to a temp path and atomically swapped (the
-metastore-free equivalent of the reference's re-runnable DROP+ADD
-idempotency). An ``etl_control`` ledger records (batch_id, estado,
+join-rewrite, written to a staging dir and swapped in with
+``artifacts.replace`` (the metastore-free equivalent of the
+reference's re-runnable DROP+ADD idempotency: every crash point leaves
+the old or the new target, which ``artifacts.recover`` restores before
+the next merge decision). An ``etl_control`` ledger records (batch_id, estado,
 filas) per batch — reference design ``nb:372``/``nb:356`` — and makes
 replays idempotent: an already-recorded batchId is skipped, so
 at-least-once delivery becomes effectively-once in the sink.
@@ -30,6 +32,11 @@ from typing import TypeVar
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from prueba_tecnica_analista_etl_spark.artifacts import (
+    recover,
+    replace,
+    staging,
+)
 from prueba_tecnica_analista_etl_spark.operators.dedupe import keep_first
 from prueba_tecnica_analista_etl_spark.operators.quality import split_rejects
 from prueba_tecnica_analista_etl_spark.operators.upsert import (
@@ -76,50 +83,6 @@ def _paths(target: str) -> tuple[str, str, str]:
         os.path.join(target, CONTROL),
         os.path.join(target, REJECTS),
     )
-
-
-def _swap_in(data_path: str, tmp: str, batch_id: int) -> None:
-    """Atomic-enough directory swap: rename the live dir ASIDE, rename
-    the fully-written tmp dir into place, then delete the old dir.
-
-    Order matters — the old ``rmtree(data) → rename(tmp, data)`` had a
-    crash window with NO live dir and no ledger entry, so a replayed
-    batch took the first-batch path and silently rebuilt the target
-    from one micro-batch. Here every crash point leaves either the old
-    dir or the new dir recoverable (see :func:`_recover`).
-    """
-    old = data_path + f"._old_{batch_id}"
-    if os.path.exists(data_path):
-        os.rename(data_path, old)
-    os.rename(tmp, data_path)
-    if os.path.exists(old):
-        shutil.rmtree(old)
-
-
-def _recover(data_path: str) -> None:
-    """Crash recovery, run before every merge decision.
-
-    - live dir present: any ``._old_*`` (crash after rename-in, before
-      delete) and ``._tmp_*`` (crash before swap) leftovers are stale —
-      remove them.
-    - live dir missing but a ``._old_*`` survives (crash between
-      rename-aside and rename-in): restore it — it IS the accumulated
-      base, and without this the replay would rebuild from one batch.
-    """
-    parent = os.path.dirname(data_path) or "."
-    base = os.path.basename(data_path)
-    leftovers = sorted(
-        n
-        for n in (os.listdir(parent) if os.path.isdir(parent) else [])
-        if n.startswith(base + "._old_") or n.startswith(base + "._tmp_")
-    )
-    if not os.path.exists(data_path):
-        olds = [n for n in leftovers if "._old_" in n]
-        if olds:
-            os.rename(os.path.join(parent, olds[-1]), data_path)
-            leftovers = [n for n in leftovers if n != olds[-1]]
-    for n in leftovers:
-        shutil.rmtree(os.path.join(parent, n), ignore_errors=True)
 
 
 def _write_rejects(rejected: DataFrame, rej_path: str, batch_id: int) -> None:
@@ -243,7 +206,7 @@ def foreach_batch_upsert(
                         _write_rejects(rejected, rej_path, batch_id)
                 batch = batch.dropDuplicates(list(keys))
 
-            _recover(data_path)
+            recover(data_path)
             if os.path.exists(data_path):
                 base = spark.read.parquet(data_path)
                 if op_col is not None:
@@ -272,10 +235,10 @@ def foreach_batch_upsert(
                 merged = batch
 
             # write-then-swap: the target is never half-written and
-            # never lost (rename-aside, rename-in, delete — _swap_in)
-            tmp = data_path + f"._tmp_{batch_id}"
-            merged.write.mode("overwrite").parquet(tmp)
-            _swap_in(data_path, tmp, batch_id)
+            # never lost
+            staged = staging(data_path)
+            merged.write.parquet(staged)
+            replace(data_path, staged)
 
             # metadata-only count (parquet footers), not a data scan
             n = spark.read.parquet(data_path).count()
@@ -287,26 +250,6 @@ def foreach_batch_upsert(
             src.unpersist()
 
     return process
-
-
-def _recover_partitioned(data_path: str, target: str) -> None:
-    """Partitioned-target crash recovery: a ``._old_<id>`` root holds
-    partition dirs renamed aside mid-swap. Any of them missing from the
-    live tree (crash between rename-aside and rename-in) is restored;
-    the rest are stale copies of dirs whose replacement landed. Stale
-    ``._tmp_*`` write dirs are removed."""
-    if not os.path.isdir(target):
-        return
-    for n in sorted(os.listdir(target)):
-        p = os.path.join(target, n)
-        if n.startswith("._old_"):
-            for d in os.listdir(p):
-                live = os.path.join(data_path, d)
-                if not os.path.exists(live):
-                    os.rename(os.path.join(p, d), live)
-            shutil.rmtree(p, ignore_errors=True)
-        elif n.startswith(os.path.basename(data_path) + "._tmp_"):
-            shutil.rmtree(p, ignore_errors=True)
 
 
 def foreach_batch_upsert_partitioned(
@@ -321,9 +264,10 @@ def foreach_batch_upsert_partitioned(
     The target is laid out as ``data/{partition_col}={v}/…`` and each
     micro-batch rewrites ONLY the partitions its keys fall in: the base
     is read partition-pruned to the batch's partition values, merged
-    with the J4 join-rewrite, written to a tmp dir, and the touched
-    partition dirs are swapped in one by one (rename-aside → rename-in
-    → delete, recoverable at every crash point). Untouched partitions'
+    with the J4 join-rewrite, written to a staging dir, and the touched
+    partition dirs are swapped in one by one with ``artifacts.replace``
+    (each leaf is old or new at every crash point; a replayed batch
+    re-merges idempotently). Untouched partitions'
     files are never opened, let alone rewritten — per-batch cost is
     O(|touched partitions| + |batch|), not O(|target|).
 
@@ -356,7 +300,7 @@ def foreach_batch_upsert_partitioned(
             # see the whole-target variant for the rationale
             batch = batch.dropDuplicates(list(keys))
 
-            _recover_partitioned(data_path, target)
+            recover(data_path)
             vals = [
                 r[0]
                 for r in batch.select(partition_col).distinct().collect()
@@ -386,26 +330,15 @@ def foreach_batch_upsert_partitioned(
             else:
                 merged = batch
 
-            tmp = data_path + f"._tmp_{batch_id}"
-            merged.write.partitionBy(partition_col).mode(
-                "overwrite"
-            ).parquet(tmp)
-
-            part_dirs = [
-                d
-                for d in os.listdir(tmp)
-                if d.startswith(f"{partition_col}=")
-            ]
-            old_root = os.path.join(target, f"._old_{batch_id}")
-            os.makedirs(old_root, exist_ok=True)
+            staged = staging(data_path)
+            merged.write.partitionBy(partition_col).parquet(staged)
             os.makedirs(data_path, exist_ok=True)
-            for d in sorted(part_dirs):
-                live = os.path.join(data_path, d)
-                if os.path.exists(live):
-                    os.rename(live, os.path.join(old_root, d))
-                os.rename(os.path.join(tmp, d), live)
-            shutil.rmtree(old_root, ignore_errors=True)
-            shutil.rmtree(tmp, ignore_errors=True)
+            for d in sorted(os.listdir(staged)):
+                if d.startswith(f"{partition_col}="):
+                    replace(
+                        os.path.join(data_path, d), os.path.join(staged, d)
+                    )
+            shutil.rmtree(staged, ignore_errors=True)
 
             n_slice = (
                 spark.read.option("basePath", data_path)

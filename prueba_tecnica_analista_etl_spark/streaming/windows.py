@@ -1,4 +1,5 @@
-"""Watermarked window aggregations (T2/T4) + availableNow runner.
+"""Watermarked window aggregations (T2/T4) + the availableNow drain
+every persistent stream query runs through.
 
 Tumbling windows mirror the batch ``q_tumbling_window`` exactly
 (batch/stream parity is asserted in tests); session windows use
@@ -18,6 +19,7 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 
 def tumbling_counts(
@@ -88,32 +90,19 @@ def sessionize(
     )
 
 
-# Persistent (per-process) parquet sink + checkpoint dirs for the
-# registry's streaming queries, keyed by the caller's cache_key. The
-# checkpoint makes every invocation after the first an INCREMENTAL
-# availableNow resume — the source offsets are committed, no new files
-# exist, zero micro-batches run — which is the production semantic of
-# an incremental pipeline (process only what arrived) and removes the
-# per-call full-replay + collect() the bench used to pay three times
-# over. /tmp holds ONE snapshot per key per process, bounded. The run
-# lock serializes re-runs per key: two live streaming queries sharing
-# a checkpoint dir is undefined behavior.
-_SINK_LOCK = threading.Lock()
-_SINK_DIRS: dict[tuple, tuple[str, str]] = {}
-_SINK_RUN_LOCKS: dict[tuple, threading.Lock] = {}
+# One run lock per state dir: two live streaming queries sharing a
+# checkpoint dir is undefined behavior.
+_RUN_LOCK = threading.Lock()
+_RUN_LOCKS: dict[str, threading.Lock] = {}
 
 
 @contextmanager
-def _cross_process_lock(path: str | None):
+def _cross_process_lock(path: str):
     """Advisory flock for persistent checkpoints shared ACROSS
-    processes (None → no-op, the per-process temp-sink path): two
-    concurrent availableNow resumes of one checkpoint is undefined
-    behavior, and a corrupted checkpoint would poison every future
-    resume. Blocking: the loser waits, then resumes a now-drained
-    checkpoint (zero micro-batches) — cheap and correct."""
-    if path is None:
-        yield
-        return
+    processes: two concurrent availableNow resumes of one checkpoint is
+    undefined behavior, and a corrupted checkpoint would poison every
+    future resume. Blocking: the loser waits, then resumes a
+    now-drained checkpoint (zero micro-batches) — cheap and correct."""
     import fcntl
 
     with open(path, "a") as fh:
@@ -124,80 +113,57 @@ def _cross_process_lock(path: str | None):
             fcntl.flock(fh, fcntl.LOCK_UN)
 
 
+def drain_available_now(writer: DataStreamWriter, state_dir: str) -> None:
+    """Run a configured ``writer`` to availableNow completion with its
+    checkpoint at ``<state_dir>/ckpt``. Runs on one ``state_dir`` are
+    serialized within the process by a run lock and across processes by
+    an ``flock`` on ``<state_dir>/.lock``, so a resume never races
+    another live query on the same checkpoint."""
+    os.makedirs(state_dir, exist_ok=True)
+    with _RUN_LOCK:
+        run_lock = _RUN_LOCKS.setdefault(state_dir, threading.Lock())
+    with run_lock, _cross_process_lock(os.path.join(state_dir, ".lock")):
+        writer.option(
+            "checkpointLocation", os.path.join(state_dir, "ckpt")
+        ).trigger(availableNow=True).start().awaitTermination()
+
+
 def run_available_now(
     sdf: DataFrame,
     spark: SparkSession,
-    cache_key: tuple | None = None,
     state_dir: str | None = None,
 ) -> DataFrame:
     """Run a streaming DataFrame to completion (availableNow) and
     return the result as a batch DataFrame.
 
-    With ``state_dir`` (the registry-query path, r11): append into a
-    PERSISTENT parquet file sink + checkpoint rooted at that directory
-    (T7 — the REAL resumable form) and return the LAZY batch read of
-    the sink; the read is exactly-once via the sink's
-    ``_spark_metadata`` log, and no ``collect()`` happens here at all.
-    Callers root it INSIDE the landing-dir artifact
-    (``<landing>/_sinks/<query>``), so the sink outlives the process —
-    a fresh process resumes the checkpoint, finds no new source files,
-    runs zero micro-batches and pays only the snapshot read (the
-    fresh-process replay was the r10 verdict's cost finding) — and
-    dies with its generation when the artifact store evicts a
-    superseded landing dir (no separate GC). Cross-process safety: an
-    ``flock`` around the run serializes two processes resuming the
-    same checkpoint (two live queries on one checkpoint is undefined
-    behavior); in-process re-runs share a run lock as before. At
-    100 TB this is precisely how the pipeline is consumed: readers
-    scan the sink table, they never pull a streaming result through
-    the driver.
+    With ``state_dir`` (the registry-query path): append into a
+    PERSISTENT parquet file sink at ``<state_dir>/out``, drained by
+    :func:`drain_available_now` (T7 — the REAL resumable form), and
+    return the LAZY batch read of the sink; the read is exactly-once
+    via the sink's ``_spark_metadata`` log, and no ``collect()``
+    happens here at all. Callers root it INSIDE the landing-dir
+    artifact (``<landing>/_sinks/<query>``), so the sink outlives the
+    process — a fresh process resumes the checkpoint, finds no new
+    source files, runs zero micro-batches and pays only the snapshot
+    read — and dies with its generation when the artifact store evicts
+    a superseded landing dir (no separate GC). At 100 TB this is
+    precisely how the pipeline is consumed: readers scan the sink
+    table, they never pull a streaming result through the driver.
 
-    ``cache_key`` (without ``state_dir``) keeps the pre-r11 semantic:
-    a per-process temp sink reused across invocations.
-
-    With neither (tests / ad-hoc): one-shot memory sink, eagerly
+    Without it (tests / ad-hoc): one-shot memory sink, eagerly
     materialized, then the sink table and checkpoint dir are freed —
     a memory sink pins its ENTIRE result in the driver for the life
-    of the session, so unkeyed repeated invocations would otherwise
+    of the session, so repeated invocations would otherwise
     accumulate every past result.
     """
-    if state_dir is not None or cache_key is not None:
-        if state_dir is not None:
-            os.makedirs(state_dir, exist_ok=True)
-            dirs = (
-                os.path.join(state_dir, "out"),
-                os.path.join(state_dir, "ckpt"),
-            )
-            lock_key: tuple = ("state_dir", state_dir)
-        else:
-            lock_key = cache_key
-        with _SINK_LOCK:
-            if state_dir is None:
-                dirs = _SINK_DIRS.get(cache_key)
-                if dirs is None:
-                    root = tempfile.mkdtemp(prefix="stream_sink_")
-                    dirs = (
-                        os.path.join(root, "out"),
-                        os.path.join(root, "ckpt"),
-                    )
-                    _SINK_DIRS[cache_key] = dirs
-            run_lock = _SINK_RUN_LOCKS.setdefault(
-                lock_key, threading.Lock()
-            )
-        out, ckpt = dirs
-        with run_lock:
-            with _cross_process_lock(
-                state_dir and os.path.join(state_dir, ".lock")
-            ):
-                q = (
-                    sdf.writeStream.format("parquet")
-                    .option("path", out)
-                    .outputMode("append")
-                    .option("checkpointLocation", ckpt)
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                q.awaitTermination()
+    if state_dir is not None:
+        out = os.path.join(state_dir, "out")
+        drain_available_now(
+            sdf.writeStream.format("parquet")
+            .option("path", out)
+            .outputMode("append"),
+            state_dir,
+        )
         # Empty-sink guard: a run that committed ZERO output rows (e.g.
         # every window still open at the final watermark) leaves only
         # _spark_metadata in the sink, schema inference fails — and

@@ -19,7 +19,7 @@ def pytest_configure(config):
     """Point the disk-backed artifact store at a per-run scratch root,
     so the suite starts from an empty store and does not pollute the
     user cache with tmp-corpus artifacts. The store's own logic
-    (generation keying, tmp-then-rename, generation eviction) still
+    (generation keying, atomic publish, generation eviction) still
     runs for real."""
     if "PTAE_ARTIFACT_DIR" not in os.environ:
         import atexit

@@ -702,12 +702,12 @@ def test_corpus_fingerprint_memo_collapses_walks(tmp_path, monkeypatch):
 
 
 def test_corpus_writers_drop_fingerprint_memo(spark, tmp_path, monkeypatch):
-    """r10 ADVICE: the fingerprint TTL memo reintroduced a bounded
-    stale-artifact window — a corpus rewritten within the TTL of a
-    prior lookup served artifacts from the old generation. The engine's
-    corpus-WRITING helpers now call invalidate_corpus after every
-    mutation, so the TTL window can never span one of the engine's own
-    rewrites (an external writer still relies on the TTL expiring or
+    """The fingerprint TTL memo opens a bounded stale-artifact window:
+    a corpus rewritten within the TTL of a prior lookup would serve
+    artifacts from the old generation. The engine's writers go through
+    artifacts.publish/replace/recover, which drop the memo themselves,
+    so the TTL window can never span one of the engine's own rewrites
+    (an external writer still relies on the TTL expiring or
     clear_artifacts, the documented contract). Pin it with an
     effectively-infinite TTL: a versioned commit INSIDE the corpus
     must be visible to the very next fingerprint lookup."""
@@ -952,8 +952,8 @@ def test_store_rebuilds_truncated_parquet_and_garbage_pickle(
 def test_store_removes_orphaned_tmp_when_generation_lands(
     tmp_path, monkeypatch
 ):
-    """A writer that crashed mid-build leaves ``<name>-<gen>.tmp-*``
-    behind; it is removed when that generation lands."""
+    """A writer that crashed mid-build leaves its staging dir behind;
+    it is removed when that generation lands."""
     import os
     import shutil
 
@@ -967,11 +967,24 @@ def test_store_removes_orphaned_tmp_when_generation_lands(
 
     final = artifacts.artifact_directory(corpus, "orphan", build)
     shutil.rmtree(final)
-    orphan = f"{final}.tmp-crashed"
-    os.makedirs(orphan)
+
+    def crash(d):
+        build(d)
+        raise KeyboardInterrupt
+
+    # a killed process runs no cleanup: keep the staging dir on disk
+    real_rmtree = shutil.rmtree
+    monkeypatch.setattr(shutil, "rmtree", lambda *a, **k: None)
+    with pytest.raises(KeyboardInterrupt):
+        artifacts.artifact_directory(corpus, "orphan", crash)
+    monkeypatch.setattr(shutil, "rmtree", real_rmtree)
+    parent = os.path.dirname(final)
+    assert any(n.startswith(".") for n in os.listdir(parent)), (
+        "the crashed writer's staging dir must be on disk"
+    )
     assert artifacts.artifact_directory(corpus, "orphan", build) == final
     assert os.path.isfile(os.path.join(final, "payload"))
-    assert not os.path.exists(orphan)
+    assert [n for n in os.listdir(parent) if n.startswith(".")] == []
 
 
 def test_engine_source_change_rebuilds_and_evicts(

@@ -2316,14 +2316,15 @@ def test_ivf_append_preserves_search_and_drift_triggers_rebalance(
     assert drifted["drift"] > 0.01
     assert drifted["refit_recommended"]
 
-    # rebalance: re-fit on current contents, rename-aside swap, zero
-    # row loss, drift baseline reset to ~0
+    # rebalance: re-fit on current contents, staged swap, zero row
+    # loss, drift baseline reset to ~0
     ivf_rebalance(spark, inc, k=k, iters=2)
     after = ivf_drift_census(spark, inc, refit_drift=0.01)
     assert after["rows"] == n_all + 300
     assert abs(after["drift"]) < 1e-9  # fresh baseline == fresh census
-    assert not os.path.exists(inc + "__rebuild")
-    assert not os.path.exists(inc + "__old")
+    assert sorted(os.listdir(tmp_path)) == ["ivf_inc", "ivf_oneshot"], (
+        "no staging or aside dir left beside the index"
+    )
     got = ivf_search_index(spark, inc, query, nprobe=k, topk=10)
     assert got.count() == 10
 

@@ -401,11 +401,13 @@ def test_compact_parquet_merges_small_files(spark, sf_dir, tmp_path):
     want = sorted(map(tuple, ev.collect()))
 
     # simulate a crashed earlier compaction attempt
-    os.makedirs(path + "._tmp_compact", exist_ok=True)
+    from prueba_tecnica_analista_etl_spark.artifacts import staging
+
+    os.makedirs(staging(path))
 
     n = compact_parquet(spark, path, target_bytes=total // 4 + 1)
     assert 1 <= n <= 5
-    assert not os.path.exists(path + "._tmp_compact")
+    assert os.listdir(tmp_path) == ["t"], "no staging or aside dir left"
     assert sorted(map(tuple, spark.read.parquet(path).collect())) == want
 
     n2 = compact_parquet(spark, path, target_bytes=total * 2, balance=True)
@@ -413,12 +415,16 @@ def test_compact_parquet_merges_small_files(spark, sf_dir, tmp_path):
     assert sorted(map(tuple, spark.read.parquet(path).collect())) == want
 
 
-def test_compact_partitioned_respects_boundaries(spark, sf_dir, tmp_path):
+def test_compact_partitioned_respects_boundaries(
+    spark, sf_dir, tmp_path, monkeypatch
+):
     """Partitioned compaction merges files only WITHIN each leaf dir:
     fragmented partitions collapse to one file, already-compact ones
     are untouched (skip threshold), partition values and content
     survive exactly."""
     import os
+
+    import pytest
 
     from prueba_tecnica_analista_etl_spark.sources.files import (
         compact_partitioned,
@@ -450,22 +456,35 @@ def test_compact_partitioned_respects_boundaries(spark, sf_dir, tmp_path):
     assert sorted(map(tuple, after.collect())) == want
     # swap dirs never leaked into partition discovery
     days = {str(r["day"]) for r in after.select("day").distinct().collect()}
-    assert not any("cmp" in d or "tmp" in d for d in days)
+    assert days == {p.split("=", 1)[1] for p in parts}
     # second pass: everything is one file per partition -> all skipped
     assert compact_partitioned(spark, path, target_bytes=1 << 30) == {}
 
-    # crash recovery: a leaf stranded mid-swap (renamed aside, tmp
-    # never renamed in) is restored by the entry sweep; a stale tmp
-    # dir is removed; content is intact afterwards
-    leaf = parts[0]
-    os.rename(
-        os.path.join(path, leaf), os.path.join(path, ".cmp_old_" + leaf)
-    )
-    os.makedirs(os.path.join(path, ".cmp_tmp_" + leaf), exist_ok=True)
+    # crash recovery: a leaf stranded mid-swap (renamed aside, staged
+    # copy never renamed in) is restored by the entry sweep; the stale
+    # staged dir is removed; content is intact afterwards
+    leaf = sorted(parts)[0]
+    real_rename = os.rename
+    calls = []
+
+    def crash_before_rename_in(src, dst):
+        calls.append(src)
+        if len(calls) == 2:
+            raise OSError("injected crash")
+        real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", crash_before_rename_in)
+    with pytest.raises(OSError, match="injected"):
+        compact_partitioned(spark, path, target_bytes=1 << 30, min_files=1)
+    monkeypatch.setattr(os, "rename", real_rename)
+    assert not os.path.exists(os.path.join(path, leaf))
     compact_partitioned(spark, path, target_bytes=1 << 30)
     assert os.path.isdir(os.path.join(path, leaf))
-    assert not os.path.exists(os.path.join(path, ".cmp_old_" + leaf))
-    assert not os.path.exists(os.path.join(path, ".cmp_tmp_" + leaf))
+    hidden = [
+        e.name for e in os.scandir(path)
+        if e.is_dir() and e.name.startswith(".")
+    ]
+    assert hidden == [], "no staging or aside dir left in the table root"
     assert sorted(map(tuple, spark.read.parquet(path).collect())) == want
 
 
@@ -782,9 +801,9 @@ def test_export_training_shards_detects_tampering(spark, sf_dir, tmp_path):
 
 
 def test_export_training_shards_rejects_empty_frame(spark, tmp_path):
-    """ADVICE r7: a zero-row input used to write zero part files and
-    crash mid-export on read-back schema inference, stranding a
-    ``._tmp`` dir. Both sizing paths must fail with a clear error and
+    """A zero-row input writes zero part files and would crash
+    mid-export on read-back schema inference, stranding a
+    staging dir. Both sizing paths must fail with a clear error and
     leave NOTHING behind — the target_rows path before any write (its
     sizing count already proves emptiness), the n_shards path right
     after the (empty, cheap) write via a file-level check, so the
@@ -803,8 +822,8 @@ def test_export_training_shards_rejects_empty_frame(spark, tmp_path):
         with _pytest.raises(ValueError, match="empty frame"):
             export_training_shards(empty, path, "doc_id", **kwargs)
         assert not os.path.exists(path)
-        assert not os.path.exists(path + "._tmp"), (
-            "failed export left a dangling tmp dir"
+        assert os.listdir(tmp_path) == [], (
+            "failed export left a dangling staging dir"
         )
 
 

@@ -15,8 +15,8 @@ from prueba_tecnica_analista_etl_spark.streaming.replay import (
     replay_as_stream,
     write_replay_files,
 )
+from prueba_tecnica_analista_etl_spark import artifacts
 from prueba_tecnica_analista_etl_spark.streaming.upsert_sink import (
-    _recover,
     foreach_batch_upsert,
     foreach_batch_upsert_partitioned,
     read_control,
@@ -177,28 +177,60 @@ def test_foreach_batch_upsert_partitioned(spark, sf_dir, tmp_path):
     assert read_control(spark, target).count() == n_batches
 
 
-def test_swap_recovery_restores_base(tmp_path):
-    """Crash between rename-aside and rename-in leaves no live dir;
-    _recover must restore the accumulated base instead of letting the
-    replay rebuild from one micro-batch."""
-    data = tmp_path / "data"
-    old = tmp_path / "data._old_7"
-    old.mkdir()
-    (old / "part-0.parquet").write_text("base")
-    stale_tmp = tmp_path / "data._tmp_7"
-    stale_tmp.mkdir()
-    (stale_tmp / "part-0.parquet").write_text("half-written")
-    _recover(str(data))
-    assert data.is_dir()
-    assert (data / "part-0.parquet").read_text() == "base"
-    assert not stale_tmp.exists()
+def _hidden_dirs(parent):
+    return sorted(
+        e.name for e in os.scandir(parent)
+        if e.is_dir() and e.name.startswith(".")
+    )
 
-    # live dir present: stale leftovers are swept, live dir untouched
-    old2 = tmp_path / "data._old_8"
-    old2.mkdir()
-    _recover(str(data))
+
+def test_swap_recovery_restores_base(tmp_path, monkeypatch):
+    """A crash between rename-aside and rename-in leaves no live dir;
+    recover must restore the accumulated base instead of letting the
+    replay rebuild from one micro-batch. A crash after rename-in leaves
+    an aside copy that recover deletes, keeping the new live dir."""
+    data = tmp_path / "data"
+    data.mkdir()
+    (data / "part-0.parquet").write_text("base")
+
+    def stage(payload):
+        staged = artifacts.staging(str(data))
+        os.makedirs(staged)
+        with open(os.path.join(staged, "part-0.parquet"), "w") as fh:
+            fh.write(payload)
+        return staged
+
+    real_rename = os.rename
+    calls = []
+
+    def crash_on_second(src, dst):
+        calls.append(src)
+        if len(calls) == 2:
+            raise OSError("injected crash before rename-in")
+        real_rename(src, dst)
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "rename", crash_on_second)
+        with pytest.raises(OSError, match="injected"):
+            artifacts.replace(str(data), stage("half-merged"))
+    assert not data.exists()
+    assert len(_hidden_dirs(tmp_path)) == 2  # the aside + the staged
+    artifacts.recover(str(data))
     assert (data / "part-0.parquet").read_text() == "base"
-    assert not old2.exists()
+    assert _hidden_dirs(tmp_path) == []
+
+    # crash after rename-in, before the aside copy is deleted
+    def crash(*args, **kwargs):
+        raise OSError("injected crash before the aside is deleted")
+
+    with monkeypatch.context() as m:
+        m.setattr(artifacts.shutil, "rmtree", crash)
+        with pytest.raises(OSError, match="injected"):
+            artifacts.replace(str(data), stage("merged"))
+    assert len(_hidden_dirs(tmp_path)) == 1
+    artifacts.recover(str(data))
+    assert (data / "part-0.parquet").read_text() == "merged"
+    assert _hidden_dirs(tmp_path) == []
 
 
 def test_sessionize_rows_sane(spark, sf_dir):
@@ -1256,14 +1288,13 @@ def test_out_of_order_replay_routes_late_rows_to_dlq(
 def test_run_available_now_cached_sink_resumes_incrementally(
     spark, sf_dir, tmp_path
 ):
-    """The cache_key path: the first invocation
+    """The state_dir path: the first invocation
     replays the landing dir into the persistent parquet sink; a second
     invocation RESUMES the checkpoint, finds no new source files, runs
     zero micro-batches — observable as the sink's file set not
     changing — and returns the identical rows, lazily (no collect in
     the registry path)."""
     from prueba_tecnica_analista_etl_spark.streaming.windows import (
-        _SINK_DIRS,
         run_available_now,
         tumbling_counts,
     )
@@ -1272,16 +1303,16 @@ def test_run_available_now_cached_sink_resumes_incrementally(
         spark, sf_dir, "events", n_files=4,
         base_dir=str(tmp_path / "landing"),
     )
-    key = ("test_resume", str(tmp_path))
+    state_dir = str(tmp_path / "sink")
 
     def run():
         stream = replay_as_stream(spark, data_dir, schema, 2)
         return run_available_now(
-            tumbling_counts(stream, "0 seconds"), spark, cache_key=key
+            tumbling_counts(stream, "0 seconds"), spark, state_dir=state_dir
         )
 
     first = run()
-    out_dir = _SINK_DIRS[key][0]
+    out_dir = os.path.join(state_dir, "out")
     files_after_first = sorted(
         f for f in os.listdir(out_dir) if f.endswith(".parquet")
     )
