@@ -65,13 +65,26 @@ inside the corpus: test corpora are read-only, and a sidecar inside a
 corpus would perturb the fingerprint that keys it. If the root cannot
 be created, a per-process temp root takes its place.
 
-Frames are served ``localCheckpoint``-ed: the served frame must stay
-valid if its generation is evicted under a live consumer, and a corrupt
-persisted copy must fail here, inside the build lock where it can be
-rebuilt, not later inside a consumer. A memoized frame refers to its
-session, so a session's frames live until ``clear_artifacts(spark)``.
-Only small post-aggregation frames belong here: persisting a
-pre-shuffle exploded frame would trade cheap recompute for I/O.
+Frames are served as lazy parquet scans with the sidecar's schema, so
+serving one launches no Spark job and a lost executor re-reads its
+share of the files. Two guards keep a scan as safe as a materialized
+copy:
+
+* a corrupt copy must fail here, inside the build lock where it can be
+  rebuilt, not later inside a consumer. Serving reads every part's
+  footer (no data pages) and checks that the row counts add up to the
+  count the sidecar recorded at publish, so a truncated or lost part
+  file is removed and rebuilt;
+* a generation must outlive its superseding while a consumer still
+  scans it. A generation that a live session's memo serves is pinned:
+  eviction skips it, and the next landing after the memo moves on
+  removes it.
+
+The memo lives on the session object, so a dropped session is
+collected with its frames; a weak set of sessions lets a bare
+:func:`clear_artifacts` reach every memo. Only small post-aggregation
+frames belong here: persisting a pre-shuffle exploded frame would
+trade cheap recompute for I/O.
 """
 
 from __future__ import annotations
@@ -118,10 +131,13 @@ _SOURCE_DIGEST = _source_digest(os.path.dirname(os.path.abspath(__file__)))
 _LOCK = threading.Lock()
 # key path -> lock held while that generation is read or built
 _BUILD_LOCKS: dict[str, threading.Lock] = {}
-# session -> {(sf_dir, stem): (generation path, served value)}
-_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
+# Each session's memo, {(sf_dir, stem): (generation path, served
+# value)}, is an attribute of the session: a served frame refers back
+# to its session, so a memo held in a module-level map keyed by the
+# session would keep the session alive forever. The weak set only
+# lets clear_artifacts and the eviction pin find the live memos.
+_MEMO_ATTR = "_ptae_artifact_memo"
+_SESSIONS: "weakref.WeakSet[SparkSession]" = weakref.WeakSet()
 _MISS = object()
 
 # Measured build cost per artifact stem, in seconds, cumulative across
@@ -249,19 +265,49 @@ def _mark_corpus(tag_dir: str, sf_dir: str) -> None:
             pass
 
 
+def _memo(spark: SparkSession) -> dict:
+    """``spark``'s artifact memo, created on first use; call under
+    ``_LOCK``."""
+    memo = getattr(spark, _MEMO_ATTR, None)
+    if memo is None:
+        memo = {}
+        setattr(spark, _MEMO_ATTR, memo)
+        _SESSIONS.add(spark)
+    return memo
+
+
+def _pinned() -> set[str]:
+    """Generation paths that some live session's memo serves as a
+    frame (a census value is held in memory, not read from disk)."""
+    with _LOCK:
+        return {
+            hit[0]
+            for s in list(_SESSIONS)
+            for hit in getattr(s, _MEMO_ATTR, {}).values()
+            if isinstance(hit[1], DataFrame)
+        }
+
+
 def _evict_superseded_disk(final: str) -> None:
     """Remove older generations of the same artifact: siblings sharing
     the name prefix but a different generation suffix, plus any
-    orphaned staging dir of one from a crashed writer."""
+    orphaned staging dir of one from a crashed writer. A generation a
+    live session still serves is kept until a later landing."""
     parent, base = os.path.split(final)
     gen = re.escape(base.rsplit("-", 1)[0]) + "-[0-9a-f]{8}"
     try:
         names = os.listdir(parent)
     except OSError:
         return
+    pinned = _pinned()
     for n in names:
-        if n != base and re.fullmatch(rf"{gen}|\.{gen}\.staging-\w+", n):
-            shutil.rmtree(os.path.join(parent, n), ignore_errors=True)
+        p = os.path.join(parent, n)
+        if (
+            n != base
+            and p not in pinned
+            and re.fullmatch(rf"{gen}|\.{gen}\.staging-\w+", n)
+        ):
+            shutil.rmtree(p, ignore_errors=True)
 
 
 # ------------------------------------------------------ directory swaps
@@ -369,7 +415,7 @@ def _build_once(
     path = os.path.join(tag_dir, f"{_safe(stem)}-{gen:08x}")
     slot = (sf_dir, stem)
     with _LOCK:
-        memo = _MEMO.setdefault(spark, {}) if spark is not None else {}
+        memo = _memo(spark) if spark is not None else {}
         hit = memo.get(slot)
         if hit is not None and hit[0] == path:
             return hit[1]
@@ -389,7 +435,8 @@ def _build_once(
                     _evict_superseded_disk(path)
                 with _LOCK:
                     BUILD_SECONDS[stem] = BUILD_SECONDS.get(stem, 0.0) + dt
-            memo[slot] = (path, value)
+            with _LOCK:
+                memo[slot] = (path, value)
             return value
     finally:
         with _LOCK:
@@ -397,6 +444,18 @@ def _build_once(
 
 
 # ------------------------------------------------------------- shapes
+
+
+def _parquet_rows(data_dir: str) -> int:
+    """Rows in the parquet files Spark would read from ``data_dir``,
+    summed from their footers; raises if any file is not parquet."""
+    import pyarrow.parquet as pq
+
+    return sum(
+        pq.read_metadata(os.path.join(data_dir, n)).num_rows
+        for n in os.listdir(data_dir)
+        if not n.startswith(("_", "."))
+    )
 
 
 def corpus_artifact(
@@ -407,28 +466,39 @@ def corpus_artifact(
 ) -> DataFrame:
     """The artifact frame ``name`` of ``sf_dir``, built with
     ``build()`` once per corpus generation and persisted as parquet
-    for later sessions and processes. Served ``localCheckpoint``-ed."""
+    for later sessions and processes. Served as a lazy scan of the
+    validated copy; a frame that cannot round-trip parquet is served
+    ``localCheckpoint``-ed from the memo only."""
 
     def read(path: str) -> object:
-        schema_p = os.path.join(path, "_schema.json")
+        meta_p = os.path.join(path, "_meta.json")
         data_p = os.path.join(path, "data")
-        if not (os.path.isfile(schema_p) and os.path.isdir(data_p)):
+        if not (os.path.isfile(meta_p) and os.path.isdir(data_p)):
             return _MISS
         try:
-            with open(schema_p) as fh:
-                schema = T.StructType.fromJson(json.load(fh))
-            return spark.read.schema(schema).parquet(data_p).localCheckpoint()
+            with open(meta_p) as fh:
+                meta = json.load(fh)
+            if _parquet_rows(data_p) == meta["rows"]:
+                schema = T.StructType.fromJson(meta["schema"])
+                return spark.read.schema(schema).parquet(data_p)
         except Exception:
-            shutil.rmtree(path, ignore_errors=True)
-            return _MISS
+            pass
+        # unreadable sidecar or footer, or a part file lost
+        shutil.rmtree(path, ignore_errors=True)
+        return _MISS
 
     def make(path: str) -> DataFrame:
         built = build()
 
         def fill(tmp: str) -> None:
-            built.write.parquet(os.path.join(tmp, "data"))
-            with open(os.path.join(tmp, "_schema.json"), "w") as fh:
-                fh.write(built.schema.json())
+            data_p = os.path.join(tmp, "data")
+            built.write.parquet(data_p)
+            meta = {
+                "schema": built.schema.jsonValue(),
+                "rows": _parquet_rows(data_p),
+            }
+            with open(os.path.join(tmp, "_meta.json"), "w") as fh:
+                json.dump(meta, fh)
 
         try:
             served = read(path) if publish(path, fill) else _MISS
@@ -516,8 +586,8 @@ def clear_artifacts(
     stems = None if name is None else {name, f"census:{name}", f"dir:{name}"}
     with _LOCK:
         _FP_MEMO.clear()
-        for s in [spark] if spark is not None else list(_MEMO):
-            memo = _MEMO.get(s, {})
+        for s in [spark] if spark is not None else list(_SESSIONS):
+            memo = getattr(s, _MEMO_ATTR, {})
             for slot in [k for k in memo if stems is None or k[1] in stems]:
                 memo.pop(slot, None)
     if stems is None and spark is not None:

@@ -261,8 +261,8 @@ def doc_shingle_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5_60 hashes. The whole near-dup family (minhash, single-band
     n-gram, simhash, the LSH-recall truth side) consumes this one
     artifact instead of each re-running scan→tokenize→shingle→md5 —
-    the feature stage is built once per corpus and served
-    localCheckpoint-ed for the session (corpus_artifact), exactly the
+    the feature stage is built once per corpus and served from the
+    artifact store (corpus_artifact), exactly the
     ``_unigram_scored`` discipline. At 100 TB this is the standard
     move: materialize the per-doc feature frame as a first-class
     dataset and fan the near-dup tiers out from it."""
@@ -1686,14 +1686,13 @@ def q_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Finalization margin (see the oracle note above): stream end_us =
     # last event + 30 min, so last + 2 h <= max  <=>  end_us + 90 min
-    # <= max. max(ts) is one footer-sized aggregate over the source.
+    # <= max. max(ts) is a scalar subquery over the source, evaluated
+    # with the query rather than while its plan is built.
     max_us = (
-        _t(spark, sf_dir, "events")
-        .agg(F.unix_micros(F.max("ts")))
-        .first()[0]
+        _t(spark, sf_dir, "events").agg(F.unix_micros(F.max("ts"))).scalar()
     )
     return out.filter(
-        F.col("end_us") + F.lit(5_400_000_000) <= F.lit(max_us)
+        F.col("end_us") + F.lit(5_400_000_000) <= max_us
     ).drop("end_us")
 
 

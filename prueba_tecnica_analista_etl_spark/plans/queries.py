@@ -89,17 +89,16 @@ def oracle_sql() -> dict[str, str]:
 
 
 # Plan-construction cache. A DataFrame is an immutable logical plan,
-# so one per (session, sf_dir, table) can be shared by every query:
-# without this, each declared query pays its own parquet file-listing
-# + footer schema read + a round of conf.set py4j calls — measured as
-# the DOMINANT cost of the whole bench at sf0.1 (driver-side plan
-# building, not execution). The cache lives ON the session object
-# (not in a module-level dict keyed by id(spark)): it is collected
-# with the session, so long-lived multi-session processes never pin
-# stopped sessions or their plans — the same lifetime hazard the r7
-# _FOOTER_SESSIONS fix addressed, solved here by ownership instead of
-# weakrefs. Creating the cache doubles as the once-per-session
-# ensure_runtime_conf gate.
+# so one per (session, sf_dir, table) can be shared by every query of
+# the session: without it, each query pays its own parquet file
+# listing, stored-schema lookup and a round of conf.set py4j calls,
+# all in Python before Spark executes anything. (Schema
+# inference, the one Spark job a table read needs, is paid once per
+# corpus generation by load_table.) The cache lives ON the session
+# object, not in a module-level map keyed by the session: it is
+# collected with the session, so long-lived multi-session processes
+# never pin stopped sessions or their plans. Creating the cache
+# doubles as the once-per-session ensure_runtime_conf gate.
 _PLAN_CACHE_ATTR = "_ptae_plan_cache"
 
 

@@ -16,6 +16,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from prueba_tecnica_analista_etl_spark.artifacts import census_artifact
+
 TABLES = (
     "region",
     "nation",
@@ -75,13 +77,39 @@ def normalize_event_time(df: DataFrame, col: str = "ts") -> DataFrame:
     return df
 
 
+# Session confs that change the schema parquet inference yields for
+# the same files; each distinct combination keys its own schema.
+_INFERENCE_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.mergeSchema",
+)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one canonical table: ``{sf_dir}/{name}.parquet``.
+
+    Schema inference is a Spark job, so it runs once per corpus
+    generation and engine source: the inferred ``StructType`` is a
+    census artifact keyed by the session's inference confs, and the
+    table is read with that schema. A rewritten table changes the
+    corpus fingerprint, so its schema goes stale exactly when every
+    other artifact of the corpus does.
 
     ``events.ts`` is normalized to ``TimestampType`` whatever physical
     encoding the file carries — see :func:`normalize_event_time`.
     """
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    confs = "-".join(spark.conf.get(k) for k in _INFERENCE_CONFS)
+    schema = census_artifact(
+        spark,
+        sf_dir,
+        f"schema:{name}:{confs}",
+        lambda: spark.read.parquet(path).schema,
+    )
+    df = spark.read.schema(schema).parquet(path)
     if name == "events":
         df = normalize_event_time(df, "ts")
     return df
@@ -109,11 +137,6 @@ def spread(df: DataFrame, n: int | None = None) -> DataFrame:
     """
     sc = df.sparkSession.sparkContext
     return df.repartition(n or sc.defaultParallelism)
-
-
-# write_bucketed moved to sources/bucketed.py (the single bucketed-
-# write API — multi-key + optional external path; r12 verdict
-# consolidation).  Import it from there.
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -607,8 +607,8 @@ def test_artifact_store_survives_process_boundary(
     assert df1.count() == 1 and v1 == {"words": [3, 5, 7]}
     assert builds == ["f", "c"]
 
-    # simulate a fresh process: memory memos gone, disk intact
-    artifacts._MEMO.clear()
+    # simulate a fresh process: the session memo is gone, disk intact
+    artifacts.clear_artifacts(spark)
     df2 = artifacts.corpus_artifact(spark, corpus, "pb_frame", build_frame)
     v2 = artifacts.census_artifact(spark, corpus, "pb_val", build_census)
     assert builds == ["f", "c"], "fresh process must be served from disk"
@@ -630,7 +630,7 @@ def test_artifact_store_survives_process_boundary(
         return spark.createDataFrame([], "k int, t timestamp")
 
     e1 = artifacts.corpus_artifact(spark, corpus, "pb_empty", build_empty)
-    artifacts._MEMO.clear()
+    artifacts.clear_artifacts(spark)
     e2 = artifacts.corpus_artifact(spark, corpus, "pb_empty", build_empty)
     assert builds[-1] == "e" and builds.count("e") == 1
     assert e2.count() == 0 and e2.schema == e1.schema
@@ -931,7 +931,7 @@ def test_store_rebuilds_truncated_parquet_and_garbage_pickle(
     with open(os.path.join(value_dir, "value.pkl"), "wb") as fh:
         fh.write(b"not a pickle")
 
-    artifacts._MEMO.clear()
+    artifacts.clear_artifacts(spark)
     df = artifacts.corpus_artifact(spark, corpus, "bad_frame", build_frame)
     value = artifacts.census_artifact(spark, corpus, "bad_val", build_census)
     assert builds == ["f", "c", "f", "c"]
@@ -939,7 +939,7 @@ def test_store_rebuilds_truncated_parquet_and_garbage_pickle(
     assert value == {"words": [3, 5, 7]}
 
     # the rebuilt generations are whole again: a fresh memo reads them
-    artifacts._MEMO.clear()
+    artifacts.clear_artifacts(spark)
     df = artifacts.corpus_artifact(spark, corpus, "bad_frame", build_frame)
     assert df.count() == 50
     assert (
@@ -947,6 +947,174 @@ def test_store_rebuilds_truncated_parquet_and_garbage_pickle(
         == value
     )
     assert builds == ["f", "c", "f", "c"]
+
+
+def test_store_rebuilds_generation_missing_a_part(
+    spark, tmp_path, monkeypatch
+):
+    """A generation that lost one part file reads back as valid parquet
+    with fewer rows; the footer row count check must catch it, so the
+    artifact is rebuilt and serves every row, not a silent subset."""
+    import glob
+    import os
+
+    from prueba_tecnica_analista_etl_spark import artifacts
+
+    corpus = _store_corpus(tmp_path, monkeypatch)
+    builds = []
+
+    def build():
+        builds.append("f")
+        return spark.range(0, 1000, 1, 4)
+
+    df = artifacts.corpus_artifact(spark, corpus, "lost", build)
+    assert df.count() == 1000
+    (frame_dir,) = _generation_dirs(corpus, "lost")
+    parts = sorted(glob.glob(os.path.join(frame_dir, "data", "part-*")))
+    assert len(parts) == 4
+    os.unlink(parts[0])
+
+    artifacts.clear_artifacts(spark)
+    df = artifacts.corpus_artifact(spark, corpus, "lost", build)
+    assert builds == ["f", "f"]
+    assert df.count() == 1000
+    assert sorted(r.id for r in df.collect()) == list(range(1000))
+
+
+def test_store_keeps_superseded_frame_readable_while_served(
+    spark, tmp_path, monkeypatch
+):
+    """A frame is a lazy scan of its generation, so the generation must
+    outlive its superseding while the session that was served it still
+    memoizes it: a new generation landing from another session leaves
+    the old frame reading the old rows. Once no memo serves the old
+    generation, the next landing removes it."""
+    import os
+
+    from prueba_tecnica_analista_etl_spark import artifacts
+
+    monkeypatch.setattr(artifacts, "_FP_TTL_S", 0.0)
+    corpus = _store_corpus(tmp_path, monkeypatch)
+    builds = []
+
+    def build():
+        builds.append("f")
+        return spark.range(10 * len(builds))
+
+    old = artifacts.corpus_artifact(spark, corpus, "pin", build)
+    assert old.count() == 10
+    (old_dir,) = _generation_dirs(corpus, "pin")
+
+    other = spark.newSession()
+    with open(os.path.join(corpus, "t.parquet"), "w") as fh:
+        fh.write("generation-two, a different size")
+    assert artifacts.corpus_artifact(other, corpus, "pin", build).count() == 20
+    assert os.path.isdir(old_dir), "a served generation must be kept"
+    assert sorted(r.id for r in old.collect()) == list(range(10))
+
+    # the first session moves on; the next landing evicts the first
+    # generation, which no memo serves any more, and keeps the second,
+    # which the first session served until this lookup
+    assert artifacts.corpus_artifact(spark, corpus, "pin", build).count() == 20
+    (mid_dir,) = set(_generation_dirs(corpus, "pin")) - {old_dir}
+    with open(os.path.join(corpus, "t.parquet"), "w") as fh:
+        fh.write("generation-three, yet another size")
+    assert artifacts.corpus_artifact(spark, corpus, "pin", build).count() == 30
+    assert builds == ["f", "f", "f"]
+    assert not os.path.exists(old_dir)
+    assert len(_generation_dirs(corpus, "pin")) == 2
+    assert os.path.isdir(mid_dir)
+
+
+def test_store_memo_does_not_keep_sessions_alive(
+    spark, tmp_path, monkeypatch
+):
+    """A served frame refers back to its session, so the session memo
+    must not be a strong reference held outside the session: a session
+    that read the store and is dropped is collected, and a bare
+    clear_artifacts() still reaches the memos of live sessions."""
+    import gc
+    import weakref
+
+    from prueba_tecnica_analista_etl_spark import artifacts
+
+    corpus = _store_corpus(tmp_path, monkeypatch)
+    builds = []
+
+    def build():
+        builds.append("f")
+        return spark.range(5)
+
+    s = spark.newSession()
+    assert artifacts.corpus_artifact(s, corpus, "leak", build).count() == 5
+    assert artifacts.census_artifact(s, corpus, "leak", lambda: 7) == 7
+    gone = weakref.ref(s)
+    del s
+    # PySpark's RDD.toDF closure holds the newest session; a newer one
+    # releases it
+    live = spark.newSession()
+    gc.collect()
+    assert gone() is None, "a dropped session must be collected"
+
+    artifacts.corpus_artifact(live, corpus, "leak", build)
+    artifacts.clear_artifacts()
+    artifacts.corpus_artifact(live, corpus, "leak", build)
+    assert builds == ["f", "f"], "a bare clear must drop every memo"
+
+
+_EXECUTOR_LOSS = """
+import os, sys, time
+sys.path.insert(0, sys.argv[1])
+from pyspark.sql import SparkSession
+from prueba_tecnica_analista_etl_spark import artifacts
+
+corpus = sys.argv[2]
+spark = (
+    SparkSession.builder.master("local-cluster[2,1,1024]")
+    .config("spark.executor.memory", "512m")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+)
+spark.sparkContext.setLogLevel("OFF")
+df = artifacts.corpus_artifact(
+    spark, corpus, "exec_loss", lambda: spark.range(0, 1000, 1, 4)
+)
+
+def agg():
+    return df.groupBy((df.id % 7).alias("k")).count().orderBy("k").collect()
+
+before = agg()
+sc = spark.sparkContext._jsc.sc()
+sc.killExecutor(sc.getExecutorIds().mkString(",").split(",")[0])
+time.sleep(3)
+assert agg() == before
+print("SURVIVED")
+"""
+
+
+def test_served_artifact_survives_executor_loss(tmp_path, monkeypatch):
+    """A served artifact must stay readable when an executor is lost:
+    read it under a two-executor local cluster, kill one executor and
+    re-run the aggregate. A frame served from executor-local blocks
+    fails here with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND; a parquet scan
+    re-reads the lost share. Runs in its own process, because a
+    process holds one SparkContext."""
+    import os
+    import subprocess
+    import sys
+
+    corpus = _store_corpus(tmp_path, monkeypatch)
+    script = tmp_path / "executor_loss.py"
+    script.write_text(_EXECUTOR_LOSS)
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, str(script), repo, corpus],
+        cwd=str(tmp_path),
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert "SURVIVED" in proc.stdout, proc.stderr[-3000:]
 
 
 def test_store_removes_orphaned_tmp_when_generation_lands(

@@ -261,8 +261,9 @@ def test_no_row_python_udfs_anywhere_in_registry(spark, sf_dir):
 
 
 def test_eager_builder_pipelines_stay_clean(spark, sf_dir):
-    """The artifact/fixpoint queries erase their heavy subtrees with
-    localCheckpoint before the registry-wide lints can see them
+    """The artifact/fixpoint queries erase their heavy subtrees (an
+    artifact is served as a scan of the store, a fixpoint round is
+    localCheckpoint-ed) before the registry-wide lints can see them
     (q_dup_clusters is skipped there for the same reason), so lint
     the LAZY builder frames directly: the shingle-edge pipeline and
     the unigram score build must stay whole-stage-codegen JVM
@@ -442,12 +443,24 @@ def test_r7_additions_plan_shapes(spark, sf_dir):
     assert "windowspecdefinition(fp" in plan
 
 
+def _corpus_scans(plan: str, sf_dir: str) -> int:
+    """Parquet scans of corpus tables in ``plan``. A served artifact is
+    a parquet scan too, but of the artifact store, not of ``sf_dir``."""
+    import os
+
+    corpus = os.path.abspath(sf_dir) + os.sep
+    return sum(
+        "Scan parquet" in line and corpus in line
+        for line in plan.splitlines()
+    )
+
+
 def test_r8_late_additions_plan_shapes(spark, sf_dir):
     """Plan pins for the post-window additions:
 
     - q_bpe_pairs: ZERO corpus scans (the tf-weighted
-      vocabulary folds from the staged doc_term_tf artifact, a
-      checkpointed frame, so no parquet scan survives in the plan),
+      vocabulary folds from the staged doc_term_tf artifact, so the
+      only parquet scan in the plan reads the artifact store),
       vocab-side pair explosion, top-k via TakeOrderedAndProject —
       never a global sort of the pair frame;
     - q_unpivot_long: the reshape is an Expand (map-only), and the
@@ -455,7 +468,9 @@ def test_r8_late_additions_plan_shapes(spark, sf_dir):
     """
     plan = _plan(spark, sf_dir, "q_bpe_pairs")
     assert "TakeOrderedAndProject" in plan
-    assert plan.split("== Initial Plan ==")[0].count("Scan parquet") == 0
+    final = plan.split("== Initial Plan ==")[0]
+    assert _corpus_scans(final, sf_dir) == 0
+    assert "doc_term_tf-" in final
     assert "CartesianProduct" not in plan
 
     plan = _plan(spark, sf_dir, "q_unpivot_long")
@@ -617,8 +632,8 @@ def test_dup_exposure_single_scan_no_pair_expansion(spark, sf_dir):
     both census branches fold
     the staged fp8_ids artifact — the corpus-scale explode+md5+groupBy
     subtree runs once per CORPUS, so the query plan contains NO
-    parquet scan of documents at all (the artifact serves as a
-    checkpointed ExistingRDD) — NO window anywhere (the earlier
+    parquet scan of documents at all (its only scan reads the
+    artifact from the store) — NO window anywhere (the earlier
     per-fp count window materialized one unbounded partition per
     boilerplate fingerprint; the de-skewed form partially aggregates
     every fp-keyed step), and the only join is the per-doc census
@@ -629,8 +644,8 @@ def test_dup_exposure_single_scan_no_pair_expansion(spark, sf_dir):
     plan = df._jdf.queryExecution().executedPlan().toString()
     final = plan.split("== Initial Plan ==")[0]
     # the staged artifact is the only source: zero corpus scans here
-    assert "Scan parquet" not in final
-    assert "Scan ExistingRDD" in final
+    assert _corpus_scans(final, sf_dir) == 0
+    assert "fp8_ids-" in final
     assert "windowspecdefinition" not in final
     join_lines = [
         l for l in final.splitlines() if "Join" in l and "doc_id" in l

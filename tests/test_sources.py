@@ -1295,3 +1295,55 @@ def test_bucketed_join_is_shuffle_free(spark, tmp_path):
     finally:
         for name in ("bkt_left", "bkt_right", "bkt_right5"):
             spark.sql(f"DROP TABLE IF EXISTS {name}")
+
+
+def test_load_table_schema_follows_inference_confs(spark, tmp_path):
+    """The stored table schema is keyed by the session confs that
+    change parquet inference: a session reading BINARY as strings gets
+    StringType, a default session BinaryType, from one corpus."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    corpus = tmp_path / "corpus"
+    corpus.mkdir()
+    pq.write_table(
+        pa.table({"id": [1, 2], "b": pa.array([b"x", b"yz"], pa.binary())}),
+        str(corpus / "blobs.parquet"),
+    )
+    as_string = spark.newSession()
+    as_string.conf.set("spark.sql.parquet.binaryAsString", "true")
+    got = load_table(as_string, str(corpus), "blobs")
+    assert got.schema["b"].dataType == T.StringType()
+    assert sorted(r.b for r in got.collect()) == ["x", "yz"]
+    plain = load_table(spark, str(corpus), "blobs")
+    assert plain.schema["b"].dataType == T.BinaryType()
+    assert sorted(bytes(r.b) for r in plain.collect()) == [b"x", b"yz"]
+
+
+def test_load_table_sees_a_rewritten_table_schema(
+    spark, tmp_path, monkeypatch
+):
+    """A table rewritten with an added column changes the corpus
+    fingerprint, so the stored schema is inferred again and the new
+    column is read."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from prueba_tecnica_analista_etl_spark import artifacts
+
+    monkeypatch.setattr(artifacts, "_FP_TTL_S", 0.0)
+    corpus = tmp_path / "corpus"
+    corpus.mkdir()
+    path = str(corpus / "region.parquet")
+    pq.write_table(pa.table({"r_regionkey": [0, 1]}), path)
+    assert load_table(spark, str(corpus), "region").columns == [
+        "r_regionkey"
+    ]
+    pq.write_table(
+        pa.table({"r_regionkey": [0, 1], "r_name": ["AFRICA", "ASIA"]}),
+        path,
+    )
+    df = load_table(spark, str(corpus), "region")
+    assert df.columns == ["r_regionkey", "r_name"]
+    assert sorted(r.r_name for r in df.collect()) == ["AFRICA", "ASIA"]
