@@ -75,13 +75,11 @@ def bitset_semi_join(
     fact_key: str,
     dim_key: str,
     bits: int = 8192,
-    broadcast_dim: bool = True,
     words: list[int] | None = None,
 ) -> DataFrame:
     """``fact LEFT SEMI JOIN dim`` with the bitset prefilter below the
-    join. Row-identical to the plain semi-join; ``broadcast_dim``
-    pins the exact join's strategy for known-small dims, else
-    Catalyst/AQE choose. Pass staged ``words`` (from
+    join. Row-identical to the plain semi-join; the dim is broadcast,
+    so it must be known-small. Pass staged ``words`` (from
     :func:`bitset_words`, memoized per corpus via
     artifacts.census_artifact) to skip the dim census; they MUST come
     from the same (dim, dim_key, bits) or the prefilter could drop
@@ -89,7 +87,7 @@ def bitset_semi_join(
     if words is None:
         words = bitset_words(dim, dim_key, bits)
     pre = bitset_prefilter(fact, fact_key, words, bits)
-    right = F.broadcast(dim) if broadcast_dim else dim
+    right = F.broadcast(dim)
     return pre.join(
         right, pre[fact_key] == right[dim_key], "left_semi"
     )

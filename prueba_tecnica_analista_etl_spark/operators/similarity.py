@@ -66,7 +66,6 @@ def cosine_topk_batch(
     vec_col: str = "embedding",
     query_id_col: str = "q_id",
     query_vec_col: str = "qv",
-    exclude_self: bool = True,
     carry_cols: "tuple[str, ...]" = (),
     query_carry_cols: "tuple[str, ...]" = (),
     rank_col: str | None = None,
@@ -75,9 +74,9 @@ def cosine_topk_batch(
     corpus scan: ``queries`` (small — it is broadcast) carries
     (``query_id_col``, ``query_vec_col``); output is one row per
     (query, neighbor) with ``cos_sim``, ranked per query.
-    ``exclude_self`` drops neighbor rows whose id equals the query id
-    (the self-match every nearest-neighbor probe over its own corpus
-    would otherwise return). ``carry_cols`` rides extra corpus
+    Neighbor rows whose id equals the query id are dropped (the
+    self-match every nearest-neighbor probe over its own corpus would
+    otherwise return). ``carry_cols`` rides extra corpus
     columns (e.g. a label) through to the output — at 100 TB a
     consumer joining them back on would pay a SECOND full-corpus
     read; carrying them keeps the op one scan (r12, q_knn_classify).
@@ -117,9 +116,7 @@ def cosine_topk_batch(
     scored = e.crossJoin(F.broadcast(q)).withColumn(
         "_cos",
         dot(F.col("_v"), F.col("_qv")) / (F.col("_nv") * F.col("_nq")),
-    )
-    if exclude_self:
-        scored = scored.filter(F.col(id_col) != F.col("_qid"))
+    ).filter(F.col(id_col) != F.col("_qid"))
     w = Window.partitionBy("_qid").orderBy(
         F.desc("_cos"), F.asc(id_col)
     )

@@ -269,7 +269,6 @@ def frequent_items(
     df: DataFrame,
     col: str,
     capacity: int = 8,
-    sketch_df: DataFrame | None = None,
 ) -> DataFrame:
     """Exact counts of the Misra-Gries candidate set: ``(col, cnt)``
     for a superset of every item with count > n/(capacity+1). The
@@ -277,30 +276,9 @@ def frequent_items(
     second pass scans once more and aggregates only candidate keys —
     state O(candidates), never O(distinct keys). NULLs are excluded
     (a NULL key is a data-quality signal, not a heavy hitter —
-    q_null_range_checks' census owns it).
-
-    ``sketch_df`` (r14 optimization) feeds the SKETCH pass only —
-    it MUST contain exactly the same rows as ``df`` (a repartitioned
-    copy; only the NULL filter is re-applied here). A subset/sample
-    would silently void the Misra-Gries candidate-superset guarantee
-    and drop true heavy hitters (ADVICE r14). Pass a ``spread()``
-    copy when the input arrives single-partition
-    so the Arrow summary runs wide, WITHOUT round-robin-reshuffling
-    the full table a second time for the recount: the recount is a
-    filter + broadcast semi-join + partially-aggregated groupBy, all
-    map-side until candidate-cardinality rows, so repartitioning its
-    input is a pure full-table shuffle with nothing to parallelize
-    that the scan does not already. The candidate SET may differ by
-    partitioning (any partitioning yields a valid superset); the
-    returned exact counts and every downstream threshold filter are
-    identical."""
+    q_null_range_checks' census owns it)."""
     keyed = df.filter(F.col(col).isNotNull())
-    sketch = (
-        keyed
-        if sketch_df is None
-        else sketch_df.filter(F.col(col).isNotNull())
-    )
-    cand = mg_candidates(sketch, col, capacity).distinct()
+    cand = mg_candidates(keyed, col, capacity).distinct()
     return (
         keyed.join(F.broadcast(cand), col, "left_semi")
         .groupBy(col)

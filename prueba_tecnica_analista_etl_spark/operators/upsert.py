@@ -13,9 +13,8 @@ absent from base. This reproduces the procedure's semantics
 incoming batch is deduped on the key first (``DISTINCT ON``,
 ``sql:225-229``) and the base is unique (``sql:206-207``).
 
-Scale notes: one shuffle on the key for the anti-join (broadcast if
-the incoming batch is small — AQE decides; force with
-``broadcast_new=True``). Output is written whole — idempotent by
+Scale notes: one shuffle on the key for the anti-join (AQE broadcasts
+the incoming batch when it is small). Output is written whole — idempotent by
 construction (re-running with the same inputs is a fixpoint, the
 property the reference asserts at ``sql:130``). For true row-level
 ACID upserts, the same API can delegate to Delta Lake ``MERGE INTO``
@@ -54,14 +53,12 @@ def upsert(
     new: DataFrame,
     keys: Sequence[str],
     dedup_order: Sequence[Column | str] | None = None,
-    broadcast_new: bool = False,
 ) -> DataFrame:
     """MERGE join-rewrite. ``dedup_order``: total order choosing the
     surviving incoming row per key (None = incoming batch already
     unique on ``keys``). Column sets must match by name."""
     new_d = keep_first(new, keys, dedup_order) if dedup_order else new
-    rhs = F.broadcast(new_d) if broadcast_new else new_d
-    kept_base = base.join(rhs, on=list(keys), how="left_anti")
+    kept_base = base.join(new_d, on=list(keys), how="left_anti")
     return new_d.select(*base.columns).unionByName(
         kept_base.select(*base.columns)
     )
@@ -333,7 +330,6 @@ def cdc_apply(
     op_col: str = "op",
     delete_value: str = "D",
     order: Sequence[Column | str] | None = None,
-    broadcast_log: bool = False,
 ) -> DataFrame:
     """Changelog application — :func:`upsert`'s superset with DELETE
     markers (the apply half of CDC; :func:`snapshot_diff` is the
@@ -367,9 +363,8 @@ def cdc_apply(
     below).
     """
     compacted = keep_first(log, keys, order) if order else log
-    rhs = F.broadcast(compacted) if broadcast_log else compacted
     kept_base = base.join(
-        rhs.select(*keys), on=list(keys), how="left_anti"
+        compacted.select(*keys), on=list(keys), how="left_anti"
     )
     # eqNullSafe, not `!=`: a dirty feed's NULL op must be treated as
     # an upsert — with plain `!=` the NULL row falls out of upserts

@@ -10,16 +10,25 @@ invariants enforced at the seams.
                                                       when the corpus
                                                       ships no
                                                       embeddings table)
-    → benchmark holdout + 4-gram decontamination     (q_decontaminate's
-                                                      broadcast semi-join)
-    → deterministic train/val/test split             (q_train_val_split's
-                                                      md5-nibble rule)
-    → context-window pack plan over train            (q_pack_sequences'
+    → benchmark holdout + 4-gram decontamination     (contamination_hits,
+                                                      q_decontaminate's
+                                                      probe)
+    → deterministic train/val/test split             (split_col,
+                                                      q_train_val_split's
+                                                      rule)
+    → context-window pack plan over train            (pack_bins,
+                                                      q_pack_sequences'
                                                       per-source bins)
     → hash-sharded training export + manifest        (sources.export)
 
-Every stage is the SAME operator the registry proves oracle-exact in
-isolation — this module adds the glue, the audit ledger, and the
+The split rule, the pack plan, the contamination probe, the holdout
+modulus and the thresholds are the registry's own definitions in
+``plans.extensions_pipeline``, imported here, so the oracle proves the
+code this run executes. The stage functions (``curate_corpus``,
+``semantic_purge``, ``decontaminate``, ``export_training_shards``,
+``verify_training_shards``) are module attributes that ``pretrain_run``
+looks up when it calls them, so a profiler can wrap each stage from
+outside. This module adds the glue, the audit ledger and the
 invariants:
 
 * **doc conservation** — input = dropped-by-quality + dropped-by-
@@ -66,81 +75,61 @@ from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from prueba_tecnica_analista_etl_spark.functions.text import shingles
+from prueba_tecnica_analista_etl_spark.functions.text import (
+    n_tokens,
+    shingles,
+)
 from prueba_tecnica_analista_etl_spark.pipelines.corpus import (
     curate_corpus,
+)
+from prueba_tecnica_analista_etl_spark.plans.extensions_pipeline import (
+    BENCH_MOD,
+    CONTAM_MIN_HITS,
+    CTX_TOKENS,
+    benchmark_grams,
+    contamination_hits,
+    pack_bins,
+    split_col,
 )
 from prueba_tecnica_analista_etl_spark.sources.export import (
     export_training_shards,
     verify_training_shards,
 )
 
-# Shared with the registry queries so the composed run and the
-# oracle-proven censuses agree by construction.
-from prueba_tecnica_analista_etl_spark.plans.extensions_pipeline import (
-    CONTAM_MIN_HITS,
-    CTX_TOKENS,
-)
-
-#: Every 50th doc stands in for the held-out evaluation benchmark —
-#: the same convention q_contamination / q_decontaminate prove
-#: oracle-exact.
-BENCH_MOD = 50
-
-
-def _split_col() -> F.Column:
-    """q_train_val_split's deterministic assignment: first md5 nibble
-    of the doc id — <'c' train (12/16), <'e' val (2/16), else test."""
-    nib = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1)
-    return (
-        F.when(nib < "c", "train").when(nib < "e", "val").otherwise("test")
-    )
-
-
-def _tok_count(text_col: str = "text") -> F.Column:
-    return F.size(F.split(F.col(text_col), " ")).cast("long")
-
 
 def decontaminate(
-    docs: DataFrame,
-    survivors: DataFrame,
-    min_hits: int = CONTAM_MIN_HITS,
+    docs: DataFrame, survivors: DataFrame
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """(kept, bench_held, flagged) partition of ``survivors``.
 
     The benchmark gram set is built from the RAW corpus's held-out
-    docs (the eval set exists independently of what curation kept),
-    broadcast, and semi-joined against the training candidates' grams
-    — q_decontaminate's exact shape: the full corpus gram stream is
-    never shuffled, only the matched grams reach the per-doc distinct
-    count."""
-    toks = F.split(F.col("text"), " ")
-    bench_grams = (
-        docs.filter(F.col("doc_id") % BENCH_MOD == 0)
-        .select(F.explode(shingles(toks, 4)).alias("gram"))
-        .distinct()
-    )
-    bench_held = survivors.filter(F.col("doc_id") % BENCH_MOD == 0)
-    candidates = survivors.filter(F.col("doc_id") % BENCH_MOD != 0)
-    flagged_ids = (
-        candidates.select(
-            "doc_id", F.explode(shingles(toks, 4)).alias("gram")
-        )
-        .join(F.broadcast(bench_grams), "gram", "left_semi")
-        .groupBy("doc_id")
-        .agg(F.count_distinct("gram").alias("n_hits"))
-        .filter(F.col("n_hits") >= min_hits)
-        .select("doc_id")
-    )
+    docs (the eval set exists independently of what curation kept)
+    and probed with q_decontaminate's :func:`contamination_hits`. It
+    is built lazily inside this DAG rather than read from the staged
+    ``bench_grams4`` artifact: on an empty store that artifact (and
+    the doc_grams4 stream under it) would add builds and bytes the
+    run does not need."""
+    grams = shingles(F.split(F.col("text"), " "), 4)
+    held = F.col("doc_id") % BENCH_MOD == 0
+    bench = benchmark_grams(docs.select("doc_id", grams.alias("grams")))
     # flagged_ids is consumed three times downstream (kept anti-join,
     # flagged semi-join, plus each ledger .count()); truncate its
     # lineage so the broadcast gram join and per-doc distinct-gram
     # aggregation run once. It is O(flagged docs) one-column rows —
     # the same size class as the survivors checkpoint in pretrain_run.
-    flagged_ids = flagged_ids.localCheckpoint()
+    flagged_ids = (
+        contamination_hits(
+            survivors.select("doc_id", F.explode(grams).alias("gram")),
+            bench,
+        )
+        .filter(F.col("n_hits") >= CONTAM_MIN_HITS)
+        .select("doc_id")
+        .localCheckpoint()
+    )
+    candidates = survivors.filter(~held)
     kept = candidates.join(flagged_ids, "doc_id", "left_anti")
     flagged = candidates.join(flagged_ids, "doc_id", "left_semi")
-    return kept, bench_held, flagged
+    return kept, survivors.filter(held), flagged
 
 
 def _has_embeddings(sf_dir: str) -> bool:
@@ -206,37 +195,10 @@ def _span_signal(spark: SparkSession, sf_dir: str) -> dict:
     }
 
 
-def pack_plan(train: DataFrame, ctx_tokens: int = CTX_TOKENS) -> DataFrame:
-    """q_pack_sequences' greedy sequential bin plan over the TRAIN
-    split: per source, docs fill ctx_tokens-sized bins in doc_id
-    order. Returns (source, bin, docs, tokens)."""
-    from pyspark.sql import Window
-
-    w = (
-        Window.partitionBy("source")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    binned = train.select(
-        "source",
-        "n_tok",
-        F.floor((F.sum("n_tok").over(w) - F.col("n_tok")) / ctx_tokens)
-        .cast("long")
-        .alias("bin"),
-    )
-    return binned.groupBy("source", "bin").agg(
-        F.count(F.lit(1)).alias("docs"),
-        F.sum("n_tok").cast("long").alias("tokens"),
-    )
-
-
 def pretrain_run(
     spark: SparkSession,
     sf_dir: str,
     out_dir: str,
-    min_tokens: int = 4,
-    ctx_tokens: int = CTX_TOKENS,
-    contam_min_hits: int = CONTAM_MIN_HITS,
     n_shards: int = 8,
 ) -> dict:
     """Run the full composition; returns the audit ledger.
@@ -268,9 +230,7 @@ def pretrain_run(
         span_signal = prefetch(_span_signal)
 
         docs = _t(spark, sf_dir, "documents")
-        survivors, curate_stats = curate_corpus(
-            spark, sf_dir, min_tokens=min_tokens
-        )
+        survivors, curate_stats = curate_corpus(spark, sf_dir)
         # One checkpoint at the curation frontier: every downstream stage
         # (decontaminate, split, pack, export) re-consumes the survivor
         # set several times; without truncation each count would re-run
@@ -286,12 +246,14 @@ def pretrain_run(
         if labels is not None:
             labels.result()  # a failed prefetch fails the run, as inline
 
-        kept, bench_held, flagged = decontaminate(
-            docs, survivors, min_hits=contam_min_hits
-        )
+        kept, bench_held, flagged = decontaminate(docs, survivors)
         kept = kept.select(
-            "doc_id", "source", "text", _tok_count().alias("n_tok")
-        ).withColumn("split", _split_col())
+            "doc_id",
+            "source",
+            "text",
+            n_tokens(F.col("text")).alias("n_tok"),
+            split_col().alias("split"),
+        )
         kept = kept.localCheckpoint()
 
         split_census = {
@@ -304,8 +266,7 @@ def pretrain_run(
             .collect()
         }
         train = kept.filter(F.col("split") == "train")
-        plan = pack_plan(train, ctx_tokens=ctx_tokens)
-        pack_census = plan.agg(
+        pack_census = pack_bins(train).agg(
             F.count(F.lit(1)).alias("bins"),
             F.sum("docs").alias("docs"),
             F.sum("tokens").alias("tokens"),
@@ -335,7 +296,7 @@ def pretrain_run(
                 "bins": int(pack_census["bins"]),
                 "docs": int(pack_census["docs"]),
                 "tokens": int(pack_census["tokens"]),
-                "ctx_tokens": ctx_tokens,
+                "ctx_tokens": CTX_TOKENS,
             },
             "export": {
                 "shards": len(manifest),

@@ -12,7 +12,7 @@ beyond-reference extensions for LLM data pipelines (SURVEY.md §2.11).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from prueba_tecnica_analista_etl_spark.functions.text import shingles
@@ -33,6 +33,58 @@ CTX_TOKENS = 512
 # decision uses a threshold — single-gram overlap is mostly generic
 # phrases. CONTAM_MIN_HITS distinct shared grams flags a doc for drop.
 CONTAM_MIN_HITS = 3
+# Every BENCH_MOD-th doc (by id) stands in for the held-out evaluation
+# benchmark. The oracle SQL spells it out as ``% 50``.
+BENCH_MOD = 50
+
+
+def pack_bins(docs: DataFrame) -> DataFrame:
+    """Greedy sequential pack plan over (source, doc_id, n_tok): per
+    source, docs fill CTX_TOKENS-sized bins in doc_id order, and a doc
+    belongs to the bin where its first token lands. Returns (source,
+    bin, docs, tokens). The running sum is windowed per source, so no
+    global-order single-partition window exists at any scale."""
+    w = (
+        Window.partitionBy("source")
+        .orderBy("doc_id")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    binned = docs.select(
+        "source",
+        "n_tok",
+        F.floor((F.sum("n_tok").over(w) - F.col("n_tok")) / CTX_TOKENS)
+        .cast("long")
+        .alias("bin"),
+    )
+    return binned.groupBy("source", "bin").agg(
+        F.count(F.lit(1)).alias("docs"),
+        F.sum("n_tok").cast("long").alias("tokens"),
+    )
+
+
+def benchmark_grams(doc_grams: DataFrame) -> DataFrame:
+    """The held-out benchmark's distinct gram vocabulary (one ``gram``
+    column) from a (doc_id, grams array) frame."""
+    return (
+        doc_grams.filter(F.col("doc_id") % BENCH_MOD == 0)
+        .select(F.explode("grams").alias("gram"))
+        .distinct()
+    )
+
+
+def contamination_hits(grams: DataFrame, bench: DataFrame) -> DataFrame:
+    """(doc_id, n_hits): per training doc (every doc outside the
+    holdout), the number of distinct benchmark grams among its
+    (doc_id, gram) rows. The benchmark vocabulary is small by
+    construction, so it is broadcast and the probe is a map-side
+    left-semi join: the corpus gram stream is never shuffled, only the
+    matched grams reach the per-doc distinct count."""
+    return (
+        grams.filter(F.col("doc_id") % BENCH_MOD != 0)
+        .join(F.broadcast(bench), "gram", "left_semi")
+        .groupBy("doc_id")
+        .agg(F.count_distinct("gram").alias("n_hits"))
+    )
 
 
 @query(
@@ -114,24 +166,9 @@ def q_doc_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
     nt = F.size(F.split(F.col("text"), " ")).cast("long")
-    w = (
-        Window.partitionBy("source")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    binned = d.select("source", "doc_id", nt.alias("nt")).select(
-        "source",
-        "nt",
-        F.floor((F.sum("nt").over(w) - F.col("nt")) / CTX_TOKENS)
-        .cast("long")
-        .alias("bin"),
-    )
-    return binned.groupBy("source", "bin").agg(
-        F.count(F.lit(1)).alias("docs"),
-        F.sum("nt").cast("long").alias("tokens"),
-        F.floor(F.sum("nt") * 100 / CTX_TOKENS).cast("long").alias(
-            "fill_pct"
-        ),
+    bins = pack_bins(d.select("source", "doc_id", nt.alias("n_tok")))
+    return bins.withColumn(
+        "fill_pct", F.floor(F.col("tokens") * 100 / CTX_TOKENS).cast("long")
     )
 
 
@@ -165,29 +202,28 @@ def doc_grams4_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def bench_grams4_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The held-out benchmark's DISTINCT 4-gram vocabulary (one
-    ``gram`` column), staged once per corpus (r14): both contamination
-    consumers (the census and the decontamination filter) and the
-    pretrain run's holdout stage probe this same set, and rebuilding
-    it per query re-ran explode+distinct over the benchmark docs each
-    time (~0.43 s/call at sf0.1). In a real pipeline the benchmark
+    """The held-out benchmark's DISTINCT 4-gram vocabulary
+    (:func:`benchmark_grams` over the doc_grams4 artifact), staged once
+    per corpus: both contamination queries (the census and the
+    decontamination filter) probe this same set, and rebuilding it per
+    query re-ran explode+distinct over the benchmark docs each time
+    (~0.43 s/call at sf0.1). ``pretrain_run`` builds the same set
+    lazily inside its own DAG instead, so a run on an empty store does
+    not stage the gram artifacts. In a real pipeline the benchmark
     gram set IS a staged artifact, rebuilt when the eval set changes —
     here the corpus fingerprint in the artifact key plays that role.
-    The ``%50`` holdout rule is part of the key so a re-cut can never
-    serve a stale vocabulary."""
+    The holdout modulus is part of the key so a re-cut can never serve
+    a stale vocabulary."""
     from prueba_tecnica_analista_etl_spark.artifacts import (
         corpus_artifact,
     )
 
-    def build() -> DataFrame:
-        g4 = doc_grams4_frame(spark, sf_dir)
-        return (
-            g4.filter(F.col("doc_id") % 50 == 0)
-            .select(F.explode("grams").alias("gram"))
-            .distinct()
-        )
-
-    return corpus_artifact(spark, sf_dir, "bench_grams4:m50", build)
+    return corpus_artifact(
+        spark,
+        sf_dir,
+        f"bench_grams4:m{BENCH_MOD}",
+        lambda: benchmark_grams(doc_grams4_frame(spark, sf_dir)),
+    )
 
 
 @query(
@@ -237,20 +273,14 @@ def bench_grams4_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     g4 = doc_grams4_frame(spark, sf_dir)
-    grams = g4.select("doc_id", F.explode("grams").alias("gram"))
-    # benchmark gram vocabulary from the staged artifact (r14) — see
-    # bench_grams4_frame; rebuilding it inline cost ~0.43 s/call.
-    bench = bench_grams4_frame(spark, sf_dir)
-    hits = (
-        grams.filter(F.col("doc_id") % 50 != 0)
-        .join(F.broadcast(bench), "gram", "left_semi")
-        .groupBy("doc_id")
-        .agg(F.count_distinct("gram").alias("n_hits"))
+    hits = contamination_hits(
+        g4.select("doc_id", F.explode("grams").alias("gram")),
+        bench_grams4_frame(spark, sf_dir),
     )
     # Per-doc gram-count denominator rides the artifact (array
     # length at build time), NOT a distinct over the gram stream —
     # the overlap fraction costs nothing extra at 100 TB.
-    corpus = g4.filter(F.col("doc_id") % 50 != 0).select(
+    corpus = g4.filter(F.col("doc_id") % BENCH_MOD != 0).select(
         "doc_id", "source", "n_grams"
     )
     return (
@@ -1663,6 +1693,13 @@ def q_source_priority_dedup(
     )
 
 
+def split_col() -> Column:
+    """Deterministic train/val/test assignment of ``doc_id``: its first
+    md5-hex nibble, < 'c' train (12/16), < 'e' val (2/16), else test."""
+    nib = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1)
+    return F.when(nib < "c", "train").when(nib < "e", "val").otherwise("test")
+
+
 @query(
     "q_train_val_split",
     """
@@ -1693,16 +1730,10 @@ def q_source_priority_dedup(
 )
 def q_train_val_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
-    nib = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1)
-    split = (
-        F.when(nib < "c", "train")
-        .when(nib < "e", "val")
-        .otherwise("test")
-    )
     return (
         d.select(
             "source",
-            split.alias("split"),
+            split_col().alias("split"),
             F.size(F.split("text", " ")).alias("n_tok"),
         )
         .groupBy("source", "split")
@@ -1798,19 +1829,16 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
     g4 = doc_grams4_frame(spark, sf_dir)
-    grams = g4.select("doc_id", F.explode("grams").alias("gram"))
-    # staged benchmark gram vocabulary (r14) — see bench_grams4_frame.
-    bench = bench_grams4_frame(spark, sf_dir)
     flagged = (
-        grams.filter(F.col("doc_id") % 50 != 0)
-        .join(F.broadcast(bench), "gram", "left_semi")
-        .groupBy("doc_id")
-        .agg(F.count_distinct("gram").alias("n_hits"))
+        contamination_hits(
+            g4.select("doc_id", F.explode("grams").alias("gram")),
+            bench_grams4_frame(spark, sf_dir),
+        )
         .filter(F.col("n_hits") >= CONTAM_MIN_HITS)
         .select("doc_id")
     )
     return (
-        d.filter(F.col("doc_id") % 50 != 0)
+        d.filter(F.col("doc_id") % BENCH_MOD != 0)
         .join(flagged, "doc_id", "left_anti")
         .select(
             "doc_id",
@@ -1883,14 +1911,8 @@ def q_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = _t(spark, sf_dir, "documents")
-    nib = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1)
-    split = (
-        F.when(nib < "c", "train")
-        .when(nib < "e", "val")
-        .otherwise("test")
-    )
     return split_leakage_census(
-        d.select(split.alias("split"), "text"), "text"
+        d.select(split_col().alias("split"), "text"), "text"
     )
 
 

@@ -46,7 +46,7 @@ from prueba_tecnica_analista_etl_spark.functions.vectors import (
     sign_words,
 )
 from prueba_tecnica_analista_etl_spark.plans.queries import _t, query
-from prueba_tecnica_analista_etl_spark.session import ensure_runtime_conf
+from prueba_tecnica_analista_etl_spark.session import session_clone
 from prueba_tecnica_analista_etl_spark.sources.tables import spread
 from prueba_tecnica_analista_etl_spark.streaming.replay import (
     replay_as_stream,
@@ -1525,6 +1525,19 @@ def q_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _stream_session(spark: SparkSession) -> SparkSession:
+    """The session the stream queries run on: a memoized clone of
+    ``spark`` with 4 shuffle partitions. Stateful ops run exactly
+    `shuffle.partitions` state tasks per micro-batch (no AQE in
+    streaming), so the session default (sized for batch shuffles)
+    over-fragments these replays' tiny state — measured 2× slower at
+    32 than 8, and 4 is the sweet spot. The clone shares the
+    SparkContext but not the SQL conf, so the caller's session is
+    never mutated. At scale this constant is the state-store sizing
+    knob and is pinned by the first checkpoint."""
+    return session_clone(spark, {"spark.sql.shuffle.partitions": "4"})
+
+
 @query(
     "q_stream_dedupe",
     """
@@ -1578,8 +1591,7 @@ def q_stream_dedupe(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     data_dir, schema = write_overlapping_replay(spark, sf_dir, "events")
-    s = ensure_runtime_conf(spark.newSession())
-    s.conf.set("spark.sql.shuffle.partitions", "4")
+    s = _stream_session(spark)
     stream = replay_as_stream(s, data_dir, schema, max_files_per_trigger=1)
     # Project before the dedup for sink width: every column the dedup
     # keeps is written to the result sink, and the query reports only
@@ -1666,16 +1678,7 @@ def q_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     data_dir, schema = write_replay_files(
         spark, sf_dir, "events", n_files=4
     )
-    # Stateful ops run exactly `shuffle.partitions` state tasks per
-    # micro-batch (no AQE in streaming), so the session default (sized
-    # for batch shuffles) over-fragments this replay's tiny state —
-    # measured 2× slower at 32 than 8, and 4 is the sweet spot for this
-    # replay's state size. Size state partitions on a session CLONE
-    # (shared SparkContext, independent SQL conf): the caller's session
-    # is never mutated. At scale this constant is the state-store
-    # sizing knob and is pinned by the first checkpoint.
-    s = ensure_runtime_conf(spark.newSession())
-    s.conf.set("spark.sql.shuffle.partitions", "4")
+    s = _stream_session(spark)
     stream = replay_as_stream(s, data_dir, schema, max_files_per_trigger=2)
     out = run_available_now(
         sessionize(stream, with_end=True),
@@ -1699,8 +1702,7 @@ def q_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _corpus_curate_oracle_sql(rounds: int = 3) -> str:
     """DuckDB oracle for the FULL curation pipeline (enabled by the
     engine-neutral minhash pairs): quality
-    gate (>= 4 tokens; the 0.0 stopword-ratio floor is vacuous on
-    non-empty docs, matching the engine default), exact dedup
+    gate (>= 4 tokens), exact dedup
     (row_number keep-first per text), endpoint-restricted pairs, the
     greedy min-id survivor FIXPOINT unrolled to the engine's exact
     ``rounds`` iterations (alive_k = endpoints − {b : ∃(a,b), a ∈
@@ -1760,8 +1762,8 @@ def _corpus_curate_oracle_sql(rounds: int = 3) -> str:
     _corpus_curate_oracle_sql(),
     doc="flagship training-data composition, ORACLE-EXACT end-to-end "
     "(the engine-neutral minhash pairs make the "
-    "whole DAG SQL-expressible): quality gate (length + stopword "
-    "density) -> exact dedup (content keep-first) -> minhash "
+    "whole DAG SQL-expressible): quality gate (minimum length) "
+    "-> exact dedup (content keep-first) -> minhash "
     "near-dup purge (greedy min-id survivor fixpoint, 3 rounds + "
     "enforcement, unrolled term-for-term in the oracle) as ONE lazy "
     "DAG (pipelines/corpus.py); returns the surviving corpus.",
@@ -1957,9 +1959,6 @@ def q_multimodal_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     "partitioned sink variant is the 100 TB path).",
 )
 def q_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from prueba_tecnica_analista_etl_spark.session import (
-        ensure_runtime_conf,
-    )
     from prueba_tecnica_analista_etl_spark.streaming.replay import (
         replay_as_stream,
         write_replay_files,
@@ -1972,8 +1971,7 @@ def q_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     data_dir, schema = write_replay_files(
         spark, sf_dir, "events", n_files=4
     )
-    s = ensure_runtime_conf(spark.newSession())
-    s.conf.set("spark.sql.shuffle.partitions", "4")
+    s = _stream_session(spark)
     stream = (
         replay_as_stream(s, data_dir, schema, max_files_per_trigger=2)
         .filter(F.col("user_id").isNotNull())
@@ -2109,8 +2107,7 @@ def q_stream_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     data_dir, schema = write_replay_files(
         spark, sf_dir, "documents", n_files=4, time_col="doc_id"
     )
-    s = ensure_runtime_conf(spark.newSession())
-    s.conf.set("spark.sql.shuffle.partitions", "4")
+    s = _stream_session(spark)
     state_root = os.path.join(
         os.path.dirname(data_dir), "_sinks", "q_stream_neardup"
     )

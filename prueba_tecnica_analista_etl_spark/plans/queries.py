@@ -1757,7 +1757,7 @@ def q_footer_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         footer_stats_session,
     )
 
-    s = ensure_runtime_conf(footer_stats_session(spark))
+    s = footer_stats_session(spark)
     orders = s.read.parquet(f"{sf_dir}/orders.parquet")
     return orders.agg(
         F.count(F.lit(1)).cast("long").alias("n_rows"),

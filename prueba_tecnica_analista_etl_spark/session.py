@@ -12,6 +12,8 @@ Pandas-UDF operators).
 from __future__ import annotations
 
 import os
+import threading
+import weakref
 
 from pyspark.sql import SparkSession
 
@@ -82,3 +84,32 @@ def ensure_runtime_conf(spark: SparkSession) -> SparkSession:
     spark.conf.set("spark.sql.ansi.enabled", "false")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     return spark
+
+
+def session_clone(spark: SparkSession, confs: dict[str, str]) -> SparkSession:
+    """A clone of ``spark`` (shared SparkContext, own SQL conf) with
+    :func:`ensure_runtime_conf` and ``confs`` set, memoized per parent
+    session and conf set.
+
+    Queries that need a conf the caller's session must not see run on
+    such a clone. A fresh clone per call is not free: each one that
+    starts a stream adds a listener to the shared SparkContext's
+    listener bus and never removes it, and building one costs several
+    py4j round trips."""
+    key = tuple(sorted(confs.items()))
+    with _CLONES_LOCK:
+        clones = _CLONES.setdefault(spark, {})
+        s = clones.get(key)
+        if s is None:
+            s = ensure_runtime_conf(spark.newSession())
+            for k, v in confs.items():
+                s.conf.set(k, v)
+            clones[key] = s
+    return s
+
+
+# parent session -> {conf set: clone}. The parent is a weak key, so the
+# memo never pins a stopped session; a clone does not refer back to its
+# parent, so the entry dies with it.
+_CLONES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_CLONES_LOCK = threading.Lock()

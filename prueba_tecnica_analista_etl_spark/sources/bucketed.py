@@ -49,7 +49,6 @@ def write_bucketed(
     keys: str | Sequence[str],
     buckets: int,
     path: str | None = None,
-    sort: bool = True,
 ) -> None:
     """Persist ``df`` as a catalog table hash-bucketed by ``keys``
     into ``buckets`` files per partition (one shuffle now, no join
@@ -61,13 +60,11 @@ def write_bucketed(
       lives in the session catalog (Spark only trusts bucket layout
       it recorded in the metastore); with ``path`` the data files
       land at the given directory instead of the warehouse.
-    * ``sort=True`` additionally sorts within buckets on the same
-      keys so a sort-merge join skips its per-task sort too.
+    * rows are sorted within buckets on the same keys, so a
+      sort-merge join skips its per-task sort too.
     """
     ks = _as_keys(keys)
-    w = df.write.mode("overwrite").bucketBy(buckets, *ks)
-    if sort:
-        w = w.sortBy(*ks)
+    w = df.write.mode("overwrite").bucketBy(buckets, *ks).sortBy(*ks)
     if path is not None:
         w = w.option("path", path)
     w.format("parquet").saveAsTable(table)

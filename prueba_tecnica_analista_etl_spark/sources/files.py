@@ -145,7 +145,6 @@ def compact_partitioned(
     data_path: str,
     target_bytes: int = 128 << 20,
     min_files: int = 2,
-    balance: bool = False,
 ) -> dict[str, int]:
     """Compact every leaf partition dir of a ``key=value``-layout
     table; returns {partition dir name: new file count} for the
@@ -186,9 +185,7 @@ def compact_partitioned(
             if f.is_file() and f.name.endswith(".parquet")
         )
         if n_parts >= min_files:
-            done[e.name] = compact_parquet(
-                spark, e.path, target_bytes, balance
-            )
+            done[e.name] = compact_parquet(spark, e.path, target_bytes)
     return done
 
 

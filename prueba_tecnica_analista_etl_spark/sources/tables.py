@@ -10,13 +10,13 @@ testdata is a single file per table.
 from __future__ import annotations
 
 import os
-import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from prueba_tecnica_analista_etl_spark.artifacts import census_artifact
+from prueba_tecnica_analista_etl_spark.session import session_clone
 
 TABLES = (
     "region",
@@ -173,23 +173,13 @@ def footer_stats_session(spark: SparkSession) -> SparkSession:
     proven value-equal to the V1 path by
     ``test_footer_stats_session_pushes_aggregates``.
 
-    The configured clone is MEMOIZED per parent session (same
-    rationale as plans/queries.py's per-session plan cache): session
-    construction + conf py4j round
-    trips are the documented dominant driver-side cost of repeated
-    tiny queries, and un-cached clones would accumulate on the shared
-    SparkContext for the process lifetime.
+    The configured clone is memoized per parent session
+    (:func:`session.session_clone`).
     """
-    s = _FOOTER_SESSIONS.get(spark)
-    if s is None:
-        s = spark.newSession()
-        s.conf.set("spark.sql.parquet.aggregatePushdown", "true")
-        s.conf.set("spark.sql.sources.useV1SourceList", "")
-        _FOOTER_SESSIONS[spark] = s
-    return s
-
-
-# parent session -> configured clone. The parent is a weak key, so the
-# memo never pins a stopped session; the clone does not refer back to
-# its parent, so the entry dies with it.
-_FOOTER_SESSIONS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+    return session_clone(
+        spark,
+        {
+            "spark.sql.parquet.aggregatePushdown": "true",
+            "spark.sql.sources.useV1SourceList": "",
+        },
+    )

@@ -430,30 +430,24 @@ def foreach_batch_neardup_gate(
     return apply
 
 
-def accepted_ids(
-    spark, index_dir: str, snapshot: bool = True
-) -> DataFrame:
+def accepted_ids(spark, index_dir: str) -> DataFrame:
     """The gate's accepted set as a (doc_id) frame — the batch read
     consumers join against (never a driver collect).
 
-    ``snapshot=True`` (default) ``localCheckpoint``s the frame before
-    returning, so it stays valid even if a LATER drain's tiered
-    compaction folds and removes the unit directories the scan
-    referenced (the lazy form would hand callers a use-after-free
-    contract: a held frame turns into FileNotFound at action time once
-    a fold runs). The accepted set is
-    one id column, so the eager materialization is cheap at any
-    corpus size the driver sees; pass ``snapshot=False`` to get the
-    raw lazy union scan ONLY when consuming it before the next drain
-    of the same index (q_stream_neardup's single-call pattern)."""
+    The frame is ``localCheckpoint``ed before it is returned, so it
+    stays valid even if a LATER drain's tiered compaction folds and
+    removes the unit directories the scan referenced (a lazy scan
+    would turn into FileNotFound at action time once a fold runs).
+    The accepted set is one id column, so the eager materialization
+    is cheap at any corpus size the driver sees."""
     committed = _committed(index_dir)
     if not committed:
         raise FileNotFoundError(
             f"near-dup gate index has no committed batches: {index_dir}"
         )
-    ids = (
+    return (
         spark.read.parquet(*[os.path.join(p, "docs") for p in committed])
         .select("doc_id")
         .distinct()
+        .localCheckpoint()
     )
-    return ids.localCheckpoint() if snapshot else ids

@@ -2386,3 +2386,62 @@ def test_semdedup_with_ivf_quantizer(spark, tmp_path):
         ).collect()
     }
     assert labels[21] == 20 and labels[22] == 20 and labels[31] == 30
+
+
+def test_pretrain_decontaminate_keeps_what_q_decontaminate_keeps(
+    spark, sf_dir
+):
+    """pretrain_run's decontamination stage over the whole corpus keeps
+    exactly the doc ids the registry's q_decontaminate emits, and holds
+    back exactly the benchmark docs."""
+    from prueba_tecnica_analista_etl_spark.pipelines.pretrain import (
+        decontaminate,
+    )
+    from prueba_tecnica_analista_etl_spark.plans.queries import _t
+
+    def ids(df):
+        return {r["doc_id"] for r in df.select("doc_id").collect()}
+
+    docs = _t(spark, sf_dir, "documents")
+    kept, held, flagged = decontaminate(docs, docs)
+    want = ids(REGISTRY["q_decontaminate"].fn(spark, sf_dir))
+    assert ids(kept) == want
+    assert ids(held) == {i for i in ids(docs) if i % 50 == 0}
+    assert ids(flagged) == ids(docs) - want - ids(held)
+
+
+def test_pack_bins_equals_q_pack_sequences_without_fill(spark, sf_dir):
+    """The pack helper pretrain_run calls, run over every document,
+    is q_pack_sequences minus its fill_pct column."""
+    from prueba_tecnica_analista_etl_spark.functions.text import n_tokens
+    from prueba_tecnica_analista_etl_spark.plans.extensions_pipeline import (
+        pack_bins,
+    )
+    from prueba_tecnica_analista_etl_spark.plans.queries import _t
+
+    docs = _t(spark, sf_dir, "documents").select(
+        "source", "doc_id", n_tokens(F.col("text")).alias("n_tok")
+    )
+    got = sorted(tuple(r) for r in pack_bins(docs).collect())
+    want = sorted(
+        tuple(r)
+        for r in REGISTRY["q_pack_sequences"]
+        .fn(spark, sf_dir)
+        .drop("fill_pct")
+        .collect()
+    )
+    assert got == want and len(got) > 1
+
+
+def test_quality_gate_is_a_length_floor(spark):
+    """The gate keeps a 4-token doc with no stopword at all and drops a
+    3-token doc made only of stopwords."""
+    from prueba_tecnica_analista_etl_spark.pipelines.corpus import (
+        quality_gate,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, "zz yy xx ww"), (2, "the a of")], "doc_id long, text string"
+    )
+    out = quality_gate(docs).collect()
+    assert [(r["doc_id"], r["n_tokens"]) for r in out] == [(1, 4)]

@@ -1560,3 +1560,17 @@ def test_replay_dir_survives_bare_clear_artifacts(
     assert os.path.isdir(data_dir)
     out = run_available_now(replay_as_stream(spark, data_dir, schema), spark)
     assert out.count() == load_table(spark, sf, "events").count() > 0
+
+
+def test_stream_queries_do_not_grow_the_listener_bus(spark, sf_dir):
+    """Every stream query runs on one memoized clone per caller session:
+    a fresh clone per call would add a streaming listener to the shared
+    SparkContext's listener bus on each call, and none is ever
+    removed."""
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    sessionize = REGISTRY["q_stream_sessionize"].fn
+    n_rows = sessionize(spark, sf_dir).count()
+    before = bus.listeners().size()
+    for _ in range(3):
+        assert sessionize(spark, sf_dir).count() == n_rows
+    assert bus.listeners().size() == before
