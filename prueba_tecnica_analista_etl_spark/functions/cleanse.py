@@ -30,16 +30,9 @@ def try_double_or_zero(c: Column) -> Column:
     return F.coalesce(c.try_cast("double"), F.lit(0.0))
 
 
-def split_composite(c: Column, sep: str = r"\|") -> Column:
-    """Pipe-composite decode (F9): ``id|code|lpad(key,8,'0')|suffix`` →
-    ArrayType; read parts with ``element_at`` (1-based)."""
-    return F.split(c, sep)
-
-
 def json_long(c: Column, path: str) -> Column:
     """JSON field → BIGINT with errors→0 (F10+F8): schema-on-read for
     string-encoded props (testdata ``events.props``)."""
     return F.coalesce(
         F.get_json_object(c, path).try_cast("long"), F.lit(0)
     )
-

@@ -8,18 +8,17 @@ Codec strategy (three tiers, auto-selected per payload at runtime):
 1. pure-Python container-header parsing — PNG/GIF/JPEG dimensions,
    RIFF/WAVE and MP4 duration/sample-rate — always available, real
    metadata with zero dependencies;
-2. optional real codecs — ``PIL`` for decode/resize/pixel features,
-   ``av`` for video frame extraction — try-imported INSIDE each batch
-   closure (executors may lack both the package and the libs; closures
-   pickle by value, imports must happen worker-side) and used whenever
-   the import succeeds AND the payload actually decodes;
-3. a deterministic stub — length-derived dimensions, byte-window
-   frames, byte-histogram features — for payloads nothing can decode
-   (including this container, which ships neither PIL nor av).
+2. an optional real codec — ``PIL`` for image decode and pixel
+   features — try-imported INSIDE each batch closure (executors may
+   lack both the package and the libs; closures pickle by value,
+   imports must happen worker-side) and used whenever the import
+   succeeds AND the payload actually decodes;
+3. a deterministic stub — length-derived dimensions and
+   byte-histogram features — for payloads nothing can decode.
 
 The declared oracle query (q_multimodal_meta) runs over
 :func:`fake_assets` text payloads, which no real codec can open, so
-its output is byte-identical whether or not PIL/av are installed —
+its output is byte-identical whether or not PIL is installed —
 the optional tier never destabilizes recorded hashes.
 
 Design: binary payloads never pass through Python row-at-a-time; each
@@ -39,14 +38,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-ASSET_SCHEMA = T.StructType(
-    [
-        T.StructField("asset_id", T.LongType(), False),
-        T.StructField("media_type", T.StringType(), False),
-        T.StructField("content", T.BinaryType(), True),
-    ]
-)
-
 META_SCHEMA = T.StructType(
     [
         T.StructField("asset_id", T.LongType(), False),
@@ -60,7 +51,7 @@ META_SCHEMA = T.StructType(
     ]
 )
 
-# Force-disable the optional real-codec tier (PIL/av) even where the
+# Force-disable the optional real-codec tier (PIL) even where the
 # libraries are importable — for A/B-testing the stub path or pinning
 # bit-stable output on a cluster that happens to have codecs installed.
 DISABLE_REAL_CODECS = False
@@ -312,165 +303,6 @@ def extract_metadata(assets: DataFrame) -> DataFrame:
             yield decode_batch(pdf)
 
     return assets.mapInPandas(gen, schema=META_SCHEMA)
-
-
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("asset_id", T.LongType(), False),
-        T.StructField("media_type", T.StringType(), False),
-        T.StructField("content", T.BinaryType(), True),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-    ]
-)
-
-
-def resize_images(
-    assets: DataFrame, width: int = 224, height: int = 224
-) -> DataFrame:
-    """Resize image assets to ``width×height`` via ``mapInPandas``.
-
-    Plumbing is real (schema, Arrow batch flow, pass-through of
-    non-image rows). The pixel transform uses PIL when it is
-    importable worker-side AND the payload decodes (output re-encoded
-    as PNG); otherwise the deterministic stub — payload truncated/
-    padded to the target pixel budget — keeps the pipeline runnable
-    in codec-free containers like this one.
-    """
-    allow_real = not DISABLE_REAL_CODECS
-    budget = width * height
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pil_image = None
-        if allow_real:
-            try:
-                from PIL import Image as pil_image  # noqa: N813
-            except ImportError:
-                pil_image = None
-
-        def do_resize(b: bytes | None) -> bytes | None:
-            if b is None:
-                return None
-            if pil_image is not None:
-                import io
-
-                try:
-                    with pil_image.open(io.BytesIO(bytes(b))) as img:
-                        out = io.BytesIO()
-                        img.resize((width, height)).save(
-                            out, format="PNG"
-                        )
-                        return out.getvalue()
-                except Exception:
-                    pass  # undecodable → deterministic stub
-            return bytes(b[:budget]).ljust(budget, b"\0")
-
-        for pdf in batches:
-            is_img = pdf["media_type"].str.startswith("image/")
-            content = pdf["content"].where(
-                ~is_img, pdf["content"].map(do_resize)
-            )
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "media_type": pdf["media_type"],
-                    "content": content,
-                    "width": is_img.map(lambda i: width if i else None),
-                    "height": is_img.map(lambda i: height if i else None),
-                }
-            ).astype({"width": "Int32", "height": "Int32"})
-
-    return assets.mapInPandas(gen, schema=RESIZED_SCHEMA)
-
-
-FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("asset_id", T.LongType(), False),
-        T.StructField("frame_idx", T.IntegerType(), False),
-        T.StructField("frame", T.BinaryType(), True),
-    ]
-)
-
-
-def sample_frames(assets: DataFrame, every_n: int = 10) -> DataFrame:
-    """Sample every ``every_n``-th frame from video assets — a
-    row-expanding ``mapInPandas`` (one asset → many frames).
-
-    When ``av`` (PyAV) imports worker-side and the payload demuxes,
-    every ``every_n``-th decoded frame is emitted as PNG bytes;
-    otherwise fixed-size byte windows stand in for decoded frames.
-    Either way the fan-out shape — the part that matters for
-    partitioning and memory at 100 TB — is real: output rows ≫ input
-    rows, bounded per Arrow batch by ``maxRecordsPerBatch``, never a
-    whole video in memory beyond the already-loaded payload.
-    """
-    allow_real = not DISABLE_REAL_CODECS
-    frame_bytes = 64
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        av_mod = None
-        if allow_real:
-            try:
-                import av as av_mod  # noqa: N813
-            except ImportError:
-                av_mod = None
-
-        def real_frames(b: bytes) -> list[bytes] | None:
-            if av_mod is None:
-                return None
-            import io
-
-            try:
-                frames = []
-                with av_mod.open(io.BytesIO(b)) as container:
-                    for i, frame in enumerate(
-                        container.decode(video=0)
-                    ):
-                        if i % every_n:
-                            continue
-                        buf = io.BytesIO()
-                        frame.to_image().save(buf, format="PNG")
-                        frames.append(buf.getvalue())
-                return frames
-            except Exception:
-                return None  # undemuxable → byte-window stub
-
-        for pdf in batches:
-            out_ids, out_idx, out_frames = [], [], []
-            for aid, mt, b in zip(
-                pdf["asset_id"], pdf["media_type"], pdf["content"]
-            ):
-                if not mt.startswith("video/") or b is None:
-                    continue
-                b = bytes(b)
-                decoded = real_frames(b)
-                # empty list falls through to the stub, not `is not
-                # None`: a container av opens but that yields zero
-                # frames must still emit ≥1 row per asset, matching
-                # the stub's guarantee — otherwise the same bytes
-                # produce environment-dependent fan-out.
-                if decoded:
-                    for j, fr in enumerate(decoded):
-                        out_ids.append(aid)
-                        out_idx.append(j * every_n)
-                        out_frames.append(fr)
-                    continue
-                n_frames = max(len(b) // frame_bytes, 1)
-                for i in range(0, n_frames, every_n):
-                    out_ids.append(aid)
-                    out_idx.append(i)
-                    out_frames.append(
-                        b[i * frame_bytes : (i + 1) * frame_bytes]
-                    )
-            yield pd.DataFrame(
-                {
-                    "asset_id": pd.Series(out_ids, dtype="int64"),
-                    "frame_idx": pd.Series(out_idx, dtype="int32"),
-                    "frame": out_frames,
-                }
-            )
-
-    return assets.mapInPandas(gen, schema=FRAME_SCHEMA)
 
 
 FEATURE_SCHEMA = T.StructType(

@@ -1,55 +1,1 @@
 """Relational operators (SURVEY.md §2.2-§2.7)."""
-
-from prueba_tecnica_analista_etl_spark.operators.dedupe import (
-    distinct_count_audit,
-    dup_census,
-    keep_first,
-    tag_source_order,
-)
-from prueba_tecnica_analista_etl_spark.operators.upsert import (
-    assert_unique,
-    upsert,
-    upsert_with_metrics,
-)
-from prueba_tecnica_analista_etl_spark.operators.pivot import (
-    count_sum_pivot,
-    count_sum_rollup,
-    top_duplicates,
-)
-from prueba_tecnica_analista_etl_spark.operators.topk import top_k_per_group
-from prueba_tecnica_analista_etl_spark.operators.events import (
-    cohort_retention,
-    ordered_funnel,
-)
-from prueba_tecnica_analista_etl_spark.operators.upsert import snapshot_diff
-from prueba_tecnica_analista_etl_spark.operators.bloom import (
-    bitset_prefilter,
-    bitset_semi_join,
-)
-from prueba_tecnica_analista_etl_spark.operators.rank import (
-    bucketed_rank,
-    md5_prefix_bucket,
-    numeric_bucket,
-)
-
-__all__ = [
-    "keep_first",
-    "tag_source_order",
-    "dup_census",
-    "distinct_count_audit",
-    "upsert",
-    "upsert_with_metrics",
-    "assert_unique",
-    "count_sum_pivot",
-    "count_sum_rollup",
-    "top_duplicates",
-    "top_k_per_group",
-    "snapshot_diff",
-    "ordered_funnel",
-    "cohort_retention",
-    "bitset_prefilter",
-    "bitset_semi_join",
-    "bucketed_rank",
-    "md5_prefix_bucket",
-    "numeric_bucket",
-]

@@ -10,10 +10,7 @@ nondeterministic and never used where the survivor matters.
 
 Scale notes (100 TB): the window shuffles once on the dedup key —
 same cost as any groupBy. For heavily-skewed keys AQE skew handling
-applies; when the survivor order is a pure min/max of one sortable
-column, prefer the ``min_by``-style aggregate (one partial-agg pass,
-map-side combine) over the full window sort — provided here as
-``keep_first_agg``.
+applies.
 """
 
 from __future__ import annotations
@@ -98,48 +95,6 @@ def keep_first(
     return out
 
 
-def keep_first_agg(
-    df: DataFrame, keys: Sequence[str], order_col: str
-) -> DataFrame:
-    """Scale-path keep-first when survivor order is a single column:
-    one hash aggregation with map-side partial combine (no full sort).
-
-    The survivor is ``min`` of ``struct(order_col, *other_cols)`` — a
-    lexicographic min over WHOLE ROWS, so when ``order_col`` ties
-    within a key group the remaining columns break the tie and every
-    output column still comes from the same input row. (Independent
-    per-column ``min_by`` calls would tear rows on ties: each could
-    pick its value from a different tied row, fabricating a composite
-    survivor that never existed.)
-
-    NULL ``order_col`` rows sort LAST, matching ``min_by``'s
-    ignore-null ordering: a bare struct-min would rank a NULL
-    order field FIRST (a null struct field is still a comparable
-    struct) and crown an unordered row the survivor. The leading
-    is-null flag (false < true) keeps NULL-order rows from winning
-    unless the whole group is NULL-ordered — unlike ``min_by``, such
-    an all-NULL group still yields a (deterministic) survivor instead
-    of disappearing.
-    """
-    others = [c for c in df.columns if c not in set(keys) | {order_col}]
-    packed = df.groupBy(*keys).agg(
-        F.min(
-            F.struct(
-                F.col(order_col).isNull().alias("_null_last"),
-                F.col(order_col).alias(order_col),
-                *[F.col(c).alias(c) for c in others],
-            )
-        ).alias("_first")
-    )
-    return packed.select(
-        *keys,
-        *[
-            F.col("_first").getField(c).alias(c)
-            for c in [order_col] + others
-        ],
-    ).select(*df.columns)
-
-
 def dup_census(df: DataFrame, keys: Sequence[str]) -> DataFrame:
     """Duplicate census: keys occurring more than once with their count
     (A3/P5; reference ``HAVING COUNT(*) > 1`` duplicate hunt and the
@@ -182,65 +137,4 @@ def approx_distinct_count_audit(
     return df.agg(
         F.count(F.lit(1)).alias("total"),
         F.approx_count_distinct(key, rsd).alias("uniq_approx"),
-    )
-
-
-def rolling_distinct_sketch(
-    df: DataFrame,
-    time_col: str,
-    key: str,
-    window_days: int = 7,
-    lg_k: int = 14,
-) -> DataFrame:
-    """Mergeable-sketch form of the trailing-window distinct census
-    (q_rolling_distinct's 100 TB twin): distinct ``key`` count per
-    trailing ``window_days`` calendar days, per day.
-
-    The exact form pays one dedup shuffle of O(keys × active-days)
-    rows plus a ×window re-expansion. This form aggregates each day
-    into ONE Datasketches HLL sketch (``hll_sketch_agg`` — fixed
-    ~2^lg_k bytes per day regardless of key cardinality, partial-merge
-    map-side like any algebraic agg), then unions the O(days × window)
-    census-sized sketch frame across the trailing window and reads the
-    estimate. After the daily aggregate NOTHING touches data-scale
-    rows — the trailing union joins a frame with one row per day.
-
-    Sketches are a hash census, not a sample: the estimate is
-    deterministic for a given dataset and lg_k, within the published
-    HLL error (~1.04/sqrt(2^lg_k) rsd, <1% at the default). Rows-only
-    semantics, same as approx_distinct_count_audit: another engine's
-    sketch bytes differ, so the proof is the tolerance test against
-    the exact query, not an oracle hash. Output: (day, {key}_7d_est
-    named ``est`` column) one row per day present in ``df``.
-    """
-    daily = (
-        df.filter(F.col(key).isNotNull())
-        .groupBy(F.to_date(time_col).alias("day"))
-        .agg(
-            F.expr(f"hll_sketch_agg({key}, {lg_k})").alias("_sk")
-        )
-    )
-    days = daily.select(F.col("day").alias("anchor"))
-    # Same anchor-expansion shape as q_rolling_distinct: explode each
-    # day's sketch to the anchors it contributes to (map-only xwindow
-    # fan-out over the ONE-ROW-PER-DAY frame), equi-join the anchor
-    # grid — a range join would run as a nested-loop over the grid.
-    expanded = daily.select(
-        F.explode(
-            F.sequence(
-                F.col("day"), F.date_add(F.col("day"), window_days - 1)
-            )
-        ).alias("anchor"),
-        "_sk",
-    )
-    return (
-        expanded.join(F.broadcast(days), "anchor")
-        .groupBy("anchor")
-        .agg(
-            F.expr(
-                "cast(hll_sketch_estimate(hll_union_agg(_sk, true)) "
-                "as bigint)"
-            ).alias("est")
-        )
-        .select(F.col("anchor").alias("day"), "est")
     )

@@ -1,15 +1,14 @@
 """On-disk IVF index (the similarity-search SCALE path made concrete).
 
-``ann_ivf`` (plans/extensions_scale.py) proves the IVF *algebra* —
-coarse quantizer, nprobe pruning, exact re-rank — but prunes with an
-in-plan ``filter`` over an unpartitioned corpus, so every query still
-LISTS every file. This module is the 100 TB layout its docstring
-promises: the corpus is written ``partitionBy("cluster")`` so the
-probe filter becomes a PARTITION filter — a query physically reads
-``nprobe/k`` of the index, enforced by the scan (directory pruning),
-not by a post-scan filter. The centroid model rides alongside as a
-k×dim parquet sidecar (the MODEL — O(k·dim), scale-independent), so
-search needs no refit and no access to the original embeddings table.
+IVF is a coarse quantizer, nprobe pruning and an exact re-rank. Pruned
+with an in-plan ``filter`` over an unpartitioned corpus, every query
+would still LIST every file. Here the corpus is written
+``partitionBy("cluster")`` so the probe filter becomes a PARTITION
+filter — a query physically reads ``nprobe/k`` of the index, enforced
+by the scan (directory pruning), not by a post-scan filter. The
+centroid model rides alongside as a k×dim parquet sidecar (the MODEL —
+O(k·dim), scale-independent), so search needs no refit and no access
+to the original embeddings table.
 
 Layout::
 
@@ -138,69 +137,6 @@ def ivf_probe_clusters(
     )
     sims = Cn @ (qv / max(np.linalg.norm(qv), 1e-12))
     return [int(i) for i in np.argsort(-sims)[:nprobe]]
-
-
-def ivf_search_index_batch(
-    spark: SparkSession,
-    path: str,
-    queries: list[tuple[int, list[float]]],
-    nprobe: int = 4,
-    topk: int = 10,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Top-``topk`` per query for a BATCH of ``(q_id, vector)`` probes
-    in ONE scan of the probed partitions — the on-disk twin of
-    ``operators.similarity.cosine_topk_batch``.
-
-    The scan's partition filter is the UNION of every query's probe
-    set (still a directory-level prune: a 100-query batch over a
-    k=1024 index typically touches a small fraction of leaves); each
-    query then re-ranks only rows whose cluster is in ITS OWN probe
-    list (an ``array_contains`` predicate on the broadcast query
-    frame), so per-query work matches the single-probe form exactly —
-    one corpus pass regardless of query count, per-query ranking via
-    ``row_number() <= k`` (WindowGroupLimit pruning).
-    """
-    centroids = ivf_read_model(spark, path)
-    rows = [
-        (
-            int(q_id),
-            [float(x) for x in vec],
-            ivf_probe_clusters(centroids, vec, nprobe),
-        )
-        for q_id, vec in queries
-    ]
-    all_probes = sorted({c for _, _, probes in rows for c in probes})
-    qdf = spark.createDataFrame(
-        rows, "q_id long, qv array<double>, probes array<int>"
-    )
-    idx = _read_data(spark, path).filter(
-        F.col("cluster").isin(all_probes)
-    )
-    from pyspark.sql import Window
-
-    scored = (
-        idx.join(
-            F.broadcast(qdf),
-            F.array_contains(F.col("probes"), F.col("cluster")),
-        )
-        .select(
-            "q_id",
-            id_col,
-            "cluster",
-            F.round(cosine(F.col("vector"), F.col("qv")), 4).alias(
-                "cos_sim"
-            ),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(
-        F.desc("cos_sim"), F.asc(id_col)
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= topk)
-        .drop("rn")
-    )
 
 
 def ivf_search_index(

@@ -5,16 +5,13 @@ DataFrame operators.
 
 All checks are single-pass aggregations (``count_if``-style conditional
 sums fuse into one HashAggregate — one scan however many rules).
-``observe()`` variants attach metrics to a flowing DataFrame without a
-separate action, the right shape for 100 TB pipelines where an extra
-audit ``count()`` means an extra full scan.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -71,24 +68,6 @@ def profile_stats(df: DataFrame, col: str) -> DataFrame:
     )
 
 
-def approx_quantiles(df: DataFrame, col: str, probs: Sequence[float]) -> list:
-    """Percentile profile via ``approx_percentile`` (single-pass
-    KLL-style sketch — the 100 TB path; exact percentile needs a global
-    sort)."""
-    row = df.agg(
-        F.percentile_approx(col, list(probs), 10000).alias("q")
-    ).first()
-    # empty frame / all-NULL column: the sketch returns NULL — report
-    # an empty profile instead of raising on list(None)
-    return [] if row["q"] is None else list(row["q"])
-
-
-def checksum(df: DataFrame, col: str) -> DataFrame:
-    """Numeric checksum of a column (A9; designed before/after-stage
-    integrity totals, ``nb:347``)."""
-    return df.agg(F.round(F.sum(col), 2).alias("checksum"))
-
-
 def ref_integrity_orphans(
     child: DataFrame, parent: DataFrame, on: Sequence[str]
 ) -> DataFrame:
@@ -113,10 +92,3 @@ def uniqueness_verdict(df: DataFrame, key: str) -> DataFrame:
         .otherwise(F.lit("ERROR - duplicates found"))
         .alias("verification")
     )
-
-
-def observed_count(df: DataFrame, name: str) -> tuple[DataFrame, Observation]:
-    """Attach a row-count metric without a separate action (A1 via
-    ``observe`` — the reference's step counters, free at scale)."""
-    obs = Observation(name)
-    return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs

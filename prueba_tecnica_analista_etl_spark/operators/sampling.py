@@ -1,134 +1,17 @@
-"""Deterministic hash-based sampling/splitting operators — the
-DataFrame-first API behind the declared split/sample queries
-(q_train_val_split, q_mixture_sample, q_stratified_sample prove the
-mechanism against DuckDB oracles; these generalize it to caller
-frames, keys and fractions).
+"""Content-leakage audit for hash-of-key splits.
 
-Why hash-of-key and never rand(): re-runs, retries, upstream
-re-orders and incremental refreshes must assign every row the SAME
-split — the property that prevents silent train/validation leakage
-over a pipeline's lifetime. Each row's uniform variate is the first
-15 hex chars of md5(key) read as an integer (60 bits — granular far
-beyond any practical fraction), so assignment is a pure map-side
-function of the key: zero shuffle, engine-portable, and salting the
-key with a run id is re-drawing the sample.
+The declared split/sample queries (q_train_val_split, q_mixture_sample,
+q_stratified_sample) assign every row by a hash of its key and never by
+rand(): re-runs, retries, upstream re-orders and incremental refreshes
+must give a row the SAME split, or train/validation leakage creeps in
+over a pipeline's lifetime. What a key hash cannot prevent is the same
+content under two keys, which :func:`split_leakage_census` measures.
 """
 
 from __future__ import annotations
 
-from collections.abc import Mapping, Sequence
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-# 16^15 — the variate space of a 15-hex-digit md5 prefix. 15 digits
-# (not 16) keeps the value strictly inside a signed 64-bit long.
-_SPACE = 16**15
-
-
-def _variate(key: Column, salt: str = "") -> Column:
-    """Uniform integer variate in [0, 16^15) as a pure function of the
-    key (map-side, no shuffle). The ONE definition of the draw — the
-    three operators share it so salting and NULL handling can never
-    diverge between them. A NULL key hashes via a sentinel string, so
-    NULL-key rows get a real, deterministic draw (they all share one
-    split/fold — the same equal-keys-stay-together contract as any
-    other repeated key) instead of NULL-propagating into silent row
-    loss or last-split dumping."""
-    s = F.coalesce(key.cast("string"), F.lit("\x00__null_key__"))
-    if salt:
-        s = F.concat(s, F.lit(salt))
-    return F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")
-
-
-def hash_split(
-    df: DataFrame,
-    key_col: str,
-    fractions: Mapping[str, float],
-    split_col: str = "split",
-    salt: str = "",
-) -> DataFrame:
-    """Deterministically assign every row to exactly one named split
-    with the given fractions (must sum to ~1.0). Returns ``df`` plus
-    ``split_col``. ``salt`` re-draws the assignment (e.g. per run id)
-    while keeping it deterministic.
-
-    Rows with equal keys land in the same split — splitting on a
-    doc/user/session id therefore never separates a key's rows across
-    splits (the leakage-safety property); pass a row-unique key for
-    independent per-row assignment.
-    """
-    total = sum(fractions.values())
-    if not 0.999 <= total <= 1.001:
-        raise ValueError(f"fractions sum to {total}, expected 1.0")
-    v = _variate(F.col(key_col), salt)
-    expr: Column | None = None
-    cum = 0.0
-    names = list(fractions)
-    for name in names[:-1]:
-        cum += fractions[name]
-        bound = int(cum * _SPACE)
-        cond = v < F.lit(bound)
-        expr = (
-            F.when(cond, name)
-            if expr is None
-            else expr.when(cond, name)
-        )
-    last = names[-1]
-    out = F.lit(last) if expr is None else expr.otherwise(last)
-    return df.withColumn(split_col, out)
-
-
-def kfold(
-    df: DataFrame,
-    key_col: str,
-    k: int,
-    fold_col: str = "fold",
-    salt: str = "",
-) -> DataFrame:
-    """Deterministic k-fold assignment: ``fold_col`` in [0, k) as a
-    pure hash of the key — every row of a key shares its fold, folds
-    are reproducible across runs/engines, and cross-validation is
-    ``df.filter(fold != i)`` / ``filter(fold == i)`` per round with no
-    stored assignment table."""
-    if k < 2:
-        raise ValueError("k must be >= 2")
-    v = _variate(F.col(key_col), salt)
-    return df.withColumn(fold_col, (v % k).cast("int"))
-
-
-def stratified_hash_sample(
-    df: DataFrame,
-    key_col: str,
-    fraction: float,
-    strata: Sequence[str] = (),
-    fractions: Mapping[str, float] | None = None,
-    salt: str = "",
-) -> DataFrame:
-    """Deterministic sample keeping ~``fraction`` of rows — optionally
-    per stratum (``strata`` names the stratum column(s); ``fractions``
-    overrides the rate for specific stratum values of the FIRST
-    stratum column, the q_stratified_sample shape). Same md5 variate
-    as the split operators, so the sample is stable under re-runs and
-    composes with them (a row's sample draw and split draw use the
-    same key but are independent given distinct salts)."""
-    if fractions and not strata:
-        raise ValueError("fractions given without a strata column")
-    if len(strata) > 1:
-        raise ValueError(
-            "multi-column strata unsupported; pre-concat into one "
-            "column or call per stratum"
-        )
-    v = _variate(F.col(key_col), "smp" + salt)
-    if fractions and strata:
-        rate: Column = F.lit(float(fraction))
-        for val, fr in fractions.items():
-            rate = F.when(
-                F.col(strata[0]) == val, float(fr)
-            ).otherwise(rate)
-    else:
-        rate = F.lit(float(fraction))
-    return df.filter(v < (rate * _SPACE).cast("long"))
 
 
 def split_leakage_census(
@@ -142,8 +25,8 @@ def split_leakage_census(
     ``audited`` split, how many of its rows carry content whose
     fingerprint ALSO appears in the ``reference`` split.
 
-    :func:`hash_split` guarantees a KEY never straddles splits — but
-    two different keys can carry byte-identical content (mirrors,
+    A hash-of-key split (q_train_val_split) guarantees a KEY never
+    straddles splits — but two different keys can carry byte-identical content (mirrors,
     re-crawls, boilerplate), and that is the leakage an eval split
     actually suffers: the model has seen the val document, under
     another id. This census quantifies it before anyone trains.

@@ -31,23 +31,6 @@ from pyspark.sql import functions as F
 from prueba_tecnica_analista_etl_spark.operators.dedupe import keep_first
 
 
-def assert_unique(df: DataFrame, keys: Sequence[str]) -> None:
-    """Uniqueness precondition (D5). Spark has no constraints; this is
-    the assertion-query equivalent of the reference's
-    ``ALTER TABLE … ADD CONSTRAINT UNIQUE`` (``seccion3_sql.sql:206``).
-    Raises ``ValueError`` on violation.
-    """
-    dup = (
-        df.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .filter(F.col("cnt") > 1)
-        .limit(1)
-        .count()
-    )
-    if dup:
-        raise ValueError(f"uniqueness violated on {list(keys)}")
-
-
 def upsert(
     base: DataFrame,
     new: DataFrame,
@@ -103,9 +86,9 @@ def bucketed_upsert(
     dedup_order: Sequence[Column | str] | None = None,
 ) -> DataFrame:
     """MERGE into a BUCKETED catalog base table, preserving the layout
-    (SCALE.md §2's repeated-merge story; S17 wired to J4 — the r12
-    verdict ask; reference lineage ``seccion3_sql.sql:269-294``, the
-    repeatedly-run UPSERT procedure).
+    (SCALE.md §2's repeated-merge story; S17 wired to J4; reference
+    lineage ``seccion3_sql.sql:269-294``, the repeatedly-run UPSERT
+    procedure).
 
     The join-rewrite is exactly :func:`upsert`; what changes is WHERE
     the shuffle lands. The base side is a catalog table bucketed on
@@ -120,8 +103,8 @@ def bucketed_upsert(
 
     The result is staged as ``{table}__upsert_staged`` with the SAME
     bucket spec (one bucketBy write — the same price any upsert pays
-    to materialize its output), then swapped in rename-aside (r13
-    verdict task 3, the crash-safe ordering)::
+    to materialize its output), then swapped in rename-aside (the
+    crash-safe ordering)::
 
         ALTER TABLE {table}  RENAME TO {table}__upsert_old
         ALTER TABLE {staged} RENAME TO {table}

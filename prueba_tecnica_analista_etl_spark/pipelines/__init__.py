@@ -1,21 +1,1 @@
 """End-to-end pipelines re-expressing the reference's entry points."""
-
-from prueba_tecnica_analista_etl_spark.pipelines.flights import (
-    clean_for_export,
-    flights_pipeline,
-    validate_emails,
-    validate_phones,
-)
-from prueba_tecnica_analista_etl_spark.pipelines.incremental import (
-    incremental_etl,
-    target_frame,
-)
-
-__all__ = [
-    "flights_pipeline",
-    "validate_emails",
-    "validate_phones",
-    "clean_for_export",
-    "incremental_etl",
-    "target_frame",
-]

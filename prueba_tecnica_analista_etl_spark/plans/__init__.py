@@ -5,11 +5,10 @@ window order is derived from the committed correctness records in
 ``__spark_entry__.order``.
 """
 
-from prueba_tecnica_analista_etl_spark.plans.queries import (
+from prueba_tecnica_analista_etl_spark.plans.queries import (  # noqa: F401
     REGISTRY,
     QuerySpec,
     oracle_sql,
-    queries,
 )
 
 # Importing extension modules registers their queries (decorator
@@ -18,5 +17,3 @@ from prueba_tecnica_analista_etl_spark.plans import extensions_text  # noqa: E40
 from prueba_tecnica_analista_etl_spark.plans import extensions_pipeline  # noqa: E402,F401
 from prueba_tecnica_analista_etl_spark.plans import extensions_scale  # noqa: E402,F401
 from prueba_tecnica_analista_etl_spark.plans import extensions_distributed  # noqa: E402,F401
-
-__all__ = ["REGISTRY", "QuerySpec", "queries", "oracle_sql"]

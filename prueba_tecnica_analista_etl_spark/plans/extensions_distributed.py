@@ -1,4 +1,4 @@
-"""Distributed-algebra extension queries (round 8).
+"""Distributed-algebra extension queries.
 
 Each query here demonstrates a SCALE PATTERN that naive SQL gets wrong
 at 100 TB, expressed so the result is still exactly ANSI-SQL-checkable
@@ -412,7 +412,7 @@ def q_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").over(grp).alias("n"),
     )
     # The cut VALUES are third/fourth whole-partition windows over the
-    # SAME hash(event_type) partitioning (r14 optimization): Catalyst
+    # SAME hash(event_type) partitioning: Catalyst
     # stacks all four window specs behind ONE exchange, and the final
     # groupBy(event_type) reuses that partitioning too — so the whole
     # query is one scan + one exchange, vs the former two scans + a
@@ -717,7 +717,7 @@ def q_rolling_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     # The deduplicated (day, user) activity frame is the shared
     # feature every rolling-distinct window reads — staged once per
-    # corpus (r15, the doc_term_tf discipline): O(users × active
+    # corpus (the doc_term_tf discipline): O(users × active
     # days) rows, strictly smaller than events. The per-call work
     # (×7 anchor explode, day-grid join, per-anchor distinct count)
     # stays live.
@@ -772,7 +772,7 @@ def _value_bucket_census(spark, sf_dir, name, g, sum_cols):
 def _eval_day_value_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(day, value, cnt, pos, clk) over non-NULL-score events — the
     eval-census family's shared scored frame, staged ONCE per corpus
-    (r15, the doc_term_tf discipline): day = ts::date (NULL kept for
+    (the doc_term_tf discipline): day = ts::date (NULL kept for
     NULL ts, so the global censuses lose no rows), cnt/pos/clk the
     row/purchase/click counts at that (day, value). Every eval query
     previously re-scanned events and re-derived its own projection
@@ -902,7 +902,7 @@ def q_eval_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates (seccion3_sql.sql:85-210) with the evaluation-side
     census a curation pipeline needs before shipping a training set.
     """
-    # g folds from the staged per-distinct-score frame (r15): the
+    # g folds from the staged per-distinct-score frame: the
     # artifact rows ARE the (value, cnt, pos) census the oracle's
     # GROUP BY value produces — zero events scans, zero groupBy
     # exchange per invocation (the corpus is scanned once per CORPUS
@@ -1004,7 +1004,7 @@ def q_ks_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     / staging-audit designs (nb:287-340, seccion3_sql.sql:85-210)
     from per-batch scalar checks to a between-population drift test.
     """
-    # g folds from the staged per-distinct-score frame (r15): ca/cb
+    # g folds from the staged per-distinct-score frame: ca/cb
     # are exactly the artifact's purchase/click counts, and the
     # oracle's implicit value set (scores with >= 1 purchase-or-click
     # row) is the pos+clk > 0 filter — zero events scans per
@@ -1039,9 +1039,8 @@ def q_ks_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # The census already holds both totals (sum of the per-bucket
         # sums) — driver-known ints, so they ride the plan as
-        # LITERALS (r15): the former one-row createDataFrame +
-        # broadcast cross join against the census frame is a pure
-        # projection now.
+        # LITERALS: a projection, where a one-row createDataFrame
+        # would add a broadcast cross join against the census frame.
         tot = None
         na = F.lit(sum(t[0] or 0 for _, t in totals)).cast("long")
         nb = F.lit(sum(t[1] or 0 for _, t in totals)).cast("long")
@@ -1126,7 +1125,7 @@ def q_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates (seccion3_sql.sql:85-210) extended to the
     score-vs-outcome census its §3 verdict checks imply.
     """
-    # Folds from the staged per-distinct-score frame (r15): the bin
+    # Folds from the staged per-distinct-score frame: the bin
     # index depends on value alone, so binning the (value, cnt, pos)
     # census weighted by its exact-integer counts reproduces the
     # row-level histogram bit-for-bit (sum of longs re-associates
@@ -1220,7 +1219,7 @@ def q_eval_auc_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     (seccion3_sql.sql:85-210; q_volume_by_day) upgraded from counts
     to a per-day ranking-quality metric.
     """
-    # g IS the staged (day, value, cnt, pos) frame (r15): the
+    # g IS the staged (day, value, cnt, pos) frame: the
     # artifact groups at exactly this granularity (NULL-day rows are
     # the NULL-ts rows the oracle excludes — filtered here), so the
     # per-invocation scan AND the groupBy(day, value) exchange are
@@ -1342,7 +1341,7 @@ def q_eval_topk_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("lab"),
         )
     )
-    # npos folds from the staged per-distinct-score frame (r15) —
+    # npos folds from the staged per-distinct-score frame —
     # the second events scan this query paid was exactly this global
     # positive count; the ranked head below still scans events once
     # (it needs event_id, which no shared census carries).
@@ -1432,7 +1431,7 @@ def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: the reference's duplicate-frequency analyses
     (Seccion_1_Excel top-20 duplicates; nb:150-160) at the
     key-distribution level, made feasible for unbounded-cardinality
-    keys — the skew-diagnosis census operators/salt.py acts on.
+    keys — the skew-diagnosis census that tells which join keys are hot.
     """
     from prueba_tecnica_analista_etl_spark.operators.sketch import (
         mg_candidates,
@@ -1444,9 +1443,8 @@ def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("event_type")
     )
     tot = ev.agg(F.count(F.lit(1)).alias("n"))
-    # The MG candidate set is staged per corpus (r15 — the same
-    # census_artifact discipline q_stream_heavy_hitters has used
-    # since r10): ANY partitioning's sketch yields a valid superset
+    # The MG candidate set is staged per corpus (the same
+    # census_artifact discipline as q_stream_heavy_hitters): ANY partitioning's sketch yields a valid superset
     # (PODS-2012 mergeable property), so a staged candidate list is
     # exactly as sound as a per-call one, and the per-invocation
     # Arrow sketch pass (mapInPandas over a spread() copy of the
@@ -1554,8 +1552,8 @@ def q_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         acc = MGStreamAccumulator("event_type", capacity=_HH_CAPACITY)
         # The checkpoint is single-use (the drained candidate set is
         # what gets staged, via census_artifact below) — remove it
-        # after the drain instead of leaking one dir per build (r10
-        # ADVICE; a RESUMABLE stream would instead keep a stable
+        # after the drain instead of leaking one dir per build (a
+        # RESUMABLE stream would instead keep a stable
         # checkpoint and pass ledger_dir= for the durable sketch
         # ledger, the crash-resume form tests/test_streaming.py
         # exercises).
@@ -1582,7 +1580,7 @@ def q_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("event_type")
     )
     tot = ev.agg(F.count(F.lit(1)).alias("n"))
-    # no spread() (r14): the recount is a pushed isin filter + a
+    # no spread(): the recount is a pushed isin filter + a
     # map-side partial aggregate — the round-robin repartition was a
     # full fact-table shuffle with nothing to parallelize (the same
     # finding as q_heavy_hitters' recount pass).
@@ -1625,7 +1623,7 @@ def _zipf_oracle_sql() -> str:
 @query(
     "q_zipf_census",
     _zipf_oracle_sql(),
-    doc="extension (corpus-health census, r14): vocabulary Zipf-curve "
+    doc="extension (corpus-health census): vocabulary Zipf-curve "
     "census — per log2-rank bucket (rank octave), term count and "
     "total frequency mass. Natural text follows freq ∝ 1/rank, so "
     "consecutive octaves carry roughly equal mass; an octave whose "

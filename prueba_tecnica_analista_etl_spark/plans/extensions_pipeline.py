@@ -174,7 +174,7 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def doc_grams4_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc 4-token shingle stream over ``documents`` — (doc_id,
-    source, grams array, n_grams), staged ONCE per corpus (r13): the
+    source, grams array, n_grams), staged ONCE per corpus: the
     contamination screen and the decontamination filter both explode
     this artifact instead of each re-running tokenize+shingle over
     the corpus. Arrays keep duplicates (the consumers' distinct
@@ -414,7 +414,7 @@ def q_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     "data.",
 )
 def q_embed_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # no spread() (r14): the per-row work is one posexplode + partial
+    # no spread(): the per-row work is one posexplode + partial
     # avg — map-side-reducing from the first operator, so the
     # unconditional round-robin repartition moved every vector across
     # the wire to parallelize ~nothing (A/B at sf0.1: 0.66 -> 0.23 s;
@@ -640,10 +640,9 @@ def _unigram_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the DuckDB oracle below).  ``nlp6(total, cnt)`` approximates
 # ln(total/cnt)*1e6 (max observed error < 3 grid units) using ONLY
 # 64-bit integer arithmetic, so every engine computes bit-identical
-# values by construction — the r7 form quantized a RUNTIME ``ln`` onto
-# the grid, and a 1-ulp libm disagreement at a grid boundary flipped
-# q_perplexity_buckets' driver hash two rounds running (CORRECTNESS
-# r06/r07).  Algorithm (the q_length_histogram binary-length trick
+# values by construction — quantizing a RUNTIME ``ln`` onto the grid
+# is not enough: a 1-ulp libm disagreement at a grid boundary flipped
+# q_perplexity_buckets' driver hash.  Algorithm (the q_length_histogram binary-length trick
 # generalized to fractional bits):
 #
 # 1. integer part  e = floor(log2(total/cnt)) = length(bin(total div
@@ -737,7 +736,7 @@ def _unigram_scored_build(spark: SparkSession, sf_dir: str) -> DataFrame:
       consumers whose score feeds a sort/group KEY.  Each term's
       -ln(p) is the fixed-point integer logarithm ``nlp6`` (see
       _LOG_P above): ZERO runtime transcendentals anywhere in the key
-      path — the r7 form's single quantized ``ln`` still flipped the
+      path — a single quantized runtime ``ln`` still flipped the
       driver hash when the JVM's and DuckDB's libm disagreed by 1 ulp
       at a 1e-6 grid boundary.  ``sum(tf * nlp6)`` and ``sum(tf)``
       stay 64-bit integer arithmetic: identical in every engine
@@ -874,8 +873,8 @@ def q_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     "— a pure 64-bit integer floor-division of per-term fixed-point "
     "integer-log weights (_nlp6_spark_expr: binary-length integer "
     "part + renormalizing-squaring fractional bits — ZERO runtime "
-    "transcendentals in the key path, after the r6 float-mean AND the "
-    "r7 quantized-runtime-ln forms both flipped at the driver on "
+    "transcendentals in the key path; float-mean and "
+    "quantized-runtime-ln forms both flip the value hash on "
     "1-ulp libm disagreements), so every engine computes bit-"
     "identical keys by construction. doc_id makes the order total, so both "
     "engines cut identical tertiles; the integer key scale-shifts to "
@@ -913,8 +912,8 @@ def q_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("docs"),
             # sums/extrema of the DECIMAL(18,4) scores are exact
             # integer arithmetic in both engines. REPORTED as DOUBLE:
-            # the r6/r7 driver reds made this the only recorded-window
-            # query emitting a decimal column — a value-hash dtype no
+            # a decimal output column would make this the only
+            # recorded-window query emitting one — a value-hash dtype no
             # driver row has ever proven green — so the final cast
             # converts the identical exact decimal to the identical
             # correctly-rounded IEEE double in both engines (int/10^4
@@ -938,7 +937,7 @@ def q_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Source-mixture divergence census (round 8)
+# Source-mixture divergence census
 # ---------------------------------------------------------------------------
 
 # Per-source chain over svocab (keys source+term) + the corpus chain —
@@ -1087,53 +1086,6 @@ def q_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
             - F.expr("CAST(en_num div tokens AS BIGINT)")
         ).alias("kl_micro"),
     )
-
-
-def assign_quantile_buckets(
-    scored: DataFrame,
-    by: str = "source",
-    col: str = "logprob",
-    n_buckets: int = 3,
-    accuracy: int = 10_000,
-) -> DataFrame:
-    """The at-scale twin of q_perplexity_buckets' exact ntile split
-    (the zscore moments-twin pattern, applied to quantile bucketing).
-
-    ntile is rank-exact but shuffles every row of a group into its
-    window partition — on a single unbounded source that is the hot-key
-    funnel. This form never shuffles the scored rows at all: per-group
-    bucket EDGES come from ONE partial-aggregated groupBy
-    (``approx_percentile``'s sketch merges associatively map-side, so
-    the exchange carries |groups| sketch states, not rows), broadcast
-    back onto the frame, and bucket assignment is map-side arithmetic
-    (count of edges below the score). Rank ties that ntile splits by
-    position land wholly on one side of a value edge here — bucket
-    sizes are value-exact rather than count-exact, the standard
-    approx-quantile trade; the property test pins ≥90% per-doc label
-    agreement with the exact form on harness data.
-
-    Returns ``scored`` plus ``bucket_idx`` (1 = lowest scores) and,
-    for ``n_buckets=3``, the CCNet ``bucket`` label (tail/middle/head
-    — head holds the HIGHEST log-probabilities, matching
-    q_perplexity_buckets).
-    """
-    probs = [i / n_buckets for i in range(1, n_buckets)]
-    edges = scored.groupBy(by).agg(
-        F.percentile_approx(col, probs, accuracy).alias("_edges")
-    )
-    out = scored.join(F.broadcast(edges), by)
-    idx = (
-        F.size(F.filter("_edges", lambda e: e < F.col(col))) + 1
-    ).alias("bucket_idx")
-    out = out.withColumn("bucket_idx", idx)
-    if n_buckets == 3:
-        out = out.withColumn(
-            "bucket",
-            F.when(F.col("bucket_idx") == 1, "tail")
-            .when(F.col("bucket_idx") == 2, "middle")
-            .otherwise("head"),
-        )
-    return out.drop("_edges")
 
 
 @query(
@@ -1302,7 +1254,7 @@ def q_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = _t(spark, sf_dir, "documents")
-    # tf folded from the staged doc_term_tf artifact (r13)
+    # tf folded from the staged doc_term_tf artifact
     tf = doc_term_tf_frame(spark, sf_dir).select("doc_id", "term", "tf")
     df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n = d.agg(F.count(F.lit(1)).alias("n_docs"))
@@ -1337,7 +1289,7 @@ CLUSTER_MIN_SHARED = 3
 def fp8_ids_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Each distinct 8-token-shingle md5 fingerprint's sorted member
     doc_id array over the ``documents`` corpus — staged ONCE per
-    corpus (r13, the doc_shingle_frame discipline applied to the
+    corpus (the doc_shingle_frame discipline applied to the
     8-gram family): q_neardup_scores' candidate edges, q_dup_clusters'
     edge builder and q_dup_exposure's exposure census all fold this
     one frame instead of each re-running the corpus-scale
@@ -1945,8 +1897,8 @@ def q_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="extension (near-dup scoring, ORACLE-BACKED tier): exact "
     "Jaccard similarity for every candidate pair of the shared-"
     "shingle graph — md5 fingerprints end-to-end, value-hash-checked "
-    "against SQL (the FIRST oracle-backed near-dup tier; since r11 "
-    "the minhash/simhash LSH tiers are oracle-backed too, via "
+    "against SQL (the exact near-dup tier; the minhash/simhash LSH "
+    "tiers are oracle-backed too, via "
     "engine-neutral md5_60 hashing). Candidates: docs sharing >=3 "
     "distinct 8-token "
     "shingle fingerprints (shingle_edges — one fingerprint-keyed "
@@ -1966,7 +1918,7 @@ def q_neardup_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact near-dup pair scores over the shingle-fingerprint graph.
 
     The LSH tiers (minhash/simhash/ngram-jaccard — oracle-backed
-    since r11 via engine-neutral md5_60 hashing) are approximate by
+    via engine-neutral md5_60 hashing) are approximate by
     design; this query is the exact tier a curation run uses to
     AUDIT their recall: the same
     candidate edges q_dup_clusters clusters (docs sharing >=
@@ -1984,7 +1936,7 @@ def q_neardup_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: the duplicate-detection design of nb:150-160
     (exact drop_duplicates) extended to graded near-duplicates.
     """
-    # The staged per-fp member frame (r13): edges AND the size census
+    # The staged per-fp member frame: edges AND the size census
     # both fold the fp8_ids artifact — the corpus-scale explode+md5
     # subtree is paid once per corpus, not once per query.
     g = fp8_ids_frame(spark, sf_dir)
@@ -2089,7 +2041,7 @@ def q_dup_exposure(spark: SparkSession, sf_dir: str) -> DataFrame:
     ASC, doc_id ASC — the float ratio is reported, never a sort key:
     SURVEY §2.11 hash-stability discipline).
 
-    Scale shape (r9 verdict task 5 — the de-skewed form): n_shared is
+    Scale shape (the de-skewed form): n_shared is
     computed through its COMPLEMENT. A fingerprint is shared iff it
     appears in >=2 documents, so per doc
 
@@ -2115,7 +2067,7 @@ def q_dup_exposure(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep-first dedup; Seccion_1_Excel top-20 duplicates) lifted from
     row identity to CONTENT overlap, per document.
     """
-    # Both censuses fold the staged fp8_ids artifact (r13): a doc's
+    # Both censuses fold the staged fp8_ids artifact: a doc's
     # distinct-fp count is its membership count across fp rows, and
     # its globally-unique fps are the size-1 rows it owns — no corpus
     # scan, no (doc_id, fp) distinct exchange.
@@ -2178,7 +2130,7 @@ def q_dup_exposure(spark: SparkSession, sf_dir: str) -> DataFrame:
     "shuffle + a two-row census.",
 )
 def q_group_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Duplicate-aware split assignment (SURVEY §2.11, r10).
+    """Duplicate-aware split assignment (SURVEY §2.11).
 
     Why group-keyed: an eval/holdout split drawn per DOCUMENT puts
     each copy of a duplicated text independently into train or val —
@@ -2208,7 +2160,7 @@ def q_group_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     that stays leakage-safe when you must sample without fully
     deduplicating.
     """
-    # no spread() (r14): one md5 per row straight into a map-side
+    # no spread(): one md5 per row straight into a map-side
     # partial aggregate — the repartition shuffled the full corpus
     # text to parallelize a single hash call (A/B: 0.65 -> 0.33 s).
     g = (
@@ -2273,7 +2225,7 @@ def _entropy_oracle_sql() -> str:
 @query(
     "q_unigram_entropy",
     _entropy_oracle_sql(),
-    doc="extension (corpus-diversity census, r13): per-source unigram "
+    doc="extension (corpus-diversity census): per-source unigram "
     "Shannon entropy in fixed-point nats*1e6 — the drift/templating "
     "signal a curation pipeline watches per ingest source (a source "
     "whose entropy collapses went boilerplate; one whose entropy "
@@ -2293,7 +2245,7 @@ def q_unigram_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def build() -> DataFrame:
-        # Folded from the shared doc_term_tf artifact (r13): the
+        # Folded from the shared doc_term_tf artifact: the
         # token-stream explode is paid once for the whole term
         # family; this census is its per-source regrouping.
         from prueba_tecnica_analista_etl_spark.plans.extensions_text import (  # noqa: E501
@@ -2339,7 +2291,7 @@ def q_unigram_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Duplicate-span census — substring-level dedup signal (r14)
+# Duplicate-span census — substring-level dedup signal
 # ---------------------------------------------------------------------------
 
 # Overlapping k-token windows at stride s — the bounded form of
@@ -2429,7 +2381,7 @@ def _dup_spans_oracle_sql() -> str:
 @query(
     "q_dup_spans",
     _dup_spans_oracle_sql(),
-    doc="extension (duplicate-span census, new r14): substring-level "
+    doc="extension (duplicate-span census): substring-level "
     "dedup signal — doc-level dedup is complete, but a memorized "
     "SPAN_K-token run shared across documents (the suffix-array "
     "dedup shape from public literature) is invisible to whole-doc "

@@ -37,7 +37,6 @@ from prueba_tecnica_analista_etl_spark.functions.text import (
 )
 from prueba_tecnica_analista_etl_spark.functions.vectors import (
     as_double,
-    assign_clusters,
     cosine,
     hamming_words,
     ivf_fit,
@@ -1173,9 +1172,8 @@ def ivf_centroids(
     iters: int = 2,
 ):
     """The staged coarse quantizer for (corpus, k, iters) — shared by
-    every IVF consumer (ann_ivf per nprobe, the q_ann_recall sweep,
-    the on-disk index build), so a sweep over nprobe costs zero
-    refits and a fresh process reloads the model instead of
+    every IVF consumer (the q_ann_recall sweep, the on-disk index
+    build), so a sweep over nprobe costs zero refits and a fresh process reloads the model instead of
     re-fitting."""
     from prueba_tecnica_analista_etl_spark.artifacts import (
         census_artifact,
@@ -1201,8 +1199,8 @@ def cached_ivf_index(
     so the sweep audits the REAL shipped artifact (partitionBy(cluster)
     layout + centroid sidecar, operators/ivf_index.py) instead of an
     in-plan filter twin. Reuses the staged ``ivf_centroids`` quantizer,
-    so the in-plan ``ann_ivf`` tier and the index share one model and
-    their cluster ids are comparable. Staged through
+    so every IVF consumer shares one model and comparable cluster ids.
+    Staged through
     ``artifact_directory``, inheriting the store's per-key BUILD LOCK
     (concurrent consumers never double-write the index), its atomic
     publish, superseded-generation removal (no leaked temp-dir copies),
@@ -1233,59 +1231,6 @@ def cached_ivf_index(
     )
 
 
-def ann_ivf(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = 16,
-    nprobe: int = 4,
-    iters: int = 2,
-    topk: int = 10,
-) -> DataFrame:
-    """IVF ANN: spherical k-means coarse quantizer (deterministic fit,
-    see ``ivf_fit``), corpus assigned to its nearest centroid, query
-    probes the ``nprobe`` nearest centroids and exact-cosine re-ranks
-    only those clusters' members. With the corpus written partitioned
-    by cluster id, a query scans nprobe/k of the data — the IVF scale
-    path; ``nprobe == k`` degrades gracefully to exact brute force
-    (tested equal). Driver-side cost per query is O(dim + k·dim): the
-    query vector and the centroid model, never corpus data."""
-    import numpy as np
-
-    e = spread(_t(spark, sf_dir, "embeddings")).select(
-        "vec_id", as_double(F.col("embedding")).alias("v")
-    )
-    centroids = ivf_centroids(spark, sf_dir, e, k=k, iters=iters)
-    assigned = e.withColumn(
-        "cluster", assign_clusters(F.col("v"), centroids)
-    )
-    qv = np.asarray(
-        e.filter(F.col("vec_id") == 0).select("v").collect()[0][0],
-        dtype=np.float64,
-    )
-    Cn = centroids / np.maximum(
-        np.linalg.norm(centroids, axis=1, keepdims=True), 1e-12
-    )
-    sims = Cn @ (qv / max(np.linalg.norm(qv), 1e-12))
-    probes = [int(i) for i in np.argsort(-sims)[:nprobe]]
-
-    q = spark.createDataFrame(
-        [(qv.tolist(),)], "qv array<double>"
-    )
-    return (
-        assigned.filter(
-            F.col("cluster").isin(probes) & (F.col("vec_id") != 0)
-        )
-        .crossJoin(F.broadcast(q))
-        .select(
-            "vec_id",
-            "cluster",
-            F.round(cosine(F.col("v"), F.col("qv")), 4).alias("cos_sim"),
-        )
-        .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-        .limit(topk)
-    )
-
-
 @query(
     "q_ann_ivf",
     None,
@@ -1305,9 +1250,7 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stored rows are the same assignment, so the top-10 is
     # row-identical (A/B-proven) while the per-call cost drops from a
     # corpus-wide matmul to a directory-pruned read of nprobe/k of the
-    # index bytes — the 100 TB read path executed literally. The live
-    # in-plan form stays exercised as ann_ivf (brute-force-equality
-    # and recall tests).
+    # index bytes — the 100 TB read path executed literally.
     from prueba_tecnica_analista_etl_spark.operators.ivf_index import (
         ivf_search_index,
     )

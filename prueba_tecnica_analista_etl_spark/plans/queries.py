@@ -20,12 +20,14 @@ convention after measuring the testdata):
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from prueba_tecnica_analista_etl_spark.artifacts import _corpus_fingerprint
 from prueba_tecnica_analista_etl_spark.functions.cleanse import (
     digits_only,
     json_long,
@@ -35,13 +37,8 @@ from prueba_tecnica_analista_etl_spark.operators.dedupe import (
     dup_census,
     keep_first,
 )
-from prueba_tecnica_analista_etl_spark.operators.pivot import (
-    count_sum_pivot,
-    count_sum_rollup,
-    top_duplicates,
-)
+from prueba_tecnica_analista_etl_spark.operators.pivot import top_duplicates
 from prueba_tecnica_analista_etl_spark.operators.quality import (
-    count_if,
     profile_stats,
     ref_integrity_orphans,
     uniqueness_verdict,
@@ -54,6 +51,7 @@ from prueba_tecnica_analista_etl_spark.operators.topk import (
 from prueba_tecnica_analista_etl_spark.operators.upsert import upsert
 from prueba_tecnica_analista_etl_spark.session import ensure_runtime_conf
 from prueba_tecnica_analista_etl_spark.sources.tables import load_table
+from prueba_tecnica_analista_etl_spark.streaming.windows import tumbling_counts
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -76,10 +74,6 @@ def query(name: str, oracle: str | None, doc: str = ""):
     return deco
 
 
-def queries() -> dict[str, QueryFn]:
-    return {name: spec.fn for name, spec in REGISTRY.items()}
-
-
 def oracle_sql() -> dict[str, str]:
     return {
         name: spec.oracle
@@ -99,21 +93,29 @@ def oracle_sql() -> dict[str, str]:
 # collected with the session, so long-lived multi-session processes
 # never pin stopped sessions or their plans. Creating the cache
 # doubles as the once-per-session ensure_runtime_conf gate.
+#
+# A frame's file listing is frozen when it is built, so each entry
+# carries the corpus fingerprint the artifact store keys on and is
+# rebuilt when the corpus changes: an append or a rewrite of a table
+# is never served from a stale listing. Each entry fills under its
+# own lock, so threads resolving the same table build it once.
 _PLAN_CACHE_ATTR = "_ptae_plan_cache"
+_PLAN_CACHE_LOCK = threading.Lock()
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    cache = getattr(spark, _PLAN_CACHE_ATTR, None)
-    if cache is None:
-        ensure_runtime_conf(spark)
-        cache = {}
-        setattr(spark, _PLAN_CACHE_ATTR, cache)
-    key = (sf_dir, name)
-    df = cache.get(key)
-    if df is None:
-        df = load_table(spark, sf_dir, name)
-        cache[key] = df
-    return df
+    with _PLAN_CACHE_LOCK:
+        cache = getattr(spark, _PLAN_CACHE_ATTR, None)
+        if cache is None:
+            ensure_runtime_conf(spark)
+            cache = {}
+            setattr(spark, _PLAN_CACHE_ATTR, cache)
+        slot = cache.setdefault((sf_dir, name), [threading.Lock(), None])
+    fp = _corpus_fingerprint(sf_dir)
+    with slot[0]:
+        if slot[1] is None or slot[1][0] != fp:
+            slot[1] = (fp, load_table(spark, sf_dir, name))
+        return slot[1][1]
 
 
 def dec2(c: Column) -> Column:
@@ -813,22 +815,12 @@ def q_volume_by_day(spark: SparkSession, sf_dir: str) -> DataFrame:
            event_type, count(*) AS cnt
     FROM events GROUP BY 1, 2
     """,
-    doc="T2: tumbling 1-hour window × event_type (Spark window(); "
-    "streaming twin in streaming/windows.py asserts batch/stream parity).",
+    doc="T2: tumbling 1-hour window × event_type (Spark window()); the "
+    "body is streaming/windows.py's tumbling_counts, the same definition "
+    "the stream tests feed a file-replay stream.",
 )
 def q_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .select(
-            F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias(
-                "hour"
-            ),
-            "event_type",
-            "cnt",
-        )
-    )
+    return tumbling_counts(_t(spark, sf_dir, "events"))
 
 
 @query(
@@ -1638,8 +1630,8 @@ def q_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     "count window (same partitioning), then a partial-agged census "
     "— the zscore-window family's proven shape. At 100 TB the "
     "per-type sort is the bounded unit; for a single monster type "
-    "swap in approx_percentile (the assign_quantile_buckets "
-    "moments-twin pattern).",
+    "swap in approx_percentile edges broadcast back onto the rows "
+    "(the moments-twin pattern).",
 )
 def q_quantile_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events").filter(F.col("value").isNotNull())

@@ -1,37 +1,1 @@
 """Sources & sinks (SURVEY.md §2.1, S1-S11)."""
-
-from prueba_tecnica_analista_etl_spark.sources.tables import (
-    TABLES,
-    load_all,
-    load_table,
-    register_views,
-)
-from prueba_tecnica_analista_etl_spark.sources.bucketed import (
-    bucketed_join,
-    write_bucketed,
-)
-from prueba_tecnica_analista_etl_spark.sources.csv import (
-    flights_schema,
-    read_csv_repaired,
-    write_csv,
-)
-from prueba_tecnica_analista_etl_spark.sources.files import (
-    read_json,
-    read_orc,
-    write_json,
-    write_orc,
-)
-
-__all__ = [
-    "TABLES",
-    "load_all",
-    "load_table",
-    "register_views",
-    "flights_schema",
-    "read_csv_repaired",
-    "write_csv",
-    "read_json",
-    "read_orc",
-    "write_json",
-    "write_orc",
-]

@@ -31,10 +31,6 @@ TABLES = (
     "embeddings",
 )
 
-# Dimension tables small enough to broadcast at any scale factor
-# (region=5 rows, nation=25 — even at 100 TB these stay tiny).
-BROADCAST_DIMS = ("region", "nation")
-
 
 def normalize_event_time(df: DataFrame, col: str = "ts") -> DataFrame:
     """Normalize an event-time column to ``TimestampType`` regardless of
@@ -115,16 +111,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def read_evolving_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """Schema-evolution reader: a 100 TB table's files span schema
-    versions (columns added over time); ``mergeSchema`` unions all
-    footers into one superset schema and older files surface NULLs for
-    columns they predate. Footer merging costs one distributed pass at
-    planning — for hot paths pin an explicit superset ``schema=``
-    instead (same NULL semantics, no merge pass)."""
-    return spark.read.option("mergeSchema", True).parquet(path)
-
-
 def spread(df: DataFrame, n: int | None = None) -> DataFrame:
     """Round-robin repartition before expensive per-row compute.
 
@@ -137,16 +123,6 @@ def spread(df: DataFrame, n: int | None = None) -> DataFrame:
     """
     sc = df.sparkSession.sparkContext
     return df.repartition(n or sc.defaultParallelism)
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view for the SQL API path."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
 def footer_stats_session(spark: SparkSession) -> SparkSession:

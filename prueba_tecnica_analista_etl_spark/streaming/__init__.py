@@ -2,27 +2,3 @@
 incremental pipeline (SURVEY.md §2.9 T1-T8): file-replay source,
 watermarked tumbling/session windows, idempotent foreachBatch upsert
 sink with control table and DLQ."""
-
-from prueba_tecnica_analista_etl_spark.streaming.replay import (
-    replay_as_stream,
-    write_replay_files,
-)
-from prueba_tecnica_analista_etl_spark.streaming.windows import (
-    run_available_now,
-    sessionize,
-    tumbling_counts,
-)
-from prueba_tecnica_analista_etl_spark.streaming.upsert_sink import (
-    foreach_batch_upsert,
-    read_control,
-)
-
-__all__ = [
-    "write_replay_files",
-    "replay_as_stream",
-    "tumbling_counts",
-    "sessionize",
-    "run_available_now",
-    "foreach_batch_upsert",
-    "read_control",
-]

@@ -1,8 +1,9 @@
 """Watermarked window aggregations (T2/T4) + the availableNow drain
 every persistent stream query runs through.
 
-Tumbling windows mirror the batch ``q_tumbling_window`` exactly
-(batch/stream parity is asserted in tests); session windows use
+``tumbling_counts`` is also the body of the batch
+``q_tumbling_window`` (batch/stream parity is asserted in tests);
+session windows use
 ``session_window`` — Spark's native gap-based sessionization, state
 kept per key and evicted by the watermark (bounded memory at 100 TB:
 state size ~ active keys, not history).
@@ -25,6 +26,9 @@ from pyspark.sql.streaming import DataStreamWriter
 def tumbling_counts(
     stream: DataFrame, watermark: str = "1 minute"
 ) -> DataFrame:
+    """Events per (1-hour tumbling window, event_type). On a stream the
+    watermark bounds the window state; on a batch frame the optimizer
+    drops it, so q_tumbling_window runs this same definition."""
     return (
         stream.withWatermark("ts", watermark)
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")

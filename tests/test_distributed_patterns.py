@@ -1,5 +1,5 @@
 """Semantics + plan-shape tests for plans/extensions_distributed.py —
-the round-8 distributed-algebra patterns. Oracle parity is covered
+the distributed-algebra patterns. Oracle parity is covered
 registry-wide by test_oracle_parity; these pin the SCALE claims the
 docstrings make (no SinglePartition rank, prefilter soundness,
 merge == recompute under arbitrary splits, funnel monotonicity).
@@ -28,7 +28,7 @@ def _plan(df) -> str:
 def test_global_rank_has_no_single_partition_window(spark, sf_dir):
     """The whole point: global RANK() without funneling fact rows
     through one reducer. The window must partition by bucket, the
-    offsets ride the plan as a dense array LITERAL (r15: element_at
+    offsets ride the plan as a dense array LITERAL (element_at
     projection — no offsets createDataFrame, no broadcast join on the
     fact path), and no exchange beyond the bucket hash exchange."""
     df = q_global_rank(spark, sf_dir)
@@ -518,12 +518,12 @@ def test_eval_auc_hand_computed_and_sharded_plan(spark):
 def test_artifact_cache_invalidates_on_corpus_rewrite(
     spark, tmp_path, monkeypatch
 ):
-    """ADVICE r8: a corpus regenerated under the SAME path must MISS
+    """A corpus regenerated under the SAME path must MISS
     the artifact caches (the key carries a file-stat fingerprint) —
     a stale bloom bitset silently drops true semi-join matches, so
     answering stale is the one wrong behavior. Same-content lookups
     still hit (one build per generation). The fingerprint itself is
-    TTL-memoized (r9 ADVICE — see
+    TTL-memoized (see
     test_corpus_fingerprint_memo_collapses_walks); zero the TTL here
     so this test exercises the fingerprint mechanism, not the memo's
     documented <=TTL staleness window."""
@@ -575,7 +575,7 @@ def test_artifact_cache_invalidates_on_corpus_rewrite(
 def test_artifact_store_survives_process_boundary(
     spark, tmp_path, monkeypatch
 ):
-    """Disk layer (r10 verdict task 1): artifacts are one-time-per-
+    """Disk layer: artifacts are one-time-per-
     CORPUS, not per-process — a lookup whose memory memo is gone (the
     fresh-process case, simulated by clearing the in-memory caches)
     must be served from the persisted parquet/pickle WITHOUT calling
@@ -639,8 +639,8 @@ def test_artifact_store_survives_process_boundary(
 def test_artifact_directory_reuses_and_evicts_generations(
     tmp_path, monkeypatch
 ):
-    """artifact_directory (r10 ADVICE: the per-process mkdtemp IVF
-    index copies leaked): one build per corpus generation, reused
+    """artifact_directory (per-process mkdtemp IVF index copies would
+    leak): one build per corpus generation, reused
     across lookups; a corpus rewrite builds a NEW generation and the
     superseded directory is REMOVED from disk, not leaked."""
     import os
@@ -676,7 +676,7 @@ def test_artifact_directory_reuses_and_evicts_generations(
 
 
 def test_corpus_fingerprint_memo_collapses_walks(tmp_path, monkeypatch):
-    """r9 ADVICE: _corpus_fingerprint walked+stat'ed the whole corpus
+    """Without a memo, _corpus_fingerprint walks+stats the whole corpus
     tree on EVERY artifact lookup — O(files) syscalls per cache HIT.
     Within the TTL, repeated lookups must serve the memo (one walk);
     past the TTL (or after clear_artifacts, the explicit invalidation
@@ -733,6 +733,38 @@ def test_corpus_writers_drop_fingerprint_memo(spark, tmp_path, monkeypatch):
     assert after != before, (
         "engine write inside the corpus must invalidate the TTL memo"
     )
+
+
+def test_t_sees_an_append_to_a_cached_table(spark, tmp_path, monkeypatch):
+    """_t's per-session frame must follow the corpus: after a plain
+    Spark append to a table it has already served, the next _t counts
+    the appended rows instead of the listing frozen at first use."""
+    from prueba_tecnica_analista_etl_spark import artifacts
+
+    monkeypatch.setattr(artifacts, "_FP_TTL_S", 0.0)
+    corpus = str(tmp_path / "corpus")
+    path = f"{corpus}/t.parquet"
+    spark.range(5).write.parquet(path)
+    assert _t(spark, corpus, "t").count() == 5
+    spark.range(5, 9).write.mode("append").parquet(path)
+    assert _t(spark, corpus, "t").count() == 9
+
+
+def test_t_reads_a_table_rewritten_by_replace(spark, tmp_path):
+    """After artifacts.replace swaps a new generation in for a table _t
+    has served, _t's frame reads the new rows; a frame over the old
+    listing would fail on files that no longer exist."""
+    from prueba_tecnica_analista_etl_spark import artifacts
+
+    corpus = str(tmp_path / "corpus")
+    path = f"{corpus}/t.parquet"
+    spark.range(5).write.parquet(path)
+    assert _t(spark, corpus, "t").count() == 5
+    staged = str(tmp_path / "staged")
+    spark.range(100, 103).write.parquet(staged)
+    artifacts.replace(path, staged)
+    got = sorted(r["id"] for r in _t(spark, corpus, "t").collect())
+    assert got == [100, 101, 102]
 
 
 def test_misra_gries_guarantee_and_bounds(spark):

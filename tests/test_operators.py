@@ -14,14 +14,11 @@ from prueba_tecnica_analista_etl_spark.functions.validate import (
 )
 from prueba_tecnica_analista_etl_spark.operators.dedupe import (
     keep_first,
-    keep_first_agg,
 )
 from prueba_tecnica_analista_etl_spark.operators.quality import (
-    approx_quantiles,
     split_rejects,
 )
 from prueba_tecnica_analista_etl_spark.operators.upsert import (
-    assert_unique,
     upsert,
     upsert_with_metrics,
 )
@@ -73,23 +70,6 @@ def test_upsert_dedups_incoming_batch(spark):
     assert _rows(out, "k", "v") == [(1, "y"), (2, "z")]
 
 
-def test_assert_unique_raises(spark):
-    dup = spark.createDataFrame([(1,), (1,)], "k long")
-    with pytest.raises(ValueError):
-        assert_unique(dup, ["k"])
-
-
-def test_keep_first_agg_matches_window(spark, sf_dir):
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", "event_type", "event_id"
-    )
-    a = keep_first(ev, ["user_id", "event_type"], [F.asc("event_id")])
-    b = keep_first_agg(ev, ["user_id", "event_type"], "event_id")
-    assert _rows(a, "user_id", "event_type", "event_id") == _rows(
-        b, "user_id", "event_type", "event_id"
-    )
-
-
 def test_split_rejects_partitions_completely(spark, sf_dir):
     ev = load_table(spark, sf_dir, "events")
     accepted, rejected = split_rejects(
@@ -139,12 +119,6 @@ def test_phone_udf_parity(spark):
     assert got == [label for _, label in expected]
 
 
-def test_approx_quantiles_profile(spark, sf_dir):
-    li = load_table(spark, sf_dir, "lineitem")
-    q = approx_quantiles(li, "l_extendedprice", [0.25, 0.5, 0.75])
-    assert q[0] <= q[1] <= q[2]
-
-
 def test_registry_docs_and_coverage():
     # every declared query documents what it proves
     for name, spec in REGISTRY.items():
@@ -181,47 +155,6 @@ def test_keep_first_survives_file_splits(spark, tmp_path):
         assert got == {str(k): k for k in range(1000)}
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", old)
-
-
-def test_keep_first_agg_no_row_tearing(spark):
-    """Ties on order_col must yield ONE real input row, not a composite
-    of per-column minima from different tied rows."""
-    df = spark.createDataFrame(
-        [
-            ("k1", 1, "z", 9),
-            ("k1", 1, "a", 5),  # tie on o: struct tiebreak picks ("a",5)
-            ("k1", 2, "b", 1),
-            ("k2", 7, "q", 3),
-        ],
-        "k string, o long, s string, n long",
-    )
-    rows = {
-        r["k"]: (r["o"], r["s"], r["n"])
-        for r in keep_first_agg(df, ["k"], "o").collect()
-    }
-    # survivor is an actual row: ("a", 5) together, never ("a", 9)
-    assert rows == {"k1": (1, "a", 5), "k2": (7, "q", 3)}
-
-
-def test_keep_first_agg_null_order_sorts_last(spark):
-    """A NULL order_col row must not become the survivor while an
-    ordered row exists (min_by's ignore-null semantics); a group whose
-    every row has NULL order still yields one deterministic survivor."""
-    df = spark.createDataFrame(
-        [
-            ("k1", None, "null-row", 1),
-            ("k1", 5, "real", 2),
-            ("k2", None, "b", 4),
-            ("k2", None, "a", 3),
-        ],
-        "k string, o long, s string, n long",
-    )
-    rows = {
-        r["k"]: (r["o"], r["s"], r["n"])
-        for r in keep_first_agg(df, ["k"], "o").collect()
-    }
-    assert rows["k1"] == (5, "real", 2)  # NULL-order row loses
-    assert rows["k2"] == (None, "a", 3)  # all-NULL group: min of rest
 
 
 def test_asof_join_semantics(spark):
@@ -303,12 +236,10 @@ def test_asof_join_null_times_never_match(spark):
 
 def test_asof_and_salt_collision_guards(spark):
     """Output-name collisions fail fast instead of corrupting caller
-    columns: a left frame that already has `asof_rid`, and a salted
-    input that already has `_salt`."""
+    columns: a left frame that already has `asof_rid`."""
     import pytest
 
     from prueba_tecnica_analista_etl_spark.operators.asof import asof_join
-    from prueba_tecnica_analista_etl_spark.operators.salt import salted_join
 
     left = spark.createDataFrame(
         [(1, "u1", 50, 7)], "event_id long, user string, t long, asof_rid long"
@@ -321,11 +252,6 @@ def test_asof_and_salt_collision_guards(spark):
             left, right, keys=["user"], left_time="t", right_time="t",
             payload=["rid"], tiebreak="rid",
         )
-
-    big = spark.createDataFrame([(1, 2, 0)], "k long, v long, _salt long")
-    small = spark.createDataFrame([(1, 9)], "k long, w long")
-    with pytest.raises(ValueError, match="_salt"):
-        salted_join(big, small, on=["k"])
 
 
 def test_asof_join_random_matches_bruteforce(spark):
@@ -400,50 +326,6 @@ def test_stratified_sample_rates_and_determinism(spark, sf_dir):
         assert abs(rate - want) < 0.06, (etype, rate, want)
 
 
-def test_salted_join_equivalence(spark):
-    """Salted join is row-identical to the plain join on a skewed
-    corpus (one key holds 90% of rows) for every supported join type,
-    and the hot key really is split across salts."""
-    import random
-
-    from prueba_tecnica_analista_etl_spark.operators.salt import (
-        salted_join,
-    )
-
-    rng = random.Random(3)
-    big_rows = [
-        ("hot" if rng.random() < 0.9 else f"k{rng.randrange(20)}", i)
-        for i in range(5000)
-    ]
-    small_rows = [("hot", 100), ("k1", 101), ("k2", 102), ("zz", 103)]
-    big = spark.createDataFrame(big_rows, "k string, v long")
-    small = spark.createDataFrame(small_rows, "k string, w long")
-
-    for how in ("inner", "left", "left_semi", "left_anti"):
-        want = sorted(
-            tuple(r) for r in big.join(small, on=["k"], how=how).collect()
-        )
-        got = sorted(
-            tuple(r)
-            for r in salted_join(big, small, ["k"], how=how).collect()
-        )
-        assert got == want, how
-
-    from pyspark.sql import functions as F
-
-    salts = (
-        big.withColumn(
-            "_s",
-            F.pmod(F.hash(F.col("k"), F.col("v")), F.lit(8)),
-        )
-        .filter(F.col("k") == "hot")
-        .select("_s")
-        .distinct()
-        .count()
-    )
-    assert salts == 8  # the hot key spreads over every salt bucket
-
-
 def test_rollup_distinguishes_null_group_from_total(spark):
     """A genuine NULL group value must survive as its own row, not be
     relabeled into (and collide with) the grand-TOTAL row — the
@@ -465,14 +347,12 @@ def test_rollup_distinguishes_null_group_from_total(spark):
 def test_quality_helpers_empty_input(spark):
     """Zero-row audits report zeros/empty, not None/crash."""
     from prueba_tecnica_analista_etl_spark.operators.quality import (
-        approx_quantiles,
         violations_census,
     )
 
     empty = spark.createDataFrame([], "x long")
     row = violations_census(empty, {"neg": F.col("x") < 0}).first()
     assert row["neg"] == 0
-    assert approx_quantiles(empty, "x", [0.5]) == []
 
 
 def test_keep_first_preserves_caller_row_id_column(spark):
@@ -869,225 +749,6 @@ def test_ordered_funnel_parametrized_stages(spark):
     assert got == {"signup": 2, "error": 1}  # u2's error precedes signup
     with pytest.raises(ValueError):
         ordered_funnel(df, [])
-
-
-def test_hash_split_partitions_and_is_stable(spark, sf_dir):
-    """hash_split: every row lands in exactly one named split, the
-    assignment is a pure function of the key (byte-stable across
-    re-runs and repartitions; equal keys share a split), fractions
-    land near target, and salting re-draws deterministically."""
-    from prueba_tecnica_analista_etl_spark.operators.sampling import (
-        hash_split,
-    )
-    from prueba_tecnica_analista_etl_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    out = hash_split(
-        docs, "doc_id", {"train": 0.8, "val": 0.1, "test": 0.1}
-    )
-    n = docs.count()
-    by = {
-        r["split"]: r["n"]
-        for r in out.groupBy("split").agg(
-            F.count(F.lit(1)).alias("n")
-        ).collect()
-    }
-    assert sum(by.values()) == n
-    assert by.get("train", 0) > by.get("val", 0)
-    assert 0.6 * n < by.get("train", 0) < 0.95 * n
-
-    a = sorted((r["doc_id"], r["split"]) for r in out.collect())
-    b = sorted(
-        (r["doc_id"], r["split"])
-        for r in hash_split(
-            docs.repartition(13),
-            "doc_id",
-            {"train": 0.8, "val": 0.1, "test": 0.1},
-        ).collect()
-    )
-    assert a == b
-
-    salted = sorted(
-        (r["doc_id"], r["split"])
-        for r in hash_split(
-            docs, "doc_id",
-            {"train": 0.8, "val": 0.1, "test": 0.1}, salt="run2",
-        ).collect()
-    )
-    assert salted != a  # re-drawn...
-    assert len(salted) == n  # ...but still total: every row assigned
-    assert {s for _, s in salted} <= {"train", "val", "test"}
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        hash_split(docs, "doc_id", {"a": 0.5, "b": 0.2})
-
-
-def test_kfold_assignment_properties(spark, sf_dir):
-    """kfold: folds cover [0, k), tile the frame, are roughly
-    balanced, and every row of a key shares its fold (leakage
-    safety proven on a frame with repeated keys)."""
-    from prueba_tecnica_analista_etl_spark.operators.sampling import (
-        kfold,
-    )
-    from prueba_tecnica_analista_etl_spark.sources.tables import load_table
-
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("user_id").isNotNull()
-    )
-    out = kfold(ev, "user_id", 5)
-    folds = {
-        r["fold"]: r["n"]
-        for r in out.groupBy("fold").agg(
-            F.count(F.lit(1)).alias("n")
-        ).collect()
-    }
-    assert set(folds) <= set(range(5)) and len(folds) == 5
-    assert sum(folds.values()) == ev.count()
-    # leakage safety: a user's rows never split across folds
-    assert (
-        out.groupBy("user_id")
-        .agg(F.count_distinct("fold").alias("nf"))
-        .filter(F.col("nf") > 1)
-        .count()
-        == 0
-    )
-
-
-def test_stratified_hash_sample_rates(spark, sf_dir):
-    """stratified_hash_sample: per-stratum override rates apply, the
-    sample is deterministic, and the sampled frame is a subset of the
-    input."""
-    from prueba_tecnica_analista_etl_spark.operators.sampling import (
-        stratified_hash_sample,
-    )
-    from prueba_tecnica_analista_etl_spark.sources.tables import load_table
-
-    ev = load_table(spark, sf_dir, "events")
-    out = stratified_hash_sample(
-        ev,
-        "event_id",
-        0.1,
-        strata=["event_type"],
-        fractions={"view": 0.5},
-    )
-    n_view = ev.filter(F.col("event_type") == "view").count()
-    got_view = out.filter(F.col("event_type") == "view").count()
-    assert 0.3 * n_view < got_view < 0.7 * n_view
-    other = ev.filter(F.col("event_type") != "view").count()
-    got_other = out.filter(F.col("event_type") != "view").count()
-    assert got_other < 0.3 * other
-    assert sorted(map(tuple, out.collect())) == sorted(
-        map(tuple, stratified_hash_sample(
-            ev, "event_id", 0.1, strata=["event_type"],
-            fractions={"view": 0.5},
-        ).collect())
-    )
-    ids = {r["event_id"] for r in ev.collect()}
-    assert all(r["event_id"] in ids for r in out.collect())
-
-
-def test_sampling_operators_handle_null_keys(spark):
-    """NULL keys get a real deterministic draw (sentinel-hashed), not
-    NULL propagation: kfold emits an in-range fold for NULL-key rows
-    (they all share it), hash_split assigns them a real named split,
-    stratified_hash_sample neither always-drops nor always-keeps them
-    across salts, and misuse raises (fractions without strata)."""
-    import pytest as _pytest
-
-    from prueba_tecnica_analista_etl_spark.operators.sampling import (
-        hash_split,
-        kfold,
-        stratified_hash_sample,
-    )
-
-    df = spark.createDataFrame(
-        [(None, "a"), (None, "b"), (1, "c"), (2, "d")],
-        "k long, v string",
-    )
-    folds = kfold(df, "k", 3).collect()
-    null_folds = {r["fold"] for r in folds if r["k"] is None}
-    assert len(null_folds) == 1 and null_folds <= {0, 1, 2}
-
-    splits = hash_split(df, "k", {"x": 0.5, "y": 0.5}).collect()
-    null_splits = {r["split"] for r in splits if r["k"] is None}
-    assert len(null_splits) == 1 and null_splits <= {"x", "y"}
-
-    # single-name split works (the F.lit fix) and assigns every row
-    one = hash_split(df, "k", {"all": 1.0}).collect()
-    assert [r["split"] for r in one] == ["all"] * 4
-
-    kept = {
-        salt: any(
-            r["k"] is None
-            for r in stratified_hash_sample(
-                df, "k", 0.5, salt=salt
-            ).collect()
-        )
-        for salt in ("", "s1", "s2", "s3", "s4", "s5")
-    }
-    assert len(set(kept.values())) > 1  # draws vary by salt, not fixed
-
-    with _pytest.raises(ValueError):
-        stratified_hash_sample(df, "k", 0.5, fractions={"a": 0.1})
-    with _pytest.raises(ValueError):
-        stratified_hash_sample(df, "k", 0.5, strata=["v", "v"])
-
-
-def test_rolling_distinct_sketch_tracks_exact(spark, sf_dir):
-    """The HLL twin must agree with the exact trailing-window distinct
-    census within the published sketch error (<1% rsd at lg_k=14 —
-    pinned at 2% here), per day, on the harness events table AND on a
-    synthetic frame whose cardinality actually exercises estimation."""
-    from prueba_tecnica_analista_etl_spark.operators.dedupe import (
-        rolling_distinct_sketch,
-    )
-    from prueba_tecnica_analista_etl_spark.plans.extensions_distributed import (
-        q_rolling_distinct,
-    )
-    from prueba_tecnica_analista_etl_spark.plans.queries import _t
-
-    exact = {
-        r["day"]: r["users_7d"]
-        for r in q_rolling_distinct(spark, sf_dir).collect()
-    }
-    ev = _t(spark, sf_dir, "events")
-    est = {
-        r["day"]: r["est"]
-        for r in rolling_distinct_sketch(ev, "ts", "user_id").collect()
-    }
-    assert set(est) == set(exact)
-    for day, n in exact.items():
-        assert abs(est[day] - n) <= max(1, 0.02 * n), (day, n, est[day])
-
-    # Synthetic: 30 days x 3000 distinct ids/day with 50% day-to-day
-    # overlap — cardinalities in the tens of thousands, where the
-    # sketch genuinely estimates instead of counting exactly.
-    syn = spark.range(0, 90_000).selectExpr(
-        "cast(date_add(date'2024-01-01', cast(id / 3000 as int)) "
-        "as timestamp) as ts",
-        "cast(cast(id / 3000 as int) * 1500 + id % 3000 as string) "
-        "as user_id",
-    )
-    syn_ud = syn.selectExpr("to_date(ts) as day", "user_id").distinct()
-    syn_exact = {
-        r["anchor"]: r["n"]
-        for r in syn_ud.selectExpr("day as anchor")
-        .distinct()
-        .crossJoin(syn_ud)
-        .where("day between anchor - 6 and anchor")
-        .groupBy("anchor")
-        .agg(F.countDistinct("user_id").alias("n"))
-        .collect()
-    }
-    syn_est = {
-        r["day"]: r["est"]
-        for r in rolling_distinct_sketch(syn, "ts", "user_id").collect()
-    }
-    assert set(syn_est) == set(syn_exact)
-    for day, n in syn_exact.items():
-        assert abs(syn_est[day] - n) <= 0.02 * n, (day, n, syn_est[day])
 
 
 def test_split_leakage_census_counts_injected_leaks(spark):

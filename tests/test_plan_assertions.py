@@ -362,9 +362,18 @@ def test_retention_single_fact_shuffle(spark, sf_dir):
     assert body.count("Exchange") == 2, plan
 
 
+def test_tumbling_window_batch_plan_drops_the_watermark(spark, sf_dir):
+    """q_tumbling_window runs the stream's tumbling_counts, watermark
+    included; Spark must drop the watermark on a batch frame, so the
+    batch plan stays a plain two-phase aggregate."""
+    df = REGISTRY["q_tumbling_window"].fn(spark, sf_dir)
+    optimized = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "EventTimeWatermark" not in optimized
+
+
 def test_aqe_splits_skewed_join_partition(spark):
-    """Runtime skew handling, the AQE side of the salting story
-    (operators/salt.py is the static fallback): a 90%-one-key join
+    """Runtime skew handling, in place of static key salting: a
+    90%-one-key join
     under shuffle-join thresholds gets its hot partition SPLIT by AQE
     — the executed plan carries SortMergeJoin(skew=true) with a
     skewed AQEShuffleRead — and the result is still row-exact. At
@@ -479,9 +488,9 @@ def test_r8_late_additions_plan_shapes(spark, sf_dir):
 
 
 # Output dtypes with at least one green driver value-hash on record
-# (CORRECTNESS_r01–r07). decimal is deliberately NOT here: the only
-# decimal-emitting window query (q_perplexity_buckets) was the only
-# red hash two rounds running, so decimal stringification was never
+# (the committed CORRECTNESS records). decimal is deliberately NOT
+# here: the only decimal-emitting window query (q_perplexity_buckets)
+# never hashed green, so decimal stringification was never
 # proven — its reported columns now cast to double, and this lint
 # keeps any future window entry from re-introducing an unproven hash
 # dtype unnoticed.
@@ -722,11 +731,11 @@ def test_staged_builders_keep_their_arrow_stages(spark, sf_dir):
     # k-means assignment) live in the builders now; pin both.
     from prueba_tecnica_analista_etl_spark.functions.vectors import (
         as_double,
+        assign_clusters,
     )
     from prueba_tecnica_analista_etl_spark.plans.extensions_scale import (
         IVF_K,
         _lsh_sig_live,
-        assign_clusters,
         ivf_centroids,
     )
     from pyspark.sql import functions as F

@@ -149,34 +149,6 @@ def test_asof_join_matches_bruteforce(spark, lefts, rights):
     assert got == want
 
 
-@given(big=KV, small=KV)
-@settings(
-    max_examples=6,  # 4 join types × 2 collects per example
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-def test_salted_join_matches_plain(spark, big, small):
-    """Property: salted_join == plain join for every supported type on
-    arbitrary (skew-free and skewed alike) inputs."""
-    from prueba_tecnica_analista_etl_spark.operators.salt import (
-        salted_join,
-    )
-
-    b = _df(spark, big)
-    s = keep_first(_df(spark, small), ["k"], [F.asc("pos")]).select(
-        "k", F.col("v").alias("w")
-    )
-    for how in ("inner", "left", "left_semi", "left_anti"):
-        want = sorted(
-            tuple(r) for r in b.join(s, on=["k"], how=how).collect()
-        )
-        got = sorted(
-            tuple(r)
-            for r in salted_join(b, s, ["k"], how=how, n_salts=4).collect()
-        )
-        assert got == want, how
-
-
 def test_zscore_moments_equals_window_form(spark, sf_dir):
     """The moments (groupBy + broadcast-join) z-score plan must produce
     the frame the window form does — same census, radically different
@@ -190,7 +162,7 @@ def test_zscore_moments_equals_window_form(spark, sf_dir):
     forms on regenerated testdata. The outlier counts may therefore
     differ by at most the number of such boundary-riding values (today:
     zero, so the comparison stays exact in practice)."""
-    from prueba_tecnica_analista_etl_spark.plans import queries
+    from __spark_entry__ import queries
     from prueba_tecnica_analista_etl_spark.sources.tables import load_table
 
     q = queries()
@@ -241,7 +213,7 @@ def test_pack_summary_consistent_with_pack_sequences(spark, sf_dir):
     overfull bins does NOT hold: a straddler's spill shifts the next
     bin's first start deep into that bin, so an under-full start-sum
     can still end in a straddle.)"""
-    from prueba_tecnica_analista_etl_spark.plans import queries
+    from __spark_entry__ import queries
 
     q = queries()
     bins = q["q_pack_sequences"](spark, sf_dir).collect()
@@ -263,7 +235,7 @@ def test_perplexity_buckets_consistent_with_unigram_census(spark, sf_dir):
     head.lo >= middle.hi and middle.lo >= tail.hi (head holds the
     highest log-probabilities), with the global min/max of the
     unigram census bounding the tail/head extremes."""
-    from prueba_tecnica_analista_etl_spark.plans import queries
+    from __spark_entry__ import queries
 
     q = queries()
     census = {
@@ -310,7 +282,7 @@ def test_source_overlap_bounds(spark, sf_dir):
     side's distinct-shingle size, and the per-source sizes agree with
     an independently computed distinct-shingle count."""
     from prueba_tecnica_analista_etl_spark.functions.text import shingles
-    from prueba_tecnica_analista_etl_spark.plans import queries
+    from __spark_entry__ import queries
     from prueba_tecnica_analista_etl_spark.sources.tables import load_table
 
     rows = queries()["q_source_overlap"](spark, sf_dir).collect()
@@ -340,46 +312,6 @@ def test_source_overlap_bounds(spark, sf_dir):
         assert r["n_b"] == sizes[r["src_b"]], r["src_b"]
 
 
-def test_quantile_buckets_agree_with_exact_ntile(spark, sf_dir):
-    """The approx-threshold bucket twin must (a) carry no Window and
-    join its edges by broadcast — the whole point is never shuffling
-    the scored rows — and (b) agree with the exact ntile split on at
-    least 90% of per-doc labels (value-edges vs rank-cuts differ only
-    at ties/edge collisions; at t-digest accuracy 10k over harness
-    group sizes the split is near-exact)."""
-    from pyspark.sql import Window
-
-    from prueba_tecnica_analista_etl_spark.plans.extensions_pipeline import (
-        _unigram_scored,
-        assign_quantile_buckets,
-    )
-
-    scored = _unigram_scored(spark, sf_dir).select(
-        "doc_id", "source", F.round("logprob", 4).alias("lp")
-    )
-    w = Window.partitionBy("source").orderBy(F.desc("lp"), F.asc("doc_id"))
-    exact_nb = {
-        r["doc_id"]: r["nb"]
-        for r in scored.withColumn("nb", F.ntile(3).over(w)).collect()
-    }
-
-    approx = assign_quantile_buckets(scored, col="lp")
-    plan = approx._jdf.queryExecution().executedPlan().toString()
-    assert "Window" not in plan
-    assert "BroadcastHashJoin" in plan
-
-    rows = approx.collect()
-    assert len(rows) == len(exact_nb)
-    label_of_idx = {1: "tail", 2: "middle", 3: "head"}
-    for r in rows:
-        assert r["bucket"] == label_of_idx[r["bucket_idx"]]
-    # ntile nb: 1=head (highest lp); bucket_idx: 1=tail (lowest lp)
-    agree = sum(
-        1 for r in rows if (4 - r["bucket_idx"]) == exact_nb[r["doc_id"]]
-    )
-    assert agree / len(rows) >= 0.9, agree / len(rows)
-
-
 def test_values_invariant_to_reducer_count(spark, sf_dir):
     """Shuffle-partition-count invariance: a 1000-executor cluster
     runs these plans with thousands of reducers, local tests with 32 —
@@ -407,8 +339,8 @@ def test_values_invariant_to_reducer_count(spark, sf_dir):
         "q_hypertable_quantiles",
         "q_source_priority_dedup",
         "q_window_rank_metrics",
-        # round-8 additions whose census collect (bucket histogram)
-        # or bounded range expansion interacts with partitioning:
+        # queries whose census collect (bucket histogram) or
+        # bounded range expansion interacts with partitioning:
         "q_global_rank",
         "q_train_order",
         "q_rolling_distinct",
@@ -582,7 +514,7 @@ def test_source_priority_dedup_census_tiles_corpus(spark, sf_dir):
     surviving copy must come from its minimum-priority source — the
     rule verified independently with a driver-side fold over the
     (text, source, doc_id) triples."""
-    from prueba_tecnica_analista_etl_spark.plans import queries
+    from __spark_entry__ import queries
     from prueba_tecnica_analista_etl_spark.sources.tables import load_table
 
     q = queries()
@@ -619,7 +551,7 @@ def test_train_val_split_partitions_and_is_stable(spark, sf_dir):
     exactly one split), reproduces bit-identically across runs, and
     the split of any given doc never depends on the rest of the
     corpus (checked by re-running on a filtered half)."""
-    from prueba_tecnica_analista_etl_spark.plans import queries
+    from __spark_entry__ import queries
     from prueba_tecnica_analista_etl_spark.sources.tables import load_table
 
     q = queries()
@@ -639,7 +571,7 @@ def test_length_histogram_buckets_are_powers_of_two(spark, sf_dir):
     corpus, and per-bucket token mass is consistent with the bucket
     bounds: bucket_lo * n_docs <= total_tokens < 2 * bucket_lo *
     n_docs."""
-    from prueba_tecnica_analista_etl_spark.plans import queries
+    from __spark_entry__ import queries
     from prueba_tecnica_analista_etl_spark.sources.tables import load_table
 
     q = queries()
@@ -661,7 +593,7 @@ def test_token_histogram_head_is_exact(spark, sf_dir):
     import re
     from collections import Counter
 
-    from prueba_tecnica_analista_etl_spark.plans import queries
+    from __spark_entry__ import queries
     from prueba_tecnica_analista_etl_spark.sources.tables import load_table
 
     q = queries()
@@ -698,7 +630,7 @@ def test_bm25_ranks_match_reference_fold(spark, sf_dir):
     import math
     from collections import Counter
 
-    from prueba_tecnica_analista_etl_spark.plans import queries
+    from __spark_entry__ import queries
     from prueba_tecnica_analista_etl_spark.plans.extensions_text import (
         BM25_QUERY_TERMS,
     )
@@ -752,7 +684,7 @@ def test_cdc_apply_matches_reference_fold(spark, sf_dir):
     the census counts + exact-decimal value sums match."""
     from decimal import Decimal
 
-    from prueba_tecnica_analista_etl_spark.plans import queries
+    from __spark_entry__ import queries
     from prueba_tecnica_analista_etl_spark.sources.tables import load_table
 
     q = queries()
@@ -836,7 +768,7 @@ def test_decontaminate_consistent_with_contamination_census(
     + flagged docs = the census's per-source doc totals, no benchmark
     doc (doc_id % 50 == 0) ever appears in the output, and the clean
     output's per-source counts equal docs - flagged_docs exactly."""
-    from prueba_tecnica_analista_etl_spark.plans import queries
+    from __spark_entry__ import queries
 
     q = queries()
     census = {
@@ -1078,7 +1010,7 @@ def test_late_dlq_router_conservation_and_rule(spark, batches, delay):
     router must (a) conserve every input row across main ∪ DLQ, and
     (b) route row r of batch N to the DLQ iff its event time is NULL
     (unconditionally — NULL ts is un-watermarkable even before any
-    threshold exists; an r9 ADVICE finding) or strictly below
+    threshold exists) or strictly below
     max(event time over batches < N) - delay — exactly the documented
     threshold rule. Replaying a batch must also be idempotent (same
     batch_id dirs overwritten, ledger unchanged)."""

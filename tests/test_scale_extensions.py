@@ -12,8 +12,6 @@ from pyspark.sql import functions as F
 from prueba_tecnica_analista_etl_spark.multimodal import (
     extract_features,
     fake_assets,
-    resize_images,
-    sample_frames,
 )
 from prueba_tecnica_analista_etl_spark.plans import REGISTRY
 from prueba_tecnica_analista_etl_spark.sources.bucketed import write_bucketed
@@ -208,35 +206,6 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS b_customer")
 
 
-def test_resize_images(spark, sf_dir):
-    assets = fake_assets(load_table(spark, sf_dir, "documents"))
-    out = resize_images(assets, 32, 16).collect()
-    assert len(out) == assets.count()
-    for r in out:
-        if r["media_type"].startswith("image/"):
-            assert r["width"] == 32 and r["height"] == 16
-            assert len(r["content"]) == 32 * 16
-        else:
-            assert r["width"] is None and r["height"] is None
-
-
-def test_sample_frames_fanout(spark, sf_dir):
-    assets = fake_assets(load_table(spark, sf_dir, "documents"))
-    frames = sample_frames(assets, every_n=2)
-    n_videos = assets.filter(
-        F.col("media_type").startswith("video/")
-    ).count()
-    got = frames.collect()
-    assert {r["asset_id"] for r in got} == {
-        r["asset_id"]
-        for r in assets.filter(
-            F.col("media_type").startswith("video/")
-        ).collect()
-    }
-    assert len(got) >= n_videos  # ≥1 frame per video, many for long ones
-    assert all(r["frame_idx"] % 2 == 0 for r in got)
-
-
 def test_extract_features_contract(spark, sf_dir):
     assets = fake_assets(load_table(spark, sf_dir, "documents"))
     feats = extract_features(assets, dim=8).collect()
@@ -334,9 +303,9 @@ def test_multimodal_real_codec_tier_pil(spark):
     Kafka/TWS pattern): where PIL is importable the pipeline decodes
     REAL bytes instead of stubbing — extract_metadata reads dims
     PIL-side for a format the header sniffer can't parse (BMP),
-    resize_images re-encodes to the target size, extract_features
-    histograms decoded pixels; and an undecodable payload still takes
-    the deterministic stub, so mixed corpora never crash."""
+    extract_features histograms decoded pixels; and an undecodable
+    payload still takes the deterministic stub, so mixed corpora never
+    crash."""
     pytest.importorskip("PIL")
     import io
 
@@ -365,58 +334,11 @@ def test_multimodal_real_codec_tier_pil(spark):
     n = len(text_payload)
     assert meta[2] == (n % 1920, n % 1080)  # stub even with PIL
 
-    rez = {
-        r["asset_id"]: r for r in resize_images(assets, 8, 6).collect()
-    }
-    out = Image.open(io.BytesIO(bytes(rez[1]["content"])))
-    assert out.size == (8, 6)
-    assert (rez[1]["width"], rez[1]["height"]) == (8, 6)
-    assert bytes(rez[2]["content"]) == text_payload[: 8 * 6].ljust(
-        8 * 6, b"\0"
-    )  # stub resize for the undecodable one
-
     feats = extract_features(assets, dim=8).collect()
     assert all(
         r["features"] is not None and len(r["features"]) == 8
         for r in feats
     )
-
-
-def test_multimodal_real_codec_tier_av(spark, tmp_path):
-    """Video tier of the same pattern: where PyAV is importable,
-    sample_frames demuxes a real (tiny, av-encoded) video and emits
-    every_n-spaced PNG frames; the byte-window stub remains for
-    payloads av cannot open."""
-    av = pytest.importorskip("av")
-    import io
-
-    buf = io.BytesIO()
-    with av.open(buf, "w", format="mp4") as container:
-        stream = container.add_stream("mpeg4", rate=4)
-        stream.width, stream.height = 32, 16
-        stream.pix_fmt = "yuv420p"
-        for shade in range(6):
-            import numpy as np
-
-            frame = av.VideoFrame.from_ndarray(
-                np.full((16, 32, 3), shade * 40, dtype=np.uint8),
-                format="rgb24",
-            )
-            for packet in stream.encode(frame):
-                container.mux(packet)
-        for packet in stream.encode():
-            container.mux(packet)
-
-    assets = spark.createDataFrame(
-        [(1, "video/mp4", bytearray(buf.getvalue()))],
-        "asset_id long, media_type string, content binary",
-    )
-    frames = sample_frames(assets, every_n=2).collect()
-    assert len(frames) == 3  # 6 frames, every 2nd
-    assert [r["frame_idx"] for r in sorted(frames, key=lambda r: r["frame_idx"])] == [0, 2, 4]
-    # each emitted frame is a real PNG, not a byte window
-    for r in frames:
-        assert bytes(r["frame"])[:8] == b"\x89PNG\r\n\x1a\n"
 
 
 def test_extract_metadata_jpeg_fill_and_stuffed_bytes(spark):
@@ -549,21 +471,33 @@ def test_extract_metadata_wav_truncated_data_chunk(spark):
 
 
 def test_ann_ivf_exact_when_probing_all_and_recall(spark, sf_dir):
-    """IVF with nprobe == k degrades to exact brute force (same rows,
-    same similarities as q_similarity_topk); at the query's nprobe=4
-    the deterministic recall is 9/10 on this corpus — asserted at a
-    0.8 floor."""
+    """The on-disk IVF index q_ann_ivf reads, probed with nprobe == k,
+    degrades to exact brute force (same rows, same similarities as
+    q_similarity_topk); at the query's nprobe=4 the deterministic
+    recall is 9/10 on this corpus — asserted at a 0.8 floor."""
+    from prueba_tecnica_analista_etl_spark.operators.ivf_index import (
+        ivf_search_index,
+    )
     from prueba_tecnica_analista_etl_spark.plans.extensions_scale import (
-        ann_ivf,
+        IVF_K,
+        cached_ivf_index,
     )
 
     brute = [
         (r["vec_id"], r["cos_sim"])
         for r in REGISTRY["q_similarity_topk"].fn(spark, sf_dir).collect()
     ]
+    qv = (
+        load_table(spark, sf_dir, "embeddings")
+        .filter(F.col("vec_id") == 0)
+        .first()["embedding"]
+    )
+    path = cached_ivf_index(spark, sf_dir, k=IVF_K, iters=2)
     full = [
         (r["vec_id"], r["cos_sim"])
-        for r in ann_ivf(spark, sf_dir, nprobe=16).collect()
+        for r in ivf_search_index(
+            spark, path, qv, nprobe=IVF_K, topk=10, exclude_id=0
+        ).collect()
     ]
     assert full == brute
 
@@ -1318,8 +1252,8 @@ def test_ivf_on_disk_index_search_prunes_and_matches_brute(
     not a post-scan data filter;
     (3) execution-level proof: corrupting every UNPROBED cluster leaf
     leaves the pruned search's answer intact — its scan never opens
-    those files, which is the read-nprobe/k-of-the-bytes property the
-    in-plan ann_ivf filter cannot provide."""
+    those files, which is the read-nprobe/k-of-the-bytes property an
+    in-plan cluster filter cannot provide."""
     import glob
     import os
 
@@ -1386,46 +1320,6 @@ def test_ivf_on_disk_index_search_prunes_and_matches_brute(
     assert ivf_probe_clusters(model, probe_vec, 1) == [intact]
     res = ivf_search_index(spark, path, probe_vec, nprobe=1, topk=3)
     assert res.count() > 0
-
-
-def test_ivf_index_batch_search_matches_per_query(spark, sf_dir, tmp_path):
-    """The batched on-disk IVF search must return, per query, exactly
-    the single-probe search's rows (same ids, same rounded cosines) —
-    one scan for the whole batch, per-query ranking pruned via
-    WindowGroupLimit, and the scan still pruned to the UNION of probe
-    partitions (a PartitionFilter, not a data filter)."""
-    from prueba_tecnica_analista_etl_spark.operators.ivf_index import (
-        ivf_search_index,
-        ivf_search_index_batch,
-        ivf_write_index,
-    )
-    from prueba_tecnica_analista_etl_spark.sources.tables import (
-        load_table,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    path = str(tmp_path / "ivf_batch")
-    ivf_write_index(emb, path, k=8, iters=2)
-    probes = {
-        int(r["vec_id"]): list(r["embedding"])
-        for r in emb.filter(F.col("vec_id").isin([0, 1, 2])).collect()
-    }
-
-    batch = ivf_search_index_batch(
-        spark, path, sorted(probes.items()), nprobe=3, topk=5
-    )
-    plan = batch._jdf.queryExecution().executedPlan().toString()
-    assert "cluster" in plan.split("PartitionFilters: [")[1].split("]")[0]
-    assert "WindowGroupLimit" in plan
-
-    got = {}
-    for r in batch.collect():
-        got.setdefault(r["q_id"], []).append((r["vec_id"], r["cos_sim"]))
-    assert set(got) == set(probes)
-    for q_id, vec in probes.items():
-        single = ivf_search_index(spark, path, vec, nprobe=3, topk=5)
-        want = [(r["vec_id"], r["cos_sim"]) for r in single.collect()]
-        assert sorted(got[q_id]) == sorted(want), q_id
 
 
 def test_md5_60_matches_duckdb_parse(spark):

@@ -1,15 +1,11 @@
 """Source/sink coverage: CSV round-trip (S6), comma-family reads (S3),
 JDBC reader/writer construction (S7/S8 — no database in the harness, so
-the assertion is that the plan builders are correctly parameterized),
-observe()-based audit metrics."""
+the assertion is that the plan builders are correctly parameterized)."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from prueba_tecnica_analista_etl_spark.operators.quality import (
-    observed_count,
-)
 from prueba_tecnica_analista_etl_spark.sources.csv import (
     flights_schema,
     read_csv_repaired,
@@ -70,24 +66,15 @@ def test_jdbc_builders_parameterized(spark):
     assert w is not None
 
 
-def test_observed_count_metric(spark, sf_dir):
-    nation = load_table(spark, sf_dir, "nation")
-    df, obs = observed_count(nation, "audit")
-    n = df.count()
-    assert obs.get["rows"] == n == 25
-
-
 def test_sql_api_twin_of_inner_join(spark, sf_dir):
-    """The SQL-API surface (register_views + spark.sql) produces a
-    frame equal to the DataFrame version of the flagship join — the
-    path the reference's SQL section corresponds to (seccion3_sql.sql
-    runs everything through SQL)."""
+    """The SQL-API surface (temp views + spark.sql) produces a frame
+    equal to the DataFrame version of the flagship join — the path the
+    reference's SQL section corresponds to (seccion3_sql.sql runs
+    everything through SQL)."""
     from prueba_tecnica_analista_etl_spark.plans import REGISTRY
-    from prueba_tecnica_analista_etl_spark.sources.tables import (
-        register_views,
-    )
 
-    register_views(spark, sf_dir)
+    for name in ("orders", "customer", "nation", "region"):
+        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
     sql_df = spark.sql(
         """
         SELECT r_name,
@@ -145,31 +132,6 @@ def test_kafka_source_builder(spark):
     assert "value" in stream.columns
 
 
-def test_read_evolving_parquet_schema_union(spark, tmp_path):
-    """Files written under different schema versions read as one table:
-    the superset schema applies, old files yield NULL for columns they
-    predate, values survive per-file."""
-    from pyspark.sql import functions as F
-
-    from prueba_tecnica_analista_etl_spark.sources.tables import (
-        read_evolving_parquet,
-    )
-
-    path = str(tmp_path / "evolving")
-    v1 = spark.createDataFrame([(1, "a"), (2, "b")], "id long, name string")
-    v2 = spark.createDataFrame(
-        [(3, "c", 9.5)], "id long, name string, score double"
-    )
-    v1.write.mode("append").parquet(path)
-    v2.write.mode("append").parquet(path)
-
-    df = read_evolving_parquet(spark, path)
-    assert set(df.columns) == {"id", "name", "score"}
-    rows = {r["id"]: (r["name"], r["score"]) for r in df.collect()}
-    assert rows == {1: ("a", None), 2: ("b", None), 3: ("c", 9.5)}
-    assert df.filter(F.col("score").isNull()).count() == 2
-
-
 def test_json_roundtrip_with_temporals(spark, sf_dir, tmp_path):
     """JSON-lines sink → explicit-schema read reproduces orders
     including its DATE column (ISO-8601 string round-trip)."""
@@ -224,7 +186,8 @@ def test_normalize_event_time_all_encodings(spark, tmp_path):
     nanosAsLong), TIMESTAMP_MICROS isAdjustedToUTC=0 (Spark 4 reads as
     TIMESTAMP_NTZ), and TIMESTAMP_MICROS isAdjustedToUTC=1 (already
     TimestampType). All three must decode to the same instants, and the
-    normalized frame must accept withWatermark (the round-4 break)."""
+    normalized frame must accept withWatermark (an encoding change of
+    the testdata once broke exactly that)."""
     import datetime as dt
 
     import pyarrow as pa
@@ -264,7 +227,8 @@ def test_normalize_event_time_all_encodings(spark, tmp_path):
         pq.write_table(table, str(d / "events.parquet"))
         df = load_table(spark, str(d), "events")
         assert isinstance(df.schema["ts"].dataType, T.TimestampType), name
-        # the round-4 failure mode: watermark assignment must not raise
+        # the encoding-change failure mode: watermark assignment must
+        # not raise
         df.withWatermark("ts", "1 minute")
         results[name] = [
             r.ts for r in df.orderBy("event_id").select("ts").collect()
@@ -318,11 +282,14 @@ def test_testdata_schema_sentinel(spark, sf_dir):
     next drift fail HERE, by name, instead of deep inside a streaming
     query. If it fires: update normalize_event_time / the loaders to
     re-establish the logical contract, then update this table."""
-    from prueba_tecnica_analista_etl_spark.sources.tables import load_all
+    from prueba_tecnica_analista_etl_spark.sources.tables import TABLES
 
     got = {
-        name: [(f.name, f.dataType.simpleString()) for f in df.schema.fields]
-        for name, df in load_all(spark, sf_dir).items()
+        name: [
+            (f.name, f.dataType.simpleString())
+            for f in load_table(spark, sf_dir, name).schema.fields
+        ]
+        for name in TABLES
     }
     assert got == EXPECTED_SCHEMAS
 
@@ -828,7 +795,7 @@ def test_export_training_shards_rejects_empty_frame(spark, tmp_path):
 
 
 def test_export_checksum_catches_even_multiplicity_swap(spark, tmp_path):
-    """ADVICE r7: the old bit_xor content fold was blind to
+    """A bit_xor content fold is blind to
     even-multiplicity substitutions — two copies of row A swapped for
     two copies of row B XOR-cancel to the same digest. The summing
     fold must move. Construct the adversarial pair directly: same row
@@ -1149,7 +1116,7 @@ def test_export_verify_accepts_pre_marker_manifest(spark, tmp_path):
     pre-marker generation of the SAME sum-mod-p63 fold) must still
     content-verify — its checksums match bit-for-bit, so refusing it
     would force a pointless re-export of every legacy shard set
-    (ADVICE r8). Only a DIFFERENT NAMED algo is a refusal."""
+    Only a DIFFERENT NAMED algo is a refusal."""
     import os
 
     import prueba_tecnica_analista_etl_spark.sources.export as ex
