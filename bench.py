@@ -2,10 +2,10 @@
 """Benchmark: run every declared query at $SPARK_GRAFT_SF_DIR (default
 sf0.1) on local[$SPARK_GRAFT_CPUS]; print a per-query-detail JSON line
 followed by a compact summary JSON line (the summary is LAST so a
-bounded stdout-tail capture always holds it complete — the r6 driver
-record lost its parsed metric to the growing per-query dict).
+bounded stdout-tail capture always holds it complete — a single
+line lost its parsed metric to the growing per-query dict).
 
-Trial protocol (round-6 bench discipline): JVM JIT/GC variance between
+Trial protocol: JVM JIT/GC variance between
 process invocations is ±1-2 s — the same order as round-over-round
 deltas — so a single invocation cannot support a regression claim.
 The default entrypoint therefore runs $SPARK_GRAFT_BENCH_TRIALS (=3)
@@ -45,25 +45,13 @@ def run_query(df) -> None:
 
 
 def single() -> None:
-    # Bench q_lsh_recall in its 100 TB operating mode (sampled truth,
-    # r9 verdict task 8) — the exact census is the correctness
-    # driver's mode, which never sets this. setdefault: an explicit
-    # caller override wins. The fraction is marked in the payload.
-    # MUST be set BEFORE the registry import: q_lsh_recall's oracle
-    # SQL is generated at import time under the same knob, so setting
-    # it afterwards would leave the engine (call-time read) and the
-    # registered oracle (import-time bake) disagreeing in this
-    # process.
-    os.environ.setdefault("SPARK_GRAFT_LSH_TRUTH_FRACTION", "0.5")
-    lsh_frac = float(os.environ["SPARK_GRAFT_LSH_TRUTH_FRACTION"])
-
     from prueba_tecnica_analista_etl_spark.plans import REGISTRY
     from prueba_tecnica_analista_etl_spark.session import get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).removeprefix("sf") or 0)
     # Record whether this corpus's disk-backed artifact store was
-    # already warm when the trial started (r11 honesty flag: with the
+    # already warm when the trial started (an honesty flag: with the
     # store, per-corpus builds — IVF index, pair frames, exhaustive
     # truths, stream sinks — are paid once EVER, so a warm-store trial
     # measures steady state while a cold-store trial 1 includes the
@@ -139,10 +127,10 @@ def single() -> None:
             t0 = time.perf_counter()
             run_query(spec.fn(spark, sf_dir))
             timings[name] = round(time.perf_counter() - t0, 3)
-        # Median-of-2 detail for the heaviest queries (r14 verdict
-        # task 7): the per-query detail was single-trial by design,
-        # and single-sample noise on ~0.5 s queries generated phantom
-        # 20-40% "regressions" every round. The top-N by first-pass
+        # Median-of-2 detail for the heaviest queries: the per-query
+        # detail was single-trial by design, and single-sample noise on
+        # ~0.5 s queries generated phantom 20-40% "regressions" every
+        # round. The top-N by first-pass
         # time get ONE more timed run (~12 s at N=20) and ship the
         # two-sample average; both samples stay visible — pass 1
         # rides the detail line as queries_pass1, and the summary
@@ -215,7 +203,6 @@ def single() -> None:
         "mode": "concurrent-16-threads-best-of-2",
         "oracle_subset_wall": oracle_subset_total,
         "oracle_subset_n": len(oracle_specs),
-        "lsh_truth_fraction": lsh_frac,
         "artifact_store_warm": store_warm,
         "queries": timings,
         "sf": sf,
@@ -225,7 +212,7 @@ def single() -> None:
         # not a fresh measurement — tag it machine-readably and omit
         # sequential_total (this trial never ran a sequential pass), so
         # a consumer of a single trial record can't mistake copied
-        # detail for measured detail (ADVICE r8).
+        # detail for measured detail.
         payload["queries_from_trial"] = 1
     else:
         payload["sequential_total"] = round(sum(timings.values()), 3)
@@ -235,16 +222,16 @@ def single() -> None:
     spark.stop()
 
 
-# Degraded-VM detection for the per-query detail (r13 verdict task 2):
+# Degraded-VM detection for the per-query detail:
 # a steal-heavy window inflates UNTOUCHED queries ×2.5-3.3 with a
 # global ~×1.3 median vs the previous round's detail. When trial 1's
 # sequential detail shows that signature, its q_ms array is weather,
-# not engineering — the r13 record shipped phantom 2-3× "regressions"
-# the judge had to re-measure by hand.
+# not engineering — such a record once shipped phantom 2-3×
+# "regressions" that had to be re-measured by hand.
 DETAIL_DEGRADED_RATIO = 1.3
 
 # The N slowest queries of the sequential detail get a second timed
-# run and ship the two-sample average (r14 verdict task 7): ~12 s of
+# run and ship the two-sample average: ~12 s of
 # extra trial-1 wall buys per-query numbers the round-over-round
 # comparators can trust on the heavy tail.
 DETAIL_MEDIAN2_N = 20
@@ -288,10 +275,10 @@ def orchestrate() -> None:
     exactly TWO JSON lines — the per-query detail first, the compact
     summary LAST (the driver contract: a bounded stdout-tail capture
     must always contain one complete parseable line; do NOT merge them
-    back into one line, that is the r6 "parsed": null regression).
+    back into one line, or an overflowing tail leaves "parsed": null).
     Trial progress goes to stderr.
 
-    Per-query detail provenance (r13 verdict task 2): normally only
+    Per-query detail provenance: normally only
     trial 1 measures the sequential detail. If that detail carries the
     documented degraded-VM signature (median per-query ratio vs the
     previous round's BENCH_DETAIL_LATEST.json > ×1.3), trial 2 re-runs
@@ -330,11 +317,11 @@ def orchestrate() -> None:
         # carries the ~60 s sequential-detail pass trial 2 will skip
         # (--lpt-from replaces it with a concurrent warm pass) —
         # projecting at trial 1's full wall over-estimates and can
-        # truncate a bench whose budget fits two trials (ADVICE r8).
+        # truncate a bench whose budget fits two trials.
         # Estimate the stand-in from trial 1's MEASURED concurrent
-        # wall rather than a fixed 1/3-of-sequential factor (ADVICE
-        # r9: on a steal-heavy VM the fixed factor under-estimates
-        # and the bench overshoots its budget), and clamp at the
+        # wall rather than a fixed 1/3-of-sequential factor (on a
+        # steal-heavy VM the fixed factor under-estimates and the
+        # bench overshoots its budget), and clamp at the
         # concurrent work trial 2 demonstrably repeats (two full +
         # two oracle-subset passes) so the projection can never drop
         # below a physical lower bound.
@@ -463,7 +450,7 @@ def orchestrate() -> None:
             "per-query sequential detail from detail_trial)",
         }
     )
-    # Two-line output (r6 driver record had "parsed": null — the
+    # Two-line output (a one-line record once had "parsed": null — the
     # 77-entry per-query dict overflowed the driver's stdout tail
     # capture, leaving no complete JSON line to parse): line 1 carries
     # the per-query dict for humans and archives; line 2 — LAST, so a
@@ -481,7 +468,7 @@ def orchestrate() -> None:
     out.pop("queries_pass1", None)
     out.pop("detail_median2_n", None)
     # The shipped per-query detail comes from the measured trials
-    # (r13 verdict task 2), preferring CLEAN ones: a trial can post a
+    # preferring CLEAN ones: a trial can post a
     # good concurrent wall while its sequential pass hit the steal
     # window, so selection filters on the detail's OWN degraded
     # signature first and only then takes the best wall. Falling back
@@ -515,8 +502,8 @@ def orchestrate() -> None:
             out["detail_degraded"] = True
     # The external record keeps only a BOUNDED stdout tail (measured:
     # 2000 bytes), which truncated the front of the named per-query
-    # dict every round (r11 verdict task 8: regressions in the
-    # alphabet's front half were invisible to the judge). The summary
+    # dict every round (regressions in the alphabet's front half were
+    # invisible). The summary
     # line therefore carries the complete per-query detail in the
     # only form that fits: a positional millisecond array over
     # sorted(query names) — the names are reconstructable from the
@@ -526,7 +513,7 @@ def orchestrate() -> None:
     out["q_ms"] = [
         int(round(queries[n] * 1000)) for n in sorted(queries)
     ]
-    # Alignment guard (r12 ADVICE): a mid-round registry addition
+    # Alignment guard: a mid-round registry addition
     # shifts every q_ms position after it with no in-band signal — a
     # round-over-round comparator aligning by index would silently
     # attribute timings to the wrong queries. q_ms_n plus a short
@@ -573,7 +560,7 @@ def orchestrate() -> None:
 
 
 def price_builds() -> None:
-    """Cold-store artifact pricing (r14 verdict task 2): every
+    """Cold-store artifact pricing: every
     recorded bench trial runs warm-store, so the one-time per-corpus
     build costs (IVF index, signature/pair/feature frames, stream
     replays) appear in NO committed number. This mode points the
@@ -587,7 +574,6 @@ def price_builds() -> None:
 
     scratch = tempfile.mkdtemp(prefix="ptae_price_builds_")
     os.environ["PTAE_ARTIFACT_DIR"] = scratch  # before package import
-    os.environ.setdefault("SPARK_GRAFT_LSH_TRUTH_FRACTION", "0.5")
 
     from prueba_tecnica_analista_etl_spark import artifacts
     from prueba_tecnica_analista_etl_spark.plans import REGISTRY

@@ -233,7 +233,7 @@ def main(
                     write_csv,
                 )
 
-                write_csv(df, args.out, single_file=True)
+                write_csv(df, args.out)
             elif args.out.endswith(".parquet"):
                 df.write.mode("overwrite").parquet(args.out)
             elif args.out.endswith((".json", ".jsonl")):

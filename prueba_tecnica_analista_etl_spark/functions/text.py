@@ -78,18 +78,18 @@ def shingles(toks: Column, k: int) -> Column:
     )
 
 
-def fingerprint(text: Column, k: int = 5) -> Column:
-    """Document fingerprint: min-md5 over k-token shingles — the
+def fingerprint(text: Column) -> Column:
+    """Document fingerprint: min-md5 over 5-token shingles — the
     winnowing/rolling-hash family's single-fingerprint special case.
     md5 hex is engine-portable (oracle-checkable), unlike xxhash64."""
-    sh = shingles(tokens(text), k)
+    sh = shingles(tokens(text), 5)
     return F.array_min(F.transform(sh, F.md5))
 
 
-def winnow_fingerprints(text: Column, k: int = 3, w: int = 4) -> Column:
+def winnow_fingerprints(text: Column) -> Column:
     """Winnowing fingerprint set (Schleimer/Wilkerson/Aiken's MOSS
-    algorithm): md5 each ordered k-token shingle, take the minimum of
-    every w-wide sliding window of hashes, distinct the minima.
+    algorithm): md5 each ordered k=3-token shingle, take the minimum of
+    every w=4-wide sliding window of hashes, distinct the minima.
     Guarantees a shared fingerprint for any shared run of k+w-1 tokens
     — the standard plagiarism/near-dup fingerprinting scheme.
 
@@ -104,7 +104,7 @@ def winnow_fingerprints(text: Column, k: int = 3, w: int = 4) -> Column:
     — measured 19 s vs ~1 s at sf0.1. Zero shuffles either way: the
     walk never leaves its row.
     """
-    hs = F.transform(shingles(tokens(text), k), F.md5)
+    hs = F.transform(shingles(tokens(text), 3), F.md5)
     # int64 view of the first 15 hex chars (60 bits), computed JVM-side:
     # hex-string lexicographic order == numeric order of the prefix, so
     # the numpy argmin below picks the same window minimum as SQL's
@@ -114,7 +114,7 @@ def winnow_fingerprints(text: Column, k: int = 3, w: int = 4) -> Column:
     hp = F.transform(
         hs, lambda h: F.conv(F.substring(h, 1, 15), 16, 10).cast("long")
     )
-    win = w
+    win = 4
 
     @F.pandas_udf(T.ArrayType(T.StringType()))
     def _winnow(strs: pd.Series, prefs: pd.Series) -> pd.Series:
@@ -161,7 +161,7 @@ def sql_md5_60(expr: str) -> str:
 
 def shingle_hashes(toks: Column, k: int) -> Column:
     """Sorted distinct :func:`md5_60` values of k-shingles — the
-    minhash signature source. r11: switched from xxhash64 (engine-
+    minhash signature source. md5_60 rather than xxhash64 (engine-
     specific, forced rows-only checks on the whole minhash family) to
     the portable 60-bit md5 prefix, making the banded-LSH candidate
     sets and Jaccard re-ranks reproducible in ANSI SQL."""

@@ -44,12 +44,11 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def random_hyperplanes(
-    n_planes: int, dim: int, seed: int = 42
-) -> list[list[float]]:
+def random_hyperplanes(n_planes: int, dim: int) -> list[list[float]]:
     """Deterministic ±1 hyperplanes for sign-LSH (seeded PRNG — stable
-    across runs/engines; no Date/now dependence)."""
-    rng = random.Random(seed)
+    across runs/engines; no Date/now dependence). The seed is part of
+    every LSH signature the artifact store and the oracles embed."""
+    rng = random.Random(42)
     return [
         [1.0 if rng.random() < 0.5 else -1.0 for _ in range(dim)]
         for _ in range(n_planes)
@@ -125,8 +124,8 @@ def sign_bits(v: Column, planes: list[list[float]]) -> Column:
     """Sign-LSH signature: one bit per hyperplane packed into a long.
     Buckets preserve cosine locality (SimHash for dense vectors).
 
-    ENGINE-NEUTRAL by construction (r11, what lifted q_ann_lsh from
-    rows-only to oracle-backed): the vector is quantized onto the
+    ENGINE-NEUTRAL by construction (what makes q_ann_lsh
+    oracle-backed rather than rows-only): the vector is quantized onto the
     ``floor(x·1e6 + 0.5)`` integer grid BEFORE the ±1-plane dot
     products, so each dot is a sum of int64 terms (≤ ~64·1e6, far
     inside both int64 and double's 2^53 exact range) — exact in ANY

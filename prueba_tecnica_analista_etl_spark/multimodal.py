@@ -316,7 +316,12 @@ FEATURE_SCHEMA = T.StructType(
 )
 
 
-def extract_features(assets: DataFrame, dim: int = 16) -> DataFrame:
+# Feature-vector width; the q_multimodal_pipeline oracle's nibble
+# histogram is specific to it.
+FEATURE_DIM = 16
+
+
+def extract_features(assets: DataFrame) -> DataFrame:
     """Per-asset feature vector via ``mapInPandas`` (the embedding-model
     stage of a multimodal pipeline).
 
@@ -328,7 +333,7 @@ def extract_features(assets: DataFrame, dim: int = 16) -> DataFrame:
     Arrow-batched, no driver collect — is the same either way.
     """
     allow_real = not DISABLE_REAL_CODECS
-    n_dim = dim
+    n_dim = FEATURE_DIM
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np

@@ -32,7 +32,6 @@ def asof_join(
     right_time: str,
     payload: Sequence[str],
     tiebreak: str,
-    prefix: str = "asof_",
 ) -> DataFrame:
     """Left as-of join: every ``left`` row, joined to the latest
     ``right`` row with the same ``keys`` and ``right_time`` <=
@@ -41,16 +40,16 @@ def asof_join(
     payload (left-join semantics).
 
     ``payload``: right columns carried onto the left rows (renamed
-    ``{prefix}{col}``). ``tiebreak`` must be in ``payload``.
+    ``asof_{col}``). ``tiebreak`` must be in ``payload``.
     """
     assert tiebreak in payload, "tiebreak must be a payload column"
     key_list = list(keys)
     lcols = left.columns
     for c in payload:
-        if f"{prefix}{c}" in lcols:
+        if f"asof_{c}" in lcols:
             raise ValueError(
-                f"asof_join output column {prefix}{c!s} collides with an "
-                "existing left column; pass a different prefix"
+                f"asof_join output column asof_{c!s} collides with an "
+                "existing left column"
             )
     for reserved in (_SIDE, _TIME, "_asof_p", "_asof_hit"):
         if reserved in lcols or reserved in right.columns:
@@ -69,13 +68,13 @@ def asof_join(
     )
     for c in payload:
         l_side = l_side.withColumn(
-            f"{prefix}{c}", F.lit(None).cast(right.schema[c].dataType)
+            f"asof_{c}", F.lit(None).cast(right.schema[c].dataType)
         )
 
     r_side = right.select(
         *key_list,
         F.col(right_time).alias(_TIME),
-        *[F.col(c).alias(f"{prefix}{c}") for c in payload],
+        *[F.col(c).alias(f"asof_{c}") for c in payload],
     ).withColumn(_SIDE, F.lit(0))
     for c in lcols:
         if c not in key_list:
@@ -94,7 +93,7 @@ def asof_join(
         "_asof_p",
         F.when(
             F.col(_SIDE) == 0,
-            F.struct(*[F.col(f"{prefix}{c}") for c in payload]),
+            F.struct(*[F.col(f"asof_{c}") for c in payload]),
         ),
     )
 
@@ -104,7 +103,7 @@ def asof_join(
     w = (
         Window.partitionBy(*key_list)
         .orderBy(
-            F.asc(_TIME), F.asc(_SIDE), F.asc(f"{prefix}{tiebreak}")
+            F.asc(_TIME), F.asc(_SIDE), F.asc(f"asof_{tiebreak}")
         )
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
@@ -124,8 +123,8 @@ def asof_join(
         .select(
             *lcols,
             *[
-                F.col("_asof_hit").getField(f"{prefix}{c}").alias(
-                    f"{prefix}{c}"
+                F.col("_asof_hit").getField(f"asof_{c}").alias(
+                    f"asof_{c}"
                 )
                 for c in payload
             ],

@@ -39,12 +39,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
+# Round cap (the run raises past it) and the round pointer jumping
+# starts from.
+MAX_ROUNDS = 50
+JUMP_AFTER = 4
+
+
 def connected_components(
-    edges: DataFrame,
-    a: str = "doc_a",
-    b: str = "doc_b",
-    max_rounds: int = 50,
-    jump_after: int = 4,
+    edges: DataFrame, a: str = "doc_a", b: str = "doc_b"
 ) -> DataFrame:
     """Label every node of the undirected graph ``edges`` with its
     component id = the MINIMUM node id in its component (deterministic,
@@ -54,8 +56,8 @@ def connected_components(
     Returns ``(node, comp)`` for every node appearing in ``edges``.
     Runs Spark jobs eagerly (one convergence count per round, like
     ``near_dup_purge_stable``); raises rather than returning a
-    partially-propagated labeling if ``max_rounds`` is hit — silent
-    truncation would mislabel long chains. From round ``jump_after``
+    partially-propagated labeling if ``MAX_ROUNDS`` is hit — silent
+    truncation would mislabel long chains. From round ``JUMP_AFTER``
     on, each round also pointer-jumps (comp ← comp[comp]), so a depth
     the default caps could never cover by propagation alone (a
     40-node chain needs 39 plain rounds) converges in O(log d).
@@ -110,7 +112,7 @@ def connected_components(
         )
 
     prev = total(labels) if numeric else None
-    for rnd in range(max_rounds):
+    for rnd in range(MAX_ROUNDS):
         neighbor = sym.join(
             labels, sym["dst"] == labels["node"]
         ).select(F.col("src").alias("node"), "comp")
@@ -119,7 +121,7 @@ def connected_components(
             .groupBy("node")
             .agg(F.min("comp").alias("comp"))
         )
-        if rnd >= jump_after:
+        if rnd >= JUMP_AFTER:
             # Pointer jumping: every comp value IS a node id (labels
             # start as node ids and only ever move between nodes), so
             # shortcut comp ← comp[comp] through the label table
@@ -147,7 +149,7 @@ def connected_components(
         if not changed:
             return labels
     raise RuntimeError(
-        f"connected_components did not converge in {max_rounds} rounds "
+        f"connected_components did not converge in {MAX_ROUNDS} rounds "
         "(component depth exceeds the cap even with pointer jumping "
-        f"from round {jump_after}); raise max_rounds"
+        f"from round {JUMP_AFTER}); raise MAX_ROUNDS"
     )

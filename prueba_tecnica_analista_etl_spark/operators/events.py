@@ -26,15 +26,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def ordered_funnel(
-    events: DataFrame,
-    stages: Sequence[str],
-    key: str = "user_id",
-    ts: str = "ts",
-    type_col: str = "event_type",
-) -> DataFrame:
+def ordered_funnel(events: DataFrame, stages: Sequence[str]) -> DataFrame:
     """Strictly-ORDERED funnel census: one row per stage with the
-    number of keys whose stage-``i`` event happens strictly AFTER
+    number of users whose stage-``i`` event happens strictly AFTER
     their stage-``i-1`` event (stage timestamps are the earliest
     qualifying occurrence). A bag-of-events check would count a
     purchase that precedes the first view; this does not.
@@ -50,11 +44,11 @@ def ordered_funnel(
     """
     if not stages:
         raise ValueError("ordered_funnel needs at least one stage")
-    w = Window.partitionBy(key)
-    s = events.filter(F.col(key).isNotNull()).select(
-        key,
-        F.unix_micros(F.col(ts)).alias("_us"),
-        F.col(type_col).alias("_tp"),
+    w = Window.partitionBy("user_id")
+    s = events.filter(F.col("user_id").isNotNull()).select(
+        "user_id",
+        F.unix_micros(F.col("ts")).alias("_us"),
+        F.col("event_type").alias("_tp"),
     )
     prev: str | None = None
     tcols = []
@@ -66,7 +60,7 @@ def ordered_funnel(
         s = s.withColumn(tcol, F.min(F.when(cond, F.col("_us"))).over(w))
         tcols.append(tcol)
         prev = tcol
-    per_key = s.groupBy(key).agg(
+    per_key = s.groupBy("user_id").agg(
         *[F.first(t).alias(t) for t in tcols]
     )
     counts = per_key.agg(
@@ -88,18 +82,12 @@ def ordered_funnel(
     ).select("r.stage_n", "r.stage", "r.users")
 
 
-def cohort_retention(
-    events: DataFrame,
-    key: str = "user_id",
-    ts: str = "ts",
-    period_days: int = 7,
-) -> DataFrame:
-    """Cohort retention triangle: keys grouped by first-activity day,
-    distinct keys counted per whole-``period_days`` offset of each
-    later active day (offset 0 = the cohort's own period).
+def cohort_retention(events: DataFrame) -> DataFrame:
+    """Weekly cohort retention triangle: users grouped by
+    first-activity day, distinct users counted per whole-week offset
+    of each later active day (offset 0 = the cohort's own week).
 
     Output: ``cohort_day`` (yyyy-MM-dd), ``week_offset``, ``n_users``.
-    (The offset column keeps its registry name for any period.)
 
     One fact shuffle: the cohort minimum is computed as a window over
     the raw rows FIRST — it is constant per key, so the (key, day, d0)
@@ -108,18 +96,14 @@ def cohort_retention(
     (subset-key rule, no second exchange). The final (cohort, offset)
     rollup shuffles only the collapsed keys × active-days frame.
     """
-    if period_days < 1:
-        raise ValueError(f"period_days must be >= 1, got {period_days}")
-    w = Window.partitionBy(key)
+    w = Window.partitionBy("user_id")
     a = (
-        events.filter(F.col(key).isNotNull())
-        .select(key, F.to_date(ts).alias("d"))
+        events.filter(F.col("user_id").isNotNull())
+        .select("user_id", F.to_date("ts").alias("d"))
         .withColumn("d0", F.min("d").over(w))
         .distinct()
     )
     return a.groupBy(
         F.date_format("d0", "yyyy-MM-dd").alias("cohort_day"),
-        F.floor(F.datediff(F.col("d"), F.col("d0")) / period_days).alias(
-            "week_offset"
-        ),
-    ).agg(F.countDistinct(key).alias("n_users"))
+        F.floor(F.datediff(F.col("d"), F.col("d0")) / 7).alias("week_offset"),
+    ).agg(F.countDistinct("user_id").alias("n_users"))

@@ -69,8 +69,6 @@ def ivf_write_index(
     path: str,
     k: int = 16,
     iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     centroids: np.ndarray | None = None,
 ) -> np.ndarray:
     """Fit (or accept) a coarse quantizer and write ``emb`` as an
@@ -83,15 +81,15 @@ def ivf_write_index(
     spark = emb.sparkSession
     if centroids is None:
         centroids = ivf_fit(
-            emb.select(id_col, as_double(F.col(vec_col)).alias("_v")),
+            emb.select("vec_id", as_double(F.col("embedding")).alias("_v")),
             "_v",
-            id_col,
+            "vec_id",
             k=k,
             iters=iters,
         )
     C = np.asarray(centroids, dtype=np.float64)
     assigned = emb.select(
-        id_col, as_double(F.col(vec_col)).alias("vector")
+        "vec_id", as_double(F.col("embedding")).alias("vector")
     ).withColumn("cluster", assign_clusters(F.col("vector"), C))
     # Compact at build time: without the repartition every input task
     # writes a sliver into every cluster dir (tasks x k tiny leaves —
@@ -145,7 +143,6 @@ def ivf_search_index(
     query,
     nprobe: int = 4,
     topk: int = 10,
-    id_col: str = "vec_id",
     exclude_id=None,
 ) -> DataFrame:
     """Exact-cosine top-``topk`` over the ``nprobe`` probed partitions
@@ -166,14 +163,14 @@ def ivf_search_index(
         # Null-safe: `!=` drops NULL-id index rows only
         # when exclude_id is set — inconsistent behavior keyed on an
         # unrelated parameter; eqNullSafe keeps them either way.
-        idx = idx.filter(~F.col(id_col).eqNullSafe(F.lit(exclude_id)))
+        idx = idx.filter(~F.col("vec_id").eqNullSafe(F.lit(exclude_id)))
     return (
         idx.select(
-            id_col,
+            "vec_id",
             "cluster",
             F.round(cosine(F.col("vector"), qv), 4).alias("cos_sim"),
         )
-        .orderBy(F.desc("cos_sim"), F.asc(id_col))
+        .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
         .limit(topk)
     )
 
@@ -216,12 +213,7 @@ def _own_centroid_census(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def ivf_append(
-    emb: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> dict:
+def ivf_append(emb: DataFrame, path: str) -> dict:
     """Append new vectors to an existing on-disk index WITHOUT a
     refit: assign under the index's OWN sidecar model (cluster ids
     stay comparable with every previously-indexed vector), then
@@ -242,7 +234,7 @@ def ivf_append(
     spark = emb.sparkSession
     C = ivf_read_model(spark, path)
     assigned = emb.select(
-        id_col, as_double(F.col(vec_col)).alias("vector")
+        "vec_id", as_double(F.col("embedding")).alias("vector")
     ).withColumn("cluster", assign_clusters(F.col("vector"), C))
     with open(os.path.join(path, SCHEMA)) as fh:
         want = T.StructType.fromJson(json.load(fh))
@@ -272,9 +264,12 @@ def ivf_append(
     }
 
 
-def ivf_drift_census(
-    spark: SparkSession, path: str, refit_drift: float = 0.05
-) -> dict:
+# Drop in the weighted mean own-centroid cosine past which a re-fit
+# is recommended.
+REFIT_DRIFT = 0.05
+
+
+def ivf_drift_census(spark: SparkSession, path: str) -> dict:
     """Assignment-quality drift since the model last matched the data.
 
     Re-computes the per-cluster own-centroid cosine census over the
@@ -287,7 +282,7 @@ def ivf_drift_census(
          "clusters": k, "rows": n, "refit_recommended": bool}
 
     ``refit_recommended`` fires when the weighted mean cosine dropped
-    by more than ``refit_drift`` — the census→re-fit trigger a real
+    by more than ``REFIT_DRIFT`` — the census→re-fit trigger a real
     100 TB similarity service runs on a schedule. Heuristic doubles
     (order-dependent avg) by design: this is a maintenance signal,
     not an oracle-checked census."""
@@ -317,7 +312,7 @@ def ivf_drift_census(
         "drift": round(drift, 6),
         "clusters": int(agg_now["k"]),
         "rows": int(agg_now["n"]),
-        "refit_recommended": drift > refit_drift,
+        "refit_recommended": drift > REFIT_DRIFT,
     }
 
 
@@ -325,8 +320,6 @@ def ivf_rebalance(
     spark: SparkSession,
     path: str,
     k: int = 16,
-    iters: int = 2,
-    id_col: str = "vec_id",
 ) -> np.ndarray:
     """Re-fit the quantizer on the CURRENT index contents and rewrite
     the layout — the action ``ivf_drift_census``'s trigger recommends.
@@ -345,7 +338,7 @@ def ivf_rebalance(
 
     recover(path)
     live = _read_data(spark, path).select(
-        F.col(id_col), F.col("vector").alias("embedding")
+        F.col("vec_id"), F.col("vector").alias("embedding")
     )
     # localCheckpoint: the rebuild's fit + assignment must read the
     # CURRENT files, not re-list the directory mid-swap.
@@ -353,9 +346,6 @@ def ivf_rebalance(
     staged = staging(path)
     # ivf_write_index snapshots the drift baseline itself — no second
     # stats pass here.
-    C = ivf_write_index(
-        live, staged, k=k, iters=iters, id_col=id_col,
-        vec_col="embedding",
-    )
+    C = ivf_write_index(live, staged, k=k)
     replace(path, staged)
     return C

@@ -49,19 +49,19 @@ def count_sum_rollup(
     )
 
 
-def top_duplicates(df: DataFrame, key: str, k: int = 20) -> DataFrame:
-    """Top-k most-frequent keys, deterministic tiebreak (O2/W2; the
+def top_duplicates(df: DataFrame, key: str) -> DataFrame:
+    """Top-20 most-frequent keys, deterministic tiebreak (O2/W2; the
     "most duplicated value" question). Physical plan is
-    ``TakeOrderedAndProject`` after the aggregation — only k rows leave
-    each partition, no global sort materialization.
+    ``TakeOrderedAndProject`` after the aggregation — only 20 rows
+    leave each partition, no global sort materialization.
 
     Reference-faithful and deliberately UNFILTERED: the reference's
-    ``value_counts().head(k)`` includes cnt=1 keys when fewer than k
+    ``value_counts().head(20)`` includes cnt=1 keys when fewer than 20
     keys are duplicated; callers wanting only true duplicates compose
     ``.filter(F.col('cnt') > 1)`` (dup_census does exactly that)."""
     return (
         df.groupBy(key)
         .agg(F.count(F.lit(1)).alias("cnt"))
         .orderBy(F.desc("cnt"), F.asc(key))
-        .limit(k)
+        .limit(20)
     )

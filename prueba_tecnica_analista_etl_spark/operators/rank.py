@@ -47,7 +47,7 @@ def _offset_lookup(
     offsets: list[tuple[int, ...]], n_vals: int
 ) -> list[Column] | None:
     """Per-bucket offset lookup expressions — dense ``array`` literals
-    indexed by bucket id (r15): the offsets are a census-sized,
+    indexed by bucket id: the offsets are a census-sized,
     driver-known table, so shipping them as plan literals turns the
     former per-invocation ``createDataFrame`` (a driver→JVM row
     conversion) + ``BroadcastHashJoin`` against the FACT-SIZED frame
@@ -172,7 +172,7 @@ def bucketed_rank(
     within = F.rank() if method == "rank" else F.row_number()
     lookup = _offset_lookup(offsets, 1)
     if lookup is not None:
-        # Dense-literal path (r15): map-only offset projection. The
+        # Dense-literal path: map-only offset projection. The
         # inner offset join used to DROP NULL-bucket rows silently;
         # the filter preserves exactly that semantic (the census pass
         # raises on NULL buckets anyway — this only matters for a
@@ -227,9 +227,8 @@ def bucketed_prefix_sums(
     sum_cols: list[str],
     *,
     hist: list[tuple[int, tuple[int, ...]]] | None = None,
-    out_prefix: str = "cum_",
 ) -> DataFrame:
-    """Attach ``{out_prefix}{c}`` = EXCLUSIVE prefix sum of each
+    """Attach ``cum_{c}`` = EXCLUSIVE prefix sum of each
     ``c in sum_cols`` under ``ORDER BY order_col`` — the sum over all
     rows STRICTLY before this one — without an ``Exchange
     SinglePartition``: the rank scheme's histogram pass generalized
@@ -265,13 +264,13 @@ def bucketed_prefix_sums(
     )
     lookup = _offset_lookup(offsets, len(sum_cols))
     if lookup is not None:
-        # Dense-literal path (r15) — see bucketed_rank: the offsets
+        # Dense-literal path — see bucketed_rank: the offsets
         # ride the plan as array literals, removing the per-invocation
         # createDataFrame + broadcast join from the fact path.
         out = keyed.filter(F.col(_BUCKET).isNotNull())
         for c, look in zip(sum_cols, lookup):
             out = out.withColumn(
-                out_prefix + c,
+                "cum_" + c,
                 look + F.coalesce(F.sum(c).over(w), F.lit(0)),
             )
         return out.drop(_BUCKET)
@@ -285,7 +284,7 @@ def bucketed_prefix_sums(
     out = keyed.join(F.broadcast(off), _BUCKET)
     for c, oc in zip(sum_cols, off_cols):
         out = out.withColumn(
-            out_prefix + c,
+            "cum_" + c,
             F.col(oc) + F.coalesce(F.sum(c).over(w), F.lit(0)),
         )
     return out.drop(_BUCKET, *off_cols)

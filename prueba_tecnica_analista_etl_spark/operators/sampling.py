@@ -14,16 +14,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def split_leakage_census(
-    df: DataFrame,
-    content_col: str,
-    split_col: str = "split",
-    reference: str = "train",
-    audited: tuple[str, ...] = ("val", "test"),
-) -> DataFrame:
-    """Content-leakage audit across an assigned split: for each
-    ``audited`` split, how many of its rows carry content whose
-    fingerprint ALSO appears in the ``reference`` split.
+_AUDITED = ("val", "test")
+
+
+def split_leakage_census(df: DataFrame, content_col: str) -> DataFrame:
+    """Content-leakage audit across an assigned ``split`` column: for
+    the ``val`` and ``test`` splits, how many of their rows carry
+    content whose fingerprint ALSO appears in the ``train`` split.
 
     A hash-of-key split (q_train_val_split) guarantees a KEY never
     straddles splits — but two different keys can carry byte-identical content (mirrors,
@@ -39,12 +36,9 @@ def split_leakage_census(
     per audited split.
     """
     fp = F.md5(F.col(content_col))
-    s = df.select(F.col(split_col).alias("_split"), fp.alias("_fp"))
-    aggs = [
-        F.count_if(F.col("_split") == reference).alias("_n_ref")
-    ] + [
-        F.count_if(F.col("_split") == a).alias(f"_n_{a}")
-        for a in audited
+    s = df.select(F.col("split").alias("_split"), fp.alias("_fp"))
+    aggs = [F.count_if(F.col("_split") == "train").alias("_n_ref")] + [
+        F.count_if(F.col("_split") == a).alias(f"_n_{a}") for a in _AUDITED
     ]
     g = s.groupBy("_fp").agg(*aggs)
     # ONE global aggregate carries every audited split's sums (a
@@ -52,10 +46,8 @@ def split_leakage_census(
     # fingerprint shuffle once per split); the 2x|audited| counters
     # then explode into per-split rows — the q_filter_funnel
     # one-pass census pattern.
-    if not audited:
-        raise ValueError("audited must be non-empty")
     sums = []
-    for a in audited:
+    for a in _AUDITED:
         n = F.col(f"_n_{a}")
         sums.append(F.sum(n).cast("long").alias(f"_docs_{a}"))
         sums.append(
@@ -71,7 +63,7 @@ def split_leakage_census(
                 F.col(f"_docs_{a}").alias("docs"),
                 F.col(f"_leaked_{a}").alias("leaked"),
             )
-            for a in audited
+            for a in _AUDITED
         ]
     )
     return totals.select(F.explode(rows).alias("_r")).select(

@@ -62,33 +62,29 @@ def cosine_topk_batch(
     emb: DataFrame,
     queries: DataFrame,
     k: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "q_id",
-    query_vec_col: str = "qv",
     carry_cols: "tuple[str, ...]" = (),
     query_carry_cols: "tuple[str, ...]" = (),
     rank_col: str | None = None,
 ) -> DataFrame:
     """Exact cosine top-``k`` per query for a whole query FRAME in one
-    corpus scan: ``queries`` (small — it is broadcast) carries
-    (``query_id_col``, ``query_vec_col``); output is one row per
+    corpus scan over (``vec_id``, ``embedding``): ``queries`` (small —
+    it is broadcast) carries (``q_id``, ``qv``); output is one row per
     (query, neighbor) with ``cos_sim``, ranked per query.
     Neighbor rows whose id equals the query id are dropped (the
     self-match every nearest-neighbor probe over its own corpus would
     otherwise return). ``carry_cols`` rides extra corpus
     columns (e.g. a label) through to the output — at 100 TB a
     consumer joining them back on would pay a SECOND full-corpus
-    read; carrying them keeps the op one scan (r12, q_knn_classify).
-    ``query_carry_cols`` (r14) does the same for QUERY-side columns
+    read; carrying them keeps the op one scan (q_knn_classify).
+    ``query_carry_cols`` does the same for QUERY-side columns
     (e.g. the probe's own label): they ride the already-broadcast
     query frame, so a consumer stops re-reading the corpus a third
     time just to join the probe attribute back on."""
     # Query-side carries must not collide with corpus-side output
-    # columns (ADVICE r14): a clash would surface only as an
+    # columns: a clash would surface only as an
     # ambiguous-reference AnalysisException at first use of the
     # duplicate name — fail fast with the actual conflict instead.
-    clash = set(query_carry_cols) & ({id_col, *carry_cols})
+    clash = set(query_carry_cols) & {"vec_id", *carry_cols}
     if clash:
         raise ValueError(
             "query_carry_cols collide with corpus-side output "
@@ -104,22 +100,20 @@ def cosine_topk_batch(
     # dot/(norm*norm) is the exact same float-op sequence cosine()
     # produces — bit-identical scores, just not recomputed.
     e = emb.select(
-        F.col(id_col),
+        F.col("vec_id"),
         *[F.col(c) for c in carry_cols],
-        as_double(F.col(vec_col)).alias("_v"),
+        as_double(F.col("embedding")).alias("_v"),
     ).withColumn("_nv", norm(F.col("_v")))
     q = queries.select(
-        F.col(query_id_col).alias("_qid"),
+        F.col("q_id").alias("_qid"),
         *[F.col(c) for c in query_carry_cols],
-        as_double(F.col(query_vec_col)).alias("_qv"),
+        as_double(F.col("qv")).alias("_qv"),
     ).withColumn("_nq", norm(F.col("_qv")))
     scored = e.crossJoin(F.broadcast(q)).withColumn(
         "_cos",
         dot(F.col("_v"), F.col("_qv")) / (F.col("_nv") * F.col("_nq")),
-    ).filter(F.col(id_col) != F.col("_qid"))
-    w = Window.partitionBy("_qid").orderBy(
-        F.desc("_cos"), F.asc(id_col)
-    )
+    ).filter(F.col("vec_id") != F.col("_qid"))
+    w = Window.partitionBy("_qid").orderBy(F.desc("_cos"), F.asc("vec_id"))
     # rank_col: expose the per-query rank (the window's row_number
     # over UNROUNDED cosine + id tie-break) — ranking consumers
     # (nDCG) need the position, and re-deriving it from the ROUNDED
@@ -128,8 +122,8 @@ def cosine_topk_batch(
         scored.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") <= k)
         .select(
-            F.col("_qid").alias(query_id_col),
-            F.col(id_col),
+            F.col("_qid").alias("q_id"),
+            F.col("vec_id"),
             *[F.col(c) for c in carry_cols],
             *[F.col(c) for c in query_carry_cols],
             *(

@@ -20,7 +20,6 @@ def top_k_per_group(
     partition_by: Sequence[str],
     order_by: Sequence[Column | str],
     k: int,
-    rn_col: str = "rn",
 ) -> DataFrame:
     """Top-k rows per group with the rank exposed (W1/W2 pattern).
 
@@ -28,8 +27,8 @@ def top_k_per_group(
     (hash-stability convention, SURVEY.md §2).
     """
     w = Window.partitionBy(*partition_by).orderBy(*order_by)
-    return df.withColumn(rn_col, F.row_number().over(w)).filter(
-        F.col(rn_col) <= k
+    return df.withColumn("rn", F.row_number().over(w)).filter(
+        F.col("rn") <= k
     )
 
 
@@ -38,7 +37,6 @@ def running_sum(
     partition_by: Sequence[str],
     order_by: Sequence[Column | str],
     value_col: Column,
-    out_col: str = "running_total",
 ) -> DataFrame:
     """Cumulative sum per group (W3): frame = unbounded-preceding→current.
 
@@ -50,4 +48,4 @@ def running_sum(
         .orderBy(*order_by)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    return df.withColumn(out_col, F.sum(value_col).over(w))
+    return df.withColumn("running_total", F.sum(value_col).over(w))

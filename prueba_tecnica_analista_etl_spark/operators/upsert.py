@@ -242,7 +242,6 @@ def snapshot_diff(
     old: DataFrame,
     new: DataFrame,
     keys: Sequence[str],
-    compare_cols: Sequence[str] | None = None,
 ) -> DataFrame:
     """CDC delta generation — the INVERSE of :func:`upsert`: given two
     snapshots of a keyed table, emit one row per changed key with
@@ -257,8 +256,8 @@ def snapshot_diff(
 
     Column comparison uses null-safe inequality (``IS DISTINCT
     FROM``), so NULL→value and value→NULL count as updates — the
-    semantics a downstream MERGE needs. ``compare_cols`` defaults to
-    every shared non-key column.
+    semantics a downstream MERGE needs. Every shared non-key column
+    is compared.
 
     Scale shape: ONE shuffle per side (full outer join co-partitioned
     on the key); column values never enter the shuffle key. At 100 TB
@@ -267,11 +266,10 @@ def snapshot_diff(
     snapshots stored column-pruned (keys + compared columns only) the
     scan reads exactly what the diff needs.
     """
-    if compare_cols is None:
-        new_cols, key_set = set(new.columns), set(keys)
-        compare_cols = [
-            c for c in old.columns if c in new_cols and c not in key_set
-        ]
+    new_cols, key_set = set(new.columns), set(keys)
+    compare_cols = [
+        c for c in old.columns if c in new_cols and c not in key_set
+    ]
     # Presence markers, not key-IS-NULL: a NULL business key is data
     # (and eqNullSafe matches it across sides); only an unmatched
     # outer-join side leaves the marker NULL.
@@ -311,21 +309,17 @@ def cdc_apply(
     log: DataFrame,
     keys: Sequence[str],
     op_col: str = "op",
-    delete_value: str = "D",
-    order: Sequence[Column | str] | None = None,
 ) -> DataFrame:
     """Changelog application — :func:`upsert`'s superset with DELETE
     markers (the apply half of CDC; :func:`snapshot_diff` is the
     generate half, and ``q_cdc_apply`` proves the compaction shape
     against a DuckDB oracle).
 
-    ``log`` carries the base's columns plus ``op_col``; ``order`` is a
-    total order whose FIRST row per key is that key's final state
-    (pass descending change-time, e.g. ``[F.desc("ts"),
-    F.desc("seq")]`` — None means the log is already compacted to one
-    row per key). Keys whose final op is ``delete_value`` are removed;
-    every other key takes its final row (insert or update); untouched
-    base rows pass through.
+    ``log`` carries the base's columns plus ``op_col`` and is already
+    compacted to one row per key, its final state (``keep_first`` over
+    descending change-time does that). Keys whose final op is ``D``
+    are removed; every other key takes its final row (insert or
+    update); untouched base rows pass through.
 
     Same single-key-shuffle shape as the MERGE join-rewrite::
 
@@ -345,17 +339,12 @@ def cdc_apply(
     the NULL-op column, by contrast, IS handled, via eqNullSafe
     below).
     """
-    compacted = keep_first(log, keys, order) if order else log
-    kept_base = base.join(
-        compacted.select(*keys), on=list(keys), how="left_anti"
-    )
+    kept_base = base.join(log.select(*keys), on=list(keys), how="left_anti")
     # eqNullSafe, not `!=`: a dirty feed's NULL op must be treated as
     # an upsert — with plain `!=` the NULL row falls out of upserts
     # while its key still anti-joins away, silently DELETING a key
     # that was never marked.
-    upserts = compacted.filter(
-        ~F.col(op_col).eqNullSafe(delete_value)
-    )
+    upserts = log.filter(~F.col(op_col).eqNullSafe("D"))
     return upserts.select(*base.columns).unionByName(
         kept_base.select(*base.columns)
     )

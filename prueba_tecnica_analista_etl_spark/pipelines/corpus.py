@@ -25,10 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from prueba_tecnica_analista_etl_spark.artifacts import (
-    clear_artifacts,
-    corpus_artifact,
-)
+from prueba_tecnica_analista_etl_spark.artifacts import corpus_artifact
 
 from prueba_tecnica_analista_etl_spark.functions.text import n_tokens
 from prueba_tecnica_analista_etl_spark.operators.dedupe import keep_first
@@ -62,8 +59,7 @@ def _materialize(df: DataFrame) -> DataFrame:
     q_corpus_curate ran 10-31 s. The eager materialize-once pipeline
     runs ~1.4 s. Staging the candidate-pair artifact eagerly (like IVF
     quantizer training) is the design; repeat constructions are cheap
-    via the evictable pair cache (:func:`cached_minhash_pairs` +
-    :func:`clear_pairs_cache`)."""
+    via the evictable pair cache (:func:`cached_minhash_pairs`)."""
     return df.localCheckpoint()
 
 
@@ -187,9 +183,13 @@ def _enforce_no_live_pair(
     return alive.join(forced, "doc_id", "left_anti"), forced
 
 
-def near_dup_purge(
-    docs: DataFrame, pairs: DataFrame, rounds: int = 3
-) -> DataFrame:
+# Fixed round count of near_dup_purge, which the q_corpus_curate
+# oracle unrolls term for term; round cap of near_dup_purge_stable.
+PURGE_ROUNDS = 3
+STABLE_MAX_ROUNDS = 64
+
+
+def near_dup_purge(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     """Greedy min-id survivor purge, iterated toward fixpoint: drop
     ``doc_b`` only while its ``doc_a`` still survives. ``pairs`` must
     carry (doc_a < doc_b) columns.
@@ -207,7 +207,7 @@ def near_dup_purge(
     after the cap a final enforcement pass greedy-drops ``doc_b`` of
     any still-both-alive pair — the no-surviving-near-dup-pair
     invariant holds unconditionally; only chains deeper than
-    ``rounds`` can still lose a non-duplicate doc. Callers that can
+    ``PURGE_ROUNDS`` can still lose a non-duplicate doc. Callers that can
     afford per-round count actions should use
     :func:`near_dup_purge_stable`, which iterates until the alive set
     is provably stable (zero over-purge) and reports audit counts the
@@ -215,7 +215,7 @@ def near_dup_purge(
     """
     pairs, endpoints = _restricted_pairs(docs, pairs)
     alive = endpoints
-    for _ in range(rounds):
+    for _ in range(PURGE_ROUNDS):
         alive = _materialize(
             endpoints.join(_losers(pairs, alive), "doc_id", "left_anti")
         )
@@ -225,13 +225,13 @@ def near_dup_purge(
 
 
 def near_dup_purge_stable(
-    docs: DataFrame, pairs: DataFrame, max_rounds: int = 64
+    docs: DataFrame, pairs: DataFrame
 ) -> tuple[DataFrame, dict[str, int]]:
     """Eager fixpoint variant of :func:`near_dup_purge`: iterate until
     the alive set is STABLE, so no chain depth can trigger the
     enforcement pass's over-purge. Returns ``(survivors, audit)`` with
     ``audit = {"purge_rounds": n, "enforcement_over_purged": m}`` —
-    ``m`` is 0 whenever the loop converged before ``max_rounds``
+    ``m`` is 0 whenever the loop converged before ``STABLE_MAX_ROUNDS``
     (the enforcement pass still runs as a safety net, and its drop
     count is surfaced so over-purging is observable, never silent).
 
@@ -246,7 +246,7 @@ def near_dup_purge_stable(
     alive = endpoints
     n_alive = alive.count()
     rounds_run = 0
-    for _ in range(max_rounds):
+    for _ in range(STABLE_MAX_ROUNDS):
         nxt = _materialize(
             endpoints.join(_losers(pairs, alive), "doc_id", "left_anti")
         )
@@ -297,12 +297,6 @@ def _minhash_pairs_key() -> str:
         f"minhash_pairs:{MINHASH_BANDS}x{MINHASH_ROWS}"
         f":t{t}:c{BUCKET_CAP}"
     )
-
-
-def clear_pairs_cache(spark: SparkSession | None = None) -> None:
-    """Drop memoized candidate-pair frames — all of them, or only the
-    given session's."""
-    clear_artifacts(spark, name=_minhash_pairs_key())
 
 
 def cached_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:

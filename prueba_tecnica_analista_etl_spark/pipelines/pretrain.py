@@ -278,9 +278,10 @@ def pretrain_run(
             shard_dir,
             key_col="doc_id",
             n_shards=n_shards,
-            token_col="n_tok",
         )
-        verify_training_shards(spark, shard_dir)
+        problems = verify_training_shards(spark, shard_dir)
+        if problems:
+            raise RuntimeError(f"exported shards fail verification: {problems}")
 
         ledger = {
             **curate_stats,

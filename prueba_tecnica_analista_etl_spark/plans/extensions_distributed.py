@@ -1546,9 +1546,7 @@ def q_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _streamed_candidates() -> list:
         import shutil
 
-        data_dir, schema = write_replay_files(
-            spark, sf_dir, "events", n_files=4
-        )
+        data_dir, schema = write_replay_files(spark, sf_dir, "events")
         acc = MGStreamAccumulator("event_type", capacity=_HH_CAPACITY)
         # The checkpoint is single-use (the drained candidate set is
         # what gets staged, via census_artifact below) — remove it

@@ -1317,25 +1317,17 @@ def fp8_ids_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def shingle_edges(
-    docs: DataFrame,
-    k: int = 8,
-    min_shared: int = CLUSTER_MIN_SHARED,
-    max_df: int | None = None,
-    grouped: DataFrame | None = None,
+    docs: DataFrame, grouped: DataFrame | None = None
 ) -> DataFrame:
     """Doc-pair edges ``(doc_a < doc_b, shared)`` where the pair shares
-    ≥ ``min_shared`` distinct k-token shingle fingerprints.
+    ≥ ``CLUSTER_MIN_SHARED`` distinct 8-token shingle fingerprints.
 
     Same inline-pair shape as q_source_overlap (one groupBy(fp)
     collects each fingerprint's sorted member ids; a<b combinations
     are generated from that array in codegen — the heavy
     explode+md5+distinct subtree runs ONCE, not twice per join side).
-    ``max_df`` is the 100 TB skew guard: a fingerprint present in more
-    than ``max_df`` docs is corpus boilerplate — it contributes
-    O(df²) pair rows and no near-dup signal (any genuine duplicate
-    family also shares its rarer shingles) — so production callers cap
-    it; the oracle-checked query leaves it None for exactness against
-    the uncapped SQL.  ``grouped`` bypasses the corpus scan with a
+    Fingerprints are not capped by document frequency, for exactness
+    against the uncapped SQL oracle. ``grouped`` bypasses the corpus scan with a
     pre-staged (fp, ids) frame (the ``fp8_ids_frame`` artifact)."""
     if grouped is not None:
         g = grouped
@@ -1344,7 +1336,7 @@ def shingle_edges(
         fp = (
             spread(docs)
             .select(
-                "doc_id", F.explode(shingles(toks, k)).alias("gram")
+                "doc_id", F.explode(shingles(toks, 8)).alias("gram")
             )
             .select("doc_id", F.md5("gram").alias("fp"))
         )
@@ -1356,8 +1348,6 @@ def shingle_edges(
         g = fp.groupBy("fp").agg(
             F.sort_array(F.collect_set("doc_id")).alias("ids")
         )
-    if max_df is not None:
-        g = g.filter(F.size("ids") <= max_df)
     combos = pair_combos(F.col("ids"), "doc_a", "doc_b")
     return (
         g.filter(F.size("ids") >= 2)
@@ -1365,7 +1355,7 @@ def shingle_edges(
         .select("p.doc_a", "p.doc_b")
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("shared"))
-        .filter(F.col("shared") >= min_shared)
+        .filter(F.col("shared") >= CLUSTER_MIN_SHARED)
     )
 
 
@@ -1413,8 +1403,7 @@ def shingle_edges(
     "not just rows-counted. Output: one row per duplicate family "
     "(cluster_id, n_docs) — all-integer, no float parity risk. "
     "Scale shape: edge building shuffles on the 16-byte fingerprint "
-    "(boilerplate fingerprints capped via shingle_edges(max_df=...) "
-    "at scale; None here for oracle exactness — harness buckets are "
+    "(uncapped, for oracle exactness — harness buckets are "
     "duplicate-family-sized); each propagation round is one "
     "O(|E|)-message join + groupBy over ENDPOINT-sized frames, "
     "round count = component diameter (duplicate families are "
@@ -1902,8 +1891,7 @@ def q_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     "engine-neutral md5_60 hashing). Candidates: docs sharing >=3 "
     "distinct 8-token "
     "shingle fingerprints (shingle_edges — one fingerprint-keyed "
-    "shuffle, inline a<b pair expansion, max_df boilerplate cap "
-    "available at scale); scores: |A∩B| = the pair's shared-"
+    "shuffle, inline a<b pair expansion); scores: |A∩B| = the pair's shared-"
     "fingerprint count the edge aggregate already holds, |A∪B| = "
     "n_a + n_b − shared from the per-doc distinct-fingerprint "
     "census, so scoring never touches the shingle sets again — no "

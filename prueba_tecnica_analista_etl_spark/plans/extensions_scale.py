@@ -44,6 +44,7 @@ from prueba_tecnica_analista_etl_spark.functions.vectors import (
     sign_bits,
     sign_words,
 )
+from prueba_tecnica_analista_etl_spark.pipelines.corpus import PURGE_ROUNDS
 from prueba_tecnica_analista_etl_spark.plans.queries import _t, query
 from prueba_tecnica_analista_etl_spark.session import session_clone
 from prueba_tecnica_analista_etl_spark.sources.tables import spread
@@ -88,12 +89,14 @@ BUCKET_CAP = 64  # skew guard: per-bucket pair work is bounded by
 # and the generated oracle SQL.
 MINHASH_P = (1 << 61) - 1
 _LOW30 = (1 << 30) - 1
+MINHASH_SEED = 1105
+# Seed of the skew guard's secondary chunk order for single-band
+# callers; the n-gram oracle replays the same chunks from it.
+CHUNK_SEED = 7
 
 
-def _minhash_coeffs(
-    n: int, seed: int = 1105
-) -> list[tuple[int, int, int]]:
-    rng = random.Random(seed)
+def _minhash_coeffs(n: int) -> list[tuple[int, int, int]]:
+    rng = random.Random(MINHASH_SEED)
     return [
         (
             rng.randrange(1, 1 << 30),
@@ -107,8 +110,8 @@ def _minhash_coeffs(
 MINHASH_COEFFS = _minhash_coeffs(MINHASH_BANDS * MINHASH_ROWS)
 
 
-def _sql_doc_shingle_cte(k: int = 3) -> str:
-    """Shared oracle CTE text: per-doc DISTINCT k-token shingles
+def _sql_doc_shingle_cte() -> str:
+    """Shared oracle CTE text: per-doc DISTINCT 3-token shingles
     (``sh``: doc_id, sg) and their md5_60 hashes (``hs``: doc_id, h)
     over the documents table — the SQL twin of ``shingles()`` /
     ``shingle_hashes()`` (single-space tokenizer; short docs yield one
@@ -118,29 +121,29 @@ def _sql_doc_shingle_cte(k: int = 3) -> str:
     t AS (SELECT doc_id, string_split(lower(text), ' ') AS toks
           FROM documents),
     ix AS (SELECT doc_id, toks,
-                  unnest(generate_series(1, greatest(len(toks) - {k - 1},
-                                                     1))) AS i
+                  unnest(generate_series(1, greatest(len(toks) - 2, 1)))
+                    AS i
            FROM t),
     sh AS (SELECT DISTINCT doc_id,
-                  array_to_string(list_slice(toks, i, i + {k - 1}), ' ')
+                  array_to_string(list_slice(toks, i, i + 2), ' ')
                     AS sg
            FROM ix),
     hs AS (SELECT doc_id, {sql_md5_60('sg')} AS h FROM sh)"""
 
 
-def _sql_chunk(part: str, seed: str, id_col: str, cap: int = BUCKET_CAP) -> str:
+def _sql_chunk(part: str, seed: str, id_col: str) -> str:
     """SQL twin of ``capped_pair_array``'s skew sub-split: the 0-based
     chunk index of ``id_col`` within its ``part`` bucket, ordered by
     the same md5_60("<seed>:<id>") secondary hash the engine sorts on
     (ids are unique per bucket, so the order is total). Buckets at or
-    under ``cap`` land entirely in chunk 0 — identical pair sets to
+    under ``BUCKET_CAP`` land entirely in chunk 0 — identical pair sets to
     the engine's uncapped fast path."""
     h = sql_md5_60(
         f"CAST({seed} AS VARCHAR) || ':' || CAST({id_col} AS VARCHAR)"
     )
     return (
         f"(row_number() OVER (PARTITION BY {part} "
-        f"ORDER BY {h}, {id_col}) - 1) // {cap}"
+        f"ORDER BY {h}, {id_col}) - 1) // {BUCKET_CAP}"
     )
 
 def capped_pair_array(
@@ -150,7 +153,6 @@ def capped_pair_array(
     a_name: str,
     b_name: str,
     cap: int | None = BUCKET_CAP,
-    seed: int = 7,
     seed_col=None,
 ):
     """Ordered candidate pairs (``a < b``) from one LSH bucket's
@@ -171,7 +173,7 @@ def capped_pair_array(
     the same bucket in EVERY band, so a band-independent secondary
     hash would chunk all bands identically and lose the same
     cross-chunk pairs everywhere. Single-band callers (n-gram) keep
-    the constant ``seed``; their cross-chunk loss is the documented
+    the constant ``CHUNK_SEED``; their cross-chunk loss is the documented
     trade. Output
     fields: ``{a_name}, {b_name}, pa, pb`` (payloads of each side).
     All expression-level (no extra shuffle, no UDF). Buckets at or
@@ -210,7 +212,7 @@ def capped_pair_array(
     # micro-batch, not the bucket).
     if cap is None:
         return expand(plain)
-    chunk_seed = F.lit(seed) if seed_col is None else seed_col
+    chunk_seed = F.lit(CHUNK_SEED) if seed_col is None else seed_col
     # Secondary chunk-order hash: md5_60 of "<seed>:<id>" — engine-
     # neutral (not xxhash64), so an oracle reproduces the exact
     # chunk boundaries with row_number() over the same hash. Ids are
@@ -280,13 +282,7 @@ def doc_shingle_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def minhash_band_frame(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bands: int = MINHASH_BANDS,
-    rows: int = MINHASH_ROWS,
-    shingle_n: int = 3,
-    hashed: DataFrame | None = None,
+    docs: DataFrame, hashed: DataFrame | None = None
 ) -> DataFrame:
     """Per-doc banded minhash signature frame — ``(doc_id, hs, band,
     key)`` with one row per (doc, band), ``hs`` the sorted distinct
@@ -295,7 +291,7 @@ def minhash_band_frame(
     source for :func:`minhash_pair_frame` (all-pairs batch) and the
     streaming near-dup gate (probe vs accepted index): both join on
     the plain (band, key) columns."""
-    n_hashes = bands * rows
+    n_hashes = MINHASH_BANDS * MINHASH_ROWS
     coeffs = _minhash_coeffs(n_hashes)
     if hashed is not None:
         # Pre-staged (doc_id, hs) feature frame — the shared
@@ -303,10 +299,7 @@ def minhash_band_frame(
         d = hashed.select("doc_id", "hs")
     else:
         d = spread(docs).select(
-            F.col(id_col).alias("doc_id"),
-            shingle_hashes(tokens(F.col(text_col)), shingle_n).alias(
-                "hs"
-            ),
+            "doc_id", shingle_hashes(tokens(F.col("text")), 3).alias("hs")
         )
 
     def _seeded_min(j: int):
@@ -334,12 +327,14 @@ def minhash_band_frame(
                         F.lit(b).alias("band"),
                         F.struct(
                             *[
-                                F.col(f"mh{b * rows + r}").alias(f"k{r}")
-                                for r in range(rows)
+                                F.col(f"mh{b * MINHASH_ROWS + r}").alias(
+                                    f"k{r}"
+                                )
+                                for r in range(MINHASH_ROWS)
                             ]
                         ).alias("key"),
                     )
-                    for b in range(bands)
+                    for b in range(MINHASH_BANDS)
                 ]
             )
         ).alias("bk"),
@@ -347,25 +342,16 @@ def minhash_band_frame(
 
 
 def minhash_pair_frame(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = MINHASH_JACCARD_T,
-    bands: int = MINHASH_BANDS,
-    rows: int = MINHASH_ROWS,
-    shingle_n: int = 3,
-    cap: int | None = BUCKET_CAP,
-    hashed: DataFrame | None = None,
+    docs: DataFrame, hashed: DataFrame | None = None
 ) -> DataFrame:
-    """Generic banded-minhash near-dup pair detection over ANY
-    (id, text) DataFrame — the user-facing operator API behind the
-    ``documents``-table queries (``minhash_pairs`` below is this at
-    the harness defaults). Emits every ordered pair (doc_a < doc_b)
-    with exact Jaccard ≥ ``threshold`` over ``shingle_n``-token
-    shingles, candidate-generated by ``bands``×``rows`` banded LSH
-    (recall at similarity s ≈ 1-(1-s^rows)^bands — tune the split to
-    the target threshold). Output columns are always
-    (doc_a, doc_b, jaccard_sim) regardless of ``id_col``.
+    """Banded-minhash near-dup pair detection over a (doc_id, text)
+    DataFrame — the operator behind the ``documents``-table queries
+    (``minhash_pairs`` below is this over the harness table). Emits
+    every ordered pair (doc_a < doc_b) with exact Jaccard ≥
+    ``MINHASH_JACCARD_T`` over 3-token shingles, candidate-generated
+    by ``MINHASH_BANDS``×``MINHASH_ROWS`` banded LSH (recall at
+    similarity s ≈ 1-(1-s^rows)^bands). Output columns are
+    (doc_a, doc_b, jaccard_sim).
 
     Shingle once, hash once: every downstream step (minhashes, band
     keys, exact re-rank) works on the array<long> of shingle hashes,
@@ -381,16 +367,7 @@ def minhash_pair_frame(
     struct (not a combiner hash): equality of the struct == equality
     of all ``rows`` minima, and a SQL oracle joins on the plain
     columns — no cross-engine combiner function needed."""
-    banded = minhash_band_frame(
-        docs,
-        id_col=id_col,
-        text_col=text_col,
-        bands=bands,
-        rows=rows,
-        shingle_n=shingle_n,
-        hashed=hashed,
-    )
-    return pairs_from_band_frame(banded, threshold=threshold, cap=cap)
+    return pairs_from_band_frame(minhash_band_frame(docs, hashed=hashed))
 
 
 def pairs_from_band_frame(
@@ -505,7 +482,7 @@ def _minhash_scored_pairs_cte(capped: bool = True) -> str:
     else:
         r_cte = f"r AS (SELECT doc_id, band, {keys} FROM bk)"
         chunk_eq = ""
-    return f"""{_sql_doc_shingle_cte(3)},
+    return f"""{_sql_doc_shingle_cte()},
     mins AS (SELECT doc_id, {mins} FROM hs GROUP BY doc_id),
     bk AS ({bk}),
     {r_cte},
@@ -572,14 +549,10 @@ def q_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def ngram_pair_frame(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_n: int = 3,
-    hashed: DataFrame | None = None,
+    docs: DataFrame, hashed: DataFrame | None = None
 ) -> DataFrame:
-    """Generic single-band min-shingle candidate pairs with exact
-    n-gram Jaccard over ANY (id, text) frame (the operator behind
+    """Single-band min-shingle candidate pairs with exact trigram
+    Jaccard over a (doc_id, text) frame (the operator behind
     ``q_ngram_jaccard``). One bucket per minimum shingle hash —
     cheaper and lower-recall than full banded minhash
     (:func:`minhash_pair_frame`); right for the
@@ -596,10 +569,8 @@ def ngram_pair_frame(
         )
     else:
         d = spread(docs).select(
-            F.col(id_col).alias("doc_id"),
-            F.array_distinct(
-                shingles(tokens(F.col(text_col)), shingle_n)
-            ).alias("sh"),
+            "doc_id",
+            F.array_distinct(shingles(tokens(F.col("text")), 3)).alias("sh"),
         )
         d = d.withColumn(
             "minhash",
@@ -635,12 +606,13 @@ def ngram_pair_frame(
 def _ngram_oracle_sql() -> str:
     """DuckDB oracle for the single-band min-shingle path: bucket key = min
     md5_60 shingle hash (engine-neutral), skew chunks replay the
-    constant-seed ('7') md5_60 secondary order, exact trigram Jaccard
-    per candidate pair via the shared-shingle count (|A∩B| join) and
-    per-doc distinct-shingle census (|A∪B| = n_a + n_b − shared)."""
-    chunk = _sql_chunk("mh", "7", "doc_id")
+    constant-seed (``CHUNK_SEED``) md5_60 secondary order, exact trigram
+    Jaccard per candidate pair via the shared-shingle count (|A∩B|
+    join) and per-doc distinct-shingle census (|A∪B| = n_a + n_b −
+    shared)."""
+    chunk = _sql_chunk("mh", str(CHUNK_SEED), "doc_id")
     return f"""
-    WITH {_sql_doc_shingle_cte(3)},
+    WITH {_sql_doc_shingle_cte()},
     m AS (SELECT doc_id, min(h) AS mh FROM hs GROUP BY doc_id),
     r AS (SELECT doc_id, mh, {chunk} AS chunk FROM m),
     p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -718,17 +690,12 @@ SIMHASH_MAX_HAMMING = 8
 
 
 def simhash_pair_frame(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = SIMHASH_MAX_HAMMING,
-    shingle_n: int = 3,
-    hashed: DataFrame | None = None,
+    docs: DataFrame, hashed: DataFrame | None = None
 ) -> DataFrame:
-    """Generic banded-SimHash near-dup pairs over ANY (id, text)
-    frame (the operator behind ``q_simhash_dedup``): 64-bit majority
-    signature over ``shingle_n``-shingle features, 4×16-bit bands,
-    candidates kept at hamming distance ≤ ``max_hamming``. Output:
+    """Banded-SimHash near-dup pairs over a (doc_id, text) frame (the
+    operator behind ``q_simhash_dedup``): 64-bit majority signature
+    over 3-shingle features, 4×16-bit bands, candidates kept at
+    hamming distance ≤ ``SIMHASH_MAX_HAMMING``. Output:
     (doc_a, doc_b, hamming), uncapped."""
     if hashed is not None:
         # hs is the distinct md5_60 set of exactly these shingles, and
@@ -739,10 +706,10 @@ def simhash_pair_frame(
         sigs = (
             spread(docs)
             .select(
-                F.col(id_col).alias("doc_id"),
-                F.array_distinct(
-                    shingles(tokens(F.col(text_col)), shingle_n)
-                ).alias("sh"),
+                "doc_id",
+                F.array_distinct(shingles(tokens(F.col("text")), 3)).alias(
+                    "sh"
+                ),
             )
             .select(
                 "doc_id",
@@ -794,7 +761,7 @@ def simhash_pair_frame(
             ).alias("hamming"),
         )
         .dropDuplicates(["doc_a", "doc_b"])
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
     )
 
 
@@ -818,7 +785,7 @@ def _simhash_oracle_sql() -> str:
     )
     chunk = _sql_chunk("band, key", "band", "doc_id")
     return f"""
-    WITH {_sql_doc_shingle_cte(3)},
+    WITH {_sql_doc_shingle_cte()},
     sc AS (SELECT doc_id,
                   ({bits})::BIGINT AS sig
            FROM hs GROUP BY doc_id),
@@ -924,17 +891,15 @@ def _lsh_sig_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = spread(_t(spark, sf_dir, "embeddings")).select(
         "vec_id", as_double(F.col("embedding")).alias("v")
     )
-    planes = random_hyperplanes(LSH_BITS, 64, seed=42)
+    planes = random_hyperplanes(LSH_BITS, 64)
     return e.withColumn(
         "sig", sign_words(F.col("v"), planes, LSH_WORD_BITS)
     )
 
 
-def ann_lsh_candidates(
-    spark: SparkSession, sf_dir: str, max_hamming: int = LSH_HAMMING
-) -> DataFrame:
+def ann_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sign-LSH candidate frame for the vec_id=0 probe: every corpus
-    vector within ``max_hamming`` of the probe's 128-bit signature
+    vector within ``LSH_HAMMING`` of the probe's 128-bit signature
     (4×32-bit words), with its hamming distance and exact cosine. One
     signature matmul + one broadcast probe + one filter. Consumer:
     ``ann_lsh`` / ``q_ann_lsh`` (the shipped single-tier search). The
@@ -960,7 +925,7 @@ def ann_lsh_candidates(
         .withColumn(
             "hamming", hamming_words(F.col("sig"), F.col("qsig"))
         )
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= LSH_HAMMING)
         .select(
             "vec_id",
             "hamming",
@@ -969,16 +934,11 @@ def ann_lsh_candidates(
     )
 
 
-def ann_lsh(
-    spark: SparkSession,
-    sf_dir: str,
-    max_hamming: int = LSH_HAMMING,
-    topk: int = 10,
-) -> DataFrame:
+def ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
-        ann_lsh_candidates(spark, sf_dir, max_hamming)
+        ann_lsh_candidates(spark, sf_dir)
         .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-        .limit(topk)
+        .limit(10)
     )
 
 
@@ -999,7 +959,7 @@ def _lsh_oracle_sql() -> str:
       double cosine rounded to 4 places, vec_id tiebreak), itself
       oracle-proven.
     """
-    planes = random_hyperplanes(LSH_BITS, 64, seed=42)
+    planes = random_hyperplanes(LSH_BITS, 64)
 
     def word(w: int) -> str:
         return " + ".join(
@@ -1274,7 +1234,7 @@ def _embed_neardup_oracle_sql() -> str:
     integer/md5_60 ops, and the cosine re-rank is the oracle-proven
     sequential-fold double convention."""
     n_bits, band_bits, n_bands = 32, 8, 4
-    planes = random_hyperplanes(n_bits, 64, seed=42)
+    planes = random_hyperplanes(n_bits, 64)
     bits = " + ".join(
         "(CASE WHEN list_dot_product(qv, ["
         + ", ".join(str(x) for x in planes[j])
@@ -1358,7 +1318,7 @@ def _embed_neardup_pairs_live(
     e = spread(_t(spark, sf_dir, "embeddings")).select(
         "vec_id", as_double(F.col("embedding")).alias("v")
     )
-    planes = random_hyperplanes(n_bits, 64, seed=42)
+    planes = random_hyperplanes(n_bits, 64)
     sigs = e.withColumn("sig", sign_bits(F.col("v"), planes))
     bands = sigs.select(
         "vec_id",
@@ -1533,7 +1493,7 @@ def q_stream_dedupe(spark: SparkSession, sf_dir: str) -> DataFrame:
             "is not SQL-equivalent to the plain projection"
         )
 
-    data_dir, schema = write_overlapping_replay(spark, sf_dir, "events")
+    data_dir, schema = write_overlapping_replay(spark, sf_dir)
     s = _stream_session(spark)
     stream = replay_as_stream(s, data_dir, schema, max_files_per_trigger=1)
     # Project before the dedup for sink width: every column the dedup
@@ -1618,13 +1578,11 @@ def q_stream_dedupe(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Streaming state is bounded by active keys (watermark eviction).",
 )
 def q_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    data_dir, schema = write_replay_files(
-        spark, sf_dir, "events", n_files=4
-    )
+    data_dir, schema = write_replay_files(spark, sf_dir, "events")
     s = _stream_session(spark)
     stream = replay_as_stream(s, data_dir, schema, max_files_per_trigger=2)
     out = run_available_now(
-        sessionize(stream, with_end=True),
+        sessionize(stream),
         s,
         state_dir=os.path.join(
             os.path.dirname(data_dir), "_sinks", "q_stream_sessionize"
@@ -1642,19 +1600,19 @@ def q_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).drop("end_us")
 
 
-def _corpus_curate_oracle_sql(rounds: int = 3) -> str:
+def _corpus_curate_oracle_sql() -> str:
     """DuckDB oracle for the FULL curation pipeline (enabled by the
     engine-neutral minhash pairs): quality
     gate (>= 4 tokens), exact dedup
     (row_number keep-first per text), endpoint-restricted pairs, the
     greedy min-id survivor FIXPOINT unrolled to the engine's exact
-    ``rounds`` iterations (alive_k = endpoints − {b : ∃(a,b), a ∈
+    ``PURGE_ROUNDS`` iterations (alive_k = endpoints − {b : ∃(a,b), a ∈
     alive_{k−1}}, alive_0 = endpoints), and the final enforcement
     pass dropping doc_b of any still-both-alive pair — the same
     no-surviving-near-dup-pair invariant, term for term."""
     alive = ["ep"]
     cte_rounds = []
-    for k in range(1, rounds + 1):
+    for k in range(1, PURGE_ROUNDS + 1):
         # losers_k = doc_b of pairs whose doc_a is alive; alive_k =
         # endpoints EXCEPT losers_k — plain joins/EXCEPT (set-safe:
         # every frame is distinct ids), not correlated NOT IN. Every
@@ -1733,7 +1691,7 @@ def q_corpus_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _multimodal_pipeline_oracle_sql(dim: int = 16) -> str:
+def _multimodal_pipeline_oracle_sql() -> str:
     """DuckDB oracle for the multimodal retrieve-similar pipeline.
     Sound because, ON THE FAKE-ASSET
     CORPUS, the engine's extractor deterministically takes the
@@ -1747,7 +1705,10 @@ def _multimodal_pipeline_oracle_sql(dim: int = 16) -> str:
     image corpora take the PIL pixel tier, which this oracle does
     not model (the oracle, like every other, is defined against the
     harness corpus)."""
-    assert dim == 16, "nibble-histogram oracle is specific to dim=16"
+    from prueba_tecnica_analista_etl_spark.multimodal import FEATURE_DIM
+
+    assert FEATURE_DIM == 16, "nibble-histogram oracle is specific to 16"
+    dim = FEATURE_DIM
     # DuckDB hex() emits UPPERCASE digits (unlike its md5()).
     hexd = "0123456789ABCDEF"
     cnts = ",\n                  ".join(
@@ -1844,7 +1805,7 @@ def q_multimodal_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir,
         "multimodal_features16",
         lambda: extract_features(
-            fake_assets(spread(_t(spark, sf_dir, "documents"))), dim=16
+            fake_assets(spread(_t(spark, sf_dir, "documents")))
         ),
     )
     feats = all_feats.filter(F.col("features").isNotNull())
@@ -1911,9 +1872,7 @@ def q_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         foreach_batch_upsert,
     )
 
-    data_dir, schema = write_replay_files(
-        spark, sf_dir, "events", n_files=4
-    )
+    data_dir, schema = write_replay_files(spark, sf_dir, "events")
     s = _stream_session(spark)
     stream = (
         replay_as_stream(s, data_dir, schema, max_files_per_trigger=2)
@@ -1966,14 +1925,12 @@ def q_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 STREAM_NEARDUP_UNROLL = 16
 
 
-def _stream_neardup_oracle_sql(
-    rounds: int = STREAM_NEARDUP_UNROLL,
-) -> str:
+def _stream_neardup_oracle_sql() -> str:
     """DuckDB oracle for the streaming near-dup gate. The drained accepted
     set equals the batch greedy min-id survivor FIXPOINT over the full
     corpus (arrival order == id order by construction: range-partitioned
     replay on doc_id), and the fixpoint is the q_corpus_curate purge
-    recursion unrolled — here to ``rounds`` = ``STREAM_NEARDUP_UNROLL``
+    recursion unrolled — here to ``STREAM_NEARDUP_UNROLL`` rounds
     with NO enforcement pass: the stream computes the exact greedy set,
     and once the unroll reaches the corpus's alternating-chain depth the
     iterate IS the fixpoint (measured depth 2 at sf0.001/0.01/0.1 —
@@ -1991,7 +1948,7 @@ def _stream_neardup_oracle_sql(
     pairs and fall out of the same rule."""
     alive = ["ep"]
     cte_rounds = []
-    for k in range(1, rounds + 1):
+    for k in range(1, STREAM_NEARDUP_UNROLL + 1):
         cte_rounds.append(
             f"a{k} AS MATERIALIZED (SELECT doc_id FROM ep EXCEPT "
             f"SELECT r.doc_b FROM ap r "
@@ -2048,7 +2005,7 @@ def q_stream_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     data_dir, schema = write_replay_files(
-        spark, sf_dir, "documents", n_files=4, time_col="doc_id"
+        spark, sf_dir, "documents", time_col="doc_id"
     )
     s = _stream_session(spark)
     state_root = os.path.join(
@@ -2069,6 +2026,7 @@ def q_stream_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 pairs_from_bands=lambda banded, thr: (
                     pairs_from_band_frame(banded, threshold=thr, cap=None)
                 ),
+                threshold=MINHASH_JACCARD_T,
             )
         ).outputMode("update"),
         state_root,
@@ -2078,58 +2036,20 @@ def q_stream_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "lang")
 
 
-def _lsh_truth_fraction() -> float:
-    """The q_lsh_recall sampling knob, parsed with fail-open
-    fallbacks (malformed or out-of-range opt-ins must not break plan
-    construction). Snapshotted ONCE at import into
-    ``LSH_TRUTH_FRACTION`` and used by BOTH the query fn and its
-    generated oracle, so the two sides cannot disagree within a
-    process regardless of when a caller mutates the env (bench.py
-    additionally sets it before importing the registry)."""
-    raw = os.environ.get("SPARK_GRAFT_LSH_TRUTH_FRACTION", "1.0")
-    try:
-        frac = float(raw)
-    except ValueError:
-        return 1.0
-    if not (0.0 < frac <= 1.0):
-        return 1.0
-    return frac
-
-
-LSH_TRUTH_FRACTION = _lsh_truth_fraction()
-
-
 def _lsh_recall_oracle_sql() -> str:
     """DuckDB oracle for the recall census: the truth side is the
     share-any-shingle exhaustive Jaccard census over the same md5_60
     shingle hashes (join on h, multiplicities matching the engine's
     per-bucket pair expansion), the found side is the shared
     scored-pairs chain at the 0.5 gate, and the census is one LEFT JOIN
-    + counts. Built at the import-time ``LSH_TRUTH_FRACTION`` snapshot —
-    the same value the query fn uses (the entry point and the parity
-    tests never set the env, so the recorded oracle is always the exact
-    fraction-1.0 census)."""
-    frac = LSH_TRUTH_FRACTION
-    sample = ""
-    if frac < 1.0:
-        from prueba_tecnica_analista_etl_spark.plans.extensions_pipeline import (  # noqa: E501
-            _hex_threshold,
-        )
-
-        sample = (
-            " WHERE substr(md5('lsh-truth:' || "
-            f"CAST(doc_id AS VARCHAR)), 1, 8) < '{_hex_threshold(frac)}'"
-        )
+    + counts."""
     return f"""
     WITH {_minhash_scored_pairs_cte()},
     ap AS (SELECT doc_a, doc_b FROM j WHERE _j >= 0.5),
-    sd AS (SELECT doc_id FROM documents{sample}),
     thp AS (SELECT ha.doc_id AS doc_a, hb.doc_id AS doc_b,
                    count(*) AS inter
             FROM hs ha JOIN hs hb
               ON hb.h = ha.h AND ha.doc_id < hb.doc_id
-            WHERE ha.doc_id IN (SELECT doc_id FROM sd)
-              AND hb.doc_id IN (SELECT doc_id FROM sd)
             GROUP BY 1, 2),
     tsz AS (SELECT doc_id, count(*) AS n FROM hs GROUP BY doc_id),
     truth AS (SELECT doc_a, doc_b FROM thp
@@ -2146,8 +2066,7 @@ def _lsh_recall_oracle_sql() -> str:
     SELECT n_true, n_found, n_true - n_found AS n_missed,
            CASE WHEN n_true > 0
                 THEN CAST(n_found AS DOUBLE) / CAST(n_true AS DOUBLE)
-           END AS recall,
-           CAST({frac} AS DOUBLE) AS truth_fraction
+           END AS recall
     FROM c
     """
 
@@ -2171,11 +2090,8 @@ def _lsh_recall_oracle_sql() -> str:
     "with 4x3 bands is 1-(1-0.5^3)^4 ≈ 0.41 BEFORE the exact "
     "re-rank, and every emitted pair survives the rerank, so "
     "measured recall audits the real banding+cap loss. Scale: the "
-    "share-any-shingle join is the O(df^2) exhaustive tier — at "
-    "100 TB run it with truth_sample_fraction < 1 (the truth side "
-    "only needs an unbiased estimate; see lsh_recall_frame); here "
-    "the harness corpus is small enough for the census to be exact "
-    "(fraction 1.0).",
+    "share-any-shingle join is the O(df^2) exhaustive tier, paid "
+    "once per corpus: the truth frame is a corpus artifact.",
 )
 def q_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall audit of the minhash LSH near-dup tier (ORACLE-EXACT:
@@ -2190,65 +2106,9 @@ def q_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     surfaced), n_missed, and recall. A recall collapse (e.g. the
     seeded-minhash arity bug this module's comments document, which
     silently collapses all hash functions into one) shows up here as
-    a number, not as a silent corpus quality loss.
-
-    The truth tier runs EXACT by default; SPARK_GRAFT_LSH_TRUTH_FRACTION
-    opts a run into the documented 100 TB sampling mode (the bench sets
-    0.5 BEFORE importing the registry and marks it in its payload; the
-    correctness driver never sets it, so its recorded row is always the
-    exact census). The fraction is the import-time LSH_TRUTH_FRACTION
-    snapshot — the same value baked into the generated oracle, so the
-    two sides cannot diverge within a process. The emitted
-    truth_fraction column makes the mode self-describing either way.
-    """
-    # A caller that mutates the env var AFTER this module was imported
-    # would silently get the snapshot, not their value — make the
-    # mismatch loud at query-build time (both sides still use the
-    # snapshot, so engine and oracle stay consistent).
-    live = _lsh_truth_fraction()
-    if live != LSH_TRUTH_FRACTION:
-        import warnings
-
-        warnings.warn(
-            "SPARK_GRAFT_LSH_TRUTH_FRACTION changed after the plans "
-            f"module was imported (env now {live}, snapshot "
-            f"{LSH_TRUTH_FRACTION}); q_lsh_recall uses the IMPORT-TIME "
-            "snapshot so the engine and its generated oracle cannot "
-            "diverge — set the env var before importing "
-            "prueba_tecnica_analista_etl_spark.plans (bench.py does).",
-            stacklevel=2,
-        )
-    return lsh_recall_frame(
-        spark, sf_dir, truth_sample_fraction=LSH_TRUTH_FRACTION
-    )
-
-
-def lsh_recall_frame(
-    spark: SparkSession,
-    sf_dir: str,
-    truth_sample_fraction: float = 1.0,
-) -> DataFrame:
-    """The q_lsh_recall census with the 100 TB sampling knob as CODE.
-
-    The exhaustive-truth tier is O(df²) in documents-per-shingle — at
-    100 TB a full census is a scale-killer, so the mitigation is a
-    parameter, not prose. ``truth_sample_fraction < 1`` restricts the
-    TRUTH side to a deterministic document sample BEFORE shingling: a
-    doc is kept iff the md5 hex prefix of ``'lsh-truth:' || doc_id`` is
-    below the fraction's threshold (the q_mixture_sample convention —
-    fixed-width lowercase hex compares lexicographically == numerically,
-    so membership is engine-stable and reproducible; the salt
-    decorrelates the draw from the mixture sampler's).
-
-    Unbiasedness: uniform doc sampling keeps each true pair with
-    probability fraction², independently of whether the banded tier
-    found it (found-status is a fixed property of the pair), so the
-    recall of sampled-true pairs is an unbiased estimate of overall
-    recall. n_true/n_found/n_missed are the SAMPLED counts (scale by
-    1/fraction² for population estimates); the emitted
-    truth_fraction column marks which mode produced the row. The
-    found side stays the full memoized pair frame — the truth-side
-    left join restricts it to sampled pairs for free.
+    a number, not as a silent corpus quality loss. The census is
+    exact: the truth frame is built once per corpus, so its O(df²)
+    exhaustive side is a one-time cost.
     """
     from prueba_tecnica_analista_etl_spark.artifacts import (
         corpus_artifact,
@@ -2257,23 +2117,11 @@ def lsh_recall_frame(
         cached_minhash_pairs,
     )
     from prueba_tecnica_analista_etl_spark.plans.extensions_pipeline import (
-        _hex_threshold,
         pair_combos,
     )
 
     def _truth() -> DataFrame:
         d = doc_shingle_frame(spark, sf_dir).select("doc_id", "hs")
-        if truth_sample_fraction < 1.0:
-            u = F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("lsh-truth:"), F.col("doc_id").cast("string")
-                    )
-                ),
-                1,
-                8,
-            )
-            d = d.filter(u < F.lit(_hex_threshold(truth_sample_fraction)))
         # Exhaustive Jaccard WITHOUT shipping shingle arrays into
         # buckets: shingle_hashes is DISTINCT per doc, so |A∩B| is
         # exactly the co-occurrence COUNT of shared hashes — each
@@ -2327,12 +2175,10 @@ def lsh_recall_frame(
             .filter(F.col("_j") >= 0.5)
         )
 
-    # The exhaustive truth is an ARTIFACT of (corpus, fraction) — the
-    # audit's O(df²) side is paid once per corpus, not once per run or
-    # process. The frame persisted is O(true pairs).
-    truth = corpus_artifact(
-        spark, sf_dir, f"lsh_truth:{truth_sample_fraction}", _truth
-    )
+    # The exhaustive truth is a corpus ARTIFACT — the audit's O(df²)
+    # side is paid once per corpus, not once per run or process. The
+    # frame persisted is O(true pairs).
+    truth = corpus_artifact(spark, sf_dir, "lsh_truth", _truth)
     found = cached_minhash_pairs(spark, sf_dir).select(
         "doc_a", "doc_b", F.lit(1).alias("hit")
     )
@@ -2351,7 +2197,6 @@ def lsh_recall_frame(
                 F.col("n_found").cast("double")
                 / F.col("n_true").cast("double"),
             ).alias("recall"),
-            F.lit(float(truth_sample_fraction)).alias("truth_fraction"),
         )
     )
 
@@ -2406,13 +2251,12 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # The ENTIRE census (6 rows) is corpus-deterministic — seeded
     # planes, fixed probe, fixed operating points — so it is staged
-    # whole: with only the intermediate frames staged, a fresh process
-    # still paid ~3.5 s of sweep-frame construction and census
-    # codegen; staging the final frame leaves one artifact read +
-    # checkpoint over the floor.
-    # The LIVE construction below stays plan-pinned by tests via
-    # ann_sweep_parts/ann_recall_census_live, and first-per-corpus
-    # builds execute it for real.
+    # whole, and its intermediates (exact truth, probe, scored
+    # candidates, per-point top-10) are computed inline in that one
+    # build: every artifact of a corpus keys on the same corpus
+    # generation, so a staged intermediate would be built exactly when
+    # the census is and never read again. Tests plan-pin the live
+    # sweep via ann_sweep_parts.
     tiers = ann_sweep_tiers()
     # The key embeds LSH_BITS and the quantization-scheme tag besides
     # the tier labels: a retune changing signature bits or the int8
@@ -2433,36 +2277,12 @@ def ann_recall_census_live(
     """LIVE recall-census construction q_ann_recall stages per corpus
     (keeps ``ord`` so the staged frame re-sorts deterministically
     after a parquet round-trip)."""
-    from prueba_tecnica_analista_etl_spark.artifacts import (
-        corpus_artifact,
-    )
     from prueba_tecnica_analista_etl_spark.plans.extensions_text import (
         q_similarity_topk,
     )
 
-    # The exact truth is an ARTIFACT of the corpus (10 rows) — computed
-    # once and reused across audit runs, the cached_minhash_pairs
-    # discipline. The registry's own q_similarity_topk keeps its live
-    # plan; only the audit's repeated consumption is memoized.
-    exact = corpus_artifact(
-        spark,
-        sf_dir,
-        "ann_exact_top10",
-        lambda: q_similarity_topk(spark, sf_dir).select("vec_id"),
-    )
-
-    tiers, top_live = ann_sweep_parts(spark, sf_dir)
-    # The per-point top-10 frame (|tiers|·10 rows) is staged too: the
-    # six-tier exploded-union window is the biggest codegen unit in
-    # the registry, and the invariants tests re-derive the census from
-    # this intermediate without re-running the scans.
-    top = corpus_artifact(
-        spark,
-        sf_dir,
-        "ann_recall_top10:"
-        + "|".join(f"{m}:{pt}" for m, pt, _ in tiers),
-        lambda: top_live,
-    )
+    exact = q_similarity_topk(spark, sf_dir).select("vec_id")
+    tiers, top = ann_sweep_parts(spark, sf_dir)
     hits = top.join(exact, "vec_id").groupBy("ord").agg(
         F.count(F.lit(1)).alias("n_hit")
     )
@@ -2532,7 +2352,7 @@ def ann_sweep_parts(
     """LIVE construction of the recall sweep: returns ``(tiers,
     top)`` where ``tiers`` is the (method, operating_point, shipped)
     row list and ``top`` is the UNSTAGED per-point top-10 frame —
-    q_ann_recall stages it per corpus through the artifact store;
+    q_ann_recall stages the census built from it per corpus;
     tests plan-pin THIS frame directly for the properties the staging
     would otherwise hide (the IVF tier's cluster predicate is a
     PARTITION filter over the on-disk index — the audited read path
@@ -2540,10 +2360,6 @@ def ann_sweep_parts(
     import numpy as np
     from pyspark.sql import Window
 
-    from prueba_tecnica_analista_etl_spark.artifacts import (
-        census_artifact,
-        corpus_artifact,
-    )
     from prueba_tecnica_analista_etl_spark.operators.ivf_index import (
         _read_data,
         ivf_probe_clusters,
@@ -2569,24 +2385,15 @@ def ann_sweep_parts(
     e = spread(_t(spark, sf_dir, "embeddings")).select(
         "vec_id", as_double(F.col("embedding")).alias("v")
     )
-    planes = random_hyperplanes(LSH_BITS, 64, seed=42)
+    planes = random_hyperplanes(LSH_BITS, 64)
     sigs = e.withColumn(
         "sig", sign_words(F.col("v"), planes, LSH_WORD_BITS)
     )
 
-    # The probe (vector + signature words) is census-sized and
-    # deterministic per corpus — memoize it: the one-row first() still
-    # costs a full Arrow-UDF job dispatch (~1 s) every audit run
-    # otherwise. Label carries the signature config so a signature
-    # retune can't read a stale cached probe.
-    def _probe() -> "tuple[list[float], list[int]]":
-        row = sigs.filter(F.col("vec_id") == 0).select("v", "sig").first()
-        return [float(x) for x in row["v"]], [int(w) for w in row["sig"]]
-
-    qv_list, qsig = census_artifact(
-        spark, sf_dir, f"ann_probe_vec0:{LSH_BITS}", _probe
-    )
-    qv = np.asarray(qv_list, dtype=np.float64)
+    # The probe: vector + signature words, one row.
+    row = sigs.filter(F.col("vec_id") == 0).select("v", "sig").first()
+    qsig = [int(w) for w in row["sig"]]
+    qv = np.asarray([float(x) for x in row["v"]], dtype=np.float64)
     qlit = F.array(*[F.lit(float(x)) for x in qv])
 
     # Row-level prefilter on the WIDEST radius BEFORE the cosine: only
@@ -2594,35 +2401,22 @@ def ann_sweep_parts(
     # test is integer bit arithmetic on the already-computed signature
     # while the cosine is the dim-length dot product — at 100 TB this
     # is the difference between a full matmul scan and a candidate-
-    # sized one (the exact-truth tier pays its full scan ONCE, as the
-    # memoized artifact above). The scored candidate frame itself is
-    # an ARTIFACT of (corpus, widest radius) — deterministic given the
-    # seeded planes and the fixed probe — so the signature scan too is
-    # paid once per corpus, not once per process; the persisted
-    # frame is O(candidates at the widest radius).
-    def _lsh_scored() -> DataFrame:
-        ham = sum(
-            F.bit_count(
-                F.col("sig")[w].bitwiseXOR(F.lit(int(qsig[w])))
-            ).cast("long")
-            for w in range(LSH_WORDS)
+    # sized one.
+    ham = sum(
+        F.bit_count(F.col("sig")[w].bitwiseXOR(F.lit(int(qsig[w])))).cast(
+            "long"
         )
-        return (
-            sigs.filter(F.col("vec_id") != 0)
-            .select("vec_id", "v", ham.alias("ham"))
-            .filter(F.col("ham") <= max(lsh_radii))
-            .select(
-                "vec_id",
-                F.round(cosine(F.col("v"), qlit), 4).alias("cos_sim"),
-                "ham",
-            )
+        for w in range(LSH_WORDS)
+    )
+    lsh_scored = (
+        sigs.filter(F.col("vec_id") != 0)
+        .select("vec_id", "v", ham.alias("ham"))
+        .filter(F.col("ham") <= max(lsh_radii))
+        .select(
+            "vec_id",
+            F.round(cosine(F.col("v"), qlit), 4).alias("cos_sim"),
+            "ham",
         )
-
-    lsh_scored = corpus_artifact(
-        spark,
-        sf_dir,
-        f"ann_lsh_scored:{LSH_BITS}x{max(lsh_radii)}",
-        _lsh_scored,
     )
 
     # The IVF tier audits the SHIPPED artifact: the partitionBy(cluster)
@@ -2888,27 +2682,18 @@ def semdedup_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-vector argmax window — never a global window."""
     from pyspark.sql import Window
 
-    from prueba_tecnica_analista_etl_spark.artifacts import (
-        census_artifact,
-        corpus_artifact,
-    )
+    from prueba_tecnica_analista_etl_spark.artifacts import corpus_artifact
 
     def build() -> DataFrame:
         quant = _int8_quantized(spark, sf_dir)
-        # Model-sized collect (the ivf_centroids discipline): k int8
-        # vectors, staged as a pickled census so a fresh process
-        # reloads instead of re-scanning.
-        seed_rows = census_artifact(
-            spark,
-            sf_dir,
-            f"semdedup_seeds:k{SEMDEDUP_K}",
-            lambda: [
-                (i, r["q"])
-                for i, r in enumerate(
-                    quant.orderBy("vec_id").limit(SEMDEDUP_K).collect()
-                )
-            ],
-        )
+        # Model-sized collect: k int8 vectors. Only this build reads
+        # them, so they are not staged on their own.
+        seed_rows = [
+            (i, r["q"])
+            for i, r in enumerate(
+                quant.orderBy("vec_id").limit(SEMDEDUP_K).collect()
+            )
+        ]
         seeds = spark.createDataFrame(
             seed_rows, "cid int, sq array<long>"
         )

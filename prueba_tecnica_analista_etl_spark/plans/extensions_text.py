@@ -28,7 +28,7 @@ from prueba_tecnica_analista_etl_spark.sources.tables import spread
 
 def doc_term_tf_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, source, term, tf) over ``documents`` — lower+space
-    tokens, empties dropped — staged ONCE per corpus (r13): the term
+    tokens, empties dropped — staged ONCE per corpus: the term
     family's shared feature frame. q_tfidf (tf side), q_token_histogram
     (term census), q_inverted_index (distinct doc-term pairs ARE these
     rows), the unigram-LM scored frame and the per-source entropy
@@ -285,7 +285,7 @@ _LANG_HITS = ", ".join(
     "accuracy is not meaningful here — the operator is proven by parity.",
 )
 def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # no spread() (r14): predict_lang is a handful of array ops per
+    # no spread(): predict_lang is a handful of array ops per
     # row feeding a map-side census agg — the repartition cost more
     # than the compute it spread (A/B: 0.65 -> 0.58 s). Contrast
     # q_doc_fingerprint just below, where ~50 md5s/row make the
@@ -317,7 +317,7 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread(_t(spark, sf_dir, "documents"))
-    return d.select("doc_id", fingerprint(F.col("text"), 5).alias("fp"))
+    return d.select("doc_id", fingerprint(F.col("text")).alias("fp"))
 
 
 @query(
@@ -359,11 +359,11 @@ def q_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _winnow_fp_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, fps) — the per-doc winnowing fingerprint SET, staged
-    ONCE per corpus (r15, the lsh_sigs treatment: the fingerprint
+    ONCE per corpus (the lsh_sigs treatment: the fingerprint
     column is the at-rest feature a winnowing index serves from; the
     md5-shingle + Arrow sliding-min chain was the last per-call
     hash-feature stage not staged). The cold build keeps the spread
-    (heavy per-row compute — the r14 audit's keep case) and its Arrow
+    (heavy per-row compute) and its Arrow
     stage stays pinned by test_staged_builders_keep_their_arrow_stages;
     consumers fold censuses from the stored arrays."""
     from prueba_tecnica_analista_etl_spark.artifacts import (
@@ -377,7 +377,7 @@ def _winnow_fp_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         d = spread(_t(spark, sf_dir, "documents"))
         return d.select(
             "doc_id",
-            winnow_fingerprints(F.col("text"), k=3, w=4).alias("fps"),
+            winnow_fingerprints(F.col("text")).alias("fps"),
         )
 
     return corpus_artifact(spark, sf_dir, "winnow_fps:k3w4", build)
@@ -479,7 +479,7 @@ def q_ann_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
                 AS BIGINT) AS chars_saved
     FROM documents GROUP BY lang ORDER BY lang
     """,
-    doc="Unicode NFC normalization census (r12 — the corpus-prep "
+    doc="Unicode NFC normalization census (the corpus-prep "
     "hygiene op every real text pipeline runs before tokenization): "
     "per lang, how many docs contain non-ASCII, how many CHANGE "
     "under NFC (decomposed accents, compatibility forms), and the "
@@ -504,7 +504,7 @@ def q_unicode_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _t(spark, sf_dir, "documents").select("lang", "text")
     needs = F.coalesce(F.col("text").rlike(NON_ASCII_RE), F.lit(False))
-    # spread() only the non-ASCII sliver (r14): Catalyst pushes the
+    # spread() only the non-ASCII sliver: Catalyst pushes the
     # rlike filter BELOW a repartition, so spreading the whole frame
     # bought nothing for the regex (it runs scan-side either way) while
     # round-robin-shuffling the ASCII MAJORITY whose remaining work is
@@ -574,7 +574,7 @@ def q_unicode_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM pick WHERE vr = 1
     ORDER BY q_id
     """,
-    doc="kNN label-vote classification (r12 — the pseudo-labeling / "
+    doc="kNN label-vote classification (the pseudo-labeling / "
     "annotation-audit op of a training pipeline): for each of 10 "
     "probe vectors, the 10 exact-cosine nearest LABELED neighbors "
     "vote; prediction = majority label (count desc, label asc "
@@ -602,7 +602,7 @@ def q_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     # label rides THROUGH the top-k (carry_cols) instead of a
     # join-back — the join form re-read the full corpus a second
     # time (plan-visible: 4 embeddings scans vs 3); the probe's OWN
-    # label rides the broadcast query frame (query_carry_cols, r14),
+    # label rides the broadcast query frame (query_carry_cols),
     # which drops the third corpus access + truth join-back (3 -> 2
     # embeddings scans).
     nn = cosine_topk_batch(
@@ -708,7 +708,7 @@ def _ndcg_oracle_sql() -> str:
 @query(
     "q_eval_ndcg",
     _ndcg_oracle_sql(),
-    doc="extension (retrieval-eval census, r14): nDCG@10 per probe "
+    doc="extension (retrieval-eval census): nDCG@10 per probe "
     "over the labeled embedding corpus — THE ranking-quality metric "
     "for a retrieval/RAG index, next to q_eval_topk_precision's "
     "hit-rate and q_ann_recall's candidate-recall sweep. Relevance "
@@ -731,7 +731,7 @@ def q_eval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = _t(spark, sf_dir, "embeddings")
     # the probe's own label rides the broadcast query frame
-    # (query_carry_cols, r14) instead of a third corpus access +
+    # (query_carry_cols) instead of a third corpus access +
     # truth join-back: 3 -> 2 embeddings scans.
     q = e.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("q_id"),
@@ -755,7 +755,7 @@ def q_eval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("dcg_e6"),
     )
     # The per-label corpus count is a vocabulary-sized census —
-    # staged per corpus (r15) and shipped as a map LITERAL, so the
+    # staged per corpus and shipped as a map LITERAL, so the
     # former third embeddings scan + broadcast join became a pure
     # projection. NULL-label census rows are skipped (the former
     # inner join could never match them), and a NULL true_label
@@ -864,7 +864,7 @@ TOKEN_HIST_TOP = 15
     "touches data-scale rows; everything after is O(k).",
 )
 def q_token_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Term census folded from the staged doc_term_tf artifact (r13):
+    # Term census folded from the staged doc_term_tf artifact:
     # sum of per-doc tfs == the raw token-stream count.
     tf = (
         doc_term_tf_frame(spark, sf_dir)
@@ -916,7 +916,7 @@ _BM25_TERMS_SQL = ", ".join(f"'{t}'" for t in BM25_QUERY_TERMS)
 
 def _bm25_per_doc_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, source, dl, tf_0..tf_k) for the fixed BM25 query-term
-    set — staged ONCE per corpus (r15, the bench_grams4 discipline:
+    set — staged ONCE per corpus (the bench_grams4 discipline:
     the benchmark term set is part of the key, so retuning the terms
     rebuilds). q_bm25 used to evaluate this projection TWICE per
     invocation (census + scoring legs re-tokenized the corpus each
@@ -1137,7 +1137,7 @@ def q_bpe_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (nb:287-340 profile; q_token_histogram's Zipf head) toward the
     tokenizer-artifact family (SURVEY §2 text analysis).
     """
-    # tf folded from the staged doc_term_tf artifact (r14): identical
+    # tf folded from the staged doc_term_tf artifact: identical
     # tokenization (lower + space split; the length>=2 filter subsumes
     # the artifact's empty-term drop), so summing per-doc tf over docs
     # IS the corpus word count — the corpus re-explode (scan + tokenize

@@ -276,7 +276,7 @@ def q_groupby_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "TakeOrderedAndProject — only k rows leave each partition.",
 )
 def q_top_duplicates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return top_duplicates(_t(spark, sf_dir, "lineitem"), "l_partkey", 20)
+    return top_duplicates(_t(spark, sf_dir, "lineitem"), "l_partkey")
 
 
 @query(
@@ -1130,7 +1130,7 @@ def q_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = _t(spark, sf_dir, "events")
-    return cohort_retention(ev, period_days=7)
+    return cohort_retention(ev)
 
 
 # ---------------------------------------------------------------------------

@@ -61,12 +61,8 @@ def read_csv_repaired(
     )
 
 
-def write_csv(df: DataFrame, path: str, single_file: bool = False) -> None:
-    """CSV sink with header (S6; reference export cell ``nb:116``).
-
-    ``single_file`` coalesces to one partition for byte-level parity
-    with the reference's one-file ``to_csv`` — only for small outputs;
-    a 100 TB result stays multi-part.
-    """
-    out = df.coalesce(1) if single_file else df
-    out.write.mode("overwrite").option("header", True).csv(path)
+def write_csv(df: DataFrame, path: str) -> None:
+    """CSV sink with header (S6; reference export cell ``nb:116``),
+    coalesced to one file for parity with the reference's one-file
+    ``to_csv`` (its one caller writes a query result from the CLI)."""
+    df.coalesce(1).write.mode("overwrite").option("header", True).csv(path)

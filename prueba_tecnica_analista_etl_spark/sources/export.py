@@ -32,7 +32,6 @@ Design for 100 TB:
 
 from __future__ import annotations
 
-import math
 import os
 import shutil
 from collections.abc import Sequence
@@ -49,6 +48,9 @@ from prueba_tecnica_analista_etl_spark.artifacts import (
 MANIFEST = "_manifest"
 DATA = "data"
 SHARD_COL = "shard_id"
+# Per-row token count; its per-shard total goes into the manifest when
+# the exported frame carries it.
+TOKEN_COL = "n_tok"
 # Checksum definition identifier, recorded in every manifest. Bump it
 # whenever the fold changes (as bit_xor → this sum did) so a verifier
 # rejects the mismatch BY NAME instead of reporting phantom tampering
@@ -62,13 +64,12 @@ def _row_hash(cols: Sequence[str]):
     return F.xxhash64(*[F.col(c) for c in cols])
 
 
-def _shard_stats(
-    frame: DataFrame, token_col: str | None
-) -> dict[int, dict[str, int]]:
+def _shard_stats(frame: DataFrame) -> dict[int, dict[str, int]]:
     """Per-shard {rows, tokens?, checksum} from any shard_id-carrying
-    frame — the ONE definition of the manifest's content, used both to
-    write it (over the freshly-written files) and to re-derive it at
-    verification time, so the two can never drift apart."""
+    frame (tokens when it carries a ``TOKEN_COL`` column) — the ONE
+    definition of the manifest's content, used both to write it (over
+    the freshly-written files) and to re-derive it at verification
+    time, so the two can never drift apart."""
     content_cols = [c for c in frame.columns if c != SHARD_COL]
     # multiplicity-sensitive order-insensitive fold: sum of row hashes
     # in DECIMAL(38,0) (room for >10^19 rows before overflow, and no
@@ -83,9 +84,9 @@ def _shard_stats(
         .cast("long")
         .alias("checksum"),
     ]
-    if token_col is not None:
+    if TOKEN_COL in frame.columns:
         aggs.insert(
-            1, F.sum(F.col(token_col)).cast("long").alias("tokens")
+            1, F.sum(F.col(TOKEN_COL)).cast("long").alias("tokens")
         )
     return {
         int(r[SHARD_COL]): {
@@ -98,60 +99,22 @@ def _shard_stats(
 
 
 def export_training_shards(
-    df: DataFrame,
-    path: str,
-    key_col: str,
-    n_shards: int | None = None,
-    target_rows_per_shard: int | None = None,
-    token_col: str | None = None,
-    order_col: str | None = None,
+    df: DataFrame, path: str, key_col: str, n_shards: int
 ) -> dict[int, dict[str, int]]:
-    """Write ``df`` as hash-sharded parquet plus a manifest; returns
-    the manifest as ``{shard_id: {rows, tokens?, checksum}}``.
-
-    Exactly one of ``n_shards`` / ``target_rows_per_shard`` must be
-    given (the latter costs one count to size the shard set). The
+    """Write ``df`` as ``n_shards`` hash-sharded parquet shards plus a
+    manifest; returns the manifest as ``{shard_id: {rows, tokens?,
+    checksum}}`` (tokens when ``df`` carries ``TOKEN_COL``). The
     manifest lives at ``{path}/_manifest`` (parquet) and every shard at
     ``{path}/data/shard_id={i}/``.
-
-    ``order_col`` emits each shard's rows SORTED by that column —
-    ``sortWithinPartitions``, a per-shard local sort with no extra
-    shuffle or global ordering cost — so a training job that pairs it
-    with a deterministic position (q_train_order's seeded global
-    shuffle rank) reads every shard in reproducible curriculum order.
-    The manifest checksum is order-insensitive, so ordered and
-    unordered exports of the same rows verify identically.
     """
-    if (n_shards is None) == (target_rows_per_shard is None):
-        raise ValueError(
-            "pass exactly one of n_shards / target_rows_per_shard"
-        )
-    if n_shards is None:
-        assert target_rows_per_shard is not None
-        total = df.count()
-        n_shards = max(1, math.ceil(total / target_rows_per_shard))
-        if total == 0:
-            raise ValueError(
-                "refusing to export an empty frame: zero-row input "
-                "writes no part files and cannot produce a valid "
-                "manifest (almost certainly an upstream bug)"
-            )
-    # (The n_shards path checks emptiness AFTER the write, at file
-    # level — a pre-write limit(1).count() would execute the full
-    # upstream lineage one extra time, the exact double-scan this
-    # module's manifest design avoids.)
-
+    # Emptiness is checked AFTER the write, at file level — a
+    # pre-write limit(1).count() would execute the full upstream
+    # lineage one extra time, the exact double-scan this module's
+    # manifest design avoids.
     sharded = df.withColumn(
         SHARD_COL,
         F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_shards)).cast("int"),
     )
-    if order_col is not None:
-        # One shuffle co-locates each shard in a single task, then a
-        # LOCAL sort by (shard, order) makes every shard's file(s)
-        # internally ordered — no global sort, no single reducer.
-        sharded = sharded.repartition(
-            n_shards, F.col(SHARD_COL)
-        ).sortWithinPartitions(SHARD_COL, order_col)
 
     recover(path)
     staged = staging(path)
@@ -182,9 +145,9 @@ def export_training_shards(
     # SAME _shard_stats verify_training_shards will later recompute.
     spark = df.sparkSession
     written = spark.read.parquet(os.path.join(staged, DATA))
-    stats = _shard_stats(written, token_col)
+    stats = _shard_stats(written)
     cols = ["shard_id", "rows"] + (
-        ["tokens"] if token_col is not None else []
+        ["tokens"] if TOKEN_COL in written.columns else []
     ) + ["checksum"]
     # m.get, not m[...]: _shard_stats drops NULL aggregates (an
     # all-NULL token column sums to NULL), and the manifest must
@@ -230,9 +193,7 @@ def _manifest_dict(
     }, algo
 
 
-def verify_training_shards(
-    spark: SparkSession, path: str, token_col: str | None = None
-) -> dict[int, str]:
+def verify_training_shards(spark: SparkSession, path: str) -> dict[int, str]:
     """Ingestion-side validation: re-derive every shard's row count,
     token total and checksum FROM THE WRITTEN FILES and compare to the
     manifest. Returns ``{}`` when everything matches, else
@@ -258,7 +219,7 @@ def verify_training_shards(
             )
         }
     data = spark.read.parquet(os.path.join(path, DATA))
-    derived = _shard_stats(data, token_col)
+    derived = _shard_stats(data)
 
     problems: dict[int, str] = {}
     for sid in sorted(set(manifest) | set(derived)):

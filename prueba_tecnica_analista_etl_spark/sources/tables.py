@@ -111,7 +111,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def spread(df: DataFrame, n: int | None = None) -> DataFrame:
+def spread(df: DataFrame) -> DataFrame:
     """Round-robin repartition before expensive per-row compute.
 
     A small table read from one parquet file arrives as ONE partition,
@@ -122,7 +122,7 @@ def spread(df: DataFrame, n: int | None = None) -> DataFrame:
     no-op decision — it matters exactly when file count < cores.
     """
     sc = df.sparkSession.sparkContext
-    return df.repartition(n or sc.defaultParallelism)
+    return df.repartition(sc.defaultParallelism)
 
 
 def footer_stats_session(spark: SparkSession) -> SparkSession:

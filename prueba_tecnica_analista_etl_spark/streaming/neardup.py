@@ -245,23 +245,18 @@ def _fold_units(spark, index_dir: str, units: "list[str]") -> bool:
 COMPACT_MAX_GENS = 8
 
 
-def compact_index(
-    spark,
-    index_dir: str,
-    max_units: int = COMPACT_MAX_UNITS,
-    max_gens: int = COMPACT_MAX_GENS,
-) -> bool:
+def compact_index(spark, index_dir: str) -> bool:
     """TIERED index compaction: each fold is one ``artifacts.publish``,
     like the per-batch commits.
 
-    Tier 1: once the live unit count exceeds ``max_units``, fold the
-    LOOSE batch dirs into one new generation (rewrites only those
-    batches' rows — the common, cheap fold). Tier 2: once generations
-    themselves exceed ``max_gens``, merge all generations into one
-    (the rare full rewrite). Directory count therefore stays bounded
-    by ``max_units + max_gens`` while amortized rewrite stays near-
-    linear in stream length (single-tier everything-folds was
-    O(N²/max_units) bytes over N batches).
+    Tier 1: once the live unit count exceeds ``COMPACT_MAX_UNITS``,
+    fold the LOOSE batch dirs into one new generation (rewrites only
+    those batches' rows — the common, cheap fold). Tier 2: once
+    generations themselves exceed ``COMPACT_MAX_GENS``, merge all
+    generations into one (the rare full rewrite). Directory count
+    therefore stays bounded by their sum while amortized rewrite stays
+    near-linear in stream length (single-tier everything-folds was
+    O(N²/COMPACT_MAX_UNITS) bytes over N batches).
 
     Replay idempotency is PRESERVED, not bypassed: generations are
     named by the newest batch id they cover, and because foreachBatch
@@ -277,7 +272,7 @@ def compact_index(
     """
     units = _committed(index_dir)
     did = False
-    if len(units) > max_units:
+    if len(units) > COMPACT_MAX_UNITS:
         batches = [
             u
             for u in units
@@ -290,7 +285,7 @@ def compact_index(
         for u in _committed(index_dir)
         if os.path.basename(u).startswith("gen-")
     ]
-    if len(gens) > max(max_gens, 1):
+    if len(gens) > COMPACT_MAX_GENS:
         did = _fold_units(spark, index_dir, gens) or did
     return did
 
@@ -299,7 +294,7 @@ def foreach_batch_neardup_gate(
     index_dir: str,
     band_frame: Callable[[DataFrame], DataFrame],
     pairs_from_bands: Callable[[DataFrame, float], DataFrame],
-    threshold: float = 0.5,
+    threshold: float,
 ):
     """Build the foreachBatch function of the gate.
 

@@ -51,20 +51,22 @@ def _staged_landing_dir(
     return os.path.join(root, "data"), schema
 
 
+# Parquet chunks per landing dir: the replay's micro-batch count at
+# one or two files per trigger.
+REPLAY_FILES = 4
+
+
 def write_replay_files(
     spark: SparkSession,
     sf_dir: str,
     table: str = "events",
-    n_files: int = 8,
     base_dir: str | None = None,
     time_col: str = "ts",
-    where: str | None = None,
     arrival_order: str = "range",
 ) -> tuple[str, T.StructType]:
-    """Materialize a table as ``n_files`` parquet chunks in a fresh
-    temp dir (the simulated landing folder). Returns (dir, schema).
-    ``where`` (a SQL predicate) carves a sub-stream out of the table —
-    e.g. one landing dir per event type for stream-stream joins.
+    """Materialize a table as ``REPLAY_FILES`` parquet chunks in a
+    fresh temp dir (the simulated landing folder). Returns (dir,
+    schema).
 
     Chunks are range-partitioned on ``time_col``; ``arrival_order``
     controls the mtime stamping that fixes replay order:
@@ -89,13 +91,11 @@ def write_replay_files(
         # set the conf already.
         ensure_runtime_conf(spark)
         df = load_table(spark, sf_dir, table)
-        if where is not None:
-            df = df.filter(where)
         data_dir = os.path.join(out, "data")
         if time_col in df.columns:
-            chunked = df.repartitionByRange(n_files, time_col)
+            chunked = df.repartitionByRange(REPLAY_FILES, time_col)
         else:
-            chunked = df.repartition(n_files)
+            chunked = df.repartition(REPLAY_FILES)
         chunked.write.mode("overwrite").parquet(data_dir)
         # The file stream source orders files by modification time; the
         # writer stamps every part file in the same second, so arrival
@@ -129,29 +129,29 @@ def write_replay_files(
         schema = _write(base_dir)
         return os.path.join(base_dir, "data"), schema
 
+    # The None stands where a row filter used to be, so the landing
+    # dirs already staged keep their keys.
     digest = sha1(
-        repr((table, n_files, time_col, where, arrival_order)).encode()
+        repr((table, REPLAY_FILES, time_col, None, arrival_order)).encode()
     ).hexdigest()[:10]
     return _staged_landing_dir(sf_dir, f"replay:{table}:{digest}", _write)
 
 
 def write_overlapping_replay(
-    spark: SparkSession,
-    sf_dir: str,
-    table: str = "events",
-    id_col: str = "event_id",
+    spark: SparkSession, sf_dir: str
 ) -> tuple[str, T.StructType]:
-    """Landing dir that models AT-LEAST-ONCE delivery: two files whose
-    id ranges overlap (each covers 60% of the id space, middle 20%
-    delivered twice), mtime-ordered so they arrive as separate
-    micro-batches. The union covers every row, so an exactly-once
-    consumer must emit each id exactly once while seeing ~1.2× rows."""
+    """Landing dir of the events table that models AT-LEAST-ONCE
+    delivery: two files whose event_id ranges overlap (each covers 60%
+    of the id space, middle 20% delivered twice), mtime-ordered so they
+    arrive as separate micro-batches. The union covers every row, so an
+    exactly-once consumer must emit each id exactly once while seeing
+    ~1.2× rows."""
     def _write(out: str) -> T.StructType:
         ensure_runtime_conf(spark)
-        df = load_table(spark, sf_dir, table)
+        df = load_table(spark, sf_dir, "events")
         lo, hi = df.agg(
-            F.expr(f"percentile({id_col}, 0.4)"),
-            F.expr(f"percentile({id_col}, 0.6)"),
+            F.expr("percentile(event_id, 0.4)"),
+            F.expr("percentile(event_id, 0.6)"),
         ).first()
         data_dir = os.path.join(out, "data")
         os.makedirs(data_dir)
@@ -159,8 +159,8 @@ def write_overlapping_replay(
         # so they ride the first half explicitly — the documented "union
         # covers every row" invariant must include identity-less rows.
         halves = [
-            df.filter((F.col(id_col) <= hi) | F.col(id_col).isNull()),
-            df.filter(F.col(id_col) > lo),
+            df.filter((F.col("event_id") <= hi) | F.col("event_id").isNull()),
+            df.filter(F.col("event_id") > lo),
         ]
         base_ts = None
         for i, half in enumerate(halves):
@@ -177,9 +177,7 @@ def write_overlapping_replay(
             os.utime(dst, (base_ts + i, base_ts + i))
         return df.schema
 
-    return _staged_landing_dir(
-        sf_dir, f"replay_overlap:{table}:{id_col}", _write
-    )
+    return _staged_landing_dir(sf_dir, "replay_overlap:events:event_id", _write)
 
 
 def replay_as_stream(

@@ -20,18 +20,18 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def dedupe_stream(stream: DataFrame, id_col: str = "event_id") -> DataFrame:
-    """First-occurrence-wins streaming dedup on ``id_col``; the output
-    schema is the input schema.
+def dedupe_stream(stream: DataFrame) -> DataFrame:
+    """First-occurrence-wins streaming dedup on ``event_id``; the
+    output schema is the input schema.
 
-    Rows with a NULL ``id_col`` have no identity to deduplicate on, so
+    Rows with a NULL ``event_id`` have no identity to deduplicate on, so
     they pass through unchanged and never enter state. The split is
     made in the plan because ``dropDuplicates`` treats NULLs as equal
     and would keep only one of them.
     """
-    ids = F.col(id_col)
+    ids = F.col("event_id")
     return (
         stream.filter(ids.isNotNull())
-        .dropDuplicates([id_col])
+        .dropDuplicates(["event_id"])
         .unionByName(stream.filter(ids.isNull()))
     )

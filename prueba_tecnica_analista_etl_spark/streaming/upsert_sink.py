@@ -126,7 +126,6 @@ def foreach_batch_upsert(
     keys: Sequence[str],
     rules: dict[str, Column] | None = None,
     op_col: str | None = None,
-    delete_value: str = "D",
     cdc_order: Sequence[Column | str] | None = None,
 ) -> Callable[[DataFrame, int], None]:
     """Build the ``foreachBatch`` callback. Usage::
@@ -137,7 +136,7 @@ def foreach_batch_upsert(
 
     ``op_col`` switches the sink from pure upsert to CDC-APPLY: the
     stream is an ordered change log whose ``op_col`` may carry
-    ``delete_value`` rows, each micro-batch is compacted to its final
+    ``D`` (delete) rows, each micro-batch is compacted to its final
     op per key under ``cdc_order`` (descending change-time — REQUIRED
     with ``op_col``, because 'last op wins' is meaningless without a
     total order), deletes remove target keys, everything else merges
@@ -190,7 +189,7 @@ def foreach_batch_upsert(
             if op_col is not None:
                 batch = keep_first(batch, keys, cdc_order)
                 if rules:
-                    is_delete = F.col(op_col).eqNullSafe(delete_value)
+                    is_delete = F.col(op_col).eqNullSafe("D")
                     accepted, rejected = split_rejects(
                         batch.filter(~is_delete), rules
                     )
@@ -215,7 +214,6 @@ def foreach_batch_upsert(
                         batch.select(*base.columns, op_col),
                         keys,
                         op_col=op_col,
-                        delete_value=delete_value,
                     )
                 else:
                     merged = upsert(
@@ -225,11 +223,11 @@ def foreach_batch_upsert(
                 # first batch: the target is born from the surviving
                 # (non-delete) final ops.  eqNullSafe, matching
                 # cdc_apply's contract — a NULL op is an upsert, and
-                # `!= delete_value` would evaluate NULL and silently
+                # `!= "D"` would evaluate NULL and silently
                 # drop it on exactly (and only) the batch where the
                 # target does not exist yet.
                 merged = batch.filter(
-                    ~F.col(op_col).eqNullSafe(delete_value)
+                    ~F.col(op_col).eqNullSafe("D")
                 ).drop(op_col)
             else:
                 merged = batch

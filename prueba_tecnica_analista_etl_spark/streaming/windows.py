@@ -43,19 +43,14 @@ def tumbling_counts(
     )
 
 
-def sessionize(
-    stream: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str = "1 second",
-    with_end: bool = False,
-) -> DataFrame:
-    """Per-user sessions: a session is a run of events with < ``gap``
-    between neighbors. Append mode emits a session once the watermark
+def sessionize(stream: DataFrame) -> DataFrame:
+    """Per-user sessions: a session is a run of events with < 30
+    minutes between neighbors. Append mode emits a session once the watermark
     passes its close.
 
     **Withheld tail (structural, not a bug):** in an availableNow
     replay the final watermark stops at ``max(event time) − watermark``,
-    so any session still open within ``gap`` of the stream's end — in
+    so any session still open within the gap of the stream's end — in
     particular every user's LAST session — is never emitted. This is
     exactly Spark's append-mode contract (only finalized windows leave
     the state store); a live pipeline emits them when later events
@@ -64,11 +59,11 @@ def sessionize(
     ``test_sessionize_batch_stream_parity`` test quantifies the gap
     against a batch ``session_window`` aggregation.
 
-    ``with_end=True`` additionally emits the session window's end as
-    epoch micros (``end_us`` — last event + gap): the column a
-    finalization-margin filter needs (q_stream_sessionize's
-    oracle-exact form cuts at end_us + margin <= max event time, a
-    filter both engines evaluate on identical values)."""
+    The session window's end is emitted as epoch micros (``end_us`` —
+    last event + gap): the column a finalization-margin filter needs
+    (q_stream_sessionize's oracle-exact form cuts at end_us + margin
+    <= max event time, a filter both engines evaluate on identical
+    values)."""
     cols = [
         "user_id",
         F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias(
@@ -76,13 +71,13 @@ def sessionize(
         ),
         "n_events",
         "session_value",
+        F.unix_micros(F.col("w.end")).alias("end_us"),
     ]
-    if with_end:
-        cols.append(F.unix_micros(F.col("w.end")).alias("end_us"))
     return (
-        stream.withWatermark("ts", watermark)
+        stream.withWatermark("ts", "1 second")
         .groupBy(
-            F.session_window("ts", gap).alias("w"), F.col("user_id")
+            F.session_window("ts", "30 minutes").alias("w"),
+            F.col("user_id"),
         )
         .agg(
             F.count(F.lit(1)).alias("n_events"),

@@ -1,6 +1,6 @@
 """Bench orchestrator protocol tests (no Spark; subprocess faked).
 
-Pins the r13 verdict's task 2: the per-query detail array shipped in
+Pins that the per-query detail array shipped in
 the summary must be provably from a CLEAN trial. When trial 1's
 sequential detail carries the documented degraded-VM signature
 (median per-query ratio vs the previous round's
@@ -38,7 +38,6 @@ def _payload(wall: float, queries: dict, measured: bool) -> dict:
         "mode": "concurrent-16-threads-best-of-2",
         "oracle_subset_wall": wall * 0.9,
         "oracle_subset_n": len(queries),
-        "lsh_truth_fraction": 0.5,
         "artifact_store_warm": True,
         "queries": queries,
         "sf": 0.1,

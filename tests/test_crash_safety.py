@@ -166,7 +166,7 @@ class _IvfRebalance(_Site):
         return rows, rows
 
     def write(self):
-        ivf_rebalance(self.spark, self.path, k=3, iters=1)
+        ivf_rebalance(self.spark, self.path, k=3)
 
     reenter = write
 
@@ -263,5 +263,5 @@ def test_writers_invalidate_fingerprint_memo(spark, tmp_path, monkeypatch):
     index = os.path.join(corpus, "ivf")
     ivf_write_index(_embeddings(spark), index, k=2, iters=1)
     before = artifacts._corpus_fingerprint(corpus)
-    ivf_rebalance(spark, index, k=3, iters=1)
+    ivf_rebalance(spark, index, k=3)
     assert artifacts._corpus_fingerprint(corpus) != before

@@ -406,13 +406,13 @@ def test_compact_parquet_refuses_partitioned_root(spark, sf_dir, tmp_path):
 # ---------------------------------------------------------------------------
 
 
-def _cc(spark, pairs, **kw):
+def _cc(spark, pairs):
     from prueba_tecnica_analista_etl_spark.operators.components import (
         connected_components,
     )
 
     edges = spark.createDataFrame(pairs, "doc_a long, doc_b long")
-    return _rows(connected_components(edges, **kw), "node", "comp")
+    return _rows(connected_components(edges), "node", "comp")
 
 
 def test_cc_chain_is_one_component(spark):
@@ -438,40 +438,14 @@ def test_cc_long_chain_converges(spark):
     assert got == [(i, 0) for i in range(n + 1)]
 
 
-def test_cc_raises_rather_than_mislabeling(spark):
-    """Hitting max_rounds must raise, never return a half-propagated
+def test_cc_raises_rather_than_mislabeling(spark, monkeypatch):
+    """Hitting MAX_ROUNDS must raise, never return a half-propagated
     labeling (silent truncation would split one family into two)."""
+    from prueba_tecnica_analista_etl_spark.operators import components
+
+    monkeypatch.setattr(components, "MAX_ROUNDS", 2)
     with pytest.raises(RuntimeError, match="did not converge"):
-        _cc(spark, [(i, i + 1) for i in range(8)], max_rounds=2)
-
-
-def test_shingle_edges_max_df_drops_boilerplate_fp_only(spark):
-    """The 100 TB skew guard: max_df removes pairs that ONLY share
-    ubiquitous fingerprints, but a family also sharing rarer shingles
-    keeps its edge (the docstring's claim, pinned)."""
-    from prueba_tecnica_analista_etl_spark.plans.extensions_pipeline import (
-        shingle_edges,
-    )
-
-    boiler = "the quick brown fox jumps over the lazy dog again"
-    rare = "zeta omega kappa sigma delta gamma alpha beta nine"
-    docs = spark.createDataFrame(
-        [
-            (1, f"{boiler} {rare}"),
-            (2, f"{boiler} {rare}"),
-            (3, boiler),
-            (4, boiler),
-            (5, "unrelated words entirely distinct from every other doc"),
-        ],
-        "doc_id long, text string",
-    )
-    uncapped = _rows(shingle_edges(docs, k=8), "doc_a", "doc_b")
-    assert (1, 2) in uncapped and (3, 4) in uncapped
-    # every 8-shingle of the bare boilerplate doc appears in 4 docs;
-    # cap at 3 → the (3,4) pair (boilerplate-only overlap) vanishes,
-    # while (1,2) survives on its rare-tail shingles.
-    capped = _rows(shingle_edges(docs, k=8, max_df=3), "doc_a", "doc_b")
-    assert (1, 2) in capped and (3, 4) not in capped
+        _cc(spark, [(i, i + 1) for i in range(8)])
 
 
 def test_cc_string_ids_converge_correctly(spark):
@@ -491,31 +465,36 @@ def test_cc_string_ids_converge_correctly(spark):
     assert got == [(x, "a") for x in ["a", "b", "c", "d", "e"]]
 
 
-def test_cc_pointer_jumping_covers_deep_chains(spark):
+def test_cc_pointer_jumping_covers_deep_chains(spark, monkeypatch):
     """A 41-node path has diameter 40: plain propagation needs ~40
     rounds, but pointer jumping (comp <- comp[comp], cut in from
-    round jump_after on) doubles resolved depth per round, so the
-    chain converges well inside max_rounds=12."""
+    round JUMP_AFTER on) doubles resolved depth per round, so the
+    chain converges well inside 12 rounds."""
+    from prueba_tecnica_analista_etl_spark.operators import components
+
+    monkeypatch.setattr(components, "MAX_ROUNDS", 12)
     n = 40
-    got = _cc(spark, [(i, i + 1) for i in range(n)], max_rounds=12)
+    got = _cc(spark, [(i, i + 1) for i in range(n)])
     assert got == [(i, 0) for i in range(n + 1)]
 
 
-def test_cc_string_ids_with_pointer_jumping(spark):
+def test_cc_string_ids_with_pointer_jumping(spark, monkeypatch):
     """The jump join must also work for non-numeric ids (the
     join-probe convergence branch): a 21-node STRING chain is deeper
-    than plain propagation can cover in max_rounds=10, so this pins
+    than plain propagation can cover in 10 rounds, so this pins
     the jump x string-id combination a numeric-only deep test would
     miss."""
+    from prueba_tecnica_analista_etl_spark.operators import components
     from prueba_tecnica_analista_etl_spark.operators.components import (
         connected_components,
     )
 
+    monkeypatch.setattr(components, "MAX_ROUNDS", 10)
     ids = [f"n{i:02d}" for i in range(21)]
     edges = spark.createDataFrame(
         list(zip(ids, ids[1:])), "doc_a string, doc_b string"
     )
-    got = _rows(connected_components(edges, max_rounds=10), "node", "comp")
+    got = _rows(connected_components(edges), "node", "comp")
     assert got == [(x, "n00") for x in ids]
 
 

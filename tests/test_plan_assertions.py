@@ -723,7 +723,7 @@ def test_staged_builders_keep_their_arrow_stages(spark, sf_dir):
         _embed_neardup_pairs_live(spark, sf_dir)
     ), "embed near-dup builder lost its sign-projection Arrow stage"
     assert has_arrow(
-        extract_features(fake_assets(docs), dim=16)
+        extract_features(fake_assets(docs))
     ), "multimodal feature builder lost its mapInPandas stage"
 
     # q_ann_lsh serves the staged lsh_sigs frame and q_ann_ivf
@@ -765,7 +765,7 @@ def test_staged_builders_keep_their_arrow_stages(spark, sf_dir):
     assert has_arrow(
         docs.select(
             "doc_id",
-            winnow_fingerprints(F.col("text"), k=3, w=4).alias("fps"),
+            winnow_fingerprints(F.col("text")).alias("fps"),
         )
     ), "winnow builder lost its sliding-min Arrow stage"
     ev = _t(spark, sf_dir, "events").select("event_type")

@@ -468,7 +468,7 @@ def test_ordered_funnel_matches_python_fold(spark, rows):
 @SLOW
 def test_cohort_retention_matches_python_fold(spark, rows):
     """Retention census equals the dict-fold reference: cohort = first
-    active day per user, one count per (cohort, floor(Δdays/period))
+    active day per user, one count per (cohort, floor(Δdays/7))
     over DISTINCT active days."""
     from prueba_tecnica_analista_etl_spark.operators.events import (
         cohort_retention,
@@ -488,7 +488,7 @@ def test_cohort_retention_matches_python_fold(spark, rows):
     )
     got = {
         (r["cohort_day"], r["week_offset"]): r["n_users"]
-        for r in cohort_retention(df, period_days=3).collect()
+        for r in cohort_retention(df).collect()
     }
 
     days: dict[int, set] = {}
@@ -502,7 +502,7 @@ def test_cohort_retention_matches_python_fold(spark, rows):
     for u, ds in days.items():
         d0 = min(ds)
         for d in ds:
-            key = (d0.strftime("%Y-%m-%d"), (d - d0).days // 3)
+            key = (d0.strftime("%Y-%m-%d"), (d - d0).days // 7)
             buckets.setdefault(key, set()).add(u)
     assert got == {k: len(v) for k, v in buckets.items()}
 
@@ -745,9 +745,7 @@ def test_cdc_apply_matches_python_fold(spark, base, log):
         [(k, v, op, i) for i, (k, v, op) in enumerate(log)],
         "k long, v long, op string, seq long",
     )
-    out = cdc_apply(
-        base_df, log_df, ["k"], order=[F.desc("seq")]
-    )
+    out = cdc_apply(base_df, keep_first(log_df, ["k"], [F.desc("seq")]), ["k"])
     got = {r["k"]: r["v"] for r in out.collect()}
 
     state = {}
@@ -1114,7 +1112,7 @@ def test_sign_words_matches_numpy_reference(spark, vecs):
     )
 
     dim = 8
-    planes = random_hyperplanes(40, dim, seed=7)  # 2 words: 32 + 8
+    planes = random_hyperplanes(40, dim)  # 2 words: 32 + 8
     df = spark.createDataFrame(
         [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
         "id long, v array<double>",

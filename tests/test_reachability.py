@@ -1,9 +1,9 @@
-"""Every top-level definition in the package earns its place.
+"""Every top-level definition and every option in the package earns
+its place.
 
 A definition is reached when a name walk from the roots finds it:
 
 - every ``@query``-registered function;
-- every public def in ``pipelines/*.py``;
 - the whole of ``__main__.py`` and of ``__spark_entry__.py``;
 - each entry of ``ALLOWLIST``.
 
@@ -11,6 +11,10 @@ The walk follows the names a reached definition's body uses, through
 the imports of its module and of the function itself. A module-level
 import alone is not a use. Anything the walk does not reach is dead
 code: delete it, or put it on ``ALLOWLIST`` with one of three reasons.
+
+Every defaulted parameter of a definition the real roots reach is an
+option; one that no real caller sets is folded into a constant, or put
+on ``OPTION_ALLOWLIST`` with one of three reasons.
 
 Pure AST: nothing is imported from the package and no Spark session
 is started.
@@ -57,6 +61,9 @@ ALLOWLIST = {
     "streaming.late_dlq.read_routed": (SURVEY, "T6"),
     "streaming.joins.join_event_streams": (SURVEY, "T9"),
     "streaming.joins.enrich_with_dim": (SURVEY, "T11"),
+    "pipelines.incremental.incremental_etl": (SURVEY, "T8"),
+    "pipelines.incremental.target_frame": (SURVEY, "T8"),
+    "pipelines.flights.flights_pipeline": (GOLDEN, "the §3 flights clean"),
     "functions.cleanse.try_double_or_zero": (GOLDEN, "Col_10 cast"),
     "operators.pivot.count_sum_pivot": (GOLDEN, "Col_2 pivot"),
     "operators.pivot.count_sum_rollup": (GOLDEN, "Col_2 rollup"),
@@ -73,6 +80,10 @@ ALLOWLIST = {
         TEST_REF,
         "census the SemDeDup tests compare q_semdedup against",
     ),
+    "artifacts.clear_artifacts": (
+        TEST_REF,
+        "the tests' invalidation hook for a memoized artifact",
+    ),
     "sources.tables.TABLES": (
         TEST_REF,
         "the table list the DuckDB oracle harness registers",
@@ -87,12 +98,19 @@ def _module_name(path: Path) -> str:
     return ".".join(parts)
 
 
-def _load() -> dict[str, tuple[Path, ast.Module]]:
-    files = sorted((REPO / PKG).rglob("*.py")) + [REPO / "__spark_entry__.py"]
+def _load(files) -> dict[str, tuple[Path, ast.Module]]:
     return {_module_name(p): (p, ast.parse(p.read_text())) for p in files}
 
 
-MODULES = _load()
+# The package plus the driver entry, and the scripts outside it whose
+# calls count as real callers of an option.
+MODULES = _load(sorted((REPO / PKG).rglob("*.py")) + [REPO / "__spark_entry__.py"])
+SCRIPTS = _load(
+    [REPO / "bench.py"]
+    + [p for p in sorted((REPO / "perfbench").glob("*.py")) if "test" not in p.name]
+    + sorted((REPO / "tools").glob("*.py"))
+)
+MODULES.update(SCRIPTS)
 
 
 def _names(target: ast.expr) -> list[str]:
@@ -177,39 +195,44 @@ def _resolve(mod: str, name: str, local: dict):
     return _follow(hit[1], hit[2])
 
 
-def _uses(mod: str, node: ast.AST) -> set[tuple[str, str]]:
-    """Top-level defs that the names used under ``node`` refer to."""
-    local = _imports(
+def _target(mod: str, expr: ast.expr, local: dict):
+    """The top-level def a name or a dotted module path refers to."""
+    chain = []
+    while isinstance(expr, ast.Attribute):
+        chain.append(expr.attr)
+        expr = expr.value
+    if not isinstance(expr, ast.Name):
+        return None
+    hit = _resolve(mod, expr.id, local)
+    for attr in reversed(chain):
+        if hit is None or hit[0] != "mod":
+            return None
+        sub = f"{hit[1]}.{attr}"
+        hit = ("mod", sub) if sub in MODULES else _follow(hit[1], attr)
+    if hit is None or hit[0] != "def" or hit[1:] not in DEFS:
+        return None
+    return hit[1:]
+
+
+def _local_imports(mod: str, node: ast.AST) -> dict:
+    return _imports(
         mod,
         [n for n in ast.walk(node) if isinstance(n, (ast.Import, ast.ImportFrom))],
     )
+
+
+def _uses(mod: str, node: ast.AST) -> set[tuple[str, str]]:
+    """Top-level defs that the names used under ``node`` refer to."""
+    local = _local_imports(mod, node)
     out = set()
     for sub in ast.walk(node):
-        if isinstance(sub, ast.Attribute):
-            chain = []
-            cur = sub
-            while isinstance(cur, ast.Attribute):
-                chain.append(cur.attr)
-                cur = cur.value
-            if not isinstance(cur, ast.Name):
-                continue
-            hit = _resolve(mod, cur.id, local)
-            if hit is None or hit[0] != "mod":
-                continue
-            target = hit[1]
-            for attr in reversed(chain):
-                if f"{target}.{attr}" in MODULES:
-                    target = f"{target}.{attr}"
-                    continue
-                hit = _follow(target, attr)
-                if hit is not None and hit[0] == "def":
-                    out.add(hit[1:])
-                break
-        elif isinstance(sub, ast.Name) and not isinstance(sub.ctx, ast.Store):
-            hit = _resolve(mod, sub.id, local)
-            if hit is not None and hit[0] == "def":
-                out.add(hit[1:])
-    return out & DEFS.keys()
+        if isinstance(sub, ast.Attribute) or (
+            isinstance(sub, ast.Name) and not isinstance(sub.ctx, ast.Store)
+        ):
+            key = _target(mod, sub, local)
+            if key is not None:
+                out.add(key)
+    return out
 
 
 def _is_query(node: ast.stmt) -> bool:
@@ -225,9 +248,7 @@ def _real_roots() -> tuple[set, list]:
     roots = {
         (mod, name)
         for (mod, name), node in DEFS.items()
-        if _is_query(node)
-        or mod in whole
-        or (mod.startswith(f"{PKG}.pipelines.") and not name.startswith("_"))
+        if _is_query(node) or mod in whole
     }
     stmts = [(mod, node) for mod in whole for node in MODULES[mod][1].body]
     return roots, stmts
@@ -308,5 +329,180 @@ def test_allowlist_reasons():
             assert detail and re.search(rf"\b{name}\b", tests), (
                 f"{entry}: no test uses it"
             )
+        else:
+            raise AssertionError(f"{entry}: unknown reason kind {kind!r}")
+
+
+# --- options -----------------------------------------------------------
+#
+# Every defaulted parameter of a reached definition is an option a
+# caller can set. An option no real caller sets is a constant in
+# disguise: fold it into the body, or put it on OPTION_ALLOWLIST with
+# one of three reasons. Real callers are the package, the driver entry,
+# bench.py, perfbench's scripts and tools/; tests are not.
+
+# (b) a deployment setting: a path, address, credential or connection
+DEPLOY = "deploy"
+# (c) a seam a test injects through; the detail names that test
+SEAM = "seam"
+
+# "module.def(param)" relative to the package ("module.Class(param)"
+# for a constructor) -> (reason kind, detail).
+OPTION_ALLOWLIST = {
+    "__main__.main(argv)": (SEAM, "tests/test_operators.py::test_cli_surface"),
+    "__main__.main(spark)": (SEAM, "tests/test_operators.py::test_cli_surface"),
+    "operators.sketch.MGStreamAccumulator(ledger_dir)": (
+        DEPLOY,
+        "where a restarted stream finds its sketch state",
+    ),
+    "streaming.replay.write_replay_files(base_dir)": (
+        DEPLOY,
+        "a landing directory outside the artifact store",
+    ),
+    "streaming.replay.write_replay_files(arrival_order)": (SURVEY, "T6"),
+    "streaming.windows.tumbling_counts(watermark)": (SURVEY, "T1"),
+}
+
+_DEPLOY_NAME = re.compile(r"dir|path|url|host|port|user|password|conn")
+
+
+def _options():
+    """(name, def key, callee, positional index or None, parameter)
+    per defaulted parameter of a package function or of a method of a
+    package class. ``callee`` is the def key for functions and
+    constructors, the method name for other methods (matched by name
+    at ``x.meth(...)`` call sites); positional indexes skip ``self``."""
+    for key, node in DEFS.items():
+        if not key[0].startswith(PKG):
+            continue
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            fns = [(None, node)]
+        elif isinstance(node, ast.ClassDef):
+            fns = [
+                (sub.name, sub)
+                for sub in node.body
+                if isinstance(sub, (ast.FunctionDef, ast.AsyncFunctionDef))
+            ]
+        else:
+            continue
+        for method, fn in fns:
+            a = fn.args
+            pos = a.posonlyargs + a.args
+            skip = 0 if method is None or _is_static(fn) else 1
+            first = len(pos) - len(a.defaults)
+            params = [(i - skip, p.arg) for i, p in enumerate(pos) if i >= first]
+            params += [
+                (None, p.arg) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d
+            ]
+            label = key[1] if method in (None, "__init__") else f"{key[1]}.{method}"
+            callee = key if method in (None, "__init__") else method
+            for index, param in params:
+                name = f"{key[0][len(PKG) + 1 :]}.{label}({param})"
+                yield name, key, callee, index, param
+
+
+def _is_static(fn) -> bool:
+    return any(getattr(d, "id", None) == "staticmethod" for d in fn.decorator_list)
+
+
+def _calls(modules):
+    """(callee, call) for every call in ``modules``: the def key a name
+    resolves to, else the attribute name of ``x.meth(...)``.
+    ``partial(f, ...)`` counts as a call of ``f``."""
+    for mod, (_, tree) in modules.items():
+        for top in tree.body:
+            local = _local_imports(mod, top)
+            for call in (n for n in ast.walk(top) if isinstance(n, ast.Call)):
+                func = call.func
+                if getattr(func, "id", getattr(func, "attr", None)) == "partial":
+                    if not call.args:
+                        continue
+                    func = call.args[0]
+                    call = ast.Call(func, call.args[1:], call.keywords)
+                key = _target(mod, func, local)
+                if key is not None:
+                    yield key, call
+                elif isinstance(func, ast.Attribute):
+                    yield func.attr, call
+
+
+def _sets(call: ast.Call, index: int | None, param: str) -> bool:
+    """Whether ``call`` sets the parameter: by keyword, by position, or
+    through ``*args``/``**kwargs`` forwarding."""
+    for kw in call.keywords:
+        if kw.arg in (None, param):
+            return True
+    if index is None:
+        return False
+    for i, arg in enumerate(call.args):
+        if isinstance(arg, ast.Starred):
+            return True
+        if i == index:
+            return True
+    return False
+
+
+def _unset_options() -> dict[str, str]:
+    """Option name -> where, for every option of a reached def that no
+    real call sets."""
+    reached = _reach(*_real_roots())
+    calls: dict = {}
+    for callee, call in _calls(MODULES):
+        calls.setdefault(callee, []).append(call)
+    out = {}
+    for name, key, callee, index, param in _options():
+        if key in reached and not any(
+            _sets(c, index, param) for c in calls.get(callee, ())
+        ):
+            out[name] = f"{MODULES[key[0]][0].relative_to(REPO)}:{DEFS[key].lineno}"
+    return out
+
+
+def test_every_option_is_set_by_a_caller():
+    unset = _unset_options()
+    missing = sorted(set(unset) - OPTION_ALLOWLIST.keys())
+    assert not missing, (
+        f"{len(missing)} options no real caller sets (fold into a "
+        "constant, or allowlist):\n"
+        + "\n".join(f"{unset[o]} {o}" for o in missing)
+    )
+
+
+def test_option_allowlist_entries_are_live_and_reasoned():
+    unset = _unset_options()
+    options = {
+        name: (callee, index, param)
+        for name, _, callee, index, param in _options()
+    }
+    for entry, (kind, detail) in OPTION_ALLOWLIST.items():
+        assert entry in options, f"{entry}: no such option"
+        assert entry in unset, (
+            f"{entry}: a real caller sets it, or its def is unreached"
+        )
+        callee, index, param = options[entry]
+        if kind == SURVEY:
+            row = _survey_row(detail)
+            assert row, f"{entry}: SURVEY.md has no row {detail}"
+            assert re.search(rf"\b{param}\b", row), (
+                f"{entry}: SURVEY row {detail} does not name {param}"
+            )
+        elif kind == DEPLOY:
+            assert _DEPLOY_NAME.search(param), (
+                f"{entry}: {param} is not a path, address or credential"
+            )
+        elif kind == SEAM:
+            path, _, test = detail.partition("::")
+            tree = ast.parse((REPO / path).read_text())
+            fn = next(
+                (n for n in tree.body if getattr(n, "name", None) == test), None
+            )
+            assert fn is not None, f"{entry}: no test {detail}"
+            name = callee[1] if isinstance(callee, tuple) else callee
+            assert any(
+                isinstance(c, ast.Call)
+                and getattr(c.func, "id", getattr(c.func, "attr", None)) == name
+                and _sets(c, index, param)
+                for c in ast.walk(fn)
+            ), f"{entry}: {detail} does not set {param}"
         else:
             raise AssertionError(f"{entry}: unknown reason kind {kind!r}")

@@ -14,6 +14,9 @@ from prueba_tecnica_analista_etl_spark.multimodal import (
     fake_assets,
 )
 from prueba_tecnica_analista_etl_spark.plans import REGISTRY
+from prueba_tecnica_analista_etl_spark.plans.extensions_scale import (
+    MINHASH_JACCARD_T,
+)
 from prueba_tecnica_analista_etl_spark.sources.bucketed import write_bucketed
 from prueba_tecnica_analista_etl_spark.sources.tables import (
     load_table,
@@ -208,13 +211,13 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
 
 def test_extract_features_contract(spark, sf_dir):
     assets = fake_assets(load_table(spark, sf_dir, "documents"))
-    feats = extract_features(assets, dim=8).collect()
+    feats = extract_features(assets).collect()
     assert len(feats) == assets.count()
     for r in feats:
-        assert len(r["features"]) == 8
+        assert len(r["features"]) == 16
         norm = sum(x * x for x in r["features"])
         assert norm == pytest.approx(1.0, abs=1e-3)
-    again = extract_features(assets, dim=8).collect()
+    again = extract_features(assets).collect()
     assert sorted(map(tuple, feats)) == sorted(map(tuple, again))
 
 
@@ -334,9 +337,9 @@ def test_multimodal_real_codec_tier_pil(spark):
     n = len(text_payload)
     assert meta[2] == (n % 1920, n % 1080)  # stub even with PIL
 
-    feats = extract_features(assets, dim=8).collect()
+    feats = extract_features(assets).collect()
     assert all(
-        r["features"] is not None and len(r["features"]) == 8
+        r["features"] is not None and len(r["features"]) == 16
         for r in feats
     )
 
@@ -529,7 +532,7 @@ def test_winnow_guarantee_shared_run_shares_fingerprint(spark):
         r["doc_id"]: set(r["fps"])
         for r in docs.select(
             "doc_id",
-            winnow_fingerprints(F.col("text"), k=3, w=4).alias("fps"),
+            winnow_fingerprints(F.col("text")).alias("fps"),
         ).collect()
     }
     assert fps[1] & fps[2]          # shared 6-token run -> shared fp
@@ -537,12 +540,13 @@ def test_winnow_guarantee_shared_run_shares_fingerprint(spark):
     assert not (fps[2] & fps[3])
 
 
-def test_near_dup_purge_fixpoint_keeps_chain_tail(spark):
+def test_near_dup_purge_fixpoint_keeps_chain_tail(spark, monkeypatch):
     """Planted chain A~B, B~C with A≁C: one-shot greedy would drop
     both B and C; the fixpoint purge re-admits C (its only near-dup B
     is itself dead). Also: a genuine pair still loses its doc_b, and
     no surviving pair remains even past the round cap (enforcement
-    pass) on a chain longer than `rounds`."""
+    pass) on a chain longer than `PURGE_ROUNDS`."""
+    from prueba_tecnica_analista_etl_spark.pipelines import corpus
     from prueba_tecnica_analista_etl_spark.pipelines.corpus import (
         near_dup_purge,
     )
@@ -568,15 +572,13 @@ def test_near_dup_purge_fixpoint_keeps_chain_tail(spark):
     }
     assert 7 in alive_g and alive_g == {1, 2, 3, 4, 5, 6, 7, 8}
 
-    # chain 1-2-3-4-5-6-7-8 is deeper than rounds=2: enforcement must
+    # chain 1-2-3-4-5-6-7-8 is deeper than 2 rounds: enforcement must
     # still leave no surviving pair, even if it over-purges the tail.
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 8)], "doc_a long, doc_b long"
     )
-    surv = {
-        r["doc_id"]
-        for r in near_dup_purge(docs, chain, rounds=2).collect()
-    }
+    monkeypatch.setattr(corpus, "PURGE_ROUNDS", 2)
+    surv = {r["doc_id"] for r in near_dup_purge(docs, chain).collect()}
     assert 1 in surv
     for a, b in [(i, i + 1) for i in range(1, 8)]:
         assert not (a in surv and b in surv)
@@ -673,8 +675,9 @@ def test_corpus_curate_second_build_reuses_pair_artifact(spark, sf_dir):
     eager materialize-once design is deliberate — see
     pipelines/corpus.py:_materialize for the measured lazy variants
     that lose 7-20x at sf0.1.)"""
+    from prueba_tecnica_analista_etl_spark.artifacts import clear_artifacts
     from prueba_tecnica_analista_etl_spark.pipelines.corpus import (
-        clear_pairs_cache,
+        _minhash_pairs_key,
     )
 
     sc = spark.sparkContext
@@ -687,7 +690,7 @@ def test_corpus_curate_second_build_reuses_pair_artifact(spark, sf_dir):
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
 
-    clear_pairs_cache()
+    clear_artifacts(name=_minhash_pairs_key())
     df_cold, cold = n_jobs("corpus-cold-build")
     df_warm, warm = n_jobs("corpus-warm-build")
     assert warm < cold
@@ -696,19 +699,20 @@ def test_corpus_curate_second_build_reuses_pair_artifact(spark, sf_dir):
 
 def test_pairs_cache_memoizes_and_clears(spark, sf_dir):
     """cached_minhash_pairs memoizes per (session, corpus) and
-    clear_pairs_cache() actually invalidates."""
+    clearing its artifact actually invalidates."""
+    from prueba_tecnica_analista_etl_spark.artifacts import clear_artifacts
     from prueba_tecnica_analista_etl_spark.pipelines.corpus import (
+        _minhash_pairs_key,
         cached_minhash_pairs,
-        clear_pairs_cache,
     )
 
     a = cached_minhash_pairs(spark, sf_dir)
     b = cached_minhash_pairs(spark, sf_dir)
     assert a is b
-    clear_pairs_cache(spark)
+    clear_artifacts(spark, name=_minhash_pairs_key())
     c = cached_minhash_pairs(spark, sf_dir)
     assert c is not a
-    clear_pairs_cache()
+    clear_artifacts(name=_minhash_pairs_key())
 
 
 def test_fingerprint_udfs_null_and_empty_safe(spark):
@@ -770,7 +774,7 @@ def test_fingerprint_udfs_null_and_empty_safe(spark):
         [(1, [float(i) for i in range(64)])],
         "id long, v array<double>",
     )
-    planes = random_hyperplanes(8, 64, seed=1)
+    planes = random_hyperplanes(8, 64)
     C = np.eye(4, 64)
     empty = vecs.filter(F.col("id") < 0)  # empty frame -> empty batches
     assert empty.select(sign_bits(F.col("v"), planes)).count() == 0
@@ -837,11 +841,10 @@ def test_multimodal_pipeline_topk_contract(spark, sf_dir):
 
 
 def test_minhash_pair_frame_generic_api(spark):
-    """The DataFrame-first near-dup operator works over ANY (id, text)
-    frame with caller-named columns and a caller threshold — planted
-    near-identical pairs surface with canonical (doc_a < doc_b,
-    jaccard_sim) output, unrelated rows do not pair, and a higher
-    threshold prunes the borderline pair."""
+    """The DataFrame-first near-dup operator works over any
+    (doc_id, text) frame — planted near-identical pairs surface with
+    canonical (doc_a < doc_b, jaccard_sim) output at the Jaccard gate,
+    and unrelated rows do not pair."""
     from prueba_tecnica_analista_etl_spark.plans.extensions_scale import (
         minhash_pair_frame,
     )
@@ -853,28 +856,22 @@ def test_minhash_pair_frame_generic_api(spark):
         (103, "totally different words entirely here now ok fine yes"),
         (104, base.replace("alpha", "omega")),        # weaker overlap
     ]
-    corpus = spark.createDataFrame(rows, "item_id long, body string")
+    corpus = spark.createDataFrame(rows, "doc_id long, text string")
     got = {
         (r["doc_a"], r["doc_b"]): r["jaccard_sim"]
-        for r in minhash_pair_frame(
-            corpus, id_col="item_id", text_col="body", threshold=0.3
-        ).collect()
+        for r in minhash_pair_frame(corpus).collect()
     }
-    assert (101, 102) in got and got[(101, 102)] >= 0.5
+    assert (101, 102) in got
+    assert all(v >= 0.5 for v in got.values())
     assert all(103 not in pair for pair in got)
     assert all(a < b for a, b in got)
-
-    strict = minhash_pair_frame(
-        corpus, id_col="item_id", text_col="body", threshold=0.9
-    ).collect()
-    assert all(r["jaccard_sim"] >= 0.9 for r in strict)
 
 
 def test_similarity_operators_generic_api(spark, sf_dir):
     """The DataFrame-first similarity operators: cosine_topk over a
     caller-named frame matches the declared brute-force query's
     results on the embeddings table, and cosine_topk_batch respects
-    custom column names, k, and self-exclusion."""
+    k and self-exclusion."""
     from prueba_tecnica_analista_etl_spark.operators.similarity import (
         cosine_topk,
         cosine_topk_batch,
@@ -891,36 +888,25 @@ def test_similarity_operators_generic_api(spark, sf_dir):
         (r["vec_id"], r["cos_sim"]) for r in want
     ]
 
-    renamed = emb.select(
-        F.col("vec_id").alias("item"), F.col("embedding").alias("emb")
+    q = emb.filter(F.col("vec_id") < 3).select(
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("qv")
     )
-    q = renamed.filter(F.col("item") < 3).select(
-        F.col("item").alias("which"), F.col("emb").alias("v")
-    )
-    batch = cosine_topk_batch(
-        renamed,
-        q,
-        k=2,
-        id_col="item",
-        vec_col="emb",
-        query_id_col="which",
-        query_vec_col="v",
-    ).collect()
-    assert {r["which"] for r in batch} == {0, 1, 2}
+    batch = cosine_topk_batch(emb, q, k=2).collect()
+    assert {r["q_id"] for r in batch} == {0, 1, 2}
     for r in batch:
-        assert r["item"] != r["which"]  # self excluded
+        assert r["vec_id"] != r["q_id"]  # self excluded
     per_q = {}
     for r in batch:
-        per_q.setdefault(r["which"], []).append(r["cos_sim"])
+        per_q.setdefault(r["q_id"], []).append(r["cos_sim"])
     assert all(len(v) == 2 and v == sorted(v, reverse=True)
                for v in per_q.values())
 
 
 def test_simhash_and_ngram_pair_frames_generic_api(spark):
-    """The remaining LSH families' DataFrame-first operators accept
-    caller-named columns and thresholds: a planted near-identical pair
-    surfaces from both, an unrelated row pairs with neither, and
-    simhash's hamming bound is honored."""
+    """The remaining LSH families' DataFrame-first operators over any
+    (doc_id, text) frame: a planted near-identical pair surfaces from
+    both, an unrelated row pairs with neither, and simhash's hamming
+    bound is honored."""
     from prueba_tecnica_analista_etl_spark.plans.extensions_scale import (
         ngram_pair_frame,
         simhash_pair_frame,
@@ -937,17 +923,13 @@ def test_simhash_and_ngram_pair_frames_generic_api(spark):
             (8, base + " extra"),
             (9, "unrelated totally different text with other words"),
         ],
-        "item long, body string",
+        "doc_id long, text string",
     )
-    sim = simhash_pair_frame(
-        corpus, id_col="item", text_col="body", max_hamming=8
-    ).collect()
+    sim = simhash_pair_frame(corpus).collect()
     assert {(r["doc_a"], r["doc_b"]) for r in sim} == {(7, 8)}
     assert all(r["hamming"] <= 8 for r in sim)
 
-    ng = ngram_pair_frame(
-        corpus, id_col="item", text_col="body"
-    ).collect()
+    ng = ngram_pair_frame(corpus).collect()
     assert {(r["doc_a"], r["doc_b"]) for r in ng} == {(7, 8)}
     assert all(r["jaccard_sim"] > 0.5 for r in ng)
 
@@ -971,66 +953,6 @@ def test_lsh_recall_audit_invariants(spark, sf_dir):
     # fixture may legitimately carry a few mid-band (0.5-0.9) pairs
     # the 4x3 banding can miss, so pin high recall, not perfection.
     assert row["recall"] >= 0.9
-    assert row["truth_fraction"] == 1.0
-
-
-def test_lsh_truth_fraction_post_import_mutation_warns(
-    spark, sf_dir, monkeypatch
-):
-    """SPARK_GRAFT_LSH_TRUTH_FRACTION is snapshotted at
-    import of the plans module (so the engine and its generated
-    oracle cannot diverge within a process); a caller who mutates the
-    env AFTER import must get a loud warning at query-build time, not
-    a silently-ignored opt-in."""
-    import warnings
-
-    from prueba_tecnica_analista_etl_spark.plans.extensions_scale import (
-        LSH_TRUTH_FRACTION,
-        q_lsh_recall,
-    )
-
-    assert LSH_TRUTH_FRACTION == 1.0  # tests never set the knob
-    monkeypatch.setenv("SPARK_GRAFT_LSH_TRUTH_FRACTION", "0.25")
-    with pytest.warns(UserWarning, match="IMPORT-TIME"):
-        frame = q_lsh_recall(spark, sf_dir)
-    # the snapshot, not the mutated env, governs the built plan
-    assert frame.collect()[0]["truth_fraction"] == 1.0
-    monkeypatch.delenv("SPARK_GRAFT_LSH_TRUTH_FRACTION")
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")
-        q_lsh_recall(spark, sf_dir)
-
-
-def test_lsh_recall_sampled_truth_agrees_with_exact(spark, sf_dir):
-    """The 100 TB mode: restricting the
-    exhaustive-truth tier to a deterministic half of the documents
-    must (a) shrink the census — sampled n_true strictly below the
-    exact census's on any corpus with >= a handful of true pairs —
-    and (b) estimate the same recall: uniform doc sampling keeps each
-    true pair with probability fraction² independently of its
-    found-status, so sampled recall is unbiased. The harness corpus's
-    true pairs are dominated by jaccard≈1 families recalled at ~1.0,
-    so the sampled estimate must land within a loose absolute band of
-    the exact number (the estimator's variance at ~25% of pairs),
-    and the fraction must be stamped on the row."""
-    from prueba_tecnica_analista_etl_spark.plans.extensions_scale import (
-        lsh_recall_frame,
-    )
-
-    exact = lsh_recall_frame(spark, sf_dir).collect()[0]
-    sampled = lsh_recall_frame(
-        spark, sf_dir, truth_sample_fraction=0.5
-    ).collect()[0]
-    assert sampled["truth_fraction"] == 0.5
-    assert 0 < sampled["n_true"] < exact["n_true"]
-    assert sampled["n_found"] <= sampled["n_true"]
-    assert abs(sampled["recall"] - exact["recall"]) <= 0.1
-    # determinism: the md5-threshold membership draw is a pure
-    # function of doc_id, so the sampled census is bit-stable.
-    again = lsh_recall_frame(
-        spark, sf_dir, truth_sample_fraction=0.5
-    ).collect()[0]
-    assert again == sampled
 
 
 def test_ann_recall_audit_invariants(spark, sf_dir):
@@ -1062,9 +984,10 @@ def test_ann_recall_audit_invariants(spark, sf_dir):
     # The IVF tier must audit the ON-DISK index:
     # its scan's cluster predicate is a PARTITION filter (directory
     # pruning), not a post-scan data filter. q_ann_recall stages the
-    # swept top-10 frame per corpus, which erases the scan from
-    # ITS plan — so pin the LIVE sweep construction the staging
-    # builds from (ann_sweep_parts is that single source of truth).
+    # census built from the swept top-10 frame per corpus, which
+    # erases the scan from ITS plan — so pin the LIVE sweep
+    # construction the staging builds from (ann_sweep_parts is that
+    # single source of truth).
     live_top = ann_sweep_parts(spark, sf_dir)[1]
     plan = live_top._jdf.queryExecution().executedPlan().toString()
     pfs = [
@@ -1207,7 +1130,7 @@ def test_sign_words_matches_sign_bits_and_validates(spark):
         [(i, [float(j % 7) - 3.0 + i * 0.1 for j in range(64)]) for i in range(5)],
         "id long, v array<double>",
     )
-    planes16 = random_hyperplanes(16, 64, seed=42)
+    planes16 = random_hyperplanes(16, 64)
     both = vecs.select(
         sign_bits(F.col("v"), planes16).alias("b"),
         sign_words(F.col("v"), planes16, 32).alias("w"),
@@ -1215,7 +1138,7 @@ def test_sign_words_matches_sign_bits_and_validates(spark):
     for r in both:
         assert len(r["w"]) == 1 and r["w"][0] == r["b"]
 
-    planes128 = random_hyperplanes(128, 64, seed=42)
+    planes128 = random_hyperplanes(128, 64)
     words = vecs.select(
         sign_words(F.col("v"), planes128, 32).alias("w")
     ).collect()
@@ -1434,7 +1357,8 @@ def test_stream_neardup_equals_batch_greedy_fixpoint(spark, sf_dir):
     )
     from prueba_tecnica_analista_etl_spark.plans.extensions_scale import (
         STREAM_NEARDUP_UNROLL,
-        minhash_pair_frame,
+        minhash_band_frame,
+        pairs_from_band_frame,
     )
 
     got = {
@@ -1446,7 +1370,7 @@ def test_stream_neardup_equals_batch_greedy_fixpoint(spark, sf_dir):
     # bucket (the at-rest tiers' skew chunking is an output-bounding
     # device the gate deliberately does not inherit)
     surv, audit = near_dup_purge_stable(
-        docs, minhash_pair_frame(docs, cap=None)
+        docs, pairs_from_band_frame(minhash_band_frame(docs), cap=None)
     )
     want = {r["doc_id"] for r in surv.select("doc_id").collect()}
     assert got == want
@@ -1464,7 +1388,9 @@ def test_stream_neardup_equals_batch_greedy_fixpoint(spark, sf_dir):
     assert again == got
 
 
-def test_stream_neardup_index_compaction_long_replay(spark, tmp_path):
+def test_stream_neardup_index_compaction_long_replay(
+    spark, tmp_path, monkeypatch
+):
     """Long-replay compaction gate: 24
     micro-batches through foreach_batch_neardup_gate must keep the
     index's unit-directory count BOUNDED (folds into gen-* past
@@ -1484,7 +1410,6 @@ def test_stream_neardup_index_compaction_long_replay(spark, tmp_path):
     )
     from prueba_tecnica_analista_etl_spark.plans.extensions_scale import (
         minhash_band_frame,
-        minhash_pair_frame,
         pairs_from_band_frame,
     )
     from prueba_tecnica_analista_etl_spark.streaming.neardup import (
@@ -1519,6 +1444,7 @@ def test_stream_neardup_index_compaction_long_replay(spark, tmp_path):
         pairs_from_bands=lambda banded, thr: pairs_from_band_frame(
             banded, threshold=thr, cap=None
         ),
+        threshold=MINHASH_JACCARD_T,
     )
     from prueba_tecnica_analista_etl_spark.streaming.neardup import (
         COMPACT_MAX_GENS,
@@ -1549,7 +1475,7 @@ def test_stream_neardup_index_compaction_long_replay(spark, tmp_path):
     for b in range(1, n_batches):
         corpus = corpus.unionByName(doc_batch(b))
     surv, _ = near_dup_purge_stable(
-        corpus, minhash_pair_frame(corpus, cap=None)
+        corpus, pairs_from_band_frame(minhash_band_frame(corpus), cap=None)
     )
     want = {r["doc_id"] for r in surv.select("doc_id").collect()}
     assert got == want
@@ -1572,6 +1498,7 @@ def test_stream_neardup_index_compaction_long_replay(spark, tmp_path):
         r["doc_id"] for r in accepted_ids(spark, index_dir).collect()
     }
     assert dup_read == got
+    from prueba_tecnica_analista_etl_spark.streaming import neardup
     from prueba_tecnica_analista_etl_spark.streaming.neardup import (
         compact_index,
     )
@@ -1579,7 +1506,9 @@ def test_stream_neardup_index_compaction_long_replay(spark, tmp_path):
     # tier 1 (fold loose batches incl. the clone) + tier 2 (merge the
     # accumulated generations down to one) in a single tight-threshold
     # call — both fold paths execute, accepted set byte-identical
-    assert compact_index(spark, index_dir, max_units=1, max_gens=1)
+    monkeypatch.setattr(neardup, "COMPACT_MAX_UNITS", 1)
+    monkeypatch.setattr(neardup, "COMPACT_MAX_GENS", 1)
+    assert compact_index(spark, index_dir)
     healed = {
         r["doc_id"] for r in accepted_ids(spark, index_dir).collect()
     }
@@ -1588,7 +1517,7 @@ def test_stream_neardup_index_compaction_long_replay(spark, tmp_path):
     # a replayed batch id stays a committed no-op behind the merged
     # generation, and the set survives one more degenerate compaction
     gate(doc_batch(0), 0)
-    assert not compact_index(spark, index_dir, max_units=1, max_gens=1)
+    assert not compact_index(spark, index_dir)
     assert {
         r["doc_id"] for r in accepted_ids(spark, index_dir).collect()
     } == got
@@ -1690,7 +1619,9 @@ def test_unicode_normalize_parity_on_mixed_corpus(spark, tmp_path):
     assert "RLIKE" in arrow_subtree or "rlike" in arrow_subtree, plan
 
 
-def test_fold_units_retry_after_crash_lands_next_seq(spark, tmp_path):
+def test_fold_units_retry_after_crash_lands_next_seq(
+    spark, tmp_path, monkeypatch
+):
     """A fold that crashed BETWEEN the generation rename
     and the folded batch dirs' removal must, on retry, land at the
     NEXT free sequence for that generation id (not re-target the
@@ -1700,6 +1631,7 @@ def test_fold_units_retry_after_crash_lands_next_seq(spark, tmp_path):
     fold removed the unit dirs it scanned."""
     import os
 
+    from prueba_tecnica_analista_etl_spark.streaming import neardup
     from prueba_tecnica_analista_etl_spark.streaming.neardup import (
         _committed,
         _fold_units,
@@ -1737,7 +1669,9 @@ def test_fold_units_retry_after_crash_lands_next_seq(spark, tmp_path):
     assert got == {0, 1, 2, 3}
     # tier-2 merge removes both generation dirs; the held snapshot
     # must still collect (the lazy form threw FileNotFound here)
-    assert compact_index(spark, index_dir, max_units=1, max_gens=1)
+    monkeypatch.setattr(neardup, "COMPACT_MAX_UNITS", 1)
+    monkeypatch.setattr(neardup, "COMPACT_MAX_GENS", 1)
+    assert compact_index(spark, index_dir)
     assert len(_committed(index_dir)) == 1
     assert {r["doc_id"] for r in held.collect()} == {0, 1, 2, 3}
 
@@ -1770,6 +1704,7 @@ def test_gate_index_probe_partition_pruning(spark, tmp_path):
         pairs_from_bands=lambda b, t: pairs_from_band_frame(
             b, threshold=t, cap=None
         ),
+        threshold=MINHASH_JACCARD_T,
     )
     docs = spark.createDataFrame(
         [
@@ -2111,7 +2046,7 @@ def test_dup_spans_planted_shared_run(spark, tmp_path):
 
 
 def test_ivf_append_preserves_search_and_drift_triggers_rebalance(
-    spark, sf_dir, tmp_path
+    spark, sf_dir, tmp_path, monkeypatch
 ):
     """IVF index maintenance: (1) incremental adds go
     through the SAME sidecar model, so search over an index built-then-
@@ -2125,6 +2060,7 @@ def test_ivf_append_preserves_search_and_drift_triggers_rebalance(
     import glob
     import os
 
+    from prueba_tecnica_analista_etl_spark.operators import ivf_index
     from prueba_tecnica_analista_etl_spark.operators.ivf_index import (
         DATA,
         ivf_append,
@@ -2205,15 +2141,16 @@ def test_ivf_append_preserves_search_and_drift_triggers_rebalance(
         "vec_id long, embedding array<float>",
     )
     ivf_append(junk, inc)
-    drifted = ivf_drift_census(spark, inc, refit_drift=0.01)
+    monkeypatch.setattr(ivf_index, "REFIT_DRIFT", 0.01)
+    drifted = ivf_drift_census(spark, inc)
     assert drifted["rows"] == n_all + 300
     assert drifted["drift"] > 0.01
     assert drifted["refit_recommended"]
 
     # rebalance: re-fit on current contents, staged swap, zero row
     # loss, drift baseline reset to ~0
-    ivf_rebalance(spark, inc, k=k, iters=2)
-    after = ivf_drift_census(spark, inc, refit_drift=0.01)
+    ivf_rebalance(spark, inc, k=k)
+    after = ivf_drift_census(spark, inc)
     assert after["rows"] == n_all + 300
     assert abs(after["drift"]) < 1e-9  # fresh baseline == fresh census
     assert sorted(os.listdir(tmp_path)) == ["ivf_inc", "ivf_oneshot"], (

@@ -22,7 +22,7 @@ def test_csv_roundtrip_single_file(spark, sf_dir, tmp_path):
     """S6: header'd CSV export then re-read reproduces the data."""
     nation = load_table(spark, sf_dir, "nation")
     out = str(tmp_path / "nation_csv")
-    write_csv(nation, out, single_file=True)
+    write_csv(nation, out)
     back = (
         spark.read.option("header", True)
         .schema(nation.schema)
@@ -589,13 +589,10 @@ def test_zorder_write_fractional_span_and_errors(spark, tmp_path):
     """A double column with a sub-1.0 range must still scale INSIDE
     [0, 2^bits): with integer-truncated span the max value would fold
     into a mid-range z-key (zvalue drops bits >= bits_per_col) and
-    silently break clustering. All-NULL columns and bad period/stage
-    arguments raise clearly instead of crashing downstream."""
+    silently break clustering. All-NULL columns raise clearly instead
+    of crashing downstream."""
     import pytest as _pytest
 
-    from prueba_tecnica_analista_etl_spark.operators.events import (
-        cohort_retention,
-    )
     from prueba_tecnica_analista_etl_spark.sources.files import (
         zorder_write,
     )
@@ -631,8 +628,6 @@ def test_zorder_write_fractional_span_and_errors(spark, tmp_path):
     )
     with _pytest.raises(ValueError):
         zorder_write(allnull, ["a", "id"], str(tmp_path / "zn"), n_files=2)
-    with _pytest.raises(ValueError):
-        cohort_retention(df.selectExpr("id AS user_id"), period_days=0)
 
 
 def test_jdbc_roundtrip_against_embedded_derby(spark, sf_dir, tmp_path):
@@ -684,8 +679,7 @@ def test_export_training_shards_roundtrip_and_manifest(
     """Export contract: every input row lands in exactly one shard,
     shard membership is a pure function of the key (re-export after an
     arbitrary repartition is byte-stable), the manifest's counts/
-    token totals/checksums all validate, and n_shards sizing from a
-    row target works."""
+    token totals/checksums all validate."""
     from prueba_tecnica_analista_etl_spark.sources.export import (
         export_training_shards,
         verify_training_shards,
@@ -696,15 +690,13 @@ def test_export_training_shards_roundtrip_and_manifest(
         "n_tok", F.size(F.split("text", " "))
     )
     path = str(tmp_path / "shards")
-    manifest = export_training_shards(
-        docs, path, "doc_id", n_shards=7, token_col="n_tok"
-    )
+    manifest = export_training_shards(docs, path, "doc_id", n_shards=7)
     assert set(manifest) <= set(range(7)) and len(manifest) > 1
     assert sum(m["rows"] for m in manifest.values()) == docs.count()
     assert sum(m["tokens"] for m in manifest.values()) == (
         docs.agg(F.sum("n_tok")).first()[0]
     )
-    assert verify_training_shards(spark, path, token_col="n_tok") == {}
+    assert verify_training_shards(spark, path) == {}
 
     back = spark.read.parquet(path + "/data").drop("shard_id")
     assert sorted(map(tuple, back.collect())) == sorted(
@@ -714,18 +706,9 @@ def test_export_training_shards_roundtrip_and_manifest(
     # determinism: different physical layout, same shards + checksums
     path2 = str(tmp_path / "shards2")
     manifest2 = export_training_shards(
-        docs.repartition(13), path2, "doc_id", n_shards=7,
-        token_col="n_tok",
+        docs.repartition(13), path2, "doc_id", n_shards=7
     )
     assert manifest2 == manifest
-
-    # sizing by target rows
-    path3 = str(tmp_path / "shards3")
-    m3 = export_training_shards(
-        docs, path3, "doc_id", target_rows_per_shard=100
-    )
-    assert len(m3) >= docs.count() // 100
-    assert verify_training_shards(spark, path3) == {}
 
 
 def test_export_training_shards_detects_tampering(spark, sf_dir, tmp_path):
@@ -770,11 +753,10 @@ def test_export_training_shards_detects_tampering(spark, sf_dir, tmp_path):
 def test_export_training_shards_rejects_empty_frame(spark, tmp_path):
     """A zero-row input writes zero part files and would crash
     mid-export on read-back schema inference, stranding a
-    staging dir. Both sizing paths must fail with a clear error and
-    leave NOTHING behind — the target_rows path before any write (its
-    sizing count already proves emptiness), the n_shards path right
-    after the (empty, cheap) write via a file-level check, so the
-    guard never re-runs the upstream lineage."""
+    staging dir. The export must fail with a clear error and leave
+    NOTHING behind — checked right after the (empty, cheap) write via
+    a file-level check, so the guard never re-runs the upstream
+    lineage."""
     import os
 
     import pytest as _pytest
@@ -784,14 +766,13 @@ def test_export_training_shards_rejects_empty_frame(spark, tmp_path):
     )
 
     empty = spark.createDataFrame([], "doc_id long, text string")
-    for kwargs in ({"n_shards": 4}, {"target_rows_per_shard": 100}):
-        path = str(tmp_path / f"empty_{'_'.join(kwargs)}")
-        with _pytest.raises(ValueError, match="empty frame"):
-            export_training_shards(empty, path, "doc_id", **kwargs)
-        assert not os.path.exists(path)
-        assert os.listdir(tmp_path) == [], (
-            "failed export left a dangling staging dir"
-        )
+    path = str(tmp_path / "empty")
+    with _pytest.raises(ValueError, match="empty frame"):
+        export_training_shards(empty, path, "doc_id", n_shards=4)
+    assert not os.path.exists(path)
+    assert os.listdir(tmp_path) == [], (
+        "failed export left a dangling staging dir"
+    )
 
 
 def test_export_checksum_catches_even_multiplicity_swap(spark, tmp_path):
@@ -813,15 +794,15 @@ def test_export_checksum_catches_even_multiplicity_swap(spark, tmp_path):
         [(0, "B"), (0, "B"), (0, "C"), (0, "C")],
         f"{SHARD_COL} int, text string",
     )
-    ca = _shard_stats(a, None)[0]["checksum"]
-    cb = _shard_stats(b, None)[0]["checksum"]
+    ca = _shard_stats(a)[0]["checksum"]
+    cb = _shard_stats(b)[0]["checksum"]
     assert ca != cb, "checksum blind to even-multiplicity row swap"
     # and order-insensitivity still holds
     a_rev = spark.createDataFrame(
         [(0, "C"), (0, "A"), (0, "C"), (0, "A")],
         f"{SHARD_COL} int, text string",
     )
-    assert _shard_stats(a_rev, None)[0]["checksum"] == ca
+    assert _shard_stats(a_rev)[0]["checksum"] == ca
 
 
 def test_versioned_table_commit_timetravel_rollback_vacuum(
@@ -968,12 +949,10 @@ def test_export_training_shards_null_token_sum(spark, tmp_path):
         "id long, text string, n_tok long",
     )
     path = str(tmp_path / "shards")
-    manifest = export_training_shards(
-        df, path, "id", n_shards=3, token_col="n_tok"
-    )
+    manifest = export_training_shards(df, path, "id", n_shards=3)
     assert sum(m["rows"] for m in manifest.values()) == 20
     assert all("tokens" not in m for m in manifest.values())
-    assert verify_training_shards(spark, path, token_col="n_tok") == {}
+    assert verify_training_shards(spark, path) == {}
 
 
 def test_versioned_snapshots_feed_cdc_generation(spark, sf_dir, tmp_path):
@@ -1143,60 +1122,6 @@ def test_export_verify_accepts_pre_marker_manifest(spark, tmp_path):
     )
     os.remove(os.path.join(shard0, part))
     assert 0 in ex.verify_training_shards(spark, path)
-
-
-def test_export_ordered_shards_compose_with_train_order(
-    spark, sf_dir, tmp_path
-):
-    """order_col: every shard's parquet rows come back in ascending
-    order of the seeded global-shuffle position (q_train_order), the
-    shard membership is unchanged vs an unordered export, and the
-    manifest still verifies (the checksum is order-insensitive)."""
-    from pyspark.sql import functions as F
-
-    import prueba_tecnica_analista_etl_spark.sources.export as ex
-    from prueba_tecnica_analista_etl_spark.plans.extensions_distributed import (
-        q_train_order,
-    )
-
-    ordered = q_train_order(spark, sf_dir)
-    path = str(tmp_path / "ordered_shards")
-    ex.export_training_shards(
-        ordered, path, "doc_id", n_shards=4, order_col="position"
-    )
-    assert ex.verify_training_shards(spark, path) == {}
-
-    import glob
-    import os
-
-    for shard_dir in sorted(
-        glob.glob(os.path.join(path, ex.DATA, f"{ex.SHARD_COL}=*"))
-    ):
-        files = sorted(glob.glob(os.path.join(shard_dir, "part-*")))
-        assert len(files) == 1, "a shard split across files breaks read order"
-        rows = spark.read.parquet(shard_dir).collect()
-        # parquet preserves row order within a file; re-reading one
-        # file yields write order
-        positions = [r["position"] for r in rows]
-        assert positions == sorted(positions), shard_dir
-
-    # membership is the hash of doc_id — independent of ordering
-    plain = str(tmp_path / "plain_shards")
-    ex.export_training_shards(ordered, plain, "doc_id", n_shards=4)
-    for sid in range(4):
-        a = {
-            r["doc_id"]
-            for r in spark.read.parquet(
-                os.path.join(path, ex.DATA, f"{ex.SHARD_COL}={sid}")
-            ).collect()
-        }
-        b = {
-            r["doc_id"]
-            for r in spark.read.parquet(
-                os.path.join(plain, ex.DATA, f"{ex.SHARD_COL}={sid}")
-            ).collect()
-        }
-        assert a == b
 
 
 def test_bucketed_join_is_shuffle_free(spark, tmp_path):

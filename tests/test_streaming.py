@@ -36,7 +36,7 @@ def test_tumbling_batch_stream_parity(spark, sf_dir):
     watermark finalized. Append mode withholds windows whose end is
     past the final watermark (= max event time with a 0s delay) — i.e.
     exactly the hour containing the last event; assert that precisely."""
-    data_dir, schema = write_replay_files(spark, sf_dir, "events", 4)
+    data_dir, schema = write_replay_files(spark, sf_dir, "events")
     stream = replay_as_stream(spark, data_dir, schema, 1)
     got = run_available_now(tumbling_counts(stream, "0 seconds"), spark)
 
@@ -54,7 +54,7 @@ def test_tumbling_batch_stream_parity(spark, sf_dir):
 def test_foreach_batch_upsert_idempotent(spark, sf_dir, tmp_path):
     target = str(tmp_path / "target")
     ev = load_table(spark, sf_dir, "events")
-    data_dir, schema = write_replay_files(spark, sf_dir, "events", 4)
+    data_dir, schema = write_replay_files(spark, sf_dir, "events")
     stream = replay_as_stream(spark, data_dir, schema, 2)
     # NOT a vacuous rule: null_user alone matches zero rows at
     # sf0.001, which would leave the DLQ branch untested; the modulus
@@ -320,7 +320,7 @@ def test_stream_dedupe_exactly_once(spark, sf_dir):
     assert out.select("event_id").distinct().count() == n
 
     # the overlap is real: raw landing rows exceed distinct events
-    data_dir, schema = write_overlapping_replay(spark, sf_dir, "events")
+    data_dir, schema = write_overlapping_replay(spark, sf_dir)
     raw = spark.read.schema(schema).parquet(data_dir).count()
     assert raw > n
 
@@ -593,7 +593,7 @@ def test_incremental_etl_end_to_end_resume(
         read_control,
     )
 
-    full_dir, schema = write_replay_files(spark, sf_dir, "events", 4)
+    full_dir, schema = write_replay_files(spark, sf_dir, "events")
     landing = str(tmp_path / "landing")
     os.makedirs(landing)
     target = str(tmp_path / "target")
@@ -816,16 +816,15 @@ def test_dedupe_stream_exact_above_2_53_with_nulls(spark, tmp_path):
 
 def _attribution_streams(spark, sf_dir, max_files=2):
     """Click and purchase sub-streams of the events table as two
-    independent file-replay sources."""
-    c_dir, c_schema = write_replay_files(
-        spark, sf_dir, "events", 4, where="event_type = 'click'"
-    )
-    p_dir, p_schema = write_replay_files(
-        spark, sf_dir, "events", 4, where="event_type = 'purchase'"
-    )
+    independent file-replay sources over one landing dir."""
+    data_dir, schema = write_replay_files(spark, sf_dir, "events")
     return (
-        replay_as_stream(spark, c_dir, c_schema, max_files),
-        replay_as_stream(spark, p_dir, p_schema, max_files),
+        replay_as_stream(spark, data_dir, schema, max_files).filter(
+            "event_type = 'click'"
+        ),
+        replay_as_stream(spark, data_dir, schema, max_files).filter(
+            "event_type = 'purchase'"
+        ),
     )
 
 
@@ -957,7 +956,7 @@ def test_stream_static_enrichment(spark, sf_dir):
         enrich_with_dim,
     )
 
-    data_dir, schema = write_replay_files(spark, sf_dir, "events", 4)
+    data_dir, schema = write_replay_files(spark, sf_dir, "events")
     stream = replay_as_stream(spark, data_dir, schema, 2)
     # Even-keyed dim only, so odd-user_id events are GUARANTEED
     # unmatched — the null-extension assertions below cannot pass
@@ -989,8 +988,9 @@ def test_stream_static_enrichment(spark, sf_dir):
 def test_cdc_apply_operator_semantics(spark):
     """cdc_apply unit semantics: update, insert, delete, delete of an
     absent key (no-op), delete-then-reinsert inside one log (last op
-    wins under the order), and the idempotent fixpoint (re-applying
-    the same log changes nothing)."""
+    wins once the log is compacted under the order), and the
+    idempotent fixpoint (re-applying the same log changes nothing)."""
+    from prueba_tecnica_analista_etl_spark.operators.dedupe import keep_first
     from prueba_tecnica_analista_etl_spark.operators.upsert import (
         cdc_apply,
     )
@@ -1009,17 +1009,17 @@ def test_cdc_apply_operator_semantics(spark):
         ],
         "k long, v string, op string, seq long",
     )
-    order = [F.desc("seq"), F.desc("op")]
-    out = cdc_apply(base, log.select("k", "v", "op", "seq"), ["k"],
-                    order=order)
+    log = keep_first(
+        log.select("k", "v", "op", "seq"), ["k"], [F.desc("seq"), F.desc("op")]
+    )
+    out = cdc_apply(base, log, ["k"])
     got = {r["k"]: r["v"] for r in out.collect()}
     assert got == {2: "b2", 3: "c", 5: "e"}
 
     again = cdc_apply(
         spark.createDataFrame(list(got.items()), "k long, v string"),
-        log.select("k", "v", "op", "seq"),
+        log,
         ["k"],
-        order=order,
     )
     assert {r["k"]: r["v"] for r in again.collect()} == got
 
@@ -1086,7 +1086,7 @@ def test_streaming_cdc_sink_applies_deletes(spark, sf_dir, tmp_path):
 def test_streaming_cdc_sink_first_batch_null_op(spark, tmp_path):
     """Regression: a NULL-op row arriving in the FIRST batch
     (target not born yet) must be kept as an upsert — the old
-    `op != delete_value` filter evaluated NULL and silently dropped
+    `op != "D"` filter evaluated NULL and silently dropped
     it, while the same row in any later batch survived via
     cdc_apply's eqNullSafe path. First-batch and later-batch
     semantics must agree."""
@@ -1230,7 +1230,6 @@ def test_out_of_order_replay_routes_late_rows_to_dlq(
             spark,
             sf_dir,
             "events",
-            n_files=4,
             base_dir=str(tmp_path / name),
             arrival_order=order,
         )
@@ -1300,7 +1299,7 @@ def test_run_available_now_cached_sink_resumes_incrementally(
     )
 
     data_dir, schema = write_replay_files(
-        spark, sf_dir, "events", n_files=4,
+        spark, sf_dir, "events",
         base_dir=str(tmp_path / "landing"),
     )
     state_dir = str(tmp_path / "sink")
@@ -1349,7 +1348,7 @@ def test_mg_stream_accumulator_matches_batch_heavy_hitters(
 
     capacity = 8
     data_dir, schema = write_replay_files(
-        spark, sf_dir, "events", n_files=4,
+        spark, sf_dir, "events",
         base_dir=str(tmp_path / "landing"),
     )
     acc = MGStreamAccumulator("event_type", capacity=capacity)
@@ -1456,7 +1455,7 @@ def test_mg_stream_ledger_survives_kill_restart(spark, sf_dir, tmp_path):
 
     capacity = 8
     data_dir, schema = write_replay_files(
-        spark, sf_dir, "events", n_files=4,
+        spark, sf_dir, "events",
         base_dir=str(tmp_path / "landing"),
     )
     ledger = str(tmp_path / "ledger")
@@ -1553,10 +1552,10 @@ def test_replay_dir_survives_bare_clear_artifacts(
     shutil.copy(os.path.join(sf_dir, "events.parquet"), corpus)
     sf = str(corpus)
 
-    first, _ = write_replay_files(spark, sf, "events", 2)
+    first, _ = write_replay_files(spark, sf, "events")
     assert os.path.isdir(first)
     clear_artifacts()
-    data_dir, schema = write_replay_files(spark, sf, "events", 2)
+    data_dir, schema = write_replay_files(spark, sf, "events")
     assert os.path.isdir(data_dir)
     out = run_available_now(replay_as_stream(spark, data_dir, schema), spark)
     assert out.count() == load_table(spark, sf, "events").count() > 0

@@ -16,7 +16,6 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-os.environ.setdefault("SPARK_GRAFT_LSH_TRUTH_FRACTION", "0.5")
 
 args = [a for a in sys.argv[1:] if not a.startswith("--")]
 trials = next(

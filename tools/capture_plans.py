@@ -25,8 +25,6 @@ TAG = sys.argv[2] if len(sys.argv) > 2 else "before"
 SF_DIR = sys.argv[3] if len(sys.argv) > 3 else "/root/testdata/sf0.1"
 os.makedirs(OUT_DIR, exist_ok=True)
 
-os.environ.setdefault("SPARK_GRAFT_LSH_TRUTH_FRACTION", "0.5")
-
 from prueba_tecnica_analista_etl_spark.plans import REGISTRY
 from prueba_tecnica_analista_etl_spark.session import get_spark
 

@@ -17,7 +17,6 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-os.environ.setdefault("SPARK_GRAFT_LSH_TRUTH_FRACTION", "0.5")
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata_synth/sf1"
 
