@@ -57,7 +57,6 @@ def single() -> None:
     # measures steady state while a cold-store trial 1 includes the
     # one-time builds; the flag makes the payload self-describing).
     from prueba_tecnica_analista_etl_spark.artifacts import (
-        _corpus_fingerprint,
         _corpus_tag,
         artifact_root,
     )
@@ -65,7 +64,6 @@ def single() -> None:
     store_warm = os.path.isdir(
         os.path.join(artifact_root(), _corpus_tag(sf_dir))
     )
-    _corpus_fingerprint(sf_dir)  # prime the TTL memo before the pass
     spark = get_spark(app_name="bench")
 
     # Full warm-up pass: JVM classloading + JIT + codegen caches, not

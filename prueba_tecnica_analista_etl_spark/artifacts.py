@@ -22,11 +22,6 @@ Staging and aside entries are named ``.<name>.staging-<id>`` and
 path filter skip them, so a swap inside a partitioned table root is
 never discovered as a bogus partition.
 
-The same three functions keep the corpus fingerprint memo honest:
-each one drops the memo for any corpus containing what it changed, so
-no engine write can hide inside the memo's TTL. Invalidation is part
-of the write, not a step callers must remember.
-
 The store. Curation pipelines share intermediates (the candidate-pair
 frame, the trained IVF quantizer, per-doc score frames, census values)
 that are pure functions of a corpus. Rebuilding them per consumer or
@@ -49,8 +44,9 @@ publish is atomic, so a reader never sees a half-written artifact.
 Keying is what makes silent staleness impossible. A generation lives
 at ``<root>/<corpus-tag>/<name>-<gen>/``, where ``gen`` folds together
 
-* a fingerprint of the corpus (every file's path, size and mtime), so
-  a corpus regenerated under the same path misses; and
+* a fingerprint of the corpus (every file's path, size, mtime and
+  ctime), taken afresh at every lookup, so a corpus appended to or
+  regenerated under the same path misses at once, by any writer; and
 * a digest of this package's ``*.py`` sources, so an artifact built by
   different engine code misses — no hand-kept version to forget.
 
@@ -144,24 +140,12 @@ _MISS = object()
 # corpora in this process; `bench.py --price-builds` reports it.
 BUILD_SECONDS: dict[str, float] = {}
 
-# The walk+stat is O(files) per lookup, and one bench pass issues
-# hundreds of lookups against an unchanging corpus, so the fingerprint
-# is memoized briefly. publish/replace/recover drop it as part of every
-# write, so the window never spans the engine's own writes.
-_FP_TTL_S = 2.0
-_FP_MEMO: dict[str, tuple[float, int]] = {}
-
 
 def _corpus_fingerprint(sf_dir: str) -> int:
-    """CRC over every file's (relative path, size, mtime_ns) under
-    ``sf_dir``: O(files) stat calls, no data reads, memoized for
-    ``_FP_TTL_S`` seconds. An external writer that rewrites a corpus
-    within that window must call :func:`clear_artifacts`."""
-    now = time.monotonic()
-    with _LOCK:
-        hit = _FP_MEMO.get(sf_dir)
-        if hit is not None and now - hit[0] < _FP_TTL_S:
-            return hit[1]
+    """CRC over every file's (relative path, size, mtime_ns, ctime_ns)
+    under ``sf_dir``: O(files) stat calls, no data reads. The ctime
+    changes on any write or ``utime``, so a rewrite that restores size
+    and mtime still changes the key."""
     crc = 0
     for root, dirs, files in os.walk(sf_dir):
         dirs.sort()
@@ -171,26 +155,12 @@ def _corpus_fingerprint(sf_dir: str) -> int:
                 st = os.stat(p)
             except OSError:
                 continue
-            rec = f"{os.path.relpath(p, sf_dir)}:{st.st_size}:{st.st_mtime_ns}"
+            rec = (
+                f"{os.path.relpath(p, sf_dir)}:{st.st_size}:"
+                f"{st.st_mtime_ns}:{st.st_ctime_ns}"
+            )
             crc = zlib.crc32(rec.encode(), crc)
-    with _LOCK:
-        _FP_MEMO[sf_dir] = (now, crc)
     return crc
-
-
-def _invalidate_corpus(path: str) -> None:
-    """Drop the fingerprint memo for any corpus containing, equal to or
-    contained in ``path``, so the next lookup re-walks and misses."""
-    ap = os.path.abspath(path)
-    with _LOCK:
-        for k in [
-            k
-            for k in _FP_MEMO
-            if os.path.abspath(k) == ap
-            or ap.startswith(os.path.abspath(k) + os.sep)
-            or os.path.abspath(k).startswith(ap + os.sep)
-        ]:
-            _FP_MEMO.pop(k, None)
 
 
 # ---------------------------------------------------------------- disk
@@ -342,7 +312,6 @@ def publish(final: str, fill: Callable[[str], None]) -> bool:
         os.rename(tmp, final)
     except OSError:
         shutil.rmtree(tmp, ignore_errors=True)
-    _invalidate_corpus(final)
     return os.path.isdir(final)
 
 
@@ -353,16 +322,13 @@ def replace(live: str, staged: str) -> None:
     a crash at any point leaves the live or the aside copy, which
     :func:`recover` restores. A file is renamed over ``live`` in one
     atomic step."""
-    try:
-        if os.path.isdir(staged) and os.path.exists(live):
-            aside = _beside(live, "aside")
-            os.rename(live, aside)
-            os.rename(staged, live)
-            shutil.rmtree(aside)
-        else:
-            os.replace(staged, live)
-    finally:
-        _invalidate_corpus(live)
+    if os.path.isdir(staged) and os.path.exists(live):
+        aside = _beside(live, "aside")
+        os.rename(live, aside)
+        os.rename(staged, live)
+        shutil.rmtree(aside)
+    else:
+        os.replace(staged, live)
 
 
 def recover(path: str) -> None:
@@ -370,8 +336,7 @@ def recover(path: str) -> None:
     ``path`` or directly inside it: restore a live entry that is missing
     but has an aside copy, and delete every other staging and aside
     entry. Call before rewriting ``path``, under the same single-writer
-    discipline as the rewrite itself. Also drops the fingerprint memo
-    for ``path``, so deletes made under it just before are seen."""
+    discipline as the rewrite itself."""
     path = os.path.normpath(path)
     parent, name = os.path.split(path)
     # path's own entries first: a restored path is then listed below
@@ -391,7 +356,6 @@ def recover(path: str) -> None:
                 shutil.rmtree(side, ignore_errors=True)
             else:
                 os.unlink(side)
-    _invalidate_corpus(path)
 
 
 # ---------------------------------------------------------- build once
@@ -568,15 +532,14 @@ def artifact_directory(
     return _build_once(None, sf_dir, f"dir:{name}", read, make)
 
 
-# -------------------------------------------------------- invalidation
+# ------------------------------------------------------------ clearing
 
 
 def clear_artifacts(
     spark: SparkSession | None = None, name: str | None = None
 ) -> None:
     """Drop memoized artifacts: all of them, one session's, one
-    artifact name's, or the intersection. The explicit invalidation
-    path for callers that rewrite a corpus under the same directory.
+    artifact name's, or the intersection.
 
     Disk scope: a name-scoped clear also removes that artifact's
     persisted generations (it means "this artifact's definition is
@@ -585,7 +548,6 @@ def clear_artifacts(
     so clearing one session does not force other processes to rebuild."""
     stems = None if name is None else {name, f"census:{name}", f"dir:{name}"}
     with _LOCK:
-        _FP_MEMO.clear()
         for s in [spark] if spark is not None else list(_SESSIONS):
             memo = getattr(s, _MEMO_ATTR, {})
             for slot in [k for k in memo if stems is None or k[1] in stems]:

@@ -620,12 +620,7 @@ def _unigram_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     one row per doc, the ideal staged-artifact shape, so the two
     consumers pay the tokenize/tf/vocab pipeline once per corpus, not
     once each (the cached_minhash_pairs pattern; building the first
-    consumer's plan therefore runs Spark jobs eagerly). Staleness
-    contract: a caller that REWRITES the corpus under the same sf_dir
-    must call ``artifacts.clear_artifacts(spark,
-    name="unigram_scored")`` (or clear the whole store) — otherwise
-    both consumers keep serving the pre-rewrite scores for the
-    session's lifetime, exactly like the pairs artifact."""
+    consumer's plan therefore runs Spark jobs eagerly)."""
     from prueba_tecnica_analista_etl_spark.artifacts import corpus_artifact
 
     return corpus_artifact(
@@ -1424,9 +1419,8 @@ def cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     the connected-components fixpoint is eager (each round runs Spark
     jobs), so every consumer re-deriving it per call would re-pay the
     whole iteration; the cached_minhash_pairs discipline applies —
-    built once per (session, corpus), invalidated by the corpus
-    fingerprint / clear_artifacts. The fixpoint cost stays visible in
-    tests and first-use (bench warm-up)."""
+    built once per corpus generation. The fixpoint cost stays visible
+    in tests and first-use (bench warm-up)."""
     from prueba_tecnica_analista_etl_spark.artifacts import (
         corpus_artifact,
     )

@@ -255,11 +255,21 @@ def capped_pair_array(
     )
 
 
+def shingle_frame(docs: DataFrame) -> DataFrame:
+    """Per-doc 3-token shingle features of a (doc_id, text) frame:
+    ``(doc_id, sh, hs)`` with ``sh`` the distinct shingle strings and
+    ``hs`` their sorted md5_60 hashes — the one input of the near-dup
+    pair and band frames below."""
+    return spread(docs).select(
+        "doc_id",
+        F.array_distinct(shingles(tokens(F.col("text")), 3)).alias("sh"),
+        shingle_hashes(tokens(F.col("text")), 3).alias("hs"),
+    )
+
+
 def doc_shingle_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-doc 3-token shingle features over the ``documents`` corpus,
-    staged ONCE per corpus: ``(doc_id, sh, hs)``
-    with ``sh`` the distinct shingle strings and ``hs`` their sorted
-    md5_60 hashes. The whole near-dup family (minhash, single-band
+    """:func:`shingle_frame` over the ``documents`` corpus, staged ONCE
+    per corpus. The whole near-dup family (minhash, single-band
     n-gram, simhash, the LSH-recall truth side) consumes this one
     artifact instead of each re-running scan→tokenize→shingle→md5 —
     the feature stage is built once per corpus and served from the
@@ -269,23 +279,18 @@ def doc_shingle_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     dataset and fan the near-dup tiers out from it."""
     from prueba_tecnica_analista_etl_spark.artifacts import corpus_artifact
 
-    def build() -> DataFrame:
-        return spread(_t(spark, sf_dir, "documents")).select(
-            "doc_id",
-            F.array_distinct(shingles(tokens(F.col("text")), 3)).alias(
-                "sh"
-            ),
-            shingle_hashes(tokens(F.col("text")), 3).alias("hs"),
-        )
-
-    return corpus_artifact(spark, sf_dir, "doc_shingles_k3", build)
+    return corpus_artifact(
+        spark,
+        sf_dir,
+        "doc_shingles_k3",
+        lambda: shingle_frame(_t(spark, sf_dir, "documents")),
+    )
 
 
-def minhash_band_frame(
-    docs: DataFrame, hashed: DataFrame | None = None
-) -> DataFrame:
-    """Per-doc banded minhash signature frame — ``(doc_id, hs, band,
-    key)`` with one row per (doc, band), ``hs`` the sorted distinct
+def minhash_band_frame(shingled: DataFrame) -> DataFrame:
+    """Per-doc banded minhash signature frame of a
+    :func:`shingle_frame` — ``(doc_id, hs, band, key)`` with one row
+    per (doc, band), ``hs`` the sorted distinct
     md5_60 shingle hashes and ``key`` the band's struct of row minima
     (engine-neutral end-to-end; see MINHASH_P). The shared candidate
     source for :func:`minhash_pair_frame` (all-pairs batch) and the
@@ -293,14 +298,7 @@ def minhash_band_frame(
     the plain (band, key) columns."""
     n_hashes = MINHASH_BANDS * MINHASH_ROWS
     coeffs = _minhash_coeffs(n_hashes)
-    if hashed is not None:
-        # Pre-staged (doc_id, hs) feature frame — the shared
-        # doc_shingle_frame artifact; skips scan→shingle→md5 here.
-        d = hashed.select("doc_id", "hs")
-    else:
-        d = spread(docs).select(
-            "doc_id", shingle_hashes(tokens(F.col("text")), 3).alias("hs")
-        )
+    d = shingled.select("doc_id", "hs")
 
     def _seeded_min(j: int):
         a, b, c = coeffs[j]
@@ -341,11 +339,9 @@ def minhash_band_frame(
     ).select("doc_id", "hs", "bk.band", "bk.key")
 
 
-def minhash_pair_frame(
-    docs: DataFrame, hashed: DataFrame | None = None
-) -> DataFrame:
-    """Banded-minhash near-dup pair detection over a (doc_id, text)
-    DataFrame — the operator behind the ``documents``-table queries
+def minhash_pair_frame(shingled: DataFrame) -> DataFrame:
+    """Banded-minhash near-dup pair detection over a
+    :func:`shingle_frame` — the operator behind the ``documents``-table queries
     (``minhash_pairs`` below is this over the harness table). Emits
     every ordered pair (doc_a < doc_b) with exact Jaccard ≥
     ``MINHASH_JACCARD_T`` over 3-token shingles, candidate-generated
@@ -367,7 +363,7 @@ def minhash_pair_frame(
     struct (not a combiner hash): equality of the struct == equality
     of all ``rows`` minima, and a SQL oracle joins on the plain
     columns — no cross-engine combiner function needed."""
-    return pairs_from_band_frame(minhash_band_frame(docs, hashed=hashed))
+    return pairs_from_band_frame(minhash_band_frame(shingled))
 
 
 def pairs_from_band_frame(
@@ -428,10 +424,7 @@ def minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     this plus an order/limit for reporting; feeding the limited
     top-100 into a purge would let pairs 101+ silently survive
     curation at scale."""
-    return minhash_pair_frame(
-        _t(spark, sf_dir, "documents"),
-        hashed=doc_shingle_frame(spark, sf_dir),
-    )
+    return minhash_pair_frame(doc_shingle_frame(spark, sf_dir))
 
 
 def _minhash_scored_pairs_cte(capped: bool = True) -> str:
@@ -548,34 +541,19 @@ def q_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def ngram_pair_frame(
-    docs: DataFrame, hashed: DataFrame | None = None
-) -> DataFrame:
+def ngram_pair_frame(shingled: DataFrame) -> DataFrame:
     """Single-band min-shingle candidate pairs with exact trigram
-    Jaccard over a (doc_id, text) frame (the operator behind
+    Jaccard over a :func:`shingle_frame` (the operator behind
     ``q_ngram_jaccard``). One bucket per minimum shingle hash —
     cheaper and lower-recall than full banded minhash
     (:func:`minhash_pair_frame`); right for the
     catch-obvious-rewrites tier. Output: (doc_a, doc_b,
     jaccard_sim), uncapped."""
-    if hashed is not None:
-        # Shared doc_shingle_frame artifact: hs is the sorted distinct
-        # md5_60 of exactly these shingles, so array_min(hs) ==
-        # array_min(transform(sh, md5_60)) — same bucket keys, and the
-        # exact-Jaccard re-rank still runs on the shingle STRINGS (the
-        # oracle counts strings, not hashes).
-        d = hashed.select(
-            "doc_id", "sh", F.array_min("hs").alias("minhash")
-        )
-    else:
-        d = spread(docs).select(
-            "doc_id",
-            F.array_distinct(shingles(tokens(F.col("text")), 3)).alias("sh"),
-        )
-        d = d.withColumn(
-            "minhash",
-            F.array_min(F.transform("sh", md5_60)),
-        )
+    # hs is the sorted distinct md5_60 of exactly these shingles, so
+    # array_min(hs) == array_min(transform(sh, md5_60)) — the oracle's
+    # bucket keys — and the exact-Jaccard re-rank still runs on the
+    # shingle STRINGS (the oracle counts strings, not hashes).
+    d = shingled.select("doc_id", "sh", F.array_min("hs").alias("minhash"))
     # Capped-bucket expansion (same machinery as minhash/simhash):
     # collect each min-shingle bucket; oversized buckets sub-split by
     # secondary hash (capped_pair_array). Join input stays O(n),
@@ -669,10 +647,7 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         # consumes; embedded so a shingle-size retune (a new feature
         # artifact) cannot be served a stale pair frame.
         "ngram_jaccard_pairs:k3",
-        lambda: ngram_pair_frame(
-            _t(spark, sf_dir, "documents"),
-            hashed=doc_shingle_frame(spark, sf_dir),
-        ),
+        lambda: ngram_pair_frame(doc_shingle_frame(spark, sf_dir)),
     )
     return pairs.orderBy(
         F.desc("jaccard_sim"), "doc_a", "doc_b"
@@ -689,33 +664,16 @@ BAND_BITS = N_SIMHASH_BITS // N_BANDS
 SIMHASH_MAX_HAMMING = 8
 
 
-def simhash_pair_frame(
-    docs: DataFrame, hashed: DataFrame | None = None
-) -> DataFrame:
-    """Banded-SimHash near-dup pairs over a (doc_id, text) frame (the
+def simhash_pair_frame(shingled: DataFrame) -> DataFrame:
+    """Banded-SimHash near-dup pairs over a :func:`shingle_frame` (the
     operator behind ``q_simhash_dedup``): 64-bit majority signature
     over 3-shingle features, 4×16-bit bands, candidates kept at
     hamming distance ≤ ``SIMHASH_MAX_HAMMING``. Output:
     (doc_a, doc_b, hamming), uncapped."""
-    if hashed is not None:
-        # hs is the distinct md5_60 set of exactly these shingles, and
-        # the bit census is order- and duplicate-set-insensitive, so
-        # simhash64(hs) == simhash64(transform(distinct(sh), md5_60)).
-        sigs = hashed.select("doc_id", simhash64(F.col("hs")).alias("sig"))
-    else:
-        sigs = (
-            spread(docs)
-            .select(
-                "doc_id",
-                F.array_distinct(shingles(tokens(F.col("text")), 3)).alias(
-                    "sh"
-                ),
-            )
-            .select(
-                "doc_id",
-                simhash64(F.transform("sh", md5_60)).alias("sig"),
-            )
-        )
+    # hs is the distinct md5_60 set of exactly these shingles, and the
+    # bit census is order- and duplicate-set-insensitive, so
+    # simhash64(hs) == simhash64(transform(distinct(sh), md5_60)).
+    sigs = shingled.select("doc_id", simhash64(F.col("hs")).alias("sig"))
     # The signature is one long, so it rides along into the buckets —
     # no join-back (and no recomputation of the UDF stage) needed.
     bands = sigs.select(
@@ -828,10 +786,7 @@ def q_simhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir,
         f"simhash_pairs:{N_SIMHASH_BITS}x{N_BANDS}"
         f":h{SIMHASH_MAX_HAMMING}",
-        lambda: simhash_pair_frame(
-            _t(spark, sf_dir, "documents"),
-            hashed=doc_shingle_frame(spark, sf_dir),
-        ),
+        lambda: simhash_pair_frame(doc_shingle_frame(spark, sf_dir)),
     )
     return pairs.orderBy("hamming", "doc_a", "doc_b").limit(100)
 
@@ -1114,6 +1069,7 @@ def q_embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # The SHIPPED IVF operating point (swept by q_ann_recall).
 IVF_K = 16
+IVF_ITERS = 2
 IVF_NPROBE = 4
 
 # The fitted coarse quantizer is a MODEL (k×dim floats), not data:
@@ -1124,17 +1080,11 @@ IVF_NPROBE = 4
 # refit it.
 
 
-def ivf_centroids(
-    spark: SparkSession,
-    sf_dir: str,
-    e: DataFrame,
-    k: int = 16,
-    iters: int = 2,
-):
-    """The staged coarse quantizer for (corpus, k, iters) — shared by
-    every IVF consumer (the q_ann_recall sweep, the on-disk index
-    build), so a sweep over nprobe costs zero refits and a fresh process reloads the model instead of
-    re-fitting."""
+def ivf_centroids(spark: SparkSession, sf_dir: str, e: DataFrame):
+    """The staged coarse quantizer for the corpus — shared by every
+    IVF consumer (the q_ann_recall sweep, the on-disk index build), so
+    a sweep over nprobe costs zero refits and a fresh process reloads
+    the model instead of re-fitting."""
     from prueba_tecnica_analista_etl_spark.artifacts import (
         census_artifact,
     )
@@ -1142,18 +1092,13 @@ def ivf_centroids(
     return census_artifact(
         spark,
         sf_dir,
-        f"ivf_centroids:{k}:{iters}",
-        lambda: ivf_fit(e, "v", "vec_id", k=k, iters=iters),
+        f"ivf_centroids:{IVF_K}:{IVF_ITERS}",
+        lambda: ivf_fit(e, "v", "vec_id", k=IVF_K, iters=IVF_ITERS),
     )
 
 
-def cached_ivf_index(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = 16,
-    iters: int = 2,
-) -> str:
-    """The ON-DISK IVF index for (corpus, k, iters) — built once per CORPUS
+def cached_ivf_index(spark: SparkSession, sf_dir: str) -> str:
+    """The ON-DISK IVF index for the corpus — built once per CORPUS
     into the artifact store and reused by every consumer and process
     (the q_ann_recall sweep's IVF tier, ad-hoc ivf_search_index calls),
     so the sweep audits the REAL shipped artifact (partitionBy(cluster)
@@ -1177,17 +1122,16 @@ def cached_ivf_index(
         e = spread(_t(spark, sf_dir, "embeddings")).select(
             "vec_id", as_double(F.col("embedding")).alias("v")
         )
-        centroids = ivf_centroids(spark, sf_dir, e, k=k, iters=iters)
         ivf_write_index(
             spread(_t(spark, sf_dir, "embeddings")),
             path,
-            k=k,
-            iters=iters,
-            centroids=centroids,
+            k=IVF_K,
+            iters=IVF_ITERS,
+            centroids=ivf_centroids(spark, sf_dir, e),
         )
 
     return artifact_directory(
-        sf_dir, f"ivf_index:{k}:{iters}", _build
+        sf_dir, f"ivf_index:{IVF_K}:{IVF_ITERS}", _build
     )
 
 
@@ -1221,7 +1165,7 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(as_double(F.col("embedding")).alias("v"))
         .first()[0]
     )
-    path = cached_ivf_index(spark, sf_dir, k=IVF_K, iters=2)
+    path = cached_ivf_index(spark, sf_dir)
     return ivf_search_index(
         spark, path, qv, nprobe=IVF_NPROBE, topk=10, exclude_id=0
     )
@@ -2019,7 +1963,9 @@ def q_stream_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream.writeStream.foreachBatch(
             foreach_batch_neardup_gate(
                 index_dir,
-                band_frame=minhash_band_frame,
+                band_frame=lambda batch: minhash_band_frame(
+                    shingle_frame(batch)
+                ),
                 # cap=None: the gate is exhaustive within a bucket (see
                 # the module/oracle notes); one threshold governs probe
                 # AND intra-batch purge
@@ -2427,9 +2373,9 @@ def ann_sweep_parts(
     # changing a single cluster id) — the cluster predicate is a
     # PARTITION filter (directory pruning), so the audited read path
     # IS the 100 TB read path.
-    index_path = cached_ivf_index(spark, sf_dir, k=IVF_K, iters=2)
+    index_path = cached_ivf_index(spark, sf_dir)
     probe_order = ivf_probe_clusters(
-        ivf_centroids(spark, sf_dir, e, k=IVF_K, iters=2),
+        ivf_centroids(spark, sf_dir, e),
         qv,
         max(nprobes),
     )

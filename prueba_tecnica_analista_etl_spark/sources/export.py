@@ -179,10 +179,10 @@ def export_training_shards(
 def _manifest_dict(
     spark: SparkSession, path: str
 ) -> tuple[dict[int, dict[str, int]], str | None]:
-    """Per-shard numeric stats plus the recorded checksum algo
-    (None for manifests predating the algo marker)."""
+    """Per-shard numeric stats plus the recorded checksum algo (None
+    when the manifest records none)."""
     rows = spark.read.parquet(os.path.join(path, MANIFEST)).collect()
-    algo = rows[0]["checksum_algo"] if rows and "checksum_algo" in rows[0].asDict() else None
+    algo = rows[0].asDict().get("checksum_algo") if rows else None
     return {
         int(r[SHARD_COL]): {
             k: int(v)
@@ -201,16 +201,12 @@ def verify_training_shards(spark: SparkSession, path: str) -> dict[int, str]:
     truncated write all surface as a named mismatch, before a training
     job consumes garbage."""
     manifest, algo = _manifest_dict(spark, path)
-    if algo is not None and algo != CHECKSUM_ALGO:
-        # A manifest written under a DIFFERENT NAMED checksum
+    if algo != CHECKSUM_ALGO:
+        # A manifest that does not name the supported checksum
         # definition CANNOT be content-verified by this code — surface
         # that as a single named problem (sentinel shard -1), not as
         # per-shard "corruption" that would be indistinguishable from
-        # real tampering. algo=None is NOT a mismatch: manifests
-        # written before the algo marker existed used the identical
-        # sum-xxhash64-mod-p63 fold, so their checksums verify
-        # bit-for-bit (refusing them would force a re-export of every
-        # pre-marker shard set for no content reason).
+        # real tampering.
         return {
             -1: (
                 f"manifest checksum algo {algo!r} is not the supported "

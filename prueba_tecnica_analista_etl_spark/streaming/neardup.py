@@ -90,8 +90,7 @@ COMPACT_MAX_UNITS = 16
 # exactly: equal (band, key) implies equal kb. Pruning strength
 # scales inversely with batch size (a small probe touches few
 # buckets; a batch covering all buckets degrades to the full scan it
-# would have done anyway). Old plain-layout units remain readable —
-# the reader unions both forms and folds rewrite them partitioned.
+# would have done anyway).
 KB_BUCKETS = 16
 
 
@@ -101,43 +100,31 @@ def _kb_col() -> "F.Column":
     ).cast("int")
 
 
-def _keys_layout(unit: str) -> str:
-    """'kb' (partitioned), 'plain' (flat parquet files), or 'empty'
-    (a zero-row partitioned write leaves no data files at all — skip
-    it; schema inference over nothing would throw)."""
+def _has_keys(unit: str) -> bool:
+    """Whether ``unit``'s ``keys/`` holds any kb partition: a zero-row
+    partitioned write leaves no data files at all, and schema inference
+    over nothing would throw, so readers skip such a unit."""
     kd = os.path.join(unit, "keys")
-    if not os.path.isdir(kd):
-        return "empty"
-    names = os.listdir(kd)
-    if any(n.startswith("kb=") for n in names):
-        return "kb"
-    if any(n.endswith(".parquet") for n in names):
-        return "plain"
-    return "empty"
+    return os.path.isdir(kd) and any(
+        n.startswith("kb=") for n in os.listdir(kd)
+    )
 
 
 def read_index_keys(
     spark, units: "list[str]", probe_kbs: "list[int] | None" = None
 ) -> "DataFrame | None":
     """Union the committed units' ``keys/`` frames as (doc_id, band,
-    key), pruning kb-partitioned units to ``probe_kbs`` when given.
-    Handles mixed layouts (pre-kb plain units alongside partitioned
-    ones). Returns None when no unit holds any keys data."""
-    parted = [u for u in units if _keys_layout(u) == "kb"]
-    plain = [u for u in units if _keys_layout(u) == "plain"]
+    key), pruned to ``probe_kbs`` when given. Returns None when no
+    unit holds any keys data."""
     frames = []
-    # One read PER partitioned unit: multiple partition-discovery
-    # roots in a single read conflict (KD009) — and the unit count is
-    # bounded by the compaction caps, so the union stays small.
-    for u in parted:
+    # One read PER unit: multiple partition-discovery roots in a
+    # single read conflict (KD009) — and the unit count is bounded by
+    # the compaction caps, so the union stays small.
+    for u in filter(_has_keys, units):
         df = spark.read.parquet(os.path.join(u, "keys"))
         if probe_kbs is not None:
             df = df.filter(F.col("kb").isin(list(probe_kbs)))
         frames.append(df.drop("kb"))
-    if plain:
-        frames.append(
-            spark.read.parquet(*[os.path.join(u, "keys") for u in plain])
-        )
     if not frames:
         return None
     out = frames[0]
@@ -219,10 +206,9 @@ def _fold_units(spark, index_dir: str, units: "list[str]") -> bool:
     def fill(tmp: str) -> None:
         if keys is None:
             # every folded unit was keys-empty: keep the invariant that
-            # a unit HAS a keys dir (layout 'empty' — readers skip it)
+            # a unit HAS a keys dir (readers skip an empty one)
             os.makedirs(os.path.join(tmp, "keys"))
         else:
-            # folds heal pre-kb plain units into the partitioned layout
             keys.withColumn("kb", _kb_col()).write.partitionBy(
                 "kb"
             ).parquet(os.path.join(tmp, "keys"))
@@ -265,10 +251,6 @@ def compact_index(spark, index_dir: str) -> bool:
     folded batch. Every crash window is additive-only (see
     ``_fold_units``). Call ONLY under the drain lock (the same
     serialization the batch commits run under).
-
-    Folds also REWRITE pre-kb plain units into the kb-partitioned
-    keys layout, so a long-lived index converges to fully
-    probe-prunable regardless of the layout it started with.
     """
     units = _committed(index_dir)
     did = False
@@ -302,7 +284,8 @@ def foreach_batch_neardup_gate(
     ``(doc_id, hs, band, key)``; ``pairs_from_bands(banded,
     threshold)`` maps a banded frame to its intra-frame near-dup pairs
     at the GIVEN threshold (both injected — typically
-    ``plans.extensions_scale.minhash_band_frame`` and a
+    ``plans.extensions_scale.minhash_band_frame`` over
+    ``shingle_frame`` and a
     ``pairs_from_band_frame(..., cap=None)`` wrapper — so this module
     never imports the plans layer, the gate stays generic over
     signature schemes, and ONE ``threshold`` governs both the

@@ -90,24 +90,7 @@ def _write_rejects(rejected: DataFrame, rej_path: str, batch_id: int) -> None:
     OVERWRITES it, so a replayed in-flight batch (crash between the
     reject write and the ledger commit) replaces its own partial dir
     rather than appending duplicates. ``spark.read.parquet(rej_path)``
-    surfaces ``batch_id`` as a partition column.
-
-    Legacy migration: a pre-partitioning ``_rejects`` dir holds flat
-    append-mode files; mixing flat files with ``batch_id=`` dirs makes
-    partition discovery fail ('conflicting directory structures'), so
-    any flat parquet files are first moved into ``batch_id=-1`` (the
-    unattributed-legacy bucket) — a pure rename, done once."""
-    if os.path.isdir(rej_path):
-        flat = [
-            e
-            for e in os.scandir(rej_path)
-            if e.is_file() and e.name.endswith(".parquet")
-        ]
-        if flat:
-            legacy = os.path.join(rej_path, "batch_id=-1")
-            os.makedirs(legacy, exist_ok=True)
-            for e in flat:
-                os.rename(e.path, os.path.join(legacy, e.name))
+    surfaces ``batch_id`` as a partition column."""
     rejected.write.mode("overwrite").parquet(
         os.path.join(rej_path, f"batch_id={batch_id}")
     )

@@ -248,10 +248,9 @@ def test_rewrite_survives_crash_inside_swap(
     s.clean()
 
 
-def test_writers_invalidate_fingerprint_memo(spark, tmp_path, monkeypatch):
-    """The sink swap and the IVF rebalance drop the fingerprint memo of
-    a corpus they write into, even when its TTL would never expire."""
-    monkeypatch.setattr(artifacts, "_FP_TTL_S", 1e9)
+def test_writers_change_corpus_fingerprint(spark, tmp_path):
+    """The sink swap and the IVF rebalance change the fingerprint of a
+    corpus they write into, at the very next lookup."""
     corpus = str(tmp_path / "corpus")
 
     process = foreach_batch_upsert(spark, os.path.join(corpus, "t"), ["k"])

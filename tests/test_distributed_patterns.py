@@ -515,27 +515,19 @@ def test_eval_auc_hand_computed_and_sharded_plan(spark):
     assert plan.count("Exchange SinglePartition") <= 1
 
 
-def test_artifact_cache_invalidates_on_corpus_rewrite(
-    spark, tmp_path, monkeypatch
-):
+def test_artifact_cache_invalidates_on_corpus_rewrite(spark, tmp_path):
     """A corpus regenerated under the SAME path must MISS
     the artifact caches (the key carries a file-stat fingerprint) —
     a stale bloom bitset silently drops true semi-join matches, so
     answering stale is the one wrong behavior. Same-content lookups
-    still hit (one build per generation). The fingerprint itself is
-    TTL-memoized (see
-    test_corpus_fingerprint_memo_collapses_walks); zero the TTL here
-    so this test exercises the fingerprint mechanism, not the memo's
-    documented <=TTL staleness window."""
+    still hit (one build per generation)."""
     import os
 
-    from prueba_tecnica_analista_etl_spark import artifacts
     from prueba_tecnica_analista_etl_spark.artifacts import (
         census_artifact,
         corpus_artifact,
     )
 
-    monkeypatch.setattr(artifacts, "_FP_TTL_S", 0.0)
     corpus = str(tmp_path / "corpus")
     os.makedirs(corpus)
 
@@ -572,9 +564,7 @@ def test_artifact_cache_invalidates_on_corpus_rewrite(
     assert frames == ["f", "f"]
 
 
-def test_artifact_store_survives_process_boundary(
-    spark, tmp_path, monkeypatch
-):
+def test_artifact_store_survives_process_boundary(spark, tmp_path):
     """Disk layer: artifacts are one-time-per-
     CORPUS, not per-process — a lookup whose memory memo is gone (the
     fresh-process case, simulated by clearing the in-memory caches)
@@ -586,7 +576,6 @@ def test_artifact_store_survives_process_boundary(
 
     from prueba_tecnica_analista_etl_spark import artifacts
 
-    monkeypatch.setattr(artifacts, "_FP_TTL_S", 0.0)
     corpus = str(tmp_path / "corpus")
     os.makedirs(corpus)
     with open(os.path.join(corpus, "t.parquet"), "w") as fh:
@@ -636,9 +625,7 @@ def test_artifact_store_survives_process_boundary(
     assert e2.count() == 0 and e2.schema == e1.schema
 
 
-def test_artifact_directory_reuses_and_evicts_generations(
-    tmp_path, monkeypatch
-):
+def test_artifact_directory_reuses_and_evicts_generations(tmp_path):
     """artifact_directory (per-process mkdtemp IVF index copies would
     leak): one build per corpus generation, reused
     across lookups; a corpus rewrite builds a NEW generation and the
@@ -647,7 +634,6 @@ def test_artifact_directory_reuses_and_evicts_generations(
 
     from prueba_tecnica_analista_etl_spark import artifacts
 
-    monkeypatch.setattr(artifacts, "_FP_TTL_S", 0.0)
     corpus = str(tmp_path / "corpus")
     os.makedirs(corpus)
 
@@ -675,42 +661,10 @@ def test_artifact_directory_reuses_and_evicts_generations(
     assert os.path.isfile(os.path.join(p2, "payload"))
 
 
-def test_corpus_fingerprint_memo_collapses_walks(tmp_path, monkeypatch):
-    """Without a memo, _corpus_fingerprint walks+stats the whole corpus
-    tree on EVERY artifact lookup — O(files) syscalls per cache HIT.
-    Within the TTL, repeated lookups must serve the memo (one walk);
-    past the TTL (or after clear_artifacts, the explicit invalidation
-    path) the tree is re-walked and a rewrite is seen."""
-    import os
-
-    from prueba_tecnica_analista_etl_spark import artifacts
-
-    corpus = str(tmp_path / "c")
-    os.makedirs(corpus)
-    with open(os.path.join(corpus, "f"), "w") as fh:
-        fh.write("one")
-    monkeypatch.setattr(artifacts, "_FP_TTL_S", 3600.0)
-    artifacts._FP_MEMO.clear()
-    first = artifacts._corpus_fingerprint(corpus)
-    with open(os.path.join(corpus, "f"), "w") as fh:
-        fh.write("two-different-size")
-    # memo hit: the rewrite is invisible within the TTL by contract
-    assert artifacts._corpus_fingerprint(corpus) == first
-    # clear_artifacts drops the memo -> the rewrite is seen
-    artifacts.clear_artifacts()
-    assert artifacts._corpus_fingerprint(corpus) != first
-
-
-def test_corpus_writers_drop_fingerprint_memo(spark, tmp_path, monkeypatch):
-    """The fingerprint TTL memo opens a bounded stale-artifact window:
-    a corpus rewritten within the TTL of a prior lookup would serve
-    artifacts from the old generation. The engine's writers go through
-    artifacts.publish/replace/recover, which drop the memo themselves,
-    so the TTL window can never span one of the engine's own rewrites
-    (an external writer still relies on the TTL expiring or
-    clear_artifacts, the documented contract). Pin it with an
-    effectively-infinite TTL: a versioned commit INSIDE the corpus
-    must be visible to the very next fingerprint lookup."""
+def test_versioned_commit_changes_corpus_fingerprint(spark, tmp_path):
+    """A versioned commit INSIDE the corpus, made right after a
+    fingerprint lookup, must change the very next lookup's
+    fingerprint, so the store keys the new generation."""
     import os
 
     from prueba_tecnica_analista_etl_spark import artifacts
@@ -718,30 +672,84 @@ def test_corpus_writers_drop_fingerprint_memo(spark, tmp_path, monkeypatch):
         commit_snapshot,
     )
 
-    monkeypatch.setattr(artifacts, "_FP_TTL_S", 3600.0)
     corpus = str(tmp_path / "corpus")
     os.makedirs(corpus)
     with open(os.path.join(corpus, "seed"), "w") as fh:
         fh.write("x")
     before = artifacts._corpus_fingerprint(corpus)
-    # memo is warm: an untracked external write would now be invisible
     commit_snapshot(
         spark.createDataFrame([(1,)], "id long"),
         os.path.join(corpus, "dim_table"),
     )
     after = artifacts._corpus_fingerprint(corpus)
     assert after != before, (
-        "engine write inside the corpus must invalidate the TTL memo"
+        "engine write inside the corpus must change the fingerprint"
     )
 
 
-def test_t_sees_an_append_to_a_cached_table(spark, tmp_path, monkeypatch):
+def test_store_sees_an_append_right_after_a_lookup(spark, tmp_path):
+    """A part file appended to a corpus table right after a store
+    lookup is seen by the very next lookup: the artifact rebuilds and
+    counts the appended rows. Every lookup stats the corpus afresh, so
+    no window exists in which a plain append is invisible."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from prueba_tecnica_analista_etl_spark import artifacts
+
+    corpus = str(tmp_path / "corpus")
+    table = os.path.join(corpus, "t.parquet")
+    os.makedirs(table)
+    pq.write_table(
+        pa.table({"id": list(range(5))}), os.path.join(table, "part-0.parquet")
+    )
+
+    def lookup():
+        return artifacts.corpus_artifact(
+            spark,
+            corpus,
+            "appended_rows",
+            lambda: spark.read.parquet(table).groupBy().count(),
+        )
+
+    assert lookup().first()[0] == 5
+    # a store hit, then the append at once: the build above took long
+    # enough that a lookup timed from it alone could not tell
+    lookup()
+    pq.write_table(
+        pa.table({"id": [5, 6, 7]}), os.path.join(table, "part-1.parquet")
+    )
+    assert lookup().first()[0] == 8
+
+
+def test_fingerprint_sees_a_rewrite_that_keeps_size_and_mtime(tmp_path):
+    """A rewrite that keeps a file's size and restores its mtime with
+    os.utime (what ``cp -p`` does) still changes the corpus
+    fingerprint: the kernel sets ctime on every write and utime, and
+    no caller can set it back."""
+    import os
+
+    from prueba_tecnica_analista_etl_spark import artifacts
+
+    corpus = tmp_path / "corpus"
+    corpus.mkdir()
+    f = corpus / "t.parquet"
+    f.write_bytes(b"generation-one")
+    st = os.stat(f)
+    before = artifacts._corpus_fingerprint(str(corpus))
+    f.write_bytes(b"generation-two")
+    os.utime(f, ns=(st.st_atime_ns, st.st_mtime_ns))
+    now = os.stat(f)
+    assert (now.st_size, now.st_mtime_ns) == (st.st_size, st.st_mtime_ns)
+    assert artifacts._corpus_fingerprint(str(corpus)) != before
+
+
+def test_t_sees_an_append_to_a_cached_table(spark, tmp_path):
     """_t's per-session frame must follow the corpus: after a plain
     Spark append to a table it has already served, the next _t counts
     the appended rows instead of the listing frozen at first use."""
-    from prueba_tecnica_analista_etl_spark import artifacts
-
-    monkeypatch.setattr(artifacts, "_FP_TTL_S", 0.0)
     corpus = str(tmp_path / "corpus")
     path = f"{corpus}/t.parquet"
     spark.range(5).write.parquet(path)
@@ -1025,7 +1033,6 @@ def test_store_keeps_superseded_frame_readable_while_served(
 
     from prueba_tecnica_analista_etl_spark import artifacts
 
-    monkeypatch.setattr(artifacts, "_FP_TTL_S", 0.0)
     corpus = _store_corpus(tmp_path, monkeypatch)
     builds = []
 

@@ -715,9 +715,7 @@ def test_staged_builders_keep_their_arrow_stages(spark, sf_dir):
 
     docs = _t(spark, sf_dir, "documents")
     assert has_arrow(
-        simhash_pair_frame(
-            docs, hashed=doc_shingle_frame(spark, sf_dir)
-        )
+        simhash_pair_frame(doc_shingle_frame(spark, sf_dir))
     ), "simhash builder lost its bit-census Arrow stage"
     assert has_arrow(
         _embed_neardup_pairs_live(spark, sf_dir)
@@ -734,7 +732,6 @@ def test_staged_builders_keep_their_arrow_stages(spark, sf_dir):
         assign_clusters,
     )
     from prueba_tecnica_analista_etl_spark.plans.extensions_scale import (
-        IVF_K,
         _lsh_sig_live,
         ivf_centroids,
     )
@@ -746,7 +743,7 @@ def test_staged_builders_keep_their_arrow_stages(spark, sf_dir):
     e = _t(spark, sf_dir, "embeddings").select(
         "vec_id", as_double(F.col("embedding")).alias("v")
     )
-    cents = ivf_centroids(spark, sf_dir, e, k=IVF_K, iters=2)
+    cents = ivf_centroids(spark, sf_dir, e)
     assert has_arrow(
         e.withColumn("cluster", assign_clusters(F.col("v"), cents))
     ), "IVF assignment builder lost its Arrow matmul stage"

@@ -13,8 +13,9 @@ import alone is not a use. Anything the walk does not reach is dead
 code: delete it, or put it on ``ALLOWLIST`` with one of three reasons.
 
 Every defaulted parameter of a definition the real roots reach is an
-option; one that no real caller sets is folded into a constant, or put
-on ``OPTION_ALLOWLIST`` with one of three reasons.
+option; one that no real caller sets, or that every real caller sets
+to the same constant, is folded into a constant, or put on
+``OPTION_ALLOWLIST`` with one of three reasons.
 
 Pure AST: nothing is imported from the package and no Spark session
 is started.
@@ -336,9 +337,10 @@ def test_allowlist_reasons():
 # --- options -----------------------------------------------------------
 #
 # Every defaulted parameter of a reached definition is an option a
-# caller can set. An option no real caller sets is a constant in
-# disguise: fold it into the body, or put it on OPTION_ALLOWLIST with
-# one of three reasons. Real callers are the package, the driver entry,
+# caller can set. An option no real caller sets, or one every real
+# caller sets to the same constant, is a constant in disguise: fold it
+# into the body, or put it on OPTION_ALLOWLIST with one of three
+# reasons. Real callers are the package, the driver entry,
 # bench.py, perfbench's scripts and tools/; tests are not.
 
 # (b) a deployment setting: a path, address, credential or connection
@@ -406,12 +408,17 @@ def _is_static(fn) -> bool:
 
 
 def _calls(modules):
-    """(callee, call) for every call in ``modules``: the def key a name
-    resolves to, else the attribute name of ``x.meth(...)``.
+    """(callee, call, value) for every call in ``modules``: the def key
+    a name resolves to, else the attribute name of ``x.meth(...)``;
+    ``value(expr)`` names what an argument of the call evaluates to.
     ``partial(f, ...)`` counts as a call of ``f``."""
     for mod, (_, tree) in modules.items():
         for top in tree.body:
             local = _local_imports(mod, top)
+
+            def value(expr, mod=mod, local=local):
+                return _constant(mod, expr, local)
+
             for call in (n for n in ast.walk(top) if isinstance(n, ast.Call)):
                 func = call.func
                 if getattr(func, "id", getattr(func, "attr", None)) == "partial":
@@ -421,39 +428,70 @@ def _calls(modules):
                     call = ast.Call(func, call.args[1:], call.keywords)
                 key = _target(mod, func, local)
                 if key is not None:
-                    yield key, call
+                    yield key, call, value
                 elif isinstance(func, ast.Attribute):
-                    yield func.attr, call
+                    yield func.attr, call, value
+
+
+def _constant(mod: str, expr: ast.expr, local: dict):
+    """What ``expr`` always evaluates to: a literal, or the module-level
+    name it refers to; None when it can vary."""
+    try:
+        return ("literal", repr(ast.literal_eval(expr)))
+    except ValueError:
+        key = _target(mod, expr, local)
+        return None if key is None else ("name", key)
+
+
+def _arg(call: ast.Call, index: int | None, param: str):
+    """The argument ``call`` passes for the parameter: its expression,
+    ``...`` when it is forwarded through ``*args``/``**kwargs``, or
+    None when it is not passed."""
+    for kw in call.keywords:
+        if kw.arg == param:
+            return kw.value
+        if kw.arg is None:
+            return ...
+    if index is None:
+        return None
+    for i, arg in enumerate(call.args):
+        if isinstance(arg, ast.Starred):
+            return ...
+        if i == index:
+            return arg
+    return None
 
 
 def _sets(call: ast.Call, index: int | None, param: str) -> bool:
     """Whether ``call`` sets the parameter: by keyword, by position, or
     through ``*args``/``**kwargs`` forwarding."""
-    for kw in call.keywords:
-        if kw.arg in (None, param):
-            return True
-    if index is None:
-        return False
-    for i, arg in enumerate(call.args):
-        if isinstance(arg, ast.Starred):
-            return True
-        if i == index:
-            return True
-    return False
+    return _arg(call, index, param) is not None
 
 
 def _unset_options() -> dict[str, str]:
     """Option name -> where, for every option of a reached def that no
-    real call sets."""
+    real call sets, or that every real call sets to the same literal
+    or to the same name defined in the def's own module (a constant
+    the def can read itself). A constant of another module stays an
+    option: it is that caller's setting, passed across a layer (an
+    operator does not import the plan whose oracle shares it)."""
     reached = _reach(*_real_roots())
     calls: dict = {}
-    for callee, call in _calls(MODULES):
-        calls.setdefault(callee, []).append(call)
+    for callee, call, value in _calls(MODULES):
+        calls.setdefault(callee, []).append((call, value))
     out = {}
     for name, key, callee, index, param in _options():
-        if key in reached and not any(
-            _sets(c, index, param) for c in calls.get(callee, ())
-        ):
+        if key not in reached:
+            continue
+        values = set()
+        for call, value in calls.get(callee, ()):
+            arg = _arg(call, index, param)
+            if arg is not None and arg is not ...:
+                arg = value(arg)
+                if arg is None or arg[0] == "name" and arg[1][0] != key[0]:
+                    arg = ...
+            values.add(arg)
+        if not values - {None} or (len(values) == 1 and ... not in values):
             out[name] = f"{MODULES[key[0]][0].relative_to(REPO)}:{DEFS[key].lineno}"
     return out
 
@@ -462,7 +500,7 @@ def test_every_option_is_set_by_a_caller():
     unset = _unset_options()
     missing = sorted(set(unset) - OPTION_ALLOWLIST.keys())
     assert not missing, (
-        f"{len(missing)} options no real caller sets (fold into a "
+        f"{len(missing)} options no real caller varies (fold into a "
         "constant, or allowlist):\n"
         + "\n".join(f"{unset[o]} {o}" for o in missing)
     )
@@ -477,7 +515,7 @@ def test_option_allowlist_entries_are_live_and_reasoned():
     for entry, (kind, detail) in OPTION_ALLOWLIST.items():
         assert entry in options, f"{entry}: no such option"
         assert entry in unset, (
-            f"{entry}: a real caller sets it, or its def is unreached"
+            f"{entry}: a real caller varies it, or its def is unreached"
         )
         callee, index, param = options[entry]
         if kind == SURVEY:

@@ -495,7 +495,7 @@ def test_ann_ivf_exact_when_probing_all_and_recall(spark, sf_dir):
         .filter(F.col("vec_id") == 0)
         .first()["embedding"]
     )
-    path = cached_ivf_index(spark, sf_dir, k=IVF_K, iters=2)
+    path = cached_ivf_index(spark, sf_dir)
     full = [
         (r["vec_id"], r["cos_sim"])
         for r in ivf_search_index(
@@ -847,6 +847,7 @@ def test_minhash_pair_frame_generic_api(spark):
     and unrelated rows do not pair."""
     from prueba_tecnica_analista_etl_spark.plans.extensions_scale import (
         minhash_pair_frame,
+        shingle_frame,
     )
 
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
@@ -859,7 +860,7 @@ def test_minhash_pair_frame_generic_api(spark):
     corpus = spark.createDataFrame(rows, "doc_id long, text string")
     got = {
         (r["doc_a"], r["doc_b"]): r["jaccard_sim"]
-        for r in minhash_pair_frame(corpus).collect()
+        for r in minhash_pair_frame(shingle_frame(corpus)).collect()
     }
     assert (101, 102) in got
     assert all(v >= 0.5 for v in got.values())
@@ -909,6 +910,7 @@ def test_simhash_and_ngram_pair_frames_generic_api(spark):
     bound is honored."""
     from prueba_tecnica_analista_etl_spark.plans.extensions_scale import (
         ngram_pair_frame,
+        shingle_frame,
         simhash_pair_frame,
     )
 
@@ -925,11 +927,11 @@ def test_simhash_and_ngram_pair_frames_generic_api(spark):
         ],
         "doc_id long, text string",
     )
-    sim = simhash_pair_frame(corpus).collect()
+    sim = simhash_pair_frame(shingle_frame(corpus)).collect()
     assert {(r["doc_a"], r["doc_b"]) for r in sim} == {(7, 8)}
     assert all(r["hamming"] <= 8 for r in sim)
 
-    ng = ngram_pair_frame(corpus).collect()
+    ng = ngram_pair_frame(shingle_frame(corpus)).collect()
     assert {(r["doc_a"], r["doc_b"]) for r in ng} == {(7, 8)}
     assert all(r["jaccard_sim"] > 0.5 for r in ng)
 
@@ -1317,6 +1319,7 @@ def test_capped_chunk_sql_twin_on_oversized_bucket(spark):
     from prueba_tecnica_analista_etl_spark.plans.extensions_scale import (
         _ngram_oracle_sql,
         ngram_pair_frame,
+        shingle_frame,
     )
 
     docs = spark.createDataFrame(
@@ -1325,7 +1328,7 @@ def test_capped_chunk_sql_twin_on_oversized_bucket(spark):
     )
     got = sorted(
         (r["doc_a"], r["doc_b"], r["jaccard_sim"])
-        for r in ngram_pair_frame(docs).collect()
+        for r in ngram_pair_frame(shingle_frame(docs)).collect()
     )
     con = duckdb.connect()
     con.register(
@@ -1359,6 +1362,7 @@ def test_stream_neardup_equals_batch_greedy_fixpoint(spark, sf_dir):
         STREAM_NEARDUP_UNROLL,
         minhash_band_frame,
         pairs_from_band_frame,
+        shingle_frame,
     )
 
     got = {
@@ -1370,7 +1374,9 @@ def test_stream_neardup_equals_batch_greedy_fixpoint(spark, sf_dir):
     # bucket (the at-rest tiers' skew chunking is an output-bounding
     # device the gate deliberately does not inherit)
     surv, audit = near_dup_purge_stable(
-        docs, pairs_from_band_frame(minhash_band_frame(docs), cap=None)
+        docs, pairs_from_band_frame(
+            minhash_band_frame(shingle_frame(docs)), cap=None
+        )
     )
     want = {r["doc_id"] for r in surv.select("doc_id").collect()}
     assert got == want
@@ -1411,6 +1417,7 @@ def test_stream_neardup_index_compaction_long_replay(
     from prueba_tecnica_analista_etl_spark.plans.extensions_scale import (
         minhash_band_frame,
         pairs_from_band_frame,
+        shingle_frame,
     )
     from prueba_tecnica_analista_etl_spark.streaming.neardup import (
         COMPACT_MAX_UNITS,
@@ -1440,7 +1447,7 @@ def test_stream_neardup_index_compaction_long_replay(
     index_dir = str(tmp_path / "gate-index")
     gate = foreach_batch_neardup_gate(
         index_dir,
-        band_frame=minhash_band_frame,
+        band_frame=lambda b: minhash_band_frame(shingle_frame(b)),
         pairs_from_bands=lambda banded, thr: pairs_from_band_frame(
             banded, threshold=thr, cap=None
         ),
@@ -1475,7 +1482,9 @@ def test_stream_neardup_index_compaction_long_replay(
     for b in range(1, n_batches):
         corpus = corpus.unionByName(doc_batch(b))
     surv, _ = near_dup_purge_stable(
-        corpus, pairs_from_band_frame(minhash_band_frame(corpus), cap=None)
+        corpus, pairs_from_band_frame(
+            minhash_band_frame(shingle_frame(corpus)), cap=None
+        )
     )
     want = {r["doc_id"] for r in surv.select("doc_id").collect()}
     assert got == want
@@ -1682,13 +1691,13 @@ def test_gate_index_probe_partition_pruning(spark, tmp_path):
     probe pushes its own kb values as a literal partition filter —
     the scan plan must show PartitionFilters pruning, the pruned read
     must equal the full read restricted to those buckets (equal
-    (band, key) implies equal kb, so no candidate is lost), and
-    pre-kb plain units must stay readable alongside."""
+    (band, key) implies equal kb, so no candidate is lost)."""
     import os
 
     from prueba_tecnica_analista_etl_spark.plans.extensions_scale import (
         minhash_band_frame,
         pairs_from_band_frame,
+        shingle_frame,
     )
     from prueba_tecnica_analista_etl_spark.streaming.neardup import (
         _committed,
@@ -1700,7 +1709,7 @@ def test_gate_index_probe_partition_pruning(spark, tmp_path):
     index_dir = str(tmp_path / "idx")
     gate = foreach_batch_neardup_gate(
         index_dir,
-        band_frame=minhash_band_frame,
+        band_frame=lambda b: minhash_band_frame(shingle_frame(b)),
         pairs_from_bands=lambda b, t: pairs_from_band_frame(
             b, threshold=t, cap=None
         ),
@@ -1737,20 +1746,6 @@ def test_gate_index_probe_partition_pruning(spark, tmp_path):
         )
     )
     assert rows(pruned) == want
-
-    # mixed layout: a pre-kb plain unit unions in transparently
-    plain = os.path.join(index_dir, "batch-000000007")
-    spark.createDataFrame(
-        [(999, 0, (1, 2, 3))],
-        "doc_id long, band int, "
-        "key struct<k0:bigint,k1:bigint,k2:bigint>",
-    ).write.parquet(os.path.join(plain, "keys"))
-    spark.createDataFrame(
-        [(999, [1])], "doc_id long, hs array<long>"
-    ).write.parquet(os.path.join(plain, "docs"))
-    mixed = read_index_keys(spark, _committed(index_dir))
-    assert any(r[0] == 999 for r in rows(mixed))
-    assert rows(mixed) >= rows(full)
 
 
 def test_pretrain_run_conservation_and_determinism(spark, sf_dir, tmp_path):

@@ -1090,12 +1090,10 @@ def test_export_manifest_records_checksum_algo(spark, tmp_path):
     assert "re-export" in problems[-1]
 
 
-def test_export_verify_accepts_pre_marker_manifest(spark, tmp_path):
-    """A manifest WITHOUT the checksum_algo column (written by the
-    pre-marker generation of the SAME sum-mod-p63 fold) must still
-    content-verify — its checksums match bit-for-bit, so refusing it
-    would force a pointless re-export of every legacy shard set
-    Only a DIFFERENT NAMED algo is a refusal."""
+def test_export_verify_refuses_manifest_without_algo(spark, tmp_path):
+    """A manifest WITHOUT the checksum_algo column names no checksum
+    definition, so it cannot be content-verified: it gets the same
+    named refusal (sentinel shard -1) as an unsupported algo."""
     import os
 
     import prueba_tecnica_analista_etl_spark.sources.export as ex
@@ -1103,25 +1101,17 @@ def test_export_verify_accepts_pre_marker_manifest(spark, tmp_path):
     df = spark.createDataFrame(
         [(i, f"t{i}") for i in range(50)], "doc_id long, text string"
     )
-    path = str(tmp_path / "legacy_no_marker")
+    path = str(tmp_path / "no_marker")
     ex.export_training_shards(df, path, "doc_id", n_shards=4)
-    # Rewrite the manifest as the pre-marker writer produced it: same
-    # stats, no checksum_algo column.
     mpath = os.path.join(path, ex.MANIFEST)
     stripped = spark.read.parquet(mpath).drop("checksum_algo")
     rows, schema = stripped.collect(), stripped.schema
     spark.createDataFrame(rows, schema).write.mode("overwrite").parquet(
         mpath
     )
-    assert ex.verify_training_shards(spark, path) == {}
-    # ... and real corruption in a pre-marker set still surfaces.
-    data_dir = os.path.join(path, ex.DATA)
-    shard0 = os.path.join(data_dir, f"{ex.SHARD_COL}=0")
-    part = next(
-        f for f in os.listdir(shard0) if f.startswith("part-")
-    )
-    os.remove(os.path.join(shard0, part))
-    assert 0 in ex.verify_training_shards(spark, path)
+    problems = ex.verify_training_shards(spark, path)
+    assert set(problems) == {-1}
+    assert "None" in problems[-1] and "re-export" in problems[-1]
 
 
 def test_bucketed_join_is_shuffle_free(spark, tmp_path):
@@ -1213,18 +1203,13 @@ def test_load_table_schema_follows_inference_confs(spark, tmp_path):
     assert sorted(bytes(r.b) for r in plain.collect()) == [b"x", b"yz"]
 
 
-def test_load_table_sees_a_rewritten_table_schema(
-    spark, tmp_path, monkeypatch
-):
+def test_load_table_sees_a_rewritten_table_schema(spark, tmp_path):
     """A table rewritten with an added column changes the corpus
     fingerprint, so the stored schema is inferred again and the new
     column is read."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from prueba_tecnica_analista_etl_spark import artifacts
-
-    monkeypatch.setattr(artifacts, "_FP_TTL_S", 0.0)
     corpus = tmp_path / "corpus"
     corpus.mkdir()
     path = str(corpus / "region.parquet")

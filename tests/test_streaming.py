@@ -683,36 +683,6 @@ def test_dlq_idempotent_under_inflight_replay(spark, sf_dir, tmp_path):
     )
 
 
-def test_dlq_migrates_legacy_flat_layout(spark, sf_dir, tmp_path):
-    """A pre-partitioning _rejects dir holds flat append-mode files;
-    mixing them with batch_id= dirs would break partition discovery.
-    The first partitioned write must move flat files into the
-    batch_id=-1 legacy bucket so the whole DLQ stays readable."""
-    from prueba_tecnica_analista_etl_spark.streaming.upsert_sink import (
-        _write_rejects,
-    )
-
-    rej = str(tmp_path / "_rejects")
-    legacy = load_table(spark, sf_dir, "events").limit(30).withColumn(
-        "reject_reason", F.lit("old")
-    )
-    legacy.write.parquet(rej)  # old flat append layout
-    fresh = load_table(spark, sf_dir, "events").limit(10).withColumn(
-        "reject_reason", F.lit("new")
-    )
-    _write_rejects(fresh, rej, 5)
-
-    dlq = spark.read.parquet(rej)
-    assert dlq.count() == 40
-    by_batch = {
-        r["batch_id"]: r["n"]
-        for r in dlq.groupBy("batch_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    assert by_batch == {-1: 30, 5: 10}
-
-
 def test_partitioned_upsert_preserves_null_partition(spark, tmp_path):
     """isin() never matches NULL, but the NULL-partition dir
     (__HIVE_DEFAULT_PARTITION__) IS swapped by the sink — the base
