@@ -31,18 +31,23 @@ module is the one store for them, in three shapes:
 * :func:`corpus_artifact` — DataFrames, persisted as parquet plus a
   schema sidecar (so empty frames and exact types round-trip);
 * :func:`census_artifact` — driver-side values that are O(model),
-  never O(rows), persisted as pickle;
+  never O(rows), persisted as JSON (data only: loading one runs no
+  code, and it reads back the same under any Python or numpy build);
 * :func:`artifact_directory` — artifacts that ARE a directory tree (the
   on-disk IVF index, streaming landing folders).
 
 All three go through one path, :func:`_build_once`: the session memo,
-then disk, then ``build()`` — run at most once per key across threads,
-because a per-key lock makes concurrent consumers wait for the first
-builder instead of paying the build twice. Across processes only the
-publish is atomic, so a reader never sees a half-written artifact.
+then disk, then ``build()`` — run at most once per key across threads
+and processes, because an ``flock`` on a per-artifact lock file makes
+concurrent consumers wait for the first builder instead of paying the
+build twice. A Linux ``flock`` belongs to an open file description, so
+two ``open()`` calls in one process exclude each other just as two
+processes do: :func:`lock` is the one lock primitive for every
+directory the engine shares (the stream checkpoints use it too).
 
 Keying is what makes silent staleness impossible. A generation lives
-at ``<root>/<corpus-tag>/<name>-<gen>/``, where ``gen`` folds together
+at ``<root>/<corpus-tag>/<name>-<gen>/``, where ``gen`` is a 64-bit
+sha1 prefix over
 
 * a fingerprint of the corpus (every file's path, size, mtime and
   ctime), taken afresh at every lookup, so a corpus appended to or
@@ -71,10 +76,15 @@ copy:
   footer (no data pages) and checks that the row counts add up to the
   count the sidecar recorded at publish, so a truncated or lost part
   file is removed and rebuilt;
-* a generation must outlive its superseding while a consumer still
-  scans it. A generation that a live session's memo serves is pinned:
-  eviction skips it, and the next landing after the memo moves on
-  removes it.
+* a generation must outlive its superseding while a consumer in any
+  process still scans it. A session serving a frame holds a shared
+  lock on the generation's ``_meta.json`` for as long as its memo
+  entry lives; eviction tries an exclusive non-blocking lock on each
+  sibling and skips one that is held, so the next landing after every
+  memo has moved on removes it. Census and directory generations have
+  no sidecar and are not pinned: a census is read whole when served,
+  but a directory can be evicted by a landing in another process
+  while a consumer here still scans it.
 
 The memo lives on the session object, so a dropped session is
 collected with its frames; a weak set of sessions lets a bare
@@ -86,9 +96,9 @@ trade cheap recompute for I/O.
 from __future__ import annotations
 
 import atexit
+import fcntl
 import json
 import os
-import pickle
 import re
 import shutil
 import tempfile
@@ -96,15 +106,17 @@ import threading
 import time
 import uuid
 import weakref
-import zlib
 from hashlib import sha1
 from pathlib import Path
-from typing import Callable
+from typing import Callable, TextIO
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 _ROOT_ENV = "PTAE_ARTIFACT_DIR"
+# A frame generation's sidecar: its schema and row count, and the file
+# a serving session pins with a shared lock.
+_META = "_meta.json"
 
 
 def _source_digest(pkg_dir: str) -> str:
@@ -125,13 +137,11 @@ _SOURCE_DIGEST = _source_digest(os.path.dirname(os.path.abspath(__file__)))
 # Guards the dicts below. Consumers run concurrently (the bench issues
 # sibling queries on one session from a thread pool).
 _LOCK = threading.Lock()
-# key path -> lock held while that generation is read or built
-_BUILD_LOCKS: dict[str, threading.Lock] = {}
 # Each session's memo, {(sf_dir, stem): (generation path, served
-# value)}, is an attribute of the session: a served frame refers back
-# to its session, so a memo held in a module-level map keyed by the
-# session would keep the session alive forever. The weak set only
-# lets clear_artifacts and the eviction pin find the live memos.
+# value, pin)}, is an attribute of the session: a served frame refers
+# back to its session, so a memo held in a module-level map keyed by
+# the session would keep the session alive forever. The weak set only
+# lets clear_artifacts find the live memos.
 _MEMO_ATTR = "_ptae_artifact_memo"
 _SESSIONS: "weakref.WeakSet[SparkSession]" = weakref.WeakSet()
 _MISS = object()
@@ -141,12 +151,12 @@ _MISS = object()
 BUILD_SECONDS: dict[str, float] = {}
 
 
-def _corpus_fingerprint(sf_dir: str) -> int:
-    """CRC over every file's (relative path, size, mtime_ns, ctime_ns)
+def _corpus_fingerprint(sf_dir: str) -> str:
+    """sha1 over every file's (relative path, size, mtime_ns, ctime_ns)
     under ``sf_dir``: O(files) stat calls, no data reads. The ctime
     changes on any write or ``utime``, so a rewrite that restores size
     and mtime still changes the key."""
-    crc = 0
+    h = sha1()
     for root, dirs, files in os.walk(sf_dir):
         dirs.sort()
         for name in sorted(files):
@@ -157,10 +167,30 @@ def _corpus_fingerprint(sf_dir: str) -> int:
                 continue
             rec = (
                 f"{os.path.relpath(p, sf_dir)}:{st.st_size}:"
-                f"{st.st_mtime_ns}:{st.st_ctime_ns}"
+                f"{st.st_mtime_ns}:{st.st_ctime_ns}\n"
             )
-            crc = zlib.crc32(rec.encode(), crc)
-    return crc
+            h.update(rec.encode())
+    return h.hexdigest()
+
+
+def lock(path: str, how: int = fcntl.LOCK_EX) -> TextIO | None:
+    """``path`` opened and ``flock``-ed with ``how``; closing or
+    dropping the returned file releases the lock. A blocking exclusive
+    lock creates the file, and raises if its directory is gone. A
+    shared lock or a ``LOCK_NB`` probe opens an existing file only,
+    and returns None if it is missing or the lock is held."""
+    try:
+        fh = open(path, "a" if how == fcntl.LOCK_EX else "r")
+    except FileNotFoundError:
+        if how == fcntl.LOCK_EX:
+            raise
+        return None
+    try:
+        fcntl.flock(fh, how)
+    except BlockingIOError:
+        fh.close()
+        return None
+    return fh
 
 
 # ---------------------------------------------------------------- disk
@@ -246,38 +276,35 @@ def _memo(spark: SparkSession) -> dict:
     return memo
 
 
-def _pinned() -> set[str]:
-    """Generation paths that some live session's memo serves as a
-    frame (a census value is held in memory, not read from disk)."""
-    with _LOCK:
-        return {
-            hit[0]
-            for s in list(_SESSIONS)
-            for hit in getattr(s, _MEMO_ATTR, {}).values()
-            if isinstance(hit[1], DataFrame)
-        }
-
-
 def _evict_superseded_disk(final: str) -> None:
     """Remove older generations of the same artifact: siblings sharing
     the name prefix but a different generation suffix, plus any
-    orphaned staging dir of one from a crashed writer. A generation a
-    live session still serves is kept until a later landing."""
+    orphaned staging dir of one from a crashed writer. A generation
+    some session in any process still serves holds a pin and is kept
+    until a later landing. Call under the artifact's build lock."""
     parent, base = os.path.split(final)
-    gen = re.escape(base.rsplit("-", 1)[0]) + "-[0-9a-f]{8}"
+    gen = re.escape(base.rsplit("-", 1)[0]) + "-[0-9a-f]+"
     try:
         names = os.listdir(parent)
     except OSError:
         return
-    pinned = _pinned()
     for n in names:
         p = os.path.join(parent, n)
-        if (
-            n != base
-            and p not in pinned
-            and re.fullmatch(rf"{gen}|\.{gen}\.staging-\w+", n)
-        ):
-            shutil.rmtree(p, ignore_errors=True)
+        if n == base or not re.fullmatch(rf"{gen}|\.{gen}\.staging-\w+", n):
+            continue
+        meta = os.path.join(p, _META)
+        probe = lock(meta, fcntl.LOCK_EX | fcntl.LOCK_NB)
+        if probe is not None:
+            probe.close()
+        elif os.path.exists(meta):
+            continue  # pinned: a session in some process serves it
+        shutil.rmtree(p, ignore_errors=True)
+
+
+def _unpin(hit: tuple | None) -> None:
+    """Release the pin of a memo entry that was replaced or dropped."""
+    if hit is not None and hit[2] is not None:
+        hit[2].close()
 
 
 # ------------------------------------------------------ directory swaps
@@ -373,38 +400,46 @@ def _build_once(
     publishes and returns the value to serve. ``read`` returns
     ``_MISS`` when the generation is absent and removes it when it is
     corrupt, so a bad copy is rebuilt rather than served. Directory
-    artifacts pass no session: the directory is their only copy."""
-    gen = zlib.crc32(_SOURCE_DIGEST.encode(), _corpus_fingerprint(sf_dir))
+    artifacts pass no session: the directory is their only copy.
+
+    A memo miss holds the stem's build lock (one file per stem, not
+    per generation, so no lock file needs sweeping) across the memo
+    re-check, ``read`` and ``make``. A served frame's generation is
+    pinned inside that lock, so no landing can evict it between the
+    check and the serve. The build lock and the pin are two files: a
+    rebuild of a corrupt generation this process serves must not wait
+    on its own pin."""
+    key = f"{_SOURCE_DIGEST}:{_corpus_fingerprint(sf_dir)}"
     tag_dir = os.path.join(artifact_root(), _corpus_tag(sf_dir))
-    path = os.path.join(tag_dir, f"{_safe(stem)}-{gen:08x}")
+    path = os.path.join(
+        tag_dir, f"{_safe(stem)}-{sha1(key.encode()).hexdigest()[:16]}"
+    )
     slot = (sf_dir, stem)
     with _LOCK:
         memo = _memo(spark) if spark is not None else {}
         hit = memo.get(slot)
+    if hit is not None and hit[0] == path:
+        return hit[1]
+    _mark_corpus(tag_dir, sf_dir)
+    with lock(os.path.join(tag_dir, f"_{_safe(stem)}.lock")):
+        hit = memo.get(slot)
         if hit is not None and hit[0] == path:
             return hit[1]
-        lock = _BUILD_LOCKS.setdefault(path, threading.Lock())
-    try:
-        with lock:
-            hit = memo.get(slot)
-            if hit is not None and hit[0] == path:
-                return hit[1]
-            value = read(path)
-            if value is _MISS:
-                _mark_corpus(tag_dir, sf_dir)
-                t0 = time.perf_counter()
-                value = make(path)
-                dt = time.perf_counter() - t0
-                if os.path.isdir(path):
-                    _evict_superseded_disk(path)
-                with _LOCK:
-                    BUILD_SECONDS[stem] = BUILD_SECONDS.get(stem, 0.0) + dt
+        value = read(path)
+        if value is _MISS:
+            t0 = time.perf_counter()
+            value = make(path)
+            dt = time.perf_counter() - t0
+            if os.path.isdir(path):
+                _evict_superseded_disk(path)
             with _LOCK:
-                memo[slot] = (path, value)
-            return value
-    finally:
+                BUILD_SECONDS[stem] = BUILD_SECONDS.get(stem, 0.0) + dt
+        pin = lock(os.path.join(path, _META), fcntl.LOCK_SH)
         with _LOCK:
-            _BUILD_LOCKS.pop(path, None)
+            old = memo.get(slot)
+            memo[slot] = (path, value, pin)
+        _unpin(old)
+        return value
 
 
 # ------------------------------------------------------------- shapes
@@ -435,7 +470,7 @@ def corpus_artifact(
     ``localCheckpoint``-ed from the memo only."""
 
     def read(path: str) -> object:
-        meta_p = os.path.join(path, "_meta.json")
+        meta_p = os.path.join(path, _META)
         data_p = os.path.join(path, "data")
         if not (os.path.isfile(meta_p) and os.path.isdir(data_p)):
             return _MISS
@@ -461,7 +496,7 @@ def corpus_artifact(
                 "schema": built.schema.jsonValue(),
                 "rows": _parquet_rows(data_p),
             }
-            with open(os.path.join(tmp, "_meta.json"), "w") as fh:
+            with open(os.path.join(tmp, _META), "w") as fh:
                 json.dump(meta, fh)
 
         try:
@@ -481,31 +516,31 @@ def census_artifact(
 ) -> object:
     """The driver-side census value ``name`` of ``sf_dir`` (bucket
     histograms, bitset words, bounds), built with ``build()`` once per
-    corpus generation and persisted as pickle."""
+    corpus generation and persisted as JSON. Every process, the
+    building one included, serves the value parsed from that JSON, so
+    tuples come back as lists and a value JSON cannot encode is a
+    build error."""
 
     def read(path: str) -> object:
-        p = os.path.join(path, "value.pkl")
+        p = os.path.join(path, "value.json")
         if not os.path.isfile(p):
             return _MISS
         try:
-            with open(p, "rb") as fh:
-                return pickle.load(fh)
+            with open(p) as fh:
+                return json.load(fh)
         except Exception:
             shutil.rmtree(path, ignore_errors=True)
             return _MISS
 
     def make(path: str) -> object:
-        value = build()
+        text = json.dumps(build(), allow_nan=False)
 
         def fill(tmp: str) -> None:
-            with open(os.path.join(tmp, "value.pkl"), "wb") as fh:
-                pickle.dump(value, fh)
+            with open(os.path.join(tmp, "value.json"), "w") as fh:
+                fh.write(text)
 
-        try:
-            publish(path, fill)
-        except Exception:  # unpicklable: served from the memo only
-            pass
-        return value
+        publish(path, fill)
+        return json.loads(text)
 
     return _build_once(spark, sf_dir, f"census:{name}", read, make)
 
@@ -545,13 +580,16 @@ def clear_artifacts(
     persisted generations (it means "this artifact's definition is
     void", which no fingerprint can see); a bare ``clear_artifacts()``
     wipes the whole disk store; a session-only clear leaves disk alone,
-    so clearing one session does not force other processes to rebuild."""
+    so clearing one session does not force other processes to rebuild.
+    A disk clear also deletes the build-lock files, so it must not run
+    while a build of that artifact is live in any process: the next
+    builder would lock a new file and not wait for the old holder."""
     stems = None if name is None else {name, f"census:{name}", f"dir:{name}"}
     with _LOCK:
         for s in [spark] if spark is not None else list(_SESSIONS):
             memo = getattr(s, _MEMO_ATTR, {})
             for slot in [k for k in memo if stems is None or k[1] in stems]:
-                memo.pop(slot, None)
+                _unpin(memo.pop(slot, None))
     if stems is None and spark is not None:
         return
     root = artifact_root()

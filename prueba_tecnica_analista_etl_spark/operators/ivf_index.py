@@ -33,6 +33,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from prueba_tecnica_analista_etl_spark.artifacts import (
+    recover,
+    replace,
+    staging,
+)
 from prueba_tecnica_analista_etl_spark.functions.vectors import (
     as_double,
     assign_clusters,
@@ -130,6 +135,7 @@ def ivf_probe_clusters(
     """The ``nprobe`` nearest centroid ids for ``query`` by cosine —
     O(k·dim) numpy on the driver, the only non-distributed step."""
     qv = np.asarray(query, dtype=np.float64)
+    centroids = np.asarray(centroids, dtype=np.float64)
     Cn = centroids / np.maximum(
         np.linalg.norm(centroids, axis=1, keepdims=True), 1e-12
     )
@@ -330,12 +336,6 @@ def ivf_rebalance(
     ``artifacts.recover`` restores it on the next rebalance. The
     sidecar schema + model make either one self-contained. Returns the
     new centroid model."""
-    from prueba_tecnica_analista_etl_spark.artifacts import (
-        recover,
-        replace,
-        staging,
-    )
-
     recover(path)
     live = _read_data(spark, path).select(
         F.col("vec_id"), F.col("vector").alias("embedding")

@@ -274,8 +274,8 @@ def near_dup_purge_stable(
 # frame (extensions_pipeline._unigram_scored): real pipelines compute
 # these once and reuse them across runs AND processes. The generalized
 # store lives in artifacts.corpus_artifact (weakref'd sessions,
-# disk-persisted frames, explicit invalidation); these wrappers keep
-# the original API.
+# disk-persisted frames keyed by a fresh corpus fingerprint); these
+# wrappers keep the original API.
 
 
 def _minhash_pairs_key() -> str:

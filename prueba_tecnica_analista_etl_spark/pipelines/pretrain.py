@@ -56,9 +56,9 @@ stages that read only the raw corpus — the SemDeDup labels (off
 ``embeddings``) and the span census (off ``documents``) — build on
 two worker threads while curation runs, their jobs under the caller's
 job group. Neither changes what the run computes: ``semantic_purge``
-waits on the artifact store's per-key build lock for the labels and
-then reads them from the session memo, so each artifact is still
-built once.
+waits on the artifact store's build lock for the labels and then
+reads them from the session memo, so each artifact is still built
+once.
 
 Reference lineage: the reference's notebook pipeline (read → clean →
 dedup → classify → export, ``ETL_Prueba_Tecnica.ipynb:44-116``) is

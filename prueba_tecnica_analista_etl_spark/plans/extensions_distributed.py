@@ -67,7 +67,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from prueba_tecnica_analista_etl_spark.artifacts import census_artifact
+from prueba_tecnica_analista_etl_spark.artifacts import (
+    census_artifact,
+    corpus_artifact,
+)
 from prueba_tecnica_analista_etl_spark.operators.bloom import (
     bitset_semi_join,
     bitset_words,
@@ -721,10 +724,6 @@ def q_rolling_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     # days) rows, strictly smaller than events. The per-call work
     # (×7 anchor explode, day-grid join, per-anchor distinct count)
     # stays live.
-    from prueba_tecnica_analista_etl_spark.artifacts import (
-        corpus_artifact,
-    )
-
     def _build_ud() -> DataFrame:
         return (
             _t(spark, sf_dir, "events")
@@ -780,9 +779,6 @@ def _eval_day_value_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     — strictly smaller than events and 5 narrow columns wide, the
     §8 'decide with small rows' proxy. Exact-integer contents, so
     every fold re-aggregates bit-identically."""
-    from prueba_tecnica_analista_etl_spark.artifacts import (
-        corpus_artifact,
-    )
 
     def build() -> DataFrame:
         ev = _t(spark, sf_dir, "events").filter(
@@ -814,9 +810,6 @@ def _eval_value_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     already at the granularity q_eval_auc / q_ks_distance /
     q_calibration_bins group to — serving it staged removes their
     per-invocation groupBy(value) exchange as well as the scan."""
-    from prueba_tecnica_analista_etl_spark.artifacts import (
-        corpus_artifact,
-    )
 
     def build() -> DataFrame:
         return (

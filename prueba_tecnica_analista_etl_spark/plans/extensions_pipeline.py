@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from prueba_tecnica_analista_etl_spark.artifacts import corpus_artifact
 from prueba_tecnica_analista_etl_spark.functions.text import shingles
 from prueba_tecnica_analista_etl_spark.functions.vectors import as_double
 from prueba_tecnica_analista_etl_spark.plans.queries import _t, query
@@ -182,9 +183,6 @@ def doc_grams4_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: grams materialize ~4x the text bytes, paid once and
     column-pruned on read; both consumers' remaining cost is their
     own gram-keyed aggregation, which the artifact cannot remove."""
-    from prueba_tecnica_analista_etl_spark.artifacts import (
-        corpus_artifact,
-    )
 
     def build() -> DataFrame:
         d = _t(spark, sf_dir, "documents")
@@ -214,10 +212,6 @@ def bench_grams4_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     here the corpus fingerprint in the artifact key plays that role.
     The holdout modulus is part of the key so a re-cut can never serve
     a stale vocabulary."""
-    from prueba_tecnica_analista_etl_spark.artifacts import (
-        corpus_artifact,
-    )
-
     return corpus_artifact(
         spark,
         sf_dir,
@@ -560,10 +554,6 @@ def pair_combos(arr, a_name: str, b_name: str):
     "the explode+distinct chain per consumer.",
 )
 def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from prueba_tecnica_analista_etl_spark.artifacts import (
-        corpus_artifact,
-    )
-
     def build() -> DataFrame:
         d = _t(spark, sf_dir, "documents")
         toks = F.split(F.lower(F.col("text")), " ")
@@ -621,8 +611,6 @@ def _unigram_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumers pay the tokenize/tf/vocab pipeline once per corpus, not
     once each (the cached_minhash_pairs pattern; building the first
     consumer's plan therefore runs Spark jobs eagerly)."""
-    from prueba_tecnica_analista_etl_spark.artifacts import corpus_artifact
-
     return corpus_artifact(
         spark,
         sf_dir,
@@ -1007,10 +995,6 @@ _SOURCE_DIVERGENCE_SQL = f"""
     "not corpus size.",
 )
 def q_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from prueba_tecnica_analista_etl_spark.artifacts import (
-        corpus_artifact,
-    )
-
     def build() -> DataFrame:
         d = _t(spark, sf_dir, "documents")
         return (
@@ -1290,9 +1274,6 @@ def fp8_ids_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     one frame instead of each re-running the corpus-scale
     explode+md5+groupBy subtree. O(distinct shingles) rows — the
     cached_minhash_pairs size class."""
-    from prueba_tecnica_analista_etl_spark.artifacts import (
-        corpus_artifact,
-    )
 
     def build() -> DataFrame:
         d = _t(spark, sf_dir, "documents")
@@ -1421,9 +1402,6 @@ def cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole iteration; the cached_minhash_pairs discipline applies —
     built once per corpus generation. The fixpoint cost stays visible
     in tests and first-use (bench warm-up)."""
-    from prueba_tecnica_analista_etl_spark.artifacts import (
-        corpus_artifact,
-    )
     from prueba_tecnica_analista_etl_spark.operators.components import (
         connected_components,
     )
@@ -2222,10 +2200,6 @@ def _entropy_oracle_sql() -> str:
     "census is sources-sized.",
 )
 def q_unigram_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from prueba_tecnica_analista_etl_spark.artifacts import (
-        corpus_artifact,
-    )
-
     def build() -> DataFrame:
         # Folded from the shared doc_term_tf artifact: the
         # token-stream explode is paid once for the whole term
@@ -2293,9 +2267,6 @@ def doc_span_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     per corpus alongside doc_grams4 (the span stream is the shared
     feature for every substring-level consumer).  Docs shorter than
     SPAN_K contribute no spans (too short to memorize — documented)."""
-    from prueba_tecnica_analista_etl_spark.artifacts import (
-        corpus_artifact,
-    )
 
     def build() -> DataFrame:
         d = spread(_t(spark, sf_dir, "documents"))

@@ -26,6 +26,11 @@ import random
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from prueba_tecnica_analista_etl_spark.artifacts import (
+    artifact_directory,
+    census_artifact,
+    corpus_artifact,
+)
 from prueba_tecnica_analista_etl_spark.functions.text import (
     jaccard,
     md5_60,
@@ -277,8 +282,6 @@ def doc_shingle_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``_unigram_scored`` discipline. At 100 TB this is the standard
     move: materialize the per-doc feature frame as a first-class
     dataset and fan the near-dup tiers out from it."""
-    from prueba_tecnica_analista_etl_spark.artifacts import corpus_artifact
-
     return corpus_artifact(
         spark,
         sf_dir,
@@ -632,10 +635,6 @@ def _ngram_oracle_sql() -> str:
     "space (27k observed) keeps fan-out bounded.",
 )
 def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from prueba_tecnica_analista_etl_spark.artifacts import (
-        corpus_artifact,
-    )
-
     # Pair frame staged whole per corpus (deterministic: md5_60
     # bucket keys, constant-seed skew chunks, exact Jaccard) — the
     # cached_minhash_pairs class; the live construction runs on first
@@ -774,10 +773,6 @@ def _simhash_oracle_sql() -> str:
     "(degenerate bands → near-n² candidates).",
 )
 def q_simhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from prueba_tecnica_analista_etl_spark.artifacts import (
-        corpus_artifact,
-    )
-
     # Pair frame staged whole per corpus (deterministic: exact
     # integer majority signature, banded integer keys, seeded skew
     # chunks, integer hamming) — the cached_minhash_pairs class.
@@ -825,10 +820,6 @@ def lsh_sig_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     × word-bits, plane seed) lives in the key; signatures are
     integer-grid exact, so the staged frame is bit-identical to the live
     construction at any partitioning."""
-    from prueba_tecnica_analista_etl_spark.artifacts import (
-        corpus_artifact,
-    )
-
     return corpus_artifact(
         spark,
         sf_dir,
@@ -1075,7 +1066,7 @@ IVF_NPROBE = 4
 # The fitted coarse quantizer is a MODEL (k×dim floats), not data:
 # real IVF systems train it once per corpus and amortize it across
 # every query AND process, so the engine stages it through the
-# artifact store (census_artifact: weakref'd session memo + pickle
+# artifact store (census_artifact: weakref'd session memo + JSON
 # sidecar on disk, fingerprint-keyed), so a fresh process does not
 # refit it.
 
@@ -1085,15 +1076,13 @@ def ivf_centroids(spark: SparkSession, sf_dir: str, e: DataFrame):
     IVF consumer (the q_ann_recall sweep, the on-disk index build), so
     a sweep over nprobe costs zero refits and a fresh process reloads
     the model instead of re-fitting."""
-    from prueba_tecnica_analista_etl_spark.artifacts import (
-        census_artifact,
-    )
-
     return census_artifact(
         spark,
         sf_dir,
         f"ivf_centroids:{IVF_K}:{IVF_ITERS}",
-        lambda: ivf_fit(e, "v", "vec_id", k=IVF_K, iters=IVF_ITERS),
+        lambda: ivf_fit(
+            e, "v", "vec_id", k=IVF_K, iters=IVF_ITERS
+        ).tolist(),
     )
 
 
@@ -1105,15 +1094,12 @@ def cached_ivf_index(spark: SparkSession, sf_dir: str) -> str:
     layout + centroid sidecar, operators/ivf_index.py) instead of an
     in-plan filter twin. Reuses the staged ``ivf_centroids`` quantizer,
     so every IVF consumer shares one model and comparable cluster ids.
-    Staged through
-    ``artifact_directory``, inheriting the store's per-key BUILD LOCK
-    (concurrent consumers never double-write the index), its atomic
-    publish, superseded-generation removal (no leaked temp-dir copies),
-    and corpus-fingerprint keying: a regenerated corpus rebuilds instead
+    Staged through ``artifact_directory``, inheriting the store's
+    ``flock`` build lock (concurrent consumers, threads or processes,
+    never double-write the index), its atomic publish,
+    superseded-generation removal (no leaked temp-dir copies), and
+    corpus-fingerprint keying: a regenerated corpus rebuilds instead
     of serving a stale index."""
-    from prueba_tecnica_analista_etl_spark.artifacts import (
-        artifact_directory,
-    )
     from prueba_tecnica_analista_etl_spark.operators.ivf_index import (
         ivf_write_index,
     )
@@ -1234,10 +1220,6 @@ def _embed_neardup_oracle_sql() -> str:
     "candidate pairs.",
 )
 def q_embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from prueba_tecnica_analista_etl_spark.artifacts import (
-        corpus_artifact,
-    )
-
     # The scored pair frame is corpus-deterministic (seeded planes,
     # integer-grid signatures, capped buckets) and pair-census sized —
     # staged once per corpus like cached_minhash_pairs; the
@@ -1339,9 +1321,6 @@ def _embed_neardup_pairs_live(
     "tests on generated container bytes.",
 )
 def q_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from prueba_tecnica_analista_etl_spark.artifacts import (
-        corpus_artifact,
-    )
     from prueba_tecnica_analista_etl_spark.multimodal import (
         extract_metadata,
         fake_assets,
@@ -1403,10 +1382,6 @@ def _stream_session(spark: SparkSession) -> SparkSession:
     "checkpointed with the query.",
 )
 def q_stream_dedupe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from prueba_tecnica_analista_etl_spark.artifacts import (
-        census_artifact,
-    )
-
     # Assert the invariants the oracle-exactness RESTS on: event_id
     # unique and non-null. NULL-id rows bypass the dedup by design, so
     # a corpus carrying a NULL id inside the duplicated overlap band
@@ -1731,10 +1706,6 @@ def q_multimodal_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         fake_assets,
     )
 
-    from prueba_tecnica_analista_etl_spark.artifacts import (
-        corpus_artifact,
-    )
-
     # The extracted feature frame is corpus-deterministic (the stub
     # extractor is a seeded function of the asset bytes) — staged
     # ONCE per corpus: extract-once-store-features is exactly
@@ -2056,9 +2027,6 @@ def q_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact: the truth frame is built once per corpus, so its O(df²)
     exhaustive side is a one-time cost.
     """
-    from prueba_tecnica_analista_etl_spark.artifacts import (
-        corpus_artifact,
-    )
     from prueba_tecnica_analista_etl_spark.pipelines.corpus import (
         cached_minhash_pairs,
     )
@@ -2191,10 +2159,6 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     the partition-pruned read tier; the 128-bit signature scan (16
     bytes/vector) is the full-scan tier with a 32x byte cut over raw
     vectors."""
-    from prueba_tecnica_analista_etl_spark.artifacts import (
-        corpus_artifact,
-    )
-
     # The ENTIRE census (6 rows) is corpus-deterministic — seeded
     # planes, fixed probe, fixed operating points — so it is staged
     # whole, and its intermediates (exact truth, probe, scored
@@ -2628,8 +2592,6 @@ def semdedup_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-vector argmax window — never a global window."""
     from pyspark.sql import Window
 
-    from prueba_tecnica_analista_etl_spark.artifacts import corpus_artifact
-
     def build() -> DataFrame:
         quant = _int8_quantized(spark, sf_dir)
         # Model-sized collect: k int8 vectors. Only this build reads
@@ -2706,10 +2668,6 @@ def semdedup_pairs_for(assigned: DataFrame) -> DataFrame:
 def semdedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The seed-medoid assignment's pair frame, staged once per
     corpus (:func:`semdedup_pairs_for` over :func:`semdedup_assign`)."""
-    from prueba_tecnica_analista_etl_spark.artifacts import (
-        corpus_artifact,
-    )
-
     return corpus_artifact(
         spark,
         sf_dir,
@@ -2723,9 +2681,6 @@ def semdedup_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-dup pairs; comp = min vec_id of the family.  The fixpoint is
     eager (cluster_labels discipline), so it is staged per corpus;
     survivors = comp representatives, purged = the rest."""
-    from prueba_tecnica_analista_etl_spark.artifacts import (
-        corpus_artifact,
-    )
     from prueba_tecnica_analista_etl_spark.operators.components import (
         connected_components,
     )

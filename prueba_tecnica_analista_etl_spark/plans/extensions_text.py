@@ -9,6 +9,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from prueba_tecnica_analista_etl_spark.artifacts import (
+    census_artifact,
+    corpus_artifact,
+)
 from prueba_tecnica_analista_etl_spark.functions.text import (
     STOPWORDS,
     fingerprint,
@@ -35,9 +39,6 @@ def doc_term_tf_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     census all fold this artifact instead of each re-running the
     corpus explode+groupBy. O(doc-term pairs) rows — the collapsed
     frame every one of those queries built privately before."""
-    from prueba_tecnica_analista_etl_spark.artifacts import (
-        corpus_artifact,
-    )
 
     def build() -> DataFrame:
         d = _t(spark, sf_dir, "documents")
@@ -366,9 +367,6 @@ def _winnow_fp_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     (heavy per-row compute) and its Arrow
     stage stays pinned by test_staged_builders_keep_their_arrow_stages;
     consumers fold censuses from the stored arrays."""
-    from prueba_tecnica_analista_etl_spark.artifacts import (
-        corpus_artifact,
-    )
     from prueba_tecnica_analista_etl_spark.functions.text import (
         winnow_fingerprints,
     )
@@ -754,17 +752,11 @@ def q_eval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("dcg_e6"),
     )
-    # The per-label corpus count is a vocabulary-sized census —
-    # staged per corpus and shipped as a map LITERAL, so the
-    # former third embeddings scan + broadcast join became a pure
-    # projection. NULL-label census rows are skipped (the former
-    # inner join could never match them), and a NULL true_label
-    # probe drops via the isNotNull filter exactly as the inner
-    # join dropped it.
-    from prueba_tecnica_analista_etl_spark.artifacts import (
-        census_artifact,
-    )
-
+    # The per-label corpus count is a vocabulary-sized census, staged
+    # per corpus and joined as a broadcast local relation, so it adds
+    # no third embeddings scan. NULL-label census rows are skipped
+    # (the join could never match them), and the inner join drops a
+    # probe with a NULL true_label.
     lc = census_artifact(
         spark,
         sf_dir,
@@ -777,20 +769,10 @@ def q_eval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
             if r["label"] is not None
         ),
     )
-    n_of_label = F.element_at(
-        F.create_map(
-            *[
-                c
-                for label, n in lc
-                for c in (F.lit(label), F.lit(n).cast("long"))
-            ]
-        ),
-        F.col("true_label"),
-    )
+    label_t = e.schema["label"].dataType.simpleString()
+    counts = spark.createDataFrame(lc, f"true_label {label_t}, n long")
     pw_arr = F.array(*[F.lit(pw) for pw in NDCG_PW])
-    full = per.withColumn("n", n_of_label).filter(
-        F.col("n").isNotNull()
-    ).select(
+    full = per.join(F.broadcast(counts), "true_label").select(
         "q_id",
         "true_label",
         "n_rel_at_k",
@@ -924,9 +906,6 @@ def _bm25_per_doc_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     differently-pruned subtrees); both legs now fold the collapsed
     O(docs)-row frame — zero corpus scans per call, scoring stays
     map-only over it."""
-    from prueba_tecnica_analista_etl_spark.artifacts import (
-        corpus_artifact,
-    )
 
     def build() -> DataFrame:
         d = _t(spark, sf_dir, "documents")

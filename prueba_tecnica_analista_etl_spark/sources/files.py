@@ -22,6 +22,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from prueba_tecnica_analista_etl_spark.artifacts import (
+    recover,
+    replace,
+    staging,
+)
+
 
 def write_json(df: DataFrame, path: str) -> None:
     """JSON-lines sink (one object per line, ISO-8601 temporals)."""
@@ -101,12 +107,6 @@ def compact_parquet(
     import math
     import os
 
-    from prueba_tecnica_analista_etl_spark.artifacts import (
-        recover,
-        replace,
-        staging,
-    )
-
     recover(path)
     part_dirs = [
         e.name
@@ -169,8 +169,6 @@ def compact_partitioned(
     Run in the sink's idle window.
     """
     import os
-
-    from prueba_tecnica_analista_etl_spark.artifacts import recover
 
     done: dict[str, int] = {}
     recover(data_path)
@@ -276,11 +274,6 @@ def zorder_write(
     while zcol in df.columns:
         zcol += "_"
     zed = df.withColumn(zcol, zvalue(scaled, bits_per_col))
-    from prueba_tecnica_analista_etl_spark.artifacts import (
-        recover,
-        replace,
-        staging,
-    )
 
     recover(path)
     staged = staging(path)

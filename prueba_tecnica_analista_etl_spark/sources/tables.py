@@ -103,9 +103,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         spark,
         sf_dir,
         f"schema:{name}:{confs}",
-        lambda: spark.read.parquet(path).schema,
+        lambda: spark.read.parquet(path).schema.jsonValue(),
     )
-    df = spark.read.schema(schema).parquet(path)
+    df = spark.read.schema(T.StructType.fromJson(schema)).parquet(path)
     if name == "events":
         df = normalize_event_time(df, "ts")
     return df

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from prueba_tecnica_analista_etl_spark.artifacts import artifact_directory
 from prueba_tecnica_analista_etl_spark.session import ensure_runtime_conf
 from prueba_tecnica_analista_etl_spark.sources.tables import (
     load_table,
@@ -36,9 +37,6 @@ def _staged_landing_dir(
     and returns the frame schema, which is persisted as a JSON sidecar
     so a reusing process can plan the file stream without re-deriving
     it."""
-    from prueba_tecnica_analista_etl_spark.artifacts import (
-        artifact_directory,
-    )
 
     def _build(tmp: str) -> None:
         schema = write(tmp)

@@ -14,13 +14,13 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
-import threading
 import uuid
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
+
+from prueba_tecnica_analista_etl_spark.artifacts import lock
 
 
 def tumbling_counts(
@@ -89,39 +89,16 @@ def sessionize(stream: DataFrame) -> DataFrame:
     )
 
 
-# One run lock per state dir: two live streaming queries sharing a
-# checkpoint dir is undefined behavior.
-_RUN_LOCK = threading.Lock()
-_RUN_LOCKS: dict[str, threading.Lock] = {}
-
-
-@contextmanager
-def _cross_process_lock(path: str):
-    """Advisory flock for persistent checkpoints shared ACROSS
-    processes: two concurrent availableNow resumes of one checkpoint is
-    undefined behavior, and a corrupted checkpoint would poison every
-    future resume. Blocking: the loser waits, then resumes a
-    now-drained checkpoint (zero micro-batches) — cheap and correct."""
-    import fcntl
-
-    with open(path, "a") as fh:
-        fcntl.flock(fh, fcntl.LOCK_EX)
-        try:
-            yield
-        finally:
-            fcntl.flock(fh, fcntl.LOCK_UN)
-
-
 def drain_available_now(writer: DataStreamWriter, state_dir: str) -> None:
     """Run a configured ``writer`` to availableNow completion with its
-    checkpoint at ``<state_dir>/ckpt``. Runs on one ``state_dir`` are
-    serialized within the process by a run lock and across processes by
-    an ``flock`` on ``<state_dir>/.lock``, so a resume never races
-    another live query on the same checkpoint."""
+    checkpoint at ``<state_dir>/ckpt``. Two live queries sharing a
+    checkpoint is undefined behavior, and a corrupted checkpoint would
+    poison every future resume, so runs on one ``state_dir`` hold an
+    ``flock`` on ``<state_dir>/.lock``. It excludes threads of this
+    process as well as other processes; the loser waits, then resumes
+    a drained checkpoint (zero micro-batches)."""
     os.makedirs(state_dir, exist_ok=True)
-    with _RUN_LOCK:
-        run_lock = _RUN_LOCKS.setdefault(state_dir, threading.Lock())
-    with run_lock, _cross_process_lock(os.path.join(state_dir, ".lock")):
+    with lock(os.path.join(state_dir, ".lock")):
         writer.option(
             "checkpointLocation", os.path.join(state_dir, "ckpt")
         ).trigger(availableNow=True).start().awaitTermination()

@@ -568,7 +568,7 @@ def test_artifact_store_survives_process_boundary(spark, tmp_path):
     """Disk layer: artifacts are one-time-per-
     CORPUS, not per-process — a lookup whose memory memo is gone (the
     fresh-process case, simulated by clearing the in-memory caches)
-    must be served from the persisted parquet/pickle WITHOUT calling
+    must be served from the persisted parquet/JSON WITHOUT calling
     build(). clear_artifacts(name=...) voids the disk copy too (a
     name-scoped clear means the artifact's definition changed, which
     no corpus fingerprint can detect) — after it, build() runs again."""
@@ -934,12 +934,166 @@ def test_store_builds_once_under_thread_race(
     assert all(r == results[0] for r in results) and results[0] is not None
 
 
-def test_store_rebuilds_truncated_parquet_and_garbage_pickle(
+_RACE_BUILD = """
+import os, sys, time
+sys.path.insert(0, sys.argv[1])
+from prueba_tecnica_analista_etl_spark import artifacts
+
+corpus, log = sys.argv[2], sys.argv[3]
+
+def build(d):
+    with open(log, "a") as fh:
+        fh.write(f"{os.getpid()}\\n")
+    time.sleep(1)
+    with open(os.path.join(d, "payload"), "w") as fh:
+        fh.write("x")
+
+print("READY", flush=True)
+sys.stdin.readline()
+print(artifacts.artifact_directory(corpus, "xrace", build), flush=True)
+"""
+
+
+def test_store_builds_once_under_process_race(tmp_path, monkeypatch):
+    """Two processes racing one missing artifact: exactly one runs
+    build(), and both are served the same directory. Each build logs
+    its pid and sleeps, so a second build inside the window shows as a
+    second log line."""
+    import os
+    import subprocess
+    import sys
+
+    corpus = _store_corpus(tmp_path, monkeypatch)
+    script = tmp_path / "race_build.py"
+    script.write_text(_RACE_BUILD)
+    log = tmp_path / "builds.log"
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    procs = [
+        subprocess.Popen(
+            [sys.executable, str(script), repo, corpus, str(log)],
+            stdin=subprocess.PIPE,
+            stdout=subprocess.PIPE,
+            text=True,
+        )
+        for _ in range(2)
+    ]
+    try:
+        for p in procs:
+            assert p.stdout.readline().strip() == "READY"
+        for p in procs:
+            p.stdin.write("go\n")
+            p.stdin.flush()
+        served = [p.communicate(timeout=120)[0].strip() for p in procs]
+    finally:
+        for p in procs:
+            p.kill()
+    assert [p.returncode for p in procs] == [0, 0]
+    assert len(log.read_text().splitlines()) == 1
+    assert served[0] == served[1] and os.path.isdir(served[0])
+
+
+def test_lock_modes(tmp_path):
+    """A blocking exclusive lock creates its file and raises when the
+    directory is gone, so ``with lock(...)`` never gets None. A shared
+    lock or a non-blocking probe returns None for a missing file or a
+    held lock; a second open in the same process conflicts."""
+    import fcntl
+    import os
+
+    from prueba_tecnica_analista_etl_spark.artifacts import lock
+
+    gone = str(tmp_path / "gone" / "x.lock")
+    with pytest.raises(FileNotFoundError):
+        lock(gone)
+    assert lock(gone, fcntl.LOCK_SH) is None
+    path = str(tmp_path / "x.lock")
+    held = lock(path)
+    assert os.path.exists(path)
+    assert lock(path, fcntl.LOCK_SH | fcntl.LOCK_NB) is None
+    assert lock(path, fcntl.LOCK_EX | fcntl.LOCK_NB) is None
+    held.close()
+    probe = lock(path, fcntl.LOCK_EX | fcntl.LOCK_NB)
+    assert probe is not None
+    probe.close()
+
+
+_SERVED_READER = """
+import sys
+sys.path.insert(0, sys.argv[1])
+from pyspark.sql import SparkSession
+from prueba_tecnica_analista_etl_spark import artifacts
+
+spark = (
+    SparkSession.builder.master("local[1]")
+    .config("spark.driver.memory", "512m")
+    .config("spark.ui.enabled", "false")
+    .config("spark.sql.shuffle.partitions", "1")
+    .getOrCreate()
+)
+spark.sparkContext.setLogLevel("OFF")
+df = artifacts.corpus_artifact(
+    spark, sys.argv[2], "xpin", lambda: spark.range(10)
+)
+print("SERVED", flush=True)
+sys.stdin.readline()
+print(sorted(r.id for r in df.collect()), flush=True)
+"""
+
+
+def test_store_keeps_generation_another_process_serves(
+    spark, tmp_path, monkeypatch
+):
+    """A frame served in one process must stay readable when another
+    process lands its successor: the reader is served the first
+    generation, the corpus is rewritten, this process builds and lands
+    the second generation, and only then does the reader scan its
+    frame. Eviction must skip the generation the reader still
+    serves."""
+    import os
+    import subprocess
+    import sys
+
+    from prueba_tecnica_analista_etl_spark import artifacts
+
+    corpus = _store_corpus(tmp_path, monkeypatch)
+    script = tmp_path / "served_reader.py"
+    script.write_text(_SERVED_READER)
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with open(tmp_path / "reader.err", "w") as err:
+        reader = subprocess.Popen(
+            [sys.executable, str(script), repo, corpus],
+            cwd=str(tmp_path),
+            stdin=subprocess.PIPE,
+            stdout=subprocess.PIPE,
+            stderr=err,
+            text=True,
+        )
+        try:
+            assert reader.stdout.readline().strip() == "SERVED", (
+                (tmp_path / "reader.err").read_text()[-3000:]
+            )
+            (old_dir,) = _generation_dirs(corpus, "xpin")
+            with open(os.path.join(corpus, "t.parquet"), "w") as fh:
+                fh.write("generation-two, a different size")
+            new = artifacts.corpus_artifact(
+                spark, corpus, "xpin", lambda: spark.range(20)
+            )
+            assert new.count() == 20
+            assert os.path.isdir(old_dir), "a served generation must be kept"
+            out, _ = reader.communicate("scan\n", timeout=300)
+        finally:
+            reader.kill()
+    assert out.strip() == str(list(range(10))), (
+        (tmp_path / "reader.err").read_text()[-3000:]
+    )
+
+
+def test_store_rebuilds_truncated_parquet_and_garbage_json(
     spark, tmp_path, monkeypatch
 ):
     """A persisted generation that no longer reads back (a truncated
-    parquet part, a garbage value.pkl) must end in a rebuild serving the
-    right value, not an error and not a stale value."""
+    parquet part, a garbage value.json) must end in a rebuild serving
+    the right value, not an error and not a stale value."""
     import glob
     import os
 
@@ -968,8 +1122,8 @@ def test_store_rebuilds_truncated_parquet_and_garbage_pickle(
         size = os.path.getsize(p)
         with open(p, "r+b") as fh:
             fh.truncate(size // 2)
-    with open(os.path.join(value_dir, "value.pkl"), "wb") as fh:
-        fh.write(b"not a pickle")
+    with open(os.path.join(value_dir, "value.json"), "w") as fh:
+        fh.write("{not json")
 
     artifacts.clear_artifacts(spark)
     df = artifacts.corpus_artifact(spark, corpus, "bad_frame", build_frame)

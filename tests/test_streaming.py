@@ -1254,15 +1254,23 @@ def test_out_of_order_replay_routes_late_rows_to_dlq(
     assert n_main2 + n_dlq2 == total
 
 
+@pytest.mark.parametrize(
+    "concurrent", [False, True], ids=["sequential", "concurrent"]
+)
 def test_run_available_now_cached_sink_resumes_incrementally(
-    spark, sf_dir, tmp_path
+    spark, sf_dir, tmp_path, concurrent
 ):
     """The state_dir path: the first invocation
     replays the landing dir into the persistent parquet sink; a second
     invocation RESUMES the checkpoint, finds no new source files, runs
     zero micro-batches — observable as the sink's file set not
     changing — and returns the identical rows, lazily (no collect in
-    the registry path)."""
+    the registry path). Concurrent: two threads start the first
+    invocation together; the checkpoint lock lets one drain and the
+    other resume the drained checkpoint, so both return the same rows
+    and the sink holds one run's output (no window written twice)."""
+    import threading
+
     from prueba_tecnica_analista_etl_spark.streaming.windows import (
         run_available_now,
         tumbling_counts,
@@ -1280,7 +1288,28 @@ def test_run_available_now_cached_sink_resumes_incrementally(
             tumbling_counts(stream, "0 seconds"), spark, state_dir=state_dir
         )
 
+    if concurrent:
+        gate = threading.Barrier(2)
+        served = [None, None]
+
+        def client(i):
+            gate.wait()
+            served[i] = _sorted_rows(run())
+
+        threads = [
+            threading.Thread(target=client, args=(i,)) for i in range(2)
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+        assert not any(t.is_alive() for t in threads)
+        assert served[0] is not None and served[0] == served[1]
     first = run()
+    rows = _sorted_rows(first)
+    assert len(set(rows)) == len(rows), "a window was written twice"
+    if concurrent:
+        assert served[0] == rows
     out_dir = os.path.join(state_dir, "out")
     files_after_first = sorted(
         f for f in os.listdir(out_dir) if f.endswith(".parquet")
