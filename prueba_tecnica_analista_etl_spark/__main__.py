@@ -159,8 +159,7 @@ def main(
     if args.cmd == "list":
         for name, spec in REGISTRY.items():
             kind = "oracle" if spec.oracle is not None else "rows-only"
-            first = (spec.doc or "").split(":")[0] or "—"
-            print(f"{name:28s} [{kind}] {first}")
+            print(f"{name:28s} [{kind}] {spec.doc}")
         return 0
 
     if args.cmd == "pretrain":

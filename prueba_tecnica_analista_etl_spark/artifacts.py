@@ -87,10 +87,10 @@ copy:
   while a consumer here still scans it.
 
 The memo lives on the session object, so a dropped session is
-collected with its frames; a weak set of sessions lets a bare
-:func:`clear_artifacts` reach every memo. Only small post-aggregation
-frames belong here: persisting a pre-shuffle exploded frame would
-trade cheap recompute for I/O.
+collected with its frames, and a finalizer closes its pins; a weak
+set of sessions lets a bare :func:`clear_artifacts` reach every memo.
+Only small post-aggregation frames belong here: persisting a
+pre-shuffle exploded frame would trade cheap recompute for I/O.
 """
 
 from __future__ import annotations
@@ -138,10 +138,11 @@ _SOURCE_DIGEST = _source_digest(os.path.dirname(os.path.abspath(__file__)))
 # sibling queries on one session from a thread pool).
 _LOCK = threading.Lock()
 # Each session's memo, {(sf_dir, stem): (generation path, served
-# value, pin)}, is an attribute of the session: a served frame refers
-# back to its session, so a memo held in a module-level map keyed by
-# the session would keep the session alive forever. The weak set only
-# lets clear_artifacts find the live memos.
+# value)}, and its pins, {(sf_dir, stem): open _meta.json}, are an
+# attribute of the session: a served frame refers back to its
+# session, so a memo held in a module-level map keyed by the session
+# would keep the session alive forever. The weak set only lets
+# clear_artifacts find the live memos.
 _MEMO_ATTR = "_ptae_artifact_memo"
 _SESSIONS: "weakref.WeakSet[SparkSession]" = weakref.WeakSet()
 _MISS = object()
@@ -265,14 +266,16 @@ def _mark_corpus(tag_dir: str, sf_dir: str) -> None:
             pass
 
 
-def _memo(spark: SparkSession) -> dict:
-    """``spark``'s artifact memo, created on first use; call under
-    ``_LOCK``."""
+def _memo(spark: SparkSession) -> tuple[dict, dict]:
+    """``spark``'s artifact memo and pins, created on first use; call
+    under ``_LOCK``. The finalizer holds the pins only, so the session
+    stays collectable and its shared locks close when it is."""
     memo = getattr(spark, _MEMO_ATTR, None)
     if memo is None:
-        memo = {}
+        memo = ({}, {})
         setattr(spark, _MEMO_ATTR, memo)
         _SESSIONS.add(spark)
+        weakref.finalize(spark, _close_pins, memo[1])
     return memo
 
 
@@ -301,10 +304,16 @@ def _evict_superseded_disk(final: str) -> None:
         shutil.rmtree(p, ignore_errors=True)
 
 
-def _unpin(hit: tuple | None) -> None:
+def _close_pins(pins: dict) -> None:
+    for pin in pins.values():
+        pin.close()
+
+
+def _unpin(pins: dict, slot: tuple) -> None:
     """Release the pin of a memo entry that was replaced or dropped."""
-    if hit is not None and hit[2] is not None:
-        hit[2].close()
+    pin = pins.pop(slot, None)
+    if pin is not None:
+        pin.close()
 
 
 # ------------------------------------------------------ directory swaps
@@ -416,7 +425,7 @@ def _build_once(
     )
     slot = (sf_dir, stem)
     with _LOCK:
-        memo = _memo(spark) if spark is not None else {}
+        memo, pins = _memo(spark) if spark is not None else ({}, {})
         hit = memo.get(slot)
     if hit is not None and hit[0] == path:
         return hit[1]
@@ -436,9 +445,10 @@ def _build_once(
                 BUILD_SECONDS[stem] = BUILD_SECONDS.get(stem, 0.0) + dt
         pin = lock(os.path.join(path, _META), fcntl.LOCK_SH)
         with _LOCK:
-            old = memo.get(slot)
-            memo[slot] = (path, value, pin)
-        _unpin(old)
+            memo[slot] = (path, value)
+            _unpin(pins, slot)
+            if pin is not None:
+                pins[slot] = pin
         return value
 
 
@@ -587,9 +597,10 @@ def clear_artifacts(
     stems = None if name is None else {name, f"census:{name}", f"dir:{name}"}
     with _LOCK:
         for s in [spark] if spark is not None else list(_SESSIONS):
-            memo = getattr(s, _MEMO_ATTR, {})
+            memo, pins = getattr(s, _MEMO_ATTR, ({}, {}))
             for slot in [k for k in memo if stems is None or k[1] in stems]:
-                _unpin(memo.pop(slot, None))
+                memo.pop(slot)
+                _unpin(pins, slot)
     if stems is None and spark is not None:
         return
     root = artifact_root()

@@ -11,7 +11,7 @@ scheme):
 2. collect the per-bucket histogram — census-sized (``n_buckets``
    rows, independent of table size) — and prefix-sum it driver-side
    into per-bucket OFFSETS;
-3. broadcast the offsets back and rank WITHIN buckets
+3. ship the offsets back as plan literals and rank WITHIN buckets
    (``Window.partitionBy(bucket)`` — a sharded window), adding the
    bucket's offset.
 
@@ -36,31 +36,20 @@ from pyspark.sql import functions as F
 
 _BUCKET = "__rank_bucket"
 
-# Offset tables up to this many slots ship as a dense array LITERAL
-# (one element_at projection per row) instead of a createDataFrame +
-# broadcast join; census schemes here use <= 1024 buckets, far below
-# it. Larger/sparser id spaces fall back to the join form.
-_MAX_LITERAL_SLOTS = 8192
-
 
 def _offset_lookup(
     offsets: list[tuple[int, ...]], n_vals: int
-) -> list[Column] | None:
+) -> list[Column]:
     """Per-bucket offset lookup expressions — dense ``array`` literals
     indexed by bucket id: the offsets are a census-sized,
-    driver-known table, so shipping them as plan literals turns the
-    former per-invocation ``createDataFrame`` (a driver→JVM row
-    conversion) + ``BroadcastHashJoin`` against the FACT-SIZED frame
-    into a map-only ``element_at`` projection — no join, no broadcast,
-    no extra plan node on the 100 TB path. Gaps (empty buckets) hold
-    0; no row carries their id, so the placeholder is never read.
-    Returns None when the id space is too large/sparse to densify —
-    callers keep the join form then."""
+    driver-known table (<= 1024 buckets in every scheme here), so they
+    ride the plan as literals and each row pays one ``element_at``
+    projection — no join, no broadcast, no extra plan node on the
+    fact path. Gaps (empty buckets) hold 0; no row carries their id,
+    so the placeholder is never read."""
     if not offsets:
         return [F.lit(0).cast("long") for _ in range(n_vals)]
     max_b = max(b for b, *_ in offsets)
-    if max_b >= _MAX_LITERAL_SLOTS:
-        return None
     cols: list[Column] = []
     for i in range(n_vals):
         dense = [0] * (max_b + 1)
@@ -68,8 +57,8 @@ def _offset_lookup(
             dense[b] = vals[i]
         # ONE sql string through py4j: F.lit(<1024-element list>)
         # marshals element-by-element (~400 ms per construction,
-        # measured — it would eat the whole win); the parsed array
-        # literal costs ~2 ms and executes identically.
+        # measured); the parsed array literal costs ~2 ms and
+        # executes identically.
         arr = F.expr(
             "array(" + ",".join(f"{v}L" for v in dense) + ")"
         )
@@ -153,10 +142,10 @@ def bucketed_rank(
     from the same (df, bucket) pair or offsets will be wrong.
 
     A NULL bucket (NULL sort key through numeric_bucket /
-    md5_prefix_bucket) has no place in the key order — and the inner
-    offset join would silently DROP those rows, a worse failure than
-    stopping. Engines disagree on NULL placement anyway (Spark
-    windows default NULLS FIRST, DuckDB NULLS LAST), so
+    md5_prefix_bucket) has no place in the key order, and ranking it
+    silently would be a worse failure than stopping. Engines disagree
+    on NULL placement anyway (Spark windows default NULLS FIRST,
+    DuckDB NULLS LAST), so
     bucket_histogram raises and the caller decides: filter NULLs out
     or coalesce them to a sentinel key first."""
     if method not in ("rank", "row_number"):
@@ -170,26 +159,13 @@ def bucketed_rank(
         running += n
     w = Window.partitionBy(_BUCKET).orderBy(*order_cols)
     within = F.rank() if method == "rank" else F.row_number()
-    lookup = _offset_lookup(offsets, 1)
-    if lookup is not None:
-        # Dense-literal path: map-only offset projection. The
-        # inner offset join used to DROP NULL-bucket rows silently;
-        # the filter preserves exactly that semantic (the census pass
-        # raises on NULL buckets anyway — this only matters for a
-        # staged hist fed an unexpected frame).
-        return (
-            keyed.filter(F.col(_BUCKET).isNotNull())
-            .withColumn(out_col, lookup[0] + within.over(w))
-            .drop(_BUCKET)
-        )
-    spark = df.sparkSession
-    off = spark.createDataFrame(
-        offsets or [(0, 0)], f"{_BUCKET} long, __rank_offset long"
-    )
+    # The census pass raises on NULL buckets; the filter keeps a
+    # staged hist fed an unexpected frame from ranking keyless rows.
+    offset = _offset_lookup(offsets, 1)[0]
     return (
-        keyed.join(F.broadcast(off), _BUCKET)
-        .withColumn(out_col, F.col("__rank_offset") + within.over(w))
-        .drop(_BUCKET, "__rank_offset")
+        keyed.filter(F.col(_BUCKET).isNotNull())
+        .withColumn(out_col, offset + within.over(w))
+        .drop(_BUCKET)
     )
 
 
@@ -201,8 +177,7 @@ def bucket_totals(
     size. :func:`bucketed_prefix_sums` consumes it directly;
     :func:`bucket_histogram` (the rank scheme's pass) is the
     constant-1 special case. Raises on NULL buckets — a NULL order
-    key has no place in the key order, and the offset join downstream
-    would silently DROP those rows otherwise."""
+    key has no place in the key order."""
     rows = (
         df.select(bucket.alias(_BUCKET), *sum_cols)
         .groupBy(_BUCKET)
@@ -262,29 +237,10 @@ def bucketed_prefix_sums(
         .orderBy(order_col)
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    lookup = _offset_lookup(offsets, len(sum_cols))
-    if lookup is not None:
-        # Dense-literal path — see bucketed_rank: the offsets
-        # ride the plan as array literals, removing the per-invocation
-        # createDataFrame + broadcast join from the fact path.
-        out = keyed.filter(F.col(_BUCKET).isNotNull())
-        for c, look in zip(sum_cols, lookup):
-            out = out.withColumn(
-                "cum_" + c,
-                look + F.coalesce(F.sum(c).over(w), F.lit(0)),
-            )
-        return out.drop(_BUCKET)
-    off_cols = [f"__psum_off_{c}" for c in sum_cols]
-    schema = ", ".join(
-        [f"{_BUCKET} long"] + [f"{c} long" for c in off_cols]
-    )
-    off = df.sparkSession.createDataFrame(
-        offsets or [tuple([0] * (len(sum_cols) + 1))], schema
-    )
-    out = keyed.join(F.broadcast(off), _BUCKET)
-    for c, oc in zip(sum_cols, off_cols):
+    out = keyed.filter(F.col(_BUCKET).isNotNull())
+    for c, look in zip(sum_cols, _offset_lookup(offsets, len(sum_cols))):
         out = out.withColumn(
             "cum_" + c,
-            F.col(oc) + F.coalesce(F.sum(c).over(w), F.lit(0)),
+            look + F.coalesce(F.sum(c).over(w), F.lit(0)),
         )
-    return out.drop(_BUCKET, *off_cols)
+    return out.drop(_BUCKET)

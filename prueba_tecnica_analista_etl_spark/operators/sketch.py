@@ -25,15 +25,15 @@ is approximate.
 The per-batch merge is the mergeable-summaries form (Agarwal et al.,
 "Mergeable Summaries", PODS 2012): vectorized ``value_counts`` per
 Arrow batch, merged into the partition's counters in capacity-sized
-CHUNKS with a compaction between chunks. State accounting, precisely
-(an r9 ADVICE finding asked for either a tighter bound or honesty —
-this is the honest version): the COUNTERS dict never exceeds
+CHUNKS with a compaction between chunks. State accounting, precisely:
+the COUNTERS dict never exceeds
 2×capacity entries; the transient per-batch state is the
 ``value_counts`` result itself, O(distinct keys in one Arrow batch) —
 bounded by ``spark.sql.execution.arrow.maxRecordsPerBatch`` (default
 10k rows), a configuration constant, NOT by the partition's
-cardinality (the r9 form additionally let the counters dict grow to
-the batch's distinct-key count; the chunked merge removes that term).
+cardinality (merging a whole batch at once would let the counters
+dict grow to the batch's distinct-key count; the chunked merge
+removes that term).
 Each compaction subtracts the (capacity+1)-st largest count from every
 counter and drops non-positive ones — at most ``capacity`` survive,
 each compaction removes at least (capacity+1)× the subtracted mass,
@@ -181,7 +181,7 @@ class MGStreamAccumulator:
     tests/test_streaming.py against the batch fold).
 
     Replay semantics: replayed batch_ids are skipped. With
-    ``ledger_dir`` set (the durable form — r10 verdict ask), the
+    ``ledger_dir`` set (the durable form), the
     seen-set AND the folded counters are persisted together after
     every successful fold (one atomic ``os.replace``, the
     ``_etl_control`` discipline applied to sketch state): a RESTARTED

@@ -86,6 +86,7 @@ from prueba_tecnica_analista_etl_spark.operators.rank import (
 from prueba_tecnica_analista_etl_spark.plans.queries import (
     _t,
     dec2,
+    Shape,
     money_sum,
     query,
 )
@@ -106,8 +107,11 @@ _RANK_BUCKETS = 1024
     FROM events
     WHERE value IS NOT NULL
     """,
-    doc="Distributed global RANK(): per-bucket rank + broadcast offsets; "
-    "no Exchange SinglePartition over fact rows (plan-asserted).",
+    doc="Global RANK() of events by value: per-bucket ranks plus literal bucket offsets.",
+    shape=Shape(
+        has=("windowspecdefinition(__rank_bucket", "element_at"),
+        lacks=("Exchange SinglePartition", "BroadcastExchange"),
+    ),
 )
 def q_global_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global rank over ``events.value`` as a two-pass distributed plan.
@@ -178,9 +182,8 @@ _SHUFFLE_SEED = "shuffle-seed-42:"
            ) AS position
     FROM documents
     """,
-    doc="Reproducible global training order: seeded md5 shuffle key, "
-    "global position via the bucket-histogram rank pattern — no "
-    "SinglePartition window over the corpus.",
+    doc="Reproducible global training order: docs ranked 1..n by a seeded md5 shuffle key.",
+    shape=Shape(has=("windowspecdefinition(__rank_bucket",), lacks=("Exchange SinglePartition",)),
 )
 def q_train_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic global shuffle order for training-data emission.
@@ -235,8 +238,7 @@ _SPLIT_TS = "2024-01-21 00:00:00"
     FROM events
     GROUP BY user_id
     """,
-    doc="Materialized-view delta refresh: merge(base state, delta state) "
-    "== full re-aggregation; the oracle is the full recompute.",
+    doc="Materialized-view refresh: base and delta aggregate states merged, equal to a recompute.",
 )
 def q_incremental_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Algebraic merge of partial aggregate states.
@@ -304,9 +306,7 @@ _BLOOM_BITS = 8192  # 128 longs — broadcast as one array literal
     )
     GROUP BY o_orderpriority
     """,
-    doc="Semi-join reduction: broadcast bitset prefilter on "
-    "xxhash64(custkey) drops non-matching fact rows before the join "
-    "shuffle; exact semi-join clears false positives.",
+    doc="Semi-join behind a broadcast bitset prefilter on xxhash64(custkey).",
 )
 def q_bloom_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Orders of BUILDING-segment customers via a bitset runtime filter.
@@ -381,9 +381,7 @@ def q_bloom_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM ranked r JOIN cuts c USING (event_type)
     GROUP BY r.event_type
     """,
-    doc="Per-group winsorization: clamp values to the explicit-rank "
-    "p05/p95 cut values; rank positions in pure integer arithmetic "
-    "so both engines pick identical cut rows.",
+    doc="Per-group winsorization: values clamped to the exact-rank p05/p95 cut values.",
 )
 def q_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Clamp ``events.value`` per event_type at explicit p05/p95 ranks.
@@ -472,13 +470,8 @@ _POSTINGS_CAP = 8
     ORDER BY df DESC, term
     LIMIT 20
     """,
-    doc="Retrieval-index build: per-term document frequency + ordered "
-    "posting list capped at a fixed length (skew-safe); top-20 terms "
-    "by df with total-order tiebreak. Postings serialize to a "
-    "canonical comma-joined string: the driver value-hash has proven "
-    "scalar dtypes only, and cross-engine array stringification is "
-    "exactly the hash-stability class the window lint exists to keep "
-    "out (test_recorded_window_emits_only_driver_proven_dtypes).",
+    doc="Top-20 terms by document frequency, each with its capped, ordered posting list.",
+    shape=Shape(has=("WindowGroupLimit",)),
 )
 def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inverted index over the documents table: term → (df, postings).
@@ -495,6 +488,9 @@ def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     guards against. Top-20 via TakeOrderedAndProject; (df DESC, term)
     is a total order because term is unique per row.
     """
+    # Postings serialize to a comma-joined string: the driver's value hash
+    # is proven on scalar dtypes only, and array stringification differs
+    # across engines.
     from prueba_tecnica_analista_etl_spark.plans.extensions_text import (
         doc_term_tf_frame,
     )
@@ -550,9 +546,7 @@ def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ORDER BY stage
     """,
-    doc="Corpus-curation observability: cumulative quality-gate "
-    "survival census in ONE scan (conditional aggregation), not one "
-    "scan per gate.",
+    doc="Cumulative survival census of the corpus quality gates.",
 )
 def q_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Survival counts through cumulative quality gates over documents.
@@ -616,10 +610,8 @@ def q_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM orders GROUP BY o_orderpriority
     ) UNPIVOT (cnt FOR status IN (F, O, P))
     """,
-    doc="A4 inverse (wide -> long reshape): DataFrame.unpivot over the "
-    "pivot result — the Power-Query 'unpivot columns' step the "
-    "reference's workbook world implies but never scripts; map-only "
-    "column explosion, no shuffle beyond the source aggregate.",
+    doc="Wide-to-long reshape: the order priority x status pivot unpivoted.",
+    shape=Shape(has=("Expand",), lacks=("Join",)),
 )
 def q_unpivot_long(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wide -> long reshape: unpivot the q_pivot_wide matrix back to
@@ -675,12 +667,8 @@ def q_unpivot_long(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM days d JOIN ud u ON u.day BETWEEN d.day - 6 AND d.day
     GROUP BY d.day
     """,
-    doc="W3/A2 composite: trailing 7-day DISTINCT-user census per day "
-    "(rolling WAU) — dedup to (day,user), map-only sequence-explode "
-    "to the x7 anchor days, broadcast equi-join to the day grid, "
-    "count_distinct per anchor day; the shape COUNT(DISTINCT) OVER a "
-    "RANGE frame cannot take (neither engine supports DISTINCT in "
-    "window frames).",
+    doc="Trailing 7-day distinct-user count per day (rolling weekly active users).",
+    shape=Shape(has=("BroadcastHashJoin", "Generate"), lacks=("BroadcastNestedLoopJoin",)),
 )
 def q_rolling_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct users seen in the trailing 7 days, per day (rolling WAU).
@@ -857,9 +845,14 @@ def _eval_value_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
            END AS auc
     FROM t
     """,
-    doc="Distributed tie-adjusted AUC (Mann-Whitney rank-sum): exact "
-    "integer arithmetic end-to-end, global cumulative count via "
-    "bucketed prefix sums — no SinglePartition window.",
+    doc="Tie-adjusted AUC (Mann-Whitney rank sum) in exact integer arithmetic.",
+    shape=Shape(
+        has=(
+            "windowspecdefinition(__rank_bucket",
+            "Exchange hashpartitioning(__rank_bucket",
+        ),
+        max_exchanges=2,
+    ),
 )
 def q_eval_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Model-eval census: AUC of ``events.value`` as a score for the
@@ -967,9 +960,14 @@ def q_eval_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM c CROSS JOIN tot
     GROUP BY na, nb
     """,
-    doc="Two-sample Kolmogorov-Smirnov distance in exact cross-"
-    "multiplied integers (max |cum_a*n_b - cum_b*n_a|), cumulatives "
-    "via the same bucketed prefix-sum frame as q_eval_auc.",
+    doc="Two-sample Kolmogorov-Smirnov distance in exact cross-multiplied integers.",
+    shape=Shape(
+        has=(
+            "windowspecdefinition(__rank_bucket",
+            "Exchange hashpartitioning(__rank_bucket",
+        ),
+        max_exchanges=2,
+    ),
 )
 def q_ks_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distribution-drift census: the two-sample Kolmogorov-Smirnov
@@ -1082,14 +1080,7 @@ def q_ks_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS pos_rate
     FROM binned GROUP BY bin
     """,
-    doc="Reliability-diagram census: equal-width score bins over "
-    "[min, max], per bin the row count, positive count, and observed "
-    "positive rate. Bin assignment is the same three-IEEE-op "
-    "sequence in both engines ((v-lo) / ((hi-lo)/10.0), floored) on "
-    "identical operands — deterministic without any grid trick — "
-    "and the bin KEY is the resulting integer; pos_rate is one "
-    "division of exact integers. Map-only binning + one groupBy; "
-    "bounds ride a broadcast one-row frame, no driver collect.",
+    doc="Reliability diagram: rows, positives and positive rate per equal-width score bin.",
 )
 def q_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Calibration audit of ``events.value`` as a purchase score.
@@ -1186,12 +1177,8 @@ def q_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
            END AS auc
     FROM t
     """,
-    doc="Per-day AUC census (eval drift over time): q_eval_auc's "
-    "exact integer rank-sum identity per calendar day. The "
-    "cumulative window partitions by day, so it is NATIVELY "
-    "shardable — the deliberate contrast with the global form, "
-    "which needs the bucketed prefix-sum scheme; same integer "
-    "discipline, one closing IEEE division per day.",
+    doc="Tie-adjusted AUC per calendar day in exact integer arithmetic.",
+    shape=Shape(has=("windowspecdefinition(day",)),
 )
 def q_eval_auc_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily AUC of ``events.value`` vs the purchase label — the
@@ -1286,12 +1273,7 @@ def q_eval_auc_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY k.k
     ORDER BY k.k
     """,
-    doc="Eval census: precision@k / recall@k of the score ranking "
-    "(value DESC, event_id ASC total order) for k in {10,100,1000} — "
-    "integer tp/n counts, single closing divisions (hash-stable). "
-    "Plan: ONE TakeOrderedAndProject of k_max rows per partition, "
-    "window over the 1000-row census frame (no exchange at all), "
-    "never a global rank of the fact table.",
+    doc="Precision@k and recall@k of the score ranking for k in 10, 100 and 1000.",
 )
 def q_eval_topk_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Precision/recall at k — the retrieval twin of q_eval_auc.
@@ -1396,14 +1378,7 @@ _HH_CAPACITY = 8  # Misra-Gries counters/partition → threshold n/9
     HAVING COUNT(*) * {_HH_CAPACITY + 1} > (SELECT n FROM tot)
     ORDER BY cnt DESC, event_type
     """,
-    doc="Heavy hitters through a bounded-memory Misra-Gries sketch "
-    "(operators/sketch.py): per-partition capacity-8 summaries (one "
-    "pass, Arrow-batched, O(capacity) state) whose union provably "
-    "contains every key with share > 1/9; an exact second pass over "
-    "only the candidates re-counts and filters at the guarantee "
-    "threshold — so the approximate machinery yields an EXACT, "
-    "oracle-checkable answer. The integer filter (cnt*9 > n) avoids "
-    "any float threshold.",
+    doc="Exact heavy hitters (share > 1/9): Misra-Gries candidates re-counted exactly.",
 )
 def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keys holding more than 1/(capacity+1) of the events stream.
@@ -1489,15 +1464,7 @@ def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     HAVING COUNT(*) * {_HH_CAPACITY + 1} > (SELECT n FROM tot)
     ORDER BY cnt DESC, event_type
     """,
-    doc="Heavy hitters computed over a STREAM yet still ORACLE-EXACT: "
-    "the events table replays as a file stream; each micro-batch's "
-    "per-partition Misra-Gries summaries fold into one capacity-"
-    "bounded driver dict inside foreachBatch (the PODS-2012 mergeable "
-    "property across batches); the drained candidate set — a proven "
-    "superset of every key above the n/(capacity+1) threshold "
-    "regardless of how the stream was batched — is then exactly "
-    "re-counted and filtered, reproducing the batch answer bit-for-"
-    "bit. The one streaming query whose result plain SQL can check.",
+    doc="Exact heavy hitters of a replayed event stream from folded Misra-Gries summaries.",
 )
 def q_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q_heavy_hitters' STREAMING twin, sharing its oracle.
@@ -1614,23 +1581,12 @@ def _zipf_oracle_sql() -> str:
 @query(
     "q_zipf_census",
     _zipf_oracle_sql(),
-    doc="extension (corpus-health census): vocabulary Zipf-curve "
-    "census — per log2-rank bucket (rank octave), term count and "
-    "total frequency mass. Natural text follows freq ∝ 1/rank, so "
-    "consecutive octaves carry roughly equal mass; an octave whose "
-    "mass spikes flags boilerplate/templating injection and one that "
-    "collapses flags tokenizer breakage — the one-glance vocabulary "
-    "diagnostic next to q_unigram_entropy's per-source view. "
-    "Distributed shape: the term census folds the shared doc_term_tf "
-    "artifact (vocab-sized — zero corpus scans), the global "
-    "frequency rank is the TWO-PASS histogram scheme over key "
-    "-freq (bucketed_rank: census-sized histogram collect, sharded "
-    "within-bucket windows — RANK ties share a bucket so no "
-    "Exchange SinglePartition, the q_global_rank pattern), and "
-    "floor(log2(rank)) = length(bin(rank))-1 is integer-exact in "
-    "both engines. Output: octave-count rows, all-integer.",
+    doc="Vocabulary Zipf census: term count and frequency mass per log2 rank octave.",
+    shape=Shape(has=("windowspecdefinition(__rank_bucket",), lacks=("Exchange SinglePartition",)),
 )
 def q_zipf_census(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # floor(log2(rank)) = length(bin(rank)) - 1 is integer-exact in both
+    # engines; the global rank is bucketed_rank over -freq.
     from prueba_tecnica_analista_etl_spark.plans.extensions_text import (
         doc_term_tf_frame,
     )

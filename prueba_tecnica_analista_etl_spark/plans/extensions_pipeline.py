@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from prueba_tecnica_analista_etl_spark.artifacts import corpus_artifact
 from prueba_tecnica_analista_etl_spark.functions.text import shingles
 from prueba_tecnica_analista_etl_spark.functions.vectors import as_double
-from prueba_tecnica_analista_etl_spark.plans.queries import _t, query
+from prueba_tecnica_analista_etl_spark.plans.queries import Shape, _t, query
 from prueba_tecnica_analista_etl_spark.sources.tables import spread
 
 # Chunking / packing constants — chosen so the harness corpus (~30-100
@@ -105,17 +105,12 @@ def contamination_hits(grams: DataFrame, bench: DataFrame) -> DataFrame:
              AS chunk_md5
     FROM s
     """,
-    doc="extension (document chunking): split each doc into "
-    f"{CHUNK_TOKENS}-token chunks every {CHUNK_STRIDE} tokens "
-    "(8-token overlap) — the context-window prep step before "
-    "embedding or training. sequence(1, nt, stride) + slice is pure "
-    "per-row codegen: ZERO shuffle, and the md5 of each chunk's text "
-    "makes the oracle value-verify the actual chunk content, not just "
-    "counts. At 100 TB this is map-only — fan-out ≈ nt/stride rows "
-    "per doc, no skew (chunk count is bounded by doc length, and "
-    "huge docs split across many output rows, not many tasks).",
+    doc="Overlapping fixed-size token chunks of each doc, with the md5 of each chunk's text.",
+    shape=Shape(has=("Exchange",), lacks=("Join", "Window"), max_exchanges=1),
 )
 def q_doc_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # The md5 of each chunk's text lets the oracle check chunk content,
+    # not only counts.
     d = spread(_t(spark, sf_dir, "documents"))
     base = d.select("doc_id", F.split(F.col("text"), " ").alias("toks"))
     starts = F.sequence(
@@ -153,16 +148,8 @@ def q_doc_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS fill_pct
     FROM b GROUP BY source, bin
     """,
-    doc="extension (sequence packing): concatenate each source shard's "
-    f"docs in doc_id order and cut {CTX_TOKENS}-token training bins — "
-    "a doc belongs to the bin where its first token lands "
-    "(offset-based packing, the standard pretraining concat-and-split "
-    "shape). The running sum is windowed PER SOURCE, so at 100 TB "
-    "there is no global-order single-partition window — each shard "
-    "packs independently, which is exactly how a distributed packer "
-    "shards the corpus. fill_pct > 100 marks bins whose last doc "
-    "straddles the boundary. All divisions are by a power of two — "
-    "exact in binary, hash-stable across engines.",
+    doc="Offset-based packing: each source's docs in doc_id order cut into fixed-size bins.",
+    shape=Shape(has=("Window",), lacks=("SinglePartition",)),
 )
 def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
@@ -253,17 +240,8 @@ def bench_grams4_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE d.doc_id % 50 <> 0
     GROUP BY d.source
     """,
-    doc="extension (benchmark contamination): screen the training "
-    "corpus for 4-gram overlap with a held-out evaluation set (here "
-    "every 50th doc stands in for the benchmark) — the decontamination "
-    "step every serious pretraining pipeline runs. The benchmark's "
-    "distinct-gram set is SMALL by construction, so Spark broadcasts "
-    "it and the overlap probe is a map-side semi-join: at 100 TB the "
-    "full corpus gram stream is never shuffled — only the MATCHED "
-    "grams (a tiny fraction) shuffle into the per-doc distinct count, "
-    "and the hit frame re-broadcasts for the final census join. "
-    "Per-doc distinct-hit counts make the oracle value-verify "
-    "overlap volume, not just the contaminated-doc flag.",
+    doc="Per-doc distinct 4-grams shared with a held-out benchmark (every 50th doc).",
+    shape=Shape(has=("BroadcastHashJoin", "LeftSemi"), lacks=("SortMergeJoin",)),
 )
 def q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     g4 = doc_grams4_frame(spark, sf_dir)
@@ -329,19 +307,12 @@ def q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(avg(top_c), 2) AS avg_top_gram
     FROM pd GROUP BY source
     """,
-    doc="extension (repetition filter, Gopher §A.1.1 shape): per doc, "
-    "the occurrence count of its most frequent 2-gram; docs where that "
-    "top 2-gram covers ≥10% of all 2-grams are flagged repetitive "
-    "(duplicate-LINE fraction is n/a — harness docs are single-line). "
-    "The Spark plan computes the per-doc mode WITHOUT any shuffle: "
-    "array_sort the 2-gram array, then one aggregate() fold tracks the "
-    "longest equal-run — per-row codegen, map-only until the tiny "
-    "source census. The oracle does it the relational way (explode + "
-    "GROUP BY doc,gram + max) and must shuffle every gram; same "
-    "answer, verified exactly. At 100 TB the fold path scans the "
-    "corpus once with zero gram-level shuffle.",
+    doc="Per-doc top 2-gram count and a repetitive flag (top 2-gram >= 10% of 2-grams).",
+    shape=Shape(lacks=("Generate",), max_exchanges=3),
 )
 def q_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # The oracle explodes and groups every 2-gram; here an array_sort +
+    # aggregate() fold finds each doc's mode inside the row.
     d = spread(_t(spark, sf_dir, "documents"))
     toks = F.split(F.col("text"), " ")
     grams = F.array_sort(shingles(toks, 2))
@@ -395,17 +366,8 @@ def q_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
            count(*) AS n_vecs
     FROM s GROUP BY label, i
     """,
-    doc="extension (grouped vector aggregation): per-label embedding "
-    "centroids, one scalar row per (label, dimension) — the class-"
-    "prototype / cluster-update primitive behind IVF training, "
-    "semantic dedup thresholds and label-drift monitoring. "
-    "posexplode fans each vector into dim rows MAP-SIDE, and "
-    "Tungsten's partial aggregation collapses them to labels×dim "
-    "partial sums per task before the shuffle — at 100 TB the "
-    "exchange carries O(tasks × labels × dim) rows, not O(vectors × "
-    "dim). round(4) absorbs partial-agg summation-order noise "
-    "(~1e-13 relative), far from any rounding boundary for N(0,1) "
-    "data.",
+    doc="Per-label embedding centroids, one row per (label, dimension).",
+    shape=Shape(has=("partial_avg", "Generate")),
 )
 def q_embed_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     # no spread(): the per-row work is one posexplode + partial
@@ -413,6 +375,8 @@ def q_embed_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unconditional round-robin repartition moved every vector across
     # the wire to parallelize ~nothing (A/B at sf0.1: 0.66 -> 0.23 s;
     # at scale the scan's own splits give the width).
+    # round(4) absorbs partial-aggregate summation-order noise (~1e-13
+    # relative), far from any rounding boundary for N(0,1) data.
     e = _t(spark, sf_dir, "embeddings")
     x = e.select(
         "label",
@@ -443,17 +407,12 @@ def q_embed_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(min(mu), 2) AS mu, round(min(sigma), 2) AS sigma
     FROM s GROUP BY event_type
     """,
-    doc="extension (grouped anomaly flagging): per-event-type z-score "
-    "with |z| > 3 outlier census — the data-quality screen between "
-    "ingestion and training. One unbounded window per group computes "
-    "mu/sigma without a self-join; the final census collapses to "
-    "|event_type| rows. At 100 TB the window shuffle is keyed on "
-    "event_type — if one type dominates, pre-aggregate (count, sum, "
-    "sum of squares) per type instead (associative moments), which "
-    "this plan's groupBy twin would do; here the window form also "
-    "exercises W-family coverage on a non-cumulative frame.",
+    doc="Per-event-type z-score outlier census (|z| > 3) over one unbounded window.",
+    shape=Shape(has=("Window",), lacks=("SinglePartition",)),
 )
 def q_zscore_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # A dominant event_type lands in one window partition; q_zscore_moments
+    # is the skew-safe twin.
     d = _t(spark, sf_dir, "events")
     w = Window.partitionBy("event_type")
     s = d.select(
@@ -516,44 +475,11 @@ def pair_combos(arr, a_name: str, b_name: str):
     JOIN sz sb ON sb.source = b.source
     GROUP BY a.source, b.source
     """,
-    doc="extension (cross-source overlap census): which datasets "
-    "duplicate each other's CONTENT — the standard pre-mixing "
-    "analysis before weighting corpus sources (two crawls of the "
-    "same site, a dataset re-released inside another, boilerplate "
-    "shared between collections). Doc-level md5 identity is too "
-    "blunt (this corpus has zero cross-source full-doc dupes at "
-    "sf0.01 yet thousands of shared passages), so the unit is the "
-    "8-token shingle: each source collapses to its distinct set of "
-    "md5 shingle fingerprints; a self-equi-join on fingerprint with "
-    "src_a < src_b counts shared shingles per source pair alongside "
-    "each source's distinct-shingle size (Jaccard's numerator and "
-    "denominator terms, derivable by the user). All-integer output — "
-    "no float parity risk. Scale shape: the self-join shuffles on "
-    "the 16-byte fingerprint key; per-fp fan-out is |sources "
-    "containing fp| choose 2 — quadratic in SOURCES sharing a "
-    "shingle (bounded: source count is a catalog property, never "
-    "O(corpus)), linear in shingles; the size frames are "
-    "O(|sources|) and broadcast. A shingle present in k sources "
-    "contributes k(k-1)/2 pair rows pre-aggregation — universal "
-    "boilerplate is the skew case; at 100 TB cap it by dropping "
-    "fingerprints above a source-count ceiling (they carry no "
-    "pair-discriminating signal), the LSH family's sub-split policy. "
-    "Plan shape note: the naive self-equi-join evaluates the heavy "
-    "explode+md5+distinct subtree four times (both join sides + two "
-    "size joins; Spark's exchange reuse does not fire across the "
-    "aliased sides). Instead ONE groupBy(fp) collects each "
-    "fingerprint's sorted source set and the src_a<src_b "
-    "combinations are generated inline from that array (k sources → "
-    "k(k-1)/2 structs, pure codegen, ordering guaranteed by the "
-    "sorted set); the per-source sizes ride a 1-row broadcast map "
-    "(O(|sources|) entries — the unigram total-N pattern). The "
-    "heavy subtree runs ONCE per corpus: the per-fp source-set "
-    "frame is a checkpointed corpus artifact (the "
-    "cached_minhash_pairs class — O(distinct shingles) rows), and "
-    "pairs + sizes both read the checkpoint instead of re-deriving "
-    "the explode+distinct chain per consumer.",
+    doc="Shared distinct 8-token shingles per source pair, beside each source's shingle count.",
 )
 def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Pairs come from each shingle's sorted source set, not a self-join:
+    # a self-join evaluates the explode+md5+distinct subtree per side.
     def build() -> DataFrame:
         d = _t(spark, sf_dir, "documents")
         toks = F.split(F.lower(F.col("text")), " ")
@@ -797,22 +723,10 @@ _UNIGRAM_SCORED_SQL = f"""
            round(max(logprob), 4) AS max_logprob
     FROM scored GROUP BY source
     """,
-    doc="extension (CCNet-style LM quality proxy): score each doc by "
-    "its mean unigram log-probability under the corpus's own unigram "
-    "model — the native-expression stand-in for the perplexity "
-    "bucketing CCNet/fastText pipelines run before training (low "
-    "mean logprob = rare-token gibberish, high = common-token "
-    "boilerplate; both tails get inspected). Plan: one explode+"
-    "groupBy collapses the token stream to (doc, term, tf); the vocab "
-    "census and the scoring join both run on THAT frame, so the join "
-    "carries |distinct doc-term pairs| rows, not |tokens| — the "
-    "weighted mean sum(tf*ln p)/sum(tf) is algebraically the token "
-    "average. At 100 TB the vocab frame exceeds broadcast and the "
-    "scoring join shuffles on term — O(doc-term pairs), strictly "
-    "below the O(tokens) floor a naive token join pays. ln + "
-    "round(4) is the q_tfidf cross-engine-stable pattern.",
+    doc="Per-doc mean unigram log-probability under the corpus's own unigram model.",
 )
 def q_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # ln + round(4) is the q_tfidf cross-engine-stable pattern.
     return _unigram_scored(spark, sf_dir).groupBy("source").agg(
         F.count(F.lit(1)).alias("docs"),
         F.round(F.avg("logprob"), 4).alias("avg_logprob"),
@@ -846,29 +760,8 @@ def q_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS hi_logprob
     FROM b GROUP BY source, bucket
     """,
-    doc="extension (CCNet perplexity buckets): CCNet's actual USE of "
-    "the LM score is not a census but a split — rank each source's "
-    "docs by LM likelihood and cut into head/middle/tail tertiles "
-    "(head = most in-domain, tail = gibberish candidates; training "
-    "recipes keep head+middle or reweight by bucket). Per-doc scores "
-    "come from the shared unigram frame (_unigram_scored) in their "
-    "EXACT-INTEGER form: the sort key is -(nlp_num div (tf_sum*100)) "
-    "— a pure 64-bit integer floor-division of per-term fixed-point "
-    "integer-log weights (_nlp6_spark_expr: binary-length integer "
-    "part + renormalizing-squaring fractional bits — ZERO runtime "
-    "transcendentals in the key path; float-mean and "
-    "quantized-runtime-ln forms both flip the value hash on "
-    "1-ulp libm disagreements), so every engine computes bit-"
-    "identical keys by construction. doc_id makes the order total, so both "
-    "engines cut identical tertiles; the integer key scale-shifts to "
-    "DECIMAL(18,4) by exact decimal multiply (never division) for "
-    "reporting. The census reports per-bucket doc counts and logprob "
-    "ranges — the lo/hi bounds ARE the bucket thresholds a filtering "
-    "pass would apply. Scale shape: the window shuffles one row per "
-    "DOC (never tokens) partitioned by source — the packer's proven "
-    "shape; for a single unbounded source swap the exact tertile for "
-    "approx_percentile thresholds + a broadcast map-side bucket "
-    "assignment (the zscore moments-twin pattern).",
+    doc="Per-source head/middle/tail tertiles of docs by unigram likelihood, with score ranges.",
+    shape=Shape(has=("windowspecdefinition(source",), max_exchanges=1),
 )
 def q_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     lp = _unigram_scored(spark, sf_dir).select(
@@ -968,31 +861,16 @@ _SOURCE_DIVERGENCE_SQL = f"""
 @query(
     "q_source_divergence",
     _SOURCE_DIVERGENCE_SQL,
-    doc="extension (DoReMi/importance-sampling mixture signal): per-"
-    "source unigram cross-entropy vs the corpus distribution, own "
-    "entropy, and their difference — KL(source ‖ corpus) — in "
-    "micro-nats/token. This is the distributional-distance census a "
-    "mixture-reweighting pass reads before setting per-source "
-    "sampling rates (a source whose token distribution diverges "
-    "hard from the pool is either a distinct domain worth "
-    "upweighting or boilerplate worth capping; the entropy column "
-    "separates the two). Every reported number is pure 64-bit/"
-    "decimal INTEGER arithmetic: both -ln(p) families are the "
-    "fixed-point integer logarithm nlp6 (binary-length integer part "
-    "+ renormalizing-squaring fractional bits — the exact-key "
-    "discipline that converted q_perplexity_buckets' driver hash), "
-    "per-term products accumulate in DECIMAL(38,0)/HUGEINT so the "
-    "sums cannot wrap even at 100 TB token counts, and the per-token "
-    "normalization is a positive floor division (Spark div == "
-    "DuckDB //). Plan shape: ONE explode+groupBy collapses the "
-    "token stream to (source, term, cnt); the corpus vocab, the "
-    "per-source totals (|sources| rows, broadcast), and both nlp6 "
-    "folds all derive from THAT frame, so the only wide exchanges "
-    "are the (source,term) partial-agg shuffle and the term-keyed "
-    "scoring join — O(source-term pairs), never O(tokens); the "
-    "result is O(|sources|) rows. nlp6 costs one 20-step fold per "
-    "distinct (source,term) / term — compute-bounded by vocab size, "
-    "not corpus size.",
+    doc="Per-source unigram cross-entropy, entropy and KL vs the corpus, in micro-nats.",
+    shape=Shape(
+        has=(
+            "BroadcastHashJoin [term",
+            "Exchange hashpartitioning(source",
+            "partial_sum",
+            "BroadcastNestedLoopJoin",
+        ),
+        max_exchanges=7,
+    ),
 )
 def q_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build() -> DataFrame:
@@ -1080,18 +958,12 @@ def q_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events e JOIN st USING (event_type)
     GROUP BY e.event_type
     """,
-    doc="extension (grouped anomaly flagging, moments form): the "
-    "groupBy twin of q_zscore_outliers — per-type mu/sigma from ONE "
-    "partial-aggregated groupBy (Spark's avg/stddev_samp aggregates "
-    "merge associative moments map-side, so the shuffle carries "
-    "|event_type| partial states, not rows), broadcast-joined back for "
-    "the outlier census. This is the plan to run on a skewed 100 TB "
-    "event table: the window form shuffles EVERY row of a hot "
-    "event_type into one partition; this form never shuffles the fact "
-    "rows at all (map-side partials + broadcast stats + partial-agged "
-    "census). Property-tested frame-equal to the window form.",
+    doc="Per-event-type z-score outlier census from groupBy moments joined back to the events.",
+    shape=Shape(has=("BroadcastHashJoin", "partial_avg"), lacks=("SortMergeJoin", "Window")),
 )
 def q_zscore_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # The groupBy twin of q_zscore_outliers: moments merge map-side, so a
+    # hot event_type never lands in one window partition.
     d = _t(spark, sf_dir, "events")
     stats = d.groupBy("event_type").agg(
         F.avg("value").alias("mu"),
@@ -1147,15 +1019,8 @@ def q_zscore_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS mean_fill_pct
     FROM s
     """,
-    doc="extension (packing efficiency census): the corpus-level "
-    "summary of q_pack_sequences — how efficient is offset packing at "
-    f"{CTX_TOKENS} tokens: straddler % (docs crossing a bin boundary, "
-    "i.e. truncation/continuation candidates), wasted tokens (padding "
-    "in each shard's final partial bin) and mean fill %. The per-doc "
-    "straddle flag is map-side arithmetic over the same per-source "
-    "running sum the packer uses; the census collapses to one row per "
-    "source then one global row — at 100 TB nothing but O(|sources|) "
-    "crosses the final shuffle.",
+    doc="Packing efficiency per source and overall: straddlers, wasted tokens, mean fill.",
+    shape=Shape(has=("windowspecdefinition(source", "Exchange hashpartitioning(source")),
 )
 def q_pack_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
@@ -1213,21 +1078,10 @@ def q_pack_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM tf JOIN df USING (term) CROSS JOIN n
     ORDER BY tfidf DESC, tf.doc_id, tf.term LIMIT 20
     """,
-    doc="extension (relevance scoring): smoothed TF-IDF over the "
-    "corpus — tf from one explode+groupBy, df from a second "
-    "aggregation of the (doc,term) frame (already collapsed, far "
-    "smaller than the token stream), N broadcast as a 1-row "
-    "aggregate. The tf⋈df join carries NO broadcast hint: df is one "
-    "row per distinct term — the corpus VOCABULARY, hundreds of "
-    "millions of rows at 100 TB of web text — so the join must be "
-    "free to shuffle on term at scale; at harness scale AQE picks "
-    "broadcast from runtime statistics on its own. Scores are "
-    "deterministic: equal (tf, df) "
-    "pairs give bit-equal scores within each engine, so the "
-    "total-ordered LIMIT picks the same rows; round(4) absorbs "
-    "libm-vs-JVM ln last-ulp drift.",
+    doc="Top smoothed TF-IDF scores of (doc, term) pairs.",
 )
 def q_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # round(4) absorbs libm-vs-JVM ln last-ulp drift.
     from prueba_tecnica_analista_etl_spark.plans.extensions_text import (
         doc_term_tf_frame,
     )
@@ -1362,33 +1216,11 @@ def shingle_edges(
     SELECT comp AS cluster_id, count(*) AS n_docs
     FROM lab GROUP BY comp
     """,
-    doc="extension (duplicate clustering): CONNECTED COMPONENTS over "
-    "the shared-shingle near-dup graph — pairs are not enough for "
-    "curation (a chain A~B, B~C is ONE duplicate family even when "
-    "A≁C directly; survivor choice and family statistics are "
-    "per-component decisions), and pipelines/corpus.py's greedy "
-    "pairwise purge explicitly defers transitive-closure cliques to "
-    "a components pass. Edges: docs sharing ≥3 distinct 8-token "
-    "shingle fingerprints (shingle_edges — the q_source_overlap "
-    "inline-pair shape at doc granularity); labeling: iterative "
-    "min-label propagation (operators/components.py, the "
-    "hash-to-min scheme from public MapReduce-CC literature), "
-    "component id = min doc_id — the same deterministic labeling "
-    "the oracle's recursive-CTE transitive closure computes, so the "
-    "whole iterative algorithm is value-hash-checked against SQL, "
-    "not just rows-counted. Output: one row per duplicate family "
-    "(cluster_id, n_docs) — all-integer, no float parity risk. "
-    "Scale shape: edge building shuffles on the 16-byte fingerprint "
-    "(uncapped, for oracle exactness — harness buckets are "
-    "duplicate-family-sized); each propagation round is one "
-    "O(|E|)-message join + groupBy over ENDPOINT-sized frames, "
-    "round count = component diameter (duplicate families are "
-    "shallow; adaptive pointer jumping cuts in for O(log n) on "
-    "chains deeper than jump_after). Eager note: like q_corpus_curate, "
-    "constructing this plan RUNS Spark jobs (the fixpoint's "
-    "per-round convergence counts + localCheckpoint rounds).",
+    doc="Near-duplicate families: connected components of the shared-shingle graph.",
 )
 def q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Building this plan runs Spark jobs: the fixpoint's per-round
+    # convergence counts and localCheckpoint rounds.
     return cluster_labels(spark, sf_dir).groupBy(
         F.col("comp").alias("cluster_id")
     ).agg(F.count(F.lit(1)).alias("n_docs"))
@@ -1472,26 +1304,13 @@ def _mixture_sql_case() -> str:
     WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) <
           {_mixture_sql_case()}
     """,
-    doc="extension (mixture sampling): realize per-source blending "
-    "weights as a DETERMINISTIC hash sample — the step that turns a "
-    "mixture recipe (weights per source, tuned from q_source_overlap "
-    "/ quality censuses) into the actual training subset. Each doc's "
-    "uniform variate is its md5-hex 8-char prefix; keep iff prefix < "
-    "per-source threshold (fixed-width lowercase hex compares "
-    "lexicographically == numerically, so Spark and DuckDB draw the "
-    "SAME sample bit-for-bit — the oracle value-hash verifies exact "
-    "sample MEMBERSHIP, not a count). Weight 1.0 becomes threshold "
-    "'g' (> every hex digit): keep-all with no off-by-2^-32 edge. "
-    "Deterministic-by-key beats rand(): re-runs, retries and "
-    "incremental refreshes select the same docs (idempotent "
-    "pipeline), and upstream dedup order can't perturb the draw. "
-    "Plan shape: map-only — one scan, zero shuffle, filter is pure "
-    "codegen (md5+substr+CASE); at 100 TB it composes with "
-    "partition pruning and runs at scan speed. Epoch-keyed "
-    "re-mixing (new sample per training run) = salt the md5 input "
-    "with a run id.",
+    doc="Deterministic per-source hash sample: keep a doc iff its md5 prefix < its threshold.",
+    shape=Shape(lacks=("Exchange", "Join")),
 )
 def q_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Fixed-width lowercase hex compares lexicographically == numerically,
+    # so both engines draw the same sample; weight 1.0 maps to 'g', above
+    # every hex digit.
     d = _t(spark, sf_dir, "documents")
     thr = F.lit(_hex_threshold(MIXTURE_DEFAULT))
     for src, w in MIXTURE_WEIGHTS.items():
@@ -1521,23 +1340,17 @@ GROUP_SAMPLE_N = 10
       FROM documents)
     WHERE rn <= {GROUP_SAMPLE_N}
     """,
-    doc="extension (per-group capped sample): keep at most "
-    f"{GROUP_SAMPLE_N} docs per source, selected by deterministic "
-    "md5-hash order (tie-break doc_id) — a uniform without-replacement "
-    "draw that is reproducible across engines and runs, the "
-    "count-cap twin of q_mixture_sample's fraction draw (real "
-    "mixtures use both: fractions for blending ratios, caps for "
-    "balancing a giant crawl against small curated sources). The "
-    "oracle verifies exact sample MEMBERSHIP (same hash order both "
-    "engines). Plan shape: rank-by-hash is the scalable form of "
-    "'ORDER BY rand() LIMIT N per group' — one shuffle on source, "
-    "and the rn <= N predicate gets WindowGroupLimit pruning "
-    "(Partial below the exchange: each map task forwards only its "
-    "own top-N per group, so shuffle volume is O(groups × N × "
-    "tasks), independent of group size — survives a 100 TB source "
-    "with billions of docs).",
+    doc="A capped per-source sample of docs in deterministic md5-hash order.",
+    shape=Shape(
+        has=(
+            f"row_number(), {GROUP_SAMPLE_N}, Partial",
+            f"row_number(), {GROUP_SAMPLE_N}, Final",
+        )
+    ),
 )
 def q_group_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # md5 order is the reproducible form of ORDER BY rand() LIMIT N per
+    # group, and both engines draw the same members.
     d = _t(spark, sf_dir, "documents")
     w = Window.partitionBy("source").orderBy(
         F.md5(F.col("doc_id").cast("string")), "doc_id"
@@ -1569,23 +1382,14 @@ def q_group_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS n_lost
     FROM r GROUP BY source
     """,
-    doc="extension (cross-source priority dedup): exact-content dedup "
-    "where the survivor is NOT min-doc_id but the copy from the most "
-    "PREFERRED source (curated wiki beats common-crawl beats random "
-    "scrape — the standard multi-source corpus rule; here priority = "
-    "the source's numeric rank, tie-broken by doc_id so the order is "
-    "total). Census reports per source how many docs it kept vs lost "
-    "to a higher-priority duplicate elsewhere — the numbers a corpus "
-    "builder uses to audit how much each feed actually contributes "
-    "after dedup. Plan shape: one shuffle on md5(text) (the "
-    "fingerprint-not-raw-text key the exact-dedup docstring "
-    "prescribes at 100 TB), WindowGroupLimit-free full ranking since "
-    "every row's rank is consumed, then a partial-agged census "
-    "shuffle on the tiny (source, flag) pairs.",
+    doc="Exact-content dedup keeping the preferred source's copy: kept and lost per source.",
+    shape=Shape(has=("Exchange hashpartitioning(fp", "windowspecdefinition(fp")),
 )
 def q_source_priority_dedup(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
+    # Priority is the source's numeric rank, tie-broken by doc_id so the
+    # order is total.
     d = _t(spark, sf_dir, "documents").select(
         "source",
         "doc_id",
@@ -1626,22 +1430,12 @@ def split_col() -> Column:
            CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS tokens
     FROM documents GROUP BY source, split
     """,
-    doc="extension (deterministic train/val/test split): the "
-    "reproducible-split step every training pipeline needs — each "
-    "doc's first md5-hex nibble is its uniform variate (the "
-    "q_mixture_sample convention: fixed-width lowercase hex compares "
-    "lexicographically == numerically, so Spark and DuckDB assign "
-    "every doc the SAME split bit-for-bit), cut at 'c'/'e' for a "
-    "12:2:2 sixteenths split (75%% train, 12.5%% val, 12.5%% test). "
-    "Hash-of-key beats rand(): re-runs, retries, upstream re-orders "
-    "and incremental refreshes never migrate a doc across splits — "
-    "the property that prevents silent val-set leakage over a "
-    "pipeline's lifetime. Census reports docs+tokens per source x "
-    "split (the table a run config records). Plan: map-only split "
-    "assignment fused into one partial-agged groupBy; at 100 TB it "
-    "runs at scan speed with a |sources x 3| result.",
+    doc="Deterministic 12:2:2 train/val/test split by md5; docs and tokens per source x split.",
+    shape=Shape(has=("partial_",), lacks=("Join", "Window")),
 )
 def q_train_val_split(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # The first md5-hex nibble is the uniform variate (the q_mixture_sample
+    # convention): a re-run never moves a doc across splits.
     d = _t(spark, sf_dir, "documents")
     return (
         d.select(
@@ -1667,20 +1461,12 @@ def q_train_val_split(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(sum(n_tok) AS BIGINT) AS total_tokens
     FROM d GROUP BY bucket_lo
     """,
-    doc="extension (sequence-length histogram): power-of-two doc-length "
-    "buckets — the census a packing planner reads before choosing "
-    "sequence length and bin capacity (q_pack_sequences' inputs: a "
-    "corpus whose mass sits in the 32-63 bucket packs very "
-    "differently into 2048-token bins than one with a 1024+ tail). "
-    "The bucket floor is 2^(bitlength-1) computed EXACTLY via the "
-    "binary-string length of the integer token count — both engines "
-    "print bin(8)='1000' — never floor(log2(x)), whose float "
-    "round-trip misassigns exact powers of two on some libms. "
-    "pow(2, small-int) is IEEE-exact. Plan: map-only bucket "
-    "assignment into a partial-agged groupBy over ~60 tiny groups — "
-    "scan-speed at any corpus size.",
+    doc="Doc counts per power-of-two token-length bucket.",
+    shape=Shape(has=("partial_",), lacks=("Join", "Window")),
 )
 def q_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # The bucket floor is 2^(bitlength-1) via bin(): floor(log2(x))
+    # misassigns exact powers of two on some libms.
     d = _t(spark, sf_dir, "documents").select(
         F.size(F.split("text", " ")).alias("n_tok")
     )
@@ -1725,18 +1511,8 @@ def q_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE d.doc_id % 50 <> 0
       AND d.doc_id NOT IN (SELECT doc_id FROM flagged)
     """,
-    doc="extension (decontamination APPLY — the filter q_contamination "
-    "only censuses): emit the training corpus minus every doc whose "
-    "distinct 4-gram overlap with the held-out benchmark reaches the "
-    f"drop threshold ({CONTAM_MIN_HITS} shared grams) — the actual "
-    "clean-corpus output a pretraining run consumes, same relation to "
-    "the contamination census as q_perplexity_buckets' split is to "
-    "the unigram census. Plan shape inherits the census's: the "
-    "benchmark gram set broadcasts, the corpus gram stream probes it "
-    "map-side (left-semi), only MATCHED grams shuffle into the "
-    "per-doc distinct count, and the flagged-id frame (tiny) "
-    "anti-joins the corpus — at 100 TB the full gram stream never "
-    "shuffles and the output scan is one pass.",
+    doc="The corpus minus docs whose 4-gram overlap with the benchmark reaches the threshold.",
+    shape=Shape(has=("BroadcastHashJoin", "LeftSemi", "LeftAnti")),
 )
 def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
@@ -1791,14 +1567,8 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
                 AS BIGINT)
     FROM g
     """,
-    doc="extension (split hygiene): content-leakage census across the "
-    "q_train_val_split assignment — per eval split, how many docs "
-    "carry content whose md5 fingerprint also appears in train. "
-    "Hash-of-id splitting keeps an ID from straddling splits; this "
-    "audits the case it cannot prevent: byte-identical content under "
-    "DIFFERENT ids (mirrors, re-crawls). One fingerprint-keyed "
-    "shuffle of conditional counts, join-free census after "
-    "(operators/sampling.py split_leakage_census).",
+    doc="Per eval split, the docs whose content md5 also appears in train.",
+    shape=Shape(lacks=("Join",)),
 )
 def q_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-content leakage from train into val/test under the
@@ -1855,24 +1625,7 @@ def q_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN sz sa ON sa.doc_id = e.doc_a
     JOIN sz sb ON sb.doc_id = e.doc_b
     """,
-    doc="extension (near-dup scoring, ORACLE-BACKED tier): exact "
-    "Jaccard similarity for every candidate pair of the shared-"
-    "shingle graph — md5 fingerprints end-to-end, value-hash-checked "
-    "against SQL (the exact near-dup tier; the minhash/simhash LSH "
-    "tiers are oracle-backed too, via "
-    "engine-neutral md5_60 hashing). Candidates: docs sharing >=3 "
-    "distinct 8-token "
-    "shingle fingerprints (shingle_edges — one fingerprint-keyed "
-    "shuffle, inline a<b pair expansion); scores: |A∩B| = the pair's shared-"
-    "fingerprint count the edge aggregate already holds, |A∪B| = "
-    "n_a + n_b − shared from the per-doc distinct-fingerprint "
-    "census, so scoring never touches the shingle sets again — no "
-    "second pass, no array intersections, just two integer-keyed "
-    "joins of a census-sized frame onto the edge list. jaccard_sim "
-    "is ONE IEEE division of exact integers (bit-identical across "
-    "engines); any downstream THRESHOLD should compare integers "
-    "(keep iff (1+tau)*shared >= tau*(n_a+n_b), exact) rather than "
-    "the double.",
+    doc="Exact Jaccard of every doc pair sharing >= 3 distinct 8-token shingles.",
 )
 def q_neardup_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact near-dup pair scores over the shingle-fingerprint graph.
@@ -1976,15 +1729,7 @@ def q_neardup_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY n_shared DESC, n_grams ASC, doc_id ASC
     LIMIT 20
     """,
-    doc="Memorization-risk census: per-document fraction of its "
-    "distinct 8-token shingle fingerprints that appear in at least "
-    "one OTHER document (top-20 most-exposed docs, integer sort "
-    "keys). n_shared is computed via its complement (n_grams minus "
-    "the doc's GLOBALLY-UNIQUE fingerprints, each attributed to its "
-    "single owner by min(doc_id) inside one partial-aggregating fp "
-    "groupBy) — no per-fp window, no doc-by-doc comparison, and no "
-    "skewed anything: a boilerplate fingerprint shared by every doc "
-    "costs one partially-aggregated counter, not a window partition.",
+    doc="Top-20 docs by the share of their distinct 8-token shingles found in another doc.",
 )
 def q_dup_exposure(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document duplication exposure over 8-gram fingerprints.
@@ -2080,14 +1825,7 @@ def q_dup_exposure(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS n_dup_docs
     FROM a GROUP BY split ORDER BY split
     """,
-    doc="Leakage-safe train/val split: the split draw is keyed on the "
-    "exact-duplicate GROUP's representative (min doc_id per md5(text) "
-    "class), so identical documents can never straddle train and val "
-    "— the doc-keyed draw (q_train_val_split) leaks every duplicated "
-    "text across the boundary with probability 2·p·(1-p). Census per "
-    "split: group count, doc count, and docs in multi-copy groups "
-    "(the population the group key just protected). One md5(text) "
-    "shuffle + a two-row census.",
+    doc="Train/val split keyed on each exact-duplicate group's representative, censused.",
 )
 def q_group_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-aware split assignment (SURVEY §2.11).
@@ -2185,19 +1923,7 @@ def _entropy_oracle_sql() -> str:
 @query(
     "q_unigram_entropy",
     _entropy_oracle_sql(),
-    doc="extension (corpus-diversity census): per-source unigram "
-    "Shannon entropy in fixed-point nats*1e6 — the drift/templating "
-    "signal a curation pipeline watches per ingest source (a source "
-    "whose entropy collapses went boilerplate; one whose entropy "
-    "jumps changed language mix). entropy_e6 = sum(cnt*nlp6(total,"
-    "cnt)) div total over the per-source term census — the SAME "
-    "exact-integer fixed-point logarithm as the perplexity family "
-    "(zero runtime transcendentals, bit-identical across engines "
-    "and accumulation orders). Scale: one explode+groupBy collapses "
-    "the token stream to per-source term counts (the q_unigram_"
-    "logprob shuffle family), nlp6 runs once per DISTINCT "
-    "(source, term) — O(|vocab|) integer folds — and the final "
-    "census is sources-sized.",
+    doc="Per-source unigram Shannon entropy in fixed-point nats x 1e6.",
 )
 def q_unigram_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build() -> DataFrame:
@@ -2334,24 +2060,11 @@ def _dup_spans_oracle_sql() -> str:
 @query(
     "q_dup_spans",
     _dup_spans_oracle_sql(),
-    doc="extension (duplicate-span census): substring-level "
-    "dedup signal — doc-level dedup is complete, but a memorized "
-    "SPAN_K-token run shared across documents (the suffix-array "
-    "dedup shape from public literature) is invisible to whole-doc "
-    "fingerprints. Every overlapping SPAN_K-token window at stride "
-    "SPAN_S is md5-fingerprinted; a span whose fingerprint appears "
-    "in ≥2 DISTINCT docs corpus-wide is a duplicated span. Output: "
-    "per-source census (n_spans, n_dup_spans, n_docs_hit, "
-    "est_dup_tokens = n_dup_spans·stride — the dedupable-token "
-    "proxy) — all-integer. Scale shape: linear in tokens (one window "
-    "per stride step), ONE fingerprint-keyed shuffle for the "
-    "span-frequency census plus one fp-co-partitioned join back — "
-    "exactly the q_dup_exposure pattern at span granularity; the "
-    "span stream is staged once per corpus (doc_spans:k16:s4, "
-    "alongside doc_grams4) so every substring consumer reads, never "
-    "re-explodes.",
+    doc="Per-source census of token spans that occur in two or more distinct docs.",
 )
 def q_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # The span stream is staged once per corpus, so every substring
+    # consumer reads it rather than re-exploding the corpus.
     spans = doc_span_frame(spark, sf_dir)
     census = spans.groupBy("fp").agg(
         F.count_distinct("doc_id").alias("nd")

@@ -50,7 +50,7 @@ from prueba_tecnica_analista_etl_spark.functions.vectors import (
     sign_words,
 )
 from prueba_tecnica_analista_etl_spark.pipelines.corpus import PURGE_ROUNDS
-from prueba_tecnica_analista_etl_spark.plans.queries import _t, query
+from prueba_tecnica_analista_etl_spark.plans.queries import Shape, _t, query
 from prueba_tecnica_analista_etl_spark.session import session_clone
 from prueba_tecnica_analista_etl_spark.sources.tables import spread
 from prueba_tecnica_analista_etl_spark.streaming.replay import (
@@ -517,16 +517,7 @@ def _minhash_oracle_sql() -> str:
 @query(
     "q_minhash_dedup",
     _minhash_oracle_sql(),
-    doc="D6 (near-dup, MinHash+LSH), ORACLE-EXACT end-to-end: "
-    "banded minhash over 3-token shingles, pure "
-    "DataFrame ops. Signature = 12 seeded Mersenne-prime minima over "
-    "engine-neutral md5_60 shingle hashes, grouped 4 bands × 3 rows; "
-    "candidates share a band's minima triple (one explode + one "
-    "shuffle on the key), oversized buckets sub-split with a "
-    "band-dependent md5_60 secondary hash (skew guard), exact Jaccard "
-    "re-rank on candidates only — O(n·b) join input instead of O(n²) "
-    "all-pairs. Reporting query = top-100 of minhash_pairs; pipelines "
-    "consume the uncapped frame.",
+    doc="Top-100 near-duplicate doc pairs by banded MinHash LSH and exact Jaccard.",
 )
 def q_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The reporting query rides the MEMOIZED pair frame — the same
@@ -621,24 +612,15 @@ def _ngram_oracle_sql() -> str:
 @query(
     "q_ngram_jaccard",
     _ngram_oracle_sql(),
-    doc="n-gram Jaccard near-dup, ORACLE-EXACT end-to-end: "
-    "trigram-shingle sets, candidates = docs sharing the "
-    "global min md5_60 shingle hash (1-band minhash LSH, engine-"
-    "neutral), exact Jaccard on candidates only. One groupBy(minhash) "
-    "shuffle replaces the n² comparison; oversized buckets are "
-    "sub-split by a secondary md5_60 hash into <=BUCKET_CAP chunks "
-    "(skew guard: a popular min-shingle would otherwise create one "
-    "quadratic bucket; sub-splitting bounds work at n*cap while still "
-    "emitting intra-chunk pairs). Trigrams, not bigrams: the corpus "
-    "vocabulary is tiny (31 words → ~900 possible bigrams), so bigram "
-    "min-shingle buckets degenerate into near-all-pairs; trigram "
-    "space (27k observed) keeps fan-out bounded.",
+    doc="Near-duplicate doc pairs from min-shingle buckets and exact trigram Jaccard.",
 )
 def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Pair frame staged whole per corpus (deterministic: md5_60
     # bucket keys, constant-seed skew chunks, exact Jaccard) — the
     # cached_minhash_pairs class; the live construction runs on first
     # build and stays parity-pinned by the suite.
+    # Trigrams, not bigrams: over the 31-word corpus vocabulary bigram
+    # min-shingle buckets degenerate into near-all-pairs.
     pairs = corpus_artifact(
         spark,
         sf_dir,
@@ -762,20 +744,14 @@ def _simhash_oracle_sql() -> str:
 @query(
     "q_simhash_dedup",
     _simhash_oracle_sql(),
-    doc="SimHash near-dup, ORACLE-EXACT end-to-end: "
-    "64-bit majority signature over 3-shingle md5_60 "
-    "features (JVM hashing + Arrow-batched numpy bit census — exact "
-    "integer majority, reproduced bit-for-bit by a SQL fold), banded "
-    "4×16 bits; candidates share a band value (one shuffle on "
-    "(band, value), buckets skew-capped), kept if hamming(sig) <= 8. "
-    "Features are shingles, not unigrams: the 31-word corpus "
-    "vocabulary makes unigram signatures collide for most docs "
-    "(degenerate bands → near-n² candidates).",
+    doc="Near-duplicate doc pairs by 64-bit SimHash over 3-shingle hashes (hamming <= 8).",
 )
 def q_simhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Pair frame staged whole per corpus (deterministic: exact
     # integer majority signature, banded integer keys, seeded skew
     # chunks, integer hamming) — the cached_minhash_pairs class.
+    # Shingles, not unigrams: the 31-word corpus vocabulary makes unigram
+    # signatures collide for most docs.
     pairs = corpus_artifact(
         spark,
         sf_dir,
@@ -947,19 +923,7 @@ def _lsh_oracle_sql() -> str:
 @query(
     "q_ann_lsh",
     _lsh_oracle_sql(),
-    doc="ANN via sign-LSH, ORACLE-EXACT end-to-end (128 bits: the "
-    "recall sweep measured the 16-bit point at recall@10 = 0.2): "
-    "128 ±1-hyperplane sign bits per vector packed as 4x32-bit "
-    "words over the floor(x*1e6+0.5) integer grid — int64 dot "
-    "terms are exact in any summation order, so the signature "
-    "(and thus the candidate set) is engine-independent; "
-    "candidates = hamming(sig, query sig) <= 55 (measured "
-    "recall@10 = 1.0 at sf0.1 with ~14% of the corpus as "
-    "candidates — the sweep q_ann_recall records the trade), "
-    "exact cosine re-rank of candidates only (the oracle-proven "
-    "q_similarity_topk ranking convention). Scales as a 16-byte-"
-    "per-vector signature scan + candidate-only cosine instead of "
-    "full brute force per query.",
+    doc="Top-10 cosine neighbors of one probe among 128-bit sign-LSH candidates.",
 )
 def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ann_lsh(spark, sf_dir)
@@ -1000,21 +964,11 @@ def _embed_quantize_oracle_sql() -> str:
 @query(
     "q_embed_quantize",
     _embed_quantize_oracle_sql(),
-    doc="int8 embedding quantization + quantized retrieval (the "
-    "vector-compression tier of a training-data pipeline): "
-    "symmetric per-vector quantization q_i = floor(x_i·127/max|x| "
-    "+ 0.5) — int8 range, engine-deterministic (one IEEE divide for "
-    "the scale, one multiply + floor per component) — then top-10 "
-    "by QUANTIZED cosine (exact int64 dots, deterministic sqrt/"
-    "divide) with the exact-double cosine alongside, so the "
-    "compression error is visible per rank. Scale: int8 storage is "
-    "8x smaller than the double vectors (4x vs float32) and the "
-    "integer dot is SIMD-friendly — the quantized scan tier "
-    "complements sign-LSH (16 B/vec signatures) and IVF (partition "
-    "pruning); on the harness corpus quantized top-10 membership "
-    "matches exact retrieval with |cos_q − cos_exact| <= ~0.003.",
+    doc="Top-10 vectors by int8-quantized cosine, beside the exact cosine.",
 )
 def q_embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # q_i = floor(x_i*127/max|x| + 0.5): one IEEE divide for the scale and
+    # one multiply + floor per component, deterministic across engines.
     e = spread(_t(spark, sf_dir, "embeddings")).select(
         "vec_id", as_double(F.col("embedding")).alias("v")
     )
@@ -1124,12 +1078,7 @@ def cached_ivf_index(spark: SparkSession, sf_dir: str) -> str:
 @query(
     "q_ann_ivf",
     None,
-    doc="ANN via IVF (inverted-file index): deterministic spherical "
-    "k-means coarse quantizer (k=16, 2 Lloyd iterations, Arrow-matmul "
-    "assignment), query probes the 4 nearest centroids, exact cosine "
-    "re-rank of those clusters only — the partition-pruned scale path "
-    "complementing the sign-LSH variant (q_ann_lsh). nprobe=k is "
-    "tested equal to brute force.",
+    doc="Top-10 cosine neighbors of one probe from the 4 nearest of 16 IVF clusters.",
 )
 def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The declared query reads the SHIPPED on-disk index
@@ -1206,18 +1155,7 @@ def _embed_neardup_oracle_sql() -> str:
 @query(
     "q_embed_neardup",
     _embed_neardup_oracle_sql(),
-    doc="embedding-cosine near-dup (all-pairs), ORACLE-EXACT "
-    "end-to-end: 32-bit sign-LSH signature per "
-    "vector (Arrow-batched matmul over the engine-neutral integer "
-    "grid), candidates = vectors sharing a signature-band (4 bands × "
-    "8 bits, one shuffle on the band key, buckets skew-capped), exact "
-    "cosine re-rank of candidate pairs only. Sign-LSH: P(bit agree) = "
-    "1 − angle/π, so a cos≥0.95 dup pair agrees on an 8-bit band w.p. "
-    "~0.43 → ~89%% recall over 4 bands, while a random pair is a "
-    "candidate w.p. ~1.6%% — the all-pairs O(n²) comparison is never "
-    "materialized. The corpus plants no true dups (max pairwise "
-    "cosine ≈0.51), so the query reports the top-100 most-similar "
-    "candidate pairs.",
+    doc="Top-100 most similar embedding pairs among 32-bit sign-LSH band candidates.",
 )
 def q_embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The scored pair frame is corpus-deterministic (seeded planes,
@@ -1225,6 +1163,8 @@ def q_embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # staged once per corpus like cached_minhash_pairs; the
     # banded construction below runs for real on first build and
     # stays plan/parity-pinned by the test suite.
+    # The corpus plants no true duplicates (max pairwise cosine ~0.51),
+    # so the query reports the most similar candidate pairs.
     pairs = corpus_artifact(
         spark,
         sf_dir,
@@ -1309,16 +1249,7 @@ def _embed_neardup_pairs_live(
     GROUP BY media_type
     ORDER BY media_type
     """,
-    doc="multimodal plumbing: binary asset column + Arrow-batched "
-    "mapInPandas metadata extraction, censused by media_type. "
-    "Oracle-backed: the deterministic fake assets (UTF-8 payloads, "
-    "doc_id%3 media type) make the whole mapInPandas path "
-    "SQL-checkable — n_bytes = payload octet length and width = the "
-    "length-derived stub (text payloads match no container magic), so "
-    "the hash match proves the binary column, Arrow batch flow, and "
-    "header-sniff fallback end-to-end. The REAL header parses "
-    "(PNG/GIF/JPEG dims, WAV/MP4 durations) are covered by contract "
-    "tests on generated container bytes.",
+    doc="Media-type census of metadata extracted from binary assets.",
 )
 def q_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     from prueba_tecnica_analista_etl_spark.multimodal import (
@@ -1369,17 +1300,7 @@ def _stream_session(spark: SparkSession) -> SparkSession:
     """
     SELECT event_id, user_id, epoch_us(ts) AS ts_us FROM events
     """,
-    doc="T10 native streaming dedup (dropDuplicates → "
-    "StreamingDeduplicate), ORACLE-EXACT: exactly-once projection of "
-    "an at-least-once stream — two overlapping landing files (middle "
-    "20% of ids delivered twice, in different micro-batches) pass "
-    "through the engine's seen-id state store; every event_id is "
-    "emitted exactly once. Because the re-deliveries are identical "
-    "copies and event_ids are unique in the source, the drained "
-    "exactly-once sink equals the plain projection of the source "
-    "table — so plain SQL value-checks the exactly-once property "
-    "itself. NULL-id rows bypass the dedup at the plan level; state is "
-    "checkpointed with the query.",
+    doc="Exactly-once projection of an at-least-once event stream (streaming dedup).",
 )
 def q_stream_dedupe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Assert the invariants the oracle-exactness RESTS on: event_id
@@ -1481,20 +1402,7 @@ def q_stream_dedupe(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE epoch_us(last_ts) + 7200000000
             <= (SELECT epoch_us(max(ts)) FROM events)
     """,
-    doc="T4,T5,T7, ORACLE-EXACT: events replayed as a file stream "
-    "(availableNow, 2 micro-batches), session_window(30 min) per user "
-    "with watermark, append-mode persistent parquet sink (lazy "
-    "exactly-once read, incremental resume on re-invocation); returns "
-    "sessions finalized with a TWO-HOUR safety margin (last event + "
-    "2 h <= the stream's max event time). The margin is what makes "
-    "the streaming result SQL-checkable without replicating engine "
-    "watermark internals: every session under the margin is provably "
-    "finalized (final watermark = max event time - 1 s, far past "
-    "last+30 min+margin), the margin filter itself is evaluated on "
-    "identical values by both engines, and the withheld tail — "
-    "Spark's documented append-mode contract — is excluded on BOTH "
-    "sides instead of estimated. "
-    "Streaming state is bounded by active keys (watermark eviction).",
+    doc="30-minute user sessions of a replayed event stream, finalized 2 hours back.",
 )
 def q_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     data_dir, schema = write_replay_files(spark, sf_dir, "events")
@@ -1580,13 +1488,7 @@ def _corpus_curate_oracle_sql() -> str:
 @query(
     "q_corpus_curate",
     _corpus_curate_oracle_sql(),
-    doc="flagship training-data composition, ORACLE-EXACT end-to-end "
-    "(the engine-neutral minhash pairs make the "
-    "whole DAG SQL-expressible): quality gate (minimum length) "
-    "-> exact dedup (content keep-first) -> minhash "
-    "near-dup purge (greedy min-id survivor fixpoint, 3 rounds + "
-    "enforcement, unrolled term-for-term in the oracle) as ONE lazy "
-    "DAG (pipelines/corpus.py); returns the surviving corpus.",
+    doc="Curated corpus: length gate, exact dedup, then MinHash near-duplicate purge.",
 )
 def q_corpus_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from prueba_tecnica_analista_etl_spark.pipelines.corpus import (
@@ -1678,24 +1580,8 @@ def _multimodal_pipeline_oracle_sql() -> str:
 @query(
     "q_multimodal_pipeline",
     _multimodal_pipeline_oracle_sql(),
-    doc="multimodal END-TO-END composition, ORACLE-EXACT on the "
-    "harness corpus (the stub feature stage is "
-    "exact integer/IEEE arithmetic, and the fake UTF-8 payloads "
-    "never decode as images, so the byte-histogram path is the one "
-    "taken with or without PIL): binary assets -> Arrow-batched "
-    "feature extraction (byte-histogram stub standing in for a "
-    "model forward pass; decoded-pixel histogram where PIL exists "
-    "on REAL image corpora, outside this oracle's scope) -> brute "
-    "cosine top-10 against a probe asset's vector — the "
-    "retrieve-similar-assets loop of a multimodal curation "
-    "pipeline, composed from the declared pieces (fake_assets, "
-    "extract_features, functions.vectors.cosine). Plan shape: "
-    "features are computed in one mapInPandas pass; the probe "
-    "vector is a 16-float driver value broadcast into a map-only "
-    "cosine + TakeOrderedAndProject top-k — ONE scan of the asset "
-    "frame, no self-join, no global sort; at 100 TB this is the "
-    "q_similarity_topk shape with the embedding column produced "
-    "inline instead of precomputed.",
+    doc="Top-10 assets by cosine of their staged features to a probe asset's.",
+    shape=Shape(has=("TakeOrderedAndProject",), max_exchanges=0),
 )
 def q_multimodal_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from prueba_tecnica_analista_etl_spark.functions.vectors import (
@@ -1760,22 +1646,7 @@ def q_multimodal_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
                   FROM log)
     SELECT user_id, event_id, value FROM last WHERE rn = 1 AND op <> 'D'
     """,
-    doc="T5 CDC mode end-to-end, ORACLE-EXACT: the events table "
-    "replayed as an ORDERED CHANGE LOG on user_id ('purchase' = "
-    "delete marker, everything else upsert) through the foreachBatch "
-    "CDC sink — per micro-batch the log compacts to its final op per "
-    "key, deletes remove target keys, the idempotency ledger makes "
-    "replays fixpoints — and the materialized snapshot (live users "
-    "with their last event) comes back as the result. Because the "
-    "replay is range-partitioned on ts (later batches strictly "
-    "override earlier ones) and within-batch compaction picks the "
-    "same (ts DESC, event_id DESC) survivor as a global ranking, the "
-    "drained target equals the one-shot SQL compaction's live rows — "
-    "value-hash-checked (the batch "
-    "twin q_cdc_apply proves the census form of the same ranking). "
-    "Scale shape: per batch one hash(user_id) compaction shuffle + "
-    "the whole-target merge (the documented harness-size trade; the "
-    "partitioned sink variant is the 100 TB path).",
+    doc="Live users with their last event, from a replayed change log through the CDC sink.",
 )
 def q_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     from prueba_tecnica_analista_etl_spark.streaming.replay import (
@@ -1888,30 +1759,7 @@ def _stream_neardup_oracle_sql() -> str:
 @query(
     "q_stream_neardup",
     _stream_neardup_oracle_sql(),
-    doc="STREAMING near-dup gate, ORACLE-EXACT (the "
-    "engine-neutral minhash family makes even the streaming tier "
-    "value-provable): documents replayed in id order through a "
-    "foreachBatch gate that admits a doc only if no ALREADY-ACCEPTED "
-    "doc is a near-dup (exact Jaccard >= 0.5 over md5_60 shingle "
-    "hashes, candidates via the banded-signature index probe) and "
-    "applies the greedy min-id survivor rule within each batch — "
-    "the feed-curation twin of the at-rest q_corpus_curate purge. "
-    "Accepted index = append-only parquet, one dir per committed "
-    "batch (published once = idempotency ledger; replays are "
-    "no-ops), split into keys (doc_id, band, key) and docs (doc_id, "
-    "hs) frames so the shingle-hash array is stored once per doc, "
-    "not once per band. Candidates are UNCAPPED within a bucket — a "
-    "gate that admitted a doc because its match sat in another skew "
-    "chunk would be a quality bug — so the oracle uses the uncapped "
-    "pair CTE. Drained result == the batch greedy fixpoint; the "
-    "oracle is the purge recursion unrolled (16 rounds, 8x the "
-    "measured corpus chain depth, guard-tested at half the unroll). "
-    "The index folds into gen-* generations past 16 loose units "
-    "(compact_index), keeping probe cost and file listing bounded "
-    "over a long stream. Scale: per batch ONE signature "
-    "pass (checkpointed, reused by probe + intra-batch purge + "
-    "append) + one (band,key) index probe — the accepted corpus is "
-    "touched only through its signature index, never its text.",
+    doc="Docs a streaming near-duplicate gate admits from a replayed document feed.",
 )
 def q_stream_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from prueba_tecnica_analista_etl_spark.streaming.neardup import (
@@ -1991,24 +1839,7 @@ def _lsh_recall_oracle_sql() -> str:
 @query(
     "q_lsh_recall",
     _lsh_recall_oracle_sql(),
-    doc="LSH quality audit, ORACLE-EXACT (the "
-    "engine-neutral md5_60 shingle hashing makes BOTH sides "
-    "SQL-expressible): candidate-stage RECALL of the banded "
-    "minhash tier against exhaustive ground truth. Truth = every "
-    "pair with exact Jaccard >= 0.5 over the same 3-token shingle "
-    "hashes, candidate-generated COMPLETELY by share-any-shingle "
-    "bucketing (a pair with jaccard > 0 shares a shingle by "
-    "definition, so no true pair can escape the bucket join — "
-    "unlike the min-shingle or banded tiers, which trade recall "
-    "for one bucket per doc[-band]). Found = the memoized banded "
-    "minhash pair frame. found ⊆ truth by construction (identical "
-    "shingling, identical similarity predicate), so recall = "
-    "n_found/n_true exactly; the banding-theory target at s=0.5 "
-    "with 4x3 bands is 1-(1-0.5^3)^4 ≈ 0.41 BEFORE the exact "
-    "re-rank, and every emitted pair survives the rerank, so "
-    "measured recall audits the real banding+cap loss. Scale: the "
-    "share-any-shingle join is the O(df^2) exhaustive tier, paid "
-    "once per corpus: the truth frame is a corpus artifact.",
+    doc="Candidate recall of banded MinHash against all pairs with Jaccard >= 0.5.",
 )
 def q_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall audit of the minhash LSH near-dup tier (ORACLE-EXACT:
@@ -2118,20 +1949,7 @@ def q_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_ann_recall",
     None,
-    doc="ANN quality audit SWEEP: recall@10 of both approximate tiers "
-    "across three operating points each (sign-LSH 128-bit hamming "
-    "radius 53/55/57 over one shared candidate frame; IVF nprobe "
-    "2/4/8 read from the ON-DISK partitionBy(cluster) index, so the "
-    "audit covers the real shipped artifact and its scan is "
-    "partition-pruned to the union of the probe sets) against the "
-    "exact brute-force cosine top-10 for the same probe — the "
-    "retrieval-vs-cost trade emitted as a TABLE (one row per tier x "
-    "point, shipped points marked, n_candidates = the point's scan "
-    "cost), not a constant. All rankings use the identical (4-place "
-    "cosine DESC, vec_id ASC) total order, so intersections are "
-    "well-defined; the audit is joins of top-10 frames plus "
-    "census-sized aggregates — entirely in-plan, no driver collect "
-    "beyond the centroid sidecar the index owns.",
+    doc="Recall@10 of sign-LSH and IVF at three operating points each.",
 )
 def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@10 census for the approximate similarity tiers.
@@ -2465,18 +2283,7 @@ def _dup_matrix_oracle_sql() -> str:
 @query(
     "q_dup_matrix",
     _dup_matrix_oracle_sql(),
-    doc="extension (cross-source duplication matrix): which "
-    "ingest sources copy which — per unordered source pair, the "
-    "near-dup pair count and the integer-rescaled similarity mass "
-    "(sum of round(jaccard,4)*10000, exact 64-bit sums) over the "
-    "banded-minhash pair frame. THE census a curation owner reads "
-    "before deciding source priorities (q_source_priority_dedup's "
-    "upstream evidence): a hot off-diagonal cell means two feeds "
-    "mirror each other and one should be demoted. Scale: reuses the "
-    "memoized pair frame (cached_minhash_pairs — built once per "
-    "corpus from the shared doc_shingle_frame artifact), joins the "
-    "census-sized pair set to a two-column (doc_id, source) "
-    "projection, and the output is |sources|^2-bounded.",
+    doc="Near-duplicate pair count and similarity mass per unordered source pair.",
 )
 def q_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     from prueba_tecnica_analista_etl_spark.pipelines.corpus import (
@@ -2758,27 +2565,8 @@ def _semdedup_oracle_sql() -> str:
 @query(
     "q_semdedup",
     _semdedup_oracle_sql(),
-    doc="extension (semantic dedup — the SemDeDup "
-    "composition from public pretraining-pipeline literature): "
-    "cluster the embedding space coarsely, purge near-identical "
-    "points WITHIN each cluster, keep one representative per "
-    "semantic-duplicate family. Engine shape: int8-quantize every "
-    "vector (q_embed_quantize's exact integer grid), assign to the "
-    "nearest of SEMDEDUP_K seed medoids by quantized cosine (the "
-    "engine-neutral stand-in for the float k-means quantizer — "
-    "swappable for ivf_centroids at 100 TB, where this census "
-    "becomes rows-only like q_ann_ivf), generate intra-cluster "
-    "candidate pairs only (groupBy(cid) + capped_pair_array skew "
-    "chunks — never all-pairs, never cross-cluster), connected "
-    "components over pairs at cosq ≥ SEMDEDUP_T, purge everything "
-    "but each family's min-id representative. Output: per-cluster "
-    "purge census (cluster, n_vecs, n_dup_pairs, n_purged, n_kept) "
-    "— all-integer, no float parity risk. Every stage is staged per "
-    "corpus (assign / pairs / labels artifacts, operating point in "
-    "the keys) and the whole tier is value-exact vs a recursive-CTE "
-    "DuckDB oracle. Eager note: first build runs the CC fixpoint "
-    "(cluster_labels discipline); steady state reads three "
-    "census-sized artifacts.",
+    doc="Semantic dedup census per embedding cluster: pairs, purged and kept vectors.",
+    shape=Shape(lacks=("Exchange SinglePartition",)),
 )
 def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return semdedup_census_for(
@@ -2872,19 +2660,8 @@ def _embed_stats_oracle_sql() -> str:
 @query(
     "q_embed_stats",
     _embed_stats_oracle_sql(),
-    doc="extension (embedding QA census): per-dimension moment "
-    "census over the embeddings table — n, min/max, mean, variance "
-    "on the floor(x·1e6+0.5) integer grid with DECIMAL(38,0)/HUGEINT "
-    "accumulation (exact in any summation order, so the census is "
-    "bit-identical across engines AND across cluster sizes — the "
-    "property a drift monitor needs). This is the table a vector "
-    "pipeline watches per ingest batch: a dimension whose variance "
-    "collapses went dead (projection/init bug), one whose mean walks "
-    "flags normalization drift upstream of every ANN/semdedup tier. "
-    "Scale shape: one posexplode (map-only) + one 64-group hash "
-    "aggregate — partial aggregation collapses each partition to "
-    "64 rows before the shuffle, so network cost is O(dims x "
-    "partitions), never O(rows).",
+    doc="Per-dimension embedding moments (n, min, max, mean, variance) on an integer grid.",
+    shape=Shape(has=("Generate", "partial_")),
 )
 def q_embed_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # no spread(): posexplode + 64-group partial agg is

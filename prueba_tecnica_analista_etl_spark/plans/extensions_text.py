@@ -26,7 +26,7 @@ from prueba_tecnica_analista_etl_spark.functions.vectors import (
     cosine,
 )
 from prueba_tecnica_analista_etl_spark.operators.dedupe import keep_first
-from prueba_tecnica_analista_etl_spark.plans.queries import _t, query
+from prueba_tecnica_analista_etl_spark.plans.queries import Shape, _t, query
 from prueba_tecnica_analista_etl_spark.sources.tables import spread
 
 
@@ -67,11 +67,11 @@ def doc_term_tf_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
              row_number() OVER (PARTITION BY text ORDER BY doc_id) AS rn
       FROM documents) WHERE rn = 1
     """,
-    doc="extension (exact dedup): content-keyed keep-first — survivor = "
-    "min doc_id per identical text. At 100 TB group on md5(text) "
-    "instead of the raw text to shrink shuffle keys.",
+    doc="Exact-content dedup: the min doc_id survivor per identical text.",
 )
 def q_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # At 100 TB group on md5(text) instead of the raw text to shrink the
+    # shuffle keys.
     d = _t(spark, sf_dir, "documents")
     return keep_first(d, ["text"], [F.asc("doc_id")]).select("doc_id", "lang")
 
@@ -91,16 +91,11 @@ _BPE_PATTERN = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]"
              AS avg_bpe_tokens
     FROM documents GROUP BY source
     """,
-    doc="extension (token counting, both tokenizers in ONE scan): "
-    "whitespace tokens plus the BPE-ish pre-tokenizer regex (letter "
-    "runs | digit runs | single other-symbol — the GPT-style "
-    "pre-split shape) per source — the sizing query every "
-    "training-data pipeline starts with. The RE2-compatible pattern "
-    "evaluates identically in Spark (Java regex) and DuckDB, so both "
-    "counts are oracle-checked. (Formerly two registry entries; one "
-    "scan computes both.)",
+    doc="Whitespace and BPE-style pre-tokenizer token counts per source.",
 )
 def q_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # The RE2-compatible pattern evaluates identically in Spark (Java
+    # regex) and DuckDB.
     d = _t(spark, sf_dir, "documents")
     nt = n_tokens(F.col("text"))
     nb = F.size(
@@ -156,20 +151,13 @@ _EMAIL_RE = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+[.][A-Za-z]{2,}"
         FROM customer))
     GROUP BY c_mktsegment
     """,
-    doc="extension (PII scrubbing): redact phone numbers and emails "
-    "from free text before training — regexp_extract_all census + "
-    "regexp_replace rewrite in one native pass, no UDF. The driver "
-    "testdata carries no PII-shaped columns, so the contact-card text "
-    "plants deterministic phones (every 3rd customer) and emails "
-    "(every 5th) identically in both engines; matches are real and "
-    "nonzero, and scrubbed_chars makes the oracle value-verify the "
-    "REPLACED text, not just the match counts. RE2-compatible "
-    "patterns evaluate identically in Spark (Java regex) and DuckDB "
-    "(which needs the 'g' flag to match Spark's replace-all "
-    "default). At 100 TB this is a map-only operator: no shuffle "
-    "until the audit aggregate.",
+    doc="Phone and email matches and scrubbed text in planted customer contact cards.",
+    shape=Shape(max_exchanges=1),
 )
 def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # The testdata has no PII columns, so the contact card plants phones
+    # (every 3rd customer) and emails (every 5th) in both engines. DuckDB's
+    # regexp_replace needs the 'g' flag to match Spark's replace-all.
     c = _t(spark, sf_dir, "customer")
     k = F.col("c_custkey")
     phone = F.format_string(
@@ -228,9 +216,7 @@ def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM documents))
     GROUP BY quality
     """,
-    doc="extension (quality scoring): length + stopword-ratio heuristic "
-    "bucketing (the pretraining-filter shape: compute per-doc features "
-    "natively, bucket, census).",
+    doc="Doc census by length and stopword-ratio quality bucket.",
 )
 def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
@@ -280,10 +266,7 @@ _LANG_HITS = ", ".join(
               FROM documents)))
     GROUP BY lang, predicted
     """,
-    doc="extension (language-ID): stopword-hit n-gram heuristic with "
-    "deterministic tie-break, output as a lang×predicted confusion "
-    "census. The harness corpus shares one vocabulary across langs, so "
-    "accuracy is not meaningful here — the operator is proven by parity.",
+    doc="Language-ID confusion census from stopword hits with a deterministic tie-break.",
 )
 def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     # no spread(): predict_lang is a handful of array ops per
@@ -312,9 +295,7 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT doc_id, min(md5(array_to_string(toks[i:i+4], ' '))) AS fp
     FROM s GROUP BY doc_id
     """,
-    doc="extension (fingerprinting): min-md5 over 5-token shingles — "
-    "rolling-hash document fingerprint (winnowing's single-fingerprint "
-    "case); md5 is engine-portable so this one is oracle-checked.",
+    doc="Per-doc fingerprint: the min md5 over its 5-token shingles.",
 )
 def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread(_t(spark, sf_dir, "documents"))
@@ -335,13 +316,11 @@ def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE vec_id <> 0
     ORDER BY cos_sim DESC, vec_id LIMIT 10
     """,
-    doc="extension (similarity search): brute-force cosine top-k for one "
-    "query vector — broadcast the query, one pass over the corpus, "
-    "TakeOrderedAndProject; double-precision sequential fold matches "
-    "DuckDB bit-for-bit. Scale path for many queries: sign-LSH buckets "
-    "(q_ann_lsh).",
+    doc="Brute-force cosine top-k neighbors of one query vector.",
+    shape=Shape(has=("TakeOrderedAndProject",), max_exchanges=1),
 )
 def q_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # A sequential double fold matches DuckDB bit for bit.
     e = _t(spark, sf_dir, "embeddings").select(
         "vec_id", as_double(F.col("embedding")).alias("v")
     )
@@ -404,13 +383,8 @@ def _winnow_fp_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM win WHERE i <= greatest(n_sh - 3, 1)
     GROUP BY doc_id
     """,
-    doc="extension (winnowing/MOSS fingerprints): md5 k=3-shingles, "
-    "min of every w=4 sliding window, distinct minima — guarantees a "
-    "shared fingerprint for any shared 6-token run. Spark side is pure "
-    "higher-order array expressions (sequence/slice/array_min): the "
-    "window walk stays inside each row — ZERO shuffles before the "
-    "final projection, vs the oracle's explode + window-frame SQL "
-    "which shuffles every shingle. Same answer, verified row-exact.",
+    doc="Winnowing fingerprints: distinct minima of each 4-window of md5 3-shingle hashes.",
+    shape=Shape(max_exchanges=0),
 )
 def q_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _winnow_fp_frame(spark, sf_dir).select(
@@ -443,13 +417,8 @@ def q_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
       WHERE e.vec_id <> q.q_id
     ) WHERE rn <= 3
     """,
-    doc="extension (batch similarity search): top-3 neighbors for 8 "
-    "query vectors in ONE corpus scan — the query block is broadcast "
-    "(KBs) and ranking is a per-query window with WindowGroupLimit "
-    "pruning, so many-query brute force costs one pass regardless of "
-    "query count. Complements the per-query scale paths (sign-LSH "
-    "buckets, IVF probing) for the small-query-batch regime where a "
-    "single scan beats index maintenance.",
+    doc="Top-3 cosine neighbors of each of 8 query vectors.",
+    shape=Shape(has=("WindowGroupLimit",)),
 )
 def q_ann_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from prueba_tecnica_analista_etl_spark.operators.similarity import (
@@ -477,22 +446,8 @@ def q_ann_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
                 AS BIGINT) AS chars_saved
     FROM documents GROUP BY lang ORDER BY lang
     """,
-    doc="Unicode NFC normalization census (the corpus-prep "
-    "hygiene op every real text pipeline runs before tokenization): "
-    "per lang, how many docs contain non-ASCII, how many CHANGE "
-    "under NFC (decomposed accents, compatibility forms), and the "
-    "codepoints saved by composing them. Scale pattern: ASCII is "
-    "NFC-invariant, so the corpus is SPLIT on a JVM-side "
-    "rlike('[^\\\\x00-\\\\x7F]') prefilter and only the non-ASCII "
-    "sliver crosses Arrow into the Python normalizer — a CASE WHEN "
-    "around the UDF would ship every row (Spark hoists UDFs into an "
-    "ArrowEvalPython stage that runs unconditionally). On real "
-    "mostly-ASCII corpora that is a ~100x Arrow-traffic cut; the "
-    "all-ASCII harness corpus exercises exactly the "
-    "zero-Python-rows fast path while the unicode-fixture test "
-    "proves the normalizer against DuckDB's utf8proc on a mixed "
-    "corpus (NFC is frozen by Unicode's stability policy, so "
-    "CPython's unicodedata and utf8proc agree byte-for-byte).",
+    doc="Per-language non-ASCII docs, docs changed by NFC, and codepoints saved.",
+    shape=Shape(has=("ArrowEvalPython",)),
 )
 def q_unicode_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from prueba_tecnica_analista_etl_spark.functions.text import (
@@ -572,17 +527,8 @@ def q_unicode_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM pick WHERE vr = 1
     ORDER BY q_id
     """,
-    doc="kNN label-vote classification (the pseudo-labeling / "
-    "annotation-audit op of a training pipeline): for each of 10 "
-    "probe vectors, the 10 exact-cosine nearest LABELED neighbors "
-    "vote; prediction = majority label (count desc, label asc "
-    "tie-break — integer arithmetic, engine-stable), emitted beside "
-    "the probe's true label and a 1/0 correctness flag (bigint — the "
-    "driver-proven dtype set excludes boolean). One corpus scan "
-    "serves all probes (broadcast query block + per-query "
-    "WindowGroupLimit — the q_ann_batch shape), the vote is a "
-    "census-sized aggregate; at scale the neighbor stage swaps to "
-    "the IVF or sign-LSH tier without touching the vote.",
+    doc="kNN label vote of 10 probe vectors over their 10 nearest labeled neighbors.",
+    shape=Shape(has=("WindowGroupLimit",)),
 )
 def q_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
@@ -706,21 +652,8 @@ def _ndcg_oracle_sql() -> str:
 @query(
     "q_eval_ndcg",
     _ndcg_oracle_sql(),
-    doc="extension (retrieval-eval census): nDCG@10 per probe "
-    "over the labeled embedding corpus — THE ranking-quality metric "
-    "for a retrieval/RAG index, next to q_eval_topk_precision's "
-    "hit-rate and q_ann_recall's candidate-recall sweep. Relevance "
-    "is binary label match; position discounts ride the fixed-point "
-    "grid (w_r = round(1e6/log2(r+1)) as build-time literals, so "
-    "runtime arithmetic is all-integer and engine-identical); IDCG "
-    "normalizes by the FULL corpus relevance (min(k, corpus "
-    "relevant ex self) ideal list — the proper retrieval form, not "
-    "the retrieved-list shuffle). One corpus scan serves all probes "
-    "(cosine_topk_batch: broadcast query block + WindowGroupLimit, "
-    "rank carried out of the SAME unrounded-cos window the top-k "
-    "uses), the label census is vocabulary-sized, the output is "
-    "probes-sized. Neighbor stage swaps to IVF/sign-LSH at scale "
-    "without touching the metric.",
+    doc="nDCG@10 per probe vector over the labeled embedding corpus.",
+    shape=Shape(has=("WindowGroupLimit",)),
 )
 def q_eval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     from prueba_tecnica_analista_etl_spark.operators.similarity import (
@@ -828,26 +761,14 @@ TOKEN_HIST_TOP = 15
            tot.total_tf
     FROM top CROSS JOIN tot
     """,
-    doc="extension (vocabulary head census): the corpus's top-"
-    f"{TOKEN_HIST_TOP} terms by frequency with rank, cumulative "
-    "frequency and the corpus total — the Zipf-head table a tokenizer "
-    "build reads first (how much mass the head covers decides vocab "
-    "size and BPE merge budget; cum_tf/total_tf at each rank IS the "
-    "coverage curve, reported as exact integers so the oracle "
-    "value-verifies it without float division). Plan shape: the "
-    "term-shuffled tf aggregate feeds TakeOrderedAndProject — "
-    "per-partition partial top-k, O(k) rows cross the wire, NO "
-    "vocab-wide single-partition sort — then the k survivors are "
-    "collapsed into ONE sorted array row (the SinglePartition "
-    "exchange carries partial ObjectHashAggregate state, k rows "
-    "max) and rank/cumsum are array-HOF arithmetic (posexplode + "
-    "aggregate over slices, O(k^2) on k=15). The oracle uses the "
-    "equivalent window form. At 100 TB only the tf aggregate "
-    "touches data-scale rows; everything after is O(k).",
+    doc="Top terms by frequency with rank, cumulative frequency and the corpus total.",
+    shape=Shape(has=("TakeOrderedAndProject",)),
 )
 def q_token_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Term census folded from the staged doc_term_tf artifact:
     # sum of per-doc tfs == the raw token-stream count.
+    # The k survivors collapse into one sorted array row; rank and cumsum
+    # are array arithmetic over it (the oracle uses the window form).
     tf = (
         doc_term_tf_frame(spark, sf_dir)
         .groupBy("term")
@@ -975,32 +896,8 @@ def _bm25_per_doc_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM contrib GROUP BY doc_id, source
     ORDER BY score_micro DESC, doc_id LIMIT 10
     """,
-    doc="extension (BM25 retrieval): top-10 docs for a fixed query "
-    "term set under BM25 (k1=1.2, b=0.75) — the classical sparse "
-    "retrieval scorer TF-IDF pipelines graduate to, and the lexical "
-    "side of hybrid search next to the ANN family. Cross-engine "
-    "hash-stability by construction (the q_perplexity_buckets "
-    "discipline): idf = ln((N+1)/(df+0.5)) is ONE libm call per "
-    "query term quantized to a 1e-6 integer grid; the saturation "
-    "factor tf*(k1+1)/(tf + k1*(1-b) + k1*b*dl/avgdl) is multiplied "
-    "through by 10*T (avgdl = T/N) into the all-integer form "
-    "22*tf*T / (10*tf*T + 3*T + 9*dl*N), and each contribution is "
-    "one exact integer floor division — no float ever touches a "
-    "sort key. Magnitude audit: the numerator idf6*22*tf*T would "
-    "overflow int64 near tf*T ~ 2e10 (a ~100 GB corpus at tf=1 — "
-    "far short of the design point), so it is carried in 128-bit "
-    "lanes: DECIMAL(38,0) in Spark (whose `div` stays an exact "
-    "integral divide) and HUGEINT in DuckDB — verified to agree "
-    "bit-for-bit past 2^63. The BIGINT denominator's own bound is "
-    "tf*T < 9.2e17, i.e. a 2.5e13-token (100 TB) corpus is safe for "
-    "any per-doc term frequency below ~3.6e4. Plan shape: for a "
-    "FIXED query-term set every per-doc quantity (dl and each "
-    "term's tf) is computed IN-ROW from the token array, so scoring "
-    "is map-only — the only exchange is the ONE-ROW census "
-    "(n_docs, t_tokens, per-term df) partial-agged and broadcast "
-    "back; two corpus scans, ZERO corpus shuffles, "
-    "TakeOrderedAndProject yields the top-10 — per-partition "
-    "partial top-k, no global sort.",
+    doc="Top-10 docs by BM25 for a fixed query term set, in exact integer arithmetic.",
+    shape=Shape(has=("TakeOrderedAndProject",), max_exchanges=2),
 )
 def q_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The oracle's CTE chain (corpus explode -> dl/tf/df aggregates ->
@@ -1084,11 +981,8 @@ BPE_PAIRS_TOP = 30
     FROM pairs GROUP BY pair
     ORDER BY freq DESC, pair LIMIT {BPE_PAIRS_TOP}
     """,
-    doc="extension (tokenizer build): adjacent character-pair census "
-    "— the first BPE merge iteration — computed over the tf-weighted "
-    "VOCABULARY frame, not the corpus: pair explosion costs "
-    "O(|vocab| x word-length) after one corpus-scale word-count "
-    f"shuffle. Top-{BPE_PAIRS_TOP} by frequency.",
+    doc="Top adjacent character pairs over the tf-weighted vocabulary (first BPE merge).",
+    shape=Shape(has=("TakeOrderedAndProject", "doc_term_tf-")),
 )
 def q_bpe_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Adjacent character-pair frequency census (BPE merge step 1).

@@ -57,18 +57,31 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 
 @dataclass(frozen=True)
+class Shape:
+    """A query's physical-plan claim, read only by the registry-wide
+    plan test: substrings its executed plan (``toString()``) must
+    contain and must not, and a bound on the ``Exchange`` nodes below
+    ``AdaptiveSparkPlan``."""
+
+    has: tuple[str, ...] = ()
+    lacks: tuple[str, ...] = ()
+    max_exchanges: int | None = None
+
+
+@dataclass(frozen=True)
 class QuerySpec:
     fn: QueryFn
     oracle: str | None  # None → rows-only check (non-SQL-expressible)
-    doc: str
+    doc: str  # one line: what the query computes
+    shape: Shape = Shape()
 
 
 REGISTRY: dict[str, QuerySpec] = {}
 
 
-def query(name: str, oracle: str | None, doc: str = ""):
+def query(name: str, oracle: str | None, doc: str, shape: Shape = Shape()):
     def deco(fn: QueryFn) -> QueryFn:
-        REGISTRY[name] = QuerySpec(fn=fn, oracle=oracle, doc=doc)
+        REGISTRY[name] = QuerySpec(fn=fn, oracle=oracle, doc=doc, shape=shape)
         return fn
 
     return deco
@@ -142,8 +155,7 @@ def money_sum(c: Column) -> Column:
              AS revenue
     FROM lineitem WHERE l_linenumber <= 2
     """,
-    doc="S5,P1,P2,F14: projection + derived revenue column; filter pushed "
-    "to the parquet scan (PushedFilters), only 4 columns read.",
+    doc="S5,P1,P2,F14: filtered lineitem projection with a derived revenue column.",
 )
 def q_scan_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
@@ -164,7 +176,7 @@ def q_scan_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE o_orderstatus = 'F' AND o_totalprice > 50000
       AND o_orderpriority IN ('1-URGENT', '2-HIGH')
     """,
-    doc="P3,P6: conjunctive predicates incl. IN-list; all pushed down.",
+    doc="P3,P6: orders matching conjunctive predicates, an IN list among them.",
 )
 def q_filter_predicate(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
@@ -184,8 +196,7 @@ def q_filter_predicate(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT o_orderkey, 'new' AS src FROM orders
     WHERE o_orderdate >= TIMESTAMP '1998-01-01'
     """,
-    doc="O4: positional two-source append; unionByName matches pandas "
-    "concat-by-name semantics (reference load cell).",
+    doc="O4: two-source append matched by column name (pandas concat semantics).",
 )
 def q_union_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
@@ -207,8 +218,7 @@ def q_union_all(spark: SparkSession, sf_dir: str) -> DataFrame:
            count(*) - count(DISTINCT o_custkey) AS dup_rows
     FROM orders
     """,
-    doc="A1,A2,D4: the reference's duplicate pre-check "
-    "(duplicated().sum() == total - distinct).",
+    doc="A1,A2,D4: duplicate pre-check: total vs distinct customer keys of orders.",
 )
 def q_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     return distinct_count_audit(_t(spark, sf_dir, "orders"), "o_custkey")
@@ -221,8 +231,8 @@ def q_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
     FROM orders GROUP BY o_orderpriority
     """,
-    doc="A4: the Excel pivot (rows=category, count + sum of measure); "
-    "one hash-agg shuffle, map-side partial combine.",
+    doc="A4: order count and total price per priority (the workbook pivot).",
+    shape=Shape(has=("partial_",), max_exchanges=1),
 )
 def q_groupby_count_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
@@ -241,12 +251,12 @@ def q_groupby_count_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
     FROM orders GROUP BY ROLLUP(o_orderpriority)
     """,
-    doc="A5: pivot + grand-TOTAL row in one pass (grouping sets). The "
-    "TOTAL row is identified by GROUPING(), not by coalescing NULL — "
-    "a genuine NULL group value must not collide with the grand total "
-    "(both engines agree on the distinction).",
+    doc="A5: order count and total per priority plus a grand-total row.",
+    shape=Shape(has=("Expand",), max_exchanges=1),
 )
 def q_groupby_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # The TOTAL row is identified by GROUPING(), not by coalescing NULL:
+    # a real NULL group must not collide with the grand total.
     o = _t(spark, sf_dir, "orders")
     return (
         o.rollup("o_orderpriority")
@@ -272,8 +282,8 @@ def q_groupby_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem GROUP BY l_partkey
     ORDER BY cnt DESC, l_partkey ASC LIMIT 20
     """,
-    doc="A3,O2,W2: most-duplicated-key table (Excel Duplicados sheet); "
-    "TakeOrderedAndProject — only k rows leave each partition.",
+    doc="A3,O2,W2: most-duplicated part keys of lineitem with their counts.",
+    shape=Shape(has=("TakeOrderedAndProject",)),
 )
 def q_top_duplicates(spark: SparkSession, sf_dir: str) -> DataFrame:
     return top_duplicates(_t(spark, sf_dir, "lineitem"), "l_partkey")
@@ -285,8 +295,7 @@ def q_top_duplicates(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT o_custkey, count(*) AS cnt
     FROM orders GROUP BY o_custkey HAVING count(*) > 1
     """,
-    doc="P5,A3: duplicate hunt (HAVING count>1) from the reference's "
-    "post-merge verification.",
+    doc="P5,A3: customer keys with more than one order (HAVING count > 1).",
 )
 def q_having_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dup_census(_t(spark, sf_dir, "orders"), ["o_custkey"])
@@ -298,7 +307,7 @@ def q_having_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT o_orderkey, o_totalprice
     FROM orders ORDER BY o_totalprice DESC, o_orderkey LIMIT 10
     """,
-    doc="O3,P6: deterministic top-n sample.",
+    doc="O3,P6: top-10 orders by price under a total order.",
 )
 def q_sort_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
@@ -317,8 +326,7 @@ def q_sort_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ELSE 'ERROR - duplicates found' END AS verification
     FROM orders
     """,
-    doc="F6,A7,D5: machine-parseable OK/ERROR verdict "
-    "(seccion3_sql.sql:352-361).",
+    doc="F6,A7,D5: OK/ERROR verdict of the order-key uniqueness check.",
 )
 def q_case_when_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     return uniqueness_verdict(_t(spark, sf_dir, "orders"), "o_orderkey")
@@ -336,9 +344,7 @@ def q_case_when_check(spark: SparkSession, sf_dir: str) -> DataFrame:
                 AS BIGINT) AS P
     FROM orders GROUP BY o_orderpriority
     """,
-    doc="A4 (wide form): true columnar pivot — groupBy().pivot() with "
-    "explicit value list (no extra pass to discover values); compiles "
-    "to one hash aggregation of conditional counts.",
+    doc="A4: order counts per priority, one column per order status.",
 )
 def q_pivot_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
@@ -367,8 +373,7 @@ def q_pivot_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
                                 ORDER BY CAST(ts AS TIMESTAMP), event_id) AS rn
       FROM events) WHERE rn = 1
     """,
-    doc="D1-D3,O1,W1: deterministic keep-first survivor per key under a "
-    "declared total order (never bare dropDuplicates).",
+    doc="D1-D3,O1,W1: first event per (user, event type) under a total order.",
 )
 def q_dedup_keep_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
@@ -388,8 +393,8 @@ def q_dedup_keep_first(spark: SparkSession, sf_dir: str) -> DataFrame:
       JOIN orders   ON o_custkey = c_custkey
     GROUP BY r_name
     """,
-    doc="J1: 4-table star join; region/nation broadcast (tiny dims at any "
-    "scale), customer⋈orders shuffled on key — AQE decides.",
+    doc="J1: order revenue per region over a 4-table star join.",
+    shape=Shape(has=("BroadcastHashJoin",), lacks=("SortMergeJoin",)),
 )
 def q_inner_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     region = _t(spark, sf_dir, "region")
@@ -425,12 +430,7 @@ def q_inner_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY n_name
     ORDER BY revenue DESC, n_name
     """,
-    doc="J1 (deep form, TPC-H Q5 shape): 6-table join — customer ⋈ "
-    "orders ⋈ lineitem shuffle on their keys with the date filter "
-    "pushed to the orders scan; supplier/nation/region broadcast "
-    "(the c_nationkey = s_nationkey 'local supplier' condition rides "
-    "the broadcast join); revenue in exact DECIMAL, one closing cast. "
-    "Sort key is the exact decimal-derived double + n_name tiebreak.",
+    doc="J1: local-supplier revenue per nation of one region (TPC-H Q5 shape).",
 )
 def q_local_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Revenue by nation from LOCAL suppliers (customer and supplier
@@ -486,7 +486,8 @@ def q_local_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE EXISTS (SELECT 1 FROM orders o
                   WHERE o.o_custkey = c.c_custkey AND o.o_orderstatus = 'F')
     """,
-    doc="J2: existence (rows that would be UPDATEs in the merge audit).",
+    doc="J2: customers with a finished order (the rows a merge would update).",
+    shape=Shape(has=("BroadcastHashJoin", "LeftSemi")),
 )
 def q_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = _t(spark, sf_dir, "customer")
@@ -502,7 +503,8 @@ def q_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT c_custkey, c_name FROM customer c
     WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
     """,
-    doc="J3: non-existence (rows that would be INSERTs; FK-orphan shape).",
+    doc="J3: customers without an order (the rows a merge would insert).",
+    shape=Shape(has=("BroadcastHashJoin", "LeftAnti")),
 )
 def q_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = _t(spark, sf_dir, "customer")
@@ -519,7 +521,7 @@ def q_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE NOT EXISTS (SELECT 1 FROM orders o
                       WHERE o.o_orderkey = l.l_orderkey)
     """,
-    doc="J3 quality form: FK-orphan census (designed check nb:352).",
+    doc="J3: census of lineitems whose order key has no order (FK orphans).",
 )
 def q_ref_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem").withColumnRenamed(
@@ -546,9 +548,7 @@ def q_ref_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE NOT EXISTS (SELECT 1 FROM new_d n
                       WHERE n.o_orderkey = b.o_orderkey)
     """,
-    doc="J4,D5,S9: MERGE join-rewrite (INSERT … ON CONFLICT DO UPDATE "
-    "semantics, seccion3_sql.sql:269-294): incoming keys win, untouched "
-    "base passes through; idempotent (property-tested fixpoint).",
+    doc="J4,D5,S9: MERGE as a join rewrite: incoming keys win, untouched base rows pass.",
 )
 def q_upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
@@ -581,12 +581,8 @@ def q_upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
                                 ORDER BY o_totalprice DESC, o_orderkey) AS rn
       FROM orders) WHERE rn <= 5
     """,
-    doc="W1+W2: partitioned ranking with the rank exposed (row_number "
-    "dedup/rank) doubling as top-k-per-group — the same "
-    "WindowGroupLimit pattern at rn<=5; the former q_topk_per_group "
-    "(rn<=3) was this exact plan and was merged here to free a "
-    "registry slot (W2 top-k ranking is also proven by "
-    "q_top_duplicates).",
+    doc="W1,W2: top 5 orders by price per customer, with their row_number rank.",
+    shape=Shape(has=("WindowGroupLimit",)),
 )
 def q_window_rownum(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
@@ -609,10 +605,11 @@ def q_window_rownum(spark: SparkSession, sf_dir: str) -> DataFrame:
                 AS DOUBLE) AS running_total
     FROM orders
     """,
-    doc="W3: per-customer cumulative total; DECIMAL accumulation — exact "
-    "regardless of each engine's frame-evaluation order.",
+    doc="W3: per-customer running total of order prices in exact decimal.",
 )
 def q_window_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # DECIMAL accumulation is exact whatever order each engine evaluates
+    # the frame in.
     o = _t(spark, sf_dir, "orders")
     out = running_sum(
         o,
@@ -642,8 +639,7 @@ def q_window_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
            length(trim(c_name)) AS name_len
     FROM customer
     """,
-    doc="F1,F2,F7,F13: trim / case / digits-only — the notebook's "
-    "email+phone cleaning steps as native expressions.",
+    doc="F1,F2,F7,F13: trimmed, upper-cased and digits-only customer fields.",
 )
 def q_string_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = _t(spark, sf_dir, "customer")
@@ -675,8 +671,7 @@ def q_string_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
           FROM part)
     GROUP BY 1, 2
     """,
-    doc="F3,F4,F5,P4,U1,U2: anchored-regex + length + prefix when-chain "
-    "classification (the validar_telefono rewrite), grouped census.",
+    doc="F3-F5,P4,U1,U2: census of part brands by digit-pattern validation class.",
 )
 def q_regex_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = _t(spark, sf_dir, "part")
@@ -706,8 +701,7 @@ def q_regex_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
            count(*) AS cnt
     FROM events GROUP BY event_type
     """,
-    doc="F8,F10: schema-on-read JSON extraction + errors→0 try_cast "
-    "(the Excel Col_10 semantic).",
+    doc="F8,F10: per event type, the sum of a JSON field with failed casts as 0.",
 )
 def q_try_cast_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
@@ -725,8 +719,7 @@ def q_try_cast_json(spark: SparkSession, sf_dir: str) -> DataFrame:
            count(*) AS cnt
     FROM part GROUP BY 1, 2
     """,
-    doc="F9: composite-string decode via split/element_at (the Col_14 "
-    "pipe-composite pattern), grouped census.",
+    doc="F9: census of part names decoded with split/element_at.",
 )
 def q_split_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = _t(spark, sf_dir, "part")
@@ -752,8 +745,8 @@ def q_split_part(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS null_user
     FROM events
     """,
-    doc="A7,T6: single-pass violations census (all rules fuse into one "
-    "HashAggregate — one scan regardless of rule count).",
+    doc="A7,T6: event violation counts of all null and range rules in one aggregate.",
+    shape=Shape(max_exchanges=1),
 )
 def q_null_range_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
@@ -777,8 +770,7 @@ def q_null_range_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(max(l_extendedprice), 2) AS mx
     FROM lineitem
     """,
-    doc="A8,A9: anomaly-detection statistical profile (designed nb:360); "
-    "approx_percentile variant exercised in tests (rows-only semantics).",
+    doc="A8,A9: statistical profile of lineitem extended price.",
 )
 def q_profile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return profile_stats(_t(spark, sf_dir, "lineitem"), "l_extendedprice")
@@ -797,8 +789,7 @@ def q_profile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
     FROM events GROUP BY 1
     """,
-    doc="F11,T1: watermark-cadence daily volume (batch form of the "
-    "incremental design).",
+    doc="F11,T1: daily event count and value total.",
 )
 def q_volume_by_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
@@ -815,9 +806,7 @@ def q_volume_by_day(spark: SparkSession, sf_dir: str) -> DataFrame:
            event_type, count(*) AS cnt
     FROM events GROUP BY 1, 2
     """,
-    doc="T2: tumbling 1-hour window × event_type (Spark window()); the "
-    "body is streaming/windows.py's tumbling_counts, the same definition "
-    "the stream tests feed a file-replay stream.",
+    doc="T2: event counts per 1-hour tumbling window and event type.",
 )
 def q_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tumbling_counts(_t(spark, sf_dir, "events"))
@@ -848,24 +837,8 @@ def q_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
            epoch_us(max(ts)) - epoch_us(min(ts)) AS duration_us
     FROM s GROUP BY user_id, sn
     """,
-    doc="T4 batch twin: gaps-and-islands sessionization — the BATCH "
-    "form of streaming/windows.py's session_window (30-min "
-    "inactivity gap), value-hash-verified against SQL where the "
-    "streaming form can only be rows-checked. lag() marks session "
-    "breaks, a running sum of breaks numbers sessions, one groupBy "
-    "rolls each up to (start, n_events, duration). Gap compare and "
-    "duration are exact integer microseconds (unix_micros / "
-    "epoch_us) — no float, no timezone formatting risk beyond the "
-    "shared UTC strftime. Plan shape: ONE shuffle total — both "
-    "window functions share the (user_id)×(ts, event_id) sort, and "
-    "the final groupBy(user_id, sn) reuses the hash(user_id) "
-    "partitioning (HashPartitioning(user_id) satisfies the "
-    "ClusteredDistribution of the superset key, so no second "
-    "exchange). At 100 TB this is the canonical shape: state is "
-    "bounded per user partition, and a hot user is a salting "
-    "candidate only if one user's history exceeds an executor — "
-    "the streaming twin's watermark eviction is the unbounded-time "
-    "answer.",
+    doc="T4: per-user sessions (30-minute gap) with start, event count and duration.",
+    shape=Shape(has=("Exchange hashpartitioning(user_id", "Window"), max_exchanges=1),
 )
 def q_sessionize_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
@@ -904,20 +877,8 @@ def q_sessionize_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
                 THEN 1 ELSE 0 END AS is_current
     FROM events
     """,
-    doc="J4 historization twin: slowly-changing-dimension TYPE 2 build "
-    "— where upsert/MERGE (nb:287 staging→UPSERT) keeps only the "
-    "latest row per key, SCD2 keeps EVERY version with a validity "
-    "interval: each change event opens a row at its ts and lead() "
-    "closes it at the next change (half-open [from, to) interval, "
-    "exact integer µs; NULL to = current, flagged). The standard "
-    "warehouse dimension-history pattern, built in one pass — no "
-    "self-join, no per-key loop. Plan shape: the same single "
-    "hash(user_id) shuffle + per-key sort as q_sessionize_batch; "
-    "lead() is a bounded one-row lookahead, state O(1) per row. At "
-    "100 TB the incremental form merges a new batch against only "
-    "each key's OPEN row (valid_to IS NULL) — the partition-scoped "
-    "upsert sink's shape — while this full rebuild stays the "
-    "backfill path.",
+    doc="J4: SCD type 2 history: each change event with its [valid_from, valid_to) interval.",
+    shape=Shape(has=("Exchange hashpartitioning(user_id",), max_exchanges=1),
 )
 def q_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
@@ -955,22 +916,8 @@ def q_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
        OR o.o_totalprice IS DISTINCT FROM n.o_totalprice
        OR o.o_orderstatus IS DISTINCT FROM n.o_orderstatus
     """,
-    doc="J4 inverse: CDC delta GENERATION — upsert applies a delta, "
-    "snapshot_diff (operators/upsert.py) produces one: full-outer "
-    "join of two keyed snapshots, null-safe column compare (IS "
-    "DISTINCT FROM, so NULL moves count as updates), one row per "
-    "changed key tagged I/U/D carrying the new-side payload columns "
-    "(NULL on deletes), unchanged keys dropped. The operator "
-    "a warehouse needs when the source system ships full snapshots "
-    "instead of change feeds. The second snapshot here is derived "
-    "deterministically from orders (key%11 deleted, key%7 price-"
-    "bumped, key%13 re-keyed as inserts) so the oracle verifies "
-    "exact I/U/D membership. Round-trips: applying the delta to old "
-    "reconstructs new (property test). Plan shape: one shuffle per "
-    "side, co-partitioned on the key; values never enter the join "
-    "key. At 100 TB identically-bucketed snapshots make the "
-    "exchange a per-bucket zip, and column-pruned snapshot storage "
-    "(keys + compared cols) is the scan-side win.",
+    doc="J4: I/U/D change rows between two keyed order snapshots.",
+    shape=Shape(has=("FullOuter",), lacks=("BroadcastNestedLoopJoin",), max_exchanges=2),
 )
 def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     from prueba_tecnica_analista_etl_spark.operators.upsert import (
@@ -1007,22 +954,12 @@ def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts)
                  RANGE BETWEEN 3599999999 PRECEDING AND CURRENT ROW)
     """,
-    doc="W3 time-frame form: trailing 1-hour rolling count/sum per "
-    "user — a RANGE frame over event-time microseconds, the window "
-    "shape ROWS frames cannot express (each row's frame is defined "
-    "by a TIME span, so gaps and bursts change frame size row to "
-    "row; rate-limiting, rolling spend and anomaly baselines are "
-    "this shape). Exact DECIMAL accumulation inside the frame; "
-    "same-µs ties are frame PEERS in both engines, so the result "
-    "is deterministic without a tiebreak column. Plan shape: one "
-    "hash(user_id) shuffle + per-key sort — identical cost family "
-    "to the ROWS running sum; the frame bound is a pointer walk "
-    "inside the sorted partition, no extra pass. The streaming "
-    "equivalent at unbounded time is the watermarked sliding "
-    "window (q_sliding_window / streaming twin) — this is the "
-    "batch/backfill form.",
+    doc="W3: per-user trailing 1-hour event count and value sum (RANGE frame).",
+    shape=Shape(has=("Exchange hashpartitioning(user_id",), max_exchanges=1),
 )
 def q_trailing_window(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Same-microsecond ties are frame peers in both engines, so the result
+    # needs no tiebreak column.
     ev = _t(spark, sf_dir, "events")
     us = F.unix_micros(F.col("ts"))
     w = (
@@ -1067,25 +1004,15 @@ def q_trailing_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNION ALL
     SELECT 3, 'purchase', (SELECT count(*) FROM p)
     """,
-    doc="extension (event analytics): strictly-ORDERED funnel census — "
-    "users whose first view precedes a later click precedes a later "
-    "purchase; each stage's timestamp is the earliest occurrence "
-    "AFTER the previous stage's (not a bag-of-events check: a "
-    "purchase before the first view does not count). The oracle "
-    "builds the stage chain by three grouped self-joins (clear SQL); "
-    "the Spark plan is the SCALABLE form — three chained whole-"
-    "partition window minima over the same hash(user_id) "
-    "partitioning, so the per-user stage chain costs ONE exchange "
-    "total (Catalyst stacks same-partitioning Window ops without "
-    "re-shuffling; the per-user collapse reuses it too — "
-    "HashPartitioning(user_id) satisfies the superset-key "
-    "distribution). Exact integer-µs ordering; the final 3-row "
-    "census aggregates a |users|-sized frame, not fact rows. At "
-    "100 TB: event logs shuffle once on user, stage logic is pure "
-    "codegen — the alternative per-stage join cascade would shuffle "
-    "the fact table three times.",
+    doc="Users reaching each stage of an ordered view -> click -> purchase funnel.",
+    shape=Shape(
+        has=("Exchange hashpartitioning(user_id", "Exchange SinglePartition"),
+        max_exchanges=2,
+    ),
 )
 def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # The oracle chains grouped self-joins; here three window minima share
+    # one hash(user_id) exchange, so the fact table shuffles once.
     from prueba_tecnica_analista_etl_spark.operators.events import (
         ordered_funnel,
     )
@@ -1108,21 +1035,14 @@ def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM a JOIN f ON a.user_id = f.user_id
     GROUP BY 1, 2
     """,
-    doc="extension (event analytics): weekly cohort retention — users "
-    "grouped by first-activity day, counted per whole-week offset of "
-    "each later active day (the classic retention triangle; offset 0 "
-    "= the cohort's own week). Day grain via the same "
-    "to_date/date_trunc pair q_volume_by_day proved cross-engine-"
-    "exact; offsets are integer day arithmetic. Plan shape: ONE "
-    "fact shuffle — the (user, day) distinct and the per-user "
-    "cohort-min window share the hash(user_id) exchange (partial "
-    "distinct runs map-side first, and HashPartitioning(user_id) "
-    "satisfies the (user_id, d) aggregate's distribution); the "
-    "final (cohort, offset) rollup shuffles only the collapsed "
-    "users×active-days frame. The oracle mirrors it with grouped "
-    "min + self-join. At 100 TB the fact table is touched once; "
-    "everything after the first exchange is user-partition-local "
-    "until the tiny final rollup.",
+    doc="Weekly cohort retention: users per first-activity cohort and week offset.",
+    shape=Shape(
+        has=(
+            "Exchange hashpartitioning(user_id",
+            "Exchange hashpartitioning(_groupingexpression",
+        ),
+        max_exchanges=2,
+    ),
 )
 def q_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     from prueba_tecnica_analista_etl_spark.operators.events import (
@@ -1144,7 +1064,7 @@ def q_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT lang, count(*) AS docs, round(avg(n_chars), 2) AS avg_chars
     FROM documents GROUP BY lang
     """,
-    doc="extension: per-language corpus stats.",
+    doc="Per-language doc count and mean length.",
 )
 def q_lang_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
@@ -1162,8 +1082,7 @@ def q_lang_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM documents) WHERE token <> ''
     GROUP BY token ORDER BY cnt DESC, token LIMIT 20
     """,
-    doc="U4/extension: tokenize via explode(split()) — native, no UDTF; "
-    "top-20 token census.",
+    doc="U4: top-20 whitespace tokens of the corpus.",
 )
 def q_text_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
@@ -1196,13 +1115,12 @@ def q_text_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS total
     FROM orders GROUP BY CUBE(o_orderpriority, o_orderstatus)
     """,
-    doc="A11: two-dimension CUBE — all four grouping sets in ONE "
-    "shuffle (Expand + partial/final HashAggregate), the same "
-    "single-pass shape as the rollup TOTAL. Grouping-null relabeled "
-    "'ALL' (both dims are non-null in the data, so coalesce is "
-    "unambiguous).",
+    doc="A11: two-dimension CUBE with grouping nulls labeled 'ALL'.",
+    shape=Shape(has=("Expand", "partial_"), max_exchanges=1),
 )
 def q_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Both dimensions are non-null in the data, so coalescing the grouping
+    # null to 'ALL' is unambiguous.
     o = _t(spark, sf_dir, "orders")
     return (
         o.cube("o_orderpriority", "o_orderstatus")
@@ -1236,10 +1154,7 @@ def q_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT 'old_only' AS side, o_custkey
     FROM (SELECT o_custkey FROM a EXCEPT SELECT o_custkey FROM b)
     """,
-    doc="O5: INTERSECT / EXCEPT (distinct set semantics) — customers "
-    "active in both date halves vs only the old one. Each set op is "
-    "one hash aggregation over the union of the (pre-aggregated "
-    "distinct) sides.",
+    doc="O5: customers active in both date halves (INTERSECT) and only the old one (EXCEPT).",
 )
 def q_intersect_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
@@ -1272,10 +1187,8 @@ def q_intersect_except(spark: SparkSession, sf_dir: str) -> DataFrame:
           FROM events)
     GROUP BY 1, 2
     """,
-    doc="T3: sliding window 2h every 1h × event_type — each event lands "
-    "in exactly two epoch-aligned windows (Spark window(ts,'2 hours',"
-    "'1 hour') = the oracle's explicit two-bucket unnest). One Expand + "
-    "one shuffle, same cost family as tumbling.",
+    doc="T3: event counts per 2-hour window sliding every hour, by event type.",
+    shape=Shape(has=("Expand",), max_exchanges=1),
 )
 def q_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
@@ -1307,15 +1220,12 @@ def q_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         ON p.user_id = c.user_id AND p.ts <= c.ts
     ) WHERE rn = 1
     """,
-    doc="J5 (as-of/point-in-time join): for every click, the same "
-    "user's latest purchase at or before it (feature-store shape). "
-    "Spark impl is the sort-based interleave in operators/asof.py — "
-    "one shuffle + sort on (user, time), NOT the quadratic range-join "
-    "the oracle SQL spells out (fine for DuckDB at oracle scale; the "
-    "row_number over the exploded join is the semantic spec, not the "
-    "plan).",
+    doc="J5: for every click, the same user's latest purchase at or before it.",
+    shape=Shape(has=("Window",), lacks=("BroadcastNestedLoopJoin",), max_exchanges=1),
 )
 def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # The oracle's range join + row_number is the semantic spec, not the
+    # plan: operators/asof.py interleaves and sorts instead.
     from prueba_tecnica_analista_etl_spark.operators.asof import asof_join
 
     ev = _t(spark, sf_dir, "events")
@@ -1348,15 +1258,12 @@ def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             ELSE '33'
           END
     """,
-    doc="training-data extension: DETERMINISTIC stratified sampling — "
-    "per-class keep rates via a lexicographic threshold on "
-    "md5(event_id) (purchase 100%, click ~10%, view ~5%, rest ~20%). "
-    "Hash-mod sampling, not rand(): reproducible across runs, engines "
-    "and partitionings (the property a training pipeline needs for "
-    "auditable splits), embarrassingly parallel, and pushdown-friendly "
-    "— no RNG state, no seed plumbing, oracle-checkable bit-for-bit.",
+    doc="Deterministic stratified sample of events by per-type md5 keep rates.",
+    shape=Shape(max_exchanges=0),
 )
 def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Hash-threshold sampling, not rand(): reproducible across runs,
+    # engines and partitionings.
     ev = _t(spark, sf_dir, "events")
     bucket = F.substring(F.md5(F.col("event_id").cast("string")), 1, 2)
     threshold = (
@@ -1384,10 +1291,7 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
                  AS DOUBLE) / len(text)), 4) AS upper_ratio
     FROM documents GROUP BY lang
     """,
-    doc="training-data extension: per-language text-quality ratios "
-    "(punctuation / digit / uppercase density) — the heuristic feature "
-    "block of a corpus quality filter, all native length/regexp "
-    "expressions (count-by-deletion: len(text) - len(text sans class)).",
+    doc="Per-language punctuation, digit and uppercase density of the text.",
 )
 def q_text_ratios(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
@@ -1422,23 +1326,8 @@ def q_text_ratios(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM i JOIN p ON p.d BETWEEN i.s AND i.e
     GROUP BY span_days
     """,
-    doc="J5 (range join, point-in-interval, NO equi key): 1998 order "
-    "dates joined into [shipdate, shipdate + span] windows (span = a "
-    "deterministic 1-14 day function of the row). The oracle spells "
-    "the naive theta-join BETWEEN; the Spark plan composes two "
-    "scale rewrites. (1) Bin-and-equi-join: explode each interval "
-    "into its day bins and equi-join on the date — O(rows x span), "
-    "never the O(|I|x|P|) nested loop. (2) Aggregate pushdown below "
-    "the join: the query ends in a COUNT, and count algebra "
-    "distributes over a join, so BOTH sides pre-aggregate onto the "
-    "bin key first — intervals to distinct (start, span) combos "
-    "(<=365x14 groups regardless of row count), points to per-day "
-    "counts (<=365 rows) — and the join multiplies the two counts "
-    "instead of streaming every candidate row. The join input "
-    "collapses from |rows| to |distinct keys|: at 100 TB the heavy "
-    "tables are touched exactly once each by a map-side partial "
-    "aggregate, and the range join itself runs on dictionary-sized "
-    "frames.",
+    doc="J5: count of 1998 order dates inside lineitem [shipdate, shipdate + span] windows.",
+    shape=Shape(has=("BroadcastHashJoin",), lacks=("BroadcastNestedLoopJoin",)),
 )
 def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
@@ -1492,17 +1381,11 @@ def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
     FROM events GROUP BY 1, 2
     """,
-    doc="hypertable/continuous-aggregate pattern: the day level is "
-    "computed FROM the hourly rollup (sum of sums, sum of counts), "
-    "not from raw events — the two-tier re-aggregation a time-series "
-    "store materializes incrementally. The oracle aggregates the raw "
-    "table directly, so the hash match PROVES the rollup algebra is "
-    "lossless (decimal sums are associative; count re-sums exactly). "
-    "At scale the hourly tier is materialized once by the streaming "
-    "job (tumbling_counts) and every coarser query reads it instead "
-    "of raw data — here both tiers live in one lazy DAG.",
+    doc="Daily event count and value sum per type, re-aggregated from the hourly rollup.",
 )
 def q_hypertable_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # The oracle aggregates the raw table, so a hash match proves the
+    # hourly-to-daily rollup algebra is lossless.
     ev = _t(spark, sf_dir, "events")
     hourly = ev.groupBy(
         F.window("ts", "1 hour").alias("w"), "event_type"
@@ -1544,22 +1427,8 @@ def q_hypertable_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS sum_last_value
     FROM last WHERE rn = 1 GROUP BY status
     """,
-    doc="changelog compaction (the CDC-apply half of J4's upsert): "
-    "treat the event stream as an ordered change log on user_id — "
-    "'purchase' closes the key (delete-marker), anything else "
-    "upserts — and compact it to each key's LAST operation, the "
-    "standard materialize-a-snapshot-from-a-changefeed step (Kafka "
-    "log compaction / Debezium apply). Survivor pick is "
-    "row_number()=1 over (ts DESC, event_id DESC): exact-µs ordering "
-    "with a total tie-break, so both engines choose the same final "
-    "op per key. Census reports live vs deleted key counts and the "
-    "exact-decimal sum of surviving last values (the money-aggregate "
-    "pattern). Plan shape: one hash(user_id) exchange for the "
-    "ranking window, WindowGroupLimit prunes to each key's top row "
-    "map-side (rn<=1 predicate), then an O(2)-group census — the "
-    "same single-shuffle shape as q_scd2, applied to log compaction "
-    "instead of historization. At 100 TB: compaction cost is one "
-    "shuffle of the log, never a join against the snapshot.",
+    doc="Changelog compaction: live and deleted keys after each key's last operation.",
+    shape=Shape(has=("WindowGroupLimit", "Exchange hashpartitioning(user_id"), lacks=("Join",)),
 )
 def q_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events").filter(
@@ -1614,26 +1483,12 @@ def q_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
                     THEN value END) AS p75
     FROM v GROUP BY event_type
     """,
-    doc="distribution census (the quartile gap in q_profile_stats's "
-    "avg/stddev/min/max family): per event type the 25th/50th/75th "
-    "percentile of value as DISCRETE quantiles — the element at rank "
-    "floor(p*(n-1))+1 in (value, event_id) order, i.e. an actual "
-    "data value selected by exact integer rank, never an "
-    "interpolated average. Discrete-not-interpolated is the "
-    "hash-stability discipline: engines compute linear interpolation "
-    "with differently-associated float expressions (lower+(upper-"
-    "lower)*d vs (1-d)*lower+d*upper) that can differ in the last "
-    "ulp, while rank selection involves no arithmetic at all, and "
-    "the 0.25/0.5/0.75 multipliers are binary-exact so the rank "
-    "itself is the same integer everywhere. Plan shape: one "
-    "hash(event_type) exchange shared by the ranking window and the "
-    "count window (same partitioning), then a partial-agged census "
-    "— the zscore-window family's proven shape. At 100 TB the "
-    "per-type sort is the bounded unit; for a single monster type "
-    "swap in approx_percentile edges broadcast back onto the rows "
-    "(the moments-twin pattern).",
+    doc="Per-event-type discrete 25th/50th/75th percentiles of value.",
+    shape=Shape(has=("Exchange hashpartitioning(event_type", "partial_"), max_exchanges=1),
 )
 def q_quantile_census(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Discrete, not interpolated: engines associate interpolation
+    # arithmetic differently, while rank selection does no arithmetic.
     ev = _t(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     wr = Window.partitionBy("event_type").orderBy("value", "event_id")
     wn = Window.partitionBy("event_type")
@@ -1678,25 +1533,13 @@ def q_quantile_census(spark: SparkSession, sf_dir: str) -> DataFrame:
                     THEN value END) AS p95
     FROM v GROUP BY day
     """,
-    doc="time-series percentiles (the latency-dashboard shape: p50/p95 "
-    "per day bucket) — q_quantile_census's discrete rank-selection "
-    "discipline applied over time buckets instead of categories: the "
-    "bucket value at exact integer rank floor(p*(n-1))+1 in (value, "
-    "event_id) order is an ACTUAL data point, so there is no "
-    "interpolation arithmetic for engines to disagree on. (0.95 is "
-    "not binary-exact, unlike 0.25/0.5/0.75 — but the rank is still "
-    "cross-engine-identical: both engines evaluate ONE IEEE multiply "
-    "of the same two operands, and correctly-rounded multiplication "
-    "is deterministic; only differently-ASSOCIATED float expressions "
-    "can disagree, and a single multiply has no association.) Plan "
-    "shape: "
-    "one hash(day-bucket) exchange shared by the ranking and count "
-    "windows, then a partial-agged census — per-bucket sort is the "
-    "bounded unit of work; at 100 TB with years of data the bucket "
-    "count grows while per-bucket work stays flat, the ideal "
-    "parallelism shape.",
+    doc="Per-day discrete p50/p95 of event value.",
+    shape=Shape(has=("partial_",), max_exchanges=2),
 )
 def q_hypertable_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # The rank floor(p*(n-1))+1 is one IEEE multiply of identical operands,
+    # so it is the same integer in both engines even for 0.95; selecting a
+    # value by rank leaves no interpolation arithmetic to disagree on.
     ev = _t(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     bucket = F.date_trunc("day", F.col("ts"))
     wr = Window.partitionBy(bucket).orderBy("value", "event_id")
@@ -1731,20 +1574,12 @@ def q_hypertable_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
            max(o_totalprice) AS max_price
     FROM orders
     """,
-    doc="footer-statistics census (the zero-scan audit): COUNT/MIN/MAX "
-    "over orders answered from parquet row-group FOOTERS — the query "
-    "runs on the aggregate-pushdown session clone "
-    "(sources.tables.footer_stats_session; DSv2 parquet, "
-    "PushedAggregation in the scan), so at 100 TB this row-count-and-"
-    "range verification audit (the reference's sql:331-361 check "
-    "family) reads METADATA, not data pages. Hash-safe by "
-    "construction: count is an integer and min/max are pass-through "
-    "data values — no arithmetic, no rounding surface. The oracle "
-    "computes the same census the ordinary way, so the hash match "
-    "also proves the pushdown path returns exactly what a full scan "
-    "would.",
+    doc="Order count and key/price ranges answered from parquet footers.",
+    shape=Shape(has=("PushedAggregation: [COUNT(*)",)),
 )
 def q_footer_census(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Runs on the aggregate-pushdown session clone, so the census reads
+    # row-group footers, not data pages.
     from prueba_tecnica_analista_etl_spark.sources.tables import (
         footer_stats_session,
     )
@@ -1770,22 +1605,12 @@ def q_footer_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE event_type = 'purchase' AND user_id IS NOT NULL
     WINDOW w AS (PARTITION BY user_id ORDER BY value, event_id)
     """,
-    doc="relative-rank window completion (W-family): percent_rank and "
-    "cume_dist per user over purchase values — the normalized-rank "
-    "metrics dashboards and feature pipelines derive (where does "
-    "this purchase sit within the user's history). Hash-stable "
-    "without rounding: both metrics are a SINGLE division of exact "
-    "integers fixed by the SQL standard — (rank-1)/(n-1) and "
-    "peers_le/n — and one correctly-rounded IEEE division of "
-    "identical operands is deterministic across engines (the "
-    "q_hypertable_quantiles principle; only differently-associated "
-    "multi-op float expressions can diverge). The (value, event_id) "
-    "order is total, so ranks are identical integers everywhere. "
-    "Plan shape: one hash(user_id) exchange, both metrics share the "
-    "single window spec — per-user sort is the bounded unit at "
-    "100 TB.",
+    doc="Per-user percent_rank and cume_dist of purchase values.",
+    shape=Shape(has=("Exchange hashpartitioning(user_id",), max_exchanges=1),
 )
 def q_window_rank_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Both metrics are one division of exact integers: deterministic
+    # across engines without rounding.
     ev = _t(spark, sf_dir, "events").filter(
         (F.col("event_type") == "purchase")
         & F.col("user_id").isNotNull()

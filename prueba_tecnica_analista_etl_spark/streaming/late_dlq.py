@@ -90,9 +90,7 @@ def late_dlq_sink(
         # UNCONDITIONALLY — including in the first batch, when no
         # prior threshold exists yet: a downstream watermarked
         # aggregation silently drops NULL-ts rows, which is exactly
-        # the silent-loss class this router exists to prevent (the
-        # first-batch case routed them to main until an r9 ADVICE
-        # finding).
+        # the silent-loss class this router exists to prevent.
         if threshold is None:
             late = batch.filter(ts.isNull())
             ontime = batch.filter(ts.isNotNull())

@@ -1,8 +1,9 @@
-"""Semantics + plan-shape tests for plans/extensions_distributed.py —
-the distributed-algebra patterns. Oracle parity is covered
-registry-wide by test_oracle_parity; these pin the SCALE claims the
-docstrings make (no SinglePartition rank, prefilter soundness,
-merge == recompute under arbitrary splits, funnel monotonicity).
+"""Semantics tests for plans/extensions_distributed.py — the
+distributed-algebra patterns. Oracle parity is covered registry-wide
+by test_oracle_parity and each query's plan shape by
+test_plan_assertions; these pin what the scale forms rely on
+(prefilter soundness, merge == recompute under arbitrary splits,
+funnel monotonicity, the rank scheme's seams).
 """
 
 from __future__ import annotations
@@ -23,20 +24,6 @@ from prueba_tecnica_analista_etl_spark.plans.queries import _t, dec2
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
-
-
-def test_global_rank_has_no_single_partition_window(spark, sf_dir):
-    """The whole point: global RANK() without funneling fact rows
-    through one reducer. The window must partition by bucket, the
-    offsets ride the plan as a dense array LITERAL (element_at
-    projection — no offsets createDataFrame, no broadcast join on the
-    fact path), and no exchange beyond the bucket hash exchange."""
-    df = q_global_rank(spark, sf_dir)
-    plan = _plan(df)
-    assert "windowspecdefinition(__rank_bucket" in plan
-    assert "Exchange SinglePartition" not in plan
-    assert "element_at" in plan  # literal offset lookup
-    assert "BroadcastExchange" not in plan  # the join form is gone
 
 
 def test_global_rank_matches_window_rank(spark, sf_dir):
@@ -102,17 +89,15 @@ def test_bucketed_rank_on_adversarial_distributions(spark):
             assert got == want, f"case {i} buckets {n_buckets}"
 
 
-def test_train_order_is_a_permutation_without_single_partition(spark, sf_dir):
+def test_train_order_is_a_reproducible_permutation(spark, sf_dir):
     """Positions are exactly 1..n (ROW_NUMBER semantics survive the
-    bucket seam) and the plan never funnels the corpus through one
-    reducer; rerunning yields the identical order (seeded shuffle)."""
+    bucket seam); rerunning yields the identical order (seeded
+    shuffle)."""
     from prueba_tecnica_analista_etl_spark.plans.extensions_distributed import (
         q_train_order,
     )
 
     df = q_train_order(spark, sf_dir)
-    plan = _plan(df)
-    assert "Exchange SinglePartition" not in plan
     rows = df.collect()
     positions = sorted(r["position"] for r in rows)
     assert positions == list(range(1, len(rows) + 1))
@@ -303,16 +288,14 @@ def test_winsorize_integer_ranks_on_tiny_groups(spark):
 
 
 def test_inverted_index_caps_postings_via_window_group_limit(spark, sf_dir):
-    """The skew guard is structural: the rank filter must compile to
-    WindowGroupLimit (bounded per-term state during the sort), and no
-    emitted posting list may exceed the cap even when df does."""
+    """No emitted posting list exceeds the cap, even when df does (the
+    rank filter compiling to WindowGroupLimit is the query's shape)."""
     from prueba_tecnica_analista_etl_spark.plans.extensions_distributed import (
         _POSTINGS_CAP,
         q_inverted_index,
     )
 
     df = q_inverted_index(spark, sf_dir)
-    assert "WindowGroupLimit" in _plan(df)
     for r in df.collect():
         # postings serialize to a canonical comma-joined string (the
         # recorded window hashes only driver-proven scalar dtypes)
@@ -337,15 +320,12 @@ def test_filter_funnel_is_monotone_and_single_scan(spark, sf_dir):
 def test_unpivot_round_trips_the_pivot(spark, sf_dir):
     """unpivot(pivot(x)) must equal the plain long-form aggregate —
     the reshape algebra is lossless because the pivot's explicit value
-    list + zero-fill makes the matrix dense. Also pins the scale
-    claim: unpivot compiles to Expand (map-only), never a shuffle of
-    its own."""
+    list + zero-fill makes the matrix dense."""
     from prueba_tecnica_analista_etl_spark.plans.extensions_distributed import (
         q_unpivot_long,
     )
 
     df = q_unpivot_long(spark, sf_dir)
-    assert "Expand" in _plan(df)
     got = {
         (r["o_orderpriority"], r["status"]): r["cnt"] for r in df.collect()
     }
@@ -368,22 +348,12 @@ def test_unpivot_round_trips_the_pivot(spark, sf_dir):
 def test_rolling_distinct_semantics_and_bounded_expansion(spark, sf_dir):
     """Each day's users_7d must equal the brute-force distinct count
     over the trailing 7 calendar days, sit between the single-day
-    distinct and the 7-day sum of single-day distincts, and the plan
-    must realize the trailing window as a map-only anchor expansion
-    into a broadcast HASH join — never a nested-loop range join
-    (O(|ud| x |days|) predicate evaluations) or a cartesian."""
+    distinct and the 7-day sum of single-day distincts."""
     from prueba_tecnica_analista_etl_spark.plans.extensions_distributed import (
         q_rolling_distinct,
     )
 
     df = q_rolling_distinct(spark, sf_dir)
-    plan = _plan(df)
-    assert "BroadcastHashJoin" in plan, (
-        "anchor-grid join must be a broadcast equi-join"
-    )
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
-    assert "Generate explode" in plan or "Generate" in plan
     got = {r["day"]: r["users_7d"] for r in df.collect()}
 
     ev = _t(spark, sf_dir, "events")
@@ -458,7 +428,7 @@ def test_bucketed_prefix_sums_on_adversarial_distributions(spark):
 
 def test_bucketed_prefix_sums_rejects_null_keys(spark):
     """A NULL order key has no place in the cumulative order — the
-    operator must stop, not silently drop the row in the offset join
+    operator must stop, not silently drop or misplace the row
     (bucketed_rank's rule)."""
     import pytest
 
@@ -476,15 +446,9 @@ def test_bucketed_prefix_sums_rejects_null_keys(spark):
         )
 
 
-def test_eval_auc_hand_computed_and_sharded_plan(spark):
-    """AUC identity on a hand-checkable frame (via the registry
-    function's exact arithmetic path re-applied to a tiny in-memory
-    oracle), plus the plan law on the real query: the cumulative
-    window partitions by bucket, never SinglePartition."""
-    from prueba_tecnica_analista_etl_spark.plans.extensions_distributed import (
-        q_eval_auc,
-    )
-
+def test_eval_auc_hand_computed():
+    """AUC identity on a hand-checkable frame (the registry function's
+    exact arithmetic path re-applied to a tiny in-memory oracle)."""
     # Perfect separation: positives score above every negative.
     # AUC = 1. Then a tie block: one pos and one neg tied -> 0.5.
     def auc(rows):
@@ -504,15 +468,6 @@ def test_eval_auc_hand_computed_and_sharded_plan(spark):
     assert auc([(1.0, 0), (2.0, 0), (3.0, 1), (4.0, 1)]) == 1.0
     assert auc([(1.0, 0), (1.0, 1)]) == 0.5
     assert auc([(3.0, 0), (4.0, 0), (1.0, 1), (2.0, 1)]) == 0.0
-
-    df = q_eval_auc(spark, "/root/testdata/sf0.001")
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    # The cumulative window must run bucketed, and the ONLY
-    # SinglePartition exchange allowed is the closing scalar census
-    # aggregate — a second one would mean a global window/sort
-    # regression snuck in beside the bucketed path.
-    assert "windowspecdefinition(__rank_bucket" in plan
-    assert plan.count("Exchange SinglePartition") <= 1
 
 
 def test_artifact_cache_invalidates_on_corpus_rewrite(spark, tmp_path):
@@ -1224,9 +1179,11 @@ def test_store_memo_does_not_keep_sessions_alive(
 ):
     """A served frame refers back to its session, so the session memo
     must not be a strong reference held outside the session: a session
-    that read the store and is dropped is collected, and a bare
+    that read the store and is dropped is collected, its pins on the
+    store are closed rather than left to the collector, and a bare
     clear_artifacts() still reaches the memos of live sessions."""
     import gc
+    import warnings
     import weakref
 
     from prueba_tecnica_analista_etl_spark import artifacts
@@ -1246,8 +1203,12 @@ def test_store_memo_does_not_keep_sessions_alive(
     # PySpark's RDD.toDF closure holds the newest session; a newer one
     # releases it
     live = spark.newSession()
-    gc.collect()
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always", ResourceWarning)
+        gc.collect()
     assert gone() is None, "a dropped session must be collected"
+    unclosed = [w for w in caught if "_meta.json" in str(w.message)]
+    assert not unclosed, [str(w.message) for w in unclosed]
 
     artifacts.corpus_artifact(live, corpus, "leak", build)
     artifacts.clear_artifacts()
