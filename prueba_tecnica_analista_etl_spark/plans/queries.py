@@ -59,7 +59,7 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 @dataclass(frozen=True)
 class Shape:
     """A query's physical-plan claim, read only by the registry-wide
-    plan test: substrings its executed plan (``toString()``) must
+    plan tests: substrings its executed plan (``toString()``) must
     contain and must not, and a bound on the ``Exchange`` nodes below
     ``AdaptiveSparkPlan``."""
 

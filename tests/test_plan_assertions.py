@@ -2,10 +2,11 @@
 engine's 100 TB story depends on, pinned as tests so a refactor cannot
 silently lose them.
 
-Each query declares its plan claim as a ``shape`` on ``@query``;
-``test_every_query_keeps_its_plan_shape`` builds every registry plan
-once and checks each shape, plus the rules every query keeps. The
-other tests check what a shape cannot say: pushed-filter and
+Each query declares its plan claim as a ``shape`` on ``@query``. The
+``plans`` fixture builds every registry plan once per module;
+``test_every_query_keeps_its_plan_shape`` checks each shape against
+it and three registry-wide lints check the rules every query keeps.
+The other tests check what a shape cannot say: pushed-filter and
 read-schema contents, the final adaptive plan after execution, plan
 structure, AQE and DPP behaviour, and the builder frames that the
 artifact store erases from the declared plans.
@@ -16,6 +17,7 @@ does; they assert on stable plan-node NAMES, not exact trees.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from prueba_tecnica_analista_etl_spark.plans import REGISTRY
@@ -31,25 +33,43 @@ def _plan(spark, sf_dir: str, name: str) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def _faults(plan: str, shape: Shape, oracle: str | None) -> list[str]:
-    """What ``plan`` breaks of ``shape`` and of the rules every plan
-    keeps: no row-at-a-time Python (``BatchEvalPython``, the 10-100x
-    slow path), Arrow Python only where the shape names it, no
-    ``CartesianProduct`` in an oracle-backed query, and an
-    ``Exchange SinglePartition`` fed only by a partial/merge
-    HashAggregate — an O(groups) census, never fact rows."""
+@pytest.fixture(scope="module")
+def plans(spark, sf_dir) -> dict[str, str]:
+    """Every registry query's executed plan, built once for the
+    registry-wide tests."""
+    return {name: _plan(spark, sf_dir, name) for name in REGISTRY}
+
+
+def _shape_faults(plan: str, shape: Shape) -> list[str]:
     faults = [f"lost {s!r}" for s in shape.has if s not in plan]
     faults += [f"gained {s!r}" for s in shape.lacks if s in plan]
     n = plan.split("AdaptiveSparkPlan")[-1].count("Exchange")
     if shape.max_exchanges is not None and n > shape.max_exchanges:
         faults.append(f"{n} exchanges, at most {shape.max_exchanges}")
+    return faults
+
+
+def _cartesian_faults(plan: str, oracle: str | None) -> list[str]:
     if oracle is not None and "CartesianProduct" in plan:
-        faults.append("gained 'CartesianProduct'")
-    if "BatchEvalPython" in plan:
-        faults.append("gained row-at-a-time Python 'BatchEvalPython'")
-    faults += [
+        return ["gained 'CartesianProduct'"]
+    return []
+
+
+def _python_faults(plan: str, shape: Shape) -> list[str]:
+    """No row-at-a-time Python (``BatchEvalPython``, the 10-100x slow
+    path) and Arrow Python only where the shape names it."""
+    faults = [
         f"undeclared {t!r}" for t in _PYTHON if t in plan and t not in shape.has
     ]
+    if "BatchEvalPython" in plan:
+        faults.append("gained row-at-a-time Python 'BatchEvalPython'")
+    return faults
+
+
+def _single_partition_faults(plan: str) -> list[str]:
+    """An ``Exchange SinglePartition`` fed only by a partial/merge
+    HashAggregate — an O(groups) census, never fact rows."""
+    faults = []
     lines = plan.splitlines()
     for i, line in enumerate(lines):
         if "Exchange SinglePartition" not in line:
@@ -63,18 +83,48 @@ def _faults(plan: str, shape: Shape, oracle: str | None) -> list[str]:
     return faults
 
 
-def test_every_query_keeps_its_plan_shape(spark, sf_dir):
-    """Every registry query's executed plan keeps its declared
-    ``shape`` and the rules of :func:`_faults`; a failure names each
-    query and what its plan broke."""
-    faults = [
+def _registry_faults(plans: dict[str, str], check) -> str:
+    """``check(plan, spec)``'s faults over the registry, one line per
+    fault, each naming its query."""
+    return "\n".join(
         f"{name}: {fault}"
         for name, spec in REGISTRY.items()
-        for fault in _faults(
-            _plan(spark, sf_dir, name), spec.shape, spec.oracle
-        )
-    ]
-    assert not faults, "\n".join(faults)
+        for fault in check(plans[name], spec)
+    )
+
+
+def test_every_query_keeps_its_plan_shape(plans):
+    """Every registry query's executed plan keeps its declared
+    ``shape``."""
+    faults = _registry_faults(plans, lambda p, s: _shape_faults(p, s.shape))
+    assert not faults, faults
+
+
+def test_no_nested_loop_joins_in_relational_registry(plans):
+    """Every oracle-backed query's physical plan is free of
+    CartesianProduct."""
+    faults = _registry_faults(
+        plans, lambda p, s: _cartesian_faults(p, s.oracle)
+    )
+    assert not faults, faults
+
+
+def test_no_row_python_udfs_anywhere_in_registry(plans):
+    """No query plan holds row-at-a-time Python, and Arrow Python
+    appears only where the query's shape names it."""
+    faults = _registry_faults(plans, lambda p, s: _python_faults(p, s.shape))
+    assert not faults, faults
+
+
+def test_no_single_partition_over_fact_rows_anywhere(plans):
+    """A SinglePartition exchange collapses the plan onto one task, so
+    only pre-aggregated state may flow into one."""
+    faults = _registry_faults(
+        plans, lambda p, s: _single_partition_faults(p)
+    )
+    assert not faults, faults
+
+
 
 
 def test_scan_project_prunes_columns_and_pushes_filter(spark, sf_dir):
@@ -103,7 +153,7 @@ def test_range_join_pushes_date_bounds_to_both_scans(spark, sf_dir):
 def test_eager_builder_pipelines_stay_clean(spark, sf_dir):
     """The artifact/fixpoint queries erase their heavy subtrees (an
     artifact is served as a scan of the store, a fixpoint round is
-    localCheckpoint-ed) before the registry-wide test can see them, so
+    localCheckpoint-ed) before the registry-wide tests can see them, so
     hold the LAZY builder frames to the same rules: the shingle-edge
     pipeline and the unigram score build must stay whole-stage-codegen
     JVM expressions with no SinglePartition funnel over fact rows."""
@@ -116,7 +166,8 @@ def test_eager_builder_pipelines_stay_clean(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     for df in (shingle_edges(docs), _unigram_scored_build(spark, sf_dir)):
         plan = df._jdf.queryExecution().executedPlan().toString()
-        assert not _faults(plan, Shape(), None), plan
+        assert not _python_faults(plan, Shape()), plan
+        assert not _single_partition_faults(plan), plan
 
 
 def test_tumbling_window_batch_plan_drops_the_watermark(spark, sf_dir):
