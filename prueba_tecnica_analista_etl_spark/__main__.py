@@ -102,7 +102,7 @@ def _cmd_index(args, spark: SparkSession) -> int:
     def emb_source():
         if args.src is not None:
             return spark.read.parquet(args.src)
-        from prueba_tecnica_analista_etl_spark.plans.queries import _t
+        from prueba_tecnica_analista_etl_spark.sources.tables import _t
 
         return _t(spark, args.sf_dir, "embeddings")
 

@@ -8,7 +8,7 @@ queries oracle-checkable at 4dp.
 
 Scale path: brute-force top-k is one broadcast + one pass (fine for one
 query vector over any corpus size); for all-pairs / many-query ANN use
-the LSH bucketing in ``plans/extensions_scale.py`` which turns O(n²)
+the LSH bucketing in ``stages/`` which turns O(n²)
 into per-bucket work.
 """
 

@@ -3,7 +3,7 @@
 The near-dup family (minhash/simhash/embedding LSH) emits candidate
 PAIRS, but curation needs CLUSTERS: a chain A~B, B~C is one duplicate
 family even when A≁C directly, and the canonical-survivor choice must
-be made per component, not per pair. ``pipelines/corpus.py`` documents
+be made per component, not per pair. ``stages/dedup.py`` documents
 the greedy pairwise alternative and points to connected components for
 transitive-closure cliques; this module provides that natively —
 DataFrame ops only, no GraphFrames dependency.
@@ -27,7 +27,7 @@ groupBy on node id — O(|E|) messages, never O(n²) — and all frames are
 ENDPOINT-sized (nodes that appear in no edge never enter the
 computation; callers union them back as singletons if needed). Rounds
 are lineage-truncated with eager ``localCheckpoint`` exactly like the
-corpus purge fixpoint (see pipelines/corpus.py:_materialize for the
+corpus purge fixpoint (see stages/dedup.py:_materialize for the
 measured lazy alternatives); at cluster scale swap for ``checkpoint()``
 with a reliable checkpoint dir.
 """

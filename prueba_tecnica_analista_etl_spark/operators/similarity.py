@@ -14,7 +14,7 @@ Shapes (both proven by the declared queries' plan pins):
   corpus pass regardless of query count.
 
 For the single-unbounded-query-set regime use the sign-LSH / IVF
-paths in ``plans/extensions_scale.py`` — these operators are the
+paths in ``stages/vectors.py`` — these operators are the
 exact brute-force baseline those approximate paths are recalled
 against.
 """

@@ -29,6 +29,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from prueba_tecnica_analista_etl_spark.operators.dedupe import keep_first
+from prueba_tecnica_analista_etl_spark.sources.bucketed import (
+    bucket_spec,
+    write_bucketed,
+)
 
 
 def upsert(
@@ -132,11 +136,6 @@ def bucketed_upsert(
     bases with ``write_bucketed(..., path=...)`` + a versioned
     publish instead.
     """
-    from prueba_tecnica_analista_etl_spark.sources.bucketed import (
-        bucket_spec,
-        write_bucketed,
-    )
-
     ks = list(keys)
     # Self-recover ONLY when an interrupted swap actually left side
     # tables behind — a plain nonexistent base (typo, never created)

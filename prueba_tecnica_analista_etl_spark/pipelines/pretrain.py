@@ -3,7 +3,7 @@ stage a serious LLM-pretraining data pipeline runs, chained over the
 ``documents`` corpus as one auditable unit with conservation
 invariants enforced at the seams.
 
-    quality gate → exact dedup → near-dup purge      (pipelines.corpus)
+    quality gate → exact dedup → near-dup purge      (curate_corpus)
     → semantic (SemDeDup) purge                      (q_semdedup's
                                                       cluster-then-purge
                                                       labels; skipped
@@ -21,10 +21,10 @@ invariants enforced at the seams.
                                                       per-source bins)
     → hash-sharded training export + manifest        (sources.export)
 
-The split rule, the pack plan, the contamination probe, the holdout
-modulus and the thresholds are the registry's own definitions in
-``plans.extensions_pipeline``, imported here, so the oracle proves the
-code this run executes. The stage functions (``curate_corpus``,
+Every stage is the registry's own stage code from ``stages`` — the
+curation steps, the split rule, the pack plan, the contamination
+probe, the holdout modulus and the thresholds — so the oracle proves
+the code this run executes. The stage functions (``curate_corpus``,
 ``semantic_purge``, ``decontaminate``, ``export_training_shards``,
 ``verify_training_shards``) are module attributes that ``pretrain_run``
 looks up when it calls them, so a profiler can wrap each stage from
@@ -42,23 +42,6 @@ invariants:
   training job reads reconciles exactly with what curation decided.
 * **tamper-evidence** — the export is re-verified via its manifest
   checksums before the run reports success.
-
-Scale shape: the run is ONE lazy DAG per stage family with exactly
-the shuffles its component operators already pay (documented on each
-operator): the gate/dedup window, the banded-minhash pair shuffle,
-one broadcast semi-join for decontamination (the benchmark gram set
-is census-sized), a map-only split assignment, one window for the
-pack plan, one hash-partition write for the shards. Counts are
-census-sized aggregates. Nothing collects row data to the driver.
-Until the corpus is large, the run's cost is the fixed cost of many
-small jobs paid one after another, with most cores idle. So the two
-stages that read only the raw corpus — the SemDeDup labels (off
-``embeddings``) and the span census (off ``documents``) — build on
-two worker threads while curation runs, their jobs under the caller's
-job group. Neither changes what the run computes: ``semantic_purge``
-waits on the artifact store's build lock for the labels and then
-reads them from the session memo, so each artifact is still built
-once.
 
 Reference lineage: the reference's notebook pipeline (read → clean →
 dedup → classify → export, ``ETL_Prueba_Tecnica.ipynb:44-116``) is
@@ -79,22 +62,65 @@ from prueba_tecnica_analista_etl_spark.functions.text import (
     n_tokens,
     shingles,
 )
-from prueba_tecnica_analista_etl_spark.pipelines.corpus import (
-    curate_corpus,
-)
-from prueba_tecnica_analista_etl_spark.plans.extensions_pipeline import (
-    BENCH_MOD,
-    CONTAM_MIN_HITS,
-    CTX_TOKENS,
-    benchmark_grams,
-    contamination_hits,
-    pack_bins,
-    split_col,
-)
 from prueba_tecnica_analista_etl_spark.sources.export import (
     export_training_shards,
     verify_training_shards,
 )
+from prueba_tecnica_analista_etl_spark.sources.tables import _t
+from prueba_tecnica_analista_etl_spark.stages.dedup import (
+    cached_minhash_pairs,
+    exact_dedup,
+    near_dup_purge_stable,
+    quality_gate,
+)
+from prueba_tecnica_analista_etl_spark.stages.eval import (
+    BENCH_MOD,
+    CONTAM_MIN_HITS,
+    benchmark_grams,
+    contamination_hits,
+    split_col,
+)
+from prueba_tecnica_analista_etl_spark.stages.text import (
+    CTX_TOKENS,
+    dup_span_census,
+    pack_bins,
+)
+from prueba_tecnica_analista_etl_spark.stages.vectors import semdedup_labels
+
+
+def curate_corpus(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, dict[str, int]]:
+    """Full curation chain over the ``documents`` table; returns the
+    surviving corpus and per-stage audit counts.
+
+    The near-dup purge is the STABLE maximal-independent-set form
+    (:func:`near_dup_purge_stable`, eager fixpoint): curate_corpus
+    computes audit counts anyway, so the per-round actions cost
+    nothing extra, and the audit makes any enforcement over-purge
+    observable (``enforcement_over_purged`` is 0 on convergence)."""
+    docs = _t(spark, sf_dir, "documents")
+    gated = quality_gate(docs)
+    # NOT checkpointed, by measurement: the audit counts do re-run the
+    # gate expressions and the dedup window per consumer, but
+    # _materialize(deduped) was tried and is SLOWER here (1.5-1.8 s →
+    # 2.0-3.0 s isolated at sf0.1) — the checkpoint write/read costs
+    # more than recomputing a cheap map+window over this corpus. At a
+    # scale where the gate/dedup lineage is expensive, checkpoint the
+    # frontier; the pair frame's _materialize shows the pattern.
+    deduped = exact_dedup(gated)
+    # The UNCAPPED pair frame: the reporting query's top-100 limit
+    # must never bound what curation purges.
+    pairs = cached_minhash_pairs(spark, sf_dir)
+    survivors, purge_audit = near_dup_purge_stable(deduped, pairs)
+    stats = {
+        "input_docs": docs.count(),
+        "after_quality": gated.count(),
+        "after_exact_dedup": deduped.count(),
+        "after_near_dup": survivors.count(),
+        **purge_audit,
+    }
+    return survivors, stats
 
 
 def decontaminate(
@@ -157,10 +183,6 @@ def semantic_purge(
     not preconditions."""
     if not _has_embeddings(sf_dir):
         return survivors, None
-    from prueba_tecnica_analista_etl_spark.plans.extensions_scale import (
-        semdedup_labels,
-    )
-
     purged = (
         semdedup_labels(spark, sf_dir)
         .filter(F.col("node") != F.col("comp"))
@@ -177,12 +199,8 @@ def _span_signal(spark: SparkSession, sf_dir: str) -> dict:
     conservation ledger. It reads only ``documents``, so
     ``pretrain_run`` prefetches it on a worker thread while curation
     runs."""
-    from prueba_tecnica_analista_etl_spark.plans.extensions_pipeline import (
-        q_dup_spans,
-    )
-
     row = (
-        q_dup_spans(spark, sf_dir)
+        dup_span_census(spark, sf_dir)
         .agg(
             F.sum("n_spans").alias("n_spans"),
             F.sum("n_dup_spans").alias("n_dup_spans"),
@@ -206,9 +224,8 @@ def pretrain_run(
     Raises ``ValueError`` naming the broken invariant if any stage
     loses/duplicates docs or the exported manifest's totals do not
     reconcile with the curation ledger."""
-    from prueba_tecnica_analista_etl_spark.plans import extensions_scale
-    from prueba_tecnica_analista_etl_spark.plans.queries import _t
-
+    # Until the corpus is large, the run's cost is the fixed cost of
+    # many small jobs paid one after another, with most cores idle.
     # The SemDeDup labels and the span census read only the raw
     # corpus, so they build while curation runs. Each task is wrapped
     # here, on the caller's thread, so its jobs carry the caller's job
@@ -223,7 +240,7 @@ def pretrain_run(
             return pool.submit(task, spark, sf_dir)
 
         labels = (
-            prefetch(extensions_scale.semdedup_labels)
+            prefetch(semdedup_labels)
             if _has_embeddings(sf_dir)
             else None
         )

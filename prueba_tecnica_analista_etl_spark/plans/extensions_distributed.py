@@ -77,26 +77,40 @@ from prueba_tecnica_analista_etl_spark.operators.bloom import (
 )
 from prueba_tecnica_analista_etl_spark.operators.rank import (
     bucket_histogram,
-    bucket_totals,
     bucketed_prefix_sums,
     bucketed_rank,
     md5_prefix_bucket,
     numeric_bucket,
 )
+from prueba_tecnica_analista_etl_spark.operators.sketch import (
+    MGStreamAccumulator,
+    mg_candidates,
+)
 from prueba_tecnica_analista_etl_spark.plans.queries import (
-    _t,
-    dec2,
     Shape,
+    dec2,
     money_sum,
     query,
 )
-from prueba_tecnica_analista_etl_spark.sources.tables import spread
+from prueba_tecnica_analista_etl_spark.sources.tables import _t, spread
+from prueba_tecnica_analista_etl_spark.stages.eval import (
+    _HH_CAPACITY,
+    _RANK_BUCKETS,
+    _eval_day_value_frame,
+    _eval_value_frame,
+    _value_bucket_census,
+    event_types,
+    heavy_hitter_recount,
+)
+from prueba_tecnica_analista_etl_spark.stages.text import doc_term_tf_frame
+from prueba_tecnica_analista_etl_spark.streaming.replay import (
+    replay_as_stream,
+    write_replay_files,
+)
 
 # ---------------------------------------------------------------------------
 # Global rank without a single-partition window
 # ---------------------------------------------------------------------------
-
-_RANK_BUCKETS = 1024
 
 
 @query(
@@ -120,13 +134,11 @@ def q_global_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     through a single reducer — the canonical 100 TB scale-killer. The
     distributed form:
 
-    1. bucket each row by a fixed value-range grid (map-only);
+    1. bucket each row by a fixed value-range grid;
     2. collect the per-bucket histogram — bounded at ``_RANK_BUCKETS``
        rows regardless of data size (a census-sized collect, same class
        as the IVF model in functions/vectors.py);
-    3. broadcast-join each bucket's cumulative offset back and rank
-       WITHIN buckets (``Window.partitionBy(bucket)`` — sharded, not
-       SinglePartition).
+    3. rank WITHIN buckets and add each bucket's cumulative offset.
 
     Ties are safe across the seam: equal values land in the same
     bucket, so ``offset + rank_within_bucket`` equals the global RANK
@@ -239,6 +251,7 @@ _SPLIT_TS = "2024-01-21 00:00:00"
     GROUP BY user_id
     """,
     doc="Materialized-view refresh: base and delta aggregate states merged, equal to a recompute.",
+    shape=Shape(has=("partial_",)),
 )
 def q_incremental_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Algebraic merge of partial aggregate states.
@@ -253,8 +266,7 @@ def q_incremental_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     count merges by sum, sum by sum (exact DECIMAL so the merged total
     is bit-identical to the one-pass total regardless of grouping),
-    min/max by min/max. Each leg partial-aggregates map-side; the merge
-    itself shuffles only user-cardinality state rows.
+    min/max by min/max.
     """
     ev = _t(spark, sf_dir, "events")
     split = F.lit(_SPLIT_TS).cast("timestamp")
@@ -307,18 +319,19 @@ _BLOOM_BITS = 8192  # 128 longs — broadcast as one array literal
     GROUP BY o_orderpriority
     """,
     doc="Semi-join behind a broadcast bitset prefilter on xxhash64(custkey).",
+    shape=Shape(has=("BroadcastHashJoin", "LeftSemi")),
 )
 def q_bloom_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Orders of BUILDING-segment customers via a bitset runtime filter.
 
     At 100 TB the semi-join's shuffle of the FACT side dominates; the
-    fix is a runtime filter: hash the dim keys into a fixed bitset,
-    broadcast it (here: an array-of-longs literal, ``_BLOOM_BITS`` bits
-    total — size independent of dim cardinality), and test each fact
-    row map-side so only probable matches reach the join. False
-    positives are removed by the exact (broadcast) semi-join that
-    follows; false negatives are impossible (same hash both sides), so
-    the result is exactly the plain semi-join the oracle runs.
+    fix is a runtime filter: hash the dim keys into a fixed bitset
+    (here: an array-of-longs literal, ``_BLOOM_BITS`` bits total — size
+    independent of dim cardinality) and test each fact row against it
+    so only probable matches reach the join. False positives are
+    removed by the exact semi-join that follows; false negatives are
+    impossible (same hash both sides), so the result is exactly the
+    plain semi-join the oracle runs.
 
     The driver-side ``collect`` gathers DISTINCT BUCKET IDS — bounded
     at ``_BLOOM_BITS`` ints no matter how large the dim is
@@ -392,12 +405,10 @@ def q_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     is picked by pure integer arithmetic — ``(n+19) div 20`` and
     ``(19n+19) div 20`` are ceil(n/20) and ceil(19n/20) exactly — and
     the cut VALUES are pass-through doubles (never computed), so the
-    clamp is cross-engine bit-exact. The windows partition by
-    event_type (sharded); the cuts frame is group-cardinality and
-    broadcast back. NULL measurements are excluded EXPLICITLY in both
-    engines (their rank placement is an engine default — Spark NULLS
-    FIRST vs DuckDB NULLS LAST — which would shift every rn by one
-    and move the cut rows).
+    clamp is cross-engine bit-exact. NULL measurements are excluded
+    EXPLICITLY in both engines (their rank placement is an engine
+    default — Spark NULLS FIRST vs DuckDB NULLS LAST — which would
+    shift every rn by one and move the cut rows).
     """
     ev = (
         _t(spark, sf_dir, "events")
@@ -471,30 +482,23 @@ _POSTINGS_CAP = 8
     LIMIT 20
     """,
     doc="Top-20 terms by document frequency, each with its capped, ordered posting list.",
-    shape=Shape(has=("WindowGroupLimit",)),
+    shape=Shape(has=("WindowGroupLimit", "TakeOrderedAndProject")),
 )
 def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inverted index over the documents table: term → (df, postings).
 
     The retrieval-side artifact the BM25/TF-IDF queries score against.
-    Plan shape for 100 TB: explode → ONE (term, doc_id) dedup shuffle,
-    then df and postings both aggregate on the SAME term key. The
-    posting list is capped BEFORE aggregation by a rank filter
-    (``row_number() <= cap`` — Catalyst rewrites it to
-    WindowGroupLimit, which keeps only the top-cap rows per term
-    DURING the sort), so a stopword's aggregation buffer holds at most
+    The posting list is capped BEFORE aggregation by a rank filter
+    (``row_number() <= cap``, which Catalyst rewrites to
+    WindowGroupLimit), so a stopword's aggregation buffer holds at most
     ``_POSTINGS_CAP`` entries; ``collect_list`` over the full posting
     set would be the unbounded-row skew case the LSH family also
-    guards against. Top-20 via TakeOrderedAndProject; (df DESC, term)
-    is a total order because term is unique per row.
+    guards against. (df DESC, term) is a total order because term is
+    unique per row.
     """
     # Postings serialize to a comma-joined string: the driver's value hash
     # is proven on scalar dtypes only, and array stringification differs
     # across engines.
-    from prueba_tecnica_analista_etl_spark.plans.extensions_text import (
-        doc_term_tf_frame,
-    )
-
     # the artifact's rows ARE the distinct (doc_id, term) pairs (one
     # row per doc-term, tf >= 1), mirroring the oracle's DISTINCT
     pairs = doc_term_tf_frame(spark, sf_dir).select("doc_id", "term")
@@ -554,9 +558,8 @@ def q_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     The naive form scans the corpus once PER GATE (the oracle's UNION
     ALL does exactly that — fine for DuckDB at sf0.01, catastrophic at
     100 TB). The engine form computes every cumulative gate as a
-    conditional aggregate in ONE pass, then explodes the four counters
-    into rows — a single scan and a census-sized result regardless of
-    gate count. Mirrors the RefinedWeb/Gopher-style pipeline-stage
+    conditional aggregate, then explodes the four counters into rows.
+    Mirrors the RefinedWeb/Gopher-style pipeline-stage
     reporting a training-data curation run needs.
     """
     docs = _t(spark, sf_dir, "documents")
@@ -624,13 +627,10 @@ def q_unpivot_long(spark: SparkSession, sf_dir: str) -> DataFrame:
     suite pins the round-trip; reference parity: the workbook's
     cross-tab views, FIXTURES.md pivot family, xlsx §1).
 
-    Scale shape: unpivot is an Expand node — a MAP-ONLY per-row
-    column explosion (k output rows per input row, no shuffle, no
-    UDF). The only shuffle in this plan belongs to the upstream
-    aggregate. DuckDB's UNPIVOT default drops NULL cells; Spark's
-    keeps them — irrelevant here by construction (zero-fill above),
-    but a declared-semantics trap worth this comment for the next
-    wide->long query.
+    DuckDB's UNPIVOT default drops NULL cells; Spark's keeps them —
+    irrelevant here by construction (zero-fill above), but a
+    declared-semantics trap worth this comment for the next wide->long
+    query.
     """
     o = _t(spark, sf_dir, "orders")
     wide = (
@@ -678,20 +678,19 @@ def q_rolling_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     a per-row distinct frame re-counts each window from scratch. The
     distributed form:
 
-    1. dedup events to (day, user_id) — ONE hash shuffle, and the
-       frame that every later step touches is O(users x active-days),
-       not O(events);
+    1. dedup events to (day, user_id), so the frame that every later
+       step touches is O(users x active-days), not O(events);
     2. explode each (day, user) row into the 7 anchor days it
-       contributes to (``sequence(day, day+6)`` — a MAP-ONLY fixed x7
-       fan-out), then broadcast-HASH-join the anchor against the
-       census-sized day grid to keep only anchors that exist in the
-       data. The naive form is a range join — which Spark can only
+       contributes to (``sequence(day, day+6)``, a fixed x7 fan-out),
+       then equi-join the anchor against the census-sized day grid to
+       keep only anchors that exist in the data. The naive form is a
+       range join — which Spark can only
        execute as a BroadcastNestedLoopJoin evaluating the BETWEEN
        predicate against every grid row per fact row, O(|ud| x |days|)
        comparisons; the explode form is O(|ud| x 7) rows into an
        equi-join, unchanged as history grows from a month to years;
-    3. count_distinct per anchor day — second hash shuffle, keyed on
-       day, skew-bounded because no day holds more than |users| rows.
+    3. count_distinct per anchor day, skew-bounded because no day
+       holds more than |users| rows.
 
     At 100 TB the exact form's cost center is step 2's x7 row
     expansion over the dedup'd frame; when even that is too much, the
@@ -739,78 +738,6 @@ def q_rolling_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Evaluation metrics over the distributed prefix-sum frame
 # ---------------------------------------------------------------------------
-
-
-def _value_bucket_census(spark, sf_dir, name, g, sum_cols):
-    """(lo, hi, per-bucket totals) census for a per-distinct-`value`
-    frame ``g`` — the bucketed_prefix_sums inputs, staged once per
-    corpus like q_global_rank's histogram. None when ``g`` is empty."""
-
-    def build():
-        lo, hi = g.agg(F.min("value"), F.max("value")).first()
-        if lo is None:
-            return None
-        b = numeric_bucket(F.col("value"), lo, hi, _RANK_BUCKETS)
-        return lo, hi, bucket_totals(g, b, sum_cols)
-
-    return census_artifact(spark, sf_dir, name, build)
-
-
-def _eval_day_value_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(day, value, cnt, pos, clk) over non-NULL-score events — the
-    eval-census family's shared scored frame, staged ONCE per corpus
-    (the doc_term_tf discipline): day = ts::date (NULL kept for
-    NULL ts, so the global censuses lose no rows), cnt/pos/clk the
-    row/purchase/click counts at that (day, value). Every eval query
-    previously re-scanned events and re-derived its own projection
-    per invocation; they all fold from this collapsed frame instead
-    — strictly smaller than events and 5 narrow columns wide, the
-    §8 'decide with small rows' proxy. Exact-integer contents, so
-    every fold re-aggregates bit-identically."""
-
-    def build() -> DataFrame:
-        ev = _t(spark, sf_dir, "events").filter(
-            F.col("value").isNotNull()
-        )
-        return ev.groupBy(
-            F.col("ts").cast("date").alias("day"), "value"
-        ).agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.sum(
-                F.when(F.col("event_type") == "purchase", F.lit(1))
-                .otherwise(0)
-                .cast("long")
-            ).alias("pos"),
-            F.sum(
-                F.when(F.col("event_type") == "click", F.lit(1))
-                .otherwise(0)
-                .cast("long")
-            ).alias("clk"),
-        )
-
-    return corpus_artifact(spark, sf_dir, "eval_scored_day_value", build)
-
-
-def _eval_value_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(value, cnt, pos, clk) — the day-collapsed sibling of
-    :func:`_eval_day_value_frame` (folded from it at build time, so
-    the corpus is scanned once for both): one row per distinct score,
-    already at the granularity q_eval_auc / q_ks_distance /
-    q_calibration_bins group to — serving it staged removes their
-    per-invocation groupBy(value) exchange as well as the scan."""
-
-    def build() -> DataFrame:
-        return (
-            _eval_day_value_frame(spark, sf_dir)
-            .groupBy("value")
-            .agg(
-                F.sum("cnt").alias("cnt"),
-                F.sum("pos").alias("pos"),
-                F.sum("clk").alias("clk"),
-            )
-        )
-
-    return corpus_artifact(spark, sf_dir, "eval_scored_value", build)
 
 
 @query(
@@ -876,13 +803,12 @@ def q_eval_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     Degenerate label distributions (no positives / no negatives) yield
     NULL AUC explicitly in both engines.
 
-    The scale pattern: ``SUM() OVER (ORDER BY value)`` — the textbook
-    cumulative — serializes the frame through one reducer exactly as
-    global RANK does. bucketed_prefix_sums (operators/rank.py) shards
-    it: monotone value buckets, a census-sized per-bucket totals
-    collect (staged per corpus), broadcast offsets, within-bucket
-    running sums. NULL scores are excluded explicitly in both engines
-    (their rank placement is an engine default, q_global_rank's rule).
+    ``SUM() OVER (ORDER BY value)`` — the textbook cumulative —
+    serializes the frame through one reducer exactly as global RANK
+    does, so the cumulative is bucketed_prefix_sums (operators/rank.py)
+    over a per-bucket totals census staged per corpus. NULL scores are
+    excluded explicitly in both engines (their rank placement is an
+    engine default, q_global_rank's rule).
 
     Reference parity: extends the reference's §3 quality-audit
     aggregates (seccion3_sql.sql:85-210) with the evaluation-side
@@ -963,6 +889,7 @@ def q_eval_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Two-sample Kolmogorov-Smirnov distance in exact cross-multiplied integers.",
     shape=Shape(
         has=(
+            "partial_",
             "windowspecdefinition(__rank_bucket",
             "Exchange hashpartitioning(__rank_bucket",
         ),
@@ -986,10 +913,6 @@ def q_ks_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     inside int64 while n_a*n_b < 2^63). The reported ``ks`` divides
     the two exact integers once — bit-identical IEEE result in both
     engines; degenerate inputs (an empty side) yield NULL explicitly.
-
-    The max itself is a plain aggregate (partial max per partition,
-    one scalar to merge) — the census frame never converges on a
-    single reducer.
 
     Reference parity: generalizes the reference's statistical-profile
     / staging-audit designs (nb:287-340, seccion3_sql.sql:85-210)
@@ -1081,6 +1004,7 @@ def q_ks_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM binned GROUP BY bin
     """,
     doc="Reliability diagram: rows, positives and positive rate per equal-width score bin.",
+    shape=Shape(has=("BroadcastExchange", "partial_")),
 )
 def q_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Calibration audit of ``events.value`` as a purchase score.
@@ -1100,10 +1024,7 @@ def q_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     order differs per engine; consumers needing it should quantize
     scores onto an integer grid first (the perplexity discipline).
 
-    Scale shape: the bounds aggregate is census-sized (one row,
-    broadcast back); binning is map-only; the decile histogram is a
-    10-row partial-agged groupBy. Degenerate lo == hi collapses to
-    bin 0 explicitly in both engines.
+    Degenerate lo == hi collapses to bin 0 explicitly in both engines.
 
     Reference parity: the reference's quality-audit conditional
     aggregates (seccion3_sql.sql:85-210) extended to the
@@ -1178,7 +1099,10 @@ def q_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM t
     """,
     doc="Tie-adjusted AUC per calendar day in exact integer arithmetic.",
-    shape=Shape(has=("windowspecdefinition(day",)),
+    shape=Shape(
+        has=("windowspecdefinition(day", "Exchange hashpartitioning(day"),
+        max_exchanges=1,
+    ),
 )
 def q_eval_auc_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily AUC of ``events.value`` vs the purchase label — the
@@ -1187,9 +1111,8 @@ def q_eval_auc_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     is how an eval pipeline sees it per ingestion day.
 
     Same rank-sum identity and 64-bit-integer discipline as
-    q_eval_auc, but the cumulative count partitions BY DAY — a
-    sharded window Spark executes with one hash exchange on day, no
-    bucketed scheme required (the scale lesson in reverse: global
+    q_eval_auc, but the cumulative count partitions BY DAY, so no
+    bucketed scheme is required (the scale lesson in reverse: global
     cumulatives need the histogram trick, per-group cumulatives are
     already distributed). Degenerate days (single-class) yield NULL
     AUC explicitly in both engines; NULL scores and NULL timestamps
@@ -1274,6 +1197,7 @@ def q_eval_auc_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY k.k
     """,
     doc="Precision@k and recall@k of the score ranking for k in 10, 100 and 1000.",
+    shape=Shape(has=("TakeOrderedAndProject",)),
 )
 def q_eval_topk_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Precision/recall at k — the retrieval twin of q_eval_auc.
@@ -1283,16 +1207,11 @@ def q_eval_topk_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
     on). tp@k / precision@k / recall@k over the (score DESC, id ASC)
     total order are the standard head-of-ranking censuses.
 
-    Scale shape: the oracle's global ``row_number()`` over every
-    scored row is exactly the single-reducer serialization this module
-    exists to avoid. The engine form never ranks the fact table: one
-    ``TakeOrderedAndProject(limit=k_max)`` keeps the top k_max rows
-    (partial top-k per partition, the q_similarity_topk shape), and
-    the row_number window then runs over that 1000-row CENSUS frame —
-    the executed plan contains no Exchange at all between the scan and
-    the window (TakeOrdered emits one pre-sorted partition). The
-    per-k fan-out is a broadcast range join of a 3-row literal frame
-    against 1000 rows. Hash-stability: tp and n_considered are exact
+    The oracle's global ``row_number()`` over every scored row is
+    exactly the single-reducer serialization this module exists to
+    avoid, so the engine form never ranks the fact table: it keeps the
+    top k_max rows first and numbers only that 1000-row census frame.
+    Hash-stability: tp and n_considered are exact
     integers on an unambiguous total order (value ties broken by the
     unique event_id); precision/recall are single IEEE divisions of
     identical integers (SURVEY §2.11 discipline).
@@ -1362,8 +1281,6 @@ def q_eval_topk_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Heavy hitters via a bounded-memory sketch (exact-verified)
 # ---------------------------------------------------------------------------
 
-_HH_CAPACITY = 8  # Misra-Gries counters/partition → threshold n/9
-
 
 @query(
     "q_heavy_hitters",
@@ -1379,6 +1296,7 @@ _HH_CAPACITY = 8  # Misra-Gries counters/partition → threshold n/9
     ORDER BY cnt DESC, event_type
     """,
     doc="Exact heavy hitters (share > 1/9): Misra-Gries candidates re-counted exactly.",
+    shape=Shape(has=("partial_",)),
 )
 def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keys holding more than 1/(capacity+1) of the events stream.
@@ -1389,36 +1307,28 @@ def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     Misra-Gries summaries bound per-partition state to
     ``_HH_CAPACITY`` counters, their union is a proven SUPERSET of
     every key above the n/(capacity+1) threshold, and the exact
-    re-count touches only candidate keys (broadcast semi-join), so
-    the aggregation state is O(capacity × partitions) regardless of
-    distinct-key count. Filtering the exact counts at the guarantee
-    threshold makes the result identical to the oracle's — integer
-    compare (cnt*(capacity+1) > n), one closing division for the
-    reported share (SURVEY §2.11 discipline).
+    re-count touches only candidate keys, so the aggregation state is
+    O(capacity × partitions) regardless of distinct-key count.
+    Filtering the exact counts at the guarantee threshold makes the
+    result identical to the oracle's — integer compare
+    (cnt*(capacity+1) > n), one closing division for the reported
+    share (SURVEY §2.11 discipline).
 
     Reference parity: the reference's duplicate-frequency analyses
     (Seccion_1_Excel top-20 duplicates; nb:150-160) at the
     key-distribution level, made feasible for unbounded-cardinality
     keys — the skew-diagnosis census that tells which join keys are hot.
     """
-    from prueba_tecnica_analista_etl_spark.operators.sketch import (
-        mg_candidates,
-    )
-
-    ev = (
-        _t(spark, sf_dir, "events")
-        .filter(F.col("event_type").isNotNull())
-        .select("event_type")
-    )
-    tot = ev.agg(F.count(F.lit(1)).alias("n"))
+    ev = event_types(spark, sf_dir)
     # The MG candidate set is staged per corpus (the same
-    # census_artifact discipline as q_stream_heavy_hitters): ANY partitioning's sketch yields a valid superset
-    # (PODS-2012 mergeable property), so a staged candidate list is
-    # exactly as sound as a per-call one, and the per-invocation
-    # Arrow sketch pass (mapInPandas over a spread() copy of the
-    # fact table) leaves the declared path. The exact recount + the
-    # integer threshold filter — which alone determine the output —
-    # still run live against the fact table on every call.
+    # census_artifact discipline as q_stream_heavy_hitters): ANY
+    # partitioning's sketch yields a valid superset (PODS-2012
+    # mergeable property), so a staged candidate list is exactly as
+    # sound as a per-call one, and the per-invocation Arrow sketch pass
+    # (mapInPandas over a spread() copy of the fact table) leaves the
+    # declared path. The exact recount + the integer threshold filter
+    # — which alone determine the output — still run live against the
+    # fact table on every call.
     cand = census_artifact(
         spark,
         sf_dir,
@@ -1432,23 +1342,7 @@ def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
             .collect()
         ),
     )
-    exact = (
-        ev.filter(F.col("event_type").isin(list(cand)))
-        .groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    return (
-        exact.crossJoin(F.broadcast(tot))
-        .filter(F.col("cnt") * (_HH_CAPACITY + 1) > F.col("n"))
-        .select(
-            "event_type",
-            "cnt",
-            (F.col("cnt").cast("double") / F.col("n").cast("double")).alias(
-                "share"
-            ),
-        )
-        .orderBy(F.desc("cnt"), F.asc("event_type"))
-    )
+    return heavy_hitter_recount(ev, cand)
 
 
 @query(
@@ -1479,14 +1373,9 @@ def q_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_streaming.py::test_mg_stream_accumulator_matches_batch_heavy_hitters
     and certified here by the DuckDB value-hash gate every round.
 
-    Scale shape: per micro-batch one mg_summary job (O(capacity)
-    state per partition, Arrow-batched) plus a capacity×partitions
-    collect; driver state O(capacity) total (mg_merge). The candidate
-    set is memoized per corpus (census_artifact — capacity keys), so
-    repeated audit runs pay the replay once; the exact pass is the
-    same broadcast-filtered aggregation q_heavy_hitters uses, with
-    the isin literal standing in for the broadcast semi-join at
-    capacity size.
+    Driver state is O(capacity) in total (mg_merge), and the exact
+    pass is q_heavy_hitters' re-count with the candidates as an isin
+    literal.
 
     Reference parity: the reference's planned streaming ingestion
     (nb:383 'mejoras futuras') combined with its duplicate-frequency
@@ -1494,14 +1383,6 @@ def q_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     diagnosis that keeps working when the data arrives as a stream.
     """
     import tempfile
-
-    from prueba_tecnica_analista_etl_spark.operators.sketch import (
-        MGStreamAccumulator,
-    )
-    from prueba_tecnica_analista_etl_spark.streaming.replay import (
-        replay_as_stream,
-        write_replay_files,
-    )
 
     def _streamed_candidates() -> list:
         import shutil
@@ -1532,33 +1413,7 @@ def q_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = census_artifact(
         spark, sf_dir, "stream_hh_candidates", _streamed_candidates
     )
-    ev = (
-        _t(spark, sf_dir, "events")
-        .filter(F.col("event_type").isNotNull())
-        .select("event_type")
-    )
-    tot = ev.agg(F.count(F.lit(1)).alias("n"))
-    # no spread(): the recount is a pushed isin filter + a
-    # map-side partial aggregate — the round-robin repartition was a
-    # full fact-table shuffle with nothing to parallelize (the same
-    # finding as q_heavy_hitters' recount pass).
-    exact = (
-        ev.filter(F.col("event_type").isin(list(cand)))
-        .groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    return (
-        exact.crossJoin(F.broadcast(tot))
-        .filter(F.col("cnt") * (_HH_CAPACITY + 1) > F.col("n"))
-        .select(
-            "event_type",
-            "cnt",
-            (F.col("cnt").cast("double") / F.col("n").cast("double")).alias(
-                "share"
-            ),
-        )
-        .orderBy(F.desc("cnt"), F.asc("event_type"))
-    )
+    return heavy_hitter_recount(event_types(spark, sf_dir), cand)
 
 
 def _zipf_oracle_sql() -> str:
@@ -1587,10 +1442,6 @@ def _zipf_oracle_sql() -> str:
 def q_zipf_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     # floor(log2(rank)) = length(bin(rank)) - 1 is integer-exact in both
     # engines; the global rank is bucketed_rank over -freq.
-    from prueba_tecnica_analista_etl_spark.plans.extensions_text import (
-        doc_term_tf_frame,
-    )
-
     keyed = (
         doc_term_tf_frame(spark, sf_dir)
         .groupBy("term")

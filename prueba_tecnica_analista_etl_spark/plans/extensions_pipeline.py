@@ -2,8 +2,7 @@
 a cleaned corpus and a training run: fixed-size chunking, sequence
 packing, benchmark-contamination screening, and Gopher-style repetition
 filtering. All four are native-expression plans (no UDFs) proven
-against DuckDB SQL oracles, extending the text/similarity families in
-``extensions_text.py`` / ``extensions_scale.py``.
+against DuckDB SQL oracles; their stage code lives in ``stages``.
 
 Reference scope note: the reference (Prueba-Tecnica-Analista-ETL) stops
 at cleaning/dedup/verification; these operators are the declared
@@ -12,80 +11,50 @@ beyond-reference extensions for LLM data pipelines (SURVEY.md §2.11).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from prueba_tecnica_analista_etl_spark.artifacts import corpus_artifact
 from prueba_tecnica_analista_etl_spark.functions.text import shingles
 from prueba_tecnica_analista_etl_spark.functions.vectors import as_double
-from prueba_tecnica_analista_etl_spark.plans.queries import Shape, _t, query
-from prueba_tecnica_analista_etl_spark.sources.tables import spread
+from prueba_tecnica_analista_etl_spark.operators.sampling import (
+    split_leakage_census,
+)
+from prueba_tecnica_analista_etl_spark.plans.queries import Shape, query
+from prueba_tecnica_analista_etl_spark.sources.tables import _t, spread
+from prueba_tecnica_analista_etl_spark.stages.dedup import (
+    CLUSTER_MIN_SHARED,
+    cluster_labels,
+    fp8_ids_frame,
+    pair_combos,
+)
+from prueba_tecnica_analista_etl_spark.stages.eval import (
+    BENCH_MOD,
+    CONTAM_MIN_HITS,
+    _hex_threshold,
+    bench_grams4_frame,
+    contamination_hits,
+    split_col,
+)
+from prueba_tecnica_analista_etl_spark.stages.text import (
+    _LN2_1E6,
+    _LOG_K,
+    _LOG_P,
+    CTX_TOKENS,
+    SPAN_K,
+    SPAN_S,
+    _nlp6_spark_expr,
+    _unigram_scored,
+    doc_grams4_frame,
+    doc_term_tf_frame,
+    dup_span_census,
+    pack_bins,
+)
 
-# Chunking / packing constants — chosen so the harness corpus (~30-100
-# tokens/doc) produces multi-chunk docs and multi-doc bins. 512 is a
-# power of two so every ``tokens/512`` double division below is EXACT
-# in binary (cross-engine hash-safe without decimal gymnastics).
+# Chunking constants — chosen so the harness corpus (~30-100
+# tokens/doc) produces multi-chunk docs.
 CHUNK_TOKENS = 32
 CHUNK_STRIDE = 24  # 8-token overlap between consecutive chunks
-CTX_TOKENS = 512
-
-# Contamination screen: ≥1 shared benchmark gram marks a doc as touched
-# (raw count, kept for trend monitoring), but the DECONTAMINATION
-# decision uses a threshold — single-gram overlap is mostly generic
-# phrases. CONTAM_MIN_HITS distinct shared grams flags a doc for drop.
-CONTAM_MIN_HITS = 3
-# Every BENCH_MOD-th doc (by id) stands in for the held-out evaluation
-# benchmark. The oracle SQL spells it out as ``% 50``.
-BENCH_MOD = 50
-
-
-def pack_bins(docs: DataFrame) -> DataFrame:
-    """Greedy sequential pack plan over (source, doc_id, n_tok): per
-    source, docs fill CTX_TOKENS-sized bins in doc_id order, and a doc
-    belongs to the bin where its first token lands. Returns (source,
-    bin, docs, tokens). The running sum is windowed per source, so no
-    global-order single-partition window exists at any scale."""
-    w = (
-        Window.partitionBy("source")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    binned = docs.select(
-        "source",
-        "n_tok",
-        F.floor((F.sum("n_tok").over(w) - F.col("n_tok")) / CTX_TOKENS)
-        .cast("long")
-        .alias("bin"),
-    )
-    return binned.groupBy("source", "bin").agg(
-        F.count(F.lit(1)).alias("docs"),
-        F.sum("n_tok").cast("long").alias("tokens"),
-    )
-
-
-def benchmark_grams(doc_grams: DataFrame) -> DataFrame:
-    """The held-out benchmark's distinct gram vocabulary (one ``gram``
-    column) from a (doc_id, grams array) frame."""
-    return (
-        doc_grams.filter(F.col("doc_id") % BENCH_MOD == 0)
-        .select(F.explode("grams").alias("gram"))
-        .distinct()
-    )
-
-
-def contamination_hits(grams: DataFrame, bench: DataFrame) -> DataFrame:
-    """(doc_id, n_hits): per training doc (every doc outside the
-    holdout), the number of distinct benchmark grams among its
-    (doc_id, gram) rows. The benchmark vocabulary is small by
-    construction, so it is broadcast and the probe is a map-side
-    left-semi join: the corpus gram stream is never shuffled, only the
-    matched grams reach the per-doc distinct count."""
-    return (
-        grams.filter(F.col("doc_id") % BENCH_MOD != 0)
-        .join(F.broadcast(bench), "gram", "left_semi")
-        .groupBy("doc_id")
-        .agg(F.count_distinct("gram").alias("n_hits"))
-    )
 
 
 @query(
@@ -157,53 +126,6 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     bins = pack_bins(d.select("source", "doc_id", nt.alias("n_tok")))
     return bins.withColumn(
         "fill_pct", F.floor(F.col("tokens") * 100 / CTX_TOKENS).cast("long")
-    )
-
-
-def doc_grams4_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-doc 4-token shingle stream over ``documents`` — (doc_id,
-    source, grams array, n_grams), staged ONCE per corpus: the
-    contamination screen and the decontamination filter both explode
-    this artifact instead of each re-running tokenize+shingle over
-    the corpus. Arrays keep duplicates (the consumers' distinct
-    semantics differ and are applied downstream). Storage trade at
-    100 TB: grams materialize ~4x the text bytes, paid once and
-    column-pruned on read; both consumers' remaining cost is their
-    own gram-keyed aggregation, which the artifact cannot remove."""
-
-    def build() -> DataFrame:
-        d = _t(spark, sf_dir, "documents")
-        toks = F.split(F.col("text"), " ")
-        return spread(d).select(
-            "doc_id",
-            "source",
-            shingles(toks, 4).alias("grams"),
-            F.greatest(F.size(toks) - 3, F.lit(1))
-            .cast("long")
-            .alias("n_grams"),
-        )
-
-    return corpus_artifact(spark, sf_dir, "doc_grams4", build)
-
-
-def bench_grams4_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The held-out benchmark's DISTINCT 4-gram vocabulary
-    (:func:`benchmark_grams` over the doc_grams4 artifact), staged once
-    per corpus: both contamination queries (the census and the
-    decontamination filter) probe this same set, and rebuilding it per
-    query re-ran explode+distinct over the benchmark docs each time
-    (~0.43 s/call at sf0.1). ``pretrain_run`` builds the same set
-    lazily inside its own DAG instead, so a run on an empty store does
-    not stage the gram artifacts. In a real pipeline the benchmark
-    gram set IS a staged artifact, rebuilt when the eval set changes —
-    here the corpus fingerprint in the artifact key plays that role.
-    The holdout modulus is part of the key so a re-cut can never serve
-    a stale vocabulary."""
-    return corpus_artifact(
-        spark,
-        sf_dir,
-        f"bench_grams4:m{BENCH_MOD}",
-        lambda: benchmark_grams(doc_grams4_frame(spark, sf_dir)),
     )
 
 
@@ -432,25 +354,6 @@ def q_zscore_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def pair_combos(arr, a_name: str, b_name: str):
-    """All ``a < b`` pair structs from a SORTED array column: k members
-    → k(k-1)/2 structs, pure codegen, ordering guaranteed by the
-    sorted input (the inline alternative to a self-equi-join, whose
-    aliased sides would each re-evaluate the heavy upstream subtree —
-    exchange reuse does not fire across them). Shared by
-    q_source_overlap (source pairs per fingerprint) and shingle_edges
-    (doc pairs per fingerprint)."""
-    return F.flatten(
-        F.transform(
-            arr,
-            lambda x, i: F.transform(
-                F.slice(arr, i + F.lit(2), F.size(arr)),
-                lambda y: F.struct(x.alias(a_name), y.alias(b_name)),
-            ),
-        )
-    )
-
-
 @query(
     "q_source_overlap",
     """
@@ -528,68 +431,6 @@ def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _unigram_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-doc mean unigram log-probability frame: (doc_id, source,
-    logprob). Shared by q_unigram_logprob (corpus census) and
-    q_perplexity_buckets (CCNet-style head/middle/tail split) — and
-    MEMOIZED as a per-corpus artifact (artifacts.corpus_artifact):
-    one row per doc, the ideal staged-artifact shape, so the two
-    consumers pay the tokenize/tf/vocab pipeline once per corpus, not
-    once each (the cached_minhash_pairs pattern; building the first
-    consumer's plan therefore runs Spark jobs eagerly)."""
-    return corpus_artifact(
-        spark,
-        sf_dir,
-        "unigram_scored",
-        lambda: _unigram_scored_build(spark, sf_dir),
-    )
-
-
-# Exact-integer fixed-point logarithm (shared by the Spark build and
-# the DuckDB oracle below).  ``nlp6(total, cnt)`` approximates
-# ln(total/cnt)*1e6 (max observed error < 3 grid units) using ONLY
-# 64-bit integer arithmetic, so every engine computes bit-identical
-# values by construction — quantizing a RUNTIME ``ln`` onto the grid
-# is not enough: a 1-ulp libm disagreement at a grid boundary flipped
-# q_perplexity_buckets' driver hash.  Algorithm (the q_length_histogram binary-length trick
-# generalized to fractional bits):
-#
-# 1. integer part  e = floor(log2(total/cnt)) = length(bin(total div
-#    cnt)) - 1 (exact: total div cnt >= 2^b  iff  total/cnt >= 2^b);
-# 2. normalize     y = (total * 2^P) div (cnt * 2^e)  in [2^P, 2^(P+1))
-#    (cnt*2^e <= total < 2^63 so the denominator is a safe BIGINT; the
-#    numerator rides DECIMAL(38,0)/HUGEINT per the verified
-#    cross-engine div pattern);
-# 3. K fractional bits by renormalizing squaring: y <- y^2 div 2^(P+1)
-#    emitting bit 1 when y^2 >= 2^(2P+1), else y^2 div 2^P emitting 0.
-#    With P=30, y^2 < 2^62 never leaves BIGINT;
-# 4. scale log2 -> ln grid: nlp6 = (L*693147 + 2^(K-1)) div 2^K where
-#    L = e*2^K + frac and 693147 = round(ln(2)*1e6).
-_LOG_P = 30  # normalized-mantissa precision bits (y^2 < 2^62)
-_LOG_K = 20  # fractional bits (2^-20 < the 1e-6 grid in log2 units)
-_LN2_1E6 = 693147  # round(ln(2) * 1e6) — exact integer scale factor
-
-
-def _nlp6_spark_expr() -> str:
-    """Spark-SQL expression for nlp6 over columns (total, cnt) — one
-    ``aggregate`` higher-order fold, so the K-step iteration is a
-    single runtime loop, never K nested plan expressions."""
-    P, K = _LOG_P, _LOG_K
-    return f"""aggregate(
-      sequence(1, {K}),
-      named_struct(
-        'y', CAST((CAST(total AS DECIMAL(38,0)) * {1 << P})
-                  div shiftleft(cnt, length(bin(total div cnt)) - 1)
-             AS BIGINT),
-        'l', CAST(length(bin(total div cnt)) - 1 AS BIGINT)),
-      (acc, i) -> IF(acc.y * acc.y >= {1 << (2 * P + 1)}L,
-                     named_struct('y', (acc.y * acc.y) div {1 << (P + 1)}L,
-                                  'l', acc.l * 2L + 1L),
-                     named_struct('y', (acc.y * acc.y) div {1 << P}L,
-                                  'l', acc.l * 2L)),
-      acc -> (acc.l * {_LN2_1E6}L + {1 << (K - 1)}L) div {1 << K}L)"""
-
-
 def _nlp6_duckdb_ctes(
     prefix: str = "v",
     src: str = "vocab CROSS JOIN n",
@@ -630,59 +471,6 @@ def _nlp6_duckdb_ctes(
           FROM {prefix}{K})"""
     )
     return ",\n         ".join(steps), f"{prefix}term"
-
-
-def _unigram_scored_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One explode+groupBy collapses the token stream to (doc, term,
-    tf); the vocab census and the scoring join both run on THAT frame
-    — O(doc-term pairs), not O(tokens), crosses the term shuffle.
-
-    Two score representations ride the same aggregation:
-
-    * ``logprob`` (double) — the float weighted mean, for census-style
-      consumers that round only REPORTED columns (q_unigram_logprob);
-    * ``nlp_num``/``tf_sum`` (bigint) — the exact-integer form for
-      consumers whose score feeds a sort/group KEY.  Each term's
-      -ln(p) is the fixed-point integer logarithm ``nlp6`` (see
-      _LOG_P above): ZERO runtime transcendentals anywhere in the key
-      path — a single quantized runtime ``ln`` still flipped the
-      driver hash when the JVM's and DuckDB's libm disagreed by 1 ulp
-      at a 1e-6 grid boundary.  ``sum(tf * nlp6)`` and ``sum(tf)``
-      stay 64-bit integer arithmetic: identical in every engine
-      regardless of accumulation order.  nlp6 is computed once per
-      DISTINCT TERM on the vocab frame (O(|vocab|) folds), not per
-      doc-term row.
-    """
-    from prueba_tecnica_analista_etl_spark.plans.extensions_text import (
-        doc_term_tf_frame,
-    )
-
-    tf = doc_term_tf_frame(spark, sf_dir)
-    vocab = tf.groupBy("term").agg(
-        F.sum("tf").cast("long").alias("cnt")
-    )
-    n = tf.agg(F.sum("tf").cast("long").alias("total"))
-    vterm = (
-        vocab.crossJoin(F.broadcast(n))
-        .withColumn("nlp6", F.expr(_nlp6_spark_expr()))
-    )
-    return (
-        tf.join(vterm, "term")
-        .groupBy("doc_id", "source")
-        .agg(
-            (
-                F.sum(
-                    F.col("tf")
-                    * F.log(F.col("cnt") / (F.col("total") * 1.0))
-                )
-                / F.sum("tf")
-            ).alias("logprob"),
-            F.sum(F.col("tf") * F.col("nlp6"))
-            .cast("long")
-            .alias("nlp_num"),
-            F.sum("tf").cast("long").alias("tf_sum"),
-        )
-    )
 
 
 # The shared scored-frame CTE prefix for the two unigram-LM oracles.
@@ -1082,10 +870,6 @@ def q_pack_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # round(4) absorbs libm-vs-JVM ln last-ulp drift.
-    from prueba_tecnica_analista_etl_spark.plans.extensions_text import (
-        doc_term_tf_frame,
-    )
-
     d = _t(spark, sf_dir, "documents")
     # tf folded from the staged doc_term_tf artifact
     tf = doc_term_tf_frame(spark, sf_dir).select("doc_id", "term", "tf")
@@ -1111,82 +895,6 @@ def q_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scored.orderBy(
         F.desc("tfidf"), F.asc("doc_id"), F.asc("term")
     ).limit(20)
-
-
-# Duplicate-cluster edges: two docs are near-dups when they share at
-# least this many distinct 8-token shingle fingerprints (the
-# q_source_overlap unit, applied doc-level).
-CLUSTER_MIN_SHARED = 3
-
-
-def fp8_ids_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Each distinct 8-token-shingle md5 fingerprint's sorted member
-    doc_id array over the ``documents`` corpus — staged ONCE per
-    corpus (the doc_shingle_frame discipline applied to the
-    8-gram family): q_neardup_scores' candidate edges, q_dup_clusters'
-    edge builder and q_dup_exposure's exposure census all fold this
-    one frame instead of each re-running the corpus-scale
-    explode+md5+groupBy subtree. O(distinct shingles) rows — the
-    cached_minhash_pairs size class."""
-
-    def build() -> DataFrame:
-        d = _t(spark, sf_dir, "documents")
-        toks = F.split(F.lower(F.col("text")), " ")
-        fp = (
-            spread(d)
-            .select(
-                "doc_id", F.explode(shingles(toks, 8)).alias("gram")
-            )
-            .select("doc_id", F.md5("gram").alias("fp"))
-        )
-        return fp.groupBy("fp").agg(
-            F.sort_array(F.collect_set("doc_id")).alias("ids")
-        )
-
-    return corpus_artifact(spark, sf_dir, "fp8_ids", build)
-
-
-def shingle_edges(
-    docs: DataFrame, grouped: DataFrame | None = None
-) -> DataFrame:
-    """Doc-pair edges ``(doc_a < doc_b, shared)`` where the pair shares
-    ≥ ``CLUSTER_MIN_SHARED`` distinct 8-token shingle fingerprints.
-
-    Same inline-pair shape as q_source_overlap (one groupBy(fp)
-    collects each fingerprint's sorted member ids; a<b combinations
-    are generated from that array in codegen — the heavy
-    explode+md5+distinct subtree runs ONCE, not twice per join side).
-    Fingerprints are not capped by document frequency, for exactness
-    against the uncapped SQL oracle. ``grouped`` bypasses the corpus scan with a
-    pre-staged (fp, ids) frame (the ``fp8_ids_frame`` artifact)."""
-    if grouped is not None:
-        g = grouped
-    else:
-        toks = F.split(F.lower(F.col("text")), " ")
-        fp = (
-            spread(docs)
-            .select(
-                "doc_id", F.explode(shingles(toks, 8)).alias("gram")
-            )
-            .select("doc_id", F.md5("gram").alias("fp"))
-        )
-        # No .distinct() before the groupBy: collect_set dedups
-        # doc_ids per fingerprint map-side, so a separate distinct
-        # would be a second full shuffle of the gram frame for
-        # nothing (unlike q_source_overlap, whose per-source SIZE
-        # census genuinely needs the deduped (fp, source) frame).
-        g = fp.groupBy("fp").agg(
-            F.sort_array(F.collect_set("doc_id")).alias("ids")
-        )
-    combos = pair_combos(F.col("ids"), "doc_a", "doc_b")
-    return (
-        g.filter(F.size("ids") >= 2)
-        .select(F.explode(combos).alias("p"))
-        .select("p.doc_a", "p.doc_b")
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("shared"))
-        .filter(F.col("shared") >= CLUSTER_MIN_SHARED)
-    )
 
 
 @query(
@@ -1226,31 +934,6 @@ def q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(F.count(F.lit(1)).alias("n_docs"))
 
 
-def cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The corpus's duplicate-family component labels — a CORPUS
-    ARTIFACT (one row per doc in a multi-doc family, checkpointed):
-    the connected-components fixpoint is eager (each round runs Spark
-    jobs), so every consumer re-deriving it per call would re-pay the
-    whole iteration; the cached_minhash_pairs discipline applies —
-    built once per corpus generation. The fixpoint cost stays visible
-    in tests and first-use (bench warm-up)."""
-    from prueba_tecnica_analista_etl_spark.operators.components import (
-        connected_components,
-    )
-
-    return corpus_artifact(
-        spark,
-        sf_dir,
-        "dup_cluster_labels",
-        lambda: connected_components(
-            shingle_edges(
-                _t(spark, sf_dir, "documents"),
-                grouped=fp8_ids_frame(spark, sf_dir),
-            )
-        ),
-    )
-
-
 # ---------------------------------------------------------------------------
 # Source-mixture sampling (training-data blending)
 # ---------------------------------------------------------------------------
@@ -1267,21 +950,6 @@ MIXTURE_WEIGHTS: dict[str, float] = {
     "src3": 0.25,
 }
 MIXTURE_DEFAULT = 0.1
-
-
-def _hex_threshold(frac: float) -> str:
-    """Keep-threshold for ``md5_prefix8 < threshold`` sampling.
-
-    The doc's uniform variate is its md5 hex prefix (8 lowercase hex
-    chars); fixed-length lowercase hex compares lexicographically ==
-    numerically, so ``prefix < format(frac * 2**32, '08x')`` keeps a
-    deterministic ~frac of docs IDENTICALLY in any engine with md5 —
-    no float arithmetic, no engine-specific hash(). frac >= 1.0 maps
-    to 'g' (sorts after every hex digit): keep-all, exactly.
-    """
-    if frac >= 1.0:
-        return "g"
-    return format(int(frac * 2**32), "08x")
 
 
 def _mixture_sql_case() -> str:
@@ -1408,13 +1076,6 @@ def q_source_priority_dedup(
         .cast("long")
         .alias("n_lost"),
     )
-
-
-def split_col() -> Column:
-    """Deterministic train/val/test assignment of ``doc_id``: its first
-    md5-hex nibble, < 'c' train (12/16), < 'e' val (2/16), else test."""
-    nib = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1)
-    return F.when(nib < "c", "train").when(nib < "e", "val").otherwise("test")
 
 
 @query(
@@ -1568,7 +1229,7 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM g
     """,
     doc="Per eval split, the docs whose content md5 also appears in train.",
-    shape=Shape(lacks=("Join",)),
+    shape=Shape(has=("partial_",), lacks=("Join",)),
 )
 def q_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-content leakage from train into val/test under the
@@ -1583,16 +1244,11 @@ def q_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     with cached_minhash_pairs — rows-only territory; this is the
     exact, oracle-checkable tier.
 
-    Scale: one md5(text) shuffle (the q_exact_dedup cost family), then
-    ONE census-sized partial-agged global aggregate exploded into
-    per-split rows (a per-split union would rescan and reshuffle once
-    per split). Join-free — the per-fingerprint conditional counts
-    already see both sides of the boundary.
+    One global census exploded into per-split rows, not a per-split
+    union, which would rescan and reshuffle once per split; the
+    per-fingerprint conditional counts already see both sides of the
+    boundary, so no join is needed.
     """
-    from prueba_tecnica_analista_etl_spark.operators.sampling import (
-        split_leakage_census,
-    )
-
     d = _t(spark, sf_dir, "documents")
     return split_leakage_census(
         d.select(split_col().alias("split"), "text"), "text"
@@ -1640,12 +1296,9 @@ def q_neardup_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     |A∩B| is free — it IS the edge's ``shared`` count; |A∪B| comes
     from the per-doc distinct-fingerprint census joined twice onto
-    the edge list (hash joins keyed on doc_id). Both the edge list
-    and the size census derive from the SAME fingerprint-grouped
-    frame ``g`` (each fp's deduped member-id array): edges explode
-    its a<b pairs, sizes explode its ids — so the corpus-scale
-    explode+md5 subtree and its fp-keyed Exchange run ONCE
-    (ReusedExchange, plan-pinned), and the corpus is scanned once.
+    the edge list. Both the edge list and the size census derive from
+    the SAME fingerprint-grouped frame (each fp's deduped member-id
+    array): edges explode its a<b pairs, sizes explode its ids.
     Reference parity: the duplicate-detection design of nb:150-160
     (exact drop_duplicates) extended to graded near-duplicates.
     """
@@ -1730,6 +1383,7 @@ def q_neardup_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     LIMIT 20
     """,
     doc="Top-20 docs by the share of their distinct 8-token shingles found in another doc.",
+    shape=Shape(has=("TakeOrderedAndProject", "partial_")),
 )
 def q_dup_exposure(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document duplication exposure over 8-gram fingerprints.
@@ -1746,27 +1400,20 @@ def q_dup_exposure(spark: SparkSession, sf_dir: str) -> DataFrame:
     ASC, doc_id ASC — the float ratio is reported, never a sort key:
     SURVEY §2.11 hash-stability discipline).
 
-    Scale shape (the de-skewed form): n_shared is
-    computed through its COMPLEMENT. A fingerprint is shared iff it
-    appears in >=2 documents, so per doc
+    n_shared is computed through its COMPLEMENT, which de-skews it. A
+    fingerprint is shared iff it appears in >=2 documents, so per doc
 
         n_shared = n_grams - |fps globally unique to this doc|
 
     and a globally-unique fp's owner is recoverable inside the same
-    aggregate that counts it (min(doc_id) over its single row). The
-    plan is therefore: one (doc_id, fp) distinct exchange, reused by
-    two hash aggregations — groupBy(fp) for the unique-fp census and
-    groupBy(doc_id) for n_grams — and a per-doc join of two at-most-
-    one-row-per-key frames. Every fp-keyed step PARTIALLY aggregates
-    (map-side combine), so a boilerplate fingerprint shared by every
-    document costs one counter per task, never a window partition or
-    a hot join key: the earlier per-fp count window inherited the
-    boilerplate-shingle skew q_source_overlap documents, with one
-    unbounded window partition per mega-shared fp. The census is
-    LINEAR in corpus shingles where the pair graph is quadratic in
-    duplicated docs; top-20 is TakeOrderedAndProject. Reuses the
-    exact 8-gram md5 fingerprint construction parity-proven by
-    q_source_overlap / q_contamination.
+    aggregate that counts it (min(doc_id) over its single row). So a
+    boilerplate fingerprint shared by every document costs one
+    aggregate counter, never a window partition or a hot join key: a
+    per-fp count window inherited the boilerplate-shingle skew
+    q_source_overlap documents. The census is LINEAR in corpus
+    shingles where the pair graph is quadratic in duplicated docs.
+    Reuses the exact 8-gram md5 fingerprint construction
+    parity-proven by q_source_overlap / q_contamination.
 
     Reference parity: the reference's duplicate analysis (nb:150-160
     keep-first dedup; Seccion_1_Excel top-20 duplicates) lifted from
@@ -1826,6 +1473,7 @@ def q_dup_exposure(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM a GROUP BY split ORDER BY split
     """,
     doc="Train/val split keyed on each exact-duplicate group's representative, censused.",
+    shape=Shape(has=("partial_",), lacks=("Window", "Join")),
 )
 def q_group_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-aware split assignment (SURVEY §2.11).
@@ -1846,11 +1494,8 @@ def q_group_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-specific; this exact-group form keeps the census
     oracle-checkable).
 
-    Scale shape: one partial-aggregating shuffle on md5(text) (the
-    q_exact_dedup cost family — fingerprints, never raw text, on the
-    exchange), a map-side split draw per GROUP row, and a two-row
-    census aggregation. No windows, no joins, no skew (group rows are
-    unique by fingerprint).
+    Groups key on md5(text), so fingerprints, never raw text, are
+    shuffled.
 
     Reference parity: the reference's keep-first dedup (nb:150-160,
     `drop_duplicates`) composed with a reproducible sampling rule —
@@ -1930,10 +1575,6 @@ def q_unigram_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Folded from the shared doc_term_tf artifact: the
         # token-stream explode is paid once for the whole term
         # family; this census is its per-source regrouping.
-        from prueba_tecnica_analista_etl_spark.plans.extensions_text import (  # noqa: E501
-            doc_term_tf_frame,
-        )
-
         stf = (
             doc_term_tf_frame(spark, sf_dir)
             .groupBy("source", "term")
@@ -1969,61 +1610,6 @@ def q_unigram_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("_num div total_tokens").alias("entropy_e6"),
         )
         .orderBy("source")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Duplicate-span census — substring-level dedup signal
-# ---------------------------------------------------------------------------
-
-# Overlapping k-token windows at stride s — the bounded form of
-# suffix-array substring dedup (the "memorized 50-token span" signal
-# from public dedup literature): linear in tokens, fingerprint-keyed
-# shuffle, the q_dup_exposure pattern at span granularity.  Shipped
-# operating point fits the harness corpus (~54-token docs); a real
-# 100 TB run raises k to ~50 and s to ~8 — both knobs live in the
-# staged artifact key, so a retune can never serve a stale stream.
-SPAN_K = 16
-SPAN_S = 4
-
-
-def doc_span_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, source, fp) — one row per overlapping SPAN_K-token
-    window at stride SPAN_S, fp = md5 of the span text; staged once
-    per corpus alongside doc_grams4 (the span stream is the shared
-    feature for every substring-level consumer).  Docs shorter than
-    SPAN_K contribute no spans (too short to memorize — documented)."""
-
-    def build() -> DataFrame:
-        d = spread(_t(spark, sf_dir, "documents"))
-        toks = F.split(F.lower(F.col("text")), " ")
-        n = F.size(toks)
-        starts = F.when(
-            n >= F.lit(SPAN_K),
-            F.sequence(
-                F.lit(1), n - F.lit(SPAN_K - 1), F.lit(SPAN_S)
-            ),
-        ).otherwise(F.array().cast("array<int>"))
-        return (
-            d.select(
-                "doc_id",
-                "source",
-                toks.alias("toks"),
-                F.explode(starts).alias("i"),
-            )
-            .select(
-                "doc_id",
-                "source",
-                F.md5(
-                    F.concat_ws(
-                        " ", F.slice(F.col("toks"), F.col("i"), SPAN_K)
-                    )
-                ).alias("fp"),
-            )
-        )
-
-    return corpus_artifact(
-        spark, sf_dir, f"doc_spans:k{SPAN_K}:s{SPAN_S}", build
     )
 
 
@@ -2063,29 +1649,4 @@ def _dup_spans_oracle_sql() -> str:
     doc="Per-source census of token spans that occur in two or more distinct docs.",
 )
 def q_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # The span stream is staged once per corpus, so every substring
-    # consumer reads it rather than re-exploding the corpus.
-    spans = doc_span_frame(spark, sf_dir)
-    census = spans.groupBy("fp").agg(
-        F.count_distinct("doc_id").alias("nd")
-    )
-    dup = F.col("nd") >= 2
-    return (
-        spans.join(census, "fp")
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_spans"),
-            F.sum(F.when(dup, 1).otherwise(0))
-            .cast("long")
-            .alias("n_dup_spans"),
-            F.count_distinct(
-                F.when(dup, F.col("doc_id"))
-            ).alias("n_docs_hit"),
-            (
-                F.sum(F.when(dup, 1).otherwise(0)) * F.lit(SPAN_S)
-            )
-            .cast("long")
-            .alias("est_dup_tokens"),
-        )
-        .orderBy("source")
-    )
+    return dup_span_census(spark, sf_dir)

@@ -21,38 +21,84 @@ near-tie flip would cascade through the fit.
 from __future__ import annotations
 
 import os
-import random
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from prueba_tecnica_analista_etl_spark.artifacts import (
-    artifact_directory,
     census_artifact,
     corpus_artifact,
 )
-from prueba_tecnica_analista_etl_spark.functions.text import (
-    jaccard,
-    md5_60,
-    shingle_hashes,
-    shingles,
-    simhash64,
-    sql_md5_60,
-    tokens,
-)
+from prueba_tecnica_analista_etl_spark.functions.text import sql_md5_60
 from prueba_tecnica_analista_etl_spark.functions.vectors import (
     as_double,
     cosine,
-    hamming_words,
-    ivf_fit,
     random_hyperplanes,
-    sign_bits,
-    sign_words,
 )
-from prueba_tecnica_analista_etl_spark.pipelines.corpus import PURGE_ROUNDS
-from prueba_tecnica_analista_etl_spark.plans.queries import Shape, _t, query
-from prueba_tecnica_analista_etl_spark.session import session_clone
-from prueba_tecnica_analista_etl_spark.sources.tables import spread
+from prueba_tecnica_analista_etl_spark.multimodal import (
+    FEATURE_DIM,
+    extract_features,
+    extract_metadata,
+    fake_assets,
+)
+from prueba_tecnica_analista_etl_spark.operators.ivf_index import (
+    ivf_search_index,
+)
+from prueba_tecnica_analista_etl_spark.plans.queries import Shape, query
+from prueba_tecnica_analista_etl_spark.session import _stream_session
+from prueba_tecnica_analista_etl_spark.sources.tables import _t, spread
+from prueba_tecnica_analista_etl_spark.stages.dedup import (
+    _LOW30,
+    BAND_BITS,
+    BUCKET_CAP,
+    CHUNK_SEED,
+    MINHASH_BANDS,
+    MINHASH_COEFFS,
+    MINHASH_JACCARD_T,
+    MINHASH_P,
+    MINHASH_ROWS,
+    N_BANDS,
+    N_SIMHASH_BITS,
+    PURGE_ROUNDS,
+    SIMHASH_MAX_HAMMING,
+    cached_minhash_pairs,
+    doc_shingle_frame,
+    exact_dedup,
+    minhash_band_frame,
+    near_dup_purge,
+    ngram_pair_frame,
+    pair_combos,
+    pairs_from_band_frame,
+    quality_gate,
+    shingle_frame,
+    simhash_pair_frame,
+)
+from prueba_tecnica_analista_etl_spark.stages.vectors import (
+    EMBED_ND_BITS,
+    IVF_NPROBE,
+    LSH_BITS,
+    LSH_HAMMING,
+    LSH_WORD_BITS,
+    LSH_WORDS,
+    SEMDEDUP_K,
+    SEMDEDUP_T,
+    _embed_neardup_pairs_live,
+    ann_lsh_candidates,
+    ann_recall_census_live,
+    ann_sweep_tiers,
+    cached_ivf_index,
+    embedding_frame,
+    int8_cos,
+    int8_grid,
+    semdedup_assign,
+    semdedup_census_for,
+    semdedup_labels,
+    semdedup_pairs,
+)
+from prueba_tecnica_analista_etl_spark.streaming.neardup import (
+    accepted_ids,
+    foreach_batch_neardup_gate,
+)
 from prueba_tecnica_analista_etl_spark.streaming.replay import (
     replay_as_stream,
     write_overlapping_replay,
@@ -61,58 +107,15 @@ from prueba_tecnica_analista_etl_spark.streaming.replay import (
 from prueba_tecnica_analista_etl_spark.streaming.stateful import (
     dedupe_stream,
 )
+from prueba_tecnica_analista_etl_spark.streaming.upsert_sink import (
+    DATA,
+    foreach_batch_upsert,
+)
 from prueba_tecnica_analista_etl_spark.streaming.windows import (
     drain_available_now,
     run_available_now,
     sessionize,
 )
-
-
-# Banded-minhash knobs: b bands × r rows. A pair with shingle-set
-# Jaccard s collides in a band with prob s^r; recall = 1-(1-s^r)^b.
-# r=3, b=4 → s=0.9: 99.9%; s=0.1: 0.4% of random pairs become
-# candidates — the AND-amplification that keeps the self-join linear.
-MINHASH_BANDS = 4
-MINHASH_ROWS = 3
-# Jaccard gate on re-ranked candidates: THE constant behind every
-# "jaccard >= 0.5" in the minhash family (function defaults, the
-# generated oracle, the staged pair-frame key) — a retune here moves
-# all of them together instead of silently serving a stale frame.
-MINHASH_JACCARD_T = 0.5
-BUCKET_CAP = 64  # skew guard: per-bucket pair work is bounded by
-# SUB-SPLITTING oversized buckets (see capped_pair_array), never by
-# silently dropping them.
-
-# ENGINE-NEUTRAL seeded minhash family (what makes q_minhash_dedup
-# oracle-backed): mh_j(h) = (a_j·x + b_j·y + c_j)
-# mod (2^61−1) where x = h & (2^30−1), y = h >> 30 split the 60-bit
-# md5 prefix hash. Coefficients < 2^30 keep every intermediate under
-# 2^62 — exact int64 arithmetic in Spark, DuckDB, and any ANSI engine
-# (no xxhash64 dependence), and a standard Mersenne-prime
-# multiply-shift universal family, so minima stay uniform. Seeded
-# deterministically: the literals are embedded in both the Spark plan
-# and the generated oracle SQL.
-MINHASH_P = (1 << 61) - 1
-_LOW30 = (1 << 30) - 1
-MINHASH_SEED = 1105
-# Seed of the skew guard's secondary chunk order for single-band
-# callers; the n-gram oracle replays the same chunks from it.
-CHUNK_SEED = 7
-
-
-def _minhash_coeffs(n: int) -> list[tuple[int, int, int]]:
-    rng = random.Random(MINHASH_SEED)
-    return [
-        (
-            rng.randrange(1, 1 << 30),
-            rng.randrange(1, 1 << 30),
-            rng.randrange(1, 1 << 30),
-        )
-        for _ in range(n)
-    ]
-
-
-MINHASH_COEFFS = _minhash_coeffs(MINHASH_BANDS * MINHASH_ROWS)
 
 
 def _sql_doc_shingle_cte() -> str:
@@ -150,284 +153,6 @@ def _sql_chunk(part: str, seed: str, id_col: str) -> str:
         f"(row_number() OVER (PARTITION BY {part} "
         f"ORDER BY {h}, {id_col}) - 1) // {BUCKET_CAP}"
     )
-
-def capped_pair_array(
-    docs_col,
-    id_field: str,
-    payload_field: str,
-    a_name: str,
-    b_name: str,
-    cap: int | None = BUCKET_CAP,
-    seed_col=None,
-):
-    """Ordered candidate pairs (``a < b``) from one LSH bucket's
-    member array ``array<struct<{id_field}, {payload_field}>>``, with
-    the skew guard that makes degenerate buckets safe at 100 TB:
-
-    a bucket larger than ``cap`` is SUB-SPLIT, not dropped — members
-    are ordered by a secondary ``md5_60`` of their seeded id and chunked
-    into ``ceil(n/cap)`` groups of ≤ cap, and pairs expand within each
-    chunk only. Per-bucket work is O(n·cap) instead of O(n²), and a
-    popular bucket still yields its intra-chunk pairs instead of
-    silently vanishing (refusing whole buckets would let near-dups
-    survive curation with no signal). Cross-chunk pairs
-    are the residual loss; under multi-band LSH any such pair can
-    still be found by another band it shares — PROVIDED chunk
-    boundaries differ per band, which is why banded callers must pass
-    ``seed_col`` (the band id): a near-identical-text family lands in
-    the same bucket in EVERY band, so a band-independent secondary
-    hash would chunk all bands identically and lose the same
-    cross-chunk pairs everywhere. Single-band callers (n-gram) keep
-    the constant ``CHUNK_SEED``; their cross-chunk loss is the documented
-    trade. Output
-    fields: ``{a_name}, {b_name}, pa, pb`` (payloads of each side).
-    All expression-level (no extra shuffle, no UDF). Buckets at or
-    under the cap — the overwhelmingly common case — take a direct
-    n×n expansion with no secondary-hash sort or chunking."""
-
-    def expand(members):
-        return F.filter(
-            F.flatten(
-                F.transform(
-                    members,
-                    lambda a: F.transform(
-                        members,
-                        lambda b: F.struct(
-                            a["_id"].alias(a_name),
-                            b["_id"].alias(b_name),
-                            a["_p"].alias("pa"),
-                            b["_p"].alias("pb"),
-                        ),
-                    ),
-                )
-            ),
-            lambda p: p[a_name] < p[b_name],
-        )
-
-    plain = F.transform(
-        docs_col,
-        lambda m: F.struct(
-            m[id_field].alias("_id"), m[payload_field].alias("_p")
-        ),
-    )
-    # cap=None: UNCAPPED all-pairs expansion — for consumers whose
-    # contract is exhaustive within the bucket (the streaming near-dup
-    # gate: admitting a doc because its match sat in another chunk
-    # would be a quality bug, and its per-unit work is bounded by the
-    # micro-batch, not the bucket).
-    if cap is None:
-        return expand(plain)
-    chunk_seed = F.lit(CHUNK_SEED) if seed_col is None else seed_col
-    # Secondary chunk-order hash: md5_60 of "<seed>:<id>" — engine-
-    # neutral (not xxhash64), so an oracle reproduces the exact
-    # chunk boundaries with row_number() over the same hash. Ids are
-    # unique within a bucket, so (hash, id) totally orders it.
-    ordered = F.transform(
-        F.array_sort(
-            F.transform(
-                docs_col,
-                lambda m: F.struct(
-                    md5_60(
-                        F.concat_ws(
-                            ":",
-                            chunk_seed.cast("string"),
-                            m[id_field].cast("string"),
-                        )
-                    ).alias("_h"),
-                    m[id_field].alias("_id"),
-                    m[payload_field].alias("_p"),
-                ),
-            )
-        ),
-        lambda m: F.struct(m["_id"].alias("_id"), m["_p"].alias("_p")),
-    )
-    n_chunks_minus1 = F.floor(
-        (F.size(docs_col) - F.lit(1)) / F.lit(cap)
-    ).cast("int")
-    chunked = F.flatten(
-        F.transform(
-            F.transform(
-                F.sequence(F.lit(0), n_chunks_minus1),
-                lambda c: F.slice(
-                    ordered, c * F.lit(cap) + F.lit(1), F.lit(cap)
-                ),
-            ),
-            expand,
-        )
-    )
-    return F.when(F.size(docs_col) <= F.lit(cap), expand(plain)).otherwise(
-        chunked
-    )
-
-
-def shingle_frame(docs: DataFrame) -> DataFrame:
-    """Per-doc 3-token shingle features of a (doc_id, text) frame:
-    ``(doc_id, sh, hs)`` with ``sh`` the distinct shingle strings and
-    ``hs`` their sorted md5_60 hashes — the one input of the near-dup
-    pair and band frames below."""
-    return spread(docs).select(
-        "doc_id",
-        F.array_distinct(shingles(tokens(F.col("text")), 3)).alias("sh"),
-        shingle_hashes(tokens(F.col("text")), 3).alias("hs"),
-    )
-
-
-def doc_shingle_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """:func:`shingle_frame` over the ``documents`` corpus, staged ONCE
-    per corpus. The whole near-dup family (minhash, single-band
-    n-gram, simhash, the LSH-recall truth side) consumes this one
-    artifact instead of each re-running scan→tokenize→shingle→md5 —
-    the feature stage is built once per corpus and served from the
-    artifact store (corpus_artifact), exactly the
-    ``_unigram_scored`` discipline. At 100 TB this is the standard
-    move: materialize the per-doc feature frame as a first-class
-    dataset and fan the near-dup tiers out from it."""
-    return corpus_artifact(
-        spark,
-        sf_dir,
-        "doc_shingles_k3",
-        lambda: shingle_frame(_t(spark, sf_dir, "documents")),
-    )
-
-
-def minhash_band_frame(shingled: DataFrame) -> DataFrame:
-    """Per-doc banded minhash signature frame of a
-    :func:`shingle_frame` — ``(doc_id, hs, band, key)`` with one row
-    per (doc, band), ``hs`` the sorted distinct
-    md5_60 shingle hashes and ``key`` the band's struct of row minima
-    (engine-neutral end-to-end; see MINHASH_P). The shared candidate
-    source for :func:`minhash_pair_frame` (all-pairs batch) and the
-    streaming near-dup gate (probe vs accepted index): both join on
-    the plain (band, key) columns."""
-    n_hashes = MINHASH_BANDS * MINHASH_ROWS
-    coeffs = _minhash_coeffs(n_hashes)
-    d = shingled.select("doc_id", "hs")
-
-    def _seeded_min(j: int):
-        a, b, c = coeffs[j]
-        return F.array_min(
-            F.transform(
-                "hs",
-                lambda h: (
-                    F.lit(a) * h.bitwiseAND(F.lit(_LOW30))
-                    + F.lit(b) * F.shiftrightunsigned(h, 30)
-                    + F.lit(c)
-                )
-                % F.lit(MINHASH_P),
-            )
-        ).alias(f"mh{j}")
-
-    sig = d.select("doc_id", "hs", *[_seeded_min(j) for j in range(n_hashes)])
-    return sig.select(
-        "doc_id",
-        "hs",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.struct(
-                            *[
-                                F.col(f"mh{b * MINHASH_ROWS + r}").alias(
-                                    f"k{r}"
-                                )
-                                for r in range(MINHASH_ROWS)
-                            ]
-                        ).alias("key"),
-                    )
-                    for b in range(MINHASH_BANDS)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "hs", "bk.band", "bk.key")
-
-
-def minhash_pair_frame(shingled: DataFrame) -> DataFrame:
-    """Banded-minhash near-dup pair detection over a
-    :func:`shingle_frame` — the operator behind the ``documents``-table queries
-    (``minhash_pairs`` below is this over the harness table). Emits
-    every ordered pair (doc_a < doc_b) with exact Jaccard ≥
-    ``MINHASH_JACCARD_T`` over 3-token shingles, candidate-generated
-    by ``MINHASH_BANDS``×``MINHASH_ROWS`` banded LSH (recall at
-    similarity s ≈ 1-(1-s^rows)^bands). Output columns are
-    (doc_a, doc_b, jaccard_sim).
-
-    Shingle once, hash once: every downstream step (minhashes, band
-    keys, exact re-rank) works on the array<long> of shingle hashes,
-    so the expensive string shingling is built exactly once and the
-    whole query is ONE shuffle (the band-key groupBy). Jaccard over
-    hashed shingles equals Jaccard over shingles up to md5_60
-    collisions (P ≈ |sh|²·2⁻⁶⁰ per doc — negligible). The seeded
-    family lives in :func:`minhash_band_frame` — NB its historical
-    trap: a two-parameter transform lambda would silently rebind the
-    seed to the array index (PySpark passes (element, index)),
-    collapsing all hash functions into one; the coefficients bind via
-    an outer closure. Band key = the row minima THEMSELVES as a
-    struct (not a combiner hash): equality of the struct == equality
-    of all ``rows`` minima, and a SQL oracle joins on the plain
-    columns — no cross-engine combiner function needed."""
-    return pairs_from_band_frame(minhash_band_frame(shingled))
-
-
-def pairs_from_band_frame(
-    banded: DataFrame,
-    threshold: float = MINHASH_JACCARD_T,
-    cap: int | None = BUCKET_CAP,
-) -> DataFrame:
-    """The second half of :func:`minhash_pair_frame`: scored near-dup
-    pairs from an already-built banded signature frame ``(doc_id, hs,
-    band, key)``. Split out so consumers that ALREADY hold the banded
-    frame (the streaming gate localCheckpoints it for its index
-    probe) derive intra-frame pairs without re-running the
-    shingle/minhash pipeline. ``cap=None`` disables the skew
-    chunking (exhaustive within each bucket — the gate's contract)."""
-    small = (
-        banded.groupBy("band", "key")
-        .agg(F.collect_list(F.struct("doc_id", "hs")).alias("docs"))
-        .filter(F.size("docs") >= 2)
-    )
-    return (
-        small.select(
-            F.explode(
-                capped_pair_array(
-                    F.col("docs"),
-                    "doc_id",
-                    "hs",
-                    "doc_a",
-                    "doc_b",
-                    cap=cap,
-                    seed_col=F.col("band"),
-                )
-            ).alias("p")
-        )
-        .select(
-            "p.doc_a",
-            "p.doc_b",
-            jaccard(F.col("p.pa"), F.col("p.pb")).alias("_j"),
-        )
-        .dropDuplicates(["doc_a", "doc_b"])
-        # gate on the UNROUNDED similarity: rounding first would admit
-        # pairs with true jaccard in [threshold-5e-5, threshold)
-        # through the >= threshold contract; round only the reported
-        # column
-        .filter(F.col("_j") >= threshold)
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(F.col("_j"), 4).alias("jaccard_sim"),
-        )
-    )
-
-
-def minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ALL near-dup pairs (jaccard ≥ 0.5) from banded minhash — the
-    UNCAPPED frame consumers like corpus curation must use, i.e.
-    :func:`minhash_pair_frame` at the harness defaults over the
-    ``documents`` table. The registry query ``q_minhash_dedup`` is
-    this plus an order/limit for reporting; feeding the limited
-    top-100 into a purge would let pairs 101+ silently survive
-    curation at scale."""
-    return minhash_pair_frame(doc_shingle_frame(spark, sf_dir))
 
 
 def _minhash_scored_pairs_cte(capped: bool = True) -> str:
@@ -524,54 +249,10 @@ def q_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-corpus artifact q_corpus_curate purges from and q_dup_matrix
     # censuses (the live construction stays exercised by the
     # streaming gate and the parity/plan suites via minhash_pairs).
-    from prueba_tecnica_analista_etl_spark.pipelines.corpus import (
-        cached_minhash_pairs,
-    )
-
     return (
         cached_minhash_pairs(spark, sf_dir)
         .orderBy(F.desc("jaccard_sim"), "doc_a", "doc_b")
         .limit(100)
-    )
-
-
-def ngram_pair_frame(shingled: DataFrame) -> DataFrame:
-    """Single-band min-shingle candidate pairs with exact trigram
-    Jaccard over a :func:`shingle_frame` (the operator behind
-    ``q_ngram_jaccard``). One bucket per minimum shingle hash —
-    cheaper and lower-recall than full banded minhash
-    (:func:`minhash_pair_frame`); right for the
-    catch-obvious-rewrites tier. Output: (doc_a, doc_b,
-    jaccard_sim), uncapped."""
-    # hs is the sorted distinct md5_60 of exactly these shingles, so
-    # array_min(hs) == array_min(transform(sh, md5_60)) — the oracle's
-    # bucket keys — and the exact-Jaccard re-rank still runs on the
-    # shingle STRINGS (the oracle counts strings, not hashes).
-    d = shingled.select("doc_id", "sh", F.array_min("hs").alias("minhash"))
-    # Capped-bucket expansion (same machinery as minhash/simhash):
-    # collect each min-shingle bucket; oversized buckets sub-split by
-    # secondary hash (capped_pair_array). Join input stays O(n),
-    # per-bucket pair work bounded at n·cap.
-    small = (
-        d.groupBy("minhash")
-        .agg(F.collect_list(F.struct("doc_id", "sh")).alias("docs"))
-        .filter(F.size("docs") >= 2)
-    )
-    return (
-        small.select(
-            F.explode(
-                capped_pair_array(
-                    F.col("docs"), "doc_id", "sh", "doc_a", "doc_b"
-                )
-            ).alias("p")
-        )
-        .select(
-            "p.doc_a",
-            "p.doc_b",
-            F.round(jaccard(F.col("p.pa"), F.col("p.pb")), 4).alias(
-                "jaccard_sim"
-            ),
-        )
     )
 
 
@@ -635,75 +316,6 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).limit(100)
 
 
-N_SIMHASH_BITS = 64
-N_BANDS = 4
-BAND_BITS = N_SIMHASH_BITS // N_BANDS
-# Candidate gate: banded collisions are kept only at hamming distance
-# ≤ this. Part of the staged pair frame's operating point, so it is
-# embedded in the simhash_pairs artifact key (a retune must produce a
-# fresh frame, not serve the stale cached one).
-SIMHASH_MAX_HAMMING = 8
-
-
-def simhash_pair_frame(shingled: DataFrame) -> DataFrame:
-    """Banded-SimHash near-dup pairs over a :func:`shingle_frame` (the
-    operator behind ``q_simhash_dedup``): 64-bit majority signature
-    over 3-shingle features, 4×16-bit bands, candidates kept at
-    hamming distance ≤ ``SIMHASH_MAX_HAMMING``. Output:
-    (doc_a, doc_b, hamming), uncapped."""
-    # hs is the distinct md5_60 set of exactly these shingles, and the
-    # bit census is order- and duplicate-set-insensitive, so
-    # simhash64(hs) == simhash64(transform(distinct(sh), md5_60)).
-    sigs = shingled.select("doc_id", simhash64(F.col("hs")).alias("sig"))
-    # The signature is one long, so it rides along into the buckets —
-    # no join-back (and no recomputation of the UDF stage) needed.
-    bands = sigs.select(
-        "doc_id",
-        "sig",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftrightunsigned("sig", b * BAND_BITS)
-                        .bitwiseAND(F.lit((1 << BAND_BITS) - 1))
-                        .alias("key"),
-                    )
-                    for b in range(N_BANDS)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "sig", "bk.band", "bk.key")
-    small = (
-        bands.groupBy("band", "key")
-        .agg(F.collect_list(F.struct("doc_id", "sig")).alias("docs"))
-        .filter(F.size("docs") >= 2)
-    )
-    return (
-        small.select(
-            F.explode(
-                capped_pair_array(
-                    F.col("docs"),
-                    "doc_id",
-                    "sig",
-                    "doc_a",
-                    "doc_b",
-                    seed_col=F.col("band"),
-                )
-            ).alias("p")
-        )
-        .select(
-            "p.doc_a",
-            "p.doc_b",
-            F.bit_count(
-                F.col("p.pa").bitwiseXOR(F.col("p.pb"))
-            ).alias("hamming"),
-        )
-        .dropDuplicates(["doc_a", "doc_b"])
-        .filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
-    )
-
-
 def _simhash_oracle_sql() -> str:
     """DuckDB oracle for the banded-SimHash path: features are md5_60
     shingle hashes (engine-neutral, < 2^60 so bits 60-63 are zero both
@@ -760,108 +372,6 @@ def q_simhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda: simhash_pair_frame(doc_shingle_frame(spark, sf_dir)),
     )
     return pairs.orderBy("hamming", "doc_a", "doc_b").limit(100)
-
-
-# The SHIPPED sign-LSH operating point (audited by q_ann_recall's
-# sweep alongside its neighbors, so a retune here is automatically
-# what gets measured).
-#
-# Operating point: 16 bits / hamming<=4 measured recall@10 = 0.2 at
-# sf0.1 — the corpus's true top-10 sits at cosine 0.27-0.41, where
-# 16-bit signatures are near-random relative to the probe (P(bit agree)
-# = 1 - angle/pi ~ 0.60). The shipped point is now 128 planes packed as
-# 4x32-bit words (sign_words) with radius 55: measured against the exact
-# top-10, recall@10 = 1.0 at sf0.1 (13.9% of the corpus as candidates),
-# 0.9 at sf0.01 (11.2%), 0.5 at sf0.001 (a 500-vector corpus is too
-# sparse for any radius to separate — the sweep table shows it
-# honestly). The sweep (q_ann_recall) now also emits n_candidates per
-# operating point, so the recall-vs-scan-cost trade is a recorded
-# number, not prose.
-LSH_BITS = 128
-LSH_HAMMING = 55
-LSH_WORD_BITS = 32
-LSH_WORDS = LSH_BITS // LSH_WORD_BITS
-
-
-def lsh_sig_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(vec_id, v, sig) — every corpus vector with its 128-bit sign-LSH
-    signature (4×32-bit words over the seeded ±1 planes), staged once
-    per corpus. This IS the at-rest layout the q_ann_lsh docstring
-    describes — a vector store keeps the signature column beside the
-    vectors so a probe scans signatures, not matmuls — so the per-call
-    Arrow projection (one corpus-wide numpy matmul per invocation) moves
-    into the once-per-corpus builder, exactly like the
-    simhash/embed-neardup signature stages (builder Arrow node pinned by
-    test_staged_builders_keep_their_arrow_stages). Operating point (bits
-    × word-bits, plane seed) lives in the key; signatures are
-    integer-grid exact, so the staged frame is bit-identical to the live
-    construction at any partitioning."""
-    return corpus_artifact(
-        spark,
-        sf_dir,
-        f"lsh_sigs:{LSH_BITS}x{LSH_WORD_BITS}:s42",
-        lambda: _lsh_sig_live(spark, sf_dir),
-    )
-
-
-def _lsh_sig_live(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The live (vec_id, v, sig) construction :func:`lsh_sig_frame`
-    stages — named so the builder-Arrow plan pin can see it."""
-    # spread() before the signature matmul: a one-file embeddings
-    # table arrives as ONE partition and the Arrow UDF would run
-    # the whole corpus serially.
-    e = spread(_t(spark, sf_dir, "embeddings")).select(
-        "vec_id", as_double(F.col("embedding")).alias("v")
-    )
-    planes = random_hyperplanes(LSH_BITS, 64)
-    return e.withColumn(
-        "sig", sign_words(F.col("v"), planes, LSH_WORD_BITS)
-    )
-
-
-def ann_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sign-LSH candidate frame for the vec_id=0 probe: every corpus
-    vector within ``LSH_HAMMING`` of the probe's 128-bit signature
-    (4×32-bit words), with its hamming distance and exact cosine. One
-    signature matmul + one broadcast probe + one filter. Consumer:
-    ``ann_lsh`` / ``q_ann_lsh`` (the shipped single-tier search). The
-    q_ann_recall SWEEP deliberately does NOT reuse this frame — it
-    needs the IVF cluster column on the same rows, so it builds one
-    combined (cosine, hamming, cluster) scan of its own; both derive
-    hamming from the same ``sign_words``/LSH_BITS construction, and
-    the sweep audits the shipped LSH_HAMMING radius by constant, so a
-    retune here is still what gets measured.
-
-    100 TB shape: the signature column is 16 bytes/vector, so the
-    hamming prefilter is a scan of signatures only (a 32× byte cut
-    vs the 64-dim double vectors) and the exact cosine re-rank
-    touches the surviving ~10-15% — this is the signature-scan tier;
-    partition-pruned reads belong to the IVF tier (q_ann_ivf)."""
-    sigs = lsh_sig_frame(spark, sf_dir)
-    q = sigs.filter(F.col("vec_id") == 0).select(
-        F.col("v").alias("qv"), F.col("sig").alias("qsig")
-    )
-    return (
-        sigs.filter(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(q))
-        .withColumn(
-            "hamming", hamming_words(F.col("sig"), F.col("qsig"))
-        )
-        .filter(F.col("hamming") <= LSH_HAMMING)
-        .select(
-            "vec_id",
-            "hamming",
-            F.round(cosine(F.col("v"), F.col("qv")), 4).alias("cos_sim"),
-        )
-    )
-
-
-def ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        ann_lsh_candidates(spark, sf_dir)
-        .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-        .limit(10)
-    )
 
 
 def _lsh_oracle_sql() -> str:
@@ -926,7 +436,11 @@ def _lsh_oracle_sql() -> str:
     doc="Top-10 cosine neighbors of one probe among 128-bit sign-LSH candidates.",
 )
 def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return ann_lsh(spark, sf_dir)
+    return (
+        ann_lsh_candidates(spark, sf_dir)
+        .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
+        .limit(10)
+    )
 
 
 def _embed_quantize_oracle_sql() -> str:
@@ -967,36 +481,12 @@ def _embed_quantize_oracle_sql() -> str:
     doc="Top-10 vectors by int8-quantized cosine, beside the exact cosine.",
 )
 def q_embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # q_i = floor(x_i*127/max|x| + 0.5): one IEEE divide for the scale and
-    # one multiply + floor per component, deterministic across engines.
-    e = spread(_t(spark, sf_dir, "embeddings")).select(
-        "vec_id", as_double(F.col("embedding")).alias("v")
-    )
-    maxabs = F.array_max(F.transform(F.col("v"), F.abs))
-    sc = F.lit(127.0) / F.greatest(maxabs, F.lit(1e-12))
-    quant = e.select(
-        "vec_id",
-        "v",
-        F.transform(
-            F.col("v"), lambda x: F.floor(x * sc + F.lit(0.5))
-        ).alias("q"),
-    )
+    e = embedding_frame(spark, sf_dir)
+    quant = e.select("vec_id", "v", int8_grid(F.col("v")).alias("q"))
     p = quant.filter(F.col("vec_id") == 0).select(
         F.col("v").alias("pv"), F.col("q").alias("pq")
     )
-
-    def idot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-
-    qa, pq = F.col("q"), F.col("pq")
-    cos_q = idot(qa, pq).cast("double") / (
-        F.sqrt(idot(qa, qa).cast("double"))
-        * F.sqrt(idot(pq, pq).cast("double"))
-    )
+    cos_q = int8_cos(F.col("q"), F.col("pq"))
     return (
         quant.filter(F.col("vec_id") != 0)
         .crossJoin(F.broadcast(p))
@@ -1009,69 +499,6 @@ def q_embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy(F.desc("cos_q"), F.asc("vec_id"))
         .limit(10)
-    )
-
-
-# The SHIPPED IVF operating point (swept by q_ann_recall).
-IVF_K = 16
-IVF_ITERS = 2
-IVF_NPROBE = 4
-
-# The fitted coarse quantizer is a MODEL (k×dim floats), not data:
-# real IVF systems train it once per corpus and amortize it across
-# every query AND process, so the engine stages it through the
-# artifact store (census_artifact: weakref'd session memo + JSON
-# sidecar on disk, fingerprint-keyed), so a fresh process does not
-# refit it.
-
-
-def ivf_centroids(spark: SparkSession, sf_dir: str, e: DataFrame):
-    """The staged coarse quantizer for the corpus — shared by every
-    IVF consumer (the q_ann_recall sweep, the on-disk index build), so
-    a sweep over nprobe costs zero refits and a fresh process reloads
-    the model instead of re-fitting."""
-    return census_artifact(
-        spark,
-        sf_dir,
-        f"ivf_centroids:{IVF_K}:{IVF_ITERS}",
-        lambda: ivf_fit(
-            e, "v", "vec_id", k=IVF_K, iters=IVF_ITERS
-        ).tolist(),
-    )
-
-
-def cached_ivf_index(spark: SparkSession, sf_dir: str) -> str:
-    """The ON-DISK IVF index for the corpus — built once per CORPUS
-    into the artifact store and reused by every consumer and process
-    (the q_ann_recall sweep's IVF tier, ad-hoc ivf_search_index calls),
-    so the sweep audits the REAL shipped artifact (partitionBy(cluster)
-    layout + centroid sidecar, operators/ivf_index.py) instead of an
-    in-plan filter twin. Reuses the staged ``ivf_centroids`` quantizer,
-    so every IVF consumer shares one model and comparable cluster ids.
-    Staged through ``artifact_directory``, inheriting the store's
-    ``flock`` build lock (concurrent consumers, threads or processes,
-    never double-write the index), its atomic publish,
-    superseded-generation removal (no leaked temp-dir copies), and
-    corpus-fingerprint keying: a regenerated corpus rebuilds instead
-    of serving a stale index."""
-    from prueba_tecnica_analista_etl_spark.operators.ivf_index import (
-        ivf_write_index,
-    )
-
-    def _build(path: str) -> None:
-        e = spread(_t(spark, sf_dir, "embeddings")).select(
-            "vec_id", as_double(F.col("embedding")).alias("v")
-        )
-        ivf_write_index(
-            spread(_t(spark, sf_dir, "embeddings")),
-            path,
-            k=IVF_K,
-            iters=IVF_ITERS,
-            centroids=ivf_centroids(spark, sf_dir, e),
-        )
-
-    return artifact_directory(
-        sf_dir, f"ivf_index:{IVF_K}:{IVF_ITERS}", _build
     )
 
 
@@ -1090,10 +517,6 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # row-identical (A/B-proven) while the per-call cost drops from a
     # corpus-wide matmul to a directory-pruned read of nprobe/k of the
     # index bytes — the 100 TB read path executed literally.
-    from prueba_tecnica_analista_etl_spark.operators.ivf_index import (
-        ivf_search_index,
-    )
-
     qv = (
         _t(spark, sf_dir, "embeddings")
         .filter(F.col("vec_id") == 0)
@@ -1160,9 +583,9 @@ def _embed_neardup_oracle_sql() -> str:
 def q_embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The scored pair frame is corpus-deterministic (seeded planes,
     # integer-grid signatures, capped buckets) and pair-census sized —
-    # staged once per corpus like cached_minhash_pairs; the
-    # banded construction below runs for real on first build and
-    # stays plan/parity-pinned by the test suite.
+    # staged once per corpus like cached_minhash_pairs; the banded
+    # construction (_embed_neardup_pairs_live) runs for real on first
+    # build and stays plan/parity-pinned by the test suite.
     # The corpus plants no true duplicates (max pairwise cosine ~0.51),
     # so the query reports the most similar candidate pairs.
     pairs = corpus_artifact(
@@ -1172,65 +595,6 @@ def q_embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda: _embed_neardup_pairs_live(spark, sf_dir),
     )
     return pairs.orderBy(F.desc("cos_sim"), "vec_a", "vec_b").limit(100)
-
-
-EMBED_ND_BITS = 32
-
-
-def _embed_neardup_pairs_live(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    n_bits, band_bits, n_bands = EMBED_ND_BITS, 8, 4
-    e = spread(_t(spark, sf_dir, "embeddings")).select(
-        "vec_id", as_double(F.col("embedding")).alias("v")
-    )
-    planes = random_hyperplanes(n_bits, 64)
-    sigs = e.withColumn("sig", sign_bits(F.col("v"), planes))
-    bands = sigs.select(
-        "vec_id",
-        "v",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftrightunsigned("sig", b * band_bits)
-                        .bitwiseAND(F.lit((1 << band_bits) - 1))
-                        .alias("key"),
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("vec_id", "v", "bk.band", "bk.key")
-    small = (
-        bands.groupBy("band", "key")
-        .agg(F.collect_list(F.struct("vec_id", "v")).alias("vecs"))
-        .filter(F.size("vecs") >= 2)
-    )
-    pairs = (
-        small.select(
-            F.explode(
-                capped_pair_array(
-                    F.col("vecs"),
-                    "vec_id",
-                    "v",
-                    "vec_a",
-                    "vec_b",
-                    seed_col=F.col("band"),
-                )
-            ).alias("p")
-        )
-        .select(
-            "p.vec_a",
-            "p.vec_b",
-            F.round(cosine(F.col("p.pa"), F.col("p.pb")), 4).alias(
-                "cos_sim"
-            ),
-        )
-        .dropDuplicates(["vec_a", "vec_b"])
-    )
-    return pairs
 
 
 @query(
@@ -1252,11 +616,6 @@ def _embed_neardup_pairs_live(
     doc="Media-type census of metadata extracted from binary assets.",
 )
 def q_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from prueba_tecnica_analista_etl_spark.multimodal import (
-        extract_metadata,
-        fake_assets,
-    )
-
     # The metadata frame is corpus-deterministic exactly like the
     # feature frame q_multimodal_pipeline stages —
     # extract-once-store-metadata: the Arrow mapInPandas header-sniff
@@ -1280,19 +639,6 @@ def q_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("media_type")
     )
-
-
-def _stream_session(spark: SparkSession) -> SparkSession:
-    """The session the stream queries run on: a memoized clone of
-    ``spark`` with 4 shuffle partitions. Stateful ops run exactly
-    `shuffle.partitions` state tasks per micro-batch (no AQE in
-    streaming), so the session default (sized for batch shuffles)
-    over-fragments these replays' tiny state — measured 2× slower at
-    32 than 8, and 4 is the sweet spot. The clone shares the
-    SparkContext but not the SQL conf, so the caller's session is
-    never mutated. At scale this constant is the state-store sizing
-    knob and is pinned by the first checkpoint."""
-    return session_clone(spark, {"spark.sql.shuffle.partitions": "4"})
 
 
 @query(
@@ -1491,21 +837,11 @@ def _corpus_curate_oracle_sql() -> str:
     doc="Curated corpus: length gate, exact dedup, then MinHash near-duplicate purge.",
 )
 def q_corpus_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from prueba_tecnica_analista_etl_spark.pipelines.corpus import (
-        exact_dedup,
-        near_dup_purge,
-        quality_gate,
-    )
-
     docs = _t(spark, sf_dir, "documents")
     gated = quality_gate(docs, min_tokens=4)
     deduped = exact_dedup(gated)
     # the UNCAPPED pair frame (memoized per session+corpus like the
     # IVF quantizer) — never the reporting query's top-100
-    from prueba_tecnica_analista_etl_spark.pipelines.corpus import (
-        cached_minhash_pairs,
-    )
-
     pairs = cached_minhash_pairs(spark, sf_dir)
     return near_dup_purge(deduped, pairs).select(
         "doc_id", "lang", "n_tokens"
@@ -1526,8 +862,6 @@ def _multimodal_pipeline_oracle_sql() -> str:
     image corpora take the PIL pixel tier, which this oracle does
     not model (the oracle, like every other, is defined against the
     harness corpus)."""
-    from prueba_tecnica_analista_etl_spark.multimodal import FEATURE_DIM
-
     assert FEATURE_DIM == 16, "nibble-histogram oracle is specific to 16"
     dim = FEATURE_DIM
     # DuckDB hex() emits UPPERCASE digits (unlike its md5()).
@@ -1584,14 +918,6 @@ def _multimodal_pipeline_oracle_sql() -> str:
     shape=Shape(has=("TakeOrderedAndProject",), max_exchanges=0),
 )
 def q_multimodal_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from prueba_tecnica_analista_etl_spark.functions.vectors import (
-        cosine,
-    )
-    from prueba_tecnica_analista_etl_spark.multimodal import (
-        extract_features,
-        fake_assets,
-    )
-
     # The extracted feature frame is corpus-deterministic (the stub
     # extractor is a seeded function of the asset bytes) — staged
     # ONCE per corpus: extract-once-store-features is exactly
@@ -1649,15 +975,6 @@ def q_multimodal_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Live users with their last event, from a replayed change log through the CDC sink.",
 )
 def q_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from prueba_tecnica_analista_etl_spark.streaming.replay import (
-        replay_as_stream,
-        write_replay_files,
-    )
-    from prueba_tecnica_analista_etl_spark.streaming.upsert_sink import (
-        DATA,
-        foreach_batch_upsert,
-    )
-
     data_dir, schema = write_replay_files(spark, sf_dir, "events")
     s = _stream_session(spark)
     stream = (
@@ -1762,11 +1079,6 @@ def _stream_neardup_oracle_sql() -> str:
     doc="Docs a streaming near-duplicate gate admits from a replayed document feed.",
 )
 def q_stream_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from prueba_tecnica_analista_etl_spark.streaming.neardup import (
-        accepted_ids,
-        foreach_batch_neardup_gate,
-    )
-
     data_dir, schema = write_replay_files(
         spark, sf_dir, "documents", time_col="doc_id"
     )
@@ -1858,12 +1170,6 @@ def q_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact: the truth frame is built once per corpus, so its O(df²)
     exhaustive side is a one-time cost.
     """
-    from prueba_tecnica_analista_etl_spark.pipelines.corpus import (
-        cached_minhash_pairs,
-    )
-    from prueba_tecnica_analista_etl_spark.plans.extensions_pipeline import (
-        pair_combos,
-    )
 
     def _truth() -> DataFrame:
         d = doc_shingle_frame(spark, sf_dir).select("doc_id", "hs")
@@ -1959,9 +1265,7 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     into numbers per method (method, n_exact, n_hit, recall,
     n_candidates) the way q_lsh_recall does for the dedup tier.
     Ground truth is the exact brute-force top-10 (q_similarity_topk's
-    frame); hits are inner joins on vec_id. The probe-side cost is
-    three top-10 frames — at scale each is TakeOrderedAndProject over
-    its (pruned) scan, and the audit adds joins of 10-row frames.
+    frame); hits are inner joins on vec_id.
 
     Reading the numbers: the corpus's true top-10 sits at MODERATE
     cosine (0.27-0.41 at sf0.1), the adversarial regime for sign-LSH —
@@ -1999,262 +1303,6 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     return census.orderBy("ord").drop("ord")
 
 
-def ann_recall_census_live(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """LIVE recall-census construction q_ann_recall stages per corpus
-    (keeps ``ord`` so the staged frame re-sorts deterministically
-    after a parquet round-trip)."""
-    from prueba_tecnica_analista_etl_spark.plans.extensions_text import (
-        q_similarity_topk,
-    )
-
-    exact = q_similarity_topk(spark, sf_dir).select("vec_id")
-    tiers, top = ann_sweep_parts(spark, sf_dir)
-    hits = top.join(exact, "vec_id").groupBy("ord").agg(
-        F.count(F.lit(1)).alias("n_hit")
-    )
-    # Per-point scan cost — constant across a point's top-10 rows, so
-    # max == the value; a point with zero candidates has no rows and
-    # coalesces to 0 below.
-    cands = top.groupBy("ord").agg(
-        F.max("n_candidates").alias("n_candidates")
-    )
-    tiers_dim = spark.createDataFrame(
-        [(i, m, pt, sh) for i, (m, pt, sh) in enumerate(tiers)],
-        "ord int, method string, operating_point string, shipped boolean",
-    )
-    return (
-        tiers_dim.join(F.broadcast(hits), "ord", "left")
-        .join(F.broadcast(cands), "ord", "left")
-        .crossJoin(
-            F.broadcast(exact.agg(F.count(F.lit(1)).alias("n_exact")))
-        )
-        .select(
-            "method",
-            "operating_point",
-            "shipped",
-            "n_exact",
-            F.coalesce(F.col("n_hit"), F.lit(0)).alias("n_hit"),
-            F.when(
-                F.col("n_exact") > 0,
-                F.coalesce(F.col("n_hit"), F.lit(0)).cast("double")
-                / F.col("n_exact").cast("double"),
-            ).alias("recall"),
-            F.coalesce(F.col("n_candidates"), F.lit(0)).alias(
-                "n_candidates"
-            ),
-            "ord",
-        )
-    )
-
-
-def ann_sweep_tiers() -> "list[tuple[str, str, bool]]":
-    """The sweep's (method, operating_point, shipped) row list, a pure
-    function of the shipped constants — q_ann_recall derives its census
-    artifact KEY from this without building any frame, so a warm-corpus
-    run never touches the embeddings table at all. Order = registry order:
-    sign-LSH radii ascending, then IVF probe counts ascending, then the
-    int8 compressed-scan tier (one point — the tier has no knob, it
-    re-ranks the WHOLE corpus on quantized cosine, so its n_candidates
-    is honestly the corpus size and its recall measures pure
-    quantization error)."""
-    lsh_radii = sorted({LSH_HAMMING - 2, LSH_HAMMING, LSH_HAMMING + 2})
-    nprobes = sorted({IVF_NPROBE // 2, IVF_NPROBE, IVF_NPROBE * 2})
-    return (
-        [
-            ("sign_lsh", f"hamming<={r}", r == LSH_HAMMING)
-            for r in lsh_radii
-        ]
-        + [
-            ("ivf_disk", f"nprobe={p}/{IVF_K}", p == IVF_NPROBE)
-            for p in nprobes
-        ]
-        + [("int8_quant", "full-scan int8 rerank", True)]
-    )
-
-
-def ann_sweep_parts(
-    spark: SparkSession, sf_dir: str
-) -> "tuple[list[tuple[str, str, bool]], DataFrame]":
-    """LIVE construction of the recall sweep: returns ``(tiers,
-    top)`` where ``tiers`` is the (method, operating_point, shipped)
-    row list and ``top`` is the UNSTAGED per-point top-10 frame —
-    q_ann_recall stages the census built from it per corpus;
-    tests plan-pin THIS frame directly for the properties the staging
-    would otherwise hide (the IVF tier's cluster predicate is a
-    PARTITION filter over the on-disk index — the audited read path
-    IS the 100 TB read path)."""
-    import numpy as np
-    from pyspark.sql import Window
-
-    from prueba_tecnica_analista_etl_spark.operators.ivf_index import (
-        _read_data,
-        ivf_probe_clusters,
-    )
-
-    # Sweep AROUND the shipped constants (LSH_HAMMING, IVF_NPROBE), so
-    # a retune moves both the shipped row and its neighbors — no drift
-    # between the measured table and the shipped config. ONE corpus
-    # scan serves the three sign-LSH points (cosine + signature
-    # hamming in a single pass) and ONE partition-pruned scan of the
-    # on-disk IVF index serves the three nprobe points (the probe
-    # sets nest — argsort order — so the union filter reads
-    # max(nprobe)/k of the index's partitions and each point is a
-    # row-level membership predicate over that scan). Per-point
-    # top-10 is one WindowGroupLimit shuffle over the exploded
-    # (point, candidate) rows; the recall census is a join of 10-row
-    # frames. (The first sweep form ran one scan+matmul job PER
-    # point — 6x the necessary work, measured 5.3 s at sf0.1 vs
-    # ~1.5 s for the shared-scan form.)
-    lsh_radii = sorted({LSH_HAMMING - 2, LSH_HAMMING, LSH_HAMMING + 2})
-    nprobes = sorted({IVF_NPROBE // 2, IVF_NPROBE, IVF_NPROBE * 2})
-
-    e = spread(_t(spark, sf_dir, "embeddings")).select(
-        "vec_id", as_double(F.col("embedding")).alias("v")
-    )
-    planes = random_hyperplanes(LSH_BITS, 64)
-    sigs = e.withColumn(
-        "sig", sign_words(F.col("v"), planes, LSH_WORD_BITS)
-    )
-
-    # The probe: vector + signature words, one row.
-    row = sigs.filter(F.col("vec_id") == 0).select("v", "sig").first()
-    qsig = [int(w) for w in row["sig"]]
-    qv = np.asarray([float(x) for x in row["v"]], dtype=np.float64)
-    qlit = F.array(*[F.lit(float(x)) for x in qv])
-
-    # Row-level prefilter on the WIDEST radius BEFORE the cosine: only
-    # rows inside some operating point can ever rank, and the hamming
-    # test is integer bit arithmetic on the already-computed signature
-    # while the cosine is the dim-length dot product — at 100 TB this
-    # is the difference between a full matmul scan and a candidate-
-    # sized one.
-    ham = sum(
-        F.bit_count(F.col("sig")[w].bitwiseXOR(F.lit(int(qsig[w])))).cast(
-            "long"
-        )
-        for w in range(LSH_WORDS)
-    )
-    lsh_scored = (
-        sigs.filter(F.col("vec_id") != 0)
-        .select("vec_id", "v", ham.alias("ham"))
-        .filter(F.col("ham") <= max(lsh_radii))
-        .select(
-            "vec_id",
-            F.round(cosine(F.col("v"), qlit), 4).alias("cos_sim"),
-            "ham",
-        )
-    )
-
-    # The IVF tier audits the SHIPPED artifact: the partitionBy(cluster)
-    # on-disk index (operators/ivf_index.py), probed via the staged
-    # quantizer (ivf_centroids — the SAME model the index's sidecar
-    # stores, so probing via the census-cached copy instead of
-    # re-reading the sidecar parquet saves a driver read without
-    # changing a single cluster id) — the cluster predicate is a
-    # PARTITION filter (directory pruning), so the audited read path
-    # IS the 100 TB read path.
-    index_path = cached_ivf_index(spark, sf_dir)
-    probe_order = ivf_probe_clusters(
-        ivf_centroids(spark, sf_dir, e),
-        qv,
-        max(nprobes),
-    )
-    ivf_scored = (
-        _read_data(spark, index_path)
-        .filter(
-            F.col("cluster").isin(probe_order) & (F.col("vec_id") != 0)
-        )
-        .select(
-            "vec_id",
-            F.round(cosine(F.col("vector"), qlit), 4).alias("cos_sim"),
-            "cluster",
-        )
-    )
-
-    tiers = ann_sweep_tiers()  # the shared single source of truth
-    lsh_structs = [F.col("ham") <= r for r in lsh_radii]
-    ivf_structs = [
-        F.col("cluster").isin(probe_order[:p]) for p in nprobes
-    ]
-
-    def _points(scored: DataFrame, structs: list, base: int) -> DataFrame:
-        tier_array = F.array(
-            *[
-                F.struct(F.lit(base + i).alias("ord"), m.alias("member"))
-                for i, m in enumerate(structs)
-            ]
-        )
-        return scored.select(
-            "vec_id",
-            "cos_sim",
-            F.explode(F.filter(tier_array, lambda t: t["member"])).alias(
-                "t"
-            ),
-        ).select("vec_id", "cos_sim", F.col("t.ord").alias("ord"))
-
-    # The int8 compressed-scan tier (q_embed_quantize's storage
-    # layout audited by the same sweep): rank the WHOLE corpus by
-    # QUANTIZED cosine against the quantized probe — no prefilter, so
-    # its n_candidates is honestly the corpus size; its recall
-    # isolates pure quantization error (1.0 on the harness corpora).
-    # At 100 TB this is the 8x-smaller-bytes full-scan tier between
-    # the 16-byte signature scan and the partition-pruned IVF read.
-    assert len(tiers) == len(lsh_structs) + len(ivf_structs) + 1
-    quant_ord = len(lsh_structs) + len(ivf_structs)
-    pq = np.floor(
-        qv * (127.0 / max(np.abs(qv).max(), 1e-12)) + 0.5
-    ).astype(np.int64)
-    pq_lit = F.array(*[F.lit(int(x)) for x in pq])
-    maxabs = F.array_max(F.transform(F.col("v"), F.abs))
-    sc = F.lit(127.0) / F.greatest(maxabs, F.lit(1e-12))
-    qcol = F.transform(F.col("v"), lambda x: F.floor(x * sc + F.lit(0.5)))
-
-    def _idot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-
-    quant_cos = _idot(qcol, pq_lit).cast("double") / (
-        F.sqrt(_idot(qcol, qcol).cast("double"))
-        * F.sqrt(_idot(pq_lit, pq_lit).cast("double"))
-    )
-    quant_points = e.filter(F.col("vec_id") != 0).select(
-        "vec_id",
-        F.round(quant_cos, 4).alias("cos_sim"),
-        F.lit(quant_ord).alias("ord"),
-    )
-
-    exploded = (
-        _points(lsh_scored, lsh_structs, 0)
-        .unionByName(_points(ivf_scored, ivf_structs, len(lsh_structs)))
-        .unionByName(quant_points)
-    )
-    w = Window.partitionBy("ord").orderBy(
-        F.desc("cos_sim"), F.asc("vec_id")
-    )
-    # n_candidates = the operating point's SCAN COST (how many rows
-    # survive its predicate and pay the exact cosine), so the
-    # recall-vs-cost trade is recorded as numbers.
-    # Counted over the same partitionBy("ord") exchange the ranking
-    # window uses (an unordered count window must see the FULL
-    # partition, so it rides below the rank's group-limit — Spark
-    # keeps it correct by construction), then each surviving top-10
-    # row carries its point's count.
-    wc = Window.partitionBy("ord")
-    top = (
-        exploded.withColumn(
-            "n_candidates", F.count(F.lit(1)).over(wc)
-        )
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 10)
-    )
-    return tiers, top
-
-
 def _dup_matrix_oracle_sql() -> str:
     """DuckDB oracle: the SAME capped banded-minhash scored-pairs
     chain as q_minhash_dedup, joined to each endpoint's source and
@@ -2286,10 +1334,6 @@ def _dup_matrix_oracle_sql() -> str:
     doc="Near-duplicate pair count and similarity mass per unordered source pair.",
 )
 def q_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from prueba_tecnica_analista_etl_spark.pipelines.corpus import (
-        cached_minhash_pairs,
-    )
-
     pairs = cached_minhash_pairs(spark, sf_dir)
     src = _t(spark, sf_dir, "documents").select("doc_id", "source")
     m = (
@@ -2322,183 +1366,6 @@ def q_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("j4").alias("sum_j_e4"),
         )
         .orderBy("source_a", "source_b")
-    )
-
-
-# ---------------------------------------------------------------------------
-# SemDeDup — semantic (embedding-space) dedup, cluster-then-purge
-# ---------------------------------------------------------------------------
-
-# Operating point for the semantic-dedup tier (the SemDeDup composition
-# from public pretraining-pipeline literature: cluster the embedding
-# space, purge near-identical points WITHIN each cluster, never compare
-# across clusters). All three knobs are embedded in the staged artifact
-# keys, so a retune can never serve a stale frame.
-SEMDEDUP_K = 16  # coarse clusters (per-cluster pair work = the cost knob)
-SEMDEDUP_T = 0.30  # quantized-cosine purge threshold. The harness
-# corpus plants no true embedding dups (max pairwise cos ~0.53), so
-# the shipped threshold sits where the corpus's own similarity tail
-# lives — the knob a real pipeline retunes to ~0.95 for genuinely
-# duplicated embeddings.
-# DERIVED from the constants (never hand-written), so a retune of any
-# knob can never serve a stale staged frame.
-_SEMDEDUP_TAG = (
-    f"k{SEMDEDUP_K}:t{int(round(SEMDEDUP_T * 100)):03d}:c{BUCKET_CAP}"
-)
-
-
-def _int8_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(vec_id, q) — per-vector symmetric int8 quantization of the
-    embeddings table (q_embed_quantize's grid: floor(x·127/maxabs +
-    0.5), exact BIGINT components). Map-only; not worth staging."""
-    e = spread(_t(spark, sf_dir, "embeddings")).select(
-        "vec_id", as_double(F.col("embedding")).alias("v")
-    )
-    maxabs = F.array_max(F.transform(F.col("v"), F.abs))
-    sc = F.lit(127.0) / F.greatest(maxabs, F.lit(1e-12))
-    return e.select(
-        "vec_id",
-        F.transform(
-            F.col("v"), lambda x: F.floor(x * sc + F.lit(0.5))
-        ).alias("q"),
-    )
-
-
-def _iq_cos(a, b):
-    """Quantized cosine: exact int64 dots cast to double, one sqrt and
-    one divide per side — the single-IEEE-op determinism class, so
-    Spark and the SQL oracle produce bit-identical doubles."""
-
-    def idot(x, y):
-        return F.aggregate(
-            F.zip_with(x, y, lambda p, r: p * r),
-            F.lit(0).cast("long"),
-            lambda acc, p: acc + p,
-        )
-
-    return idot(a, b).cast("double") / (
-        F.sqrt(idot(a, a).cast("double"))
-        * F.sqrt(idot(b, b).cast("double"))
-    )
-
-
-def semdedup_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(vec_id, cid, q) — every vector assigned to its nearest seed
-    medoid by quantized cosine, staged once per corpus.
-
-    The coarse quantizer is the SEMDEDUP_K smallest vec_ids' int8
-    vectors (seed medoids, cid = rank by vec_id).  Deliberately NOT
-    the float k-means fit (ivf_centroids): an iterative float argmax
-    has no engine-neutral form (why q_ann_ivf is rows-only), while
-    seed medoids + integer-grid dots make the WHOLE semantic-dedup
-    tier oracle-checkable.  The cluster stage is swappable — at 100 TB
-    plug ivf_centroids in and the purge below is unchanged; the
-    harness ships the checkable form.  Scale shape: the k medoids are
-    a model-sized broadcast (census_artifact class), assignment is one
-    scan + one hash shuffle of (vec_id, k) scored rows for the
-    per-vector argmax window — never a global window."""
-    from pyspark.sql import Window
-
-    def build() -> DataFrame:
-        quant = _int8_quantized(spark, sf_dir)
-        # Model-sized collect: k int8 vectors. Only this build reads
-        # them, so they are not staged on their own.
-        seed_rows = [
-            (i, r["q"])
-            for i, r in enumerate(
-                quant.orderBy("vec_id").limit(SEMDEDUP_K).collect()
-            )
-        ]
-        seeds = spark.createDataFrame(
-            seed_rows, "cid int, sq array<long>"
-        )
-        scored = quant.crossJoin(F.broadcast(seeds)).select(
-            "vec_id",
-            "cid",
-            "q",
-            _iq_cos(F.col("q"), F.col("sq")).alias("cosq"),
-        )
-        w = Window.partitionBy("vec_id").orderBy(
-            F.desc("cosq"), F.asc("cid")
-        )
-        return (
-            scored.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("vec_id", "cid", "q")
-        )
-
-    return corpus_artifact(
-        spark, sf_dir, f"semdedup_assign:k{SEMDEDUP_K}", build
-    )
-
-
-def semdedup_pairs_for(assigned: DataFrame) -> DataFrame:
-    """(cid, vec_a, vec_b) — intra-cluster near-dup pairs at
-    quantized cosine ≥ SEMDEDUP_T over ANY ``(vec_id, cid, q)``
-    assignment frame: the quantizer-agnostic half of the SemDeDup
-    tier.  NO all-pairs anywhere: vectors only ever meet inside
-    their own cluster (one groupBy(cid) shuffle), and oversized
-    clusters are sub-split by capped_pair_array's seeded md5_60
-    chunk order (≤ BUCKET_CAP members per chunk → per-cluster work
-    O(n·cap), the same skew guard as every near-dup tier).
-    Cross-chunk pairs are the documented residual; at 100 TB the
-    cluster count scales with the corpus so clusters stay
-    cap-sized."""
-    grouped = assigned.groupBy("cid").agg(
-        F.collect_list(F.struct("vec_id", "q")).alias("vecs")
-    )
-    return (
-        grouped.select(
-            "cid",
-            F.explode(
-                capped_pair_array(
-                    F.col("vecs"),
-                    "vec_id",
-                    "q",
-                    "vec_a",
-                    "vec_b",
-                    seed_col=F.col("cid"),
-                )
-            ).alias("p"),
-        )
-        .select(
-            "cid",
-            "p.vec_a",
-            "p.vec_b",
-            _iq_cos(F.col("p.pa"), F.col("p.pb")).alias("cosq"),
-        )
-        .filter(F.col("cosq") >= F.lit(SEMDEDUP_T))
-        .select("cid", "vec_a", "vec_b")
-    )
-
-
-def semdedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The seed-medoid assignment's pair frame, staged once per
-    corpus (:func:`semdedup_pairs_for` over :func:`semdedup_assign`)."""
-    return corpus_artifact(
-        spark,
-        sf_dir,
-        f"semdedup_pairs:{_SEMDEDUP_TAG}",
-        lambda: semdedup_pairs_for(semdedup_assign(spark, sf_dir)),
-    )
-
-
-def semdedup_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(node, comp) — connected components over the intra-cluster
-    near-dup pairs; comp = min vec_id of the family.  The fixpoint is
-    eager (cluster_labels discipline), so it is staged per corpus;
-    survivors = comp representatives, purged = the rest."""
-    from prueba_tecnica_analista_etl_spark.operators.components import (
-        connected_components,
-    )
-
-    return corpus_artifact(
-        spark,
-        sf_dir,
-        f"semdedup_labels:{_SEMDEDUP_TAG}",
-        lambda: connected_components(
-            semdedup_pairs(spark, sf_dir), a="vec_a", b="vec_b"
-        ),
     )
 
 
@@ -2573,66 +1440,6 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         semdedup_assign(spark, sf_dir).select("vec_id", "cid"),
         semdedup_pairs(spark, sf_dir),
         semdedup_labels(spark, sf_dir),
-    )
-
-
-def semdedup_census_for(
-    assigned: DataFrame, pairs: DataFrame, labels: DataFrame
-) -> DataFrame:
-    """Per-cluster purge census from an ``(vec_id, cid)`` assignment,
-    its pair frame, and its component labels — the quantizer-agnostic
-    census q_semdedup ships.  Survivor rule: every node keeps only if
-    it IS its component's min id."""
-    purged = labels.filter(F.col("node") != F.col("comp")).select(
-        F.col("node").alias("vec_id")
-    )
-    base = assigned.groupBy("cid").agg(
-        F.count(F.lit(1)).alias("n_vecs")
-    )
-    ecnt = pairs.groupBy("cid").agg(
-        F.count(F.lit(1)).alias("n_dup_pairs")
-    )
-    pcnt = (
-        assigned.join(purged, "vec_id", "left_semi")
-        .groupBy("cid")
-        .agg(F.count(F.lit(1)).alias("n_purged"))
-    )
-    zero = F.lit(0).cast("long")
-    return (
-        base.join(ecnt, "cid", "left")
-        .join(pcnt, "cid", "left")
-        .select(
-            F.col("cid").alias("cluster"),
-            "n_vecs",
-            F.coalesce(F.col("n_dup_pairs"), zero).alias("n_dup_pairs"),
-            F.coalesce(F.col("n_purged"), zero).alias("n_purged"),
-            (F.col("n_vecs") - F.coalesce(F.col("n_purged"), zero)).alias(
-                "n_kept"
-            ),
-        )
-        .orderBy("cluster")
-    )
-
-
-def semdedup_purge_census(assigned: DataFrame) -> DataFrame:
-    """One-call SemDeDup purge census for ANY ``(vec_id, cid, q)``
-    assignment frame — the composition the q_semdedup docstring
-    promises is swappable: feed the seed-medoid assignment (the
-    oracle-checkable harness form) OR a float k-means assignment
-    (``ivf_centroids`` + ``assign_clusters`` — the 100 TB quantizer,
-    rows-only territory like q_ann_ivf) and get the identical purge
-    semantics downstream.  Eager (runs the CC fixpoint); callers
-    wanting per-corpus staging use the semdedup_pairs/labels
-    artifacts instead.  Proven by
-    tests/test_scale_extensions.py::test_semdedup_with_ivf_quantizer."""
-    from prueba_tecnica_analista_etl_spark.operators.components import (
-        connected_components,
-    )
-
-    pairs = semdedup_pairs_for(assigned).localCheckpoint()
-    labels = connected_components(pairs, a="vec_a", b="vec_b")
-    return semdedup_census_for(
-        assigned.select("vec_id", "cid"), pairs, labels
     )
 
 

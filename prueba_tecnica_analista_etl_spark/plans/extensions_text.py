@@ -6,57 +6,33 @@ fingerprinting, brute-force cosine top-k).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from prueba_tecnica_analista_etl_spark.artifacts import (
-    census_artifact,
-    corpus_artifact,
-)
+from prueba_tecnica_analista_etl_spark.artifacts import census_artifact
 from prueba_tecnica_analista_etl_spark.functions.text import (
+    NON_ASCII_RE,
     STOPWORDS,
     fingerprint,
     n_tokens,
+    nfc_normalize,
     predict_lang,
     stopword_hits,
     tokens,
 )
-from prueba_tecnica_analista_etl_spark.functions.vectors import (
-    as_double,
-    cosine,
-)
 from prueba_tecnica_analista_etl_spark.operators.dedupe import keep_first
-from prueba_tecnica_analista_etl_spark.plans.queries import Shape, _t, query
-from prueba_tecnica_analista_etl_spark.sources.tables import spread
-
-
-def doc_term_tf_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, source, term, tf) over ``documents`` — lower+space
-    tokens, empties dropped — staged ONCE per corpus: the term
-    family's shared feature frame. q_tfidf (tf side), q_token_histogram
-    (term census), q_inverted_index (distinct doc-term pairs ARE these
-    rows), the unigram-LM scored frame and the per-source entropy
-    census all fold this artifact instead of each re-running the
-    corpus explode+groupBy. O(doc-term pairs) rows — the collapsed
-    frame every one of those queries built privately before."""
-
-    def build() -> DataFrame:
-        d = _t(spark, sf_dir, "documents")
-        return (
-            spread(d)
-            .select(
-                "doc_id",
-                "source",
-                F.explode(
-                    F.split(F.lower(F.col("text")), " ")
-                ).alias("term"),
-            )
-            .filter(F.col("term") != "")
-            .groupBy("doc_id", "source", "term")
-            .agg(F.count(F.lit(1)).alias("tf"))
-        )
-
-    return corpus_artifact(spark, sf_dir, "doc_term_tf", build)
+from prueba_tecnica_analista_etl_spark.operators.similarity import (
+    cosine_topk_batch,
+)
+from prueba_tecnica_analista_etl_spark.plans.queries import Shape, query
+from prueba_tecnica_analista_etl_spark.sources.tables import _t, spread
+from prueba_tecnica_analista_etl_spark.stages.text import (
+    BM25_QUERY_TERMS,
+    _bm25_per_doc_frame,
+    _winnow_fp_frame,
+    doc_term_tf_frame,
+)
+from prueba_tecnica_analista_etl_spark.stages.vectors import similarity_topk
 
 
 @query(
@@ -320,44 +296,7 @@ def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape=Shape(has=("TakeOrderedAndProject",), max_exchanges=1),
 )
 def q_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # A sequential double fold matches DuckDB bit for bit.
-    e = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double(F.col("embedding")).alias("v")
-    )
-    q = e.filter(F.col("vec_id") == 0).select(F.col("v").alias("qv"))
-    return (
-        e.filter(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(q))
-        .select(
-            "vec_id",
-            F.round(cosine(F.col("v"), F.col("qv")), 4).alias("cos_sim"),
-        )
-        .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-        .limit(10)
-    )
-
-
-def _winnow_fp_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, fps) — the per-doc winnowing fingerprint SET, staged
-    ONCE per corpus (the lsh_sigs treatment: the fingerprint
-    column is the at-rest feature a winnowing index serves from; the
-    md5-shingle + Arrow sliding-min chain was the last per-call
-    hash-feature stage not staged). The cold build keeps the spread
-    (heavy per-row compute) and its Arrow
-    stage stays pinned by test_staged_builders_keep_their_arrow_stages;
-    consumers fold censuses from the stored arrays."""
-    from prueba_tecnica_analista_etl_spark.functions.text import (
-        winnow_fingerprints,
-    )
-
-    def build() -> DataFrame:
-        d = spread(_t(spark, sf_dir, "documents"))
-        return d.select(
-            "doc_id",
-            winnow_fingerprints(F.col("text")).alias("fps"),
-        )
-
-    return corpus_artifact(spark, sf_dir, "winnow_fps:k3w4", build)
+    return similarity_topk(spark, sf_dir)
 
 
 @query(
@@ -421,10 +360,6 @@ def q_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape=Shape(has=("WindowGroupLimit",)),
 )
 def q_ann_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from prueba_tecnica_analista_etl_spark.operators.similarity import (
-        cosine_topk_batch,
-    )
-
     e = _t(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("qv")
@@ -450,11 +385,6 @@ def q_ann_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape=Shape(has=("ArrowEvalPython",)),
 )
 def q_unicode_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from prueba_tecnica_analista_etl_spark.functions.text import (
-        NON_ASCII_RE,
-        nfc_normalize,
-    )
-
     d = _t(spark, sf_dir, "documents").select("lang", "text")
     needs = F.coalesce(F.col("text").rlike(NON_ASCII_RE), F.lit(False))
     # spread() only the non-ASCII sliver: Catalyst pushes the
@@ -531,12 +461,6 @@ def q_unicode_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape=Shape(has=("WindowGroupLimit",)),
 )
 def q_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    from prueba_tecnica_analista_etl_spark.operators.similarity import (
-        cosine_topk_batch,
-    )
-
     e = _t(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("q_id"),
@@ -656,10 +580,6 @@ def _ndcg_oracle_sql() -> str:
     shape=Shape(has=("WindowGroupLimit",)),
 )
 def q_eval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from prueba_tecnica_analista_etl_spark.operators.similarity import (
-        cosine_topk_batch,
-    )
-
     e = _t(spark, sf_dir, "embeddings")
     # the probe's own label rides the broadcast query frame
     # (query_carry_cols) instead of a third corpus access +
@@ -737,7 +657,6 @@ def q_eval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("q_id")
 
 
-
 TOKEN_HIST_TOP = 15
 
 
@@ -807,58 +726,9 @@ def q_token_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# BM25 retrieval constants: k1=1.2, b=0.75 (the universal defaults).
-# The integer-grid score below encodes them exactly as the rational
-# 22/10 (=2.2=k1+1), 3/10 (=0.3=k1*(1-b)) and 9/10 (=0.9=k1*b).
-BM25_QUERY_TERMS = ("spark", "table", "hash")
-
 # One source of truth for the oracle's IN-lists (the TOKEN_HIST_TOP
 # pattern): editing BM25_QUERY_TERMS updates both engines together.
 _BM25_TERMS_SQL = ", ".join(f"'{t}'" for t in BM25_QUERY_TERMS)
-
-
-def _bm25_per_doc_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, source, dl, tf_0..tf_k) for the fixed BM25 query-term
-    set — staged ONCE per corpus (the bench_grams4 discipline:
-    the benchmark term set is part of the key, so retuning the terms
-    rebuilds). q_bm25 used to evaluate this projection TWICE per
-    invocation (census + scoring legs re-tokenized the corpus each
-    time, and Catalyst cannot reuse the exchange across the legs'
-    differently-pruned subtrees); both legs now fold the collapsed
-    O(docs)-row frame — zero corpus scans per call, scoring stays
-    map-only over it."""
-
-    def build() -> DataFrame:
-        d = _t(spark, sf_dir, "documents")
-        toks = F.filter(
-            F.split(F.lower("text"), " "), lambda x: x != F.lit("")
-        )
-
-        def tf_of(term: str) -> Column:
-            # NB: a `lambda x, t=term:` closure would read as a
-            # TWO-arg higher-order function, and pyspark passes the
-            # array INDEX as the second argument — silently
-            # overriding the default.
-            return F.size(
-                F.filter(toks, lambda x: x == F.lit(term))
-            ).cast("long")
-
-        return (
-            spread(d)
-            .select(
-                "doc_id",
-                "source",
-                F.size(toks).cast("long").alias("dl"),
-                *[
-                    tf_of(t).alias(f"tf_{i}")
-                    for i, t in enumerate(BM25_QUERY_TERMS)
-                ],
-            )
-            .filter(F.col("dl") > 0)
-        )
-
-    tag = "_".join(BM25_QUERY_TERMS)
-    return corpus_artifact(spark, sf_dir, f"bm25_per_doc:{tag}", build)
 
 
 @query(
@@ -992,12 +862,9 @@ def q_bpe_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     explodes pairs over EVERY corpus token — O(corpus tokens x
     word-length) generated rows. Production trainers
     (SentencePiece/HF) instead count words first and explode pairs
-    over the DISTINCT vocabulary weighted by tf — this query is that
-    plan: one corpus-scale word-count shuffle (the same tf aggregate
-    q_token_histogram runs), then O(|vocab|) rows through the pair
-    explosion and a vocabulary-bounded pair aggregate into
-    TakeOrderedAndProject. At 100 TB the corpus pass is unavoidable;
-    everything after is vocab-sized.
+    over the DISTINCT vocabulary weighted by tf, and so does this
+    query: at 100 TB the corpus pass is unavoidable, everything after
+    it is vocab-sized.
 
     Cross-engine trap pinned by the explicit ``length(w) >= 2``
     filter in BOTH engines: Spark's ``sequence(1, 0)`` helpfully

@@ -20,22 +20,25 @@ convention after measuring the testdata):
 
 from __future__ import annotations
 
-import threading
 from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from prueba_tecnica_analista_etl_spark.artifacts import _corpus_fingerprint
 from prueba_tecnica_analista_etl_spark.functions.cleanse import (
     digits_only,
     json_long,
 )
+from prueba_tecnica_analista_etl_spark.operators.asof import asof_join
 from prueba_tecnica_analista_etl_spark.operators.dedupe import (
     distinct_count_audit,
     dup_census,
     keep_first,
+)
+from prueba_tecnica_analista_etl_spark.operators.events import (
+    cohort_retention,
+    ordered_funnel,
 )
 from prueba_tecnica_analista_etl_spark.operators.pivot import top_duplicates
 from prueba_tecnica_analista_etl_spark.operators.quality import (
@@ -48,9 +51,15 @@ from prueba_tecnica_analista_etl_spark.operators.topk import (
     running_sum,
     top_k_per_group,
 )
-from prueba_tecnica_analista_etl_spark.operators.upsert import upsert
-from prueba_tecnica_analista_etl_spark.session import ensure_runtime_conf
-from prueba_tecnica_analista_etl_spark.sources.tables import load_table
+from prueba_tecnica_analista_etl_spark.operators.upsert import (
+    snapshot_diff,
+    upsert,
+)
+from prueba_tecnica_analista_etl_spark.sources.tables import (
+    _t,
+    footer_stats_session,
+)
+from prueba_tecnica_analista_etl_spark.stages.eval import rank_pick
 from prueba_tecnica_analista_etl_spark.streaming.windows import tumbling_counts
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -60,8 +69,7 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 class Shape:
     """A query's physical-plan claim, read only by the registry-wide
     plan tests: substrings its executed plan (``toString()``) must
-    contain and must not, and a bound on the ``Exchange`` nodes below
-    ``AdaptiveSparkPlan``."""
+    contain and must not, and a bound on its ``Exchange`` nodes."""
 
     has: tuple[str, ...] = ()
     lacks: tuple[str, ...] = ()
@@ -93,42 +101,6 @@ def oracle_sql() -> dict[str, str]:
         for name, spec in REGISTRY.items()
         if spec.oracle is not None
     }
-
-
-# Plan-construction cache. A DataFrame is an immutable logical plan,
-# so one per (session, sf_dir, table) can be shared by every query of
-# the session: without it, each query pays its own parquet file
-# listing, stored-schema lookup and a round of conf.set py4j calls,
-# all in Python before Spark executes anything. (Schema
-# inference, the one Spark job a table read needs, is paid once per
-# corpus generation by load_table.) The cache lives ON the session
-# object, not in a module-level map keyed by the session: it is
-# collected with the session, so long-lived multi-session processes
-# never pin stopped sessions or their plans. Creating the cache
-# doubles as the once-per-session ensure_runtime_conf gate.
-#
-# A frame's file listing is frozen when it is built, so each entry
-# carries the corpus fingerprint the artifact store keys on and is
-# rebuilt when the corpus changes: an append or a rewrite of a table
-# is never served from a stale listing. Each entry fills under its
-# own lock, so threads resolving the same table build it once.
-_PLAN_CACHE_ATTR = "_ptae_plan_cache"
-_PLAN_CACHE_LOCK = threading.Lock()
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    with _PLAN_CACHE_LOCK:
-        cache = getattr(spark, _PLAN_CACHE_ATTR, None)
-        if cache is None:
-            ensure_runtime_conf(spark)
-            cache = {}
-            setattr(spark, _PLAN_CACHE_ATTR, cache)
-        slot = cache.setdefault((sf_dir, name), [threading.Lock(), None])
-    fp = _corpus_fingerprint(sf_dir)
-    with slot[0]:
-        if slot[1] is None or slot[1][0] != fp:
-            slot[1] = (fp, load_table(spark, sf_dir, name))
-        return slot[1][1]
 
 
 def dec2(c: Column) -> Column:
@@ -431,6 +403,10 @@ def q_inner_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY revenue DESC, n_name
     """,
     doc="J1: local-supplier revenue per nation of one region (TPC-H Q5 shape).",
+    shape=Shape(
+        has=("BroadcastHashJoin", "GreaterThanOrEqual(o_orderdate"),
+        lacks=("SortMergeJoin",),
+    ),
 )
 def q_local_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Revenue by nation from LOCAL suppliers (customer and supplier
@@ -438,13 +414,9 @@ def q_local_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     deepened to the classic 6-table TPC-H Q5 shape, and the only
     declared query exercising the ``supplier`` table.
 
-    Plan shape: the two fact joins (orders⋈customer, lineitem⋈orders)
-    shuffle on their keys with the o_orderdate range pushed into the
-    orders scan; supplier (catalog-sized), nation and region
-    broadcast, so the cyclic c_nationkey = s_nationkey edge costs a
-    broadcast probe, not a second fact shuffle. Revenue accumulates
-    in DECIMAL (exact, order-independent) and casts to double once —
-    deterministic across engines and reducer counts.
+    Revenue accumulates in DECIMAL (exact, order-independent) and
+    casts to double once — deterministic across engines and reducer
+    counts.
 
     Reference parity: the reference's join+aggregate reporting shape
     (seccion3_sql.sql:85-210 staging audits; nb:287-340 profile)
@@ -920,10 +892,6 @@ def q_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape=Shape(has=("FullOuter",), lacks=("BroadcastNestedLoopJoin",), max_exchanges=2),
 )
 def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from prueba_tecnica_analista_etl_spark.operators.upsert import (
-        snapshot_diff,
-    )
-
     o = _t(spark, sf_dir, "orders")
     old = o.select("o_orderkey", "o_totalprice", "o_orderstatus")
     new = (
@@ -1013,10 +981,6 @@ def q_trailing_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The oracle chains grouped self-joins; here three window minima share
     # one hash(user_id) exchange, so the fact table shuffles once.
-    from prueba_tecnica_analista_etl_spark.operators.events import (
-        ordered_funnel,
-    )
-
     ev = _t(spark, sf_dir, "events")
     return ordered_funnel(ev, ["view", "click", "purchase"])
 
@@ -1045,10 +1009,6 @@ def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def q_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from prueba_tecnica_analista_etl_spark.operators.events import (
-        cohort_retention,
-    )
-
     ev = _t(spark, sf_dir, "events")
     return cohort_retention(ev)
 
@@ -1226,8 +1186,6 @@ def q_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The oracle's range join + row_number is the semantic spec, not the
     # plan: operators/asof.py interleaves and sorts instead.
-    from prueba_tecnica_analista_etl_spark.operators.asof import asof_join
-
     ev = _t(spark, sf_dir, "events")
     clicks = ev.filter(F.col("event_type") == "click").select(
         "event_id", "user_id", "ts"
@@ -1487,8 +1445,6 @@ def q_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape=Shape(has=("Exchange hashpartitioning(event_type", "partial_"), max_exchanges=1),
 )
 def q_quantile_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Discrete, not interpolated: engines associate interpolation
-    # arithmetic differently, while rank selection does no arithmetic.
     ev = _t(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     wr = Window.partitionBy("event_type").orderBy("value", "event_id")
     wn = Window.partitionBy("event_type")
@@ -1499,17 +1455,11 @@ def q_quantile_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).over(wn).alias("n"),
     )
 
-    def pick(p: float, name: str):
-        rank = F.floor(F.lit(p) * (F.col("n") - 1)).cast("long") + 1
-        return F.max(
-            F.when(F.col("rn") == rank, F.col("value"))
-        ).alias(name)
-
     return v.groupBy("event_type").agg(
         F.max("n").cast("long").alias("n_events"),
-        pick(0.25, "p25"),
-        pick(0.5, "p50"),
-        pick(0.75, "p75"),
+        rank_pick(0.25, "p25"),
+        rank_pick(0.5, "p50"),
+        rank_pick(0.75, "p75"),
     )
 
 
@@ -1537,9 +1487,6 @@ def q_quantile_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape=Shape(has=("partial_",), max_exchanges=2),
 )
 def q_hypertable_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # The rank floor(p*(n-1))+1 is one IEEE multiply of identical operands,
-    # so it is the same integer in both engines even for 0.95; selecting a
-    # value by rank leaves no interpolation arithmetic to disagree on.
     ev = _t(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     bucket = F.date_trunc("day", F.col("ts"))
     wr = Window.partitionBy(bucket).orderBy("value", "event_id")
@@ -1551,16 +1498,10 @@ def q_hypertable_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).over(wn).alias("n"),
     )
 
-    def pick(p: float, name: str):
-        rank = F.floor(F.lit(p) * (F.col("n") - 1)).cast("long") + 1
-        return F.max(
-            F.when(F.col("rn") == rank, F.col("value"))
-        ).alias(name)
-
     return v.groupBy("day").agg(
         F.max("n").cast("long").alias("n_events"),
-        pick(0.5, "p50"),
-        pick(0.95, "p95"),
+        rank_pick(0.5, "p50"),
+        rank_pick(0.95, "p95"),
     )
 
 
@@ -1580,10 +1521,6 @@ def q_hypertable_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_footer_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Runs on the aggregate-pushdown session clone, so the census reads
     # row-group footers, not data pages.
-    from prueba_tecnica_analista_etl_spark.sources.tables import (
-        footer_stats_session,
-    )
-
     s = footer_stats_session(spark)
     orders = s.read.parquet(f"{sf_dir}/orders.parquet")
     return orders.agg(

@@ -108,6 +108,19 @@ def session_clone(spark: SparkSession, confs: dict[str, str]) -> SparkSession:
     return s
 
 
+def _stream_session(spark: SparkSession) -> SparkSession:
+    """The session the stream queries run on: a memoized clone of
+    ``spark`` with 4 shuffle partitions. Stateful ops run exactly
+    `shuffle.partitions` state tasks per micro-batch (no AQE in
+    streaming), so the session default (sized for batch shuffles)
+    over-fragments these replays' tiny state — measured 2× slower at
+    32 than 8, and 4 is the sweet spot. The clone shares the
+    SparkContext but not the SQL conf, so the caller's session is
+    never mutated. At scale this constant is the state-store sizing
+    knob and is pinned by the first checkpoint."""
+    return session_clone(spark, {"spark.sql.shuffle.partitions": "4"})
+
+
 # parent session -> {conf set: clone}. The parent is a weak key, so the
 # memo never pins a stopped session; a clone does not refer back to its
 # parent, so the entry dies with it.

@@ -10,13 +10,20 @@ testdata is a single file per table.
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from prueba_tecnica_analista_etl_spark.artifacts import census_artifact
-from prueba_tecnica_analista_etl_spark.session import session_clone
+from prueba_tecnica_analista_etl_spark.artifacts import (
+    _corpus_fingerprint,
+    census_artifact,
+)
+from prueba_tecnica_analista_etl_spark.session import (
+    ensure_runtime_conf,
+    session_clone,
+)
 
 TABLES = (
     "region",
@@ -109,6 +116,42 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         df = normalize_event_time(df, "ts")
     return df
+
+
+# Plan-construction cache. A DataFrame is an immutable logical plan,
+# so one per (session, sf_dir, table) can be shared by every query of
+# the session: without it, each query pays its own parquet file
+# listing, stored-schema lookup and a round of conf.set py4j calls,
+# all in Python before Spark executes anything. (Schema
+# inference, the one Spark job a table read needs, is paid once per
+# corpus generation by load_table.) The cache lives ON the session
+# object, not in a module-level map keyed by the session: it is
+# collected with the session, so long-lived multi-session processes
+# never pin stopped sessions or their plans. Creating the cache
+# doubles as the once-per-session ensure_runtime_conf gate.
+#
+# A frame's file listing is frozen when it is built, so each entry
+# carries the corpus fingerprint the artifact store keys on and is
+# rebuilt when the corpus changes: an append or a rewrite of a table
+# is never served from a stale listing. Each entry fills under its
+# own lock, so threads resolving the same table build it once.
+_PLAN_CACHE_ATTR = "_ptae_plan_cache"
+_PLAN_CACHE_LOCK = threading.Lock()
+
+
+def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    with _PLAN_CACHE_LOCK:
+        cache = getattr(spark, _PLAN_CACHE_ATTR, None)
+        if cache is None:
+            ensure_runtime_conf(spark)
+            cache = {}
+            setattr(spark, _PLAN_CACHE_ATTR, cache)
+        slot = cache.setdefault((sf_dir, name), [threading.Lock(), None])
+    fp = _corpus_fingerprint(sf_dir)
+    with slot[0]:
+        if slot[1] is None or slot[1][0] != fp:
+            slot[1] = (fp, load_table(spark, sf_dir, name))
+        return slot[1][1]
 
 
 def spread(df: DataFrame) -> DataFrame:

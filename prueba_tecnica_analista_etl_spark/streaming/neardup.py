@@ -4,7 +4,7 @@ is admitted only if it is NOT a near-duplicate (exact Jaccard >=
 threshold over shingle hashes) of any ALREADY-ACCEPTED document, and
 within a batch the greedy min-id survivor rule applies — so the
 drained accepted set equals the batch greedy purge FIXPOINT
-(``pipelines.corpus.near_dup_purge_stable``) over the full corpus,
+(``stages.dedup.near_dup_purge_stable``) over the full corpus,
 provided arrival order is id order (range-partitioned replay). This
 is the "dedupe the incoming crawl against the corpus" operator of a
 training-data ingestion pipeline: the batch family
@@ -71,6 +71,9 @@ from pyspark.sql import functions as F
 
 from prueba_tecnica_analista_etl_spark.artifacts import publish, recover
 from prueba_tecnica_analista_etl_spark.functions.text import jaccard
+from prueba_tecnica_analista_etl_spark.stages.dedup import (
+    near_dup_purge_stable,
+)
 
 # Fold loose batch-* dirs into a consolidated gen-* directory once the
 # live unit count exceeds this: an append-only index grows one
@@ -284,12 +287,10 @@ def foreach_batch_neardup_gate(
     ``(doc_id, hs, band, key)``; ``pairs_from_bands(banded,
     threshold)`` maps a banded frame to its intra-frame near-dup pairs
     at the GIVEN threshold (both injected — typically
-    ``plans.extensions_scale.minhash_band_frame`` over
-    ``shingle_frame`` and a
-    ``pairs_from_band_frame(..., cap=None)`` wrapper — so this module
-    never imports the plans layer, the gate stays generic over
-    signature schemes, and ONE ``threshold`` governs both the
-    cross-batch probe and the intra-batch purge)."""
+    ``stages.dedup.minhash_band_frame`` over ``shingle_frame`` and a
+    ``pairs_from_band_frame(..., cap=None)`` wrapper — so the gate
+    stays generic over signature schemes, and ONE ``threshold``
+    governs both the cross-batch probe and the intra-batch purge)."""
     os.makedirs(index_dir, exist_ok=True)
 
     def apply(batch: DataFrame, batch_id: int) -> None:
@@ -381,10 +382,6 @@ def foreach_batch_neardup_gate(
         # (near_dup_purge's ghost-endpoint rule, applied by
         # construction since pairs derive FROM the remainder's banded
         # rows).
-        from prueba_tecnica_analista_etl_spark.pipelines.corpus import (
-            near_dup_purge_stable,
-        )
-
         remainder = rem_banded.select("doc_id").distinct()
         survivors, _audit = near_dup_purge_stable(
             remainder, pairs_from_bands(rem_banded, threshold)

@@ -30,8 +30,6 @@ def pytest_configure(config):
         os.environ["PTAE_ARTIFACT_DIR"] = root
         # reclaim the populated store at process exit — repeated
         # local runs would otherwise accumulate unbounded /tmp debt
-        # (the same temp-dir-leak class the r10 ADVICE fix closed in
-        # artifacts.py)
         atexit.register(shutil.rmtree, root, ignore_errors=True)
 
 

@@ -1,6 +1,6 @@
 """Rounding-boundary margin sweep for every float-derived sort key.
 
-The class of driver flip that bit q_perplexity_buckets twice (r6, r7):
+The class of driver flip that bit q_perplexity_buckets twice:
 a float value that feeds a ROUNDED sort/group key sits within a few
 ulps of a rounding boundary, the JVM's and DuckDB's libm disagree by
 1 ulp, and the two engines round to different grid cells — changing

@@ -19,7 +19,8 @@ from prueba_tecnica_analista_etl_spark.plans.extensions_distributed import (
     q_incremental_agg_merge,
     q_winsorize,
 )
-from prueba_tecnica_analista_etl_spark.plans.queries import _t, dec2
+from prueba_tecnica_analista_etl_spark.plans.queries import dec2
+from prueba_tecnica_analista_etl_spark.sources.tables import _t
 
 
 def _plan(df) -> str:

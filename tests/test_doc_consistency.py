@@ -41,8 +41,8 @@ def test_readme_counts():
 def test_baseline_banner_counts():
     """BASELINE.md is an append-only measurement log whose per-round
     sections quote HISTORICAL registry sizes; its current-state banner
-    (r12 verdict task 7) must track the live registry so a reader
-    never mistakes an old round's counts for today's."""
+    must track the live registry so a reader never mistakes an old
+    round's counts for today's."""
     total, n_oracle, _ = _counts()
     text = open(os.path.join(ROOT, "BASELINE.md")).read()
     assert (

@@ -1,11 +1,11 @@
 """Bit-equality proof for the exact-integer fixed-point logarithm.
 
-q_perplexity_buckets' driver hash flipped in rounds 6 AND 7 because its
-sort key carried (directly, then quantized) a runtime ``ln`` — a 1-ulp
-libm disagreement between the JVM and DuckDB at a grid boundary moved a
-doc across a tertile edge.  The r8 fix computes the per-term weight
-with ONLY 64-bit integer arithmetic (extensions_pipeline._LOG_P), so
-the two engines agree bit-for-bit BY CONSTRUCTION, not by libm luck.
+q_perplexity_buckets' driver hash flipped twice because its sort key
+carried (directly, then quantized) a runtime ``ln`` — a 1-ulp libm
+disagreement between the JVM and DuckDB at a grid boundary moved a doc
+across a tertile edge.  The per-term weight is therefore computed with
+ONLY 64-bit integer arithmetic (stages.text._LOG_P), so the two
+engines agree bit-for-bit BY CONSTRUCTION, not by libm luck.
 
 This test locks the construction: the Spark expression, the generated
 DuckDB CTE chain, and an independent pure-Python big-int reference must
@@ -22,10 +22,12 @@ import duckdb
 from pyspark.sql import functions as F
 
 from prueba_tecnica_analista_etl_spark.plans.extensions_pipeline import (
+    _nlp6_duckdb_ctes,
+)
+from prueba_tecnica_analista_etl_spark.stages.text import (
     _LN2_1E6,
     _LOG_K,
     _LOG_P,
-    _nlp6_duckdb_ctes,
     _nlp6_spark_expr,
 )
 

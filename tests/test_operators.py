@@ -808,9 +808,7 @@ def test_group_safe_split_never_straddles_duplicate_groups(spark):
     straddles some family on the same data — the leak the group key
     exists to close. Also pins the census arithmetic: n_dup_docs
     counts exactly the docs in multi-copy groups."""
-    from prueba_tecnica_analista_etl_spark.plans.extensions_pipeline import (
-        _hex_threshold,
-    )
+    from prueba_tecnica_analista_etl_spark.stages.eval import _hex_threshold
 
     # 40 families x 3 copies + 30 singletons, ids interleaved so
     # family members get unrelated md5(doc_id) draws.

@@ -43,10 +43,30 @@ def plans(spark, sf_dir) -> dict[str, str]:
 def _shape_faults(plan: str, shape: Shape) -> list[str]:
     faults = [f"lost {s!r}" for s in shape.has if s not in plan]
     faults += [f"gained {s!r}" for s in shape.lacks if s in plan]
-    n = plan.split("AdaptiveSparkPlan")[-1].count("Exchange")
+    n = plan.count("Exchange")
     if shape.max_exchanges is not None and n > shape.max_exchanges:
         faults.append(f"{n} exchanges, at most {shape.max_exchanges}")
     return faults
+
+
+def test_exchange_cap_counts_every_adaptive_subplan():
+    """A ``max_exchanges`` cap counts the whole plan: here the one
+    exchange sits under the first of two ``AdaptiveSparkPlan`` nodes."""
+    plan = "\n".join(
+        [
+            "AdaptiveSparkPlan isFinalPlan=false",
+            "+- HashAggregate(keys=[k#1], functions=[count(1)])",
+            "   +- Exchange hashpartitioning(k#1, 4), ENSURE_REQUIREMENTS",
+            "      +- Filter (v#2 > Subquery subquery#3)",
+            "         :  +- Subquery subquery#3",
+            "         :     +- AdaptiveSparkPlan isFinalPlan=false",
+            "         :        +- HashAggregate(keys=[], functions=[max(v#4)])",
+            "         +- FileScan parquet [k#1,v#2]",
+        ]
+    )
+    assert _shape_faults(plan, Shape(max_exchanges=0)) == [
+        "1 exchanges, at most 0"
+    ]
 
 
 def _cartesian_faults(plan: str, oracle: str | None) -> list[str]:
@@ -157,11 +177,11 @@ def test_eager_builder_pipelines_stay_clean(spark, sf_dir):
     hold the LAZY builder frames to the same rules: the shingle-edge
     pipeline and the unigram score build must stay whole-stage-codegen
     JVM expressions with no SinglePartition funnel over fact rows."""
-    from prueba_tecnica_analista_etl_spark.plans.extensions_pipeline import (
-        _unigram_scored_build,
-        shingle_edges,
-    )
     from prueba_tecnica_analista_etl_spark.sources.tables import load_table
+    from prueba_tecnica_analista_etl_spark.stages.dedup import shingle_edges
+    from prueba_tecnica_analista_etl_spark.stages.text import (
+        _unigram_scored_build,
+    )
 
     docs = load_table(spark, sf_dir, "documents")
     for df in (shingle_edges(docs), _unigram_scored_build(spark, sf_dir)):
@@ -421,12 +441,14 @@ def test_staged_builders_keep_their_arrow_stages(spark, sf_dir):
         extract_features,
         fake_assets,
     )
-    from prueba_tecnica_analista_etl_spark.plans.extensions_scale import (
-        _embed_neardup_pairs_live,
+    from prueba_tecnica_analista_etl_spark.sources.tables import _t
+    from prueba_tecnica_analista_etl_spark.stages.dedup import (
         doc_shingle_frame,
         simhash_pair_frame,
     )
-    from prueba_tecnica_analista_etl_spark.plans.queries import _t
+    from prueba_tecnica_analista_etl_spark.stages.vectors import (
+        _embed_neardup_pairs_live,
+    )
 
     def has_arrow(df):
         plan = df._jdf.queryExecution().executedPlan().toString()
@@ -450,7 +472,7 @@ def test_staged_builders_keep_their_arrow_stages(spark, sf_dir):
         as_double,
         assign_clusters,
     )
-    from prueba_tecnica_analista_etl_spark.plans.extensions_scale import (
+    from prueba_tecnica_analista_etl_spark.stages.vectors import (
         _lsh_sig_live,
         ivf_centroids,
     )

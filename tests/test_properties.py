@@ -631,10 +631,8 @@ def test_bm25_ranks_match_reference_fold(spark, sf_dir):
     from collections import Counter
 
     from __spark_entry__ import queries
-    from prueba_tecnica_analista_etl_spark.plans.extensions_text import (
-        BM25_QUERY_TERMS,
-    )
     from prueba_tecnica_analista_etl_spark.sources.tables import load_table
+    from prueba_tecnica_analista_etl_spark.stages.text import BM25_QUERY_TERMS
 
     q = queries()
     got = q["q_bm25"](spark, sf_dir).collect()
@@ -794,9 +792,7 @@ def test_source_divergence_hand_computed_values(spark, tmp_path):
     ratio 2 hits the fixed-point logarithm's integer part with zero
     fractional bits, so no rounding is involved)."""
     from prueba_tecnica_analista_etl_spark.plans import REGISTRY
-    from prueba_tecnica_analista_etl_spark.plans.extensions_pipeline import (
-        _LN2_1E6,
-    )
+    from prueba_tecnica_analista_etl_spark.stages.text import _LN2_1E6
 
     docs = spark.createDataFrame(
         [(1, "a", "x x x x"), (2, "b", "y y y y")],

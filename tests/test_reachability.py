@@ -77,7 +77,7 @@ ALLOWLIST = {
         TEST_REF,
         "brute-force reference for the IVF index",
     ),
-    "plans.extensions_scale.semdedup_purge_census": (
+    "stages.vectors.semdedup_purge_census": (
         TEST_REF,
         "census the SemDeDup tests compare q_semdedup against",
     ),
@@ -544,3 +544,80 @@ def test_option_allowlist_entries_are_live_and_reasoned():
             ), f"{entry}: {detail} does not set {param}"
         else:
             raise AssertionError(f"{entry}: unknown reason kind {kind!r}")
+
+
+# --- layers ------------------------------------------------------------
+#
+# Each top-level package module sits in one layer, lowest first. A module
+# imports only from its own layer or a lower one, and only at module
+# level: an import hidden inside a function is how an upward edge used
+# to dodge the import cycle it would close.
+
+LAYERS = (
+    ("session", "artifacts", "functions", "multimodal"),
+    ("sources",),
+    ("operators",),
+    ("stages",),
+    ("streaming",),
+    ("pipelines",),
+    ("plans",),
+    ("__main__",),
+)
+RANK = {name: i for i, names in enumerate(LAYERS) for name in names}
+
+
+def _top(mod: str) -> str:
+    return mod[len(PKG) + 1 :].split(".")[0]
+
+
+def _package_imports(mod: str, tree: ast.Module):
+    """(import node, imported top-level package name, function-local)
+    for every import of a package module in ``tree``."""
+    is_pkg = MODULES[mod][0].name == "__init__.py"
+
+    def visit(node, local):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, ast.ImportFrom):
+                src = child.module or ""
+                if child.level:
+                    base = mod.split(".") if is_pkg else mod.split(".")[:-1]
+                    base = base[: len(base) - child.level + 1]
+                    src = ".".join(base + ([src] if src else []))
+                targets = [src]
+            elif isinstance(child, ast.Import):
+                targets = [a.name for a in child.names]
+            else:
+                yield from visit(
+                    child,
+                    local
+                    or isinstance(
+                        child, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)
+                    ),
+                )
+                continue
+            for src in targets:
+                if src.startswith(PKG + "."):
+                    yield child, _top(src), local
+
+    yield from visit(tree, False)
+
+
+def _layer_faults() -> list[str]:
+    faults = []
+    for mod, (path, tree) in MODULES.items():
+        if not mod.startswith(PKG + "."):
+            continue  # the package root only re-exports get_spark
+        top = _top(mod)
+        assert top in RANK, f"{mod}: not in LAYERS"
+        where = path.relative_to(REPO / PKG)
+        for node, target, local in _package_imports(mod, tree):
+            if local and top != "__main__":
+                faults.append(f"{where}:{node.lineno} imports {target} in a function")
+            if RANK[target] > RANK[top]:
+                faults.append(f"{where}:{node.lineno} → {target}")
+    return faults
+
+
+def test_imports_follow_the_layer_order():
+    faults = _layer_faults()
+    assert not faults, "imports that break the layer order:\n" + "\n".join(faults)

@@ -14,13 +14,11 @@ from prueba_tecnica_analista_etl_spark.multimodal import (
     fake_assets,
 )
 from prueba_tecnica_analista_etl_spark.plans import REGISTRY
-from prueba_tecnica_analista_etl_spark.plans.extensions_scale import (
-    MINHASH_JACCARD_T,
-)
 from prueba_tecnica_analista_etl_spark.sources.bucketed import write_bucketed
 from prueba_tecnica_analista_etl_spark.sources.tables import (
     load_table,
 )
+from prueba_tecnica_analista_etl_spark.stages.dedup import MINHASH_JACCARD_T
 from prueba_tecnica_analista_etl_spark.streaming.upsert_sink import (
     run_with_retry,
 )
@@ -101,9 +99,7 @@ def test_ngram_jaccard_skew_bucket_subsplit(spark, tmp_path):
     vanish (dropping the whole bucket would lose every near-dup signal
     feeding corpus curation). The query still emits
     (limit-bounded) exact-dup pairs with jaccard 1.0."""
-    from prueba_tecnica_analista_etl_spark.plans.extensions_scale import (
-        BUCKET_CAP,
-    )
+    from prueba_tecnica_analista_etl_spark.stages.dedup import BUCKET_CAP
 
     n = 4 * BUCKET_CAP
     docs = spark.range(n).select(
@@ -126,7 +122,7 @@ def test_capped_pair_array_bounds_and_coverage(spark):
     cap=5 yields exactly 4 chunks × C(5,2) = 40 pairs (vs C(20,2) =
     190 unguarded), every pair is ordered, deterministic across runs,
     and an under-cap bucket expands to ALL its pairs."""
-    from prueba_tecnica_analista_etl_spark.plans.extensions_scale import (
+    from prueba_tecnica_analista_etl_spark.stages.dedup import (
         capped_pair_array,
     )
 
@@ -481,7 +477,7 @@ def test_ann_ivf_exact_when_probing_all_and_recall(spark, sf_dir):
     from prueba_tecnica_analista_etl_spark.operators.ivf_index import (
         ivf_search_index,
     )
-    from prueba_tecnica_analista_etl_spark.plans.extensions_scale import (
+    from prueba_tecnica_analista_etl_spark.stages.vectors import (
         IVF_K,
         cached_ivf_index,
     )
@@ -546,10 +542,8 @@ def test_near_dup_purge_fixpoint_keeps_chain_tail(spark, monkeypatch):
     is itself dead). Also: a genuine pair still loses its doc_b, and
     no surviving pair remains even past the round cap (enforcement
     pass) on a chain longer than `PURGE_ROUNDS`."""
-    from prueba_tecnica_analista_etl_spark.pipelines import corpus
-    from prueba_tecnica_analista_etl_spark.pipelines.corpus import (
-        near_dup_purge,
-    )
+    from prueba_tecnica_analista_etl_spark.stages import dedup
+    from prueba_tecnica_analista_etl_spark.stages.dedup import near_dup_purge
 
     docs = spark.createDataFrame(
         [(i, f"doc {i}") for i in range(1, 9)], "doc_id long, text string"
@@ -577,7 +571,7 @@ def test_near_dup_purge_fixpoint_keeps_chain_tail(spark, monkeypatch):
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 8)], "doc_a long, doc_b long"
     )
-    monkeypatch.setattr(corpus, "PURGE_ROUNDS", 2)
+    monkeypatch.setattr(dedup, "PURGE_ROUNDS", 2)
     surv = {r["doc_id"] for r in near_dup_purge(docs, chain).collect()}
     assert 1 in surv
     for a, b in [(i, i + 1) for i in range(1, 8)]:
@@ -588,7 +582,7 @@ def test_curate_corpus_stage_invariants(spark, sf_dir):
     """The curation chain's invariants: monotone shrinking counts, no
     identical texts among survivors, no surviving near-dup pair, and
     the greedy rule keeps the min doc_id of every pair."""
-    from prueba_tecnica_analista_etl_spark.pipelines.corpus import (
+    from prueba_tecnica_analista_etl_spark.pipelines.pretrain import (
         curate_corpus,
     )
 
@@ -618,7 +612,7 @@ def test_near_dup_purge_stable_converges_without_over_purge(spark):
     8-deep chain it converges to the alternating set with ZERO
     enforcement drops (the lazy fixed-round form would over-purge the
     tail), and the audit reports the rounds it took."""
-    from prueba_tecnica_analista_etl_spark.pipelines.corpus import (
+    from prueba_tecnica_analista_etl_spark.stages.dedup import (
         near_dup_purge_stable,
     )
 
@@ -643,7 +637,7 @@ def test_purge_identical_without_endpoint_broadcast(spark, monkeypatch):
     both purge variants must return byte-identical survivor sets. A
     forced broadcast of a huge pair frame is a driver OOM, and the
     fallback must not change results."""
-    from prueba_tecnica_analista_etl_spark.pipelines import corpus
+    from prueba_tecnica_analista_etl_spark.stages import dedup
 
     docs = spark.createDataFrame(
         [(i, f"doc {i}") for i in range(1, 9)], "doc_id long, text string"
@@ -655,13 +649,13 @@ def test_purge_identical_without_endpoint_broadcast(spark, monkeypatch):
     def run_all():
         greedy = {
             r["doc_id"]
-            for r in corpus.near_dup_purge(docs, pairs).collect()
+            for r in dedup.near_dup_purge(docs, pairs).collect()
         }
-        stable, audit = corpus.near_dup_purge_stable(docs, pairs)
+        stable, audit = dedup.near_dup_purge_stable(docs, pairs)
         return greedy, {r["doc_id"] for r in stable.collect()}, audit
 
     base = run_all()
-    monkeypatch.setattr(corpus, "ENDPOINT_BROADCAST_MAX_ROWS", 0)
+    monkeypatch.setattr(dedup, "ENDPOINT_BROADCAST_MAX_ROWS", 0)
     forced = run_all()
     assert forced[:2] == base[:2]
     assert forced[2]["enforcement_over_purged"] == 0
@@ -673,10 +667,10 @@ def test_corpus_curate_second_build_reuses_pair_artifact(spark, sf_dir):
     construction reuses the memoized checkpointed frame, so its
     construction launches far fewer jobs than the cold one. (The
     eager materialize-once design is deliberate — see
-    pipelines/corpus.py:_materialize for the measured lazy variants
+    stages/dedup.py:_materialize for the measured lazy variants
     that lose 7-20x at sf0.1.)"""
     from prueba_tecnica_analista_etl_spark.artifacts import clear_artifacts
-    from prueba_tecnica_analista_etl_spark.pipelines.corpus import (
+    from prueba_tecnica_analista_etl_spark.stages.dedup import (
         _minhash_pairs_key,
     )
 
@@ -701,7 +695,7 @@ def test_pairs_cache_memoizes_and_clears(spark, sf_dir):
     """cached_minhash_pairs memoizes per (session, corpus) and
     clearing its artifact actually invalidates."""
     from prueba_tecnica_analista_etl_spark.artifacts import clear_artifacts
-    from prueba_tecnica_analista_etl_spark.pipelines.corpus import (
+    from prueba_tecnica_analista_etl_spark.stages.dedup import (
         _minhash_pairs_key,
         cached_minhash_pairs,
     )
@@ -793,7 +787,7 @@ def test_training_export_composition(spark, sf_dir, tmp_path):
     mixture sample -> chunk + pack, with conservation invariants at
     every boundary. This is the export pipeline a training run would
     actually execute, not isolated per-operator proofs."""
-    from prueba_tecnica_analista_etl_spark.pipelines.corpus import (
+    from prueba_tecnica_analista_etl_spark.pipelines.pretrain import (
         curate_corpus,
     )
 
@@ -845,7 +839,7 @@ def test_minhash_pair_frame_generic_api(spark):
     (doc_id, text) frame — planted near-identical pairs surface with
     canonical (doc_a < doc_b, jaccard_sim) output at the Jaccard gate,
     and unrelated rows do not pair."""
-    from prueba_tecnica_analista_etl_spark.plans.extensions_scale import (
+    from prueba_tecnica_analista_etl_spark.stages.dedup import (
         minhash_pair_frame,
         shingle_frame,
     )
@@ -908,7 +902,7 @@ def test_simhash_and_ngram_pair_frames_generic_api(spark):
     (doc_id, text) frame: a planted near-identical pair surfaces from
     both, an unrelated row pairs with neither, and simhash's hamming
     bound is honored."""
-    from prueba_tecnica_analista_etl_spark.plans.extensions_scale import (
+    from prueba_tecnica_analista_etl_spark.stages.dedup import (
         ngram_pair_frame,
         shingle_frame,
         simhash_pair_frame,
@@ -975,11 +969,13 @@ def test_ann_recall_audit_invariants(spark, sf_dir):
     tier — a wider radius / more probes can only admit more
     candidates."""
     from prueba_tecnica_analista_etl_spark.plans.extensions_scale import (
+        q_ann_recall,
+    )
+    from prueba_tecnica_analista_etl_spark.stages.vectors import (
         IVF_K,
         IVF_NPROBE,
         LSH_HAMMING,
         ann_sweep_parts,
-        q_ann_recall,
     )
 
     frame = q_ann_recall(spark, sf_dir)
@@ -1286,10 +1282,10 @@ def test_minhash_family_int64_safe_and_matches_reference():
     intermediate strictly inside int64 for ANY 60-bit input — the
     property that makes it exact in Spark, DuckDB, and the oracle
     literals — and (b) match an independent big-int reference."""
-    from prueba_tecnica_analista_etl_spark.plans.extensions_scale import (
-        _LOW30,
+    from prueba_tecnica_analista_etl_spark.stages.dedup import (
         MINHASH_COEFFS,
         MINHASH_P,
+        _LOW30,
     )
 
     worst = (1 << 60) - 1
@@ -1318,6 +1314,8 @@ def test_capped_chunk_sql_twin_on_oversized_bucket(spark):
 
     from prueba_tecnica_analista_etl_spark.plans.extensions_scale import (
         _ngram_oracle_sql,
+    )
+    from prueba_tecnica_analista_etl_spark.stages.dedup import (
         ngram_pair_frame,
         shingle_frame,
     )
@@ -1355,11 +1353,13 @@ def test_stream_neardup_equals_batch_greedy_fixpoint(spark, sf_dir):
     alternating-chain depth must stay at or below HALF the rounds the
     generated SQL unrolls (the guard is what keeps the
     fixed unroll from going silently wrong on a deeper corpus)."""
-    from prueba_tecnica_analista_etl_spark.pipelines.corpus import (
-        near_dup_purge_stable,
-    )
     from prueba_tecnica_analista_etl_spark.plans.extensions_scale import (
         STREAM_NEARDUP_UNROLL,
+    )
+    from prueba_tecnica_analista_etl_spark.stages.dedup import (
+        near_dup_purge_stable,
+    )
+    from prueba_tecnica_analista_etl_spark.stages.dedup import (
         minhash_band_frame,
         pairs_from_band_frame,
         shingle_frame,
@@ -1411,10 +1411,10 @@ def test_stream_neardup_index_compaction_long_replay(
     import os
     import shutil
 
-    from prueba_tecnica_analista_etl_spark.pipelines.corpus import (
+    from prueba_tecnica_analista_etl_spark.stages.dedup import (
         near_dup_purge_stable,
     )
-    from prueba_tecnica_analista_etl_spark.plans.extensions_scale import (
+    from prueba_tecnica_analista_etl_spark.stages.dedup import (
         minhash_band_frame,
         pairs_from_band_frame,
         shingle_frame,
@@ -1542,9 +1542,7 @@ def test_stream_neardup_uncapped_on_oversized_bucket(spark, tmp_path):
     corpus."""
     import duckdb
 
-    from prueba_tecnica_analista_etl_spark.plans.extensions_scale import (
-        BUCKET_CAP,
-    )
+    from prueba_tecnica_analista_etl_spark.stages.dedup import BUCKET_CAP
 
     n = 2 * BUCKET_CAP + 22  # 150: three skew chunks in the capped tier
     docs = spark.range(n).select(
@@ -1694,7 +1692,7 @@ def test_gate_index_probe_partition_pruning(spark, tmp_path):
     (band, key) implies equal kb, so no candidate is lost)."""
     import os
 
-    from prueba_tecnica_analista_etl_spark.plans.extensions_scale import (
+    from prueba_tecnica_analista_etl_spark.stages.dedup import (
         minhash_band_frame,
         pairs_from_band_frame,
         shingle_frame,
@@ -1818,11 +1816,10 @@ def test_pretrain_run_prefetch_overlaps_curation_in_callers_group(
     import time
 
     from prueba_tecnica_analista_etl_spark.pipelines import pretrain
-    from prueba_tecnica_analista_etl_spark.plans import extensions_scale
 
     caller = threading.get_ident()
     labels_calls, curate_returns = [], []
-    labels_fn = extensions_scale.semdedup_labels
+    labels_fn = pretrain.semdedup_labels
     curate_fn = pretrain.curate_corpus
 
     def labels(*args, **kwargs):
@@ -1834,7 +1831,7 @@ def test_pretrain_run_prefetch_overlaps_curation_in_callers_group(
         curate_returns.append(time.perf_counter())
         return out
 
-    monkeypatch.setattr(extensions_scale, "semdedup_labels", labels)
+    monkeypatch.setattr(pretrain, "semdedup_labels", labels)
     monkeypatch.setattr(pretrain, "curate_corpus", curate)
     sc = spark.sparkContext
     tracker = sc.statusTracker()
@@ -1950,7 +1947,7 @@ def test_semdedup_purges_planted_families(spark, tmp_path):
     assert sum(r["n_dup_pairs"] for r in out) == 3 + 1
 
     # the purged ids are exactly the non-min family members
-    from prueba_tecnica_analista_etl_spark.plans.extensions_scale import (
+    from prueba_tecnica_analista_etl_spark.stages.vectors import (
         semdedup_labels,
     )
 
@@ -2161,7 +2158,7 @@ def test_semdedup_with_ivf_quantizer(spark, tmp_path):
         assign_clusters,
         ivf_fit,
     )
-    from prueba_tecnica_analista_etl_spark.plans.extensions_scale import (
+    from prueba_tecnica_analista_etl_spark.stages.vectors import (
         _int8_quantized,
         semdedup_purge_census,
     )
@@ -2194,7 +2191,7 @@ def test_semdedup_with_ivf_quantizer(spark, tmp_path):
     from prueba_tecnica_analista_etl_spark.operators.components import (
         connected_components,
     )
-    from prueba_tecnica_analista_etl_spark.plans.extensions_scale import (
+    from prueba_tecnica_analista_etl_spark.stages.vectors import (
         semdedup_pairs_for,
     )
 
@@ -2216,7 +2213,7 @@ def test_pretrain_decontaminate_keeps_what_q_decontaminate_keeps(
     from prueba_tecnica_analista_etl_spark.pipelines.pretrain import (
         decontaminate,
     )
-    from prueba_tecnica_analista_etl_spark.plans.queries import _t
+    from prueba_tecnica_analista_etl_spark.sources.tables import _t
 
     def ids(df):
         return {r["doc_id"] for r in df.select("doc_id").collect()}
@@ -2233,10 +2230,8 @@ def test_pack_bins_equals_q_pack_sequences_without_fill(spark, sf_dir):
     """The pack helper pretrain_run calls, run over every document,
     is q_pack_sequences minus its fill_pct column."""
     from prueba_tecnica_analista_etl_spark.functions.text import n_tokens
-    from prueba_tecnica_analista_etl_spark.plans.extensions_pipeline import (
-        pack_bins,
-    )
-    from prueba_tecnica_analista_etl_spark.plans.queries import _t
+    from prueba_tecnica_analista_etl_spark.sources.tables import _t
+    from prueba_tecnica_analista_etl_spark.stages.text import pack_bins
 
     docs = _t(spark, sf_dir, "documents").select(
         "source", "doc_id", n_tokens(F.col("text")).alias("n_tok")
@@ -2255,9 +2250,7 @@ def test_pack_bins_equals_q_pack_sequences_without_fill(spark, sf_dir):
 def test_quality_gate_is_a_length_floor(spark):
     """The gate keeps a 4-token doc with no stopword at all and drops a
     3-token doc made only of stopwords."""
-    from prueba_tecnica_analista_etl_spark.pipelines.corpus import (
-        quality_gate,
-    )
+    from prueba_tecnica_analista_etl_spark.stages.dedup import quality_gate
 
     docs = spark.createDataFrame(
         [(1, "zz yy xx ww"), (2, "the a of")], "doc_id long, text string"
