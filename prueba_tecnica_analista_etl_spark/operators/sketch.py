@@ -43,6 +43,9 @@ chunking, which is what yields the n/(capacity+1) undercount bound.
 
 from __future__ import annotations
 
+import json
+import os
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -194,7 +197,7 @@ class MGStreamAccumulator:
     lost its mass. Without ``ledger_dir`` the pair lives in memory —
     enough for availableNow replays within one run."""
 
-    STATE = "mg_state.pkl"
+    STATE = "mg_state.json"
 
     def __init__(
         self,
@@ -211,31 +214,30 @@ class MGStreamAccumulator:
             self._load()
 
     def _state_path(self) -> str:
-        import os
-
         return os.path.join(self._ledger_dir, self.STATE)
 
     def _load(self) -> None:
-        import os
-        import pickle
-
+        """Reload the ledger. A missing file is a first run; an
+        unreadable one raises, because starting fresh would skip the
+        replayed batches while having lost their mass."""
         os.makedirs(self._ledger_dir, exist_ok=True)
         try:
-            with open(self._state_path(), "rb") as fh:
-                state = pickle.load(fh)
-            self._seen = set(state["seen"])
-            self.counters = dict(state["counters"])
-        except (OSError, KeyError, pickle.PickleError, EOFError):
-            pass  # fresh ledger — first run, or unreadable -> rebuild
+            with open(self._state_path()) as fh:
+                state = json.load(fh)
+        except FileNotFoundError:
+            return
+        self._seen = set(state["seen"])
+        # [key, count] pairs, so a non-string key round-trips
+        self.counters = dict(state["counters"])
 
     def _persist(self) -> None:
-        import os
-        import pickle
-
         tmp = self._state_path() + ".tmp"
-        with open(tmp, "wb") as fh:
-            pickle.dump(
-                {"seen": sorted(self._seen), "counters": self.counters},
+        with open(tmp, "w") as fh:
+            json.dump(
+                {
+                    "seen": sorted(self._seen),
+                    "counters": [[k, c] for k, c in self.counters.items()],
+                },
                 fh,
             )
         os.replace(tmp, self._state_path())

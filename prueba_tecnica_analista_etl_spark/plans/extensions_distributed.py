@@ -64,6 +64,9 @@ arithmetic (``(n+19) div 20``), never ``ceil(0.05*n)`` whose binary
 
 from __future__ import annotations
 
+import shutil
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -106,6 +109,9 @@ from prueba_tecnica_analista_etl_spark.stages.text import doc_term_tf_frame
 from prueba_tecnica_analista_etl_spark.streaming.replay import (
     replay_as_stream,
     write_replay_files,
+)
+from prueba_tecnica_analista_etl_spark.streaming.windows import (
+    drain_available_now,
 )
 
 # ---------------------------------------------------------------------------
@@ -1382,32 +1388,22 @@ def q_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     analyses (Seccion_1_Excel top-20; nb:150-160) — frequency
     diagnosis that keeps working when the data arrives as a stream.
     """
-    import tempfile
-
     def _streamed_candidates() -> list:
-        import shutil
-
         data_dir, schema = write_replay_files(spark, sf_dir, "events")
         acc = MGStreamAccumulator("event_type", capacity=_HH_CAPACITY)
-        # The checkpoint is single-use (the drained candidate set is
-        # what gets staged, via census_artifact below) — remove it
-        # after the drain instead of leaking one dir per build (a
-        # RESUMABLE stream would instead keep a stable
-        # checkpoint and pass ledger_dir= for the durable sketch
-        # ledger, the crash-resume form tests/test_streaming.py
-        # exercises).
-        ckpt = tempfile.mkdtemp(prefix="stream_hh_ckpt_")
+        # Single-use state dir: the drained candidate set is what gets
+        # staged (census_artifact below), so a persistent checkpoint
+        # would drain ZERO batches into this empty accumulator whenever
+        # the census is cleared but the landing dir survives.
+        state_dir = tempfile.mkdtemp(prefix="stream_hh_")
         try:
-            q = (
+            drain_available_now(
                 replay_as_stream(spark, data_dir, schema, 1)
-                .writeStream.foreachBatch(acc)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
+                .writeStream.foreachBatch(acc),
+                state_dir,
             )
-            q.awaitTermination()
         finally:
-            shutil.rmtree(ckpt, ignore_errors=True)
+            shutil.rmtree(state_dir, ignore_errors=True)
         return acc.candidates()
 
     cand = census_artifact(

@@ -101,6 +101,7 @@ from prueba_tecnica_analista_etl_spark.streaming.neardup import (
 )
 from prueba_tecnica_analista_etl_spark.streaming.replay import (
     replay_as_stream,
+    sink_dir,
     write_overlapping_replay,
     write_replay_files,
 )
@@ -687,18 +688,8 @@ def q_stream_dedupe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (event_id, user_id, ts) — the wide `props` JSON string would
     # dominate the sink's bytes.
     slim = stream.select("event_id", "user_id", "ts")
-    # Sink + checkpoint live INSIDE the landing-dir artifact
-    # (fingerprint-unique per corpus generation, replay.py), so a
-    # regenerated corpus gets a fresh sink instead of a checkpoint
-    # pointed at a path that no longer feeds it, a FRESH PROCESS
-    # resumes the drained checkpoint (zero micro-batches) and a
-    # superseded generation's sink dies with its artifact dir.
     out = run_available_now(
-        dedupe_stream(slim),
-        s,
-        state_dir=os.path.join(
-            os.path.dirname(data_dir), "_sinks", "q_stream_dedupe"
-        ),
+        dedupe_stream(slim), s, sink_dir(data_dir, "q_stream_dedupe")
     )
     # Oracle-stable timestamp: epoch MICROS regardless of whether the
     # sink round-trip yields TimestampType (Spark's µs-internal form)
@@ -755,11 +746,7 @@ def q_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = _stream_session(spark)
     stream = replay_as_stream(s, data_dir, schema, max_files_per_trigger=2)
     out = run_available_now(
-        sessionize(stream),
-        s,
-        state_dir=os.path.join(
-            os.path.dirname(data_dir), "_sinks", "q_stream_sessionize"
-        ),
+        sessionize(stream), s, sink_dir(data_dir, "q_stream_sessionize")
     )
     # Finalization margin (see the oracle note above): stream end_us =
     # last event + 30 min, so last + 2 h <= max  <=>  end_us + 90 min
@@ -990,20 +977,16 @@ def q_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             "value",
         )
     )
-    # Persistent target + checkpoint per (query, corpus-generation),
-    # drained by windows.drain_available_now: rooted
-    # INSIDE the landing-dir artifact, so the first invocation EVER
-    # (per corpus) replays the change log; every later one — including
-    # a fresh process — RESUMES the checkpoint, finds no new files,
-    # applies zero batches (the idempotency ledger makes even a
-    # re-delivered batch a fixpoint) and the lazy snapshot read below
-    # is the whole cost. A superseded generation's target dies with
-    # its artifact dir. The result is the LAZY batch read of the
-    # materialized target, never a driver collect: at 100 TB consumers
-    # scan the upsert target exactly like this.
-    state_root = os.path.join(
-        os.path.dirname(data_dir), "_sinks", "q_stream_cdc_apply"
-    )
+    # Persistent target + checkpoint per (query, corpus-generation):
+    # the first invocation EVER (per corpus) replays the change log;
+    # every later one — including a fresh process — RESUMES the
+    # checkpoint, finds no new files, applies zero batches (the
+    # idempotency ledger makes even a re-delivered batch a fixpoint)
+    # and the lazy snapshot read below is the whole cost. The result is
+    # the LAZY batch read of the materialized target, never a driver
+    # collect: at 100 TB consumers scan the upsert target exactly like
+    # this.
+    state_root = sink_dir(data_dir, "q_stream_cdc_apply")
     target = os.path.join(state_root, "target")
     drain_available_now(
         stream.writeStream.foreachBatch(
@@ -1083,9 +1066,7 @@ def q_stream_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "documents", time_col="doc_id"
     )
     s = _stream_session(spark)
-    state_root = os.path.join(
-        os.path.dirname(data_dir), "_sinks", "q_stream_neardup"
-    )
+    state_root = sink_dir(data_dir, "q_stream_neardup")
     index_dir = os.path.join(state_root, "index")
     stream = replay_as_stream(
         s, data_dir, schema, max_files_per_trigger=2

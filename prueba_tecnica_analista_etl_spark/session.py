@@ -32,6 +32,20 @@ def _default_shuffle_partitions() -> int:
     return os.cpu_count() or DEFAULT_SHUFFLE_PARTITIONS
 
 
+# The runtime-settable confs every engine query depends on: the
+# factory builds its session with them, and ensure_runtime_conf pins
+# them on a session someone else built (the correctness driver's).
+RUNTIME_CONF = {
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.ansi.enabled": "false",
+    # testdata events.ts is parquet TIMESTAMP(NANOS) which Spark 4
+    # refuses natively; read as long, loader converts to µs timestamp
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+}
+
+
 def get_spark(
     app_name: str = "prueba-tecnica-etl-spark",
     extra_conf: dict[str, str] | None = None,
@@ -39,31 +53,22 @@ def get_spark(
     """Build (or reuse) a SparkSession with engine defaults.
 
     The master is ``local[$SPARK_GRAFT_CPUS]`` (env, default ``*``).
-    All settings are also applied at runtime by
+    ``RUNTIME_CONF`` is also applied at runtime by
     :func:`ensure_runtime_conf` so engine queries behave identically on
     an externally-created session (the driver owns its own session).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(app_name)
-        .config(
-            "spark.sql.shuffle.partitions",
-            str(_default_shuffle_partitions()),
-        )
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.ansi.enabled", "false")
-        # testdata events.ts is parquet TIMESTAMP(NANOS) which Spark 4
-        # refuses natively; read as long, loader converts to µs timestamp
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    )
-    for k, v in (extra_conf or {}).items():
+    conf = {
+        **RUNTIME_CONF,
+        "spark.sql.shuffle.partitions": str(_default_shuffle_partitions()),
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEM", "16g"),
+        "spark.ui.enabled": "false",
+        **(extra_conf or {}),
+    }
+    builder = SparkSession.builder.master(f"local[{cpus}]").appName(app_name)
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -71,18 +76,14 @@ def get_spark(
 
 
 def ensure_runtime_conf(spark: SparkSession) -> SparkSession:
-    """Pin the runtime-settable configs every engine query depends on.
-
-    The correctness driver constructs its own session; these four are
-    all runtime-mutable, so setting them here makes query semantics
-    (timestamp rendering, adaptive planning) independent of who built
-    the session.
+    """Pin ``RUNTIME_CONF`` on ``spark``. The correctness driver
+    constructs its own session; these confs are all runtime-mutable, so
+    setting them here makes query semantics (timestamp rendering,
+    adaptive planning, ns-timestamp reads) independent of who built the
+    session.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    spark.conf.set("spark.sql.ansi.enabled", "false")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    for k, v in RUNTIME_CONF.items():
+        spark.conf.set(k, v)
     return spark
 
 

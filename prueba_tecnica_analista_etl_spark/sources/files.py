@@ -150,8 +150,8 @@ def compact_partitioned(
     table; returns {partition dir name: new file count} for the
     partitions actually rewritten.
 
-    This is the maintenance pass for
-    ``foreach_batch_upsert_partitioned`` targets: each micro-batch
+    This is the maintenance pass for the partitioned targets of
+    ``foreach_batch_upsert`` (``partition_col`` set): each micro-batch
     rewrites only touched partitions, so hot partitions accrete one
     file set per batch. Partitions with fewer than ``min_files`` data
     files are skipped (nothing to merge — skipping keeps the pass

@@ -39,9 +39,9 @@ TABLES = (
 )
 
 
-def normalize_event_time(df: DataFrame, col: str = "ts") -> DataFrame:
-    """Normalize an event-time column to ``TimestampType`` regardless of
-    the parquet physical encoding it arrived in.
+def normalize_event_time(df: DataFrame) -> DataFrame:
+    """Normalize the event-time column ``ts`` to ``TimestampType``
+    regardless of the parquet physical encoding it arrived in.
 
     The harness testdata has shipped ``events.ts`` in two encodings so
     far, and a third is plausible; all must converge on the µs-instant
@@ -68,15 +68,13 @@ def normalize_event_time(df: DataFrame, col: str = "ts") -> DataFrame:
     in a plausible year range; a mis-scaled unit lands in 1970 or past
     2100 and fails the sentinel by name).
     """
-    if col not in df.columns:
+    if "ts" not in df.columns:
         return df
-    dt = df.schema[col].dataType
+    dt = df.schema["ts"].dataType
     if isinstance(dt, T.LongType):
-        df = df.withColumn(
-            col, F.timestamp_micros(F.expr(f"`{col}` div 1000"))
-        )
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     elif isinstance(dt, T.TimestampNTZType):
-        df = df.withColumn(col, F.col(col).cast("timestamp"))
+        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 
 
@@ -114,7 +112,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     )
     df = spark.read.schema(T.StructType.fromJson(schema)).parquet(path)
     if name == "events":
-        df = normalize_event_time(df, "ts")
+        df = normalize_event_time(df)
     return df
 
 

@@ -41,10 +41,14 @@ STATE = "_late_dlq_state.json"
 
 
 def _load_state(root: str) -> dict[str, float]:
+    """The watermark ledger. A missing file is a first run; an
+    unreadable one raises, because an empty ledger would reset the
+    threshold and send late rows to ``main``, where the watermark
+    drops them."""
     try:
         with open(os.path.join(root, STATE)) as fh:
             return {k: float(v) for k, v in json.load(fh).items()}
-    except (OSError, ValueError):
+    except FileNotFoundError:
         return {}
 
 

@@ -135,6 +135,17 @@ def write_replay_files(
     return _staged_landing_dir(sf_dir, f"replay:{table}:{digest}", _write)
 
 
+def sink_dir(data_dir: str, query: str) -> str:
+    """State dir of ``query``'s stream over the landing dir ``data_dir``
+    (as returned by :func:`write_replay_files`): ``<landing>/_sinks/
+    <query>``. Rooted INSIDE the landing-dir artifact, so a regenerated
+    corpus gets a fresh sink instead of a checkpoint pointed at a path
+    that no longer feeds it, a fresh process resumes the drained
+    checkpoint (zero micro-batches), and a superseded generation's sink
+    dies with its artifact dir."""
+    return os.path.join(os.path.dirname(data_dir), "_sinks", query)
+
+
 def write_overlapping_replay(
     spark: SparkSession, sf_dir: str
 ) -> tuple[str, T.StructType]:
@@ -198,4 +209,4 @@ def replay_as_stream(
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(data_dir)
     )
-    return normalize_event_time(stream, "ts")
+    return normalize_event_time(stream)

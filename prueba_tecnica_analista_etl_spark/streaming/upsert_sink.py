@@ -1,7 +1,9 @@
 """Stateful streaming upsert sink (T5/T7/T8): the reference's
-staging→UPSERT procedure per micro-batch, via ``foreachBatch``.
+staging→UPSERT procedure per micro-batch, via ``foreachBatch`` — one
+sink, :func:`foreach_batch_upsert`, for whole and partitioned targets.
 
-Each micro-batch is merged into a parquet target with the J4
+Each micro-batch is merged into a slice of a parquet target (the whole
+target, or the partitions the batch touches) with the J4
 join-rewrite, written to a staging dir and swapped in with
 ``artifacts.replace`` (the metastore-free equivalent of the
 reference's re-runnable DROP+ADD idempotency: every crash point leaves
@@ -103,6 +105,33 @@ def read_control(spark: SparkSession, target: str) -> DataFrame | None:
     return spark.read.parquet(ctrl)
 
 
+def _append_ledger(
+    spark: SparkSession, ctrl_path: str, batch_id: int, rows: int
+) -> None:
+    """Commit a batch's ledger row, the last step of the sink: a crash
+    anywhere before it leaves the batch unrecorded, so its replay
+    re-runs the (idempotent) merge and swap."""
+    spark.createDataFrame(
+        [(int(batch_id), "OK", int(rows))],
+        "batch_id long, estado string, filas long",
+    ).write.mode("append").parquet(ctrl_path)
+
+
+def _touched_partitions(batch: DataFrame, partition_col: str) -> Column:
+    """Predicate for the partitions ``batch`` falls in. ``isin()``
+    never matches NULL (SQL three-valued logic), but a NULL partition
+    value lands in ``__HIVE_DEFAULT_PARTITION__`` and its dir IS
+    swapped, so without the explicit ``isNull`` branch the base rows of
+    that partition would be left out of the merge and silently dropped
+    by the swap."""
+    vals = [r[0] for r in batch.select(partition_col).distinct().collect()]
+    nonnull = [v for v in vals if v is not None]
+    touched = F.col(partition_col).isin(nonnull) if nonnull else F.lit(False)
+    if len(nonnull) < len(vals):
+        touched = touched | F.col(partition_col).isNull()
+    return touched
+
+
 def foreach_batch_upsert(
     spark: SparkSession,
     target: str,
@@ -110,12 +139,29 @@ def foreach_batch_upsert(
     rules: dict[str, Column] | None = None,
     op_col: str | None = None,
     cdc_order: Sequence[Column | str] | None = None,
+    partition_col: str | None = None,
 ) -> Callable[[DataFrame, int], None]:
-    """Build the ``foreachBatch`` callback. Usage::
+    """Build the ``foreachBatch`` callback, run by
+    ``windows.drain_available_now``::
 
-        stream.writeStream.foreachBatch(
-            foreach_batch_upsert(spark, target, ["event_id"])
-        ).trigger(availableNow=True).start()
+        drain_available_now(
+            stream.writeStream.foreachBatch(
+                foreach_batch_upsert(spark, target, ["event_id"])
+            ),
+            state_dir,
+        )
+
+    Each micro-batch rewrites one SLICE of the target: with
+    ``partition_col`` the target is laid out as
+    ``data/{partition_col}={v}/…`` and the slice is the partitions the
+    batch's keys fall in (read partition-pruned, swapped in leaf by
+    leaf, untouched partitions never opened — O(|touched partitions| +
+    |batch|) per batch, the 100 TB shape). Without it the slice is the
+    whole target, read and rewritten every batch — O(|target|), fine
+    for dimension-sized targets. ``partition_col`` must be a stable
+    function of the key columns, otherwise a key could move between
+    partitions and survive in two places. The ledger's ``filas``
+    counts the rewritten slice.
 
     ``op_col`` switches the sink from pure upsert to CDC-APPLY: the
     stream is an ordered change log whose ``op_col`` may carry
@@ -130,16 +176,13 @@ def foreach_batch_upsert(
     leaves its key untouched instead of applying a superseded op.
     This is the streaming materialization of a Debezium/Kafka-compact
     changefeed, sharing the sink's idempotency ledger (a replayed
-    batch re-applies the same compacted ops — a fixpoint).
-
-    Scale note: this variant reads and REWRITES the whole target every
-    micro-batch — O(|target|) per batch, fine for harness-sized targets
-    but a scale-killer against a 100 TB base. At scale use
-    :func:`foreach_batch_upsert_partitioned` (rewrites only the
-    partitions containing incoming keys) or a bucketed/Delta target.
+    batch re-applies the same compacted ops — a fixpoint). CDC runs on
+    the whole-target shape only.
     """
     if op_col is not None and cdc_order is None:
         raise ValueError("op_col requires cdc_order (last-op order)")
+    if op_col is not None and partition_col is not None:
+        raise ValueError("op_col requires a whole target (no partition_col)")
     data_path, ctrl_path, rej_path = _paths(target)
 
     def process(batch: DataFrame, batch_id: int) -> None:
@@ -189,8 +232,20 @@ def foreach_batch_upsert(
                 batch = batch.dropDuplicates(list(keys))
 
             recover(data_path)
+            touched = (
+                None
+                if partition_col is None
+                else _touched_partitions(batch, partition_col)
+            )
+
+            def target_slice() -> DataFrame:
+                df = spark.read.option("basePath", data_path).parquet(
+                    data_path
+                )
+                return df if touched is None else df.filter(touched)
+
             if os.path.exists(data_path):
-                base = spark.read.parquet(data_path)
+                base = target_slice()
                 if op_col is not None:
                     merged = cdc_apply(
                         base,
@@ -216,121 +271,25 @@ def foreach_batch_upsert(
                 merged = batch
 
             # write-then-swap: the target is never half-written and
-            # never lost
+            # never lost; with partitions each leaf is old or new at
+            # every crash point
             staged = staging(data_path)
-            merged.write.parquet(staged)
-            replace(data_path, staged)
+            if partition_col is None:
+                merged.write.parquet(staged)
+                replace(data_path, staged)
+            else:
+                merged.write.partitionBy(partition_col).parquet(staged)
+                os.makedirs(data_path, exist_ok=True)
+                for d in sorted(os.listdir(staged)):
+                    if d.startswith(f"{partition_col}="):
+                        replace(
+                            os.path.join(data_path, d),
+                            os.path.join(staged, d),
+                        )
+                shutil.rmtree(staged, ignore_errors=True)
 
             # metadata-only count (parquet footers), not a data scan
-            n = spark.read.parquet(data_path).count()
-            spark.createDataFrame(
-                [(int(batch_id), "OK", int(n))],
-                "batch_id long, estado string, filas long",
-            ).write.mode("append").parquet(ctrl_path)
-        finally:
-            src.unpersist()
-
-    return process
-
-
-def foreach_batch_upsert_partitioned(
-    spark: SparkSession,
-    target: str,
-    keys: Sequence[str],
-    partition_col: str,
-    rules: dict[str, Column] | None = None,
-) -> Callable[[DataFrame, int], None]:
-    """Partition-scoped streaming upsert (the 100 TB shape of T5).
-
-    The target is laid out as ``data/{partition_col}={v}/…`` and each
-    micro-batch rewrites ONLY the partitions its keys fall in: the base
-    is read partition-pruned to the batch's partition values, merged
-    with the J4 join-rewrite, written to a staging dir, and the touched
-    partition dirs are swapped in one by one with ``artifacts.replace``
-    (each leaf is old or new at every crash point; a replayed batch
-    re-merges idempotently). Untouched partitions'
-    files are never opened, let alone rewritten — per-batch cost is
-    O(|touched partitions| + |batch|), not O(|target|).
-
-    ``partition_col`` must be a stable function of the key columns
-    (e.g. a date or hash-bucket of the key), otherwise a key could move
-    between partitions and survive in two places.
-
-    The ``filas`` ledger column records rows in the REWRITTEN slice
-    (counting the whole target would be the O(|target|) scan this
-    variant exists to avoid).
-    """
-    data_path, ctrl_path, rej_path = _paths(target)
-
-    def process(batch: DataFrame, batch_id: int) -> None:
-        ctrl = read_control(spark, target)
-        if ctrl is not None and (
-            ctrl.filter(ctrl.batch_id == batch_id).limit(1).count() > 0
-        ):
-            return
-
-        src = batch.persist()
-        batch = src
-        try:
-            if rules:
-                batch, rejected = split_rejects(batch, rules)
-                if rejected.limit(1).count() > 0:
-                    _write_rejects(rejected, rej_path, batch_id)
-
-            # intra-batch key uniqueness — upsert()'s precondition;
-            # see the whole-target variant for the rationale
-            batch = batch.dropDuplicates(list(keys))
-
-            recover(data_path)
-            vals = [
-                r[0]
-                for r in batch.select(partition_col).distinct().collect()
-            ]
-            # isin() never matches NULL (SQL three-valued logic), but a
-            # NULL partition value lands in __HIVE_DEFAULT_PARTITION__
-            # and its dir IS swapped below — without the explicit
-            # isNull branch the base rows of that partition would be
-            # excluded from the merge and silently dropped by the swap.
-            nonnull = [v for v in vals if v is not None]
-            touched = (
-                F.col(partition_col).isin(nonnull)
-                if nonnull
-                else F.lit(False)
-            )
-            if len(nonnull) < len(vals):
-                touched = touched | F.col(partition_col).isNull()
-            if os.path.exists(data_path):
-                base_slice = (
-                    spark.read.option("basePath", data_path)
-                    .parquet(data_path)
-                    .filter(touched)
-                )
-                merged = upsert(
-                    base_slice, batch.select(*base_slice.columns), keys
-                )
-            else:
-                merged = batch
-
-            staged = staging(data_path)
-            merged.write.partitionBy(partition_col).parquet(staged)
-            os.makedirs(data_path, exist_ok=True)
-            for d in sorted(os.listdir(staged)):
-                if d.startswith(f"{partition_col}="):
-                    replace(
-                        os.path.join(data_path, d), os.path.join(staged, d)
-                    )
-            shutil.rmtree(staged, ignore_errors=True)
-
-            n_slice = (
-                spark.read.option("basePath", data_path)
-                .parquet(data_path)
-                .filter(touched)
-                .count()
-            )
-            spark.createDataFrame(
-                [(int(batch_id), "OK", int(n_slice))],
-                "batch_id long, estado string, filas long",
-            ).write.mode("append").parquet(ctrl_path)
+            _append_ledger(spark, ctrl_path, batch_id, target_slice().count())
         finally:
             src.unpersist()
 

@@ -1,5 +1,5 @@
-"""Watermarked window aggregations (T2/T4) + the availableNow drain
-every persistent stream query runs through.
+"""Watermarked window aggregations (T2/T4) + the availableNow drain,
+the one place in the package that starts a stream.
 
 ``tumbling_counts`` is also the body of the batch
 ``q_tumbling_window`` (batch/stream parity is asserted in tests);
@@ -12,9 +12,6 @@ state size ~ active keys, not history).
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -105,69 +102,41 @@ def drain_available_now(writer: DataStreamWriter, state_dir: str) -> None:
 
 
 def run_available_now(
-    sdf: DataFrame,
-    spark: SparkSession,
-    state_dir: str | None = None,
+    sdf: DataFrame, spark: SparkSession, state_dir: str
 ) -> DataFrame:
-    """Run a streaming DataFrame to completion (availableNow) and
-    return the result as a batch DataFrame.
+    """Run a streaming DataFrame to availableNow completion and return
+    its result as a LAZY batch DataFrame.
 
-    With ``state_dir`` (the registry-query path): append into a
-    PERSISTENT parquet file sink at ``<state_dir>/out``, drained by
-    :func:`drain_available_now` (T7 — the REAL resumable form), and
-    return the LAZY batch read of the sink; the read is exactly-once
-    via the sink's ``_spark_metadata`` log, and no ``collect()``
-    happens here at all. Callers root it INSIDE the landing-dir
-    artifact (``<landing>/_sinks/<query>``), so the sink outlives the
-    process — a fresh process resumes the checkpoint, finds no new
-    source files, runs zero micro-batches and pays only the snapshot
-    read — and dies with its generation when the artifact store evicts
-    a superseded landing dir (no separate GC). At 100 TB this is
-    precisely how the pipeline is consumed: readers scan the sink
-    table, they never pull a streaming result through the driver.
-
-    Without it (tests / ad-hoc): one-shot memory sink, eagerly
-    materialized, then the sink table and checkpoint dir are freed —
-    a memory sink pins its ENTIRE result in the driver for the life
-    of the session, so repeated invocations would otherwise
-    accumulate every past result.
+    The stream appends into a PERSISTENT parquet file sink at
+    ``<state_dir>/out``, drained by :func:`drain_available_now` (T7),
+    and the return is the batch read of the sink: exactly-once via the
+    sink's ``_spark_metadata`` log, with no ``collect()`` anywhere.
+    Registry queries root ``state_dir`` INSIDE the landing-dir artifact
+    (``replay.sink_dir``), so the sink outlives the process — a fresh
+    process resumes the checkpoint, finds no new source files, runs
+    zero micro-batches and pays only the snapshot read — and dies with
+    its generation when the artifact store evicts a superseded landing
+    dir (no separate GC). At 100 TB this is precisely how the pipeline
+    is consumed: readers scan the sink table, they never pull a
+    streaming result through the driver.
     """
-    if state_dir is not None:
-        out = os.path.join(state_dir, "out")
-        drain_available_now(
-            sdf.writeStream.format("parquet")
-            .option("path", out)
-            .outputMode("append"),
-            state_dir,
-        )
-        # Empty-sink guard: a run that committed ZERO output rows (e.g.
-        # every window still open at the final watermark) leaves only
-        # _spark_metadata in the sink, schema inference fails — and
-        # because the checkpoint has already committed the source
-        # offsets, every resume would fail the same way forever. Read
-        # with the stream's own schema instead of inference.
-        try:
-            has_data = any(
-                not name.startswith("_") for name in os.listdir(out)
-            )
-        except FileNotFoundError:
-            has_data = False
-        if not has_data:
-            return spark.createDataFrame([], sdf.schema)
-        return spark.read.schema(sdf.schema).parquet(out)
-    name = f"sink_{uuid.uuid4().hex[:12]}"
-    ckpt = tempfile.mkdtemp(prefix="ckpt_")
-    q = (
-        sdf.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    out = os.path.join(state_dir, "out")
+    drain_available_now(
+        sdf.writeStream.format("parquet")
+        .option("path", out)
+        .outputMode("append"),
+        state_dir,
     )
-    q.awaitTermination()
-    result = spark.table(name)
-    rows, schema = result.collect(), result.schema
-    spark.catalog.dropTempView(name)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
+    # Empty-sink guard: a run that committed ZERO output rows (e.g.
+    # every window still open at the final watermark) leaves only
+    # _spark_metadata in the sink, schema inference fails — and
+    # because the checkpoint has already committed the source
+    # offsets, every resume would fail the same way forever. Read
+    # with the stream's own schema instead of inference.
+    try:
+        has_data = any(not name.startswith("_") for name in os.listdir(out))
+    except FileNotFoundError:
+        has_data = False
+    if not has_data:
+        return spark.createDataFrame([], sdf.schema)
+    return spark.read.schema(sdf.schema).parquet(out)

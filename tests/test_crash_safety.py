@@ -12,6 +12,7 @@ from __future__ import annotations
 import os
 
 import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from prueba_tecnica_analista_etl_spark import artifacts
@@ -28,10 +29,18 @@ from prueba_tecnica_analista_etl_spark.sources.files import (
     compact_parquet,
     compact_partitioned,
 )
+from prueba_tecnica_analista_etl_spark.streaming import upsert_sink
+from prueba_tecnica_analista_etl_spark.streaming.replay import (
+    replay_as_stream,
+    write_replay_files,
+)
 from prueba_tecnica_analista_etl_spark.streaming.upsert_sink import (
     DATA,
     foreach_batch_upsert,
-    foreach_batch_upsert_partitioned,
+    read_control,
+)
+from prueba_tecnica_analista_etl_spark.streaming.windows import (
+    drain_available_now,
 )
 
 OLD = [(1, "a"), (2, "b"), (4, "d")]
@@ -91,8 +100,8 @@ class _Upsert(_Site):
 class _UpsertPartitioned(_Upsert):
     def setup(self):
         self.target = os.path.join(self.root, "target")
-        self.process = foreach_batch_upsert_partitioned(
-            self.spark, self.target, ["k"], "p"
+        self.process = foreach_batch_upsert(
+            self.spark, self.target, ["k"], partition_col="p"
         )
         self.process(self._batch(OLD), 0)
         return _rows(self.read()), sorted(
@@ -264,3 +273,84 @@ def test_writers_change_corpus_fingerprint(spark, tmp_path):
     before = artifacts._corpus_fingerprint(corpus)
     ivf_rebalance(spark, index, k=3)
     assert artifacts._corpus_fingerprint(corpus) != before
+
+
+def _restart_shape(shape, stream):
+    """(stream projection, sink options) of one sink shape."""
+    if shape == "whole":
+        return stream, dict(keys=["event_id"])
+    if shape == "partitioned":
+        return stream.withColumn("day", F.to_date("ts")), dict(
+            keys=["event_id"], partition_col="day"
+        )
+    log = stream.filter(F.col("user_id").isNotNull()).select(
+        "user_id",
+        "ts",
+        "event_id",
+        F.when(F.col("event_type") == "purchase", "D")
+        .otherwise("U")
+        .alias("op"),
+        "value",
+    )
+    return log, dict(
+        keys=["user_id"],
+        op_col="op",
+        cdc_order=[F.desc("ts"), F.desc("event_id")],
+    )
+
+
+@pytest.mark.parametrize("shape", ["whole", "partitioned", "cdc"])
+def test_sink_restart_after_swap_before_ledger(
+    spark, sf_dir, tmp_path, monkeypatch, shape
+):
+    """A drained stream dies after a batch's data swap and before its
+    ledger row; draining the same state dir again replays that batch.
+    The target must equal an uninterrupted run's, with one ledger row
+    per batch id."""
+    landing, schema = write_replay_files(
+        spark, sf_dir, "events", base_dir=str(tmp_path / "landing")
+    )
+
+    def drain(name):
+        state_dir = str(tmp_path / name)
+        target = os.path.join(state_dir, "target")
+        stream, options = _restart_shape(
+            shape, replay_as_stream(spark, landing, schema, 1)
+        )
+        drain_available_now(
+            stream.writeStream.foreachBatch(
+                foreach_batch_upsert(spark, target, **options)
+            ),
+            state_dir,
+        )
+        return target
+
+    def data(target):
+        return sorted(
+            spark.read.parquet(os.path.join(target, DATA)).collect(), key=repr
+        )
+
+    def ledger_ids(target):
+        return [r["batch_id"] for r in read_control(spark, target).collect()]
+
+    clean = drain("clean")
+    assert sorted(ledger_ids(clean)) == [0, 1, 2, 3]
+
+    real_append = upsert_sink._append_ledger
+    appended = []
+
+    def crashing_append(*args):
+        appended.append(args)
+        if len(appended) == 2:
+            raise OSError("injected crash before the ledger row")
+        real_append(*args)
+
+    with monkeypatch.context() as m:
+        m.setattr(upsert_sink, "_append_ledger", crashing_append)
+        with pytest.raises(StreamingQueryException, match="injected crash"):
+            drain("crashed")
+    assert ledger_ids(os.path.join(tmp_path, "crashed", "target")) == [0]
+
+    crashed = drain("crashed")
+    assert data(crashed) == data(clean)
+    assert sorted(ledger_ids(crashed)) == [0, 1, 2, 3]

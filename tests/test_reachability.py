@@ -621,3 +621,45 @@ def _layer_faults() -> list[str]:
 def test_imports_follow_the_layer_order():
     faults = _layer_faults()
     assert not faults, "imports that break the layer order:\n" + "\n".join(faults)
+
+
+# --- streams -----------------------------------------------------------
+#
+# ``streaming.windows.drain_available_now`` is the one place a stream
+# starts: it holds the state dir's lock, so two runs never share a
+# checkpoint. A ``.trigger(`` or ``.awaitTermination(`` anywhere else in
+# the package is a stream started without that lock.
+
+_STREAM_CALLS = {"trigger", "awaitTermination"}
+_DRAIN = (f"{PKG}.streaming.windows", "drain_available_now")
+
+
+def _stream_starts() -> list[str]:
+    """One entry per top-level def that calls a stream-starting method,
+    outside the drain itself."""
+    sites = []
+    for mod, (path, tree) in MODULES.items():
+        if not mod.startswith(PKG + "."):
+            continue
+        for top in tree.body:
+            if (mod, getattr(top, "name", None)) == _DRAIN:
+                continue
+            calls = sorted(
+                n.lineno
+                for n in ast.walk(top)
+                if isinstance(n, ast.Call)
+                and isinstance(n.func, ast.Attribute)
+                and n.func.attr in _STREAM_CALLS
+            )
+            if calls:
+                where = path.relative_to(REPO / PKG)
+                sites.append(f"{where}:{calls[0]} in {getattr(top, 'name', '?')}")
+    return sites
+
+
+def test_only_the_drain_starts_a_stream():
+    sites = _stream_starts()
+    assert not sites, (
+        f"{len(sites)} streams started outside "
+        "streaming.windows.drain_available_now:\n" + "\n".join(sites)
+    )

@@ -236,7 +236,7 @@ def test_normalize_event_time_all_encodings(spark, tmp_path):
     assert results["ns"] == results["us_ntz"] == results["us_utc"] == instants
     # no-op on frames without the column
     plain = spark.range(3)
-    assert normalize_event_time(plain, "ts") is plain
+    assert normalize_event_time(plain) is plain
 
 
 EXPECTED_SCHEMAS = {
@@ -338,9 +338,7 @@ def test_event_time_unit_drift_lands_outside_sentinel_window(
         )
         p = str(tmp_path / f"ev_{unit_scale}")
         df.write.parquet(p)
-        got = normalize_event_time(
-            spark.read.parquet(p), "ts"
-        ).first()["ts"]
+        got = normalize_event_time(spark.read.parquet(p)).first()["ts"]
         assert got.year < 1990, (unit_scale, got)
 
 

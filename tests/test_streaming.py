@@ -18,7 +18,6 @@ from prueba_tecnica_analista_etl_spark.streaming.replay import (
 from prueba_tecnica_analista_etl_spark import artifacts
 from prueba_tecnica_analista_etl_spark.streaming.upsert_sink import (
     foreach_batch_upsert,
-    foreach_batch_upsert_partitioned,
     read_control,
 )
 from prueba_tecnica_analista_etl_spark.streaming.windows import (
@@ -31,14 +30,16 @@ def _sorted_rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_tumbling_batch_stream_parity(spark, sf_dir):
+def test_tumbling_batch_stream_parity(spark, sf_dir, tmp_path):
     """Tumbling aggregation agrees batch vs stream for every window the
     watermark finalized. Append mode withholds windows whose end is
     past the final watermark (= max event time with a 0s delay) — i.e.
     exactly the hour containing the last event; assert that precisely."""
     data_dir, schema = write_replay_files(spark, sf_dir, "events")
     stream = replay_as_stream(spark, data_dir, schema, 1)
-    got = run_available_now(tumbling_counts(stream, "0 seconds"), spark)
+    got = run_available_now(
+        tumbling_counts(stream, "0 seconds"), spark, str(tmp_path / "sink")
+    )
 
     ev = load_table(spark, sf_dir, "events")
     max_ts = ev.agg(F.max("ts")).first()[0]
@@ -130,8 +131,8 @@ def test_foreach_batch_upsert_partitioned(spark, sf_dir, tmp_path):
                 snap[p] = os.path.getmtime(p)
         return snap
 
-    process = foreach_batch_upsert_partitioned(
-        spark, target, ["event_id"], "day"
+    process = foreach_batch_upsert(
+        spark, target, ["event_id"], partition_col="day"
     )
     days = sorted(r[0] for r in ev.select("day").distinct().collect())
     assert len(days) >= 3
@@ -597,7 +598,7 @@ def test_incremental_etl_end_to_end_resume(
     landing = str(tmp_path / "landing")
     os.makedirs(landing)
     target = str(tmp_path / "target")
-    ckpt = str(tmp_path / "ckpt")
+    state = str(tmp_path / "state")
     parts = sorted(
         f for f in os.listdir(full_dir) if f.startswith("part-")
     )
@@ -614,7 +615,7 @@ def test_incremental_etl_end_to_end_resume(
     for f in parts[:2]:
         shutil.copy(os.path.join(full_dir, f), os.path.join(landing, f))
     incremental_etl(
-        spark, landing, schema, target, ["event_id"], ckpt, **kw
+        spark, landing, schema, target, ["event_id"], state, **kw
     )
     n_run1 = target_frame(spark, target).count()
     ctrl_run1 = read_control(spark, target).count()
@@ -624,7 +625,7 @@ def test_incremental_etl_end_to_end_resume(
     for f in parts[2:]:
         shutil.copy(os.path.join(full_dir, f), os.path.join(landing, f))
     incremental_etl(
-        spark, landing, schema, target, ["event_id"], ckpt, **kw
+        spark, landing, schema, target, ["event_id"], state, **kw
     )
 
     ev = load_table(spark, sf_dir, "events")
@@ -689,8 +690,8 @@ def test_partitioned_upsert_preserves_null_partition(spark, tmp_path):
     slice must include it explicitly or batch 2 silently erases
     batch 1's NULL-partition rows."""
     target = str(tmp_path / "t")
-    process = foreach_batch_upsert_partitioned(
-        spark, target, ["event_id"], "day"
+    process = foreach_batch_upsert(
+        spark, target, ["event_id"], partition_col="day"
     )
     schema = "event_id long, day date, value double"
     b1 = spark.createDataFrame(
@@ -722,8 +723,8 @@ def test_upsert_sink_dedupes_intra_batch_keys(spark, tmp_path):
     assert merged.select("event_id").distinct().count() == 2
     # partitioned variant, same invariant
     target2 = str(tmp_path / "t2")
-    p2 = foreach_batch_upsert_partitioned(
-        spark, target2, ["event_id"], "day"
+    p2 = foreach_batch_upsert(
+        spark, target2, ["event_id"], partition_col="day"
     )
     b2 = spark.createDataFrame(
         [(1, "2024-01-01", 1.0), (1, "2024-01-01", 1.0)],
@@ -798,7 +799,7 @@ def _attribution_streams(spark, sf_dir, max_files=2):
     )
 
 
-def test_stream_stream_join_batch_parity(spark, sf_dir):
+def test_stream_stream_join_batch_parity(spark, sf_dir, tmp_path):
     """Inner stream-stream join over a finite in-order replay equals
     the batch join of the same frames under the same condition when
     the watermark delay covers the time bound (no state evicted while
@@ -813,6 +814,7 @@ def test_stream_stream_join_batch_parity(spark, sf_dir):
             clicks, purchases, within="10 minutes", watermark="10 minutes"
         ),
         spark,
+        str(tmp_path / "sink"),
     )
 
     ev = load_table(spark, sf_dir, "events")
@@ -826,7 +828,7 @@ def test_stream_stream_join_batch_parity(spark, sf_dir):
     assert _sorted_rows(got) == _sorted_rows(want)
 
 
-def test_stream_stream_left_outer_extends_unmatched(spark, sf_dir):
+def test_stream_stream_left_outer_extends_unmatched(spark, sf_dir, tmp_path):
     """Left-outer emits every click exactly once-or-more: matched rows
     equal the inner join; unmatched clicks appear null-extended once
     the watermark proves no purchase can arrive. availableNow's final
@@ -847,6 +849,7 @@ def test_stream_stream_left_outer_extends_unmatched(spark, sf_dir):
             watermark="10 minutes",
         ),
         spark,
+        str(tmp_path / "sink"),
     )
     matched = outer.filter(F.col("right_id").isNotNull())
     nulls = outer.filter(F.col("right_id").isNull())
@@ -917,7 +920,7 @@ def test_stream_stream_join_state_is_bounded(spark, sf_dir):
     assert state_rows[-1] < n_events / 2, (state_rows, n_events)
 
 
-def test_stream_static_enrichment(spark, sf_dir):
+def test_stream_static_enrichment(spark, sf_dir, tmp_path):
     """Stream-static join: events stream enriched with a customer
     dimension keyed on user_id — matches the batch join exactly (the
     static side is snapshot-resolved per micro-batch, no state, no
@@ -941,7 +944,9 @@ def test_stream_static_enrichment(spark, sf_dir):
         )
     )
     got = run_available_now(
-        enrich_with_dim(stream, dim, {"user_id": "dim_key"}), spark
+        enrich_with_dim(stream, dim, {"user_id": "dim_key"}),
+        spark,
+        str(tmp_path / "sink"),
     )
 
     ev = load_table(spark, sf_dir, "events")
@@ -1204,14 +1209,18 @@ def test_out_of_order_replay_routes_late_rows_to_dlq(
             arrival_order=order,
         )
 
-    def counted(data_dir, schema):
+    def counted(data_dir, schema, name):
         stream = replay_as_stream(spark, data_dir, schema, 1)
-        agg = run_available_now(tumbling_counts(stream, "0 seconds"), spark)
+        agg = run_available_now(
+            tumbling_counts(stream, "0 seconds"),
+            spark,
+            str(tmp_path / f"{name}_sink"),
+        )
         return agg.agg(F.coalesce(F.sum("cnt"), F.lit(0))).first()[0]
 
-    ordered = counted(*landing("range", "ordered"))
+    ordered = counted(*landing("range", "ordered"), "ordered")
     shuffled_dir, schema = landing("shuffled", "shuffled")
-    assert counted(shuffled_dir, schema) < ordered, (
+    assert counted(shuffled_dir, schema, "shuffled") < ordered, (
         "disordered arrival should drop late rows from the native "
         "watermarked aggregation — if not, the fixture isn't disordered"
     )
@@ -1556,7 +1565,11 @@ def test_replay_dir_survives_bare_clear_artifacts(
     clear_artifacts()
     data_dir, schema = write_replay_files(spark, sf, "events")
     assert os.path.isdir(data_dir)
-    out = run_available_now(replay_as_stream(spark, data_dir, schema), spark)
+    out = run_available_now(
+        replay_as_stream(spark, data_dir, schema),
+        spark,
+        str(tmp_path / "sink"),
+    )
     assert out.count() == load_table(spark, sf, "events").count() > 0
 
 
@@ -1572,3 +1585,47 @@ def test_stream_queries_do_not_grow_the_listener_bus(spark, sf_dir):
     for _ in range(3):
         assert sessionize(spark, sf_dir).count() == n_rows
     assert bus.listeners().size() == before
+
+
+def _mg_ledger(spark, root):
+    """A sketch ledger with one folded batch: (ledger file, restart)."""
+    from prueba_tecnica_analista_etl_spark.operators.sketch import (
+        MGStreamAccumulator,
+    )
+
+    acc = MGStreamAccumulator("k", ledger_dir=root)
+    acc(spark.createDataFrame([("a",), ("a",), ("b",)], "k string"), 0)
+    return (
+        os.path.join(root, MGStreamAccumulator.STATE),
+        lambda: MGStreamAccumulator("k", ledger_dir=root),
+    )
+
+
+def _late_dlq_ledger(spark, root):
+    """A watermark ledger with one routed batch: (ledger file, restart)."""
+    import datetime
+
+    from prueba_tecnica_analista_etl_spark.streaming import late_dlq
+
+    batch = spark.createDataFrame(
+        [(1, datetime.datetime(2024, 1, 1))], "event_id long, ts timestamp"
+    )
+    late_dlq.late_dlq_sink(root)(batch, 0)
+    return (
+        os.path.join(root, late_dlq.STATE),
+        lambda: late_dlq.late_dlq_sink(root)(batch, 1),
+    )
+
+
+@pytest.mark.parametrize(
+    "ledger", [_mg_ledger, _late_dlq_ledger], ids=["mg_sketch", "late_dlq"]
+)
+def test_corrupt_stream_ledger_fails_loudly(spark, tmp_path, ledger):
+    """A truncated stream ledger must stop the restart: read as a fresh
+    ledger, the sketch would drop the mass of every committed batch and
+    the late-data router would reset its watermark threshold."""
+    path, restart = ledger(spark, str(tmp_path))
+    with open(path, "r+b") as fh:
+        fh.truncate(os.path.getsize(path) // 2)
+    with pytest.raises(ValueError):
+        restart()
